@@ -11,9 +11,10 @@ import scala.util.{Success, Try}
   * Where the reference generates SQL text against a temp view
   * (reference: src/main/scala/sparkplug/models/PlugRule.scala:49-124,
   * src/main/scala/sparkplug/SparkPlug.scala:98-107), we compile each rule to
-  * a single set of column updates applied with one `withColumns` call — one
-  * Project node per rule, no temp-view mutation, no SQL string splicing, and
-  * the whole rule chain stays inside WholeStageCodegen.
+  * a single set of column updates applied with one `withColumns` call — no
+  * temp-view mutation, no SQL string splicing. The audit trail costs one
+  * bitwise OR per rule on a `Long` fired-rule mask; [[SparkPlug]] turns the
+  * masks into the audit array once, after the last rule.
   */
 object RuleCompiler {
 
@@ -39,22 +40,22 @@ object RuleCompiler {
       })
     }
 
-  /** One compiled rule: every (top-level) column it rewrites, the audit
-    * array update (if plug details are enabled), and the old-value copies
-    * (if keepOldField). Applied as `df.withColumns(allUpdates)`. */
+  /** One compiled rule: every (top-level) column it rewrites, the
+    * fired-rule mask update (if plug details are enabled), and the old-value
+    * copies (if keepOldField). Applied as `df.withColumns(allUpdates)`. */
   case class Compiled(
       updates: Seq[(String, Column)],
       oldCopies: Seq[(String, Column)],
-      auditUpdate: Option[(String, Column)]
+      maskUpdate: Option[(String, Column)]
   ) {
-    def allUpdates: Map[String, Column] = (oldCopies ++ updates ++ auditUpdate).toMap
+    def allUpdates: Map[String, Column] = (oldCopies ++ updates ++ maskUpdate).toMap
   }
 
+  /** `firedBit` is the rule's (mask column, bit) when plug details are on. */
   def compile(
       rule: PlugRule,
       schema: StructType,
-      plugDetailsColumn: Option[String],
-      auditAppend: Option[AuditAppender],
+      firedBit: Option[(String, Int)],
       keepOldField: Boolean
   ): Compiled = {
     val fields = PlugRule.buildFieldsMap(schema).toMap
@@ -110,7 +111,7 @@ object RuleCompiler {
     // Null-safe change detection, OR-ed across actions; the comparison
     // operand is the post-coercion value, matching the reference's
     // `not(key <=> cast(v as double))` (PlugRule.scala:50,58). Only built
-    // when an audit column needs the gate. For a per-element action the
+    // when the audit mask needs the gate. For a per-element action the
     // extraction `col("items.price")` resolves to the ARRAY of element
     // values, so the gate is "some element differs" (exists), null/empty
     // arrays counting as unchanged.
@@ -187,16 +188,13 @@ object RuleCompiler {
       if (!keepOldField) Seq.empty
       else converted.map(_._1.updateKey).distinct.map(k => s"${k}_${rule.name}_old" -> col(k))
 
-    // Audit-trail append: if the rule matched AND changed something, append
-    // a PlugDetail to the audit array. Pure built-in exprs replace the
-    // reference's UDF4 (SparkPlugUDFs.scala:14-31); a custom appender hook
-    // preserves the custom-audit-type API.
-    val auditUpdate = plugDetailsColumn.map { pd =>
-      val appender = auditAppend.getOrElse(AuditAppender.default)
-      val appended = appender.append(col(pd), rule.name, rule.version, rule.actions.map(_.key))
-      pd -> when(cond && anyChanged, appended).otherwise(col(pd))
+    // Audit gate: if the rule matched AND changed something, set its bit.
+    // The reference appends a record per firing rule through a UDF4
+    // (SparkPlugUDFs.scala:14-31), copying the growing array every time.
+    val maskUpdate = firedBit.map { case (mask, bit) =>
+      mask -> col(mask).bitwiseOR(when(cond && anyChanged, lit(1L << bit)).otherwise(lit(0L)))
     }
 
-    Compiled(updates, oldCopies, auditUpdate)
+    Compiled(updates, oldCopies, maskUpdate)
   }
 }

@@ -1,8 +1,13 @@
 package graft.plug
 
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, GraftPlanAccess, Row, SparkSession}
 
 import scala.util.Try
 
@@ -24,9 +29,11 @@ case class SparkPlugCheckpointDetails(checkpointDir: Option[String], rulesPerSta
   * Same public surface as the reference engine (reference:
   * src/main/scala/sparkplug/SparkPlug.scala) — builder, `plug`, `validate` —
   * but each rule compiles to `Column` expressions applied as ONE `withColumns`
-  * projection (single Project node per rule): no temp views, no SQL string
-  * concatenation, no UDFs in the default path, stable column order, and the
-  * whole chain is collapsible/optimizable by Catalyst.
+  * projection: no temp views, no SQL string concatenation, no UDFs, stable
+  * column order. All entry points share one rule fold ([[foldRules]]): the
+  * audit trail is a fired-rule bit per rule, assembled into the audit array
+  * once after the chain, and a [[CodegenBoundary]] ends each whole-stage
+  * codegen region before its generated method outgrows the JIT limit.
   *
   * Scale posture (100 TB): rules are compiled into the plan as literals —
   * there is no data-side rule join and nothing to broadcast (the reference's
@@ -61,11 +68,15 @@ case class SparkPlug(
 
   /** Validate (if enabled) then fold the rules over the input frame.
     * (reference: SparkPlug.scala:29-40) */
-  def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] = {
+  def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] =
+    validated(in, rules)(withAuditTrail(rules)(foldRules(in, rules)(applyRule)))
+
+  private def validated(in: DataFrame, rules: List[PlugRule])(
+      plugged: => DataFrame): Either[List[PlugRuleValidationError], DataFrame] = {
     val validationResult =
       if (isValidateRulesEnabled) validate(in.schema, rules) else Nil
     if (validationResult.nonEmpty) Left(validationResult)
-    else Right(plugDf(in, rules))
+    else Right(plugged)
   }
 
   /** Duplicate-name check + static per-rule checks; the SQL dry-run only
@@ -86,26 +97,63 @@ case class SparkPlug(
     * "[SQL Error] ..." (reference: SparkPlug.scala:78-86). Dataset creation
     * analyzes eagerly, so no job runs. */
   private def validateRuleSql(schema: StructType, rule: PlugRule): List[PlugRuleValidationError] =
-    Try(applyRule(preProcessInput(emptyDf(schema)), rule)).failed
+    Try(applyRule(preProcessInput(emptyDf(schema), 1), rule, 0)).failed
       .map(t => List(PlugRuleValidationError(rule.name, s"[SQL Error] ${t.getMessage}")))
       .getOrElse(Nil)
 
   private def emptyDf(schema: StructType) =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  private def plugDf(in: DataFrame, rules: List[PlugRule]): DataFrame = {
-    val plugged = rules.zipWithIndex.foldLeft(preProcessInput(in)) {
+  /** The rule fold shared by every entry point. Seeds the audit column and
+    * the fired-rule masks, then per rule: ends the codegen region if it is
+    * full, applies `step`, and stages a repartition or checkpoint on the
+    * configured cadence. The result still carries the masks. */
+  private def foldRules(in: DataFrame, rules: List[PlugRule])(
+      step: (DataFrame, PlugRule, Int) => DataFrame): DataFrame =
+    rules.zipWithIndex.foldLeft(preProcessInput(in, rules.size)) {
       case (df, (rule, ruleNumber)) =>
-        repartitionAndCheckpoint(applyRule(df, rule), ruleNumber)
+        repartitionAndCheckpoint(step(SparkPlug.endRegionIfFull(df), rule, ruleNumber), ruleNumber)
     }
-    withChangeCount(plugged)
-  }
 
-  /** Initialize the audit column to a schema-correct empty array. The
-    * reference always overwrites a pre-existing column (SparkPlug.scala:88-91)
-    * — kept for parity. */
-  private def preProcessInput(in: DataFrame): DataFrame =
-    plugDetails.fold(in)(pd => in.withColumn(pd.column, pd.appender.emptyDetails))
+  /** Initialize the audit column to a schema-correct empty array and every
+    * fired-rule mask to 0. The reference always overwrites a pre-existing
+    * audit column (SparkPlug.scala:88-91) — kept for parity. */
+  private def preProcessInput(in: DataFrame, nRules: Int): DataFrame =
+    plugDetails.fold(in)(pd => in.withColumn(pd.column, pd.appender.emptyDetails)
+      .withColumns(SparkPlug.maskColumns(nRules).map(_ -> lit(0L)).toMap))
+
+  /** Evaluates the audit records first (so a bad record fails before any
+    * plan is built), runs the fold, then replaces the audit column with the
+    * records the row's masks select and drops the masks. The change count
+    * rides on the same pass: a row changed iff one of its masks is non-zero. */
+  private def withAuditTrail(rules: List[PlugRule])(chain: => DataFrame): DataFrame =
+    plugDetails.fold(chain) { pd =>
+      val records = auditRecords(pd.appender, rules)
+      val masks = SparkPlug.maskColumns(rules.size)
+      val counted = withChangeCount(chain,
+        masks.map(col(_) =!= 0L).reduceOption(_ || _).getOrElse(lit(false)))
+      if (masks.isEmpty) counted
+      else counted
+        .withColumn(pd.column, GraftPlanAccess.column(
+          FiredRecords(masks.map(UnresolvedAttribute.quoted), records, pd.appender.detailSchema)))
+        .drop(masks: _*)
+    }
+
+  /** Every rule's audit record, evaluated once on the driver over a
+    * one-row frame with no columns: a record that reads the row cannot
+    * resolve there and fails with the rule's name. */
+  private def auditRecords(appender: AuditAppender, rules: List[PlugRule]): ArrayData = {
+    val oneRow = spark.createDataFrame(java.util.List.of(Row.empty), new StructType())
+    def evaluate(rs: List[PlugRule]) = oneRow.select(array(rs.map(r =>
+      appender.record(r.name, r.version, r.actions.map(_.key)).cast(appender.detailSchema)): _*))
+    val evaluated = Try(evaluate(rules)).recover { case e: AnalysisException =>
+      val bad = rules.find(r => Try(evaluate(List(r))).isFailure).getOrElse(throw e)
+      throw new IllegalArgumentException(
+        s"""Rule "${bad.name}": an audit record must not read the row: ${e.getMessage}""", e)
+    }.get
+    CatalystTypeConverters.createToCatalystConverter(ArrayType(appender.detailSchema))(
+      evaluated.collect().head.getSeq[Row](0)).asInstanceOf[ArrayData]
+  }
 
   /** First-match-only variant of [[plug]]: each row takes the FIRST rule
     * whose condition matches it and is immune to every later rule — the
@@ -119,26 +167,17 @@ case class SparkPlug(
     * folded into the flag afterwards. All narrow projections — the chain
     * costs the same single pass as [[plug]]. */
   def plugFirstMatch(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] = {
-    val validationResult =
-      if (isValidateRulesEnabled) validate(in.schema, rules) else Nil
-    if (validationResult.nonEmpty) Left(validationResult)
-    else {
-      val flag = "__graft_matched"
-      val hit  = "__graft_hit"
-      val seeded = preProcessInput(in).withColumn(flag, lit(false))
-      val plugged = rules.zipWithIndex.foldLeft(seeded) {
-        case (df, (rule, ruleNumber)) =>
-          val staged = repartitionAndCheckpoint(
-            applyRule(
-              df.withColumn(hit, expr(rule.condition) && !col(flag)),
-              rule.copy(condition = hit)),
-            ruleNumber)
-          staged
-            .withColumn(flag, col(flag) || col(hit))
-            .drop(hit)
-      }
-      Right(withChangeCount(plugged.drop(flag)))
-    }
+    val flag = "__graft_matched"
+    val hit  = "__graft_hit"
+    validated(in, rules)(withAuditTrail(rules) {
+      foldRules(in.withColumn(flag, lit(false)), rules) { (df, rule, i) =>
+        // a NULL condition is a miss, not a match: it must not shield the row
+        val matches = coalesce(expr(rule.condition), lit(false)) && !col(flag)
+        applyRule(df.withColumn(hit, matches), rule.copy(condition = hit), i)
+          .withColumn(flag, col(flag) || col(hit))
+          .drop(hit)
+      }.drop(flag)
+    })
   }
 
   /** Per-rule telemetry over the SAME sequential semantics as [[plug]]:
@@ -156,8 +195,7 @@ case class SparkPlug(
     * one conditional aggregate at the end reads them all; the wide 1-row
     * result unpivots to a #rules-row frame. */
   def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = {
-    var df = in
-    rules.zipWithIndex.foreach { case (rule, i) =>
+    val flagged = foldRules(in, rules) { (df, rule, i) =>
       val fields = PlugRule.buildFieldsMap(df.schema).toMap
       val changed = rule.actions.map { a =>
         val dt = fields.getOrElse(a.key, throw new IllegalArgumentException(
@@ -166,15 +204,15 @@ case class SparkPlug(
         !(col(a.key) <=> v)
       }.reduceOption(_ || _).getOrElse(lit(false))
       val cond = expr(rule.condition)
-      df = applyRule(
+      applyRule(
         df.withColumn(s"__hit_$i", cond)
           .withColumn(s"__chg_$i", cond && changed),
-        rule)
+        rule, i)
     }
     val aggs = rules.indices.flatMap(i => Seq(
       sum(when(col(s"__hit_$i"), 1L).otherwise(0L)).as(s"__h_$i"),
       sum(when(col(s"__chg_$i"), 1L).otherwise(0L)).as(s"__c_$i")))
-    df.agg(aggs.head, aggs.tail: _*)
+    flagged.agg(aggs.head, aggs.tail: _*)
       .select(explode(array(rules.zipWithIndex.map { case (r, i) =>
         struct(lit(r.name).as("rule_name"),
           coalesce(col(s"__h_$i"), lit(0L)).as("n_matched"),
@@ -266,24 +304,21 @@ case class SparkPlug(
       }
     }
 
-  /** Apply one rule = one projection. */
-  private[plug] def applyRule(frame: DataFrame, rule: PlugRule): DataFrame = {
-    val compiled = RuleCompiler.compile(
-      rule, frame.schema, plugDetails.map(_.column), plugDetails.map(_.appender), isKeepOldField)
-    frame.withColumns(compiled.allUpdates)
+  /** Apply the rule with the given chain position = one projection. */
+  private def applyRule(frame: DataFrame, rule: PlugRule, ruleNumber: Int): DataFrame = {
+    val firedBit = plugDetails.map(_ => SparkPlug.maskColumn(ruleNumber) -> ruleNumber % 64)
+    frame.withColumns(RuleCompiler.compile(rule, frame.schema, firedBit, isKeepOldField).allUpdates)
   }
 
   /** Changed-row count. The reference runs an extra eager full-scan job with
     * a LongAccumulator (SparkPlug.scala:52-62); we attach `Dataset.observe`
     * so the count rides on whatever action the caller runs — zero extra jobs.
     * Read it back via a QueryExecutionListener or `observedMetrics`. */
-  private def withChangeCount(out: DataFrame): DataFrame =
-    if (isAccumulatorsEnabled && plugDetails.nonEmpty) {
+  private def withChangeCount(out: DataFrame, changed: Column): DataFrame =
+    if (isAccumulatorsEnabled) {
       val obs = new org.apache.spark.sql.Observation(SparkPlug.observationName)
       lastObservation = Some(obs)
-      out.observe(
-        obs,
-        sum(when(size(col(plugDetails.get.column)) > 0, 1L).otherwise(0L)).as(SparkPlug.changedMetric))
+      out.observe(obs, sum(when(changed, 1L).otherwise(0L)).as(SparkPlug.changedMetric))
     } else out
 
   private def repartitionAndCheckpoint(in: Dataset[Row], ruleNumber: Int): Dataset[Row] =
@@ -341,4 +376,31 @@ object SparkPlug {
   val changedMetric            = "changed"
 
   def builder(implicit spark: SparkSession): SparkPlugBuilder = SparkPlugBuilder()
+
+  /** The fired-rule mask holding rule `ruleNumber`'s bit: 64 rules a word. */
+  private def maskColumn(ruleNumber: Int): String = s"__graft_mask_${ruleNumber / 64}"
+
+  private def maskColumns(nRules: Int): Seq[String] = (0 until nRules by 64).map(maskColumn)
+
+  /** Computing expressions one whole-stage-codegen region may hold before
+    * the fold ends it. Measured on Spark 4.1 over rule shapes from one
+    * single-action comparison to three actions under AND/OR conditions with
+    * plug details, one such expression compiles to 18-41 bytes of
+    * `processNext`; this budget keeps a region under about 7000 bytes,
+    * below HotSpot's 8000-byte JIT limit (ChainScalingSpec pins it). */
+  private val regionBudget = 150
+
+  /** Computing expressions in the `Project`s above the plan's last region
+    * end (a boundary, checkpoint, exchange or scan). Whole-stage codegen
+    * evaluates a subexpression shared within one projection once, so each
+    * `Project` counts its distinct non-leaf expressions. */
+  private def regionCost(plan: LogicalPlan): Int = plan match {
+    case Project(list, child) =>
+      list.flatMap(_.collect { case e if e.children.nonEmpty && !e.isInstanceOf[Alias] => e.canonicalized })
+        .distinct.size + regionCost(child)
+    case _ => 0
+  }
+
+  private def endRegionIfFull(df: DataFrame): DataFrame =
+    if (regionCost(df.queryExecution.analyzed) > regionBudget) CodegenBoundary.over(df) else df
 }

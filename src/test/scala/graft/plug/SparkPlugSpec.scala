@@ -473,4 +473,194 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
     badType.validate(itemsDf.schema) shouldBe List(
       PlugRuleValidationError("r3", """Value "cheap" cannot be assigned to field items.price."""))
   }
+
+  // ---- differential audit spec: the engine against a row model ----
+
+  it should "reject an audit record that reads the row, naming the rule" in {
+    val appender = AuditAppender.forProduct[OverrideDetail] { (name, version, fields) =>
+      struct((if (name == "reads") col("title") else lit(name)).as("ruleId"),
+        typedlit(fields).as("fieldNames"), lit(version).as("ruleVersion"))
+    }
+    val rules = List(
+      PlugRule("fine", "v1", "price > 0", Seq(PlugAction("price", "1"))),
+      PlugRule("reads", "v1", "price > 0", Seq(PlugAction("price", "2"))))
+    val e = the[IllegalArgumentException] thrownBy
+      SparkPlug.builder(spark).enablePlugDetails("d", appender).create().plug(df, rules)
+    e.getMessage should include("\"reads\"")
+    e.getMessage should not include "\"fine\""
+  }
+
+  it should "match a row model on a 130-rule chain with details, first-match and staging" in {
+    import AuditModel._
+    val rules = genRules(new scala.util.Random(20261017L), 130)
+    val in = frame(genRows(new scala.util.Random(7L), 14))
+    val inRows = genRows(new scala.util.Random(7L), 14)
+
+    def check(out: DataFrame, firstMatch: Boolean, chain: List[Rule] = rules): Unit =
+      read(out) shouldBe model(inRows, chain, firstMatch)
+
+    val plugger = SparkPlug.builder(spark).enablePlugDetails().enableAccumulators.create()
+    val plugged = plugger.plug(in, rules.map(_.rule)).toOption.get
+    check(plugged, firstMatch = false)
+    plugger.changedRowCount shouldBe Some(model(inRows, rules, false).count(_._2._2.nonEmpty).toLong)
+    check(SparkPlug.builder(spark).enablePlugDetails().create()
+      .plugFirstMatch(in, rules.map(_.rule)).toOption.get, firstMatch = true)
+
+    // repartition every 40 rules and checkpoint every 80: staging cuts the
+    // chain at points that do not line up with the codegen regions
+    val staged = SparkPlug.builder(spark).enablePlugDetails().enableLocalCheckpointing(40, 3).create()
+      .plug(in, rules.map(_.rule)).toOption.get
+    check(staged, firstMatch = false)
+    staged.queryExecution.analyzed.collect { case b: CodegenBoundary => b } should not be empty
+
+    // an empty chain still overwrites a stale audit column with empty arrays
+    val stale = in.withColumn("plugDetails",
+      array(struct(lit("stale").as("name"), lit("v0").as("version"), array(lit("price")).as("fieldNames"))))
+    check(SparkPlug.builder(spark).enablePlugDetails().create().plug(stale, Nil).toOption.get,
+      firstMatch = false, chain = Nil)
+    // a stale audit column is replaced, not appended to
+    check(SparkPlug.builder(spark).enablePlugDetails().create().plug(stale, rules.map(_.rule)).toOption.get,
+      firstMatch = false)
+  }
+
+  it should "order columns as input, plugDetails, then old-value copies in rule order" in {
+    val rules = List(
+      PlugRule("r1", "v1", "price > 250", Seq(PlugAction("price", "100"))),
+      PlugRule("r2", "v1", "brand = 'Apple'", Seq(PlugAction("brand", "Apple Inc"))))
+    val out = SparkPlug.builder(spark).enablePlugDetails().keepOldField.create()
+      .plug(df, rules).toOption.get
+    out.schema.fieldNames.toSeq shouldBe
+      Seq("title", "brand", "price", "plugDetails", "price_r1_old", "brand_r2_old")
+    out.filter($"title" === "iPhone").select("plugDetails.name").as[Seq[String]].head() shouldBe
+      Seq("r1", "r2")
+  }
+
+  /** An independent model of the plug semantics (SURVEY §§1-4) over rows of
+    * (id, title, brand, price, score): rules apply in order, each action
+    * reads the row as the rule found it, a rule's record is appended when
+    * its condition holds and some action changed its column (null-safe), and
+    * under first-match a row is immune to every rule after the first one
+    * that matched it. */
+  object AuditModel {
+    type Vals = Map[String, Any]
+    val cols = Seq("title", "brand", "price", "score")
+
+    sealed trait Cond { def sql: String; def eval(r: Vals): Option[Boolean] }
+    case class Cmp(c: String, op: String, v: Any) extends Cond {
+      def sql = s"$c $op ${sqlLit(v)}"
+      def eval(r: Vals) = Option(r(c)).map { x =>
+        val k = (x, v) match {
+          case (a: Int, b: Int) => a.compare(b)
+          case (a: Double, b: Double) => a.compare(b)
+          case (a: String, b: String) => a.compareTo(b)
+          case _ => sys.error(s"bad comparison $x $v")
+        }
+        op match { case "<" => k < 0; case ">" => k > 0; case "<=" => k <= 0; case "=" => k == 0 }
+      }
+    }
+    case class IsNull(c: String) extends Cond {
+      def sql = s"$c IS NULL"
+      def eval(r: Vals) = Some(r(c) == null)
+    }
+    case class And(a: Cond, b: Cond) extends Cond {
+      def sql = s"(${a.sql}) AND (${b.sql})"
+      def eval(r: Vals) = (a.eval(r), b.eval(r)) match {
+        case (Some(false), _) | (_, Some(false)) => Some(false)
+        case (Some(true), Some(true)) => Some(true)
+        case _ => None
+      }
+    }
+    case class Or(a: Cond, b: Cond) extends Cond {
+      def sql = s"(${a.sql}) OR (${b.sql})"
+      def eval(r: Vals) = (a.eval(r), b.eval(r)) match {
+        case (Some(true), _) | (_, Some(true)) => Some(true)
+        case (Some(false), Some(false)) => Some(false)
+        case _ => None
+      }
+    }
+    def sqlLit(v: Any): String = v match { case s: String => s"'$s'"; case x => x.toString }
+
+    case class Act(key: String, value: String, eval: Vals => Any)
+    case class Rule(name: String, cond: Cond, acts: Seq[Act]) {
+      def rule = PlugRule(name, "v1", cond.sql, acts.map(a => PlugAction(a.key, a.value)))
+    }
+
+    val titles = Seq("t0", "t1", "t2")
+    val brands = Seq("A", "B", "C")
+    val scores = Seq(0.5, 1.5, 2.5)
+    def pick[T](rng: scala.util.Random, xs: Seq[T]): T = xs(rng.nextInt(xs.size))
+    def orNull[T](rng: scala.util.Random, x: => T): Any = if (rng.nextInt(5) == 0) null else x
+
+    def genRows(rng: scala.util.Random, n: Int): Seq[(Int, Vals)] = (0 until n).map(i => i -> Map(
+      "title" -> orNull(rng, pick(rng, titles)), "brand" -> orNull(rng, pick(rng, brands)),
+      "price" -> orNull(rng, rng.nextInt(10)), "score" -> orNull(rng, pick(rng, scores))))
+
+    def genAtom(rng: scala.util.Random): Cond = rng.nextInt(6) match {
+      case 0 => Cmp("price", ">", rng.nextInt(10))
+      case 1 => Cmp("price", "<=", rng.nextInt(10))
+      case 2 => Cmp("brand", "=", pick(rng, brands))
+      case 3 => Cmp("score", "<", pick(rng, scores))
+      case 4 => Cmp("title", "=", pick(rng, titles))
+      case _ => IsNull(pick(rng, cols))
+    }
+
+    def genAct(rng: scala.util.Random, key: String): Act = rng.nextInt(4) match {
+      case 0 => Act(key, s"`$key`", _(key)) // no-op: the change gate stays closed
+      case 1 => key match { // backtick SQL over the row
+        case "price" => Act(key, "`price + 1`", r => Option(r("price")).map(_.asInstanceOf[Int] + 1).orNull)
+        case "score" => Act(key, "`score * 2`", r => Option(r("score")).map(_.asInstanceOf[Double] * 2).orNull)
+        case "brand" => Act(key, "`concat(brand, 'x')`", r => Option(r("brand")).map(_.toString + "x").orNull)
+        case _ => Act(key, "`upper(title)`", r => Option(r("title")).map(_.toString.toUpperCase).orNull)
+      }
+      case _ => key match { // a literal, often the value a row already holds
+        case "price" => val v = rng.nextInt(10); Act(key, v.toString, _ => v)
+        case "score" => val v = pick(rng, scores); Act(key, v.toString, _ => v)
+        case "brand" => val v = pick(rng, brands); Act(key, v, _ => v)
+        case _ => val v = pick(rng, titles); Act(key, v, _ => v)
+      }
+    }
+
+    def genRules(rng: scala.util.Random, n: Int): List[Rule] = (0 until n).toList.map { i =>
+      val cond = rng.nextInt(4) match {
+        case 0 => And(genAtom(rng), genAtom(rng))
+        case 1 => Or(genAtom(rng), genAtom(rng))
+        case _ => genAtom(rng)
+      }
+      val keys = rng.shuffle(cols).take(1 + rng.nextInt(3))
+      Rule(s"rule$i", cond, keys.map(genAct(rng, _)))
+    }
+
+    def frame(rows: Seq[(Int, Vals)]): DataFrame = {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(StructField("id", IntegerType), StructField("title", StringType),
+        StructField("brand", StringType), StructField("price", IntegerType), StructField("score", DoubleType)))
+      spark.createDataFrame(java.util.Arrays.asList(rows.map { case (id, v) =>
+        Row(id +: cols.map(v): _*) }: _*), schema)
+    }
+
+    def model(rows: Seq[(Int, Vals)], rules: List[Rule], firstMatch: Boolean): Map[Int, (Vals, Seq[PlugDetail])] =
+      rows.map { case (id, start) =>
+        val (end, details, _) = rules.foldLeft((start, Vector.empty[PlugDetail], false)) {
+          case ((r, ds, matched), rule) =>
+            val hit = rule.cond.eval(r).contains(true) && !(firstMatch && matched)
+            if (!hit) (r, ds, matched)
+            else {
+              val next = rule.acts.map(a => a.key -> a.eval(r)).toMap
+              val changed = next.exists { case (k, v) => v != r(k) }
+              (r ++ next, if (changed) ds :+ PlugDetail(rule.name, "v1", rule.acts.map(_.key)) else ds, true)
+            }
+        }
+        id -> (end -> details)
+      }.toMap
+
+    def read(out: DataFrame): Map[Int, (Vals, Seq[PlugDetail])] = {
+      import org.apache.spark.sql.Row
+      out.schema.fieldNames.toSeq shouldBe Seq("id") ++ cols :+ "plugDetails"
+      out.collect().map { r =>
+        r.getInt(0) -> (cols.map(c => c -> r.getAs[Any](c)).toMap ->
+          r.getSeq[Row](5).map(d => PlugDetail(d.getString(0), d.getString(1), d.getSeq[String](2))))
+      }.toMap
+    }
+  }
 }

@@ -35,6 +35,29 @@ class StreamingSpec extends AnyFlatSpec with Matchers {
     rows shouldBe Array("click", "big")
   }
 
+  it should "run a first-match chain longer than one codegen region like the batch engine" in {
+    implicit val sp = spark
+    val evs = (0 until 30).map(i =>
+      Ev(t("2024-01-01 10:00:00"), i.toLong, if (i % 3 == 0) "view" else "click", (i * 7 % 100).toDouble))
+    val rules = (0 until 40).toList.map(i => PlugRule(s"r$i", "v1",
+      s"value > ${i * 2} AND (event_type = 'click' OR user_id % 4 = ${i % 4})",
+      Seq(PlugAction("event_type", s"e$i"), PlugAction("value", s"$i.5"))))
+    val in = MemoryStream[Ev]
+    in.addData(evs: _*)
+    val plugged = StreamingOps.plugFirstMatchStream(in.toDF(), rules)
+    val q = plugged.writeStream.format("memory").queryName("first_match_out")
+      .outputMode(OutputMode.Append).start()
+    try {
+      q.processAllAvailable()
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+        .collect { case b: graft.plug.CodegenBoundaryExec => b } should not be empty
+    } finally q.stop()
+    val batch = graft.plug.SparkPlug.builder.create().plugFirstMatch(evs.toDF(), rules).toOption.get
+    spark.table("first_match_out").as[Ev].collect().sortBy(_.user_id) shouldBe
+      batch.as[Ev].collect().sortBy(_.user_id)
+  }
+
   it should "aggregate tumbling windows with a watermark" in {
     val in = MemoryStream[Ev]
     in.addData(
