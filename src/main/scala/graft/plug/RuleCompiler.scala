@@ -40,24 +40,19 @@ object RuleCompiler {
       })
     }
 
-  /** One compiled rule: every (top-level) column it rewrites, the
-    * fired-rule mask update (if plug details are enabled), and the old-value
-    * copies (if keepOldField). Applied as `df.withColumns(allUpdates)`. */
+  /** One compiled rule: every (top-level) column it rewrites, the old-value
+    * copies (if keepOldField), and `fired` — true where the rule matched AND
+    * changed something, the gate behind the audit trail and the per-rule
+    * change counts. Applied as `df.withColumns(allUpdates)`. */
   case class Compiled(
       updates: Seq[(String, Column)],
       oldCopies: Seq[(String, Column)],
-      maskUpdate: Option[(String, Column)]
+      fired: Column
   ) {
-    def allUpdates: Map[String, Column] = (oldCopies ++ updates ++ maskUpdate).toMap
+    def allUpdates: Map[String, Column] = (oldCopies ++ updates).toMap
   }
 
-  /** `firedBit` is the rule's (mask column, bit) when plug details are on. */
-  def compile(
-      rule: PlugRule,
-      schema: StructType,
-      firedBit: Option[(String, Int)],
-      keepOldField: Boolean
-  ): Compiled = {
+  def compile(rule: PlugRule, schema: StructType, keepOldField: Boolean): Compiled = {
     val fields = PlugRule.buildFieldsMap(schema).toMap
     val cond   = expr(rule.condition)
 
@@ -110,12 +105,11 @@ object RuleCompiler {
 
     // Null-safe change detection, OR-ed across actions; the comparison
     // operand is the post-coercion value, matching the reference's
-    // `not(key <=> cast(v as double))` (PlugRule.scala:50,58). Only built
-    // when the audit mask needs the gate. For a per-element action the
-    // extraction `col("items.price")` resolves to the ARRAY of element
-    // values, so the gate is "some element differs" (exists), null/empty
-    // arrays counting as unchanged.
-    def anyChanged: Column =
+    // `not(key <=> cast(v as double))` (PlugRule.scala:50,58). For a
+    // per-element action the extraction `col("items.price")` resolves to
+    // the ARRAY of element values, so the gate is "some element differs"
+    // (exists), null/empty arrays counting as unchanged.
+    val anyChanged: Column =
       converted.map { case (a, v) =>
         if (crossesArray(a.key))
           coalesce(exists(col(a.key), e => !(e <=> v)), lit(false))
@@ -188,13 +182,6 @@ object RuleCompiler {
       if (!keepOldField) Seq.empty
       else converted.map(_._1.updateKey).distinct.map(k => s"${k}_${rule.name}_old" -> col(k))
 
-    // Audit gate: if the rule matched AND changed something, set its bit.
-    // The reference appends a record per firing rule through a UDF4
-    // (SparkPlugUDFs.scala:14-31), copying the growing array every time.
-    val maskUpdate = firedBit.map { case (mask, bit) =>
-      mask -> col(mask).bitwiseOR(when(cond && anyChanged, lit(1L << bit)).otherwise(lit(0L)))
-    }
-
-    Compiled(updates, oldCopies, maskUpdate)
+    Compiled(updates, oldCopies, cond && anyChanged)
   }
 }

@@ -69,7 +69,7 @@ case class SparkPlug(
   /** Validate (if enabled) then fold the rules over the input frame.
     * (reference: SparkPlug.scala:29-40) */
   def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] =
-    validated(in, rules)(withAuditTrail(rules)(foldRules(in, rules)(applyRule)))
+    validated(in, rules)(withAuditTrail(rules)(foldRules(in, rules)(applyRule(_, _, _))))
 
   private def validated(in: DataFrame, rules: List[PlugRule])(
       plugged: => DataFrame): Either[List[PlugRuleValidationError], DataFrame] = {
@@ -190,24 +190,16 @@ case class SparkPlug(
     * earlier rule rewrites its inputs — which this catches and a
     * per-rule-in-isolation count would not.
     *
-    * One pass: hit/changed FLAGS are added as projections interleaved
-    * with the rule projections (the chain stays narrow, no shuffle), and
+    * "Changed" is the same gate the audit trail uses
+    * ([[RuleCompiler.Compiled.fired]]), so map-entry and array-element
+    * actions count like any other. One pass: hit/changed FLAGS ride in
+    * each rule's own projection (the chain stays narrow, no shuffle), and
     * one conditional aggregate at the end reads them all; the wide 1-row
     * result unpivots to a #rules-row frame. */
   def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = {
     val flagged = foldRules(in, rules) { (df, rule, i) =>
-      val fields = PlugRule.buildFieldsMap(df.schema).toMap
-      val changed = rule.actions.map { a =>
-        val dt = fields.getOrElse(a.key, throw new IllegalArgumentException(
-          s"""Rule "${rule.name}": Field "${a.key}" not found in the schema."""))
-        val v = RuleCompiler.coerceValue(a.value, dt).getOrElse(lit(null))
-        !(col(a.key) <=> v)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      val cond = expr(rule.condition)
-      applyRule(
-        df.withColumn(s"__hit_$i", cond)
-          .withColumn(s"__chg_$i", cond && changed),
-        rule, i)
+      applyRule(df, rule, i,
+        c => Map(s"__hit_$i" -> expr(rule.condition), s"__chg_$i" -> c.fired))
     }
     val aggs = rules.indices.flatMap(i => Seq(
       sum(when(col(s"__hit_$i"), 1L).otherwise(0L)).as(s"__h_$i"),
@@ -304,10 +296,20 @@ case class SparkPlug(
       }
     }
 
-  /** Apply the rule with the given chain position = one projection. */
-  private def applyRule(frame: DataFrame, rule: PlugRule, ruleNumber: Int): DataFrame = {
-    val firedBit = plugDetails.map(_ => SparkPlug.maskColumn(ruleNumber) -> ruleNumber % 64)
-    frame.withColumns(RuleCompiler.compile(rule, frame.schema, firedBit, isKeepOldField).allUpdates)
+  /** Apply the rule with the given chain position = one projection. With
+    * plug details on, a rule that fires ORs its bit into its mask word; the
+    * reference appends a record per firing rule through a UDF4
+    * (SparkPlugUDFs.scala:14-31), copying the growing array every time.
+    * `extra` adds columns computed from the same pre-rule frame. */
+  private def applyRule(frame: DataFrame, rule: PlugRule, ruleNumber: Int,
+      extra: RuleCompiler.Compiled => Map[String, Column] = _ => Map.empty): DataFrame = {
+    val compiled = RuleCompiler.compile(rule, frame.schema, isKeepOldField)
+    val maskUpdate = plugDetails.map { _ =>
+      val mask = SparkPlug.maskColumn(ruleNumber)
+      mask -> col(mask).bitwiseOR(
+        when(compiled.fired, lit(1L << (ruleNumber % 64))).otherwise(lit(0L)))
+    }
+    frame.withColumns(compiled.allUpdates ++ maskUpdate ++ extra(compiled))
   }
 
   /** Changed-row count. The reference runs an extra eager full-scan job with

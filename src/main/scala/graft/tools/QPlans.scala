@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of named SparkEntry queries to files —
   * the optimization round's plan evidence (plans/r14/<query>_{before,
   * after}.txt). Building a lifecycle query's DataFrame executes its
@@ -17,21 +15,7 @@ object QPlans {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-    if (sys.env.getOrElse("GRAFT_BENCH_LOCAL_CRC", "0") != "1")
-      b.config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem"): Unit
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(rawLocalFs = true)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1: measure first).
   *
@@ -20,21 +19,7 @@ object QProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-    if (sys.env.getOrElse("GRAFT_BENCH_LOCAL_CRC", "0") != "1")
-      b.config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem"): Unit
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(rawLocalFs = true)
 
     def consume(name: String): Double = {
       val t0 = System.nanoTime()

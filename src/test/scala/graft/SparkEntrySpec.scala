@@ -23,123 +23,57 @@ class SparkEntrySpec extends AnyFlatSpec with Matchers {
     SparkEntry.entry(spark).count() should be > 0L
   }
 
-  it should "assign injective initials abbreviations for the bench line" in {
-    // Stage 5 of the bench degrade chain compresses names to
-    // prefix + token initials; an abbrev collision would silently merge
-    // two queries' times in the emitted JSON object.
+  it should "keep the stage-9 bench line parseable for the full live set" in {
+    // The committed bench of record, fed through Bench.stdoutLine with the
+    // record run's ladder summary: the line is pinned byte for byte (it was
+    // recorded from the full 10-stage chain, before stages 1-8 were cut).
+    // It differs from BENCH_r15_c8.json's live line only because the record
+    // rounds to 2 decimals: the total reads 255.28, not 255.23, and "w" and
+    // "3w" (recorded at 0.50 s, under 0.5 s live) keep their entries.
+    val src = scala.io.Source.fromFile("bench_detail.json")
+    val detail = try src.mkString finally src.close()
+    val entry = """"([a-z0-9_]+)": \{"key": "[0-9a-z]+", "sec": ([0-9.]+), "ok": (true|false)""".r
+    val record = entry.findAllMatchIn(detail)
+      .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toBoolean)).toSeq.sortBy(_._1)
+    record.size shouldBe 355
+    val sf = """"sf": "([^"]+)"""".r.findFirstMatchIn(detail).get.group(1)
+    Bench.stdoutLine(record, Nil, "3x32,2x64,1x192,0x67", 753, 2281, 0, sf) shouldBe (
+      """{"metric":"total","value":255.28,"unit":"sec","queries":{"0":2,"1":1,"2":1,"6":1,""" +
+      """"7":1,"8":1,"9":1,"e":1,"f":1,"i":1,"m":2,"s":1,"t":2,"w":1,"z":1,"10":1,"12":2,""" +
+      """"15":1,"1l":1,"1n":1,"1t":2,"1x":1,"27":1,"2c":1,"2d":1,"2e":1,"2i":1,"2l":1,"2p":1,""" +
+      """"2s":1,"2x":1,"2z":1,"30":1,"35":1,"3c":1,"3e":1,"3k":1,"3l":1,"3m":1,"3n":2,"3o":1,""" +
+      """"3p":1,"3q":1,"3r":1,"3t":1,"3u":1,"3v":1,"3w":1,"3x":2,"3y":1,"3z":1,"40":2,"41":1,""" +
+      """"42":1,"43":1,"44":1,"45":2,"46":1,"47":1,"49":1,"4a":1,"4b":2,"4c":2,"4d":1,"4e":1,""" +
+      """"4f":1,"4g":1,"4h":2,"4o":1,"4p":1,"4q":1,"4v":1,"4w":1,"55":1,"5l":1,"5y":2,"61":1,""" +
+      """"62":1,"66":1,"68":1,"6a":1,"6b":1,"6c":1,"6d":1,"6e":2,"6g":3,"6h":2,"6i":1,"6j":1,""" +
+      """"6l":1,"6m":1,"6o":1,"6p":1,"6q":2,"6r":1,"6s":1,"6t":1,"6w":1,"6x":2,"6z":1,"71":1,""" +
+      """"72":1,"74":1,"7d":2,"7e":1,"7f":1,"7g":1,"7h":1,"7i":1,"7k":2,"7l":1,"7n":1,"7o":1,""" +
+      """"7q":1,"7r":1,"7t":1,"7u":2,"7v":1,"7w":1,"7x":1,"7y":2,"7z":1,"80":1,"81":1,"82":1,""" +
+      """"83":5,"84":1,"85":2,"86":2,"87":2,"88":4,"89":2,"8a":1,"8b":1,"8c":4,"8d":2,"8e":1,""" +
+      """"8f":1,"8g":2,"8h":1,"8i":1,"8j":1,"8k":1,"8l":1,"8o":1,"8p":1,"8r":1,"8s":1,"8t":2,""" +
+      """"8u":1,"8v":1,"8w":1,"8x":1,"8y":1,"91":2,"92":1,"93":2,"94":1,"95":3,"96":2,"97":1,""" +
+      """"98":1,"99":1,"9a":1,"9b":2,"9c":1,"9d":1,"9e":1,"9f":1,"9g":2,"9h":1,"9m":1,"9n":1,""" +
+      """"9q":1,"9s":1},"failed":[],"levels":"3x32,2x64,1x192,0x67","warmup_sec":753,""" +
+      """"spent_sec":2281,"contended":0,"sf":"/root/testdata/sf0.1"}""")
+
+    // ordinal keys are injective and decode by re-sorting the query list
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val m = Bench.initialsAbbrev(names)
-    m.keySet shouldBe names.toSet
-    m.values.toSeq.distinct.size shouldBe names.size
-    m("dedup_ngram_jaccard") shouldBe "dd_nj"
-    // collision pairs resolve deterministically by lengthening per-token
-    m("docs_pack_seqs") shouldBe "dc_pase"
-    m("docs_part_sink") shouldBe "dc_pasi"
-    m("events_cohort") shouldBe "ev_coh"
-    m("events_conversion") shouldBe "ev_con"
-  }
-
-  it should "keep bench abbreviations unique even for unresolvable names" in {
-    // docs_ab can never win an initials abbrev: dc_ab is taken by
-    // docs_a_b at level 1 and docs_ab's sole token caps at "ab". The
-    // fallback must not emit the colliding short form dc_ab — a duplicate
-    // JSON key would silently merge two queries' bench times.
-    val m = Bench.initialsAbbrev(Seq("docs_a", "docs_ab", "docs_a_b").sorted)
-    m.values.toSeq.distinct.size shouldBe 3
-    m("docs_ab") shouldBe "docs_ab" // full name, not the taken dc_ab
-  }
-
-  it should "keep the stage-5 bench line under budget at 120 queries" in {
-    // The driver parses the bench JSON from a ~2000-char tail window.
-    // Stage 5 (initials + 1-decimal times) is DESIGNED to hold decimal
-    // precision to ~120 queries under pessimistic 4-char times; past
-    // that the chain's stage 6 takes over (next test). Pin the designed
-    // guarantee at exactly 120 names (truncate or pad the live set).
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val at120 =
-      if (names.size >= 120) names.take(120)
-      else names ++ (names.size until 120).map(i => s"text_future_query_$i")
-    val m = Bench.initialsAbbrev(at120)
-    m.values.toSeq.distinct.size shouldBe at120.size
-    val qs = at120.map(n => "\"" + m(n) + "\":88.8").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"failed":[],"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-5 line length ${line.length}: ") {
-      line.length should be < 1850
-    }
-  }
-
-  it should "keep the stage-6 bench line under budget at 135 queries" in {
-    // Whole-second times, empty failed omitted — designed to hold to
-    // ~135 queries with pessimistic 3-char times (the always-on ladder
-    // fields cost ~5 queries of headroom); past that stage 7's
-    // single-letter prefixes take over (next test). Pin the designed
-    // guarantee at exactly 140 names (truncate or pad the live set).
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (names0.size >= 135) names0.take(135)
-      else names0 ++ (names0.size until 135).map(i => s"text_future_query_$i")
-    val m = Bench.initialsAbbrev(names)
-    val qs = names.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-6 line length ${line.length} at ${names.size} queries: ") {
-      line.length should be < 1850
-    }
-  }
-
-  it should "keep the stage-7 bench line under budget at 155 queries" in {
-    // Single-letter family prefixes, whole-second times, empty failed
-    // omitted — designed to hold to ~155 queries (ladder fields cost
-    // ~5 of headroom); past that stage 8's
-    // sorted-list ordinals take over (next test). Pin the designed
-    // guarantee at exactly 160 names (truncate or pad the live set).
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (names0.size >= 155) names0.take(155)
-      else names0 ++ (names0.size until 155).map(i => s"text_future_query_$i")
-    val m = Bench.initialsAbbrev(names, Bench.tightAbbrev)
-    m.values.toSeq.distinct.size shouldBe names.size // still injective
-    val qs = names.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-7 line length ${line.length} at ${names.size} queries: ") {
-      line.length should be < 1800
-    }
-  }
-
-  it should "keep the stage-8 bench line under budget at 185 queries" in {
-    // Base-36 ordinals with pessimistic 3-char times at the stage's
-    // DESIGNED size (the live set has outgrown it — stage 9 guards the
-    // full set); the mapping must be injective and decodable by
-    // re-sorting the query list.
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (names0.size >= 185) names0.take(185)
-      else names0 ++ (names0.size until 185).map(i => s"text_future_query_$i")
     val m = Bench.ordinalAbbrev(names)
     m.values.toSeq.distinct.size shouldBe names.size
     names.zipWithIndex.foreach { case (n, i) =>
-      java.lang.Long.parseLong(m(n), 36) shouldBe i.toLong // reversible
+      java.lang.Long.parseLong(m(n), 36) shouldBe i.toLong
     }
-    val qs = names.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-8 line length ${line.length} at ${names.size} queries: ") {
-      line.length should be < 1800
-    }
-  }
 
-  it should "keep the stage-9 bench line parseable for the full live set" in {
-    // Last-resort stage: sub-half-second passing queries leave the map,
-    // so the line's length is bounded by the SLOW-query count (which the
-    // 2x bench gate bounds), not the set size. Pessimistic projection: 80
-    // slow queries at 3-char times plus a 10-name failed list must parse
-    // no matter how large the registered set grows.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val m = Bench.ordinalAbbrev(names)
-    val slow = names.take(80)
-    val qs = slow.map(n => "\"" + m(n) + "\":888").mkString("{", ",", "}")
-    val failed = names.takeRight(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":8888.88,"unit":"sec","queries":$qs,"failed":$failed,"levels":"0x88,1x888,2x888,3x888,4x888,5x888","warmup_sec":8888,"spent_sec":8888,"sf":"/root/testdata/sf0.1"}"""
-    withClue(s"projected stage-9 line length ${line.length} with 80 slow of ${names.size} queries: ") {
-      line.length should be < 1800
+    // Pessimistic projection: 80 slow queries at 3-char times plus 10
+    // failed ones must parse no matter how large the registered set grows
+    // — the line's length tracks the slow-query count, not the set size.
+    val slow = names.take(80).toSet
+    val failed = names.takeRight(10).toSet
+    val projected = Bench.stdoutLine(
+      names.map(n => n -> ((if (slow(n)) 888.0 else 0.1), !failed(n))), Nil,
+      "0x88,1x888,2x888,3x888,4x888,5x888", 8888, 8888, 888, "/root/testdata/sf0.1")
+    withClue(s"stage-9 line length ${projected.length} with 80 slow of ${names.size} queries: ") {
+      projected.length should be < 1800
     }
   }
 

@@ -300,14 +300,25 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
       TestRow("iPhone", "Apple", 300),
       TestRow("Galaxy", "Samsung", 1000),
       TestRow("Lumia", "Flagged", 1000)).toDF()
+      .withColumn("attrs", when($"title" === "iPhone", map(lit("color"), lit("black")))
+        .when($"title" === "Galaxy", map(lit("color"), lit("red")))
+        .otherwise(map(lit("size"), lit("L"))))
+      .withColumn("items", when($"title" === "iPhone", array(struct(lit(5.0).as("price"))))
+        .when($"title" === "Galaxy", array(struct(lit(9.5).as("price")), struct(lit(9.5).as("price"))))
+        .otherwise(array().cast("array<struct<price:double>>")))
     val rules = List(
       PlugRule("r1", "v1", "title like '%iPhone%'", Seq(PlugAction("price", "1000"))),
-      PlugRule("r2", "v1", "price = 1000", Seq(PlugAction("brand", "Flagged"))))
+      PlugRule("r2", "v1", "price = 1000", Seq(PlugAction("brand", "Flagged"))),
+      // map entry: black -> red and an absent key are changes, red is not
+      PlugRule("r3", "v1", "brand = 'Flagged'", Seq(PlugAction("attrs.color", "red"))),
+      // array element: only the iPhone holds an element other than 9.5
+      // (the Lumia's empty array has nothing to change)
+      PlugRule("r4", "v1", "price = 1000", Seq(PlugAction("items.price", "9.5"))))
     val out = SparkPlug.builder(spark).create().ruleHitStats(data, rules)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     // r1: 1 match, 1 change; r2: all three rows match post-r1, but the
     // pre-branded Lumia is not a change
-    out shouldBe Array(("r1", 1L, 1L), ("r2", 3L, 2L))
+    out shouldBe Array(("r1", 1L, 1L), ("r2", 3L, 2L), ("r3", 3L, 2L), ("r4", 3L, 1L))
   }
 
   it should "silently assign null for a non-coercible literal when validation is off" in {
