@@ -1,17 +1,10 @@
 package graft
 
+import graft.entry._
+import graft.entry.Fixtures.{plugged, table}
 import graft.plug._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every implemented operator from SURVEY.md §2 gets a `queries` entry
-  * (Spark side) and, where SQL-expressible, an `oracleSql` entry (DuckDB
-  * side) over the same parquet tables. Column names are aliased identically
-  * on both sides — the driver's compare sorts columns by name before
-  * hashing values.
-  */
 /** Bounded deterministic event feed for the streaming oracle queries. */
 case class StreamEv(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
     event_type: String, value: Double, props: String)
@@ -19,474 +12,12 @@ case class StreamEv(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
 /** Bounded deterministic document feed for the streaming oracle queries. */
 case class StreamDoc(doc_id: Long, text: String)
 
+/** The query contract (SURVEY.md §7): the flagship `entry` plus every
+  * implemented operator from SURVEY.md §2 as a Spark `queries` entry and a
+  * DuckDB `oracleSql` entry over the same parquet tables. Each query is
+  * declared once, with its oracle, in its family's file under
+  * `graft.entry`. */
 object SparkEntry {
-
-  private def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** The events table's `ts` physical encoding has changed across testdata
-    * generations: INT64 TIMESTAMP(NANOS) (arrives as Long nanos under
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench
-    * sessions), then naive TIMESTAMP(isAdjustedToUTC=false, MICROS) (arrives
-    * as TIMESTAMP_NTZ when `spark.sql.parquet.inferTimestampNTZ.enabled` is
-    * on). All encodings normalize here to a session-TZ TIMESTAMP; the
-    * session TZ is pinned UTC, so the NTZ cast is value-preserving. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    val df = table(s, dir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
-  }
-
-  /** Test-scale knob: the small testdata tables arrive as one parquet split,
-    * which would serialize the compute-heavy ops on a single core. At real
-    * scale the input has thousands of splits and this repartition would be a
-    * 100 TB shuffle — so it lives here in the harness, not in the ops. */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame =
-    df.repartition(s.sparkContext.defaultParallelism)
-
-  /** Size-adaptive staging width for COMMITS (guide §6, r14 optimization
-    * round): ~64 MB target per committed file with a floor of 4, derived
-    * from the optimizer's size estimate — never a flat
-    * `defaultParallelism`. The flat spread() staged 32 sub-100 KB files
-    * per fixture commit at sf0.1, and every commit pays one driver
-    * footer read per staged file (stats + row count for the manifest),
-    * which profiling showed as ~0.5 s driver gaps per 32-file commit
-    * (ingest_manifest_txn). At 100 TB the same rule derives thousands of
-    * right-sized files; the floor keeps toy-scale read parallelism for
-    * the ops that probe the fixture. Compute-heavy inputs keep plain
-    * [[spread]] — this is only for data that is about to be committed. */
-  private def stageSpread(s: SparkSession, df: DataFrame): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = (bytes / (64L << 20)).toLong + 1L
-    df.repartition(math.max(4L, n).toInt)
-  }
-
-  /** Per-JVM scratch root, removed on JVM exit — repeated verify/bench
-    * invocations of the layout queries reuse one path per purpose instead
-    * of leaking a fresh temp copy of the dataset per run. Pid-scoped so
-    * concurrently running harness JVMs can't wipe each other's writes. */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
-  }
-  private lazy val scratchRoot: java.io.File = {
-    val d = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_scratch_${ProcessHandle.current().pid()}")
-    sys.addShutdownHook(rmTree(d))
-    d
-  }
-  /** Fixed per-purpose scratch dir, wiped and recreated on every call. */
-  private def scratch(sub: String): String = {
-    val d = new java.io.File(scratchRoot, sub)
-    rmTree(d)
-    d.mkdirs()
-    d.toString
-  }
-
-  /** Per-JVM memoized READ-ONLY staged fixture (r12 VERDICT ask #1): many
-    * lifecycle queries open by committing the SAME source slice into a
-    * scratch manifest table before the operator under test (index build,
-    * probe, maintenance) even starts. That commit is test scaffolding,
-    * not the measured operator — rebuilding it on every pass of every
-    * query was a large share of the bench's per-query cold/steady floor.
-    * Each distinct (fixture, sfDir) is built ONCE per JVM by whichever
-    * query arrives first (concurrent callers block on the same key —
-    * `computeIfAbsent` — so a half-built table is never observable) and
-    * then shared. CONTRACT: callers must never mutate a staged dir —
-    * mutating lifecycle queries take a private `stagedCopy` instead. The
-    * per-query INDEX commits stay per-query, so an index-path regression
-    * stays visible in that query's own time. */
-  private val stagedFixtures = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.FutureTask[String]]()
-  private def stagedRO(fixture: String, dir: String)(
-      build: String => Unit): String = {
-    val key = s"$fixture@$dir"
-    // FutureTask memo, NOT computeIfAbsent(build): the build runs
-    // multi-second Spark commit jobs, and computeIfAbsent would hold the
-    // map's bin lock for the whole build — re-serializing the concurrent
-    // cold phase behind an unrelated fixture that hashed into the same
-    // bin. Here the map operation is a cheap putIfAbsent; the winner
-    // runs the task outside any lock and everyone else awaits the same
-    // task. A failed build is evicted so the next caller retries.
-    // The on-disk name embeds the sanitized dir PLUS a digest of the raw
-    // string: sanitization alone is lossy (/a/b and /a_b collide after
-    // the non-word squash), and two sfDirs whose memo keys differ but
-    // whose staged paths coincided would concurrently rmTree each
-    // other's half-built fixture (r13 ADVICE). The md5 prefix makes the
-    // path injective in the raw dir.
-    val task = new java.util.concurrent.FutureTask[String](() => {
-      val dig = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      val d = scratch(
-        s"fix_${fixture}_${dir.replaceAll("[^a-zA-Z0-9._-]", "_")}_$dig")
-      build(d)
-      d
-    })
-    val t = Option(stagedFixtures.putIfAbsent(key, task)).getOrElse {
-      task.run(); task
-    }
-    try t.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        stagedFixtures.remove(key, t): Unit
-        throw e.getCause
-    }
-  }
-
-  /** Private relocated copy of a staged fixture for queries that MUTATE
-    * their corpus (append / DV-delete / branch): manifest tables store
-    * dir-relative paths (ManifestTable scaladoc), so a plain file-tree
-    * copy is a valid table at the new root — milliseconds at harness
-    * scale versus the multi-job Spark re-commit it replaces, and the
-    * mutation happens where production's would: on the table's own files,
-    * never on the shared fixture. */
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit =
-    if (src.isDirectory) {
-      dst.mkdirs(): Unit
-      Option(src.listFiles()).getOrElse(Array.empty)
-        .foreach(c => copyTree(c, new java.io.File(dst, c.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    }
-  private def stagedCopy(sub: String, fixture: String, dir: String)(
-      build: String => Unit): String = {
-    val base = stagedRO(fixture, dir)(build)
-    val d = scratch(sub)
-    copyTree(new java.io.File(base), new java.io.File(d))
-    d
-  }
-
-  /** The four corpus slices the lifecycle queries stage (single builders
-    * so two queries can never stage subtly different content under one
-    * key). */
-  private def fixEmbFull(s: SparkSession, dir: String): String =
-    stagedRO("emb_full", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "embeddings"))))
-  private def fixEmb80Copy(s: SparkSession, sub: String, dir: String): String = {
-    fixEmb80(s, dir): Unit // single builder for the emb_80 key
-    stagedCopy(sub, "emb_80", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "embeddings")
-        .filter(col("vec_id") % 5 =!= 0))))
-  }
-  private def fixEmbFullCopy(s: SparkSession, sub: String, dir: String): String =
-    stagedCopy(sub, "emb_full", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "embeddings"))))
-  /** The committed graph-ANN edge table over the full embeddings corpus
-    * fixture — built ONCE per JVM and shared by the three `sim_hnsw_*`
-    * queries (r13 VERDICT ask #5: the tuned dense-graph build was paid
-    * per query): [[graft.ops.Similarity.knnGraph]] at the tuned config,
-    * committed with `commitIndex` so every probe gates on the `#indexof`
-    * freshness contract exactly like the persisted IVF path. */
-  private def fixGraphFull(s: SparkSession, dir: String): String = {
-    val corpusDir = fixEmbFull(s, dir)
-    stagedRO("graph_full", dir) { d =>
-      val corpusV = graft.sources.ManifestTable.currentVersion(s, corpusDir)
-      val corpus = graft.sources.ManifestTable.read(s, corpusDir)
-      val scope = new graft.ops.CacheScope
-      try {
-        val edges = graft.ops.Similarity.knnGraph(
-            corpus, "vec_id", "embedding", dim = 64, planes = 8, bands = 4,
-            k = 12, scope = scope)
-          .select(col("src"), col("dst"))
-        graft.sources.ManifestTable.commitIndex(
-          s, d, edges.repartition(4), corpusDir, corpusV): Unit
-      } finally scope.release()
-    }
-  }
-
-  /** The committed QUANTIZER REGISTRY over the full embeddings corpus
-    * fixture — the coarse centroids plus BOTH PQ codebook arms (flat and
-    * residual, trained in the same jobs via `pqCodebooksPaired`, so each
-    * arm is bit-identical to separate training), committed ONCE per JVM
-    * as a ~144-row `#indexof`-gated index table. Every PQ-family query
-    * loads the registry back ([[loadPqBooks]]) instead of re-running the
-    * seed + Lloyd job chains — the fixGraphFull decision applied to the
-    * quantizer tier: train/probe decoupling with the same freshness
-    * contract, and probing committed values is bit-identical to inline
-    * training because the doubles roundtrip parquet exactly. */
-  private def fixPqBooks(s: SparkSession, dir: String): String = {
-    val corpusDir = fixEmbFull(s, dir)
-    stagedRO("pq_books", dir) { d =>
-      val corpusV = graft.sources.ManifestTable.currentVersion(s, corpusDir)
-      val corpus = graft.sources.ManifestTable.read(s, corpusDir)
-      val cent = graft.ops.Similarity.kmeansCentroids(
-        corpus, "vec_id", "embedding", k = 16, rounds = 2)
-      val (flat, resid) = graft.ops.Similarity.pqCodebooksPaired(
-        corpus, "vec_id", "embedding", cent, dim = 64, m = 4, pqK = 16,
-        lloydRounds = 2)
-      import s.implicits._
-      val rows = graft.ops.Similarity.pqBooksToRows(cent, flat, resid)
-        .toDF("kind", "sub", "cent_id", "cv")
-      graft.sources.ManifestTable.commitIndex(
-        s, d, rows.repartition(1), corpusDir, corpusV): Unit
-    }
-  }
-
-  /** Load the committed quantizer registry (freshness-gated) back into
-    * the driver literals the PQ ops take — bounded state: 16 + 2·4·16
-    * rows of dim≤64 doubles. */
-  private def loadPqBooks(s: SparkSession, dir: String):
-      (Seq[(Long, Seq[Double])],
-       IndexedSeq[Seq[(Long, Seq[Double])]],
-       IndexedSeq[Seq[(Long, Seq[Double])]]) = {
-    val g = fixPqBooks(s, dir)
-    graft.sources.ManifestTable.requireIndexFresh(s, g)
-    val rows = graft.sources.ManifestTable.read(s, g)
-      .select("kind", "sub", "cent_id", "cv").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
-        r.getSeq[Double](3))).toSeq
-    graft.ops.Similarity.pqBooksFromRows(rows)
-  }
-
-  /** The 80%-slice embeddings RO fixture (the corpus the delta/streaming
-    * maintenance queries mutate private copies of) — single builder so
-    * the copies and the coarse-codebook registry below can never stage
-    * different content under one key. */
-  private def fixEmb80(s: SparkSession, dir: String): String =
-    stagedRO("emb_80", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "embeddings")
-        .filter(col("vec_id") % 5 =!= 0))))
-
-  /** The committed COARSE CODEBOOK over the 80% embeddings slice — the
-    * quantizer-registry decision (fixPqBooks) applied to the corpus the
-    * O(delta)-maintenance queries train on (r14 optimization round):
-    * sim_ivf_delta and stream_ann_maintain open on an 80% corpus copy and
-    * used to re-run seed + 2 Lloyd jobs per pass; the registry trains
-    * ONCE per JVM on the same content (kmeansCentroids is content-
-    * deterministic, so the values are bit-identical to inline training —
-    * the oracle still replays training in full) and every pass loads 16
-    * rows back, freshness-gated. */
-  private def fixCoarse80(s: SparkSession, dir: String): String = {
-    val corpusDir = fixEmb80(s, dir)
-    stagedRO("coarse_80", dir) { d =>
-      val v = graft.sources.ManifestTable.currentVersion(s, corpusDir)
-      val cent = graft.ops.Similarity.kmeansCentroids(
-        graft.sources.ManifestTable.read(s, corpusDir),
-        "vec_id", "embedding", k = 16, rounds = 2)
-      import s.implicits._
-      val rows = cent.map { case (cid, cv) => ("coarse", 0, cid, cv) }
-        .toDF("kind", "sub", "cent_id", "cv")
-      graft.sources.ManifestTable.commitIndex(
-        s, d, rows.repartition(1), corpusDir, v): Unit
-    }
-  }
-
-  /** Load the committed 80%-slice coarse codebook back (freshness-gated)
-    * — bounded state: 16 rows of dim-64 doubles. */
-  private def loadCoarse80(s: SparkSession, dir: String): Seq[(Long, Seq[Double])] = {
-    val g = fixCoarse80(s, dir)
-    graft.sources.ManifestTable.requireIndexFresh(s, g)
-    graft.sources.ManifestTable.read(s, g)
-      .select("cent_id", "cv").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-  }
-
-  /** The committed MULTI-k coarse registry over the FULL embeddings
-    * fixture (r14 optimization round) — the rebalance family's candidate
-    * codebooks (k = 16/24/32, each the same content-deterministic
-    * kmeansCentroids recipe the oracle replays), trained ONCE per JVM
-    * and loaded back freshness-gated. The rebalance queries' steady
-    * passes then pay cell-count aggregates, never Lloyd chains. */
-  private def fixCoarseMulti(s: SparkSession, dir: String): String = {
-    val corpusDir = fixEmbFull(s, dir)
-    stagedRO("coarse_multi", dir) { d =>
-      val v = graft.sources.ManifestTable.currentVersion(s, corpusDir)
-      val corpus = graft.sources.ManifestTable.read(s, corpusDir)
-      import s.implicits._
-      val rows = Seq(16, 24, 32).flatMap { k =>
-        graft.ops.Similarity.kmeansCentroids(
-            corpus, "vec_id", "embedding", k = k, rounds = 2)
-          .map { case (cid, cv) => (s"coarse$k", 0, cid, cv) }
-      }.toDF("kind", "sub", "cent_id", "cv")
-      graft.sources.ManifestTable.commitIndex(
-        s, d, rows.repartition(1), corpusDir, v): Unit
-    }
-  }
-
-  private def loadCoarseMulti(
-      s: SparkSession, dir: String): Map[Int, Seq[(Long, Seq[Double])]] = {
-    val g = fixCoarseMulti(s, dir)
-    graft.sources.ManifestTable.requireIndexFresh(s, g)
-    graft.sources.ManifestTable.read(s, g)
-      .select("kind", "cent_id", "cv").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Double](2)))
-      .groupBy(_._1.stripPrefix("coarse").toInt)
-      .view.mapValues(_.map(t => (t._2, t._3: Seq[Double])).sortBy(_._1).toSeq)
-      .toMap
-  }
-
-  private def fixDocsText(s: SparkSession, dir: String): String =
-    stagedRO("docs_text", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "documents").select("doc_id", "text"))))
-
-  /** The committed EVAL-BENCHMARK slice (every 20th document) the
-    * streaming contamination gate screens against. */
-  private def fixDocsBench(s: SparkSession, dir: String): String =
-    stagedRO("docs_bench", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "documents")
-        .filter(col("doc_id") % 20 === 0).select("doc_id", "text"))))
-
-  /** The committed CONTAMINATION-INDEX registry over the benchmark
-    * fixture (r15 optimization round) — the quantizer-registry decision
-    * (fixPqBooks) applied to the decontamination tier: the benchmark's
-    * distinct shingle set and portable Bloom words
-    * ([[graft.ops.Corpus.contaminationIndex]], deterministic md5
-    * arithmetic — committed values are bit-identical to an inline
-    * build) land ONCE per JVM as one `#indexof`-gated index table, and
-    * the streaming gate loads them back instead of re-deriving the
-    * benchmark index on every pass. Production maintains exactly this
-    * artifact: the benchmark is static, its screen index is version-
-    * gated, and a benchmark refresh rebuilds it through the same
-    * freshness contract. One table, kind-tagged rows ('g' = shingle,
-    * 'w' = Bloom word), so the registry is one commit. */
-  private def fixContamIndex(s: SparkSession, dir: String): String = {
-    val benchDir = fixDocsBench(s, dir)
-    stagedRO("contam_idx", dir) { d =>
-      val M = graft.sources.ManifestTable
-      val v = M.currentVersion(s, benchDir)
-      val (grams, bloom) = graft.ops.Corpus.contaminationIndex(
-        M.read(s, benchDir), "text", shingleN = 3)
-      val rows = grams.select(lit("g").as("kind"), col("g"),
-          lit(null).cast("long").as("word"), lit(null).cast("long").as("bits"))
-        .unionByName(bloom.select(lit("w").as("kind"),
-          lit(null).cast("string").as("g"), col("word"), col("bits")))
-      M.commitIndex(s, d, rows.repartition(2), benchDir, v): Unit
-    }
-  }
-
-  /** One-pass, single-commit inverted-index build (r14 optimization
-    * round). The old shape tokenized the corpus TWICE (corpusStats +
-    * buildPostings) and committed TWICE (plain commitIndex, then a
-    * compactSorted layout rewrite). Here tokenization stages ONCE
-    * through scratch parquet and feeds both the stats aggregate and the
-    * postings build, and the postings commit ALREADY range-clustered by
-    * term (repartitionByRange + local sort — the exact file layout the
-    * compactSorted pass produced, with its string min/max stats, so the
-    * stats-pruned readWhereIn probes are unchanged). At 100 TB: one
-    * corpus pass instead of two, one index commit instead of two.
-    * Returns the (n_docs, total_dl) stats it committed as #meta. */
-  private def commitInvIndex(
-      s: SparkSession, sub: String, corpus: DataFrame, out: String,
-      corpusDir: String, v: Long, files: Int = 8): (Long, Long) = {
-    val R = graft.ops.Retrieval
-    val M = graft.sources.ManifestTable
-    val toksDir = scratch(sub)
-    corpus.select(col("doc_id").as("id"),
-        graft.ops.TextFunctions.tokens(col("text")).as("toks"))
-      .write.mode("overwrite").parquet(toksDir)
-    val toks = s.read.parquet(toksDir)
-    val (n, dl) = R.corpusStatsFromTokens(toks)
-    M.commitIndex(s, out,
-      R.buildPostingsFromTokens(toks)
-        .repartitionByRange(files, col("term"))
-        .sortWithinPartitions(col("term")),
-      corpusDir, v,
-      meta = Map(R.MetaDocs -> n.toString, R.MetaTotalDl -> dl.toString)): Unit
-    (n, dl)
-  }
-
-  /** The committed TOKENIZER REGISTRY: one BPE merge table (12 rows)
-    * induced per (corpus version, training slice) and committed as an
-    * `#indexof`-gated index table — the quantizer-registry decision
-    * applied to the tokenizer tier. The induction is the expensive part
-    * (12 driver-coordinated top-pair rounds over the corpus); the five
-    * text_bpe_* queries load the committed rows back (freshness-gated)
-    * and pay only application. `sub` names the slice ("full" /
-    * "even" / "odd"); `filt` selects it from the committed corpus. */
-  private def loadBpeMerges(
-      s: SparkSession,
-      dir: String,
-      sub: String,
-      filt: org.apache.spark.sql.Column
-  ): Seq[(Int, String, String, Long)] = {
-    val corpusDir = fixDocsText(s, dir)
-    val g = stagedRO(s"bpe_$sub", dir) { d =>
-      val v = graft.sources.ManifestTable.currentVersion(s, corpusDir)
-      val corpus = graft.sources.ManifestTable.read(s, corpusDir).filter(filt)
-      import s.implicits._
-      val rows = graft.ops.Corpus.bpeMergeTable(corpus, "text", nMerges = 12)
-        .toDF("merge_idx", "left_sym", "right_sym", "pair_count")
-      graft.sources.ManifestTable.commitIndex(
-        s, d, rows.repartition(1), corpusDir, v): Unit
-    }
-    graft.sources.ManifestTable.requireIndexFresh(s, g)
-    graft.sources.ManifestTable.read(s, g)
-      .select("merge_idx", "left_sym", "right_sym", "pair_count").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq.sortBy(_._1)
-  }
-  private def fixDocsTextCopy(s: SparkSession, sub: String, dir: String): String =
-    stagedCopy(sub, "docs_text", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "documents").select("doc_id", "text"))))
-  private def fixDocsText80Copy(s: SparkSession, sub: String, dir: String): String =
-    stagedCopy(sub, "docs_text_80", dir)(d => graft.sources.ManifestTable.commit(
-      s, d, stageSpread(s, table(s, dir, "documents").select("doc_id", "text")
-        .filter(col("doc_id") % 5 =!= 0))))
-
-  /** The deterministic 2-layer ReLU MLP (8 -> 4 -> 3) the shipped-model
-    * queries commit: slices of the same md5-derived pseudo-weight stream
-    * the linear models use, so both the Spark side and the oracle SQL
-    * (which inlines these values as literals) derive identical doubles. */
-  private lazy val mlpLayers: Seq[(Seq[Seq[Double]], Seq[Double])] = {
-    val ws = graft.ops.Quality.pseudoWeights(51)
-    val w1 = (0 until 4).map(i => ws.slice(i * 8, i * 8 + 8))
-    val b1 = ws.slice(32, 36)
-    val w2 = (0 until 3).map(o => ws.slice(36 + o * 4, 40 + o * 4))
-    val b2 = ws.slice(48, 51)
-    Seq((w1, b1), (w2, b2))
-  }
-
-  /** The bounded deterministic event slice every STREAMING oracle query
-    * replays, loaded into a MemoryStream: events with `event_id < maxId`,
-    * collected once on the driver (a documented harness artifact — the
-    * production path reads Kafka). Single definition so the feed schema
-    * and slice convention can't drift across the six replay queries. */
-  private def streamFeed(
-      s: SparkSession, dir: String, maxId: Long,
-      eventType: Option[String] = None
-  ): (org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv], Int) = {
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val slice = events(s, dir).filter(col("event_id") < maxId)
-    val feed = eventType.fold(slice)(t => slice.filter(col("event_type") === t))
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-        col("value"), col("props"))
-      .as[StreamEv].collect()
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-    in.addData(feed.toIndexedSeq: _*)
-    (in, feed.length)
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered —
-    * used by the STREAMING replay queries. A streaming query's state is
-    * partitioned by this conf at start (and pinned by the checkpoint for
-    * its lifetime): for a bounded replay with kilobytes of state, 32 state
-    * partitions × up to 4 state stores per stateful op is pure per-batch
-    * task overhead (measured: the stream-stream interval join spends 8 s
-    * on it at local[32]). Production sizes this to state VOLUME — the same
-    * deliberate knob, applied here at harness scale. Batch queries are
-    * unaffected: the conf is restored before returning. */
-  private def withStreamingShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  private def plugged(
-      df: DataFrame,
-      rules: List[PlugRule],
-      build: SparkPlugBuilder => SparkPlugBuilder = identity
-  )(implicit s: SparkSession): DataFrame =
-    build(SparkPlug.builder).create().plug(df, rules)
-      .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")), identity)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The reference's core operation: conditional columnar override (O4). */
@@ -497,10983 +28,24 @@ object SparkEntry {
     plugged(table(spark, "/root/testdata/sf0.001", "lineitem"), List(rule))
   }
 
+  /** `qs`, failing loudly on a name declared twice: a map built from them
+    * would silently keep only the last. */
+  private[graft] def distinctNames(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query names declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  private val declared: Seq[Query] = distinctNames(Seq(
+    PlugQueries.all, DedupQueries.all, SimQueries.all, TextQueries.all,
+    DocsQueries.all, EventsQueries.all, IngestQueries.all, StreamQueries.all,
+    MultimodalQueries.all, StarQueries.all).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // O4: conditional override of a flat string column.
-    "plug_flat_override" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("r1", "v1", "l_discount > 0.05",
-        Seq(PlugAction("l_returnflag", "D")))
-      plugged(table(s, dir, "lineitem"), List(rule))
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "l_discount")
-    }),
-
-    // Extension: per-rule hit/change telemetry under the SEQUENTIAL chain
-    // semantics — r2's condition reads l_returnflag AFTER r1 rewrote it,
-    // so its counts shift with r1 (the dry-run dashboard for rollouts).
-    "plug_rule_hits" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rules = List(
-        PlugRule("r1", "v1", "l_discount > 0.05",
-          Seq(PlugAction("l_returnflag", "D"))),
-        PlugRule("r2", "v1", "l_returnflag = 'D' AND l_quantity < 25",
-          Seq(PlugAction("l_linestatus", "X"))))
-      SparkPlug.builder.create().ruleHitStats(table(s, dir, "lineitem"), rules)
-    }),
-
-    // Extension: rule-set canary diff — per shared column, how many rows
-    // the v1 and v2 rule outputs disagree on (null-safe); the release
-    // gate run before replacing a live rule set.
-    "plug_ruleset_diff" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rulesA = List(
-        PlugRule("flag", "v1", "l_discount > 0.05",
-          Seq(PlugAction("l_returnflag", "D"))))
-      val rulesB = List(
-        PlugRule("flag", "v2", "l_discount > 0.10",
-          Seq(PlugAction("l_returnflag", "D"))),
-        PlugRule("bigqty", "v1", "l_quantity > 40",
-          Seq(PlugAction("l_linestatus", "Z"))))
-      // (orderkey, linenumber) is NOT unique in the synthetic data; the
-      // 4-column key is — diffRuleSets requires a unique row key.
-      SparkPlug.builder.create().diffRuleSets(table(s, dir, "lineitem"),
-          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-          rulesA, rulesB)
-        .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")),
-          identity)
-    }),
-
-    // Extension: GOVERNED rule rollout — rule sets live as manifest-table
-    // snapshot versions (atomic publish, time travel, history), so a
-    // rollout is: commit the candidate set, time-travel-load BOTH
-    // versions, canary-diff them over real data before switching the
-    // production pointer. Every piece (rule serde through parquet, table
-    // versions, diffRuleSets) runs against the same bytes.
-    "plug_governed_rules" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import s.implicits._
-      val out = scratch("rules_table")
-      val rulesV0 = List(
-        PlugRule("flag", "v1", "l_discount > 0.05",
-          Seq(PlugAction("l_returnflag", "D"))))
-      val rulesV1 = List(
-        PlugRule("flag", "v2", "l_discount > 0.10",
-          Seq(PlugAction("l_returnflag", "D"))),
-        PlugRule("bigqty", "v1", "l_quantity > 40",
-          Seq(PlugAction("l_linestatus", "Z"))))
-      graft.sources.ManifestTable.commit(s, out, rulesV0.toDS().toDF())
-      graft.sources.ManifestTable.commit(s, out, rulesV1.toDS().toDF())
-      val live = graft.sources.ManifestTable.readVersion(s, out, 0L)
-        .as[PlugRule].collect().toList.sortBy(_.name)
-      val candidate = graft.sources.ManifestTable.read(s, out)
-        .as[PlugRule].collect().toList.sortBy(_.name)
-      SparkPlug.builder.create().diffRuleSets(table(s, dir, "lineitem"),
-          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-          live, candidate)
-        .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")),
-          identity)
-    }),
-
-    // O6: Int literal coercion (bare int literal).
-    "plug_int_coercion" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("rint", "v1", "l_quantity >= 49",
-        Seq(PlugAction("l_linenumber", "99")))
-      plugged(table(s, dir, "lineitem"), List(rule))
-        .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
-    }),
-
-    // O6: Double literal coercion (cast to double; also the comparison operand).
-    "plug_double_coercion" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("rdbl", "v1", "l_returnflag = 'A'",
-        Seq(PlugAction("l_quantity", "0.5")))
-      plugged(table(s, dir, "lineitem"), List(rule))
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    }),
-
-    // O7: backtick value evaluated as a SQL expression over the row.
-    "plug_backtick_expr" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("rbt", "v1", "l_quantity < 10",
-        Seq(PlugAction("l_returnflag", "`concat(l_returnflag, '-', l_linestatus)`")))
-      plugged(table(s, dir, "lineitem"), List(rule))
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus")
-    }),
-
-    // O3: sequential rule chain — rule 2 sees rule 1's output.
-    "plug_rule_chain" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val r1 = PlugRule("c1", "v1", "l_discount > 0.05",
-        Seq(PlugAction("l_returnflag", "D")))
-      val r2 = PlugRule("c2", "v1", "l_returnflag = 'D' and l_tax > 0.03",
-        Seq(PlugAction("l_linestatus", "X")))
-      plugged(table(s, dir, "lineitem"), List(r1, r2))
-        .select("l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus")
-    }),
-
-    // Extension: first-match-only rule semantics — each row takes the
-    // FIRST matching rule; a later broad rule cannot clobber an earlier
-    // specific one (priority-list behavior).
-    "plug_first_match" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val r1 = PlugRule("narrow", "v1", "l_quantity < 30",
-        Seq(PlugAction("l_returnflag", "X")))
-      val r2 = PlugRule("broad", "v1", "l_quantity < 40",
-        Seq(PlugAction("l_returnflag", "Y")))
-      SparkPlug.builder.create().plugFirstMatch(table(s, dir, "lineitem"), List(r1, r2))
-        .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")), identity)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    }),
-
-    // §2.2 delegated expression surface: date + math functions pass through
-    // the condition and backtick-value paths verbatim (the accepted input
-    // language is all of Spark SQL's scalar surface).
-    "plug_date_math_passthrough" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("rdm", "v1", "year(o_orderdate) >= 1997 and o_totalprice > 200000",
-        Seq(PlugAction("o_totalprice", "`o_totalprice * 1.1`")))
-      plugged(table(s, dir, "orders"), List(rule))
-        .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    }),
-
-    // O11: keepOldField retains pre-rule values as <col>_<rule>_old.
-    "plug_keep_old_field" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("rko", "v1", "l_tax > 0.04",
-        Seq(PlugAction("l_linestatus", "X")))
-      plugged(table(s, dir, "lineitem"), List(rule), _.keepOldField)
-        .select("l_orderkey", "l_linenumber", "l_linestatus", "l_linestatus_rko_old")
-    }),
-
-    // O8+O9+O10: audit trail — append gated on null-safe change detection.
-    // Exposed as the audit-array size (nested arrays of structs don't
-    // round-trip through the driver's hash compare; the size captures the
-    // full gate semantics: condition AND value-actually-changed).
-    "plug_details_count" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("rpd", "v1", "l_discount > 0.05",
-        Seq(PlugAction("l_returnflag", "D")))
-      plugged(table(s, dir, "lineitem"), List(rule), _.enablePlugDetails())
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-          size(col("plugDetails")).as("n_details"))
-    }),
-
-    // O5: struct-field override (one child replaced, siblings preserved).
-    "plug_struct_override" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val df = table(s, dir, "part").withColumn("price",
-        struct(col("p_retailprice").as("minPrice"),
-          (col("p_retailprice") * 1.2).as("maxPrice")))
-      val rule = PlugRule("rst", "v1", "p_size > 40",
-        Seq(PlugAction("price.minPrice", "1000.5")))
-      plugged(df, List(rule))
-        .select(col("p_partkey"), col("price.minPrice").as("min_price"),
-          col("price.maxPrice").as("max_price"))
-    }),
-
-    // O5 extension: array-of-struct element override — an action key like
-    // `items.price` where `items: array<struct>` compiles to
-    // transform(items, x -> x.withField(...)) under the rule condition
-    // (the reference supports only scalar-struct children, README.md:161).
-    // Null arrays pass through untouched (transform(null) is null); the
-    // explode at the end drops them, and the oracle mirrors that with the
-    // p_size % 7 filter.
-    "plug_array_struct_override" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val df = table(s, dir, "part").withColumn("items",
-        when(col("p_size") % 7 === 0, lit(null))
-          .otherwise(array(
-            struct(lit("std").as("sku"), col("p_retailprice").as("price")),
-            struct(lit("promo").as("sku"), (col("p_retailprice") * 0.9).as("price")))))
-      val rule = PlugRule("rarr", "v1", "p_size > 40",
-        Seq(PlugAction("items.price", "0.0")))
-      plugged(df, List(rule))
-        .select(col("p_partkey"), explode(col("items")).as("item"))
-        .select(col("p_partkey"), col("item.sku").as("sku"),
-          round(col("item.price"), 6).as("price"))
-    }),
-
-    // O5 extension: map-entry override — an action key whose parent is a
-    // string-keyed map targets ONE entry: existing bindings replace,
-    // absent keys get added, null maps pass through untouched. The entry
-    // key is data (not schema), so validation checks only the map's value
-    // type.
-    "plug_map_override" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val df = table(s, dir, "documents").withColumn("meta",
-        map(lit("lang"), col("lang"), lit("src"), col("source")))
-      val rule = PlugRule("rmap", "v1", "n_chars > 500",
-        Seq(PlugAction("meta.lang", "xx"), PlugAction("meta.flag", "long")))
-      plugged(df, List(rule))
-        .select(col("doc_id"),
-          element_at(col("meta"), "lang").as("m_lang"),
-          element_at(col("meta"), "src").as("m_src"),
-          element_at(col("meta"), "flag").as("m_flag"))
-    }),
-
-    // O5 extension: depth-2 struct-leaf override — the reference validates
-    // deep paths but its SQL generator only rebuilds one level
-    // (PlugRule.scala:102-121); `withField` lifts the limit (documented
-    // divergence). The condition also resolves through the nested struct.
-    "plug_nested_struct_override" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val df = table(s, dir, "lineitem").withColumn("detail",
-        struct(
-          struct(col("l_quantity").as("qty"), col("l_discount").as("disc")).as("amounts"),
-          col("l_tax").as("tax")))
-      val rule = PlugRule("rnest", "v1", "detail.amounts.disc > 0.05",
-        Seq(PlugAction("detail.amounts.qty", "0")))
-      plugged(df, List(rule))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("detail.amounts.qty").as("qty"),
-          col("detail.amounts.disc").as("disc"),
-          col("detail.tax").as("tax"))
-    }),
-
-    // O5: null struct parents stay null (withField null-propagation).
-    "plug_null_struct_preserved" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val df = table(s, dir, "part").withColumn("price",
-        when(col("p_size") > 5,
-          struct(col("p_retailprice").as("minPrice"),
-            (col("p_retailprice") * 1.2).as("maxPrice"))))
-      val rule = PlugRule("rnull", "v1", "p_size > 40",
-        Seq(PlugAction("price.minPrice", "1000.5")))
-      plugged(df, List(rule))
-        .select(col("p_partkey"), col("price.minPrice").as("min_price"))
-    }),
-
-    // O12+O13: validation — missing field surfaces an error (returned as a
-    // one-row DataFrame so the oracle can assert the exact message).
-    "plug_validation_missing_field" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import sp.implicits._
-      val rule = PlugRule("rv", "v1", "l_discount > 0.05",
-        Seq(PlugAction("no_such_column", "D")))
-      val errs = SparkPlug.builder.enableRulesValidation.create()
-        .plug(table(s, dir, "lineitem"), List(rule))
-        .fold(identity, _ => List.empty[PlugRuleValidationError])
-      errs.toDF().select(col("name"), col("error"))
-    }),
-
-    // O12: validation — two versions of the same rule name are rejected
-    // with the reference's exact message (reference SparkPlug.scala:67-73
-    // "Only one version per rule should be applied.").
-    "plug_dup_names" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import sp.implicits._
-      val rules = List(
-        PlugRule("rdup", "v1", "l_discount > 0.05",
-          Seq(PlugAction("l_returnflag", "D"))),
-        PlugRule("rdup", "v2", "l_discount > 0.06",
-          Seq(PlugAction("l_returnflag", "E"))))
-      val errs = SparkPlug.builder.enableRulesValidation.create()
-        .plug(table(s, dir, "lineitem"), rules)
-        .fold(identity, _ => List.empty[PlugRuleValidationError])
-      errs.toDF().select(col("name"), col("error"))
-    }),
-
-    // O1: JSON-lines rule ingestion — read rules.json into driver-side rule
-    // objects (a real distributed JSON scan + encoder decode; rules then
-    // live on the driver and compile into plans as literals).
-    "plug_rules_ingest" -> ((s, dir) => {
-      import RuleReader._
-      import s.implicits._
-      val rules = s.readPlugRulesFrom("data/rules.json").toSeq.sortBy(_.name)
-      rules.toDF().select(
-        col("name"), col("version"), col("condition").as("rule_condition"),
-        size(col("actions")).as("n_actions"),
-        element_at(col("actions"), 1).getField("key").as("key1"),
-        element_at(col("actions"), 1).getField("value").as("value1"))
-    }),
-
-    // O14: SQL dry-run validation — an undefined function in a condition
-    // passes static validation but fails the empty-frame dry-run with an
-    // "[SQL Error] ..." message (exact analyzer text is version-specific, so
-    // the oracle checks the stable prefix and that the function is named).
-    "plug_sql_dryrun_error" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      import sp.implicits._
-      val rule = PlugRule("rdry", "v1", "conc(l_returnflag, 'x') = 'Ax'",
-        Seq(PlugAction("l_returnflag", "D")))
-      val errs = SparkPlug.builder.enableRulesValidation.create()
-        .plug(table(s, dir, "lineitem"), List(rule))
-        .fold(identity, _ => List.empty[PlugRuleValidationError])
-      errs.toDF().select(
-        col("name"),
-        substring(col("error"), 1, 11).as("err_prefix"),
-        col("error").contains("conc").as("mentions_fn"))
-    }),
-
-    // O15: change accumulator via Dataset.observe — the count rides on the
-    // caller's action (zero extra jobs); read back after the action.
-    "plug_observe_count" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("robs", "v1", "l_discount > 0.05",
-        Seq(PlugAction("l_returnflag", "D")))
-      val plug = SparkPlug.builder.enableAccumulators.create()
-      val out = plug.plug(table(s, dir, "lineitem"), List(rule))
-        .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")), identity)
-      out.count() // the action the observation rides on
-      val changed = plug.changedRowCount.getOrElse(-1L)
-      s.range(1).select(lit("robs").as("name"), lit(changed).as("changed_rows"))
-    }),
-
-    // O16: checkpoint/repartition staging — with rulesPerStage=1 and two
-    // rules the chain repartitions to 7 after each rule and checkpoints
-    // after rule 2; the surviving partition count proves the staging ran.
-    "plug_staging_partitions" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val r1 = PlugRule("s1", "v1", "l_discount > 0.05", Seq(PlugAction("l_returnflag", "D")))
-      val r2 = PlugRule("s2", "v1", "l_quantity < 10", Seq(PlugAction("l_linestatus", "X")))
-      val ckpt = scratch("ckpt")
-      val out = plugged(table(s, dir, "lineitem"), List(r1, r2),
-        _.enableCheckpointing(ckpt, rulesPerStage = 1, numberOfPartitions = 7))
-      s.range(1).select(lit("stage").as("name"),
-        lit(out.rdd.getNumPartitions).as("n_partitions"))
-    }),
-
-    // Integration: plug rules over the documents corpus — the rule engine
-    // and the pipeline ops share tables; a backtick regexp value scrubs
-    // digits from short English docs (regex functions pass through like
-    // any other Spark SQL scalar).
-    "plug_scrub_documents" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val rule = PlugRule("scrub", "v1", "lang = 'en' and length(text) < 300",
-        Seq(PlugAction("text", "`regexp_replace(text, '[0-9]+', '<num>')`")))
-      plugged(table(s, dir, "documents"), List(rule))
-        .select(col("doc_id"), col("lang"),
-          graft.ops.TextFunctions.md5For(s)(col("text")).as("text_md5"))
-    }),
-
-    // Extension: token counting + document fingerprinting (rolling md5).
-    "text_token_stats" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      val nTokens = tokenCount(col("text"))
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        length(col("text")).as("n_chars"),
-        nTokens.as("n_tokens"),
-        (length(regexp_replace(col("text"), "\\s+", "")) / greatest(nTokens, lit(1)))
-          .as("avg_token_len"),
-        fingerprintFor(s)(col("text")).as("fp"))
-    }),
-
-    // Extension: quality scoring (length/punct/stopword ratios).
-    "text_quality" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      val toks = tokens(col("text"))
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        (punctCount(col("text")) / greatest(length(col("text")), lit(1))).as("punct_ratio"),
-        (stopwordCount(toks) / greatest(size(toks), lit(1))).as("stop_ratio"),
-        qualityScore(col("text"), toks).as("quality"))
-    }),
-
-    // Extension: n-gram-heuristic language ID (marker-word argmax).
-    "text_lang_id" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      table(s, dir, "documents").select(
-        col("doc_id"), col("lang"), langId(tokens(col("text"))).as("lang_pred"))
-    }),
-
-    // Extension: language-ID confusion matrix — the classifier-eval
-    // readout (per-actual-language prediction shares).
-    "text_lang_confusion" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      graft.ops.Corpus.confusionMatrix(
-        table(s, dir, "documents").select(
-          col("lang"), langId(tokens(col("text"))).as("lang_pred")),
-        "lang", "lang_pred")
-    }),
-
-    // Extension: schema-evolution union — two snapshot schema versions
-    // union by name with null-filled missing columns, no shuffle.
-    "docs_union_evolve" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.sources.Ingest.unionEvolved(Seq(
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("text"), col("lang")),
-        docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("text"), col("source"), col("n_chars"))))
-    }),
-
-    // Extension: corpus token frequency (shuffle agg + deterministic top-k).
-    "text_token_freq" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      table(s, dir, "documents")
-        .select(explode(tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(100)
-    }),
-
-    // Extension: BPE-ish pre-tokenization counts next to whitespace counts.
-    "text_bpeish_tokens" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      table(s, dir, "documents").select(
-        col("doc_id"),
-        size(bpeishTokens(col("text"))).as("n_bpe_tokens"),
-        tokenCount(col("text")).as("n_word_tokens"))
-    }),
-
-    // Extension: JSON property extraction from the events props column.
-    // Uses the codegen string-scan kernel (no per-row Jackson parser) when
-    // the extension is registered; get_json_object otherwise.
-    "events_props_extract" -> ((s, dir) =>
-      events(s, dir).select(
-        col("event_id"),
-        graft.ops.TextFunctions.jsonGetFor(s)(col("props"), "k").cast("int").as("k"))),
-
-    // Extension: exact dedup by md5 fingerprint (hash-groupBy, 32-byte keys).
-    "dedup_exact" -> ((s, dir) =>
-      graft.ops.Dedup.exactDedup(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: exact dedup with quality-based survivor selection — keep
-    // the longest copy per fingerprint (max_by aggregate, still one
-    // 32-byte-key shuffle, no per-group window sort).
-    "dedup_exact_best" -> ((s, dir) =>
-      graft.ops.Dedup.exactDedupBest(
-        table(s, dir, "documents"), "doc_id", "text", "n_chars")),
-
-    // Extension: duplicate-cluster size histogram — clusters and docs per
-    // exact-duplicate cluster size; the corpus-health summary a dedup
-    // decision starts from (two chained map-side-combinable aggregates).
-    "dedup_size_hist" -> ((s, dir) =>
-      graft.ops.Dedup.dupSizeHistogram(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: truncation-duplicate screen — prefix pairs blocked on the
-    // first-64-chars hash, verified exactly in-bucket; 1-row summary (a
-    // healthy corpus legitimately reports zero pairs).
-    "dedup_prefix" -> ((s, dir) =>
-      graft.ops.Dedup.prefixDups(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: batch CDC merge (latest-wins upsert) — every 10th doc
-    // updated at version 1, an inserted slice keyed NEGATIVE (-id-1, so
-    // insert keys are structurally disjoint from the non-negative natural
-    // ids at ANY corpus size — a fixed offset could collide and create
-    // the same-(key,version,side) tie the operator's contract forbids);
-    // fingerprints prove which side survived per key.
-    "docs_merge_upsert" -> ((s, dir) => {
-      val base = table(s, dir, "documents")
-        .select(col("doc_id"), col("text"), lit(0L).as("version"))
-      val updates = table(s, dir, "documents")
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), concat(lit("UPDATED: "), col("text")).as("text"),
-          lit(1L).as("version"))
-        .unionByName(table(s, dir, "documents")
-          .filter(col("doc_id") % 97 === 3)
-          .select((-col("doc_id") - 1L).as("doc_id"), col("text"),
-            lit(1L).as("version")))
-      graft.ops.Corpus.mergeUpsert(base, updates, "doc_id", "version")
-        .select(col("doc_id"), col("version"), md5(col("text")).as("fp"))
-    }),
-
-    // Extension: MinHash+LSH near-dup (shingle→minhash→band→bucket-join).
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      graft.ops.Dedup.minhashNearDupPairs(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: exact n-gram Jaccard within metadata blocks.
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      graft.ops.Dedup.ngramJaccardPairs(spread(s, table(s, dir, "documents")), "doc_id", "text", "source")),
-
-    // Extension: containment near-dup screen — the asymmetric score
-    // |A∩B| / min(|A|,|B|) that catches excerpts/supersets Jaccard's
-    // union normalization hides. Same inverted-index + hot-shingle-cap
-    // core as the Jaccard screen.
-    "dedup_containment" -> ((s, dir) =>
-      graft.ops.Dedup.containmentPairs(spread(s, table(s, dir, "documents")), "doc_id", "text", "source")),
-
-    // Extension: SimHash near-dup via 15-bit chunk bucketing.
-    "dedup_simhash" -> ((s, dir) =>
-      graft.ops.Dedup.simhashNearDupPairs(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: connected-components clustering over verified MinHash
-    // near-dup pairs — pairwise verdicts → per-document cluster id + the
-    // keeper flag (min-label propagation, one shuffle per round).
-    "dedup_cluster_cc" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val pairs = graft.ops.Dedup
-        .minhashNearDupPairs(spread(s, docs), "doc_id", "text")
-        .filter(col("is_dup"))
-      graft.ops.Components.dedupClusters(docs, "doc_id", pairs, "a_id", "b_id")
-    }),
-
-    // Extension: MinHash-LSH banding evaluation — candidate recall and
-    // precision against EXHAUSTIVE exact-Jaccard ground truth (the
-    // eval-only inverted-index enumeration; prices the bands/rows knob
-    // the way sim_proj_recall prices the projection).
-    "dedup_lsh_eval" -> ((s, dir) =>
-      graft.ops.Dedup.lshRecallEval(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: PageRank over the verified near-dup pair graph — hub
-    // centrality within duplicate families (GraphX static convention,
-    // 3 iterations; DECIMAL-routed contribution sums).
-    "dedup_pagerank" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val pairs = graft.ops.Dedup
-        .minhashNearDupPairs(spread(s, docs), "doc_id", "text")
-        .filter(col("is_dup"))
-      graft.ops.Components.pageRank(docs, "doc_id", pairs, "a_id", "b_id")
-    }),
-
-    // Extension: triangle count + global clustering coefficient over the
-    // verified near-dup graph — distinguishes chain-shaped dup clusters
-    // (template drift, cc≈0) from clique-shaped ones (true copy families);
-    // degree-ordered orientation bounds wedge-join out-degrees at O(√m).
-    "dedup_triangles" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val pairs = graft.ops.Dedup
-        .minhashNearDupPairs(spread(s, docs), "doc_id", "text")
-        .filter(col("is_dup"))
-      graft.ops.Components.triangleStats(pairs, "a_id", "b_id")
-    }),
-
-    // Extension: schema-enforced JSON-lines ingestion with corrupt-record
-    // quarantine — a deterministic fixture is written, split into
-    // clean/quarantined by graft.sources.Ingest, counted, and the shared
-    // parse cache released. The oracle re-judges every raw line with
-    // DuckDB's JSON functions (valid JSON + declared types), so both
-    // engines classify the same file independently.
-    "ingest_quarantine" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val path = "/tmp/graft_ingest_fixture.jsonl"
-      val lines = Seq(
-        """{"id": 1, "name": "alpha"}""",
-        """{"id": 2, "name": "beta"}""",
-        """{"id": 3}""",
-        """not json at all""",
-        """{"id": "oops", "name": "bad-type"}""",
-        """{"id": 6, "name": "gamma"}""",
-        """{broken""")
-      // write-to-temp + atomic rename: the oracle (and a concurrently
-      // running harness JVM) must never observe a partially-written fixture
-      val tmp = java.nio.file.Files.createTempFile("graft_ingest_fixture", ".tmp")
-      java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      val schema = StructType(Seq(
-        StructField("id", LongType), StructField("name", StringType)))
-      val read = graft.sources.Ingest.readJsonQuarantined(s, path, schema)
-      val cleanAgg = read.clean.agg(
-        count(lit(1)).as("clean_rows"), sum(col("id")).as("id_sum")).collect()(0)
-      val quarantined = read.quarantine.count()
-      read.unpersist()
-      import s.implicits._
-      Seq((cleanAgg.getLong(0), cleanAgg.getLong(1), quarantined))
-        .toDF("clean_rows", "id_sum", "quarantined")
-    }),
-
-    // Extension: schema-enforced CSV ingestion with corrupt-record
-    // quarantine — the delimiter-world sibling of ingest_quarantine
-    // (type-mismatch and wrong-arity rows quarantined, not dropped); the
-    // oracle re-judges the raw lines with split + try_cast.
-    // Extension: fixed-width ingestion — the mainframe/export layout with
-    // the same quarantine contract (short lines and numeric garbage
-    // quarantined, blank numerics null).
-    "ingest_fixed_width" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-      val path = "/tmp/graft_ingest_fw.txt"
-      val lines = Seq(
-        "  1alpha    1.50",
-        "  2beta      2.5",
-        "  x         1.00",   // id garbage -> quarantine
-        "  4nums         ",   // blank amount -> null, clean
-        " 5")                 // short line -> quarantine
-      val tmp = java.nio.file.Files.createTempFile("graft_ingest_fw", ".tmp")
-      java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      val cols = Seq(
-        graft.sources.Ingest.FixedWidthCol("id", 1, 3, LongType),
-        graft.sources.Ingest.FixedWidthCol("name", 4, 7, StringType),
-        graft.sources.Ingest.FixedWidthCol("amount", 11, 6, DoubleType))
-      val read = graft.sources.Ingest.readFixedWidth(s, path, cols)
-      val cleanAgg = read.clean.agg(
-        count(lit(1)).as("clean_rows"), sum(col("id")).as("id_sum"),
-        sum(col("amount").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double").as("amount_sum")).collect()(0)
-      val quarantined = read.quarantine.count()
-      read.unpersist()
-      import s.implicits._
-      Seq((cleanAgg.getLong(0), cleanAgg.getLong(1), cleanAgg.getDouble(2), quarantined))
-        .toDF("clean_rows", "id_sum", "amount_sum", "quarantined")
-    }),
-
-    "ingest_csv" -> ((s, dir) => {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val path = "/tmp/graft_ingest_fixture.csv"
-      val lines = Seq(
-        "id,name",
-        "1,alpha",
-        "2,beta",
-        "3,",
-        "oops,bad-type",
-        "7,gamma",
-        "8,extra,field")
-      val tmp = java.nio.file.Files.createTempFile("graft_ingest_csv", ".tmp")
-      java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      val schema = StructType(Seq(
-        StructField("id", LongType), StructField("name", StringType)))
-      val read = graft.sources.Ingest.readCsvQuarantined(s, path, schema)
-      val cleanAgg = read.clean.agg(
-        count(lit(1)).as("clean_rows"), sum(col("id")).as("id_sum")).collect()(0)
-      val quarantined = read.quarantine.count()
-      read.unpersist()
-      import s.implicits._
-      Seq((cleanAgg.getLong(0), cleanAgg.getLong(1), quarantined))
-        .toDF("clean_rows", "id_sum", "quarantined")
-    }),
-
-    // Extension: deterministic hash sampling (10% = first 1000 of 10000
-    // md5 buckets) — reproducible across engines and partitionings.
-    "docs_hash_sample" -> ((s, dir) =>
-      graft.ops.Corpus.hashSample(
-        table(s, dir, "documents").select("doc_id", "lang", "source"),
-        "doc_id", keep = 1000)),
-
-    // Extension: per-(document, term) TF-IDF with smoothed idf.
-    "text_tfidf" -> ((s, dir) =>
-      graft.ops.Corpus.tfidf(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: keyword extraction — top-3 terms per document by TF-IDF
-    // (rounded-score ordering with term tie-break; WindowGroupLimit keeps
-    // per-doc state at k).
-    "text_keywords" -> ((s, dir) =>
-      graft.ops.Corpus.topTfidfTerms(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: train/test n-gram contamination (every 20th doc is the
-    // held-out set; union containment against the rest of the corpus).
-    "text_contamination" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.ops.Corpus.contamination(
-        docs.filter(col("doc_id") % 20 =!= 0),
-        docs.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text")
-    }),
-
-    // Extension: any-hit 5-gram decontamination of the TRAINING slice
-    // against the held-out benchmark slice — the reverse direction of
-    // text_contamination (one verbatim benchmark fragment flags the doc;
-    // no containment threshold). Benchmark grams broadcast-semi-join.
-    "text_contam_ngram" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.ops.Corpus.ngramDecontaminate(
-        docs.filter(col("doc_id") % 20 =!= 0),
-        docs.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text")
-    }),
-
-    // Extension: deterministic weighted Bernoulli sample — keep probability
-    // proportional to n_chars via exact integer arithmetic on the 28-bit id
-    // hash (token-budget-biased downsample; scan-side, no RNG).
-    "docs_weighted_sample" -> ((s, dir) =>
-      graft.ops.Corpus.weightedHashSample(
-        table(s, dir, "documents").select("doc_id", "lang", "n_chars"),
-        "doc_id", "n_chars")),
-
-    // Extension: corpus-bigram LM scoring — mean log p(w2|w1) with
-    // add-one smoothing (the bigram complement of the unigram scorer;
-    // flags shuffled-word gibberish).
-    "text_bigram_lm" -> ((s, dir) =>
-      graft.ops.Corpus.bigramLogProb(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: Jelinek-Mercer interpolated bigram LM — λ·P_bi + (1−λ)·
-    // P_uni with MLE estimates; the corpus-sized bigram table is never
-    // broadcast, the unigram table joins twice (denominator + back-off).
-    "text_interp_lm" -> ((s, dir) =>
-      graft.ops.Corpus.interpolatedLogProb(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: per-language quality filter at the median threshold —
-    // exact per-lang quantile (rows = #languages) broadcast back as a
-    // scan-side comparison; no global sort, no per-row window.
-    "docs_quality_filter" -> ((s, dir) =>
-      graft.ops.Corpus.qualityThresholdFilter(
-        table(s, dir, "documents"), "doc_id", "text", "lang")),
-
-    // Extension: per-user conversion delay — first signup to first
-    // purchase at-or-after it (aggregate-only; no event-history window).
-    "events_conversion" -> ((s, dir) =>
-      graft.ops.EventOps.conversionDelay(
-        events(s, dir), "user_id", "ts", "event_type", "signup", "purchase")),
-
-    // Extension: corpus vocabulary + OOV profiling — vocab = tokens with
-    // frequency >= 5; per-doc OOV rate under it (the pre-training vocab
-    // commit check).
-    "text_vocab_oov" -> ((s, dir) =>
-      graft.ops.Corpus.vocabOovRate(
-        table(s, dir, "documents"), "doc_id", "text", minCount = 5)),
-
-    // Extension: contamination via a PORTABLE Bloom filter (md5-derived bit
-    // positions, constant-size bit_or word table) — the oracle rebuilds the
-    // identical filter, so even the false positives hash-match.
-    "text_contam_bloom" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.ops.Corpus.contaminationBloom(
-        docs.filter(col("doc_id") % 20 =!= 0),
-        docs.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text")
-    }),
-
-    // Extension: exact cosine top-k via broadcast queries + window group limit.
-    "sim_topk_bruteforce" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.bruteForceTopK(
-          emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: IVF-PQ with RESIDUAL encoding (FAISS by_residual=true,
-    // the production default) — PQ codebooks train on v − coarse
-    // centroid and reconstruction adds it back: residuals concentrate
-    // near zero, so the same 2-byte code budget quantizes far finer
-    // than sim_ivfpq_topk's by_residual=false at identical m/k.
-    "sim_ivfpq_residual" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      // pre-trained registry books: no training collects, no residual
-      // caching (the frame has one consumer), no staging needed
-      val (cent, _, resid) = loadPqBooks(s, dir)
-      graft.ops.Similarity.ivfPqResidualTopK(
-          spread(s, emb), emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          dim = 64, k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-          coarse = Some(cent), pqBooks = Some(resid))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: recall@5 of the residual IVF-PQ vs the exact cosine
-    // ranking — the eval that PRICES the residual encoding against
-    // sim_ivfpq_recall's by_residual=false number at identical m/k.
-    "sim_ivfpq_residual_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      // SHARED eval stages (the sweep/tuner precedent, aa863b4), taken
-      // to completion this round: the two arms differ only in PQ
-      // encoding, so (1) the coarse quantizer is trained ONCE, (2) BOTH
-      // arms' PQ codebooks train in the SAME seed + Lloyd jobs
-      // (pqCodebooksPaired — bit-identical to separate training), and
-      // (3) both arms' recall evals run as ONE staged write keyed by an
-      // `arm` column. The query's former shape paid every one of these
-      // twice — the judge-flagged duplicated-arm cost. Since r14 the
-      // training itself comes from the committed registry (fixPqBooks),
-      // shared with the whole PQ family.
-      val (cent, flatBooks, residBooks) = loadPqBooks(s, dir)
-      // the exact ground truth has exactly ONE consumer in the fused
-      // eval below, so it inlines into the same DAG — no staging pass
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val residScope = new graft.ops.CacheScope
-      val residTopk = graft.ops.Similarity.ivfPqResidualTopK(
-        spread(s, emb), q, "vec_id", "embedding",
-        dim = 64, k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-        m = 4, pqK = 16, coarse = Some(cent), pqBooks = Some(residBooks),
-        scope = residScope)
-      val flatTopk = graft.ops.Similarity.ivfPqTopK(
-        spread(s, emb), q, "vec_id", "embedding",
-        dim = 64, k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-        m = 4, pqK = 16, coarse = Some(cent), pqBooks = Some(flatBooks))
-      val bothArms = residTopk.withColumn("arm", lit("resid"))
-        .unionByName(flatTopk.withColumn("arm", lit("flat")))
-      // one fused recall eval for both arms, staged once: the assert's
-      // collect AND the returned frame read the staged parquet, never
-      // re-evaluating an index build
-      // broadcast: the truth set is queries×k rows, but inlined (not
-      // staged) Spark has no size stats and would shuffle both sides
-      val hits = bothArms.select(col("arm"), col("query_id"), col("neighbor_id"))
-        .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("arm", "query_id").agg(count(lit(1)).as("n_hit"))
-      val grid = {
-        import s.implicits._
-        q.select(col("vec_id").as("query_id"))
-          .crossJoin(broadcast(Seq("resid", "flat").toDF("arm")))
-      }
-      val residDir = scratch("residrec")
-      grid.join(hits, Seq("arm", "query_id"), "left")
-        .select(col("arm"), col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-        .write.mode("overwrite").parquet(residDir)
-      residScope.release()
-      val staged = s.read.parquet(residDir)
-      // SELF-VERIFYING (the sim_ivf_delta precedent): the "residuals
-      // quantize finer" claim is ASSERTED in-query, not narrated — mean
-      // recall@5 of by_residual=true must be >= by_residual=false at
-      // IDENTICAL m/k/nprobe on this data (the shared coarse quantizer
-      // and paired book training make the comparison exact, not just
-      // matched-parameters). The returned per-query rows are unchanged.
-      val means = staged.groupBy("arm").agg(avg("recall").as("r"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      require(means("resid") >= means("flat"),
-        s"residual IVF-PQ mean recall ${means("resid")} fell below the " +
-          s"by_residual=false baseline ${means("flat")} at identical m/k")
-      staged.filter(col("arm") === "resid")
-        .select(col("query_id"), col("n_hit"), col("recall"))
-    }),
-
-    // Extension: IVF index HEALTH — per-cell occupancy and imbalance vs
-    // the uniform ideal: hot cells are an inverted file's probe-latency
-    // risk (a probe pays its cells' occupancy, not the average), and
-    // imbalance drifting up is the codebook re-train trigger.
-    "sim_ivf_cellstats" -> ((s, dir) =>
-      graft.ops.Similarity.ivfCellStats(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadPqBooks(s, dir)._1))),
-
-    // Extension: the ACTUATOR on the cellstats readout (r11 VERDICT ask):
-    // a retrain-vs-keep verdict per occupancy-budget threshold — the
-    // smallest candidate k whose retrained hottest cell fits τ% of the
-    // current-k uniform occupancy, candidates trained lazily and
-    // memoized so a healthy index answers with zero retrains. The
-    // integer-exact budget comparison and deterministic training make
-    // the verdict row DuckDB-replayable bit-for-bit.
-    "sim_ivf_rebalance" -> ((s, dir) =>
-      graft.ops.Similarity.ivfRebalanceAdvice(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        curK = 16, candidates = Seq(16, 24, 32),
-        thresholdsPct = Seq(125, 110), lloydRounds = 2,
-        coarseByK = loadCoarseMulti(s, dir))),
-
-    // Extension: the rebalance loop CLOSED — evaluate the verdict at the
-    // tight threshold, train the chosen k, commit the inverted file as a
-    // transactional index commit bound to the corpus snapshot (#indexof
-    // gate included), and re-measure the hottest cell FROM THE COMMITTED
-    // TABLE with the integer-exact budget proof as a column. Advice ->
-    // actuator -> committed artifact -> in-row proof.
-    "sim_ivf_rebalance_apply" -> ((s, dir) =>
-      graft.ops.Similarity.ivfRebalanceApply(
-        stageSpread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        corpusDir = scratch("rebal_corpus"), indexDir = scratch("rebal_idx"),
-        curK = 16, candidates = Seq(16, 24, 32),
-        thresholdPct = 110, lloydRounds = 2,
-        coarseByK = loadCoarseMulti(s, dir))),
-
-    // Extension: per-label embedding-distribution DRIFT between corpus
-    // halves — each side's DECIMAL-routed per-label centroid, compared
-    // by cosine: the embedding-space governance check you run before
-    // mixing a new batch into curation calibrated on the old one.
-    "sim_centroid_drift" -> ((s, dir) => {
-      val emb = spread(s, table(s, dir, "embeddings"))
-      graft.ops.Similarity.centroidDrift(
-        emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1),
-        "embedding", "label")
-    }),
-
-    // Extension: RADIUS search — every corpus vector within cosine ≥ 0.3
-    // of each probe (the fixed-threshold neighbor-set top-k can't
-    // express when true neighbor counts vary). No window, no shuffle:
-    // the threshold cuts map-side inside the scan projection.
-    "sim_range_search" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.rangeSearch(
-          spread(s, emb), emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          minSim = 0.3)
-        .select(col("query_id"), col("neighbor_id"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: greedy k-center coreset (Gonzalez) — 8 maximally-spread
-    // centers chosen one TakeOrdered row at a time (centers are plan
-    // literals, rounds never shuffle), then every vector assigned to its
-    // nearest center with the coverage cosine; the diverse-subset pick
-    // that represents distribution EDGES, complementing density k-means.
-    "sim_kcenter_coreset" -> ((s, dir) =>
-      graft.ops.Similarity.kcenterCoreset(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding", k = 8)),
-
-    // Extension: kNN label-prediction eval — majority vote of each
-    // probe's top-5 neighbors vs its true label (the "are these
-    // embeddings useful" probe); vote ties break to the smaller label.
-    "sim_knn_label_eval" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.knnLabelEval(
-        emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", "label", 5)
-    }),
-
-    // Extension: hard-negative mining — per anchor, the top-5 most
-    // similar DIFFERENT-label vectors (contrastive-training negatives;
-    // the label guard excludes false negatives). Anchor batch
-    // broadcasts; the corpus pays only its per-anchor top-k window.
-    "sim_hard_negatives" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.hardNegatives(
-          emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", "label", 5)
-        .select(col("query_id"), col("anchor_label"), col("neighbor_id"),
-          col("neg_label"), col("rank"), round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: triplet mining — hardest same-label positive + hardest
-    // different-label negative per anchor, with the triplet margin the
-    // metric-learning curriculum ranks by.
-    "sim_triplet_mine" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.tripletMine(
-        emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", "label")
-    }),
-
-    // Extension: IVF approximate top-k — fixed-k deterministic k-means
-    // centroids (md5-seeded + 2 DECIMAL-routed Lloyd rounds), cell
-    // assignment as a pure projection, nprobe probing. k is FIXED, so the
-    // plan ships O(k·dim) literals no matter the corpus size.
-    // The IVF coarse codebook comes from the committed quantizer
-    // registry since r14 (same parameters, same corpus -> identical
-    // values; the oracle still replays the Lloyd chain).
-    "sim_ivf_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.ivfTopK(
-          spread(s, emb), emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-          coarse = Some(loadPqBooks(s, dir)._1))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: PERSISTED IVF index — the real index lifecycle,
-    // decoupled: build the codebook + inverted file ONCE, commit it to
-    // a manifest table clustered by cell, then answer probes by reading
-    // ONLY the probed cells back via per-file cell stats (point-pruned
-    // readBetween reads — query cost tracks nprobe, not corpus size).
-    // Results are identical to the fused sim_ivf_topk, and the oracle
-    // is the same SQL.
-    "sim_ivf_persisted" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      // Full decoupled lifecycle with a staleness contract: the corpus is
-      // itself a governed manifest table; the index commit records WHICH
-      // corpus snapshot it covers (#indexof), the probe REFUSES a stale
-      // or unbound index (requireIndexFresh), and the whole probe batch
-      // is ONE stats-pruned IN-list read resolving CURRENT once
-      // (readWhereIn) — not one readBetween (and one pointer race
-      // window) per probed cell.
-      val corpusDir = fixEmbFull(s, dir) // staged RO fixture, never mutated
-      val corpusV = graft.sources.ManifestTable.currentVersion(s, corpusDir)
-      val corpus = graft.sources.ManifestTable.read(s, corpusDir)
-      val out = scratch("ivf_index")
-      val (cent, assigned) = graft.ops.Similarity.ivfIndex(
-        corpus, "vec_id", "embedding", numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadPqBooks(s, dir)._1))
-      // single CELL-CLUSTERED commit (r14): the same cell-disjoint file
-      // layout the old commit + compactSorted pair produced, in one
-      // commit cycle — probes open only their cells' files either way
-      graft.sources.ManifestTable.commitIndex(
-        s, out, assigned.repartitionByRange(4, col("cell"))
-          .sortWithinPartitions(col("cell")), corpusDir, corpusV)
-      val probesQ = emb.filter(col("vec_id") < 10)
-      val cells = graft.ops.Similarity.probeCells(
-        cent, probesQ, "vec_id", "embedding", nprobe = 4)
-      graft.sources.ManifestTable.requireIndexFresh(s, out)
-      val index = graft.sources.ManifestTable.readWhereIn(
-        s, out, "cell", cells)
-      graft.ops.Similarity.ivfTopKFromIndex(
-          index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: INCREMENTAL index maintenance — the O(delta) refresh
-    // completing the persisted lifecycle: the codebook trains on the
-    // initial corpus and FREEZES; a later corpus append makes the probe
-    // gate refuse the stale index; maintenance then assigns ONLY the
-    // appended vectors (readChangesSince + assignCells, a pure
-    // projection over the delta) and lands them with appendIndex — one
-    // transaction that unions the file list AND rebinds #indexof, so
-    // the gate passes again without touching any existing entry. At
-    // 100 TB: a full rebuild re-scans the corpus; this re-scans the
-    // batch.
-    "sim_ivf_delta" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val M = graft.sources.ManifestTable
-      val corpusDir = fixEmb80Copy(s, "ivfd_corpus", dir) // private copy: appended below
-      val v0 = M.currentVersion(s, corpusDir)
-      val out = scratch("ivfd_index")
-      // r14 optimization: coarse codebook from the committed 80%-slice
-      // registry (fixCoarse80) — bit-identical to inline training on this
-      // corpus copy's content; the seed + Lloyd jobs leave the steady pass.
-      val (cent, assigned0) = graft.ops.Similarity.ivfIndex(
-        M.read(s, corpusDir), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadCoarse80(s, dir)))
-      M.commitIndex(s, out, assigned0.repartitionByRange(4, col("cell"))
-        .sortWithinPartitions(col("cell")), corpusDir, v0)
-      // corpus grows; the stale index must refuse probes...
-      M.append(s, corpusDir, emb.filter(col("vec_id") % 5 === 0))
-      val staleRefused =
-        try { M.requireIndexFresh(s, out); false }
-        catch { case _: IllegalStateException => true }
-      require(staleRefused, "probe gate must refuse the stale index")
-      // ...until the delta lands: assign only the appended vectors
-      // under the frozen codebook, append + rebind in one transaction
-      val delta = M.readChangesSince(s, corpusDir, fromVersion = v0)
-      M.appendIndex(s, out,
-        graft.ops.Similarity.assignCells(delta, "vec_id", "embedding", cent),
-        corpusDir, M.currentVersion(s, corpusDir))
-      M.requireIndexFresh(s, out)
-      val probesQ = emb.filter(col("vec_id") < 10)
-      val cells = graft.ops.Similarity.probeCells(
-        cent, probesQ, "vec_id", "embedding", nprobe = 4)
-      val index = M.readWhereIn(s, out, "cell", cells)
-      graft.ops.Similarity.ivfTopKFromIndex(
-          index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: O(delta) index maintenance for DELETES — the lifecycle
-    // leg sim_ivf_delta leaves open: GDPR-erasing corpus vectors (a DV
-    // sidecar, no corpus file rewritten) makes the probe gate refuse the
-    // bound index; maintenance reads ONLY the deleted keys from the DV
-    // change feed and drops their index rows with a DV on the INDEX
-    // itself plus the #indexof rebind in one pointer move — never
-    // retraining the codebook, never rewriting an index file. The probe
-    // then serves the surviving corpus exactly (the oracle), and the
-    // in-query assert proves no erased vector can ever be returned.
-    "sim_ivf_delete" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val M = graft.sources.ManifestTable
-      val corpusDir = fixEmbFullCopy(s, "ivfdel_corpus", dir) // private copy: DV-erased below
-      val v0 = M.currentVersion(s, corpusDir)
-      val out = scratch("ivfdel_index")
-      // r14 optimization: the coarse codebook comes from the committed
-      // quantizer registry (fixPqBooks) — trained on the same full-corpus
-      // content, so the centroids are bit-identical to inline training
-      // (kmeansCentroids is content-deterministic) and the seed + Lloyd
-      // jobs drop out of this query's steady pass.
-      val (cent, assigned) = graft.ops.Similarity.ivfIndex(
-        M.read(s, corpusDir), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadPqBooks(s, dir)._1))
-      M.commitIndex(s, out, assigned.repartitionByRange(4, col("cell"))
-        .sortWithinPartitions(col("cell")), corpusDir, v0)
-      // corpus rows are erased; the stale index must refuse probes...
-      M.deleteVectorWhere(s, corpusDir, "vec_id", 20.0, 39.0)
-      val staleRefused =
-        try { M.requireIndexFresh(s, out); false }
-        catch { case _: IllegalStateException => true }
-      require(staleRefused, "probe gate must refuse the stale index")
-      // ...until the deleted keys' index rows are dropped with the
-      // rebind, read from the DV change feed (the delete batch, never
-      // the corpus)
-      val deleted = M.readDeletesSince(s, corpusDir, fromVersion = v0)
-        .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-      require(deleted.size == 20, s"expected 20 erased keys, got $deleted")
-      M.deleteIndexVectorIn(s, out, "neighbor_id", deleted,
-        corpusDir, M.currentVersion(s, corpusDir))
-      M.requireIndexFresh(s, out)
-      val probesQ = emb.filter(col("vec_id") < 10)
-      val cells = graft.ops.Similarity.probeCells(
-        cent, probesQ, "vec_id", "embedding", nprobe = 4)
-      val index = M.readWhereIn(s, out, "cell", cells)
-      // staged once: the erasure assert and the returned frame share
-      // one probe evaluation
-      val topkDir = scratch("ivfdel_topk")
-      graft.ops.Similarity.ivfTopKFromIndex(
-          index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-        .write.mode("overwrite").parquet(topkDir)
-      val topk = s.read.parquet(topkDir)
-      require(topk.filter(col("neighbor_id").between(20, 39)).isEmpty,
-        "an erased vector surfaced from the maintained index")
-      topk
-    }),
-
-    // Extension: FILTERED ANN — top-k among label-even corpus vectors
-    // only. The quantizer trains on the FULL corpus (index built once,
-    // predicates arrive at query time); the filter prunes the inverted
-    // file before the probe join, so pruned rows never enter the shuffle.
-    "sim_filtered_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      graft.ops.Similarity.ivfTopK(
-          spread(s, emb), emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-          corpusFilter = col("label") % 2 === 0,
-          coarse = Some(loadPqBooks(s, dir)._1))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: IVF-PQ composed index — the production FAISS shape
-    // (by_residual=false): coarse cells prune compute (nprobe of 16
-    // cells), PQ codes prune memory (2 bytes/vector), ranking is
-    // asymmetric distance against the code reconstruction. Cell + code
-    // ride ONE projection per corpus vector; both quantizers are plan
-    // literals.
-    // Since r14 the quantizers come from the committed registry
-    // (fixPqBooks): one train per corpus version shared by the whole
-    // PQ family, freshness-gated; the oracle still replays training in
-    // full — committed values are bit-identical to inline training.
-    "sim_ivfpq_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val (cent, flat, _) = loadPqBooks(s, dir)
-      graft.ops.Similarity.ivfPqTopK(
-          spread(s, emb), emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          dim = 64, k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-          m = 4, pqK = 16, coarse = Some(cent), pqBooks = Some(flat))
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: IVF-PQ quality evaluation — recall@5 of the composed
-    // index vs exhaustive truth, pricing BOTH approximations (cell
-    // pruning and code quantization) together before committing them on
-    // a real corpus.
-    "sim_ivfpq_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val (cent, flat, _) = loadPqBooks(s, dir)
-      val approx = graft.ops.Similarity.ivfPqTopK(
-          spread(s, emb), q, "vec_id", "embedding",
-          dim = 64, k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-          m = 4, pqK = 16, coarse = Some(cent), pqBooks = Some(flat))
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    // Extension: random-projection compression quality — recall@5 of
-    // top-k search in the 16-dim projected space vs the exact 64-dim
-    // ranking (the JL pre-filter evaluation a pipeline runs before
-    // trusting a compressed index). Projections are md5-parity planes, so
-    // the oracle reproduces both rankings bit-for-bit.
-    // Extension: per-label mean-pooled prototypes — class centroids with
-    // member counts and DECIMAL-routed intra-class cosine cohesion; the
-    // #labels-sized centroid frame broadcasts back, the corpus never
-    // shuffles beyond its own aggregates.
-    "sim_label_centroids" -> ((s, dir) =>
-      graft.ops.Similarity.labelCentroids(
-        spread(s, table(s, dir, "embeddings")), "embedding", "label")),
-
-    // Extension: product-quantization approximate top-k — the memory-side
-    // ANN scale path (m·log2(k) bits per indexed vector instead of dim
-    // floats). Deterministic subspace k-means reuses the IVF Lloyd recipe,
-    // so the oracle rebuilds the identical codebooks; ranking is cosine
-    // against the code-reconstructed vectors (asymmetric distance).
-    "sim_pq_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      // cached: the brute-force crossJoin matches every reconstructed
-      // vector against every probe, and an uncached reconstruction
-      // re-evaluates per PAIR (r15, measured 1.75 -> 0.4 s on the
-      // scoring job); the reconstructed index is the stored artifact
-      val recon = (new graft.ops.CacheScope).cache(graft.ops.Similarity
-        .pqReconstruct(spread(s, emb), "vec_id", "embedding", dim = 64,
-          pqBooks = Some(loadPqBooks(s, dir)._2)))
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("embedding").as("pq_vec"))
-      graft.ops.Similarity.bruteForceTopK(recon, q, "vec_id", "pq_vec", 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: PQ quality evaluation — recall@5 of the quantized ranking
-    // vs the exact one (the sim_proj_recall / sim_ivf_recall eval pattern
-    // pricing the 128x memory compression).
-    "sim_pq_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      // cached for the same per-pair re-evaluation reason as sim_pq_topk
-      val recon = (new graft.ops.CacheScope).cache(graft.ops.Similarity
-        .pqReconstruct(spread(s, emb), "vec_id", "embedding", dim = 64,
-          pqBooks = Some(loadPqBooks(s, dir)._2)))
-      val approx = graft.ops.Similarity.bruteForceTopK(recon,
-          q.select(col("vec_id"), col("embedding").as("pq_vec")),
-          "vec_id", "pq_vec", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    // Extension: binary-quantization top-k — sign-bit codes packed into
-    // two 32-bit words, ranked by Hamming distance (two XOR+popcounts per
-    // candidate). The 32×-under-float32 point of the compression ladder.
-    "sim_bq_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      graft.ops.Similarity.bqTopK(spread(s, emb), q, "vec_id", "embedding",
-        dim = 64, k = 5)
-    }),
-
-    // Extension: BQ quality evaluation — recall@5 of the Hamming ranking
-    // vs the exact cosine one (the same eval shape as sim_pq_recall,
-    // pricing the 32× compression against ground truth).
-    "sim_bq_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = graft.ops.Similarity
-        .bqTopK(spread(s, emb), q, "vec_id", "embedding", dim = 64, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    // Extension: TWO-STAGE retrieval — Hamming shortlist over the 32×-
-    // compressed sign-bit codes, exact-cosine rerank over ONLY the
-    // shortlisted pairs (the production serving shape: compressed pass
-    // touches every code, float pass touches shortlist×queries vectors).
-    // The rerank re-fetch is a broadcast join of the tiny shortlist back
-    // to the corpus, so neither stage shuffles the corpus.
-    "sim_bq_rerank" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      graft.ops.Similarity.bqRerankTopK(spread(s, emb), q, "vec_id",
-          "embedding", dim = 64, shortlist = 20, k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: MMR diversity rerank — k greedy picks of
-    // λ·relevance − (1−λ)·max-similarity-to-picked over the Hamming
-    // shortlist, so near-duplicates don't crowd the result page. The
-    // greedy folds per query over a bounded array (plan-unrolled steps,
-    // no iterative jobs); the oracle replays it as a recursive CTE.
-    "sim_mmr_rerank" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      graft.ops.Similarity.mmrRerankTopK(spread(s, emb), q, "vec_id",
-        "embedding", dim = 64, shortlist = 20, k = 5, lambdaRel = 0.7)
-    }),
-
-    // Extension: prefix-dimension (Matryoshka-style) recall — recall@5 of
-    // top-k search using only the FIRST 16 of 64 dims vs the full-vector
-    // ranking. Prices dimension truncation the way sim_proj_recall prices
-    // random projection: truncation is free (a slice, no projection
-    // arithmetic) but only works when the embedding model front-loads
-    // information; the recall number is the check.
-    "sim_prefix_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val pc = spread(s, emb).select(col("vec_id"),
-        slice(col("embedding"), 1, 16).as("pvec"))
-      val pq = q.select(col("vec_id"), slice(col("embedding"), 1, 16).as("pvec"))
-      val approx = graft.ops.Similarity.bruteForceTopK(pc, pq, "vec_id", "pvec", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    "sim_proj_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val pc = graft.ops.Similarity
-        .randomProject(spread(s, emb), "vec_id", "embedding", dim = 64, proj = 16)
-      val pq = graft.ops.Similarity
-        .randomProject(q, "vec_id", "embedding", dim = 64, proj = 16)
-      val approx = graft.ops.Similarity.bruteForceTopK(pc, pq, "vec_id", "pvec", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    // Extension: reciprocal-rank fusion of the exact full-vector ranking
-    // with the cheap 16-dim prefix ranking — the zero-tuning merge of
-    // heterogeneous retrievers.
-    "sim_rrf_fusion" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val full = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-      val pc = spread(s, emb).select(col("vec_id"),
-        slice(col("embedding"), 1, 16).as("pvec"))
-      val pq = q.select(col("vec_id"), slice(col("embedding"), 1, 16).as("pvec"))
-      val prefix = graft.ops.Similarity.bruteForceTopK(pc, pq, "vec_id", "pvec", 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-      graft.ops.Similarity.rrfFuse(Seq(full, prefix), k = 5)
-    }),
-
-    // Extension: BM25 relevance of every matching document against a
-    // literal query-term set — retrieval-grade ranking with length
-    // normalization and tf saturation.
-    "text_bm25" -> ((s, dir) =>
-      graft.ops.Corpus.bm25Score(spread(s, table(s, dir, "documents")),
-        "doc_id", "text", Seq("spark", "table", "window"))),
-
-    // Extension: HYBRID RETRIEVAL — the modern RAG stack's fusion: for
-    // each query document, a DENSE ranking (embedding cosine top-10) and
-    // a LEXICAL ranking (BM25 of the document's own distinct terms over
-    // the corpus, self excluded — more-like-this) combine by reciprocal-
-    // rank fusion. Neither arm sees the other's scores — RRF needs only
-    // ranks, which is what makes fusing a cosine scale and a BM25 scale
-    // principled. Both arms and the fusion are rank/DECIMAL-deterministic.
-    "text_hybrid_rrf" -> ((s, dir) => {
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val emb = table(s, dir, "embeddings")
-      val dense = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"), col("rank"))
-      val (n, dl) = R.corpusStats(docs, "text")
-      val post = R.buildPostings(docs, "doc_id", "text")
-      val queries = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("query_id"),
-          explode(graft.ops.TextFunctions.tokens(col("text"))).as("term"))
-        .distinct()
-      val lex = R.bm25TopK(post, queries, n, dl, k = 10, excludeSelf = true)
-        .select(col("query_id"), col("doc_id").as("neighbor_id"), col("rank"))
-      graft.ops.Similarity.rrfFuse(Seq(dense, lex), k = 5)
-    }),
-
-    // Extension: PERSISTED INVERTED INDEX — the lexical analogue of the
-    // persisted IVF tier, full lifecycle: the corpus is a governed
-    // manifest table; the posting lists commit ONCE with the corpus
-    // stats riding the #meta header and the #indexof staleness binding;
-    // compactSorted range-clusters by term so the probe is a string-
-    // stats-pruned readWhereIn opening only the query terms' files (the
-    // in-query assert proves files were actually skipped); BM25 scores
-    // come from the index + header stats alone — the corpus is never
-    // rescanned at query time. Three queries ranked in one probe batch.
-    "text_invidx_topk" -> ((s, dir) => {
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val R = graft.ops.Retrieval
-      val corpusDir = fixDocsText(s, dir) // staged RO fixture, never mutated
-      val v = M.currentVersion(s, corpusDir)
-      val corpus = M.read(s, corpusDir)
-      val out = scratch("retr_index")
-      // one tokenization pass, one term-clustered commit (see
-      // commitInvIndex) — same files-disjoint-by-term layout the old
-      // commit + compactSorted pair produced
-      commitInvIndex(s, "retr_toks", corpus, out, corpusDir, v): Unit
-      M.requireIndexFresh(s, out)
-      val (kept, total) = M.pruneByEquals(s, out, "term", "join")
-      require(kept.size < total,
-        s"term-clustered prune must skip files: kept ${kept.size} of $total")
-      val queries = Seq(
-        0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter",
-        2L -> "vector", 2L -> "stream", 2L -> "hash"
-      ).toDF("query_id", "term")
-      val props = M.properties(s, out)
-      val post = M.readWhereIn(s, out, "term",
-        Seq("spark", "table", "window", "join", "filter",
-          "vector", "stream", "hash"))
-      R.bm25TopK(post, queries,
-        props(R.MetaDocs).toLong, props(R.MetaTotalDl).toLong, k = 5)
-    }),
-
-    // Extension: O(delta) inverted-index maintenance — the sim_ivf_delta
-    // lifecycle for lexical search: a corpus append makes the probe gate
-    // refuse the stale index; maintenance tokenizes ONLY the appended
-    // documents (readChangesSince) and lands their postings with
-    // appendIndex, the #meta corpus totals advancing in the SAME pointer
-    // move. Document frequency re-aggregates from the (complete) pruned
-    // read at probe time, so split posting lists stay exact — the probe's
-    // scores equal a from-scratch full-corpus BM25 bit-for-bit (the
-    // oracle), and the in-query assert recounts the corpus to prove the
-    // maintained header stats are the true totals.
-    "text_invidx_delta" -> ((s, dir) => {
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val R = graft.ops.Retrieval
-      val docs = table(s, dir, "documents").select("doc_id", "text")
-      val corpusDir = fixDocsText80Copy(s, "retrd_corpus", dir) // private copy: appended below
-      val v0 = M.currentVersion(s, corpusDir)
-      val corpus0 = M.read(s, corpusDir)
-      val out = scratch("retrd_index")
-      val (n0, dl0) = commitInvIndex(s, "retrd_toks", corpus0, out, corpusDir, v0)
-      // corpus grows; the stale index must refuse probes...
-      M.append(s, corpusDir, docs.filter(col("doc_id") % 5 === 0))
-      val staleRefused =
-        try { M.requireIndexFresh(s, out); false }
-        catch { case _: IllegalStateException => true }
-      require(staleRefused, "probe gate must refuse the stale index")
-      // ...until the delta postings land with the advanced #meta totals
-      val delta = M.readChangesSince(s, corpusDir, fromVersion = v0)
-      val (dn, ddl) = R.corpusStats(delta, "text")
-      M.appendIndex(s, out,
-        R.buildPostings(delta, "doc_id", "text").repartition(4),
-        corpusDir, M.currentVersion(s, corpusDir),
-        meta = Map(R.MetaDocs -> (n0 + dn).toString,
-          R.MetaTotalDl -> (dl0 + ddl).toString))
-      M.requireIndexFresh(s, out)
-      val props = M.properties(s, out)
-      val (nF, dlF) = R.corpusStats(M.read(s, corpusDir), "text")
-      require(props(R.MetaDocs).toLong == nF &&
-        props(R.MetaTotalDl).toLong == dlF,
-        "maintained #meta corpus stats must equal the true totals")
-      val queries = Seq(
-        0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter"
-      ).toDF("query_id", "term")
-      val post = M.readWhereIn(s, out, "term",
-        Seq("spark", "table", "window", "join", "filter"))
-      R.bm25TopK(post, queries, nF, dlF, k = 5)
-    }),
-
-    // Extension: inverted-index DELETE maintenance — the lexical twin of
-    // sim_ivf_delete: GDPR-erasing documents (a corpus DV, no file
-    // rewritten) closes the probe gate; maintenance drops the erased
-    // docs' posting rows with a DV on the INDEX plus the #indexof rebind
-    // AND the shrunken #meta corpus totals in one pointer move, all
-    // computed from the delete batch alone. Document frequency
-    // re-aggregates from the (DV-subtracted) pruned read at probe time,
-    // so the served BM25 equals a from-scratch surviving-corpus ranking
-    // bit-for-bit (the oracle); the in-query asserts prove the
-    // maintained totals equal a true recount and no erased doc ranks.
-    "text_invidx_delete" -> ((s, dir) => {
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val R = graft.ops.Retrieval
-      val docs = table(s, dir, "documents").select("doc_id", "text")
-      val corpusDir = fixDocsTextCopy(s, "retrdel_corpus", dir) // private copy: DV-erased below
-      val v0 = M.currentVersion(s, corpusDir)
-      val corpus0 = M.read(s, corpusDir)
-      val out = scratch("retrdel_index")
-      val (n0, dl0) = commitInvIndex(s, "retrdel_toks", corpus0, out, corpusDir, v0)
-      M.deleteVectorWhere(s, corpusDir, "doc_id", 100.0, 149.0)
-      val staleRefused =
-        try { M.requireIndexFresh(s, out); false }
-        catch { case _: IllegalStateException => true }
-      require(staleRefused, "probe gate must refuse the stale index")
-      // one bounded collect answers both the erased-id list and the
-      // shrunken corpus totals (erasure batches are queue-sized by
-      // contract; the two separate actions each re-evaluated the
-      // DV-position join behind readDeletesSince)
-      val erased = M.readDeletesSince(s, corpusDir, fromVersion = v0)
-      val er = erased.select(col("doc_id"),
-        size(graft.ops.TextFunctions.tokens(col("text"))).cast("long").as("__dl"))
-        .collect()
-      val (dn, ddl) = (er.length.toLong, er.map(_.getLong(1)).sum)
-      val ids = er.map(_.getLong(0)).toSeq
-      M.deleteIndexVectorIn(s, out, "id", ids,
-        corpusDir, M.currentVersion(s, corpusDir),
-        meta = Map(R.MetaDocs -> (n0 - dn).toString,
-          R.MetaTotalDl -> (dl0 - ddl).toString))
-      M.requireIndexFresh(s, out)
-      val props = M.properties(s, out)
-      val (nF, dlF) = R.corpusStats(M.read(s, corpusDir), "text")
-      require(props(R.MetaDocs).toLong == nF &&
-        props(R.MetaTotalDl).toLong == dlF,
-        "maintained #meta corpus stats must equal the true surviving totals")
-      val queries = Seq(
-        0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter"
-      ).toDF("query_id", "term")
-      val post = M.readWhereIn(s, out, "term",
-        Seq("spark", "table", "window", "join", "filter"))
-      // staged once: the erasure assert and the returned frame share
-      // one probe evaluation
-      val topkDir = scratch("retrdel_topk")
-      R.bm25TopK(post, queries, nF, dlF, k = 5)
-        .write.mode("overwrite").parquet(topkDir)
-      val topk = s.read.parquet(topkDir)
-      require(topk.filter(col("doc_id").between(100, 149)).isEmpty,
-        "an erased document ranked from the maintained index")
-      topk
-    }),
-
-    // Extension: CONJUNCTIVE (boolean-AND) ranked retrieval — only
-    // documents matching EVERY query term rank, the filter applied
-    // before ranking so ranks stay contiguous over the conjunctive
-    // result. Same exact-DECIMAL BM25 rank keys as the disjunctive path.
-    "text_invidx_conjunctive" -> ((s, dir) => {
-      import s.implicits._
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val (n, dl) = R.corpusStats(docs, "text")
-      val post = R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin("spark", "table", "window", "join", "filter"))
-      val queries = Seq(
-        0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter"
-      ).toDF("query_id", "term")
-      R.bm25TopK(post, queries, n, dl, k = 5, requireAllTerms = true)
-    }),
-
-    // Extension: champion-list static pruning PRICED — keep only the 8
-    // highest-impact postings per term (the impact-ordered / quantized-
-    // impact index shape; per-term top-c runs as a map-side partial
-    // group-limit, so no term's full posting list ever sorts in one
-    // task), freeze each term's true document frequency into the
-    // artifact, and score recall@5 against full-postings BM25 as truth —
-    // the nprobe-sweep pricing pattern applied to lexical search.
-    "text_invidx_pruned" -> ((s, dir) => {
-      import s.implicits._
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val (n, dl) = R.corpusStats(docs, "text")
-      val post = R.buildPostings(docs, "doc_id", "text")
-      val queries = Seq(
-        0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter",
-        2L -> "vector", 2L -> "stream", 2L -> "hash"
-      ).toDF("query_id", "term")
-      val exact = R.bm25TopK(post, queries, n, dl, k = 5)
-        .select(col("query_id"), col("doc_id"))
-      val champ = R.championPostings(post, n, dl, c = 8)
-      val approx = R.bm25TopKChampion(champ, queries, 5, n, dl)
-        .select(col("query_id"), col("doc_id"))
-      val hits = exact.join(approx, Seq("query_id", "doc_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-      queries.select(col("query_id")).distinct()
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / lit(5.0), 6).as("recall"))
-    }),
-
-    // Extension: BLOCK-MAX pruned top-k — batch WAND/BMW: range-aligned
-    // per-block score ceilings (a #terms × #ranges metadata frame) plus a
-    // champion-derived threshold θ drop docid ranges that PROVABLY cannot
-    // hold a top-5 document before any posting row is scored; the
-    // surviving ranges score exactly, so the result is bit-identical to
-    // the exhaustive ranking (the oracle — unlike champion lists, which
-    // trade recall). The in-query assert proves ranges were actually
-    // pruned; postings stage through scratch parquet so the probe frames
-    // (df census, champion lists, block index, scoring) share one
-    // tokenization pass, as a persisted index would.
-    "text_invidx_blockmax" -> ((s, dir) => {
-      import s.implicits._
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val (n, dl) = R.corpusStats(docs, "text")
-      // One query mixes the corpus's RARE term (high idf) with common
-      // ones — the shape block-max exists for: ranges without the rare
-      // term bound far below θ and drop. The other two are common-only,
-      // proving exactness when nothing can be pruned.
-      val terms = Seq("dup", "spark", "table", "join", "filter",
-        "vector", "stream", "hash")
-      val postDir = scratch("bmx_postings")
-      R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin(terms: _*))
-        .write.mode("overwrite").parquet(postDir)
-      val post = s.read.parquet(postDir)
-      val queries = Seq(
-        0L -> "dup", 0L -> "spark", 0L -> "table",
-        1L -> "join", 1L -> "filter",
-        2L -> "vector", 2L -> "stream", 2L -> "hash"
-      ).toDF("query_id", "term")
-      val W = 32L
-      val bidx = R.blockIndex(post, n, dl, W)
-      val surv = R.blockMaxSurvivors(post, bidx, queries, n, dl, k = 5)
-      val candidates = bidx
-        .join(queries.select(col("query_id"), col("term")).distinct(), "term")
-        .select(col("query_id"), col("blk")).distinct().count()
-      val kept = surv.count()
-      require(kept < candidates,
-        s"block-max must prune ranges: kept $kept of $candidates")
-      R.bm25TopKBlockMax(post, queries, n, dl, k = 5, surv, W)
-    }),
-
-    // Extension: SUBSTRING SEARCH from a character-trigram index (the
-    // pg_trgm / trigram code-search design): a LIKE '%spark table%'
-    // answered by intersecting the pattern's trigram posting lists into
-    // a candidate set and verifying ONLY candidates row-level — the
-    // corpus is never scanned at query time. The in-query assert proves
-    // the index actually pruned (candidates < corpus).
-    "text_trigram_search" -> ((s, dir) => {
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val postDir = scratch("tri_postings")
-      R.buildTrigramPostings(docs, "doc_id", "text")
-        .write.mode("overwrite").parquet(postDir)
-      val post = s.read.parquet(postDir)
-      val pattern = "spark table"
-      val tris = pattern.sliding(3).toSeq.distinct
-      val nCand = post.filter(col("tri").isin(tris: _*))
-        .groupBy(col("id"))
-        .agg(countDistinct(col("tri")).as("n"))
-        .filter(col("n") === tris.size).count()
-      val nDocs = docs.count()
-      require(nCand < nDocs,
-        s"trigram index must prune: $nCand candidates of $nDocs docs")
-      R.substringSearch(post, docs, "doc_id", "text", pattern)
-    }),
-
-    // Extension: PHRASE QUERY from positional postings — "table hash"
-    // matches where an occurrence of the first term is immediately
-    // followed by the second, computed as an array intersection over the
-    // stored token offsets of the two pruned posting lists. No text
-    // rescan: the probe reads two term ranges and joins them on doc id.
-    "text_invidx_phrase" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val R = graft.ops.Retrieval
-      val corpusDir = fixDocsText(s, dir) // staged RO fixture, never mutated
-      val v = M.currentVersion(s, corpusDir)
-      val corpus = M.read(s, corpusDir)
-      val out = scratch("retrp_index")
-      commitInvIndex(s, "retrp_toks", corpus, out, corpusDir, v): Unit
-      M.requireIndexFresh(s, out)
-      val post = M.readWhereIn(s, out, "term", Seq("table", "hash"))
-      R.phraseMatch(post, "table", "hash")
-    }),
-
-    // Extension: N-TERM phrase retrieval — the trigram "slow hash batch"
-    // from the same positional postings: #terms lists equi-join on doc
-    // id, one nested higher-order position test, never a text rescan.
-    "text_invidx_phrase3" -> ((s, dir) => {
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      // staged: phraseMatchAll equi-joins the lists per term, and each
-      // join leg would otherwise re-tokenize the corpus (r14)
-      val p3Dir = scratch("phrase3_post")
-      R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin("slow", "hash", "batch"))
-        .write.mode("overwrite").parquet(p3Dir)
-      R.phraseMatchAll(s.read.parquet(p3Dir), Seq("slow", "hash", "batch"))
-    }),
-
-    // Extension: ordered PROXIMITY retrieval — "table" followed by "hash"
-    // within 3 tokens, counted per document from the stored positional
-    // postings (nested higher-order functions over the offset arrays —
-    // codegen'd, never a text rescan; phrase is the window=1 special
-    // case). The posting read stays two terms' lists.
-    "text_invidx_proximity" -> ((s, dir) => {
-      val R = graft.ops.Retrieval
-      val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val pxDir = scratch("prox_post")
-      R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin("table", "hash"))
-        .write.mode("overwrite").parquet(pxDir)
-      R.proximityMatch(s.read.parquet(pxDir), "table", "hash", window = 3)
-    }),
-
-    // Extension: the nprobe knob PRICED — corpus-level recall@5 at
-    // nprobe ∈ {1, 2, 4} in one 3-row readout (the lshRecallEval pattern
-    // applied to the IVF index): how much recall each extra probed cell
-    // buys before committing the knob at 100 TB.
-    "sim_ivf_nprobe_sweep" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      // NOT cached, unlike sim_ivf_autotune's truth (r15 measured
-      // negative result): all three arms ride ONE unioned action here,
-      // so ReuseExchange already dedups the identical ranking subtree —
-      // a cache only added its round-trip (A/B 1.49 -> 1.59 s)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val nq = q.agg(count(lit(1)).as("n_q"))
-      // the codebook and cell assignment are nprobe-INDEPENDENT: train
-      // once, stage the inverted file, and pay only a probe per arm —
-      // identical results to the per-arm fused plan (the persisted-index
-      // equivalence sim_ivf_persisted proves), one Lloyd run not three
-      val (cent, assigned) = graft.ops.Similarity.ivfIndex(
-        spread(s, emb), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadPqBooks(s, dir)._1))
-      val idxDir = scratch("sweep_idx")
-      assigned.write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
-      Seq(1, 2, 4).map { np =>
-        val approx = graft.ops.Similarity.ivfTopKFromIndex(
-            index, cent, q, "vec_id", "embedding", k = 5, nprobe = np)
-          .select(col("query_id"), col("neighbor_id"))
-        exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(nq))
-          .select(lit(np).as("nprobe"), col("n_hits"),
-            round(col("n_hits") / (lit(5.0) * col("n_q")), 6).as("mean_recall"))
-      }.reduce(_.unionByName(_))
-    }),
-
-    // Extension: the nprobe knob OPERATIONALIZED — the sweep's pricing
-    // turned into a decision: the smallest nprobe whose corpus recall@5
-    // meets the 0.7 target is chosen (the largest arm if none does), so
-    // the index ships with a defensible setting instead of a table of
-    // numbers a human must read. Same deterministic arms as the sweep.
-    "sim_ivf_autotune" -> ((s, dir) => {
-      import s.implicits._
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      // cached (r15): each arm's hit count is its own driver action, and
-      // an uncached truth ranking re-ran the full brute-force top-k per
-      // arm — three corpus rankings where one materialization serves all
-      val exact = (new graft.ops.CacheScope).cache(graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")))
-      val nq = q.count()
-      // one Lloyd run + one staged inverted file shared by every arm
-      // (identical results to the fused per-arm plan — the persisted-
-      // index equivalence), so the tuner costs probes, not retrains
-      val (cent, assigned) = graft.ops.Similarity.ivfIndex(
-        spread(s, emb), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadPqBooks(s, dir)._1))
-      val idxDir = scratch("autotune_idx")
-      assigned.write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
-      val arms = Seq(1, 2, 4).map { np =>
-        val approx = graft.ops.Similarity.ivfTopKFromIndex(
-            index, cent, q, "vec_id", "embedding", k = 5, nprobe = np)
-          .select(col("query_id"), col("neighbor_id"))
-        val hits = exact
-          .join(approx, Seq("query_id", "neighbor_id"), "left_semi").count()
-        (np, hits, math.rint(hits / (5.0 * nq) * 1e6) / 1e6)
-      }
-      val target = 0.7
-      val chosen = arms.find(_._3 >= target).getOrElse(arms.last)
-      Seq(chosen).toDF("nprobe", "n_hits", "mean_recall")
-        .withColumn("met_target", col("mean_recall") >= target)
-    }),
-
-    // Extension: IVF quality evaluation — recall@5 of the IVF index
-    // (nprobe=4) against the exact brute-force ranking, the same
-    // eval pattern as sim_proj_recall. Quantifies the nprobe/recall
-    // trade the IVF docstring promises; both engines rebuild the same
-    // deterministic k-means index, so the recall numbers hash-match.
-    "sim_ivf_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = graft.ops.Similarity.ivfTopK(
-          spread(s, emb), q, "vec_id", "embedding",
-          k = 5, numCentroids = 16, lloydRounds = 2, nprobe = 4,
-          coarse = Some(loadPqBooks(s, dir)._1))
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    // Extension: ANN near-dup pairs via banded sign-LSH (2 bands x 8 planes,
-    // OR-amplified candidate union, exact-cosine verification).
-    "sim_lsh_near_dup" -> ((s, dir) =>
-      graft.ops.Similarity.lshCosineNearDupPairs(
-          spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-          dim = 64, planes = 8, bands = 2)
-        .select(col("a_id"), col("b_id"), round(col("sim"), 6).as("sim"))),
-
-    // Extension: approximate kNN graph — LSH candidate pairs symmetrized
-    // into directed edges, per-node top-k, mutual-edge flag. The oracle
-    // replicates the whole pipeline (bucketing, cosine, ranking).
-    "sim_knn_graph" -> ((s, dir) =>
-      graft.ops.Similarity.knnGraph(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        dim = 64, planes = 8, bands = 2, k = 5)),
-
-    // Extension: GRAPH ANN (HNSW-family, r12 VERDICT ask #4) — beam
-    // search over the kNN proximity graph from the deterministic entry
-    // point: the flat navigable-graph query shape of HNSW with the
-    // sequential insert path replaced by the declarative knnGraph build
-    // and the navigation run as driver-bounded rounds (see
-    // Similarity.graphAnnTopK's scaladoc for the design rationale).
-    // Since r14 the tuned dense-graph BUILD is shared (r13 VERDICT ask
-    // #5): all three sim_hnsw_* queries probe the ONE committed,
-    // #indexof-gated edge table the fixGraphFull fixture stages per JVM,
-    // so the pair's former per-query build cost collapses to the
-    // navigation rounds. The oracle still replays build + navigation in
-    // full — the committed edges are value-identical to an inline build.
-    "sim_hnsw_topk" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val g = fixGraphFull(s, dir)
-      graft.sources.ManifestTable.requireIndexFresh(s, g)
-      graft.ops.Similarity.graphAnnTopKFromEdges(
-        spread(s, emb), emb.filter(col("vec_id") < 10),
-        graft.sources.ManifestTable.read(s, g), "vec_id", "embedding",
-        beam = 32, rounds = 8, k = 5, entries = 8)
-    }),
-
-    // Extension: the PERSISTED graph-ANN lifecycle row — the explicit
-    // build/probe decoupling for the graph path (mirrors
-    // sim_ivf_persisted): the fixture commits the knnGraph edge set
-    // bound to the corpus snapshot (#indexof), the probe REFUSES a
-    // stale or unbound graph (requireIndexFresh — refusal spec'd in
-    // OpsSpec), and navigation reads the committed O(n·degree) edges in
-    // one scan amortized over the probe batch (a serving tier would
-    // cluster by src and point-read per round). Same oracle as
-    // sim_hnsw_topk: probing committed edges must be bit-identical to
-    // an inline build.
-    "sim_hnsw_persisted" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val g = fixGraphFull(s, dir)
-      graft.sources.ManifestTable.requireIndexFresh(s, g)
-      graft.ops.Similarity.graphAnnTopKFromEdges(
-        spread(s, emb), emb.filter(col("vec_id") < 10),
-        graft.sources.ManifestTable.read(s, g), "vec_id", "embedding",
-        beam = 32, rounds = 8, k = 5, entries = 8)
-    }),
-
-    // Extension: the established recall@5 harness over the graph-ANN
-    // navigation — the measured IVF-vs-graph evidence the SURVEY §7.5
-    // decision row cites (both arms' rankings replayed exactly, so the
-    // recall numbers themselves hash-match the oracle).
-    "sim_hnsw_recall" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 10)
-      val exact = graft.ops.Similarity
-        .bruteForceTopK(spread(s, emb), q, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val g = fixGraphFull(s, dir)
-      graft.sources.ManifestTable.requireIndexFresh(s, g)
-      val approx = graft.ops.Similarity.graphAnnTopKFromEdges(
-          spread(s, emb), q,
-          graft.sources.ManifestTable.read(s, g), "vec_id", "embedding",
-          beam = 32, rounds = 8, k = 5, entries = 8)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = exact.join(approx, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      q.select(col("vec_id").as("query_id")).join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-    }),
-
-    // Extension: Local Outlier Factor over the approximate kNN graph —
-    // density-ratio outliers a global distance cut cannot see.
-    "sim_lof" -> ((s, dir) =>
-      graft.ops.Similarity.lofScores(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        dim = 64, planes = 8, bands = 2, k = 5)),
-
-    // Extension: edit-distance near-dup verify over the SAME banded
-    // MinHash candidates — catches character-level variants token-set
-    // Jaccard misreads.
-    "dedup_edit_distance" -> ((s, dir) =>
-      graft.ops.Dedup.editDistanceNearDups(
-        spread(s, table(s, dir, "documents")), "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 8,
-        prefixChars = 200, maxDist = 60)),
-
-    // Extension: SemDeDup (arXiv:2303.09540) — semantic dedup via
-    // deterministic k-means cells + within-cell cosine; the lowest id in
-    // every >= tau relation survives. tau = 0.35 is the harness-scale knob
-    // (the synthetic embeddings top out near cosine 0.45; production runs
-    // ~0.95) — the oracle rebuilds the identical cells and prune set.
-    "sim_semdedup" -> ((s, dir) =>
-      graft.ops.Similarity.semDedup(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2, tau = 0.35,
-        coarse = Some(loadPqBooks(s, dir)._1))),
-
-    // Extension: within-cell pairwise cosine histogram — the separability
-    // diagnostic that prices the semDedup τ knob; pairs bounded by the
-    // same k-means cells, never all-pairs.
-    "sim_pair_hist" -> ((s, dir) =>
-      graft.ops.Similarity.cellPairHistogram(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2, nBins = 10,
-        coarse = Some(loadPqBooks(s, dir)._1))),
-
-    // Extension: greedy token-budget curation — best-quality docs until
-    // the cumulative token budget is spent.
-    "docs_budget_pick" -> ((s, dir) =>
-      graft.ops.Corpus.tokenBudgetSelect(
-        spread(s, table(s, dir, "documents")), "doc_id", "text", 10000L)),
-
-    // Extension: centroid-OOD gate — 1 − max cosine to any k-means
-    // centroid (narrow projection against centroid literals), flagged
-    // above the exact p90 cut computed as a 1-row broadcast aggregate.
-    "sim_centroid_ood" -> ((s, dir) =>
-      graft.ops.Similarity.centroidOodScores(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        coarse = Some(loadPqBooks(s, dir)._1))),
-
-    // Extension: diversity-preserving downsample — up to 10 vectors per
-    // k-means cell by stable (md5(id), id) order, flattening the density
-    // profile so rare embedding modes survive a budget cut.
-    "sim_diverse_sample" -> ((s, dir) =>
-      graft.ops.Similarity.cellBalancedSample(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        coarse = Some(loadPqBooks(s, dir)._1))),
-
-    // Extension: multimodal binary-column plumbing — batched partition-local
-    // decode (stubbed deterministically; see graft.ops.Multimodal).
-    "multimodal_decode" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeBatched(
-        graft.ops.Multimodal.asMedia(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: multimodal RETRIEVAL through the stubbed encoder seam —
-    // media payloads decode (real container walk), the clearly-marked
-    // deterministic fake encoder emits per-record embeddings in the
-    // batched per-partition shape a GPU model needs, and the output
-    // feeds the stock ANN top-k unchanged: the full image-retrieval
-    // pipeline with only the model weights faked.
-    "multimodal_embed_topk" -> ((s, dir) => {
-      val emb = graft.ops.Multimodal.embedBatched(
-        graft.ops.Multimodal.asMedia(
-          spread(s, table(s, dir, "documents")), "doc_id", "text")).toDF()
-      graft.ops.Similarity.bruteForceTopK(
-          emb, emb.filter(col("id") < 5), "id", "embedding", 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: QUARANTINING media decode — every 7th payload is
-    // deliberately corrupted (clobbered magic); the per-record Try keeps
-    // the batch alive, bad records surface with the decoder's message and
-    // null dims, good ones decode normally — the corrupt-record contract
-    // extended to binary columns.
-    "multimodal_quarantine" -> ((s, dir) => {
-      import s.implicits._
-      val media = graft.ops.Multimodal
-        .asMedia(table(s, dir, "documents"), "doc_id", "text")
-        .map { r =>
-          if (r.id % 7 == 0) {
-            val p = r.payload.clone(); p(0) = 'X'.toByte
-            graft.ops.MediaRecord(r.id, p, r.kind)
-          } else r
-        }
-      graft.ops.Multimodal.decodeQuarantined(media).toDF()
-        .select(col("id"), col("ok"), col("error"), col("width"), col("height"))
-    }),
-
-    // Extension: REAL JPEG dimension decode — marker-segment walk to the
-    // SOF0 frame header (the standard dimensions-without-pixel-decode
-    // path); the feature pins the COM-segment payload walk too.
-    "multimodal_jpeg" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeJpegBatched(
-        graft.ops.Multimodal.asJpeg(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL PNG dimension decode — signature + IHDR with CRC-32
-    // verification and a chunk walk to the first IDAT payload.
-    "multimodal_png" -> ((s, dir) =>
-      graft.ops.Multimodal.decodePngBatched(
-        graft.ops.Multimodal.asPng(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL MP4/ISO-BMFF dimension decode — box walk through
-    // ftyp/moov/mvhd/trak/tkhd (16.16 fixed-point dims, timescale-scaled
-    // duration) with the feature echoing the mdat payload's first bytes.
-    "multimodal_mp4" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeMp4Batched(
-        graft.ops.Multimodal.asMp4(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL GIF dimension decode — the spec's variable-length
-    // block walk (skip GCT by encoded size, chain extension sub-blocks)
-    // to the first image descriptor; the canvas dims deliberately differ
-    // from the image dims, so only a real walk matches the oracle.
-    "multimodal_gif" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeGifBatched(
-        graft.ops.Multimodal.asGif(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL WebP dimension decode — RIFF container walk
-    // dispatching on all three bitstream layouts (lossy VP8 start-code +
-    // 14-bit dims, lossless VP8L bit-packed dims, extended VP8X 24-bit
-    // canvas + even-padded chunk walk to the EXIF feature bytes).
-    "multimodal_webp" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeWebpBatched(
-        graft.ops.Multimodal.asWebp(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: multimodal audio — text wrapped as real PCM WAV files,
-    // decoded by walking the RIFF chunks (rate/channels/bits/duration).
-    "multimodal_audio_decode" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeAudioBatched(
-        graft.ops.Multimodal.asAudio(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: FLAC STREAMINFO decode — the real bit-packed layout
-    // (20-bit rate | 3-bit channels | 5-bit bits | 36-bit samples) plus a
-    // full metadata-chain walk to the is-last flag.
-    "multimodal_flac" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeFlacBatched(
-        graft.ops.Multimodal.asFlac(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL MP3 container walk — the ID3v2 tag is skipped by
-    // its syncsafe size, then every MPEG-1 Layer III frame header is
-    // validated and hopped by the 144·bitrate/samplerate rule to EXACT
-    // payload exhaustion (truncation/garbage fails loudly, CBR
-    // asserted); the oracle replays the container arithmetic.
-    "multimodal_mp3" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeMp3Batched(
-        graft.ops.Multimodal.asMp3(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: TIFF header decode — real IFD entry walk in BOTH byte
-    // orders (the fixture alternates II/MM by content-length parity).
-    "multimodal_tiff" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeTiffBatched(
-        graft.ops.Multimodal.asTiff(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL animated-GIF structure decode — the FULL block
-    // walk to the trailer: frame and graphic-control census, loop count
-    // parsed out of the NETSCAPE2.0 application extension, LZW-area
-    // bytes summed across every frame's sub-block chain. The oracle
-    // replicates the frame split and byte-layout arithmetic.
-    "multimodal_gif_frames" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeGifFramesBatched(
-        graft.ops.Multimodal.asGifAnimated(
-          table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL Exif metadata extraction — JPEG segment walk to
-    // APP1, "Exif\0\0" preamble check, embedded-TIFF IFD scan in the
-    // declared byte order (Orientation, ResolutionUnit), dimensions from
-    // SOF0 — the orientation-aware ingest step every image pipeline runs
-    // before resize. The oracle replicates the byte-layout arithmetic.
-    "multimodal_exif" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeExifBatched(
-        graft.ops.Multimodal.asExifJpeg(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: REAL ZIP structure walk — EOCD scan, central-directory
-    // walk, local-header resolution, DEFLATE inflate + per-entry CRC32
-    // verification against the directory.
-    "multimodal_zip" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeZipBatched(
-        graft.ops.Multimodal.asZip(table(s, dir, "documents"), "doc_id", "text"))
-        .toDF()
-        .select(col("id"), col("n_entries"), col("entry_names"),
-          col("total_uncompressed"), col("crc_ok"))),
-
-    // Extension: REAL ustar (WebDataset shard container) roundtrip —
-    // hand-rolled writer, block-walking decoder with per-header checksum
-    // recomputation; the oracle replicates the name census, payload
-    // totals, AND the 512-block padding arithmetic of the container size.
-    "multimodal_tar" -> ((s, dir) =>
-      graft.ops.Multimodal.decodeTarBatched(
-        graft.ops.Multimodal.asTar(table(s, dir, "documents"),
-          "doc_id", "text", "source"))
-        .toDF()
-        .select(col("id"), col("byte_len"), col("n_entries"), col("n_groups"),
-          col("entry_names"), col("total_bytes"), col("chksum_ok"))),
-
-    // Extension: REAL PDF structure walk — version, startxref→xref
-    // resolution, object count from the xref subsection, declared vs
-    // actual page-tree count, stream sliced by its /Length.
-    "multimodal_pdf" -> ((s, dir) =>
-      graft.ops.Multimodal.decodePdfBatched(
-        graft.ops.Multimodal.asPdf(table(s, dir, "documents"), "doc_id", "text")).toDF()),
-
-    // Extension: source-cap downsample — no source may exceed 30% of the
-    // corpus; survivors are the stable md5-order subsample.
-    "docs_source_cap" -> ((s, dir) =>
-      graft.ops.Corpus.domainCapSample(
-        table(s, dir, "documents"), "doc_id", "source", 0.3)),
-
-    // Extension: image near-duplicate detection by banded perceptual
-    // hash — 64-bit aHash (8x8 nearest-neighbor luminance grid, exact
-    // integer mean threshold) in two sign-safe 32-bit halves, 4x16-bit
-    // band bucketing (pigeonhole: Hamming <= 3 always shares a band),
-    // exact Hamming verify on candidates only. The fixture plants
-    // near-dups: every document gets a variant (id + 1e6) whose first 16
-    // characters are overwritten — same length, same dims, a handful of
-    // flipped bits. The oracle recomputes every pixel sample, both hash halves,
-    // the banding join, and the Hamming cut from the raw text bytes.
-    "multimodal_phash_dedup" -> ((s, dir) => {
-      val base = table(s, dir, "documents")
-        .select(col("doc_id"), col("text")).filter(length(col("text")) > 0)
-      val variants = base.select((col("doc_id") + 1000000L).as("doc_id"),
-        expr("concat(repeat('x', least(length(text), 16)), substring(text, 17))")
-          .as("text"))
-      graft.ops.Multimodal.phashNearDupPairs(
-        graft.ops.Multimodal.aHashBatched(
-          graft.ops.Multimodal.asMedia(base.unionByName(variants), "doc_id", "text")),
-        maxHamming = 6)
-    }),
-
-    // Extension: the encoder seam fed by a SHIPPED, REAL in-JVM MLP
-    // (r12 VERDICT ask #3): a 2-layer ReLU network (8->4->3, real
-    // matrix-vector forward pass — no md5 stub in the model) serializes
-    // to the GMLP artifact layout, ships through the committed registry,
-    // is loaded BACK from the committed bytes (never the in-memory
-    // literals), parses once per partition at the session seam, and
-    // embeds every decoded record. ReLU keeps the arithmetic
-    // transcendental-free, so the oracle replays the identical doubles
-    // from the same inlined weights.
-    "multimodal_embed_shipped" -> ((s, dir) => {
-      val reg = scratch("mlp_registry")
-      graft.ops.Quality.commitModelBytes(s, reg, "vision-mlp",
-        graft.ops.Quality.mlpBytes(mlpLayers))
-      val shipped = graft.ops.Quality.loadModelBytes(s, reg, "vision-mlp")
-      graft.ops.Multimodal.embedMlpWithModel(
-          graft.ops.Multimodal.asMedia(
-            spread(s, table(s, dir, "documents")), "doc_id", "text"),
-          shipped)
-        .toDF()
-        .select(col("id"), col("width"), col("height"),
-          round(element_at(col("embedding"), 1), 6).as("e0"),
-          round(element_at(col("embedding"), 2), 6).as("e1"),
-          round(element_at(col("embedding"), 3), 6).as("e2"))
-    }),
-
-    // Extension: the FULLY-REAL encoder path (r13 VERDICT ask #3) — the
-    // shipped MLP's forward pass fed by features derived from the
-    // DECODED PIXELS (the aHash 8x8 luminance grid folded into 8 inputs
-    // by cell residue), so nothing in the payload→embedding chain is
-    // md5-stubbed. The oracle replays pixel sampling, feature fold, and
-    // both ReLU layers from the raw text bytes + the same inlined
-    // weights. Empty docs are filtered (a 0-byte payload has no pixels
-    // to sample — same filter as the phash row).
-    "multimodal_embed_pixels" -> ((s, dir) => {
-      val reg = scratch("mlp_registry_px")
-      graft.ops.Quality.commitModelBytes(s, reg, "vision-mlp-px",
-        graft.ops.Quality.mlpBytes(mlpLayers))
-      val shipped = graft.ops.Quality.loadModelBytes(s, reg, "vision-mlp-px")
-      graft.ops.Multimodal.embedMlpPixels(
-          graft.ops.Multimodal.asMedia(
-            spread(s, table(s, dir, "documents")).filter(length(col("text")) > 0),
-            "doc_id", "text"),
-          shipped)
-        .toDF()
-        .select(col("id"), col("width"), col("height"),
-          round(element_at(col("embedding"), 1), 6).as("e0"),
-          round(element_at(col("embedding"), 2), 6).as("e1"),
-          round(element_at(col("embedding"), 3), 6).as("e2"))
-    }),
-
-    // Extension: REAL nearest-neighbor image resize (pure-JVM 24-bit BMP
-    // resample to 16x16); the feature is the RESIZED image's first pixels,
-    // so the oracle checks the resample's source-pixel mapping, not just
-    // header arithmetic.
-    "multimodal_resize" -> ((s, dir) =>
-      graft.ops.Multimodal.resizeBatched(
-        graft.ops.Multimodal.asMedia(table(s, dir, "documents"), "doc_id", "text"),
-        16, 16).toDF()),
-
-    // Extension: PCM frame sampling — fixed 256-sample windows with
-    // first/loudest frame mean amplitudes (sums of <=256 ints <= 255 are
-    // exact in doubles, so the means are engine-portable bit-for-bit).
-    "multimodal_audio_frames" -> ((s, dir) =>
-      graft.ops.Multimodal.frameStatsBatched(
-          graft.ops.Multimodal.asAudio(table(s, dir, "documents"), "doc_id", "text"),
-          frameLen = 256).toDF()
-        .select(col("id"), col("n_samples"), col("frame_len"), col("n_frames"),
-          round(col("first_mean"), 6).as("first_mean"),
-          round(col("max_mean"), 6).as("max_mean"))),
-
-    // Extension: tumbling-window aggregation with order-independent sums
-    // (double sums go through DECIMAL so partial-agg order can't change bits).
-    "events_window_agg" -> ((s, dir) =>
-      graft.ops.EventOps.windowedAgg(events(s, dir), "ts", "event_type", "value", "1 hour")),
-
-    // Extension: hopping-window aggregation — 1 h windows every 30 min;
-    // each event explodes narrowly to its 2 windows and the aggregate
-    // keeps the single tumbling-case shuffle.
-    "events_hopping_window" -> ((s, dir) =>
-      graft.ops.EventOps.hoppingAgg(events(s, dir), "ts", "event_type", "value",
-        "1 hour", "30 minutes")),
-
-    // Extension: STREAMING windowed aggregation, oracle-checked — a
-    // bounded deterministic slice of the events table replays through a
-    // MemoryStream into StreamingOps.windowedAgg and drains to a memory
-    // sink; everything arrives inside the watermark, so the streaming
-    // answer must equal the batch SQL the oracle computes directly. (The
-    // driver-side feed is a harness artifact — production reads Kafka.)
-    "stream_window_agg" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (in, _) = streamFeed(s, dir, 2000)
-      val agg = graft.streaming.StreamingOps.windowedAgg(
-        in.toDF(), "ts", "event_type", "value", "1 hour", "10 minutes")
-      s.catalog.dropTempView("stream_win_out")
-      graft.streaming.StreamingOps.runToMemory(agg, "stream_win_out",
-        org.apache.spark.sql.streaming.OutputMode.Complete)
-      s.table("stream_win_out").select(
-        unix_millis(col("w.start")).as("window_start_ms"),
-        col("event_type"), col("n_events"), col("total_value"))
-    }),
-
-    // Extension: STREAMING hopping-window aggregation — the overlapping
-    // twin of stream_window_agg (1 h windows every 30 min; state scales
-    // by the overlap factor), same bounded replay and batch-SQL oracle.
-    "stream_hopping" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (in, _) = streamFeed(s, dir, 2000)
-      val agg = graft.streaming.StreamingOps.hoppingAgg(
-        in.toDF(), "ts", "event_type", "value", "1 hour", "30 minutes",
-        "10 minutes")
-      s.catalog.dropTempView("stream_hop_out")
-      graft.streaming.StreamingOps.runToMemory(agg, "stream_hop_out",
-        org.apache.spark.sql.streaming.OutputMode.Complete)
-      s.table("stream_hop_out").select(
-        unix_millis(col("w.start")).as("window_start_ms"),
-        col("event_type"), col("n_events"), col("total_value"))
-    }),
-
-    // Extension: STREAMING exact dedup, oracle-checked — the same bounded
-    // feed through dropDuplicatesWithinWatermark on the props fingerprint;
-    // exactly one row per distinct fingerprint survives, which the oracle
-    // verifies as a distinct count over the same slice. The single-batch
-    // replay is LOAD-BEARING for that GLOBAL-distinct oracle:
-    // dropDuplicatesWithinWatermark only guarantees dedup within the
-    // 1-hour delay, and the equality holds because the whole feed lands in
-    // one micro-batch (no fingerprint state is evicted mid-run); a
-    // multi-batch replay with duplicates >1h apart would break it.
-    "stream_dedup" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (in, nIn) = streamFeed(s, dir, 2000)
-      val dd = graft.streaming.StreamingOps.dedupStream(in.toDF(), "ts", "props", "1 hour")
-      s.catalog.dropTempView("stream_dedup_out")
-      graft.streaming.StreamingOps.runToMemory(dd, "stream_dedup_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_dedup_out").agg(
-          count(lit(1)).as("n_survivors"),
-          countDistinct(col("fp")).as("n_distinct_fp"))
-        .select(lit(nIn.toLong).as("n_in"),
-          col("n_survivors"), col("n_distinct_fp"))
-    }),
-
-    // Extension: STREAMING session windows, oracle-checked — the bounded
-    // feed through Spark's native session_window (30-minute gap), drained
-    // in Complete mode so every session emits regardless of the final
-    // watermark. Session semantics: session_window MERGES an event landing
-    // exactly gap after the previous one (a new session starts only when
-    // the gap is STRICTLY greater; session end = last ts + gap) — pinned
-    // by a StreamingSpec boundary test against Spark's sessionizer — and
-    // the oracle mirrors that exact boundary with a lag()-based
-    // cumulative-sum sessionization using `> gap`.
-    "stream_session" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (in, _) = streamFeed(s, dir, 2000)
-      val sess = graft.streaming.StreamingOps.sessionAgg(
-        in.toDF(), "ts", "user_id", "30 minutes", "10 minutes")
-      s.catalog.dropTempView("stream_sess_out")
-      graft.streaming.StreamingOps.runToMemory(sess, "stream_sess_out",
-        org.apache.spark.sql.streaming.OutputMode.Complete)
-      s.table("stream_sess_out").select(
-        col("user_id"),
-        unix_millis(col("w.start")).as("session_start_ms"),
-        unix_millis(col("w.end")).as("session_end_ms"),
-        col("n_events"), col("total_value"))
-    }),
-
-    // Extension: STREAMING late-data accounting, oracle-checked — the one
-    // watermark behavior a single-batch replay can never exercise. The
-    // feed splits into two MICRO-BATCHES by event_id PARITY (parity is
-    // uncorrelated with time, so batch 1 spans the full range and batch
-    // 2 is almost entirely late — 993 of 1000 rows at sf0.01): batch 1
-    // advances the watermark to max(ts)−10 min, so batch 2's rows landing
-    // in windows already CLOSED under that watermark (window end ≤
-    // watermark) are dropped by the streaming aggregation; late rows into
-    // still-open windows are accepted — exactly event-time semantics, not
-    // arrival-order semantics. A far-future flush event then pushes the
-    // watermark past every real window so Append mode emits them all (the
-    // default no-data micro-batch runs the final emission). The oracle
-    // replays the SAME deterministic watermark rule in SQL: keep batch-2
-    // rows iff hour-window end > max(batch-1 ts) − 600000 ms.
-    "stream_late_drop" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 2000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (batch1, batch2) = feed.partition(_.event_id % 2 == 0)
-      val flushTs = new java.sql.Timestamp(
-        feed.map(_.ts.getTime).max + 7L * 24 * 3600 * 1000)
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val agg = graft.streaming.StreamingOps.windowedAgg(
-        in.toDF(), "ts", "event_type", "value", "1 hour", "10 minutes")
-      s.catalog.dropTempView("stream_late_out")
-      val q = agg.writeStream.format("memory").queryName("stream_late_out")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(StreamEv(-1L, -1L, flushTs, "__flush__", 0.0, "{}"))
-      q.processAllAvailable()
-      q.stop()
-      s.table("stream_late_out").filter(col("event_type") =!= "__flush__")
-        .select(unix_millis(col("w.start")).as("window_start_ms"),
-          col("event_type"), col("n_events"), col("total_value"))
-    }),
-
-    // Extension: STREAMING CDC upsert sink, oracle-checked — foreachBatch
-    // maintains a latest-per-key parquet table (versioned dirs + a
-    // CURRENT pointer swap; with Delta/Iceberg the batch body becomes one
-    // MERGE INTO). The feed replays as TWO micro-batches split by
-    // event_id HALVES, so batch 2 genuinely overwrites batch-1 state for
-    // every user seen in both — the multi-batch merge path, not a
-    // single-batch union. The oracle is last-event-per-user over the
-    // bounded slice (event_id is the version: unique and arrival-ordered).
-    "stream_upsert_sink" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 2000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (batch1, batch2) = feed.partition(_.event_id < 1000)
-      val out = scratch("stream_upsert")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.upsertSink(
-        in.toDF().select("event_id", "user_id", "event_type", "value"),
-        keyCol = "user_id", versionCol = "event_id", tiebreakCol = "event_id",
-        dir = out)
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      graft.streaming.StreamingOps.readUpsertTable(s, out)
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_type"),
-          round(col("value"), 6).as("last_value"))
-    }),
-
-    // Extension: STREAMING append-only manifest sink — each micro-batch
-    // lands as one atomic append transaction (pointer-swap visibility,
-    // snapshot history for free); replayed as TWO batches, the committed
-    // table is exactly the feed and the version count proves per-batch
-    // commits.
-    // Extension: STREAMING ANN index maintenance — embeddings stream in;
-    // every micro-batch appends to the corpus AND lands its frozen-
-    // codebook cell assignments on the index with the #indexof rebind in
-    // the same transaction, so the staleness gate passes between every
-    // pair of batches and the final probe (asserted fresh) ranks
-    // identically to a fused IVF over the full corpus.
-    "stream_ann_maintain" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val emb = table(s, dir, "embeddings")
-      val corpusDir = fixEmb80Copy(s, "sann_corpus", dir) // private copy: streamed appends below
-      val out = scratch("sann_index")
-      val v0 = M.currentVersion(s, corpusDir)
-      // r14 optimization: coarse codebook from the committed 80%-slice
-      // registry (fixCoarse80) — bit-identical to inline training on this
-      // corpus copy's content; the seed + Lloyd jobs leave the steady pass.
-      val (cent, assigned0) = graft.ops.Similarity.ivfIndex(
-        M.read(s, corpusDir), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadCoarse80(s, dir)))
-      M.commitIndex(s, out, assigned0.repartitionByRange(4, col("cell"))
-        .sortWithinPartitions(col("cell")), corpusDir, v0)
-      val feed = emb.filter(col("vec_id") % 5 === 0)
-        .select(col("vec_id"), col("embedding"), col("label"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
-      // batch split is arbitrary: every row lands either way
-      val (b1, b2) = feed.splitAt(feed.length / 2)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Seq[Float], Int)]
-      val q = graft.streaming.StreamingOps.annMaintainSink(
-        in.toDS().toDF("vec_id", "embedding", "label"),
-        corpusDir, out, "vec_id", "embedding", cent)
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      // between batches the index is already probe-able and fresh
-      M.requireIndexFresh(s, out)
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      M.requireIndexFresh(s, out)
-      val probesQ = emb.filter(col("vec_id") < 10)
-      val cells = graft.ops.Similarity.probeCells(
-        cent, probesQ, "vec_id", "embedding", nprobe = 4)
-      val index = M.readWhereIn(s, out, "cell", cells)
-      graft.ops.Similarity.ivfTopKFromIndex(
-          index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-    }),
-
-    // Extension: STREAMING ERASURE QUEUE — the delete leg of streaming
-    // index maintenance (stream_ann_maintain is the append leg): each
-    // micro-batch of privacy-deletion requests DV-erases its keys from
-    // the corpus and drops their index rows with the rebind in one
-    // pointer move, so the index stays probe-able and fresh BETWEEN
-    // batches and can never return an erased key. The third batch
-    // REPLAYS already-erased keys — harmless by construction (erasure
-    // is naturally idempotent), which is the exactly-once story without
-    // any batch stamping. Probe must equal the surviving-corpus IVF
-    // (the sim_ivf_delete oracle).
-    "stream_gdpr_erase" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val emb = table(s, dir, "embeddings")
-      val corpusDir = fixEmbFullCopy(s, "gdpr_corpus", dir) // private copy: streamed erasures below
-      val out = scratch("gdpr_index")
-      val v0 = M.currentVersion(s, corpusDir)
-      // r14 optimization: the coarse codebook comes from the committed
-      // quantizer registry (fixPqBooks) — trained on the same full-corpus
-      // content, so the centroids are bit-identical to inline training
-      // (kmeansCentroids is content-deterministic) and the seed + Lloyd
-      // jobs drop out of this query's steady pass.
-      val (cent, assigned) = graft.ops.Similarity.ivfIndex(
-        M.read(s, corpusDir), "vec_id", "embedding",
-        numCentroids = 16, lloydRounds = 2,
-        coarse = Some(loadPqBooks(s, dir)._1))
-      M.commitIndex(s, out, assigned.repartitionByRange(4, col("cell"))
-        .sortWithinPartitions(col("cell")), corpusDir, v0)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Long]
-      val q = graft.streaming.StreamingOps.eraseMaintainSink(
-        in.toDS().toDF("vec_id"), "vec_id",
-        corpusDir, out, "vec_id", "neighbor_id")
-      in.addData(20L until 30L: _*); q.processAllAvailable()
-      M.requireIndexFresh(s, out) // fresh between batches
-      in.addData(30L until 40L: _*); q.processAllAvailable()
-      // an at-least-once replay of erased keys must be a harmless no-op
-      in.addData(25L, 35L); q.processAllAvailable()
-      q.stop()
-      M.requireIndexFresh(s, out)
-      val probesQ = emb.filter(col("vec_id") < 10)
-      val cells = graft.ops.Similarity.probeCells(
-        cent, probesQ, "vec_id", "embedding", nprobe = 4)
-      val index = M.readWhereIn(s, out, "cell", cells)
-      val topkDir = scratch("gdpr_topk")
-      graft.ops.Similarity.ivfTopKFromIndex(
-          index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-        .write.mode("overwrite").parquet(topkDir)
-      val topk = s.read.parquet(topkDir)
-      require(topk.filter(col("neighbor_id").between(20, 39)).isEmpty,
-        "an erased vector surfaced from the stream-maintained index")
-      topk
-    }),
-
-    // Extension: STREAMING inverted-index maintenance — the ANN
-    // maintenance sink's lexical twin: documents arriving in micro-
-    // batches tokenize only themselves; postings, the #indexof rebind,
-    // and the advanced #meta corpus totals land in one pointer move per
-    // batch, so the index is probe-able and fresh BETWEEN batches with
-    // true BM25 idf/avgdl stats. After the drain, the probe must equal a
-    // from-scratch full-corpus BM25 (the oracle) — streamed postings and
-    // batch-built postings are indistinguishable.
-    "stream_invidx_maintain" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val R = graft.ops.Retrieval
-      val docs = table(s, dir, "documents").select("doc_id", "text")
-      val corpusDir = fixDocsText80Copy(s, "sinv_corpus", dir) // private copy: streamed appends below
-      val out = scratch("sinv_index")
-      val v0 = M.currentVersion(s, corpusDir)
-      val corpus0 = M.read(s, corpusDir)
-      commitInvIndex(s, "sinv_toks", corpus0, out, corpusDir, v0): Unit
-      val feed = docs.filter(col("doc_id") % 5 === 0)
-        .as[StreamDoc].collect()
-      val (b1, b2) = feed.splitAt(feed.length / 2)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[StreamDoc]
-      val q = graft.streaming.StreamingOps.textIndexMaintainSink(
-        in.toDS().toDF("doc_id", "text"), corpusDir, out, "doc_id", "text")
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      // between batches: probe-able, fresh, stats true for the partial corpus
-      M.requireIndexFresh(s, out)
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      M.requireIndexFresh(s, out)
-      val props = M.properties(s, out)
-      val (nF, dlF) = R.corpusStats(M.read(s, corpusDir), "text")
-      require(props(R.MetaDocs).toLong == nF &&
-        props(R.MetaTotalDl).toLong == dlF,
-        "streamed #meta corpus stats must equal the true totals")
-      val queries = Seq(
-        0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter",
-        2L -> "vector", 2L -> "stream", 2L -> "hash"
-      ).toDF("query_id", "term")
-      val post = M.readWhereIn(s, out, "term",
-        Seq("spark", "table", "window", "join", "filter",
-          "vector", "stream", "hash"))
-      R.bm25TopK(post, queries, nF, dlF, k = 5)
-    }),
-
-    // Extension: STREAMING WRITE-AUDIT-PUBLISH — micro-batches land on
-    // a BRANCH (CAS-claimed pointer slots), so the published table never
-    // shows in-flight ingestion: main is checked mid-stream (still the
-    // baseline), the drained branch is audit-read, then ONE fastForward
-    // publishes everything atomically. The governance twin of
-    // stream_append_sink, which publishes every batch immediately.
-    "stream_branch_wap" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val feed = events(s, dir).filter(col("event_id") < 2000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (batch1, batch2) = feed.partition(_.event_id < 1000)
-      val out = scratch("stream_wap")
-      // main holds an already-published baseline the stream must not
-      // disturb until the publish
-      M.commit(s, out, events(s, dir)
-        .filter(col("event_id") >= 2000 && col("event_id") < 2500)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value")))
-      M.createBranch(s, out, "ingest")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.branchWapSink(
-        in.toDF().select("event_id", "user_id", "event_type", "value"),
-        out, "ingest")
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      // mid-stream: one batch is already on the branch, main unmoved
-      val mainDuring = M.read(s, out).count()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      val auditN = M.readBranch(s, out, "ingest").count()
-      M.fastForward(s, out, "ingest")
-      M.dropBranch(s, out, "ingest")
-      M.read(s, out)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"),
-          lit(mainDuring).as("n_main_during"), lit(auditN).as("n_branch_audit"))
-    }),
-
-    "stream_append_sink" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 2000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (batch1, batch2) = feed.partition(_.event_id < 1000)
-      val out = scratch("stream_append")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.appendSink(
-        in.toDF().select("event_id", "user_id", "event_type", "value"), out)
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      val versions = graft.sources.ManifestTable.versions(s, out).size
-      graft.sources.ManifestTable.read(s, out)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"),
-          lit(versions).as("n_versions"))
-    }),
-
-    // Extension: IDEMPOTENT ingest sink — exactly-once-per-user landing
-    // where the committed table IS the dedup state (survives restarts;
-    // the existing-key probe is stats-bounded). Replayed as THREE
-    // overlapping micro-batches (full redelivery included): per user,
-    // only the smallest-event_id row of the FIRST batch containing the
-    // user lands; the oracle re-derives that survivor rule.
-    "stream_idempotent_sink" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 3000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val batch1 = feed.filter(_.event_id < 1000)
-      val batch2 = feed.filter(_.event_id < 2000) // redelivers ALL of batch 1
-      val batch3 = feed.filter(_.event_id >= 1500) // overlaps batch 2's tail
-      val out = scratch("stream_idem")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.idempotentSink(
-        in.toDF().select("event_id", "user_id", "event_type", "value"),
-        keyCol = "user_id", tiebreakCol = "event_id", dir = out)
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch3.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      graft.sources.ManifestTable.read(s, out)
-        .select(col("user_id"), col("event_id").as("first_event_id"),
-          col("event_type").as("first_type"),
-          round(col("value"), 6).as("first_value"))
-    }),
-
-    // Extension: STREAMING per-batch quality gate — the one-scan
-    // constraint report runs inside foreachBatch and appends per-rule
-    // censuses tagged with the batch id (landing-zone telemetry: "batch
-    // 1's out-of-range rate" without a second pass). Replayed as TWO
-    // micro-batches split by event_id halves; the oracle re-derives each
-    // batch's censuses from the same split rule.
-    "stream_constraint_gate" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 2000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (batch1, batch2) = feed.partition(_.event_id < 1000)
-      val out = scratch("stream_gate")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.constraintGateSink(
-        in.toDF().select("event_id", "user_id", "event_type", "value"),
-        Seq(graft.ops.Quality.NotNull("user_id"),
-          graft.ops.Quality.InRange("value", 0.0, 400.0),
-          graft.ops.Quality.Accepted("event_type",
-            Seq("click", "view", "purchase", "signup"))),
-        out)
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      s.read.parquet(out)
-        .select(col("batch_id"), col("rule"), col("n_checked"), col("n_violations"))
-    }),
-
-    // Extension: STREAMING DDSketch — each micro-batch ADDS its
-    // (type, bucket) counts into a persistent histogram table; because
-    // DDSketch buckets merge by pure addition, the maintained sketch
-    // answers exactly the batch sketch of the whole feed — the oracle
-    // IS the batch recipe over the full feed.
-    "stream_ddsketch" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 2000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (batch1, batch2) = feed.partition(_.event_id < 1000)
-      val out = scratch("stream_ddsketch")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.ddsketchSink(
-        in.toDF(), "event_type", "value", alpha = 0.02, out)
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      graft.ops.EventOps.ddsketchQuantilesFromHistogram(
-        graft.sources.ManifestTable.read(s, out),
-        "event_type", "bucket", "n", alpha = 0.02, qs = Seq(0.5, 0.9, 0.99))
-    }),
-
-    // Extension: STREAMING CONTAMINATION GATE — every arriving training
-    // document screens against the static benchmark's shingle Bloom
-    // before landing; per-doc hit counts + the exact truth + the
-    // structural no-false-negative check append per batch. The oracle
-    // rebuilds the same bloom bits and derives each doc's batch.
-    "stream_contam_gate" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-      val feed = docs.filter(col("doc_id") % 20 =!= 0)
-        .select(col("doc_id"), col("text")).as[StreamDoc].collect()
-      val (batch1, batch2) = feed.partition(_.doc_id < 250)
-      val out = scratch("stream_contam")
-      // benchmark screen from the committed contamination-index registry
-      // (r15 optimization round): the shingle set + Bloom words are
-      // committed once per JVM, freshness-gated, bit-identical to an
-      // inline build over the %20==0 benchmark slice (deterministic md5
-      // arithmetic; the oracle still replays the full build + probe)
-      val M = graft.sources.ManifestTable
-      val idxDir = fixContamIndex(s, dir)
-      M.requireIndexFresh(s, idxDir)
-      val idx = M.read(s, idxDir)
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamDoc]
-      val q = graft.streaming.StreamingOps.contamGateSinkFromIndex(
-        in.toDF(),
-        idx.filter(col("kind") === "g").select(col("g")),
-        idx.filter(col("kind") === "w").select(col("word"), col("bits")),
-        "doc_id", "text", out)
-      in.addData(batch1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(batch2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      s.read.parquet(out)
-        .select(col("batch_id"), col("doc_id"), col("n_shingles"),
-          col("n_exact"), col("n_bloom"), col("no_false_neg"), col("flagged"))
-    }),
-
-    // Extension: STREAMING stream-stream interval join, oracle-checked —
-    // clicks and errors replay through two MemoryStreams into the
-    // double-watermarked interval join (errors within [click-1h,
-    // click+10min] per user). Inner-join rows emit as they match, so the
-    // single-batch replay drains every pair; the watermarks exist for
-    // state eviction at scale, not emission. The oracle is the naive
-    // bounded join — a genuinely different algorithm agreeing exactly.
-    "stream_interval_join" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (inL, _) = streamFeed(s, dir, 5000, Some("click"))
-      val (inR, _) = streamFeed(s, dir, 5000, Some("error"))
-      val joined = graft.streaming.StreamingOps.intervalJoinStreams(
-        inL.toDF().select("event_id", "user_id", "ts"),
-        inR.toDF().select("user_id", "ts", "value"),
-        "user_id", "ts", before = "1 hour", after = "10 minutes",
-        watermarkDelay = "10 minutes", rightPayload = Seq("value"))
-      s.catalog.dropTempView("stream_ij_out")
-      graft.streaming.StreamingOps.runToMemory(joined, "stream_ij_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_ij_out").select(
-        col("event_id"), col("user_id"),
-        unix_millis(col("ts")).as("ts_ms"),
-        unix_millis(col("right_ts")).as("right_ts_ms"),
-        col("right_value"))
-    }),
-
-    // Extension: STREAMING LEFT-OUTER interval join, oracle-checked — the
-    // state-eviction semantics: unmatched clicks emit their null-error
-    // row only when the watermark passes their join window, so a flush
-    // event on BOTH streams drains every pending outer row (the flush
-    // click itself stays inside the final watermark and never emits).
-    // The final set then equals the batch LEFT JOIN — the oracle.
-    "stream_interval_left_join" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      val (inL, _) = streamFeed(s, dir, 5000, Some("click"))
-      val (inR, _) = streamFeed(s, dir, 5000, Some("error"))
-      val mx = events(s, dir).filter(col("event_id") < 5000)
-        .agg(max(unix_millis(col("ts")))).collect()(0).getLong(0)
-      val flush = StreamEv(-1L, -1L,
-        new java.sql.Timestamp(mx + 7L * 24 * 3600 * 1000), "__flush__", 0.0, "{}")
-      inL.addData(flush)
-      inR.addData(flush)
-      val joined = graft.streaming.StreamingOps.intervalLeftJoinStreams(
-        inL.toDF().select("event_id", "user_id", "ts"),
-        inR.toDF().select("user_id", "ts", "value"),
-        "user_id", "ts", before = "1 hour", after = "10 minutes",
-        watermarkDelay = "10 minutes", rightPayload = Seq("value"))
-      s.catalog.dropTempView("stream_iloj_out")
-      graft.streaming.StreamingOps.runToMemory(joined, "stream_iloj_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_iloj_out").filter(col("event_id") =!= -1L)
-        .select(col("event_id"), col("user_id"),
-          unix_millis(col("ts")).as("ts_ms"),
-          unix_millis(col("right_ts")).as("right_ts_ms"),
-          col("right_value"))
-    }),
-
-    // Extension: STREAMING custom state (mapGroupsWithState), oracle-
-    // checked — running per-user totals over the bounded feed in Update
-    // mode; the single-batch replay emits each user's final state exactly
-    // once, which must equal the batch per-user aggregate. The state holds
-    // the value total as exact micros, so the emitted double cannot depend
-    // on the order events happened to arrive within the group iterator.
-    "stream_running_totals" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (in, _) = streamFeed(s, dir, 2000)
-      val totals = graft.streaming.StreamingOps
-        .runningUserTotals(in.toDF(), idleTimeout = None)
-      s.catalog.dropTempView("stream_totals_out")
-      graft.streaming.StreamingOps.runToMemory(totals.toDF(), "stream_totals_out",
-        org.apache.spark.sql.streaming.OutputMode.Update)
-      s.table("stream_totals_out")
-        .select(col("user_id"), col("n_events"), col("total_value"))
-    }),
-
-    // Extension: STREAMING admission quota — per (user, hour window) at
-    // most 5 events admit, the overflow is flagged (every event still
-    // flows through with its decision). State = one counter per active
-    // (user, window). Arrival order (batch, ts, event_id) is the
-    // replayable contract; the oracle re-derives it over THREE
-    // disjoint batches.
-    "stream_rate_limit" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val feed = events(s, dir).filter(col("event_id") < 3000)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamEv]
-      val limited = graft.streaming.StreamingOps.rateLimitStream(
-        in.toDF().select(col("event_id"), col("user_id"),
-          unix_millis(col("ts")).as("ts_ms")),
-        windowMs = 3600000L, maxPerWindow = 5, idleTimeout = None)
-      s.catalog.dropTempView("stream_rate_out")
-      val q = limited.toDF().writeStream.format("memory")
-        .queryName("stream_rate_out")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-      in.addData(feed.filter(_.event_id < 1000).toIndexedSeq: _*)
-      q.processAllAvailable()
-      in.addData(feed.filter(e => e.event_id >= 1000 && e.event_id < 2000)
-        .toIndexedSeq: _*)
-      q.processAllAvailable()
-      in.addData(feed.filter(_.event_id >= 2000).toIndexedSeq: _*)
-      q.processAllAvailable()
-      q.stop()
-      s.table("stream_rate_out")
-        .select(col("event_id"), col("user_id"), col("window_start_ms"),
-          col("admitted"))
-    }),
-
-    // Extension: STREAMING stream-static enrichment, oracle-checked — the
-    // bounded feed inner-joins a broadcast customer dimension per
-    // micro-batch (stateless: no watermark, no streaming state; the
-    // broadcast keeps the stream side shuffle-free). The oracle is the
-    // plain batch join over the same slice.
-    "stream_enrich" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      val (in, _) = streamFeed(s, dir, 2000)
-      val dim = table(s, dir, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-      val enriched = graft.streaming.StreamingOps.enrichWithStatic(
-        in.toDF().select("event_id", "user_id", "event_type"), dim, Seq("user_id"))
-      s.catalog.dropTempView("stream_enrich_out")
-      graft.streaming.StreamingOps.runToMemory(enriched, "stream_enrich_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_enrich_out")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("c_mktsegment"))
-    }),
-
-    // Extension: STREAMING point-in-time (SCD2) enrichment — each event
-    // joins the dim VERSION valid at the EVENT time, never the latest
-    // (the leakage-safe feature join; stateless broadcast, stream side
-    // shuffle-free). Three versioned tiers per covered type split
-    // January at fixed boundaries; the open version has a null end;
-    // uncovered types emit null (LEFT join). The oracle is the same
-    // interval join in batch SQL over a VALUES dim.
-    "stream_pit_enrich" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      import s.implicits._
-      val (in, _) = streamFeed(s, dir, 2000)
-      val dim = Seq("view", "purchase", "signup").flatMap { t =>
-        Seq(
-          (t, "2024-01-01 00:00:00", Option("2024-01-11 00:00:00"), s"${t}_v1"),
-          (t, "2024-01-11 00:00:00", Option("2024-01-21 00:00:00"), s"${t}_v2"),
-          (t, "2024-01-21 00:00:00", Option.empty[String], s"${t}_v3"))
-      }.toDF("event_type", "valid_from", "valid_to", "tier")
-        .withColumn("valid_from", col("valid_from").cast("timestamp"))
-        .withColumn("valid_to", col("valid_to").cast("timestamp"))
-      val enriched = graft.streaming.StreamingOps.enrichPointInTime(
-        in.toDF().select("event_id", "user_id", "ts", "event_type"),
-        dim, "event_type", "ts", "valid_from", "valid_to")
-      s.catalog.dropTempView("stream_pit_out")
-      graft.streaming.StreamingOps.runToMemory(enriched, "stream_pit_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_pit_out")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("tier"))
-    }),
-
-    // Extension: STREAMING rule application, oracle-checked — the plug
-    // engine compiles rules to STATELESS projections, so the identical
-    // SparkPlug API runs on a streaming frame (readStream → plug →
-    // writeStream, no watermark, no state). The bounded feed replays
-    // through a 2-rule chain (reclassify hot views; zero out cheap
-    // clicks — rule 2 sees rule 1's output) and the drained sink
-    // aggregates per type; the oracle is the equivalent batch CASE chain.
-    "stream_plug" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      import graft.plug.{PlugAction, PlugRule}
-      val (in, _) = streamFeed(s, dir, 2000)
-      val rules = List(
-        PlugRule("hot_views", "v1", "event_type = 'view' and value > 250",
-          Seq(PlugAction("event_type", "view_hot"))),
-        PlugRule("zero_cheap_clicks", "v1", "event_type = 'click' and value < 50",
-          Seq(PlugAction("value", "0.0"))))
-      val plugged = graft.streaming.StreamingOps.plugStream(in.toDF(), rules)(s)
-      s.catalog.dropTempView("stream_plug_out")
-      graft.streaming.StreamingOps.runToMemory(plugged, "stream_plug_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_plug_out")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("vsum"))
-    }),
-
-    // Extension: streaming first-match plug — the priority-list rule
-    // semantics ride the same stateless projections on a readStream frame.
-    "stream_first_match" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      import graft.plug.{PlugAction, PlugRule}
-      val (in, _) = streamFeed(s, dir, 2000)
-      val rules = List(
-        PlugRule("hot", "v1", "value > 250",
-          Seq(PlugAction("event_type", "hot"))),
-        PlugRule("warm", "v1", "value > 100",
-          Seq(PlugAction("event_type", "warm"))))
-      val plugged = graft.streaming.StreamingOps
-        .plugFirstMatchStream(in.toDF(), rules)(s)
-      s.catalog.dropTempView("stream_first_match_out")
-      graft.streaming.StreamingOps.runToMemory(plugged, "stream_first_match_out",
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      s.table("stream_first_match_out")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("vsum"))
-    }),
-
-    // Extension: curriculum-style length binning — exact quartile
-    // boundaries once, scan-side bin assignment (never a global ntile).
-    "docs_length_bins" -> ((s, dir) =>
-      graft.ops.Corpus.lengthBins(table(s, dir, "documents"), "doc_id", "n_chars")),
-
-    // Extension: source-mixing plan — per-source keep probabilities that
-    // spend a 100k-char budget uniformly across sources (the
-    // domain-reweighting step before sampling).
-    "docs_mix_plan" -> ((s, dir) =>
-      graft.ops.Corpus.mixPlan(
-        table(s, dir, "documents"), "source", "n_chars", budget = 100000L)),
-
-    // Extension: temperature-scaled source mixing — p_i ∝ w_i^α flattens
-    // the source distribution; reports raw/temperature shares + the boost
-    // a sampler applies. Windows run over the #sources aggregate only.
-    "docs_temperature_mix" -> ((s, dir) =>
-      graft.ops.Corpus.temperatureMix(
-        table(s, dir, "documents"), "source", "n_chars", alpha = 0.5)),
-
-    // Extension: DSIR importance resampling (Xie et al. 2023) — pick the
-    // raw documents that look most like the 'en' target slice: hashed-
-    // unigram importance weights (two 64-bucket histograms → a literal
-    // log-ratio vector → one codegen'd fold per row), then deterministic
-    // Gumbel top-k so the draw samples ∝ exp(weight) reproducibly. Cut is
-    // a TakeOrderedAndProject, never a global sort.
-    "docs_dsir_sample" -> ((s, dir) =>
-      graft.ops.Corpus.dsirSample(spread(s, table(s, dir, "documents")),
-        "doc_id", "text", col("lang") === "en", d = 64, n = 50)),
-
-    // Extension: deterministic training order — (shard, pos_in_shard)
-    // from the salted id hash; sharding first bounds every rank window to
-    // n/shards rows, so "shuffle 100 TB" never needs a global sort.
-    "docs_training_order" -> ((s, dir) =>
-      graft.ops.Corpus.trainingOrder(
-        table(s, dir, "documents"), "doc_id", salt = "epoch1", nShards = 8)),
-
-    // Extension: inter-document boilerplate fraction — per doc, the share
-    // of its distinct shingles that are corpus-common (df > 10); the
-    // cross-document repetition filter per-doc signals can't see.
-    "text_boilerplate" -> ((s, dir) =>
-      graft.ops.Corpus.boilerplateFraction(
-        table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: PII scrubbing — redact emails / phone numbers / long digit
-    // runs with per-document match counts; pure scan-side regexp
-    // projections both engines interpret identically.
-    "text_pii_scrub" -> ((s, dir) =>
-      graft.ops.Corpus.piiScrub(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: gap-based sessionization (30-minute inactivity gap).
-    "events_sessionize" -> ((s, dir) =>
-      graft.ops.EventOps.sessionize(events(s, dir), "user_id", "ts", 30 * 60 * 1000L)),
-
-    // Extension: per-user daily lag/rolling feature frame — the
-    // forecasting/churn feature export: day totals (DECIMAL-routed),
-    // observed-day row lags (1 and 7 back), trailing-7-row mean.
-    "events_lag_features" -> ((s, dir) =>
-      graft.ops.EventOps.lagFeatures(events(s, dir), "user_id", "ts", "value")),
-
-    // Extension: session attribution — purchases attach into the
-    // view/click sessions whose window contains them (equi-join on the
-    // user + residual range, never a cross product); unconverted
-    // sessions kept at zero.
-    "events_session_attach" -> ((s, dir) =>
-      graft.ops.EventOps.sessionAttach(
-        events(s, dir).filter(col("event_type").isin("view", "click")),
-        events(s, dir).filter(col("event_type") === "purchase"),
-        "user_id", "ts", 30 * 60 * 1000L, "value")),
-
-    // Extension: cohort retention — users bucketed by first-activity week,
-    // activity counted per (cohort, week); integer week arithmetic keeps
-    // it engine-portable.
-    "events_cohort" -> ((s, dir) =>
-      graft.ops.EventOps.cohortRetention(events(s, dir), "user_id", "ts")),
-
-    // Extension: per-day wide pivot over the (caller-supplied) event-type
-    // domain — counts + DECIMAL-routed value sums per type as one
-    // conditional-aggregation pass (see pivotProfile scaladoc for why
-    // this beats .pivot at scale).
-    "events_pivot" -> ((s, dir) =>
-      graft.ops.EventOps.pivotProfile(events(s, dir), "ts", "event_type", "value",
-        Seq("click", "error", "purchase", "signup", "view"))),
-
-    // Extension: first-touch attribution — per purchase event, the type
-    // of the user's first event plus elapsed ms and prior-event count at
-    // conversion; cumulative window, (ts, event_id)-pinned tie order.
-    "events_attribution" -> ((s, dir) =>
-      graft.ops.EventOps.firstTouchAttribution(events(s, dir),
-        "user_id", "ts", "event_type", "event_id", "purchase")),
-
-    // Extension: top-25 3-step event-type sequences in per-user
-    // timestamp order — sequence mining for funnel discovery; the global
-    // cut is TakeOrderedAndProject with ties broken on the sequence.
-    "events_top_sequences" -> ((s, dir) =>
-      graft.ops.EventOps.topSequences(events(s, dir),
-        "user_id", "ts", "event_type", "event_id")),
-
-    // Extension: multi-level OLAP rollup — (type, day) subtotals, per-type
-    // totals, grand total in one Expand+aggregate pass; grouping() flags
-    // disambiguate the 'ALL' labels from genuine values.
-    "events_rollup" -> ((s, dir) =>
-      graft.ops.EventOps.rollupProfile(events(s, dir), "event_type", "ts", "value")),
-
-    // Extension: CUBE — all four grouping sets in the same single
-    // Expand+aggregate pass as the rollup.
-    "events_cube" -> ((s, dir) =>
-      graft.ops.EventOps.cubeProfile(events(s, dir), "event_type", "ts", "value")),
-
-    // Extension: explicit GROUPING SETS — the third member of the
-    // multi-level-aggregate family (rollup = prefix sets, cube = all
-    // sets): exactly the three ASKED-FOR sets (type), (user bucket),
-    // (grand total) in one Expand+aggregate pass via Spark 4's
-    // Dataset.groupingSets, with grouping_id() disambiguating which set
-    // a row belongs to.
-    "events_grouping_sets" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("ub", col("user_id") % 10)
-      ev.groupingSets(
-          Seq(Seq(col("event_type")), Seq(col("ub")), Seq.empty),
-          col("event_type"), col("ub"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("value_sum"),
-          grouping_id().cast("long").as("gid"))
-    }),
-
-    // Extension: time-series gap fill — densify per-(type, hour) counts
-    // over the corpus's full bucket range with explicit zero rows; the
-    // grid is generated from a 1-row bounds aggregate, never scanned.
-    "events_gap_fill" -> ((s, dir) =>
-      graft.ops.EventOps.gapFill(events(s, dir), "event_type", "ts", "value", 3600000L)),
-
-    // Extension: robust outlier gate — per-type median + MAD (median
-    // absolute deviation) and the count of values beyond 3 scaled MADs.
-    // The per-key stat tables broadcast back; the fact table never
-    // shuffles beyond its own aggregations.
-    "events_anomaly_mad" -> ((s, dir) =>
-      graft.ops.EventOps.madOutlierGate(events(s, dir), "event_type", "value")),
-
-    // Extension: per-event trailing-rate feature — events by the same user
-    // in the preceding hour, a RANGE frame over epoch seconds (tie-order
-    // independent by construction).
-    "events_rate_window" -> ((s, dir) =>
-      graft.ops.EventOps.slidingRate(events(s, dir), "user_id", "ts", 3600L)
-        .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"), col("n_trailing"))),
-
-    // Extension: debounce — drop an event whose predecessor of the same
-    // (user, type) landed under 10 minutes before it (duplicate-click /
-    // retry-storm suppression); one (user, type) window pass, no join.
-    "events_debounce" -> ((s, dir) =>
-      graft.ops.EventOps.debounce(events(s, dir),
-          "user_id", "event_type", "ts", "event_id", 600000L)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          unix_millis(col("ts")).as("ts_ms"))),
-
-    // Extension: rolling 7-day distinct actives per observed day. The
-    // Spark side EXPLODES each deduped (day, user) pair to the 7 windows
-    // it serves (narrow — the range join becomes arithmetic); the oracle
-    // is the independent naive formulation (day grid range-joined to the
-    // pairs), so the rewrite itself is what the hash match proves.
-    "events_rolling_active" -> ((s, dir) =>
-      graft.ops.EventOps.rollingActive(events(s, dir), "user_id", "ts", 7)),
-
-    // Extension: SCD2 change history — per user, collapse the event stream
-    // to event_type TRANSITIONS and stamp each surviving version with
-    // [valid_from, valid_to) epoch-millis and a version number (the
-    // slowly-changing-dimension build every mutation feed needs).
-    "events_change_history" -> ((s, dir) =>
-      graft.ops.EventOps.changeHistory(events(s, dir),
-        "user_id", "event_type", "ts", "event_id")),
-
-    // Extension: first-order Markov transition matrix over consecutive
-    // same-user event types — counts + row-normalized probabilities; the
-    // per-from totals broadcast back, so the pair table shuffles once.
-    "events_markov" -> ((s, dir) =>
-      graft.ops.EventOps.transitionMatrix(events(s, dir),
-        "user_id", "ts", "event_type", "event_id")),
-
-    // Extension: per-key numeric value profile (data-quality stats with
-    // order-independent DECIMAL sums and the exact interpolated median).
-    "events_value_profile" -> ((s, dir) =>
-      graft.ops.EventOps.valueProfile(events(s, dir), "event_type", "value")
-        .select(col("event_type"), col("n"), col("n_null"),
-          round(col("vmin"), 6).as("vmin"), round(col("vmax"), 6).as("vmax"),
-          col("vsum"), round(col("vavg"), 6).as("vavg"),
-          round(col("p50"), 6).as("p50"))),
-
-    // Extension: exact per-key cardinality (oracle-checked half of the
-    // profile; the HLL estimate below is checked rows-only).
-    "events_distinct_by_type" -> ((s, dir) =>
-      graft.ops.EventOps.cardinalityProfile(events(s, dir), "event_type", "user_id")
-        .select(col("event_type"), col("n"), col("nd_exact"))),
-
-    // Extension: HyperLogLog cardinality estimate — the 100 TB path
-    // (constant-size sketches instead of a distinct shuffle). HLL bit
-    // patterns differ across engines, so the oracle gates the ESTIMATE
-    // QUALITY instead: |approx - exact| / exact <= 5% must hold per key.
-    "events_approx_distinct" -> ((s, dir) =>
-      graft.ops.EventOps.cardinalityProfile(events(s, dir), "event_type", "user_id")
-        .select(col("event_type"), col("n"), col("nd_exact"),
-          (abs(col("nd_approx") - col("nd_exact")) / col("nd_exact") <= 0.05)
-            .as("within_5pct"))),
-
-    // Extension: mergeable HLL sketches AS DATA (ops/Sketches) — per-shard
-    // register TABLES whose union is a register-wise max over ≤m tiny rows,
-    // never a rescan of the shards. Unlike events_approx_distinct (whose
-    // engine-internal HLL bits force a quality-only gate), the md5/bin
-    // construction is engine-deterministic, so the oracle recomputes the
-    // ESTIMATES bit-for-bit. Keyed on event_id (~2k distinct per shard) so
-    // the estimate stays in the pure integer-arithmetic regime — the
-    // linear-counting branch (libm ln) stays cold at the gate's SF.
-    "events_hll_shards" -> ((s, dir) =>
-      graft.ops.Sketches.hllReport(
-        events(s, dir), col("event_id").cast("string"), "event_type")),
-
-    // Extension: the HLL MERGE PROPERTY proven as a query — the register
-    // table unioned from the five per-shard sketches must equal, register
-    // by register, the sketch built from scratch over all the data. This
-    // is the property that makes stored sketches trustworthy: any shard
-    // combination's distinct count never needs the shards again.
-    "events_hll_union" -> ((s, dir) => {
-      val keyed = events(s, dir).select(
-        col("event_id").cast("string").as("k"), col("event_type").as("shard"))
-      val regs = graft.ops.Sketches.hllRegisters(keyed, col("k"), "shard")
-      val merged = graft.ops.Sketches.hllUnion(regs, "merged")
-        .select(col("idx"), col("rho").as("rho_merged"))
-      val scratch = graft.ops.Sketches.hllRegisters(
-          keyed.select(col("k"), lit("all").as("shard")), col("k"), "shard")
-        .select(col("idx"), col("rho").as("rho_scratch"))
-      merged.join(scratch, Seq("idx"), "full_outer")
-        .agg(count(lit(1)).as("n_registers"),
-          sum(when(col("rho_merged") <=> col("rho_scratch"), 1).otherwise(0))
-            .as("n_match"))
-        .select(col("n_registers"), col("n_match"),
-          (col("n_registers") === col("n_match")).as("merge_equals_scratch"))
-    }),
-
-    // Extension: KMV set-operation sketches — the distinct-count SET
-    // ALGEBRA the HLL registers can't do: how many orders shipped lines
-    // in BOTH 1996 and 1997 (|A∩B|, Jaccard), estimated purely from two
-    // stored 64-row sketches (membership of the merged sketch in each
-    // side), never a rescan — truth at sf0.01: 6702/6617 per year,
-    // 10357 union, J≈0.29. Exact counterparts ride along.
-    "star_kmv_order_overlap" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          year(col("l_shipdate")).cast("string").as("ship_year"))
-        .filter(col("ship_year").isin("1996", "1997"))
-      graft.ops.Sketches.kmvSetOps(li,
-        col("l_orderkey").cast("string"), "ship_year", "1996", "1997")
-    }),
-
-    // Extension: count-min frequency sketches — the FREQUENCY complement
-    // of the sketch tier: per-event-type (row, col, count) tables that
-    // merge by pure per-cell addition; point estimates are min-over-rows
-    // and structurally NEVER undercount (the property a "drop users seen
-    // > N times" curation threshold relies on). Probes estimated against
-    // the merged table next to their exact counts.
-    "events_cms_freq" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val sk = graft.ops.Sketches.cmsSketch(
-        ev, col("user_id").cast("string"), "event_type")
-      val merged = graft.ops.Sketches.cmsMerge(sk, "all")
-      val probes = ev.filter(col("user_id") < 10)
-        .select(col("user_id").cast("string").as("probe")).distinct()
-      val exact = ev.filter(col("user_id") < 10)
-        .groupBy(col("user_id").cast("string").as("probe"))
-        .agg(count(lit(1)).as("n_exact"))
-      graft.ops.Sketches.cmsPointEstimate(merged, probes)
-        .join(exact, Seq("probe"))
-        .select(col("probe"), col("est_count"), col("n_exact"),
-          (col("est_count") >= col("n_exact")).as("never_under"))
-    }),
-
-    // Extension: mergeable TOP-K summaries — the frequency-RANKING piece
-    // the count-min table can't answer (it estimates a GIVEN key; it
-    // cannot enumerate the heavy ones). Per-event-type top-16 count
-    // tables with truncation thresholds merge into deterministic
-    // per-user [lo, hi] count bounds (Misra-Gries merge bound); the
-    // top-10 candidates carry a PROVEN verdict (fewer than k other keys
-    // could exceed them) and are gated against exact truth: the true
-    // count sits inside [lo, hi] structurally, never by luck.
-    "events_topk_sketch" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("user_id"), col("event_type"))
-      val sk = graft.ops.Sketches.topkSketch(
-        spread(s, ev), col("user_id"), "event_type", m = 16)
-      val merged = graft.ops.Sketches.topkMerge(sk, "all")
-      val cand = graft.ops.Sketches.topkCandidates(merged, k = 10)
-      val exact = ev.groupBy(col("user_id").as("key"))
-        .agg(count(lit(1)).as("n_true"))
-      cand.join(exact, Seq("key"))
-        .select(col("key").as("user_id"), col("rank"), col("lo"), col("hi"),
-          col("n_true"), col("n_contenders"),
-          (col("n_true") >= col("lo") && col("n_true") <= col("hi"))
-            .as("ok_bounds"),
-          col("proven"))
-    }),
-
-    // Extension: as-of join — each click picks up the most recent error
-    // value at-or-before it for the same user. Union + running-last: one
-    // shuffle on the key, no inequality join (which Spark would plan as a
-    // broadcast nested loop). The DuckDB oracle uses its NATIVE ASOF JOIN —
-    // an independent algorithm agreeing bit-for-bit.
-    // Extension: as-of join with a staleness bound (merge_asof tolerance
-    // semantics) — matches older than 10 minutes null out; the bound is a
-    // row-local gate on the same union-plus-one-window plan.
-    "events_asof_tolerance" -> ((s, dir) => {
-      val e = events(s, dir)
-      graft.ops.Temporal.asofJoinTolerance(
-          e.filter(col("event_type") === "click")
-            .select(col("event_id"), col("user_id"), col("ts")),
-          e.filter(col("event_type") === "error"),
-          "user_id", "ts", Seq("value"), toleranceMs = 10 * 60 * 1000L)
-        .select(col("event_id"), col("user_id"),
-          unix_millis(col("ts")).as("ts_ms"),
-          unix_millis(col("asof_ts")).as("asof_ts_ms"),
-          col("asof_value"))
-    }),
-
-    "events_asof_join" -> ((s, dir) => {
-      val e = events(s, dir)
-      graft.ops.Temporal.asofJoin(
-          e.filter(col("event_type") === "click")
-            .select(col("event_id"), col("user_id"), col("ts")),
-          e.filter(col("event_type") === "error"),
-          "user_id", "ts", Seq("value"))
-        .select(col("event_id"), col("user_id"),
-          unix_millis(col("ts")).as("ts_ms"),
-          unix_millis(col("asof_ts")).as("asof_ts_ms"),
-          col("asof_value"))
-    }),
-
-    // Extension: FORWARD as-of join — for each click, the user's NEXT
-    // error at or after it (the mirrored direction; DuckDB's native ASOF
-    // with l.ts <= r.ts is the independent oracle).
-    "events_asof_forward" -> ((s, dir) => {
-      val e = events(s, dir)
-      graft.ops.Temporal.asofJoinForward(
-          e.filter(col("event_type") === "click")
-            .select(col("event_id"), col("user_id"), col("ts")),
-          e.filter(col("event_type") === "error"),
-          "user_id", "ts", Seq("value"))
-        .select(col("event_id"), col("user_id"),
-          unix_millis(col("ts")).as("ts_ms"),
-          unix_millis(col("asof_ts")).as("asof_ts_ms"),
-          col("asof_value"))
-    }),
-
-    // Extension: the hot-key-safe CHUNKED as-of join over the SAME slice
-    // and oracle as events_asof_join — identical semantics, different
-    // plan: the window partitions on (key, 6h-time-chunk) with a carry
-    // pass threading the last right value across chunk boundaries, so a
-    // celebrity key's history can never pin a single task. The sf slice
-    // spans weeks, so 6h chunks genuinely exercise the carry join.
-    "events_asof_chunked" -> ((s, dir) => {
-      val e = events(s, dir)
-      graft.ops.Temporal.asofJoinChunked(
-          e.filter(col("event_type") === "click")
-            .select(col("event_id"), col("user_id"), col("ts")),
-          e.filter(col("event_type") === "error"),
-          "user_id", "ts", Seq("value"), chunkMs = 6 * 3600 * 1000L)
-        .select(col("event_id"), col("user_id"),
-          unix_millis(col("ts")).as("ts_ms"),
-          unix_millis(col("asof_ts")).as("asof_ts_ms"),
-          col("asof_value"))
-    }),
-
-    // Extension: bounded interval self-join via time bucketing — per event,
-    // how many same-type events fall within ±30 minutes. Equi-join on
-    // (type, bucket) with a 3-bucket probe explode; never an O(n²)
-    // comparison. The oracle runs the naive quadratic join — feasible at
-    // oracle scale, and a genuinely different plan shape agreeing exactly.
-    "events_range_count" -> ((s, dir) =>
-      graft.ops.Temporal.rangeSelfCount(
-        events(s, dir), "event_id", "ts", "event_type", 30 * 60 * 1000L)),
-
-    // Extension: quantile profile with approximation gates — exact
-    // interpolated p50/p90 plus booleans asserting the Greenwald-Khanna
-    // sketch (the constant-memory 100 TB path) lands within 5% of exact.
-    "events_quantile_gate" -> ((s, dir) =>
-      graft.ops.EventOps.quantileProfile(events(s, dir), "event_type", "value")),
-
-    // Extension: winsorized value profile — the heavy-tail guard: clip
-    // at the exact global [p1, p99] rank-selected quantiles (broadcast as
-    // one row), per-type clip counts + DECIMAL-routed clipped mean. Two
-    // passes at any scale, no value buffers.
-    "events_winsorize" -> ((s, dir) =>
-      graft.ops.EventOps.winsorizedProfile(events(s, dir), "event_type", "value",
-        pLo = 0.01, pHi = 0.99)),
-
-    // Extension: two-sided CUSUM change-point detector — cumulative
-    // sums accumulate sustained mean shifts per type (k = 0.5σ slack,
-    // h = 4σ threshold); the complement to the EWMA drift monitor,
-    // same one-Catalyst-fold shape and recursive-CTE oracle.
-    "events_cusum" -> ((s, dir) =>
-      graft.ops.EventOps.cusumChart(events(s, dir), "event_type", "ts")),
-
-    // Extension: EWMA control chart — the SPC monitor over each type's
-    // daily counts: z = λy + (1-λ)z, a day flags when its deviation
-    // from the running EWMA exceeds L·σ·sqrt(λ/(2-λ)). Same
-    // one-Catalyst-fold shape as the Holt fit; σ comes from the same
-    // sorted array (sequential arithmetic both engines).
-    "events_ewma_chart" -> ((s, dir) =>
-      graft.ops.EventOps.ewmaChart(events(s, dir), "event_type", "ts",
-        lambda = 0.2, limitL = 3.0)),
-
-    // Extension: Holt linear-trend forecast — double-exponential
-    // smoothing (level + trend) over each type's daily count series,
-    // folded in ONE Catalyst aggregate HOF over the 30-element sorted
-    // daily array (sequential IEEE doubles — bit-reproducible; the
-    // oracle replays the identical recursion in a bounded recursive
-    // CTE). Per-key state: two doubles.
-    "events_forecast_holt" -> ((s, dir) =>
-      graft.ops.EventOps.holtForecast(events(s, dir), "event_type", "ts",
-        alpha = 0.5, beta = 0.3, horizonDays = 7)),
-
-    // Extension: exponential time-decay popularity — 7-day half-life
-    // recency weighting anchored at the corpus max timestamp (1-row
-    // broadcast agg); 12-dp-rounded weights summed through DECIMAL so
-    // the score is partial-order independent. Anchor DELTAS make the
-    // timezone-vs-instant question cancel out entirely.
-    "events_decayed_popularity" -> ((s, dir) =>
-      graft.ops.EventOps.decayedPopularity(events(s, dir), "event_type", "ts",
-        halfLifeDays = 7.0)),
-
-    // Extension: equi-depth quantile binning — bin edges are the exact
-    // rank-selected quartiles (6-dp-rounded on BOTH engines, so boundary
-    // ties bin identically), broadcast as one row; bin = count of edges
-    // strictly below the value.
-    "events_equidepth_bins" -> ((s, dir) =>
-      graft.ops.EventOps.equiDepthBins(events(s, dir), "value")),
-
-    // Extension: reproducible Laplace-noised count release — the DP
-    // mechanism (sensitivity-1 counts, Laplace(1/ε) via inverse CDF)
-    // with the uniform drawn from a seeded hash of the group key, so
-    // the release replays bit-identically; true counts never emitted.
-    "docs_dp_release" -> ((s, dir) =>
-      graft.ops.Quality.dpNoisyCounts(
-        table(s, dir, "documents"), "lang", seed = "r7", epsilon = 1.0)),
-
-    // Extension: k-anonymity census — the release-readiness privacy
-    // check on the documents quasi-identifier (lang, source): groups
-    // under k rows are re-identifiable; the report is one group-by plus
-    // a one-row summary, shuffling one row per GROUP.
-    "docs_k_anonymity" -> ((s, dir) =>
-      graft.ops.Quality.kAnonymityReport(
-        table(s, dir, "documents"), Seq("lang", "source"), k = 12L)),
-
-    // Extension: EXACT per-key quantiles with NO per-key value buffers —
-    // within-key rank + key count from one key-partitioned window, ≤2
-    // bracketing rows kept per (key, q), type-7 interpolation. O(1)
-    // memory per key at any per-key cardinality (vs percentile()'s
-    // full-value aggregation buffer).
-    "events_grouped_quantiles" -> ((s, dir) =>
-      graft.ops.EventOps.groupedQuantiles(events(s, dir), "event_type", "value",
-        Seq(0.5, 0.95))),
-
-    // Extension: EXACT global quantiles by two-pass rank selection —
-    // range-partitioned ranking plus a ≤2-rows-per-quantile filter and
-    // interpolation; nothing holds a value set, no single-partition
-    // window (the "exact p99 over 100 TB" shape, vs quantileProfile's
-    // per-key value buffers).
-    // Extension: DDSketch relative-error quantiles — logarithmic buckets
-    // (γ = 1.02/0.98 ≈ 2% relative error) make the state constant
-    // (log_γ(range) buckets per key) and the error scale WITH the value,
-    // the property latency/size monitoring needs across orders of
-    // magnitude. One (key, bucket) groupBy + a per-key fold over the
-    // sorted bucket array — never a per-key value sort.
-    "events_ddsketch" -> ((s, dir) =>
-      graft.ops.EventOps.ddsketchQuantiles(events(s, dir), "event_type",
-        "value", alpha = 0.02, qs = Seq(0.5, 0.9, 0.99))),
-
-    "events_global_quantiles" -> ((s, dir) =>
-      graft.ops.EventOps.globalQuantiles(events(s, dir), "value",
-        Seq(0.1, 0.5, 0.9, 0.99))),
-
-    // Extension: incremental dedup — a simulated daily batch (every 10th
-    // document) screened for near-dups against the standing corpus. Band
-    // keys join across the two sets; nothing self-joins.
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.ops.Dedup.minhashNearDupsAgainst(
-        spread(s, docs.filter(col("doc_id") % 10 === 0)),
-        spread(s, docs.filter(col("doc_id") % 10 =!= 0)),
-        "doc_id", "text")
-    }),
-
-    // Extension: stratified deterministic sampling — down-sample the
-    // dominant language (en: 10%) while keeping 40% of the rest; same md5
-    // bucket family as docs_hash_sample, so samples are stable and nested.
-    "docs_stratified_sample" -> ((s, dir) =>
-      graft.ops.Corpus.stratifiedHashSample(
-        table(s, dir, "documents").select("doc_id", "lang", "source"),
-        "doc_id", "lang", Map("en" -> 0.1), defaultRate = 0.4)),
-
-    // Extension: fixed-COUNT per-stratum sample (exactly 25 docs per
-    // language by hash order) — the count-quota complement of the
-    // rate-based sampler; rank is a WindowGroupLimit (map-side top-k).
-    "docs_fixed_sample" -> ((s, dir) =>
-      graft.ops.Corpus.fixedStratifiedSample(
-        table(s, dir, "documents").select("doc_id", "lang"),
-        "doc_id", "lang", k = 25)),
-
-    // Extension: CCNet-style perplexity bucketing — unigram-LM scores cut
-    // at exact terciles, each doc labeled head/middle/tail; the cuts are a
-    // 1-row broadcast, the labels a scan-side comparison.
-    "docs_ppl_buckets" -> ((s, dir) =>
-      graft.ops.Corpus.pplBuckets(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: int8 embedding quantization profile — per-vector scale,
-    // quantized min/max/checksum and worst reconstruction error, all in
-    // one codegen'd projection (the 4x-compression storage path for ANN).
-    "sim_quantize_int8" -> ((s, dir) =>
-      graft.ops.Similarity.quantizeInt8Profile(
-        table(s, dir, "embeddings"), "vec_id", "embedding")),
-
-    // Extension: salted equi-join — event_type has 5 values over the whole
-    // table (maximal skew: a plain shuffle join puts ~n/5 rows in one
-    // task). The salt spreads each key over 8 reducers; the result is
-    // row-identical to the plain join, which is exactly what the oracle
-    // checks.
-    "events_skew_join_enrich" -> ((s, dir) => {
-      val e = events(s, dir)
-      val dim = e.groupBy("event_type").agg(
-        round(sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double") / count(lit(1)), 6).as("type_avg"))
-      graft.ops.Skew.saltedEquiJoin(
-        e.select(col("event_id"), col("event_type")), dim,
-        Seq("event_type"), "event_id", salts = 8)
-    }),
-
-    // Extension: corpus-unigram LM scoring (add-one smoothing) — the cheap
-    // gibberish/outlier quality signal; DECIMAL-routed sums keep the mean
-    // log-prob independent of partial-aggregation order.
-    "text_unigram_logprob" -> ((s, dir) =>
-      graft.ops.Corpus.unigramLogProb(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: Zipf rank-frequency fit — least-squares slope/intercept
-    // of ln(freq) vs ln(rank) over the top-100 tokens, the corpus-health
-    // check for templated/synthetic text (natural text ≈ slope −1). The
-    // top-k cut is TakeOrderedAndProject; the regression runs over k rows.
-    "text_zipf" -> ((s, dir) =>
-      graft.ops.Corpus.zipfFit(table(s, dir, "documents"), "text", 100)),
-
-    // Extension: fixed-width value histogram per type (10-unit bins,
-    // overflow clamped into the last bin) — the constant-memory
-    // distribution profile.
-    "events_histogram" -> ((s, dir) =>
-      graft.ops.EventOps.fixedHistogram(events(s, dir), "event_type", "value",
-        binWidth = 10.0, nBins = 10)),
-
-    // Extension: schema-wide one-pass profile — null and exact-distinct
-    // counts for every column, unpivoted one-row-per-column. (`ts` is
-    // excluded: Spark reads the nano parquet column at micros, so its
-    // distinct count is not engine-comparable.)
-    "events_schema_profile" -> ((s, dir) =>
-      graft.ops.EventOps.schemaProfile(events(s, dir),
-        Seq("event_id", "user_id", "event_type", "value", "props"))),
-
-    // Extension: the COMPOSED corpus-cleaning pipeline (quality gate →
-    // exact dedup → MinHash near-dup clustering → stratified sample) —
-    // the end-to-end integration of the ops above, oracle-checked as one
-    // unit so stage wiring bugs can't hide between per-op checks.
-    "docs_clean_pipeline" -> ((s, dir) =>
-      graft.ops.Corpus.cleanPipeline(
-        spread(s, table(s, dir, "documents")), "doc_id", "text", "lang",
-        minTokens = 40, rates = Map("en" -> 0.5), defaultRate = 1.0)),
-
-    // Extension: Gopher-style repetition signals (top token/bigram
-    // fractions, duplicate-trigram fraction) — the structural-quality
-    // gates a corpus build runs before any model-based filtering.
-    "text_repetition" -> ((s, dir) =>
-      graft.ops.Corpus.repetitionSignals(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: concat-then-chunk sequence packing — documents hash into
-    // independent bucket streams, order deterministically within each, and
-    // land in the fixed 512-token training sequence containing their first
-    // token (per-bucket window cumsum; no global sort).
-    "docs_pack_seqs" -> ((s, dir) =>
-      graft.ops.Packing.packSequences(
-        spread(s, table(s, dir, "documents")), "doc_id", "text",
-        budget = 512, buckets = 32)),
-
-    // Extension: min-timestamp funnel over the event stream — per-stage
-    // user counts under first-touch strict time ordering; per-user state in
-    // the aggregate is |stages| timestamps, never the event list.
-    "events_funnel" -> ((s, dir) =>
-      graft.ops.EventOps.funnel(events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
-
-    // Extension: ROW-PATTERN RECOGNITION (MATCH_RECOGNIZE-lite) — count
-    // per user the strict funnel runs `view+ click+ purchase` over the
-    // time-ordered event sequence: the SQL:2016 / Flink-CEP operator
-    // Spark lacks natively, expressed as one per-user string fold plus a
-    // codegen'd regex — leftmost non-overlapping matches, exactly
-    // AFTER MATCH SKIP PAST LAST ROW semantics.
-    "events_pattern_match" -> ((s, dir) =>
-      graft.ops.EventOps.sequencePattern(events(s, dir), "user_id",
-        "event_type", "ts", "event_id",
-        Seq("view" -> "v", "click" -> "c", "purchase" -> "p",
-          "signup" -> "s", "error" -> "e"),
-        pattern = "v+c+p")),
-
-    // Extension: time-boxed funnel — conversions credited only within
-    // 7 days of the user's first stage-0 event (the "converted within N
-    // days" readout; unbounded funnels credit year-late conversions).
-    "events_funnel_window" -> ((s, dir) =>
-      graft.ops.EventOps.funnelWindowed(events(s, dir), "user_id",
-        "event_type", "ts", Seq("view", "click", "purchase"),
-        7L * 24 * 3600 * 1000)),
-
-    // Extension: kNN hubness report — top in-degree nodes of the ANN
-    // graph with their mutual-edge counts (the embedding-space pathology
-    // check before trusting kNN retrieval).
-    "sim_hubness" -> ((s, dir) =>
-      graft.ops.Similarity.hubnessReport(
-        spread(s, table(s, dir, "embeddings")), "vec_id", "embedding",
-        dim = 64, planes = 8, bands = 2, k = 5)),
-
-    // Extension: overlapping token-window chunking (RAG/embedding prep) —
-    // 32-token windows advancing by 16 (50% overlap), fingerprint per
-    // chunk; pure scan-side generator, no shuffle.
-    "docs_chunk" -> ((s, dir) =>
-      graft.ops.Packing.chunkTokens(
-        table(s, dir, "documents"), "doc_id", "text", window = 32, stride = 16)),
-
-    // Extension: embedding-dedup clustering — banded sign-LSH near-dup
-    // pairs at cosine >= 0.9 feed connected components, one keeper per
-    // cluster (the embedding-space twin of dedup_cluster_cc; candidate
-    // generation is bucket equi-joins, labels propagate one shuffle/round).
-    "sim_cluster_cc" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val pairs = graft.ops.Similarity.lshCosineNearDupPairs(
-        spread(s, emb), "vec_id", "embedding",
-        dim = 64, planes = 8, bands = 2, threshold = 0.9)
-      graft.ops.Components.dedupClusters(emb, "vec_id", pairs, "a_id", "b_id")
-    }),
-
-    // Extension: range-sorted parquet layout — repartitionByRange +
-    // sortWithinPartitions write, so every file covers a DISJOINT doc_id
-    // range (row-group min/max file skipping: the high-cardinality
-    // complement to directory partitioning). The query reads the layout
-    // back and proves per-file ranges are disjoint and complete. The
-    // single-partition window is over one row per FILE (4 rows), not data.
-    "docs_range_layout" -> ((s, dir) => {
-      val out = scratch("range")
-      graft.ops.Bucketing.writeRangeSorted(
-        table(s, dir, "documents"), out, "doc_id", numFiles = 4)
-      val perFile = s.read.parquet(out)
-        .select(col("doc_id"), input_file_name().as("f"))
-        .groupBy("f")
-        .agg(min("doc_id").as("lo"), max("doc_id").as("hi"), count(lit(1)).as("n"))
-      val w = org.apache.spark.sql.expressions.Window.orderBy("lo")
-      perFile
-        .select(col("n"), (col("lo") > lag(col("hi"), 1, -1L).over(w)).as("ok"))
-        .agg(count(lit(1)).as("n_files"), sum(col("n")).as("n_docs"),
-          min(col("ok")).as("all_disjoint"))
-    }),
-
-    // Extension: deterministic train/val/test split assignment — stable
-    // md5-bucket ranges (80/10/10); documents never migrate between splits
-    // across runs or incremental re-runs.
-    "docs_split_assign" -> ((s, dir) =>
-      graft.ops.Corpus.splitAssign(
-        table(s, dir, "documents").select("doc_id", "lang"),
-        "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))),
-
-    // Extension: stratified k-fold cross-validation manifest — fold =
-    // stable md5 bucket mod 5 (rows never migrate across runs); per
-    // (lang, fold) the held-out size and its leave-one-out train
-    // complement. Uniform within each stratum by construction.
-    "docs_kfold_assign" -> ((s, dir) =>
-      graft.ops.Corpus.kFoldAssign(
-        table(s, dir, "documents").select("doc_id", "lang"),
-        "doc_id", "lang", k = 5)),
-
-    // Extension: dedup-aware split — near-dup clusters (MinHash pairs →
-    // connected components) are split as UNITS by hashing the cluster id,
-    // so a test document can never have a near-copy in train (the
-    // dedup-then-split eval-contamination rule). Singletons split exactly
-    // as docs_split_assign.
-    "docs_leakage_split" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val pairs = graft.ops.Dedup
-        .minhashNearDupPairs(spread(s, docs), "doc_id", "text")
-        .filter(col("is_dup"))
-      graft.ops.Corpus.leakageSafeSplit(docs.select("doc_id"), "doc_id",
-        pairs, "a_id", "b_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-    }),
-
-    // Extension: heavy hitters via the Misra-Gries sketch
-    // (DataFrameStatFunctions.freqItems — constant memory, one pass; the
-    // third sketch family next to HLL cardinality and GK quantiles).
-    // Sketch contents are engine-specific, so the oracle gates the sketch
-    // CONTRACT instead: every token above the exact support threshold must
-    // be captured (emitted as a literal-true `in_sketch`).
-    "text_heavy_hitters" -> ((s, dir) => {
-      val toks = table(s, dir, "documents")
-        .select(explode(graft.ops.TextFunctions.tokens(col("text"))).as("token"))
-      val counts = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
-      val total = counts.agg(sum(col("cnt")).as("total"))
-      val sketch = toks.stat.freqItems(Seq("token"), 0.01)
-      counts.crossJoin(broadcast(total))
-        .filter(col("cnt") > col("total") * 0.034)
-        .crossJoin(broadcast(sketch))
-        .select(col("token"), col("cnt"),
-          array_contains(col("token_freqItems"), col("token")).as("in_sketch"))
-    }),
-
-    // Extension: BPE merge induction — the first 12 byte-pair merges
-    // learned from the corpus (one corpus aggregate, then vocab-sized
-    // rounds; the merge table is the tokenizer artifact).
-    // Extension: hashing-trick document embeddings — fixed-16-dim signed
-    // bag-of-words with ZERO vocabulary state (feature hashing); integer
-    // components, bit-reproducible norm. One doc-key shuffle with a fixed
-    // agg width.
-    "text_hash_embed" -> ((s, dir) =>
-      graft.ops.Corpus.hashedBowEmbed(
-        table(s, dir, "documents"), "doc_id", "text", dim = 16)),
-
-    // Extension: BPE vocabulary drift — the first 12 merges trained
-    // independently on the two corpus halves, aligned round by round;
-    // the diff reviewed before shipping a retrained tokenizer.
-    // The five text_bpe_* queries share the committed tokenizer registry
-    // (loadBpeMerges) since r14: induction runs once per (corpus
-    // version, slice) and every query pays application only. Oracles
-    // still replay the induction in full — committed merges are
-    // value-identical to inline training.
-    "text_bpe_drift" -> ((s, dir) =>
-      graft.ops.Corpus.bpeVocabDriftWith(s,
-        loadBpeMerges(s, dir, "even", col("doc_id") % 2 === 0),
-        loadBpeMerges(s, dir, "odd", col("doc_id") % 2 === 1))),
-
-    "text_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      loadBpeMerges(s, dir, "full", lit(true))
-        .toDF("merge_idx", "left_sym", "right_sym", "pair_count")
-    }),
-
-    // Extension: BPE segmentation — per-doc token counts under the
-    // LEARNED merges; the rewrite chain runs once per distinct vocab
-    // word and documents join the segmented vocab (broadcast), never
-    // re-segmenting occurrences.
-    "text_bpe_segment" -> ((s, dir) =>
-      graft.ops.Corpus.bpeSegmentWith(
-        spread(s, table(s, dir, "documents")), "doc_id", "text",
-        loadBpeMerges(s, dir, "full", lit(true)))),
-
-    // Extension: the learned VOCABULARY with corpus frequencies — the
-    // second shipped tokenizer artifact next to the merge table (what
-    // token-budget planning, OOV analysis and embedding-table sizing
-    // actually read).
-    "text_bpe_vocab" -> ((s, dir) =>
-      graft.ops.Corpus.bpeVocabularyWith(
-        spread(s, table(s, dir, "documents")), "text",
-        loadBpeMerges(s, dir, "full", lit(true)))),
-
-    // Extension: SHIPPED-TOKENIZER segmentation — train the merge table
-    // on the even-doc_id half only, then segment the WHOLE corpus with
-    // the shipped table (bpeSegmentWith: no retraining) — the production
-    // shape, and the governance-relevant one: token budgets for new data
-    // are only comparable when counted under the frozen production
-    // tokenizer, not one retrained per batch.
-    "text_bpe_apply" -> ((s, dir) => {
-      val docs = spread(s, table(s, dir, "documents"))
-      val merges = loadBpeMerges(s, dir, "even", col("doc_id") % 2 === 0)
-      graft.ops.Corpus.bpeSegmentWith(docs, "doc_id", "text", merges)
-    }),
-
-    // Extension: content-defined chunk dedup — shift-resistant
-    // sub-document dup fractions (CDC boundaries where the 4-gram hash
-    // ≡ 0 mod 16, so early insertions don't move later chunk
-    // fingerprints the way they move every fixed-span gram).
-    "text_cdc_dups" -> ((s, dir) =>
-      graft.ops.Corpus.cdcChunkDups(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: winnowing fingerprints (MOSS local fingerprinting) —
-    // rightmost-minimum selection over a w=4 window of 3-gram hashes;
-    // position-stable ~2/(w+1)-density sketch with the guaranteed-match
-    // property for overlaps of w+k−1 tokens. Entirely row-local (rolling
-    // min = shifted zip_with fold): one narrow projection, no shuffle.
-    "text_winnowing" -> ((s, dir) =>
-      graft.ops.Corpus.winnowingFingerprints(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: dataset version diff — per-doc added/removed/changed/
-    // unchanged status between the corpus and a derived revision (10%
-    // dropped, every 7th edited, 25 appended); both sides reduce to
-    // (id, fingerprint) before the full-outer join so text never shuffles.
-    "docs_version_diff" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val revised = docs.filter(col("doc_id") % 10 =!= 0)
-        .withColumn("text", when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        .unionByName(docs.filter(col("doc_id") < 25)
-          .withColumn("doc_id", col("doc_id") + 1000000))
-      graft.ops.Corpus.versionDiff(spread(s, docs), revised, "doc_id", "text")
-    }),
-
-    // Extension: top-25 PMI collocations (bigrams whose parts rarely
-    // occur apart) at minCount 5 — exact counts, canonicalized ln.
-    "text_pmi" -> ((s, dir) =>
-      graft.ops.Corpus.pmiCollocations(spread(s, table(s, dir, "documents")), "text")),
-
-    // Extension: model-ready quality blend — z-score-normalized composite
-    // of quality + entropy + span uniqueness with a p90 keep flag; all
-    // normalization constants are 1-row broadcast aggregates (no rank
-    // windows, no global sort).
-    "docs_quality_blend" -> ((s, dir) =>
-      graft.ops.Corpus.qualityBlend(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: linear classifier INFERENCE over hashed bag-of-words —
-    // the fastText-style quality scorer applied at scan speed: weights
-    // are plan literals, scoring is one codegen'd fold per row (no
-    // vocabulary join, no shuffle). Weights here are the deterministic
-    // md5-derived pseudo-model so the oracle re-derives them; a trained
-    // model drops in as the same literal vector.
-    "docs_quality_lr" -> ((s, dir) =>
-      graft.ops.Quality.linearScore(spread(s, table(s, dir, "documents")),
-          "doc_id", "text", graft.ops.Quality.pseudoWeights(64),
-          bias = 0.1, threshold = 0.55)
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("score"), 6).as("score"), col("accept"))),
-
-    // Extension: inference from a SHIPPED model artifact (r11 VERDICT
-    // ask) — the weights round-trip through a manifest-table model
-    // registry as canonical bytes (magic | d | bias | weights, big-
-    // endian) and scoring loads them back from the committed artifact:
-    // the tested model-distribution path (one pointer swap ships or
-    // rolls back a model; readVersion pins what scored what). The
-    // oracle re-derives the identical weights from the same
-    // deterministic derivation, so a parse/serialize drift would
-    // hash-mismatch.
-    "docs_quality_lr_shipped" -> ((s, dir) => {
-      val reg = scratch("model_registry")
-      graft.ops.Quality.commitLinearModel(s, reg, "quality-lr",
-        graft.ops.Quality.pseudoWeights(32), bias = -0.05)
-      graft.ops.Quality.linearScoreFromArtifact(
-          spread(s, table(s, dir, "documents")), "doc_id", "text",
-          reg, "quality-lr", threshold = 0.5)
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("score"), 6).as("score"), col("accept"))
-    }),
-
-    // Extension: MODEL<->CORPUS BINDING (r12 VERDICT ask #5) — registry-
-    // wide governance parity with the persisted indexes: a shipped model
-    // is bound to the corpus snapshot it was trained on (#indexof via
-    // commitIndex, the identical contract sim_ivf_delta's probe gate
-    // enforces), so scoring REFUSES a model trained on a superseded
-    // corpus instead of silently scoring rows it never saw. Lifecycle:
-    // ship bound to v0 -> fresh scoring works -> the corpus grows -> the
-    // gate refuses -> retrain/re-ship bound to the new version in one
-    // pointer move -> scoring serves again. The oracle replays the final
-    // model over the final corpus.
-    "ingest_model_binding" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val Q = graft.ops.Quality
-      val corpusDir = fixDocsText80Copy(s, "mbind_corpus", dir) // private copy: appended below
-      val v0 = M.currentVersion(s, corpusDir)
-      val reg = scratch("mbind_registry")
-      Q.commitModelBytesBound(s, reg, "quality-lr",
-        Q.linearModelBytes(Q.pseudoWeights(16), bias = 0.25), corpusDir, v0)
-      // bound + fresh: scoring the training snapshot is SERVED (the
-      // freshness gate passes and the plan executes end-to-end). The
-      // result of this pass is unused, so only the id column
-      // materializes (r15, the r14-verdict §6-pruning ask): ReadSchema
-      // narrows to doc_id and the full-corpus token scoring is not paid
-      // twice — the second, returned scoring pass is unchanged.
-      Q.linearScoreFromArtifact(M.read(s, corpusDir), "doc_id", "text",
-          reg, "quality-lr", requireFresh = true)
-        .select(col("doc_id")).queryExecution.toRdd.count(): Unit
-      // the corpus grows; the model is now trained on a superseded
-      // snapshot and the gate must refuse...
-      M.append(s, corpusDir, table(s, dir, "documents")
-        .select("doc_id", "text").filter(col("doc_id") % 5 === 0))
-      val staleRefused =
-        try {
-          Q.linearScoreFromArtifact(M.read(s, corpusDir), "doc_id", "text",
-            reg, "quality-lr", requireFresh = true); false
-        } catch { case _: IllegalStateException => true }
-      require(staleRefused, "scoring gate must refuse a corpus-stale model")
-      // ...until the retrained model re-ships bound to the new version
-      Q.commitModelBytesBound(s, reg, "quality-lr",
-        Q.linearModelBytes(Q.pseudoWeights(16), bias = 0.25),
-        corpusDir, M.currentVersion(s, corpusDir))
-      Q.linearScoreFromArtifact(M.read(s, corpusDir), "doc_id", "text",
-          reg, "quality-lr", threshold = 0.5, requireFresh = true)
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("score"), 6).as("score"), col("accept"))
-    }),
-
-    // Extension: skew report — top-10 hottest users with row share and
-    // multiple-of-median (the pre-salting diagnostic).
-    "events_skew_report" -> ((s, dir) =>
-      graft.ops.EventOps.skewReport(events(s, dir), "user_id")),
-
-    // Extension: per-doc token Shannon entropy — the cheap repetitiveness
-    // quality screen (ln values canonicalized through DECIMAL so both
-    // engines agree bit-for-bit).
-    "text_entropy" -> ((s, dir) =>
-      graft.ops.Corpus.tokenEntropy(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: per-source distribution drift — Jensen–Shannon divergence
-    // between each source's token distribution and the rest of the corpus
-    // (bounded at ln 2; DECIMAL-canonicalized ln + DECIMAL-routed sums).
-    "text_js_drift" -> ((s, dir) =>
-      graft.ops.Corpus.jsDivergenceBySource(
-        spread(s, table(s, dir, "documents")), "text", "source")),
-
-    // Extension: burst detection — per-(type, 10 min bucket) counts
-    // against the trailing-6-bucket average (RANGE frame, gap-aware),
-    // flagged at 3x with a cold-start guard.
-    "events_burst" -> ((s, dir) =>
-      graft.ops.EventOps.burstScore(events(s, dir), "event_type", "ts", 600000L)),
-
-    // Extension: Gini concentration of per-user event counts — the
-    // one-number tail-inequality companion to events_skew_report.
-    "events_gini" -> ((s, dir) =>
-      graft.ops.EventOps.giniConcentration(events(s, dir), "user_id")),
-
-    // Extension: per-user behavioral entropy over event types — the
-    // bot/broken-client screen (single-action users score 0).
-    "events_user_entropy" -> ((s, dir) =>
-      graft.ops.EventOps.userTypeEntropy(events(s, dir), "user_id", "event_type")),
-
-    // Extension: inter-arrival cadence regularity — the timing-side bot
-    // screen (metronomic clients have near-zero gap CV).
-    "events_bot_cadence" -> ((s, dir) =>
-      graft.ops.EventOps.interArrivalRegularity(events(s, dir), "user_id", "ts")),
-
-    // Extension: per-type daily-volume trend — least-squares slope over
-    // day indexes re-anchored per type (exact integer moments).
-    "events_type_trend" -> ((s, dir) =>
-      graft.ops.EventOps.typeTrend(events(s, dir), "event_type", "ts")),
-
-    // Extension: one-row corpus session-shape profile (bounce rate, mean
-    // events/session, exact p50/p90 session durations) over sessionize.
-    "events_session_profile" -> ((s, dir) =>
-      graft.ops.EventOps.sessionProfile(events(s, dir), "user_id", "ts",
-        30 * 60 * 1000L)),
-
-    // Extension: per-user feature assembly — the feature-store output
-    // frame: counts, distincts, activity span, DECIMAL-routed value
-    // total, all in ONE groupBy pass (one shuffle on the user key,
-    // map-side partials; the shape a training-feature export runs).
-    "events_user_features" -> ((s, dir) => {
-      val ev = events(s, dir)
-      ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("event_type")).as("n_types"),
-          countDistinct(to_date(col("ts"))).as("active_days"),
-          min(unix_millis(col("ts"))).as("first_ms"),
-          max(unix_millis(col("ts"))).as("last_ms"),
-          round(sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 4).as("total_value"))
-        .withColumn("span_days",
-          expr("(last_ms - first_ms) div 86400000"))
-        .withColumn("events_per_active_day",
-          round(col("n_events").cast("double") / col("active_days"), 6))
-    }),
-
-    // Extension: lag-1 autocorrelation of daily per-type volumes — exact
-    // integer sufficient statistics, deterministic double finish, null r
-    // on zero variance.
-    "events_daily_autocorr" -> ((s, dir) =>
-      graft.ops.EventOps.dailyAutocorr(events(s, dir), "event_type", "ts")),
-
-    // Extension: longest strictly-increasing value streak per user — the
-    // gaps-and-islands analytic; three windows sharing one (user × ts)
-    // sort, islands via the double-row_number difference.
-    "events_value_streaks" -> ((s, dir) =>
-      graft.ops.EventOps.valueStreaks(events(s, dir),
-        "user_id", "ts", "value", "event_id")),
-
-    // Extension: classic star-schema OLAP — fact⋈fact shuffle join on the
-    // natural key, fixed-size dims broadcast, filters pushed to the scans.
-    "star_revenue_by_nation" -> ((s, dir) =>
-      graft.ops.Star.revenueByNation(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), table(s, dir, "nation"),
-        "1996-01-01", "1998-01-01")),
-
-    // Extension: top-k orders by revenue for one segment — the ranking is
-    // a TakeOrderedAndProject over the per-order aggregate.
-    "star_top_orders" -> ((s, dir) =>
-      graft.ops.Star.topOrdersBySegment(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"),
-        "BUILDING", "1997-01-01", "1996-06-30", 10)),
-
-    // Extension: single-fact pricing rollup (Q1 flavor) — one shuffle on
-    // the grouping pair, DECIMAL-routed money sums.
-    "star_pricing_summary" -> ((s, dir) =>
-      graft.ops.Star.pricingSummary(table(s, dir, "lineitem"), "2000-12-01")),
-
-    // Extension: Q5-flavor local-supplier volume — the 6-table join chain
-    // with nation⋈region pre-collapsed into one ≤25-row broadcast.
-    "star_local_supplier" -> ((s, dir) =>
-      graft.ops.Star.localSupplierVolume(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), table(s, dir, "supplier"),
-        table(s, dir, "nation"), table(s, dir, "region"),
-        "ASIA", "1996-01-01", "1997-01-01")),
-
-    // Extension: Q14-flavor promo revenue share — conditional-sum ratio
-    // over the lineitem⋈part shuffle join, one scalar row out.
-    "star_promo_share" -> ((s, dir) =>
-      graft.ops.Star.promoRevenueShare(
-        table(s, dir, "lineitem"), table(s, dir, "part"),
-        "PROMO", "1997-09-01", "1997-10-01")),
-
-    // Extension: Q15-flavor top supplier — two-phase max (per-supplier agg,
-    // 1-row max broadcast back), ties surface like `= (SELECT max …)`.
-    "star_top_supplier" -> ((s, dir) =>
-      graft.ops.Star.topSupplier(
-        table(s, dir, "lineitem"), table(s, dir, "supplier"),
-        "1996-01-01", "1996-04-01")),
-
-    // Extension: Q9-flavor product-line profit by supplier nation and
-    // order year (unit cost modeled as 60% of retail price — no partsupp
-    // in this schema). Name filter pushed to the part scan, nation
-    // broadcast, profit folded in DECIMAL before the one rollup shuffle.
-    "star_profit_by_nation" -> ((s, dir) =>
-      graft.ops.Star.profitByNation(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "supplier"), table(s, dir, "part"),
-        table(s, dir, "nation"), "an")),
-
-    // Extension: Q18-flavor large-volume orders — per-order quantity
-    // rollup on the fact's own key, HAVING cut before any join, top-k
-    // as a TakeOrderedAndProject.
-    "star_large_orders" -> ((s, dir) =>
-      graft.ops.Star.largeOrderCustomers(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), minQty = 200.0, k = 20)),
-
-    // Extension: Q21-flavor lone late suppliers — the exists/not-exists
-    // pair collapsed into ONE per-order aggregate (distinct suppliers vs
-    // distinct LATE suppliers), so the census is two hash aggregates and
-    // an equi-join instead of correlated subqueries.
-    "star_lone_late_supplier" -> ((s, dir) =>
-      graft.ops.Star.loneLateSuppliers(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "supplier"), lateDays = 90, k = 10)),
-
-    // Extension: l-diversity census — k-anonymity's complement: a large
-    // quasi-group still leaks if every member shares one sensitive
-    // value; groups need >= l DISTINCT sensitive values. One group-by
-    // (a row per group through the shuffle) + a one-row summary.
-    "docs_l_diversity" -> ((s, dir) =>
-      graft.ops.Quality.lDiversityReport(
-        table(s, dir, "documents")
-          .withColumn("band", floor(col("n_chars") / 128).cast("long")),
-        Seq("lang", "band"), "source", l = 3L)),
-
-    // Extension: PSI feature-drift monitor between two corpus versions —
-    // per-language fixed-width bins of n_chars, add-1-smoothed shares,
-    // Σ (p−q)·ln(p/q); the alarm a pipeline fires before a model
-    // silently degrades (<0.1 stable, >0.25 shifted).
-    "docs_psi_drift" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      graft.ops.Quality.psiDrift(
-        docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 5 =!= 0),
-        "lang", "n_chars", binWidth = 64.0, nBins = 10)
-    }),
-
-    // Extension: WARC ingestion (the CommonCrawl format) — documents
-    // serialize to real WARC/1.0 files (one per partition), read back by
-    // Content-Length framing; the md5 roundtrip proves byte fidelity.
-    "ingest_warc" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("warc")
-      table(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          if (it.hasNext) {
-            val bytes = graft.sources.Ingest.toWarc(it)
-            graft.sources.Ingest.writeBytes(f"$out/part-$i%05d.warc", bytes)
-            Iterator.single(1)
-          } else Iterator.empty
-        }.count(): Unit
-      graft.sources.Ingest.readWarc(s, out)
-        .select(col("doc_id"), col("content_length"),
-          md5(col("payload")).as("payload_md5"), col("target_uri"))
-    }),
-
-    // Extension: gzip WARC ingestion — each partition's records gzip as
-    // CONCATENATED per-record members (the CommonCrawl .warc.gz layout);
-    // the reader decompresses the multi-member stream transparently.
-    "ingest_warc_gz" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("warc_gz")
-      table(s, dir, "documents").select(col("doc_id"), col("text"))
-        .as[(Long, String)].rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          if (it.hasNext) {
-            val members = it.map(r =>
-              graft.sources.Ingest.gzip(
-                graft.sources.Ingest.toWarc(Iterator(r)))).toArray
-            val bos = new java.io.ByteArrayOutputStream()
-            members.foreach(bos.write)
-            graft.sources.Ingest.writeBytes(f"$out/part-$i%05d.warc.gz",
-              bos.toByteArray)
-            Iterator.single(1)
-          } else Iterator.empty
-        }.count(): Unit
-      graft.sources.Ingest.readWarc(s, out, gz = true)
-        .agg(count(lit(1)).as("n_records"),
-          sum(col("content_length")).as("total_bytes"),
-          countDistinct(md5(col("payload"))).as("n_distinct_payloads"))
-    }),
-
-    // Extension: atomic manifest-table commits — the documents table goes
-    // through the full ManifestTable protocol (commit a 8-file snapshot,
-    // overwrite-commit a filtered second snapshot, pointer-swap compact,
-    // vacuum the superseded generations) and reads back EXACTLY the
-    // second snapshot via the manifest's file list — never a directory
-    // listing, so the dead first-generation files sharing the directory
-    // are invisible. The oracle recomputes the same aggregate from the
-    // filtered source rows.
-    "ingest_manifest_commit" -> ((s, dir) => {
-      val out = scratch("manifest_tbl")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs.repartition(8))
-      graft.sources.ManifestTable.commit(s, out,
-        graft.sources.ManifestTable.read(s, out).filter(col("doc_id") % 3 =!= 0))
-      graft.sources.ManifestTable.compact(s, out, targetFiles = 2)
-      graft.sources.ManifestTable.vacuum(s, out): Unit
-      graft.sources.ManifestTable.read(s, out)
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: declarative data-quality gate — row-local rules
-    // (not-null, range, accepted) compile into ONE aggregate over ONE
-    // scan; uniqueness is one key count; referential integrity is one
-    // broadcast anti-join. The report is the per-rule violation census a
-    // landing pipeline gates on.
-    "ingest_constraint_report" -> ((s, dir) => {
-      import graft.ops.Quality._
-      constraintReport(table(s, dir, "orders"), Seq(
-        NotNull("o_custkey"),
-        InRange("o_totalprice", 1000.0, 300000.0),
-        Accepted("o_orderstatus", Seq("O", "F")),
-        Unique(Seq("o_orderkey")),
-        Unique(Seq("o_custkey", "o_orderdate")),
-        ForeignKey("o_custkey", "customer", table(s, dir, "customer"), "c_custkey")))
-    }),
-
-    // Extension: manifest-table APPEND commits — two incremental batches
-    // land as append transactions (each moves only its batch's files; the
-    // pointer swap is the only reader-visible mutation), and the final
-    // read is exactly their union.
-    "ingest_manifest_append" -> ((s, dir) => {
-      val out = scratch("manifest_app")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs.filter(col("doc_id") % 3 === 0))
-      graft.sources.ManifestTable.append(s, out, docs.filter(col("doc_id") % 3 === 1))
-      graft.sources.ManifestTable.read(s, out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: manifest-table PARTITION-SCOPED overwrite (the
-    // replaceWhere shape) — the second commit rewrites ONLY the 'en'
-    // partition (halved), every other language's files carry forward by
-    // reference, and the read resolves the mixed-generation file list.
-    "ingest_manifest_replace" -> ((s, dir) => {
-      val out = scratch("manifest_rep")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      graft.sources.ManifestTable.replacePartitions(s, out, docs, "lang")
-      graft.sources.ManifestTable.replacePartitions(s, out,
-        docs.filter(col("lang") === "en" && col("doc_id") % 2 === 0), "lang")
-      graft.sources.ManifestTable.readPartitioned(s, out)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: END-TO-END LANDING PIPELINE — the composed path a batch
-    // actually takes into a governed corpus: (1) the constraint gate must
-    // pass (uniqueness + ranges; a failing batch would never land),
-    // (2) exact dedup keeps the best copy per fingerprint, (3) survivors
-    // land as TWO manifest append transactions, (4) the summary reads the
-    // committed table — every subsystem touches the same bytes.
-    "docs_landing_pipeline" -> ((s, dir) => {
-      val out = scratch("landing")
-      val docs = table(s, dir, "documents")
-      require(graft.ops.Quality.passes(docs, Seq(
-        graft.ops.Quality.NotNull("doc_id"),
-        graft.ops.Quality.Unique(Seq("doc_id")),
-        graft.ops.Quality.InRange("n_chars", 1, 1000000))),
-        "landing gate failed — batch must not land")
-      val keep = graft.ops.Dedup
-        .exactDedupBest(docs, "doc_id", "text", "n_chars")
-        .select(col("keep_id").as("doc_id"))
-      val landed = docs.join(keep, "doc_id")
-        .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out,
-        landed.filter(col("doc_id") % 2 === 0))
-      graft.sources.ManifestTable.append(s, out,
-        landed.filter(col("doc_id") % 2 === 1))
-      graft.sources.ManifestTable.read(s, out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: manifest-table CLUSTERED compaction — the snapshot
-    // rewrites into files with disjoint n_chars ranges (range partition +
-    // local sort, no global sort) committed by pointer swap; scans on the
-    // sort key then skip whole files via parquet min/max stats
-    // (disjointness is plan-proven in ManifestTableSpec; here the oracle
-    // pins the rewrite losing nothing).
-    "ingest_manifest_cluster" -> ((s, dir) => {
-      val out = scratch("manifest_cluster")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs.repartition(8))
-      graft.sources.ManifestTable.compactSorted(s, out, Seq("n_chars"), targetFiles = 4)
-      graft.sources.ManifestTable.vacuum(s, out): Unit
-      graft.sources.ManifestTable.read(s, out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: HASH-BUCKET clustered layout — point lookups on keys
-    // min/max stats can never prune (hash-distributed ids): one
-    // __p=<bucket>/ file group per pmod(xxhash64(key), 16) bucket, the
-    // layout spec riding the manifest #meta so the probe's bucket
-    // function can never drift from the writer's; each point probe
-    // opens 1/16 of the files at any table size (the in-query assert),
-    // the complement of range clustering and z-order.
-    "ingest_manifest_bucket" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val out = scratch("manifest_bucket")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      M.commit(s, out, ev.repartition(8))
-      M.compactBucketed(s, out, "user_id", numBuckets = 16)
-      val (kept, total) = M.pruneByBucket(s, out, 7L)
-      require(kept.size < total,
-        s"bucket prune must skip files: kept ${kept.size} of $total")
-      Seq(7L, 19L, 42L).map(v => M.readWhereEqualsBucketed(s, out, v))
-        .reduce(_ union _)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("id_sum"))
-    }),
-
-    // Extension: Z-ORDER clustered layout — compactZOrder interleaves
-    // two dimensions' bits so a 2D range read keeps the INTERSECTION of
-    // two tight file stripes instead of a full stripe per dimension;
-    // readBetween2D resolves ONE snapshot for both prunes + the
-    // deletion vectors. Content equivalence is the oracle; the
-    // stripe-intersection skipping itself is pinned in
-    // ManifestTableSpec.
-    "ingest_manifest_zorder" -> ((s, dir) => {
-      val out = scratch("manifest_zorder")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      graft.sources.ManifestTable.commit(s, out, ev.repartition(8))
-      graft.sources.ManifestTable.compactZOrder(
-        s, out, "event_id", "user_id", bits = 12, targetFiles = 8)
-      graft.sources.ManifestTable.vacuum(s, out): Unit
-      graft.sources.ManifestTable.readBetween2D(s, out,
-          "event_id", 100.0, 2000.0, "user_id", 10.0, 80.0)
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("event_id")).as("id_sum"),
-          round(sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("value_sum"))
-    }),
-
-    // Extension: n-DIMENSIONAL Z-ORDER (r11 VERDICT ask) — compactZOrderN
-    // interleaves THREE dimensions' bits (n·i + j positions, n·bits ≤ 63)
-    // so a 3-sided range read keeps the intersection of three tight file
-    // stripes; readBetweenNd folds the per-column stats prunes over one
-    // snapshot resolution. Content equivalence is the oracle; the
-    // 3-way stripe-intersection census is pinned in ManifestTableSpec.
-    "ingest_manifest_zorder3" -> ((s, dir) => {
-      val out = scratch("manifest_zorder3")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      graft.sources.ManifestTable.commit(s, out, ev.repartition(8))
-      graft.sources.ManifestTable.compactZOrderN(
-        s, out, Seq("event_id", "user_id", "value"), bits = 12, targetFiles = 8)
-      graft.sources.ManifestTable.vacuum(s, out): Unit
-      graft.sources.ManifestTable.readBetweenNd(s, out, Seq(
-          ("event_id", 100.0, 3000.0), ("user_id", 10.0, 80.0),
-          ("value", 5.0, 400.0)))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("event_id")).as("id_sum"),
-          round(sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("value_sum"))
-    }),
-
-    // Extension: manifest-table IN-LIST read — the batched point-lookup:
-    // ONE pointer resolution and one stats-pruned scan answer the whole
-    // value list (readWhereIn), where a per-value readBetween loop would
-    // resolve CURRENT n times, each a window for a commit to slip
-    // between probes. On the user_id-clustered layout the prune opens
-    // only the files whose [min, max] can hold a requested id.
-    "ingest_manifest_inlist" -> ((s, dir) => {
-      val out = scratch("manifest_inlist")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      graft.sources.ManifestTable.commit(s, out, ev.repartition(8))
-      graft.sources.ManifestTable.compactSorted(s, out, Seq("user_id"), targetFiles = 8)
-      graft.sources.ManifestTable.readWhereIn(s, out, "user_id",
-          Seq(7L, 19L, 23L, 42L, 77L))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("event_id")).as("id_sum"),
-          round(sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("value_sum"))
-    }),
-
-    // Extension: WRITE-AUDIT-PUBLISH branch lifecycle on the CAS-backed
-    // branch pointer: land a batch on a branch (zero-copy — two small
-    // pointer files), audit it with a real read while main's readers
-    // still see the old snapshot, then publish with ONE atomic CURRENT
-    // swap. Each phase's frame pins its snapshot at construction (the
-    // file list resolves eagerly), so the three reads coexist in one
-    // result no matter when the swap lands.
-    "ingest_manifest_branch" -> ((s, dir) => {
-      val out = scratch("manifest_branch")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs.filter(col("doc_id") % 2 === 0))
-      graft.sources.ManifestTable.createBranch(s, out, "wap")
-      graft.sources.ManifestTable.appendToBranch(
-        s, out, "wap", docs.filter(col("doc_id") % 2 === 1))
-      def profile(df: DataFrame, phase: String): DataFrame =
-        df.agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-            sum(col("n_chars")).as("chars_sum"))
-          .select(lit(phase).as("phase"), col("n_docs"), col("id_sum"),
-            col("chars_sum"))
-      val mainBefore = profile(graft.sources.ManifestTable.read(s, out), "main_before")
-      val audit = profile(
-        graft.sources.ManifestTable.readBranch(s, out, "wap"), "branch_audit")
-      graft.sources.ManifestTable.fastForward(s, out, "wap")
-      graft.sources.ManifestTable.dropBranch(s, out, "wap")
-      val mainAfter = profile(graft.sources.ManifestTable.read(s, out), "main_after")
-      mainBefore.union(audit).union(mainAfter)
-    }),
-
-    // Extension: MULTI-TABLE TRANSACTION via a catalog pointer — the
-    // cross-table atomicity a plain FileSystem cannot give two CURRENT
-    // swaps: stage appends on TWO tables (orders + per-order lineitem
-    // sums), publish both and pin them in ONE catalog-pointer move; a
-    // later direct append to one table (the canary) moves that table's
-    // CURRENT but not the catalog, so the transaction-scoped join below
-    // sees both members at the same transaction — the in-query assert
-    // proves the canary is visible at CURRENT yet absent here.
-    "ingest_manifest_txn" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val cat = scratch("txn_catalog")
-      val dirA = scratch("txn_orders")
-      val dirB = scratch("txn_lsums")
-      val orders = table(s, dir, "orders").select("o_orderkey", "o_orderstatus")
-      val lsums = table(s, dir, "lineitem")
-        .groupBy(col("l_orderkey")).agg(sum(col("l_quantity")).as("q"))
-      M.commit(s, dirA, stageSpread(s, orders.filter(col("o_orderkey") % 2 === 0)))
-      M.commit(s, dirB, stageSpread(s, lsums.filter(col("l_orderkey") % 2 === 0)))
-      M.commitTxnPins(s, cat, Seq(
-        ("orders", dirA, M.currentVersion(s, dirA)),
-        ("lsums", dirB, M.currentVersion(s, dirB))))
-      val sA = M.stage(s, dirA, orders.filter(col("o_orderkey") % 2 =!= 0),
-        M.currentFiles(s, dirA))
-      val sB = M.stage(s, dirB, lsums.filter(col("l_orderkey") % 2 =!= 0),
-        M.currentFiles(s, dirB))
-      M.commitTxn(s, cat, Seq(("orders", dirA, sA), ("lsums", dirB, sB)))
-      M.append(s, dirA, orders.limit(100)) // canary: CURRENT-only rows
-      val a = M.readTxn(s, cat, "orders")
-      val b = M.readTxn(s, cat, "lsums")
-      require(M.read(s, dirA).count() == a.count() + 100,
-        "canary append must be visible at CURRENT only, not in the txn view")
-      a.join(b, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"), sum(col("q")).as("sum_qty"))
-    }),
-
-    // Extension: TIMESTAMP AS OF time travel — versions resolve by
-    // commit wall-clock (manifest mtimes, Delta's provenance) instead of
-    // sequence number: a probe at v0's own commit time reads exactly v0
-    // even after later commits. The inter-commit sleep pins the mtime
-    // order on second-granularity filesystems.
-    "ingest_manifest_asof" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val out = scratch("manifest_asof")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val v0commit = M.commit(s, out, docs.filter(col("doc_id") % 2 === 0))
-      // pin the inter-commit mtime order EXPLICITLY instead of sleeping
-      // past a second-granularity filesystem tick (r14 optimization
-      // round: the 1.1 s sleep ran in every timed pass): backdating v0's
-      // manifest by 5 s is the same wall-clock spread the sleep
-      // manufactured, deterministic on any mtime granularity
-      java.nio.file.Files.setLastModifiedTime(
-        new java.io.File(new java.io.File(out, "_manifests"),
-          v0commit.manifestName).toPath,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 5000L))
-      M.commit(s, out, docs)
-      val t0 = M.commitTimes(s, out).head._2
-      require(M.versionAsOf(s, out, t0) == 0L,
-        "v0's own commit time must resolve to v0")
-      require(M.versionAsOf(s, out, Long.MaxValue) ==
-        M.currentVersion(s, out), "the far future must resolve to CURRENT")
-      M.readAsOf(s, out, t0)
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: MERGE-ON-READ row UPDATE — the update twin of the DV
-    // delete: matching rows' positions land in a deletion vector AND
-    // their updated copies land as new data files in ONE pointer swap;
-    // no candidate file is rewritten (the copy-on-write alternative
-    // would rewrite them all), and every row reads back in exactly one
-    // version. Candidates are stats-bounded on the range-clustered
-    // layout; the in-query asserts prove the original files survived
-    // on disk and exactly one sidecar landed.
-    "ingest_manifest_update" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val out = scratch("manifest_update")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      M.commit(s, out, ev.repartition(8))
-      M.compactSorted(s, out, Seq("user_id"), targetFiles = 8)
-      val before = M.currentFiles(s, out)
-      M.updateVectorWhere(s, out, "user_id", 10.0, 19.0,
-        Map("value" -> (col("value") * 2)))
-      val after = M.currentFiles(s, out)
-      require(before.toSet.subsetOf(after.toSet) && after.size > before.size,
-        "MOR update must add files, never rewrite existing ones")
-      require(M.currentDeleteVectors(s, out).size == 1,
-        "exactly one deletion-vector sidecar must land")
-      M.read(s, out)
-        .withColumn("updated", col("user_id").between(10, 19))
-        .groupBy(col("updated"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("id_sum"),
-          round(sum(col("value")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("value_sum"))
-    }),
-
-    // Extension: manifest-table VACUUM — retention in one transaction:
-    // after a compaction, the superseded generation's data files and
-    // manifests are unreferenced; vacuum sweeps exactly them (the
-    // pre-compaction repartition(8) files plus the old manifest's
-    // sidecar-free history), live content is bit-identical, and
-    // time-travel to the collapsed version now fails CLEANLY instead of
-    // dangling — all asserted in the result row.
-    "ingest_manifest_vacuum" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val out = scratch("manifest_vac")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      M.commit(s, out, docs.repartition(8))
-      M.compact(s, out, targetFiles = 2)
-      val swept = M.vacuum(s, out)
-      val ttPruned =
-        try { M.readVersion(s, out, 0L); false }
-        catch { case _: Exception => true }
-      M.read(s, out)
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-        .select(col("n_docs"), col("id_sum"), col("chars_sum"),
-          lit(swept).as("n_swept"), lit(ttPruned).as("tt_pruned"))
-    }),
-
-    // Extension: manifest-table INCREMENTAL READ — the consume side of
-    // append: a downstream job remembers its last version and reads
-    // ONLY the files newer manifests added (O(batch) per poll); the base
-    // snapshot's rows never re-read.
-    "ingest_manifest_changes" -> ((s, dir) => {
-      val out = scratch("manifest_chg")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs.filter(col("doc_id") % 3 === 0))
-      graft.sources.ManifestTable.append(s, out, docs.filter(col("doc_id") % 3 === 1))
-      graft.sources.ManifestTable.append(s, out, docs.filter(col("doc_id") % 3 === 2))
-      graft.sources.ManifestTable.readChangesSince(s, out, fromVersion = 0L)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-    }),
-
-    // Extension: manifest-table TIME TRAVEL — manifests are immutable and
-    // data files write-once, so version 0 reads bit-identically after
-    // version 1 replaces it; both snapshots aggregate side by side from
-    // one directory.
-    "ingest_manifest_timetravel" -> ((s, dir) => {
-      val out = scratch("manifest_tt")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs)
-      graft.sources.ManifestTable.commit(s, out, docs.filter(col("doc_id") % 2 === 0))
-      def snap(v: Long) = graft.sources.ManifestTable.readVersion(s, out, v)
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
-          sum(col("n_chars")).as("chars_sum"))
-        .select(lit(v).as("version"), col("n_docs"), col("id_sum"), col("chars_sum"))
-      snap(0L).unionAll(snap(1L))
-    }),
-
-    // Extension: nested-schema flattening (the json_normalize step) —
-    // depth-2 structs flatten to a_b_c scalars in one projection; null
-    // parents propagate null leaves.
-    "ingest_flatten" -> ((s, dir) => {
-      val nested = table(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        when(col("l_quantity") > 45, lit(null)).otherwise(
-          struct(
-            struct(col("l_quantity").as("qty"), col("l_discount").as("disc"))
-              .as("amounts"),
-            col("l_tax").as("tax"))).as("detail"))
-      graft.sources.Ingest.flattenStructs(nested)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("detail_amounts_qty"), col("detail_amounts_disc"),
-          col("detail_tax"))
-    }),
-
-    // Extension: WebDataset shard roundtrip — documents export as ustar
-    // shards (one per partition, entries `<id>.txt` + `<id>.cls` grouped
-    // by sample key — the WebDataset layout), written through the Hadoop
-    // FS seam, read back with checksum-verified extraction, regrouped per
-    // sample; the md5 roundtrip proves byte fidelity.
-    "ingest_webdataset" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("webdataset")
-      table(s, dir, "documents").select(col("doc_id"), col("text"), col("source"))
-        .as[(Long, String, String)].rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          if (it.hasNext) {
-            val utf8 = java.nio.charset.StandardCharsets.UTF_8
-            val entries = it.flatMap { case (id, text, src) => Seq(
-              s"$id.txt" -> text.getBytes(utf8),
-              s"$id.cls" -> src.getBytes(utf8))
-            }.toSeq
-            graft.sources.Ingest.writeBytes(f"$out/shard-$i%05d.tar",
-              graft.ops.Multimodal.toTar(entries))
-            Iterator.single(1)
-          } else Iterator.empty
-        }.count(): Unit
-      graft.sources.Ingest.readWebDataset(s, out)
-        .groupBy(col("sample_key").cast("long").as("doc_id"))
-        .agg(count(lit(1)).as("n_parts"),
-          max(when(col("ext") === "txt", md5(col("payload")))).as("text_md5"),
-          max(when(col("ext") === "txt", length(col("payload"))))
-            .cast("long").as("text_len"),
-          max(when(col("ext") === "cls", col("payload").cast("string"))).as("cls"))
-    }),
-
-    // Extension: per-shard Bloom point-lookup index — the file-skipping
-    // shape: a probe opens only the shards whose constant-size filter MAY
-    // contain the id; present ids always include their true hash shard.
-    "docs_shard_bloom_probe" -> ((s, dir) =>
-      graft.ops.Corpus.shardBloomProbe(
-        table(s, dir, "documents"), "doc_id",
-        probeIds = (0L to 9L) ++ (1000001L to 1000005L),
-        nShards = 8, words = 1024, k = 4)),
-
-    // Extension: manifest data-skipping — per-file column min/max stats
-    // are recorded in the manifest at commit time (footer-derived,
-    // metadata-only) and a range predicate prunes FILES from the
-    // manifest alone, zero footers or data pages opened at plan time.
-    // The fixture appends one zone-clustered file per n_chars band so
-    // the prune decision is content-derivable: the oracle recomputes
-    // (files total, files scanned) from per-band min/max overlap and the
-    // row aggregate from the raw predicate — both engines must agree
-    // that stats-pruned reading loses no rows.
-    "ingest_zonemap_scan" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_zonemap")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("band", floor(col("n_chars") / 512).cast("long"))
-      val bands = docs.select(col("band")).distinct()
-        .as[Long].collect().sorted
-      bands.foreach { b =>
-        graft.sources.ManifestTable.append(s, out,
-          docs.filter(col("band") === b).drop("band").coalesce(1))
-      }
-      val (kept, total) = graft.sources.ManifestTable
-        .pruneByRange(s, out, "n_chars", 600.0, 1500.0)
-      graft.sources.ManifestTable.readBetween(s, out, "n_chars", 600.0, 1500.0)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("chars_sum"),
-          sum(col("doc_id")).as("id_sum"))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(kept.size.toLong).as("n_files_scanned"),
-          col("n_rows"), col("chars_sum"), col("id_sum"))
-    }),
-
-    // Extension: row-level DELETE with a stats-bounded rewrite — only
-    // files whose manifest stats can contain the range are re-read and
-    // rewritten without matching rows; every other file (and its stats)
-    // carries forward by reference, one pointer swap. On this zone
-    // layout the oracle derives BOTH the rewrite census (overlapping
-    // bands) and the post-delete content.
-    "ingest_manifest_delete" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_delete")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("band",
-          format_string("%05d", floor(col("n_chars") / 512).cast("long")))
-      graft.sources.ManifestTable.appendSlices(
-        s, out, docs, "band", keepSliceCol = false)
-      val (cands, total) = graft.sources.ManifestTable
-        .pruneByRange(s, out, "n_chars", 600.0, 1500.0)
-      graft.sources.ManifestTable.deleteWhere(s, out, "n_chars", 600.0, 1500.0)
-      graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows_after"),
-          sum(col("n_chars")).as("chars_sum_after"))
-        .select(lit(total.toLong).as("n_files_before"),
-          lit(cands.size.toLong).as("n_files_rewritten"),
-          col("n_rows_after"), col("chars_sum_after"))
-    }),
-
-    // Extension: CATEGORICAL DELETE as one stats-bounded transaction —
-    // the per-language GDPR-erasure shape: on a per-language layout the
-    // UTF-8-order string stats make the equality prune perfect
-    // (min = max = the language), so the erasure rewrites EXACTLY the
-    // target language's files and carries every other file by
-    // reference. The oracle derives the same census (one file per
-    // distinct language, rewritten = the target) and the complement
-    // content.
-    "ingest_manifest_delete_cat" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_delete_cat")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val langs = docs.select(col("lang")).distinct().as[String].collect().sorted
-      langs.foreach { l =>
-        graft.sources.ManifestTable.append(s, out,
-          docs.filter(col("lang") === l).coalesce(1))
-      }
-      val (cands, total) = graft.sources.ManifestTable
-        .pruneByEquals(s, out, "lang", "en")
-      graft.sources.ManifestTable.deleteWhereEquals(s, out, "lang", "en")
-      graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows_after"),
-          sum(col("n_chars")).as("chars_sum_after"),
-          countDistinct(col("lang")).as("n_langs_after"))
-        .select(lit(total.toLong).as("n_files_before"),
-          lit(cands.size.toLong).as("n_files_rewritten"),
-          col("n_rows_after"), col("chars_sum_after"), col("n_langs_after"))
-    }),
-
-    // Extension: TABLE CHECK CONSTRAINTS — Delta's CHECK shape on the
-    // manifest protocol: registered constraints carry in the manifest
-    // header, every write transaction validates its INCOMING batch with
-    // one aggregate and refuses violations loudly, so bad data can
-    // never enter the table. The demo registers three checks, lands a
-    // clean batch, is refused a dirty one (null lang + out-of-range),
-    // and proves the table unchanged by the refusal.
-    "ingest_manifest_check" -> ((s, dir) => {
-      val out = scratch("manifest_check")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out,
-        docs.filter(col("doc_id") % 2 === 0))
-      graft.sources.ManifestTable.addCheck(s, out,
-        graft.ops.Quality.NotNull("lang"))
-      graft.sources.ManifestTable.addCheck(s, out,
-        graft.ops.Quality.InRange("n_chars", 0.0, 100000.0))
-      graft.sources.ManifestTable.addCheck(s, out,
-        graft.ops.Quality.Accepted("lang", Seq("de", "en", "es", "fr", "zh")))
-      graft.sources.ManifestTable.append(s, out,
-        docs.filter(col("doc_id") % 2 =!= 0)) // clean: lands
-      val dirty = docs.filter(col("doc_id") % 2 =!= 0)
-        .select(col("doc_id") + 1000000L,
-          when(col("doc_id") % 3 === 0, lit(null: String))
-            .otherwise(col("lang")).as("lang"),
-          (col("n_chars") - 200000L).as("n_chars"))
-        .toDF("doc_id", "lang", "n_chars")
-      val refused =
-        try { graft.sources.ManifestTable.append(s, out, dirty); 0L }
-        catch { case _: IllegalArgumentException => 1L }
-      graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("chars_sum"))
-        .select(
-          lit(graft.sources.ManifestTable.checks(s, out).size.toLong)
-            .as("n_checks"),
-          lit(refused).as("n_refused"),
-          col("n_rows"), col("chars_sum"))
-    }),
-
-    // Extension: RESTORE — history-preserving rollback: a bad deletion
-    // is rolled back by committing a NEW version with the old snapshot's
-    // content carried entirely by reference (one manifest write at any
-    // table size); the bad version stays time-travelable. The oracle
-    // derives the restored content and the version arithmetic.
-    "ingest_manifest_restore" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_restore")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val langs = docs.select(col("lang")).distinct().as[String].collect().sorted
-      langs.foreach { l =>
-        graft.sources.ManifestTable.append(s, out,
-          docs.filter(col("lang") === l).coalesce(1))
-      }
-      val good = graft.sources.ManifestTable.currentVersion(s, out)
-      // the "incident": a vector delete erases a language
-      graft.sources.ManifestTable.deleteVectorWhereEquals(s, out, "lang", "en")
-      graft.sources.ManifestTable.restore(s, out, good)
-      val cur = graft.sources.ManifestTable.currentVersion(s, out)
-      graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows_after"),
-          sum(col("n_chars")).as("chars_sum_after"))
-        .select(lit(good).as("good_version"), lit(cur).as("restored_version"),
-          col("n_rows_after"), col("chars_sum_after"))
-    }),
-
-    // Extension: BOUNDED OPTIMIZE — the ingest-dribble compaction: the
-    // manifest's #size= headers plan a first-fit-decreasing binning of
-    // ONLY the small files (zero store RPCs), and one stats-bounded
-    // transaction rewrites just those bins while the two big clustered
-    // files — and their stats — carry by reference. The oracle checks
-    // content preservation; the untouched-big-files and files-reduced
-    // invariants are computed from the manifests themselves.
-    "ingest_manifest_optimize" -> ((s, dir) => {
-      val out = scratch("manifest_opt")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out,
-        docs.filter(col("doc_id") % 50 >= 10).coalesce(2))
-      val big = graft.sources.ManifestTable.currentFiles(s, out).toSet
-      // threshold pinned to the clustered files' actual size, so the
-      // big/small split is scale-factor-independent
-      val bigMin = big.map(p =>
-        new java.io.File(new java.net.URI(p).getPath).length()).min
-      (0 until 10).foreach { k =>
-        graft.sources.ManifestTable.append(s, out,
-          docs.filter(col("doc_id") % 50 === k).coalesce(1))
-      }
-      val before = graft.sources.ManifestTable.currentFiles(s, out).size
-      val removed = graft.sources.ManifestTable
-        .compactSmallFiles(s, out, targetBytes = bigMin)
-      val after = graft.sources.ManifestTable.currentFiles(s, out)
-      graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("chars_sum"))
-        .select(lit(removed > 0 && after.size == before - removed)
-            .as("files_reduced"),
-          lit(big.subsetOf(after.toSet)).as("big_files_untouched"),
-          col("n_rows"), col("chars_sum"))
-    }),
-
-    // Extension: INCREMENTAL VIEW MAINTENANCE — an additive rollup
-    // refreshed from the change feed: each refresh reads only the files
-    // the newer manifest added (plus the key-cardinality summary), never
-    // the source table, and the final summary equals the direct
-    // aggregate. Three appends, three O(delta) refreshes, one oracle.
-    "ingest_manifest_ivm" -> ((s, dir) => {
-      import s.implicits._
-      val src = scratch("ivm_src")
-      val agg = scratch("ivm_agg")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      var watermark = -1L
-      Seq(0, 1, 2).foreach { slice =>
-        graft.sources.ManifestTable.append(s, src,
-          docs.filter(col("doc_id") % 3 === slice).coalesce(1))
-        watermark = graft.sources.ManifestTable
-          .maintainRollup(s, src, agg, watermark, "lang", "n_chars")
-      }
-      // an idle refresh is a no-op commit-wise
-      val before = graft.sources.ManifestTable.currentVersion(s, agg)
-      graft.sources.ManifestTable
-        .maintainRollup(s, src, agg, watermark, "lang", "n_chars"): Unit
-      val after = graft.sources.ManifestTable.currentVersion(s, agg)
-      graft.sources.ManifestTable.read(s, agg)
-        .select(col("lang"), col("n_rows"), col("value_sum"),
-          lit(after - before).as("idle_refresh_commits"))
-    }),
-
-    // Extension: INCREMENTAL JOIN MAINTENANCE — the enrichment ETL as
-    // IVM: the target stays equal to orders LEFT JOIN customer by
-    // folding only each append's delta through a broadcast of the
-    // dimension; the target is itself append-shaped (downstreams can
-    // consume ITS change feed). Two appends, two O(delta) refreshes,
-    // and the maintained table equals the direct join (the oracle).
-    "ingest_manifest_enrich_ivm" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val src = scratch("enrich_src")
-      val out = scratch("enrich_out")
-      val orders = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val dim = table(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"),
-          col("c_nationkey"), col("c_mktsegment"))
-      var watermark = -1L
-      Seq(0, 1).foreach { slice =>
-        M.append(s, src, orders.filter(col("o_orderkey") % 2 === slice))
-        watermark = M.maintainEnriched(s, src, out, watermark, dim, "o_custkey")
-      }
-      M.read(s, out)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          countDistinct(col("c_nationkey")).as("n_nations"),
-          round(sum(col("o_totalprice")
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double"), 6).as("price_sum"))
-    }),
-
-    // Extension: APPROXIMATE-DISTINCT IVM — the rollup maintainRollup
-    // structurally cannot give (count-distinct is not additive): per-type
-    // HLL register tables maintained from the change feed at O(batch +
-    // shards·m) per refresh, never a source rescan. Register max is
-    // associative + idempotent, so the maintained sketch is bit-identical
-    // to a from-scratch sketch of the source — which is exactly what the
-    // oracle recomputes; the idle refresh is a commit-free no-op and the
-    // estimates land within 3 sigma of exact.
-    "ingest_manifest_hll_ivm" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val src = scratch("hllivm_src")
-      val agg = scratch("hllivm_agg")
-      val ev = events(s, dir).select(col("event_id"), col("event_type"))
-      var watermark = -1L
-      Seq(0, 1, 2).foreach { slice =>
-        M.append(s, src, ev.filter(col("event_id") % 3 === slice).coalesce(2))
-        watermark = graft.ops.Sketches.maintainDistinctRollup(
-          s, src, agg, watermark, "event_type",
-          col("event_id").cast("string"))
-      }
-      val before = M.currentVersion(s, agg)
-      graft.ops.Sketches.maintainDistinctRollup(
-        s, src, agg, watermark, "event_type",
-        col("event_id").cast("string")): Unit
-      val after = M.currentVersion(s, agg)
-      val est = graft.ops.Sketches.hllEstimate(M.read(s, agg))
-      val exact = ev.groupBy(col("event_type").as("shard"))
-        .agg(countDistinct(col("event_id")).as("nd_exact"))
-      est.join(exact, "shard")
-        .select(col("shard").as("event_type"), col("registers_used"),
-          col("v_zero"), col("estimate"), col("corrected"), col("nd_exact"),
-          (abs(col("estimate") - col("nd_exact")) / col("nd_exact") <=
-            lit(3.0 * 1.04 / 16.0)).as("within_3sigma"),
-          lit(after - before).as("idle_refresh_commits"))
-    }),
-
-    // Extension: METADATA-ONLY AGGREGATES — count(*) and min/max answered
-    // from manifest lines with zero data-file reads (the Iceberg/Delta
-    // fast path; at 100 TB this is the difference between a pointer-file
-    // read and a full scan). The lifecycle exercises the exactness
-    // contract: appends and copy-on-write deletes keep both answers exact
-    // (stats rewrite with the files); a deletion-vector delete keeps the
-    // COUNT exact (sidecar-cardinality subtraction) but demotes min/max
-    // to bounds — the API refuses instead of guessing, and the in-row
-    // gates compare every metadata answer against the scanned truth.
-    "ingest_manifest_meta_agg" -> ((s, dir) => {
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val out = scratch("meta_agg")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      Seq(0, 1, 2).foreach { sl =>
-        M.append(s, out, ev.filter(col("event_id") % 3 === sl).coalesce(2))
-      }
-      val n0 = M.countFromMetadata(s, out).get
-      val mm0 = M.minMaxFromMetadata(s, out, "event_id").get
-      // copy-on-write delete: touched files rewrite WITH fresh stats —
-      // metadata answers stay exact
-      M.deleteWhere(s, out, "event_id", 0.0, 99.0)
-      val n1 = M.countFromMetadata(s, out).get
-      val mm1 = M.minMaxFromMetadata(s, out, "event_id").get
-      // deletion-vector delete: no data file changes — the count
-      // subtracts the sidecar, min/max honestly refuses
-      M.deleteVectorWhere(s, out, "event_id", 100.0, 149.0)
-      val n2 = M.countFromMetadata(s, out).get
-      val mm2Answerable = M.minMaxFromMetadata(s, out, "event_id").isDefined
-      val ex = M.read(s, out)
-        .agg(count(lit(1)).as("n"), min(col("event_id")).as("mn")).head()
-      Seq((n0, mm0._1.toLong, mm0._2.toLong,
-          n1, mm1._1.toLong, mm1._2.toLong,
-          n2, mm2Answerable,
-          n2 == ex.getLong(0), mm1._1.toLong == ex.getLong(1) - 50L))
-        .toDF("n_meta0", "min_meta0", "max_meta0",
-          "n_meta1", "min_meta1", "max_meta1",
-          "n_meta2", "minmax_answerable_post_dv",
-          "count_matches_scan", "cow_min_was_exact")
-    }),
-
-    // Extension: CHANGE DATA FEED — inserts AND row-level deletes between
-    // two snapshots, never a table diff: inserts from the file-diff
-    // change feed, deletes from the deletion-vector sidecars added in the
-    // window joined back by (file, row-position) — the read cost is the
-    // files that LOST rows. Net-change semantics: a row inserted and
-    // DV-deleted inside the window shows only as a delete (a no-op for
-    // any consumer, asserted by the oracle's id arithmetic).
-    "ingest_manifest_cdf" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val out = scratch("cdf")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"))
-      M.commit(s, out, stageSpread(s, ev.filter(col("event_id") < 4000)))
-      val v0 = M.currentVersion(s, out)
-      M.append(s, out,
-        ev.filter(col("event_id") >= 4000 && col("event_id") < 5000))
-      // deletes from the baseline AND from the window's own inserts
-      M.deleteVectorWhere(s, out, "event_id", 100.0, 199.0)
-      M.deleteVectorWhere(s, out, "event_id", 4500.0, 4599.0)
-      val ins = M.readChangesSince(s, out, v0)
-        .select(lit("insert").as("_change_type"),
-          col("event_id"), col("user_id"))
-      val del = M.readDeletesSince(s, out, v0)
-        .select(lit("delete").as("_change_type"),
-          col("event_id"), col("user_id"))
-      ins.unionByName(del)
-    }),
-
-    // Extension: CROSS-TABLE JOIN-KEY OVERLAP from manifests alone — the
-    // cost-based-planner statistic (FK coverage, semi-join selectivity)
-    // for two 100 TB tables with ZERO data reads: each table's per-file
-    // KMV sketches merge into its table-level sketch (the KMV merge law
-    // makes the result identical to sketching the column directly,
-    // whatever the file layout), and the Beyer et al. set-operation
-    // estimators give Jaccard and intersection cardinality from ≤ 2k
-    // longs of metadata. Exact distinct counts ride along as the gate.
-    "ingest_manifest_join_card" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val oDir = scratch("jc_orders")
-      val cDir = scratch("jc_cust")
-      // a PARTIAL overlap: the custkeys of one order slice vs all
-      // customers — the semi-join-selectivity question as asked
-      val ord = table(s, dir, "orders")
-        .filter(col("o_orderkey") % 4 === 0).select(col("o_custkey"))
-      val cust = table(s, dir, "customer").select(col("c_custkey"))
-      M.appendSlices(s, oDir,
-        ord.withColumn("sl", format_string("%05d", col("o_custkey") % 3)),
-        "sl", keepSliceCol = false)
-      M.appendSlices(s, cDir,
-        cust.withColumn("sl", format_string("%05d", col("c_custkey") % 2)),
-        "sl", keepSliceCol = false)
-      M.addNdvSketch(s, oDir, "o_custkey")
-      M.addNdvSketch(s, cDir, "c_custkey")
-      val ov = M.estimateKeyOverlap(s, oDir, "o_custkey", cDir, "c_custkey")
-      ord.select(col("o_custkey").as("k"), lit("a").as("src"))
-        .unionByName(cust.select(col("c_custkey").as("k"), lit("b").as("src")))
-        .filter(col("k").isNotNull)
-        // one key shuffle for all three exact counts (see kmvSetOps)
-        .groupBy(col("k"))
-        .agg(max(when(col("src") === "a", 1).otherwise(0)).as("__ina"),
-          max(when(col("src") === "b", 1).otherwise(0)).as("__inb"))
-        .agg(sum(col("__ina")).cast("long").as("nd_a"),
-          sum(col("__inb")).cast("long").as("nd_b"),
-          count(lit(1)).as("nd_union"))
-        .select(
-          round(lit(ov("est_a")), 4).as("est_a"),
-          round(lit(ov("est_b")), 4).as("est_b"),
-          round(lit(ov("est_union")), 4).as("est_union"),
-          round(lit(ov("jaccard_est")), 6).as("jaccard_est"),
-          round(lit(ov("est_intersection")), 4).as("est_intersection"),
-          col("nd_a"), col("nd_b"), col("nd_union"),
-          (col("nd_a") + col("nd_b") - col("nd_union")).as("nd_intersection"))
-    }),
-
-    // Extension: UNIQUE KEY constraint — the primary-key contract as a
-    // table transaction gate: a batch repeating a key (within itself or
-    // against the table) or carrying a null key is refused LOUDLY before
-    // anything lands. The existing-key probe is stats-bounded (files
-    // whose [min, max] overlaps the batch's key range — monotonic ingest
-    // keys probe only the tail at any table size), and the constraint
-    // header survives compaction like a CHECK.
-    "ingest_manifest_unique" -> ((s, dir) => {
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val out = scratch("unique_pk")
-      val ev = events(s, dir).select(col("event_id"), col("user_id"))
-      M.commit(s, out, stageSpread(s, ev.filter(col("event_id") < 5000)))
-      M.addUnique(s, out, "event_id")
-      M.append(s, out,
-        ev.filter(col("event_id") >= 5000 && col("event_id") < 6000))
-      def refused(body: => Any): Boolean =
-        try { body; false } catch { case _: IllegalArgumentException => true }
-      val batchDupRefused = refused(M.append(s, out,
-        ev.filter(col("event_id") === 7000)
-          .unionByName(ev.filter(col("event_id") === 7000))))
-      val collisionRefused = refused(M.append(s, out,
-        ev.filter(col("event_id") === 100)))
-      val nullRefused = refused(M.append(s, out,
-        ev.filter(col("event_id") === 7001)
-          .select(lit(null).cast("long").as("event_id"), col("user_id"))))
-      M.compactSorted(s, out, Seq("event_id"), targetFiles = 4)
-      val carried = M.uniqueKeys(s, out) == Seq("event_id")
-      Seq((M.countFromMetadata(s, out).get,
-          batchDupRefused, collisionRefused, nullRefused, carried))
-        .toDF("n_rows", "batch_dup_refused", "collision_refused",
-          "null_refused", "constraint_survives_compaction")
-    }),
-
-    // Extension: COMMIT LINEAGE — "which commit landed this row?" as a
-    // _commit_version read column, derived from manifest history alone
-    // (each file first appears in exactly one manifest; the #files-sized
-    // map broadcasts into the scan). The contract is FILE lineage, stated
-    // honestly: after a layout rewrite every row carries the rewrite
-    // commit — proven by the post-compaction rows collapsing to one
-    // version while the counts stay put.
-    "ingest_manifest_lineage" -> ((s, dir) => {
-      val M = graft.sources.ManifestTable
-      val out = scratch("lineage")
-      val ev = events(s, dir).select(col("event_id"), col("event_type"))
-      M.appendSlices(s, out,
-        ev.withColumn("sl", format_string("%05d", col("event_id") % 3)),
-        "sl", keepSliceCol = false)
-      val base = M.versions(s, out).min
-      val appends = M.readWithLineage(s, out)
-        .groupBy((col("_commit_version") - lit(base)).as("commit_seq"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .select(lit("append").as("phase"), col("commit_seq"),
-          col("n_rows"), col("min_id"), col("max_id"))
-      M.compactSorted(s, out, Seq("event_id"), targetFiles = 3)
-      val compacted = M.readWithLineage(s, out)
-        .groupBy((col("_commit_version") - lit(base)).as("commit_seq"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .select(lit("compacted").as("phase"), col("commit_seq"),
-          col("n_rows"), col("min_id"), col("max_id"))
-      appends.unionByName(compacted)
-    }),
-
-    // Extension: PER-FILE KMV DISTINCT-COUNT SKETCHES in the manifest —
-    // the join-planning statistic from metadata alone: each file carries
-    // its k smallest md5 value-hashes; KMV merges exactly (union, keep k
-    // smallest), so the TABLE-level NDV estimate never scans data. The
-    // high-cardinality column exercises the (k−1)·2^60/h_k estimator,
-    // the low-cardinality one the exact below-k path; the oracle
-    // re-derives both from the same hashes.
-    "ingest_manifest_ndv" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_ndv")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("bkt",
-          format_string("%05d", graft.ops.Corpus.hashBucket(col("source"), 8)))
-      graft.sources.ManifestTable.appendSlices(
-        s, out, docs, "bkt", keepSliceCol = false)
-      graft.sources.ManifestTable.addNdvSketch(s, out, "doc_id", k = 64)
-      graft.sources.ManifestTable.addNdvSketch(s, out, "source", k = 64)
-      val (eDoc, sDoc, tDoc) = graft.sources.ManifestTable
-        .estimateDistinct(s, out, "doc_id")
-      val (eSrc, sSrc, _) = graft.sources.ManifestTable
-        .estimateDistinct(s, out, "source")
-      graft.sources.ManifestTable.read(s, out)
-        .agg(countDistinct(col("doc_id")).as("doc_exact"),
-          countDistinct(col("source")).as("source_exact"))
-        .select(lit(tDoc.toLong).as("n_files"),
-          lit(sDoc.toLong).as("n_sketched_doc"),
-          lit(sSrc.toLong).as("n_sketched_source"),
-          round(lit(eDoc), 3).as("doc_ndv_estimate"),
-          col("doc_exact"),
-          round(lit(eSrc), 3).as("source_ndv_estimate"),
-          col("source_exact"))
-    }),
-
-    // Extension: PER-FILE BLOOM FILTERS in the manifest — the
-    // point-lookup complement to min/max zone maps: doc_id is scattered
-    // across the source-bucketed files, so range stats skip nothing, but
-    // each file's md5-derived bloom answers "certainly absent" from the
-    // manifest alone (zero footers or data opened at plan time). The
-    // oracle rebuilds every file's bloom bit-for-bit and derives the
-    // same kept-file census; an absent id's lookup may keep only
-    // false-positive files and finds zero rows.
-    "ingest_manifest_bloom" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_bloom")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("bkt",
-          format_string("%05d", graft.ops.Corpus.hashBucket(col("source"), 8)))
-      // one partitioned write job stages every bucket; per-bucket append
-      // transactions land in bucket order (identical version history to
-      // the old append-per-bucket loop)
-      graft.sources.ManifestTable.appendSlices(
-        s, out, docs, "bkt", keepSliceCol = false)
-      graft.sources.ManifestTable.addBloom(s, out, "doc_id", words = 64, k = 4)
-      val rows = Seq(5L, 123L, 999999L).map { p =>
-        val (kept, total) = graft.sources.ManifestTable
-          .pruneByBloom(s, out, "doc_id", p.toString)
-        val n = graft.sources.ManifestTable
-          .readWhereEqualsBloom(s, out, "doc_id", p.toString).count()
-        (p, total.toLong, kept.size.toLong, n)
-      }
-      rows.toDF("probe_id", "n_files_total", "n_files_kept", "n_rows")
-    }),
-
-    // Extension: NAMED TAGS pin snapshots — tag the full table "audit",
-    // erase a language with a deletion vector, vacuum with zero
-    // retention: the tagged snapshot (manifest + files) survives the
-    // sweep and reads back bit-identically while CURRENT shows the
-    // erased view. The oracle derives both views from the raw table.
-    "ingest_manifest_tag" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_tag")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      graft.sources.ManifestTable.appendSlices(
-        s, out, docs, "lang", keepSliceCol = true)
-      val vAll = graft.sources.ManifestTable.currentVersion(s, out)
-      graft.sources.ManifestTable.tag(s, out, "audit", vAll)
-      graft.sources.ManifestTable.deleteVectorWhereEquals(s, out, "lang", "en")
-      graft.sources.ManifestTable.vacuum(s, out, retainStagedMillis = 0L)
-      val tagAgg = graft.sources.ManifestTable.readTag(s, out, "audit")
-        .agg(count(lit(1)).as("n_rows_tag"),
-          sum(col("n_chars")).as("chars_sum_tag"))
-      val curAgg = graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows_current"),
-          sum(col("n_chars")).as("chars_sum_current"))
-      tagAgg.crossJoin(curAgg)
-        .select(lit(vAll).as("tag_version"), col("n_rows_tag"),
-          col("chars_sum_tag"), col("n_rows_current"),
-          col("chars_sum_current"))
-    }),
-
-    // Extension: MERGE-ON-READ DELETE via deletion vectors — no data
-    // file is rewritten; matching (file, row-index) positions land in a
-    // tiny parquet sidecar recorded in the manifest header, and every
-    // read subtracts them by broadcast anti-join (Delta/Iceberg's
-    // position-delete shape). Two overlapping deletes prove vectors
-    // accumulate MINIMALLY (the second lists only rows the first did
-    // not already delete), and the unchanged-file census proves the
-    // merge-on-read claim. The oracle derives the same census and the
-    // complement content from the raw table.
-    "ingest_manifest_dv" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_dv")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .withColumn("band",
-          format_string("%05d", floor(col("n_chars") / 128).cast("long")))
-      graft.sources.ManifestTable.appendSlices(
-        s, out, docs, "band", keepSliceCol = false)
-      val before = graft.sources.ManifestTable.currentFiles(s, out)
-      graft.sources.ManifestTable.deleteVectorWhere(s, out, "n_chars", 100.0, 200.0)
-      graft.sources.ManifestTable.deleteVectorWhere(s, out, "n_chars", 150.0, 300.0)
-      val after = graft.sources.ManifestTable.currentFiles(s, out)
-      val unchanged = before.count(after.contains)
-      val nVec = graft.sources.ManifestTable.currentDeleteVectors(s, out).size
-      val dvRows = graft.sources.ManifestTable.deleteVectorRowCount(s, out)
-      graft.sources.ManifestTable.read(s, out)
-        .agg(count(lit(1)).as("n_rows_after"),
-          sum(col("n_chars")).as("chars_sum_after"))
-        .select(lit(before.size.toLong).as("n_files_before"),
-          lit(unchanged.toLong).as("n_files_unchanged"),
-          lit(nVec.toLong).as("n_vectors"),
-          lit(dvRows).as("dv_positions"),
-          col("n_rows_after"), col("chars_sum_after"))
-    }),
-
-    // Extension: MERGE (batch upsert) as ONE manifest transaction — the
-    // Delta MERGE-INTO shape: per key the highest version wins (update
-    // side breaks exact ties), new keys insert, and the merged snapshot
-    // commits by a single pointer swap. The oracle replays the same
-    // merge relationally (anti-join + union + per-key winner).
-    "ingest_manifest_merge" -> ((s, dir) => {
-      val out = scratch("manifest_merge")
-      val base = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          lit(0L).as("version"))
-      graft.sources.ManifestTable.commit(s, out, base)
-      val updates = base.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("source"),
-          (col("n_chars") + 1000L).as("n_chars"), lit(1L).as("version"))
-        .unionByName(base.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 500000L).as("doc_id"), col("source"),
-            col("n_chars"), lit(1L).as("version")))
-      graft.sources.ManifestTable.mergeInto(s, out, updates, "doc_id", "version")
-      graft.sources.ManifestTable.read(s, out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("chars_sum"),
-          sum(col("version")).as("version_sum"))
-    }),
-
-    // Extension: append with SCHEMA EVOLUTION — the batch carries a NEW
-    // column as one append transaction; the manifest schema advances and
-    // the evolved read resolves pre-evolution files with nulls (add-only:
-    // dropping or retyping still refuses loudly). The oracle assembles
-    // the same union with nulls on the old slice.
-    "ingest_manifest_evolve" -> ((s, dir) => {
-      val out = scratch("manifest_evolve")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      graft.sources.ManifestTable.commit(s, out, docs.filter(col("doc_id") % 2 === 0))
-      graft.sources.ManifestTable.appendEvolve(s, out,
-        docs.filter(col("doc_id") % 2 === 1)
-          .withColumn("quality", col("n_chars").cast("double") / 100.0))
-      graft.sources.ManifestTable.readEvolved(s, out)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("quality")).as("n_with_quality"),
-          round(sum(col("quality").cast(org.apache.spark.sql.types.DecimalType(27, 12)))
-            .cast("double"), 6).as("quality_sum"))
-    }),
-
-    // Extension: CATEGORICAL file skipping — string min/max manifest
-    // stats answer an equality predicate: with a per-language layout
-    // (min = max = the language) the prune is perfect, an equality scan
-    // opens exactly the matching files. The oracle re-derives the file
-    // census from the content (one file per distinct language) and the
-    // row aggregate from the raw predicate.
-    "ingest_zonemap_point" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_zonemap_pt")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val langs = docs.select(col("lang")).distinct().as[String].collect().sorted
-      langs.foreach { l =>
-        graft.sources.ManifestTable.append(s, out,
-          docs.filter(col("lang") === l).coalesce(1))
-      }
-      val (kept, total) = graft.sources.ManifestTable
-        .pruneByEquals(s, out, "lang", "en")
-      graft.sources.ManifestTable.readWhereEquals(s, out, "lang", "en")
-        .agg(count(lit(1)).as("n_rows"), sum(col("n_chars")).as("chars_sum"))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(kept.size.toLong).as("n_files_scanned"),
-          col("n_rows"), col("chars_sum"))
-    }),
-
-    // Extension: the manifest statistics as a queryable metadata table
-    // (Delta DESCRIBE DETAIL / Iceberg files-table shape) — per-file
-    // min/max/null-count for two int64 columns over the zone-clustered
-    // fixture above; the oracle recomputes every row from the content
-    // (per-band min/max), proving the footer-derived stats are EXACT.
-    "ingest_manifest_stats" -> ((s, dir) => {
-      import s.implicits._
-      val out = scratch("manifest_statstbl")
-      val docs = table(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"))
-        .withColumn("band", floor(col("n_chars") / 1024).cast("long"))
-      val bands = docs.select(col("band")).distinct()
-        .as[Long].collect().sorted
-      bands.foreach { b =>
-        graft.sources.ManifestTable.append(s, out,
-          docs.filter(col("band") === b).drop("band").coalesce(1))
-      }
-      val stats = graft.sources.ManifestTable.currentStats(s, out)
-        .filter(cs => cs.dtype == "int64")
-        .map(cs => (cs.column, cs.min.get.toLong, cs.max.get.toLong, cs.nullCount))
-      stats.toDF("column_name", "min_value", "max_value", "n_nulls")
-    }),
-
-    // Extension: parquet footer statistics — per-row-group metadata read
-    // (no data pages), verified by agreeing with the content-derived
-    // truth: footer row counts sum to the scan count, schema width 5.
-    "ingest_parquet_footer" -> ((s, dir) =>
-      graft.sources.Ingest.parquetFooterStats(s, s"$dir/documents.parquet")
-        .groupBy(col("file_name"))
-        .agg(sum(col("n_rows")).as("n_rows"),
-          max(col("n_columns")).as("n_cols"))),
-
-    // Extension: Q6-flavor forecast revenue change — the pure scan query:
-    // all three predicates push to parquet, one-row map-side aggregate.
-    "star_forecast_revenue" -> ((s, dir) =>
-      graft.ops.Star.forecastRevenueChange(
-        table(s, dir, "lineitem"), "1996-01-01", "1997-01-01",
-        0.04, 0.06, 24.0)),
-
-    // Extension: Q4-flavor late-shipment census — the existence test is a
-    // LEFT SEMI join (equi on orderkey, lateness as the join residual).
-    "star_late_priority" -> ((s, dir) =>
-      graft.ops.Star.latePriorityCensus(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        "1997-01-01", "1997-07-01", 90)),
-
-    // Extension: Q7-flavor bi-national trade volume — the 2-nation slice
-    // broadcasts against both sf-scaled dims BEFORE any fact join.
-    "star_trade_volume" -> ((s, dir) =>
-      graft.ops.Star.tradeVolume(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), table(s, dir, "supplier"),
-        table(s, dir, "nation"),
-        "NATION_3", "NATION_7", "1996-01-01", "1998-01-01")),
-
-    // Extension: Q8-flavor market share — conditional-sum ratio in ONE
-    // aggregate over the 7-table chain, dims broadcast, part shuffled.
-    "star_market_share" -> ((s, dir) =>
-      graft.ops.Star.marketShare(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), table(s, dir, "supplier"),
-        table(s, dir, "part"), table(s, dir, "nation"),
-        table(s, dir, "region"),
-        "EUROPE", "NATION_5", "ECONOMY", "1996-01-01", "1998-01-01")),
-
-    // Extension: Q10-flavor returned-item losers — returnflag pushed to
-    // the fact scan, top-k via TakeOrderedAndProject with a key tiebreak.
-    "star_returned_customers" -> ((s, dir) =>
-      graft.ops.Star.returnedItemTopCustomers(
-        table(s, dir, "lineitem"), table(s, dir, "orders"),
-        table(s, dir, "customer"), table(s, dir, "nation"),
-        "R", "1996-10-01", "1997-01-01", 20)),
-
-    // Extension: Q13-flavor order-count histogram — LEFT OUTER with the
-    // priority exclusion inside the join condition so zero-order
-    // customers survive into the count-of-counts.
-    "star_order_distribution" -> ((s, dir) =>
-      graft.ops.Star.orderCountDistribution(
-        table(s, dir, "orders"), table(s, dir, "customer"), "5-LOW")),
-
-    // Extension: Q17-flavor small-quantity revenue — the correlated
-    // per-part average is a window reusing the join's partkey shuffle.
-    "star_small_qty_revenue" -> ((s, dir) =>
-      graft.ops.Star.smallQuantityRevenue(
-        table(s, dir, "lineitem"), table(s, dir, "part"), "Brand#1")),
-
-    // Extension: Q19-flavor OR-of-ANDs revenue — the disjunction's
-    // per-table envelope pushes to both scans, exact predicate post-join.
-    "star_special_revenue" -> ((s, dir) =>
-      graft.ops.Star.specialDiscountRevenue(
-        table(s, dir, "lineitem"), table(s, dir, "part"),
-        Seq(("Brand#1", (1, 10), (1.0, 15.0)),
-          ("Brand#2", (11, 20), (10.0, 25.0)),
-          ("Brand#3", (21, 35), (20.0, 40.0))))),
-
-    // Extension: Q22-flavor dormant high-balance customers — 1-row avg
-    // broadcast back + LEFT ANTI join against date-filtered orders.
-    "star_dormant_customers" -> ((s, dir) =>
-      graft.ops.Star.dormantHighBalance(
-        table(s, dir, "customer"), table(s, dir, "orders"),
-        table(s, dir, "nation"), "1999-01-01")),
-
-    // Extension: quality-quartile × exact-dup calibration — do the
-    // quality and dedup screens agree about which slice is junk?
-    "docs_quality_calibration" -> ((s, dir) =>
-      graft.ops.Corpus.qualityDupCalibration(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: Heaps'-law vocabulary growth fit over 10 id-prefix
-    // checkpoints (one term-ownership aggregate, no sequential scan) —
-    // "is new data still adding new language?"
-    "text_heaps_fit" -> ((s, dir) =>
-      graft.ops.Corpus.heapsFit(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: inactivity churn — users silent for >= 24 h before the
-    // corpus's last observed event (data-anchored, replay-deterministic).
-    "events_churn" -> ((s, dir) =>
-      graft.ops.EventOps.inactivityChurn(events(s, dir), "user_id", "ts",
-        86400000L)),
-
-    // Extension: per-source duplication rate — share of each source's docs
-    // whose corpus-wide fingerprint recurs (where the dedup budget goes).
-    "dedup_rate_by_source" -> ((s, dir) =>
-      graft.ops.Dedup.dupRateBySource(
-        spread(s, table(s, dir, "documents")), "doc_id", "text", "source")),
-
-    // Extension: seasonal (hour-of-day) anomaly — per-(type, day, hour)
-    // counts vs that type's same-hour baseline across days; exact integer
-    // moments make mean/variance/z bit-replicable. Complements burst
-    // detection (trailing window) by learning the diurnal profile.
-    "events_seasonal_anomaly" -> ((s, dir) =>
-      graft.ops.EventOps.seasonalAnomaly(events(s, dir), "event_type", "ts")),
-
-    // Extension: Welch two-sample A/B readout — purchase-vs-view value
-    // lift with t statistic and Welch–Satterthwaite df from ONE
-    // conditional-aggregation pass (DECIMAL-routed moment sums).
-    "events_ab_lift" -> ((s, dir) =>
-      graft.ops.EventOps.abTestLift(events(s, dir), "event_type", "value",
-        "purchase", "view")),
-
-    // Extension: dedup-threshold sweep — pair counts at five candidate
-    // Jaccard thresholds from ONE scoring pass (the knob-pricing table
-    // next to dedup_lsh_eval's bands/rows eval).
-    "dedup_threshold_sweep" -> ((s, dir) =>
-      graft.ops.Dedup.thresholdSweep(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: composition chi-square — the language × source count
-    // grid with expected-under-independence and per-cell chi2
-    // contribution (which crawl slice skews the language mix).
-    "docs_mix_chi2" -> ((s, dir) =>
-      graft.ops.Corpus.mixChiSquare(table(s, dir, "documents"), "lang", "source")),
-
-    // Extension: Flesch readability profile — words, sentence runs,
-    // vowel-group syllables, reading-ease score; three scan-side regex
-    // projections, no shuffle.
-    "text_readability" -> ((s, dir) =>
-      graft.ops.Corpus.readability(table(s, dir, "documents"), "doc_id", "text")),
-
-    // Extension: novelty profile — per doc, the fraction of its 8-token
-    // positions whose gram is INTRODUCED by this doc under id order (the
-    // marginal-contribution ranking; dupSpanProfile's complement).
-    "text_novelty" -> ((s, dir) =>
-      graft.ops.Corpus.noveltyProfile(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: export-shard manifest — 8 deterministic hash shards with
-    // doc counts, token budgets, and corpus share (the pre-write balance
-    // check for training-shard layout).
-    "docs_shard_manifest" -> ((s, dir) =>
-      graft.ops.Corpus.shardManifest(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: duplicated-span profile — per doc, the fraction of its
-    // 8-token positions whose n-gram recurs elsewhere in the corpus (the
-    // substring-dedup signal; set arithmetic on gram counts, no pairwise
-    // doc comparison).
-    "text_dup_spans" -> ((s, dir) =>
-      graft.ops.Corpus.dupSpanProfile(spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: Count-Min sketch gate — top-20 tokens' exact counts next
-    // to the md5-seeded CMS estimate with the structural n_cms >= n_true
-    // gate; the portable hash family makes every cell oracle-replicable.
-    "text_cms_gate" -> ((s, dir) =>
-      graft.ops.Corpus.cmsTopkGate(spread(s, table(s, dir, "documents")), "text")),
-
-    // Extension: one-row corpus summary — the dataset card numbers
-    // (volume, token budget, language spread) in one partial-agg pass.
-    "docs_corpus_summary" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      table(s, dir, "documents")
-        .select(tokenCount(col("text")).as("nt"), col("lang"), col("n_chars"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("nt")).as("total_tokens"),
-          round(sum(col("nt")) / count(lit(1)), 6).as("mean_tokens"),
-          percentile(col("nt"), lit(0.5)).as("p50_tokens"),
-          countDistinct(col("lang")).as("n_langs"),
-          sum(col("n_chars")).as("total_chars"))
-    }),
-
-    // Extension: per-group top-k — the 5 highest-quality documents per
-    // language (rank <= k pushes a partial WindowGroupLimit before the
-    // exchange, so only k rows per group per partition shuffle — the
-    // map-side-combine of top-k).
-    "docs_topk_by_lang" -> ((s, dir) => {
-      import graft.ops.TextFunctions._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang").orderBy(col("quality").desc, col("doc_id").asc)
-      table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          round(qualityScore(col("text"), tokens(col("text"))), 6).as("quality"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-    }),
-
-    // Extension: Morton/Z-order interleave — the two-dimensional
-    // data-skipping key (writeZOrdered sorts the layout by it; here the
-    // oracle pins the bit-interleave arithmetic itself).
-    "events_zorder" -> ((s, dir) => {
-      val e = events(s, dir)
-      val mask = (1 << 10) - 1
-      val a = col("user_id").bitwiseAND(lit(mask.toLong))
-      val b = coalesce(floor(col("value")).cast("long"), lit(0L))
-        .bitwiseAND(lit(mask.toLong))
-      e.select(col("event_id"), graft.ops.Bucketing.zValue(a, b, 10).as("z"))
-    }),
-
-    // Extension: Hive-partitioned parquet SINK — write documents
-    // partitioned by lang, then profile the read-back layout (scans
-    // filtering on lang prune to one directory; BucketingSpec asserts the
-    // PartitionFilters plan shape).
-    "docs_part_sink" -> ((s, dir) => {
-      val out = scratch("sink")
-      graft.ops.Bucketing.writePartitioned(
-        table(s, dir, "documents"), out, Seq("lang"))
-      s.read.parquet(out).groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-    }),
-
-    // Extension: ORC format parity — the same engine must read archives
-    // that arrive as ORC. Roundtrip documents parquet→ORC→DataFrame and
-    // prove content fidelity (distinct text-md5 count survives, longs and
-    // strings intact); the oracle aggregates the original parquet, so any
-    // roundtrip corruption hash-mismatches.
-    "ingest_orc" -> ((s, dir) => {
-      val out = scratch("orc_docs")
-      table(s, dir, "documents").write.mode("overwrite").orc(out)
-      s.read.orc(out).groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          countDistinct(md5(col("text"))).as("n_distinct_texts"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-    }),
-
-    // Extension: XML format parity (Spark 4's native XML source) —
-    // documents roundtrip through row-tagged XML; the md5 census proves
-    // content fidelity through the markup encode/decode, exactly the
-    // ingest_orc contract. Text goes through XML escaping and back.
-    "ingest_xml" -> ((s, dir) => {
-      val out = scratch("xml_docs")
-      table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-        .write.mode("overwrite").format("xml")
-        .option("rootTag", "docs").option("rowTag", "doc").save(out)
-      s.read.format("xml").option("rowTag", "doc").load(out)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          countDistinct(md5(col("text"))).as("n_distinct_texts"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-    }),
-
-    // Extension: Bradley–Terry preference ranking (Hunter's MM, 8 fixed
-    // iterations) — the aggregation step of RLHF preference-data
-    // curation. The pairwise-comparison fixture derives deterministically
-    // from events: item_a = event_id mod 7, item_b the div-derived
-    // OTHER item, a wins iff value ≥ 35. The oracle replays the count
-    // matrix and all 8 MM rounds (each round one join + one window +
-    // one DECIMAL-routed sum) bit-for-bit.
-    "events_bt_rank" -> ((s, dir) => {
-      val ia = col("event_id") % 7
-      val ibRaw = expr("event_id div 7") % 6
-      val pr = events(s, dir).select(ia.as("ia"),
-        when(ibRaw >= ia, ibRaw + 1).otherwise(ibRaw).as("ib"),
-        when(col("value") >= 35.0, 1).otherwise(0).as("awin"))
-      graft.ops.EventOps.bradleyTerry(pr, "ia", "ib", "awin", iterations = 8)
-    }),
-
-    // Extension: Krippendorff's alpha (nominal) — the inter-rater
-    // reliability readout of an annotation-QA pipeline, over the
-    // (unit = event_id mod 400, category = event_type) rating grid.
-    // Units with one rating are unpairable and excluded; counts stay
-    // integral until the final divisions.
-    "events_rater_alpha" -> ((s, dir) =>
-      graft.ops.EventOps.krippendorffAlpha(
-        events(s, dir).select((col("event_id") % 400).as("unit"),
-          col("event_type").as("cat")), "unit", "cat")),
-
-    // Extension: pass@k — the unbiased combinatorial estimator over
-    // per-task sample outcomes (task = event_id mod 50, pass iff
-    // value ≥ 35), the eval-harness aggregation for sampled
-    // generations. k ∈ {1, 5, 10}; the estimator is a fixed-order
-    // product of integer ratios, identical IEEE ops in both engines.
-    "events_passk" -> ((s, dir) =>
-      graft.ops.EventOps.passAtK(
-        events(s, dir).select((col("event_id") % 50).as("task"),
-          (col("value") >= 35.0).as("pass")), "task", "pass")),
-
-    // Extension: semi-supervised label propagation over the SAME
-    // committed kNN graph the sim_hnsw_* queries navigate (one more
-    // consumer of the persisted index): seed labels on the vec_id%5==0
-    // slice spread to the unlabeled majority in 3 deterministic
-    // plurality rounds (count desc, own-label, smallest label). The
-    // oracle replays the LSH graph build AND all 3 rounds.
-    "sim_label_prop" -> ((s, dir) => {
-      val emb = table(s, dir, "embeddings")
-      val g = fixGraphFull(s, dir)
-      graft.sources.ManifestTable.requireIndexFresh(s, g)
-      val nodes = emb.select(col("vec_id"),
-        when(col("vec_id") % 5 === 0, col("label")).as("slabel"))
-      graft.ops.Components.labelPropagate(
-        nodes, "vec_id", "slabel",
-        graft.sources.ManifestTable.read(s, g), "src", "dst", rounds = 3)
-    }),
-
-    // Extension: split-conformal quality gate — calibrate the keep
-    // threshold on the doc_id%5==0 slice at α = 0.1 (k-th smallest
-    // calibration score, an exact order statistic), gate the rest, and
-    // report realized coverage next to the target. The
-    // distribution-free version of "keep the top 90% by quality".
-    "docs_conformal_gate" -> ((s, dir) =>
-      graft.ops.Corpus.conformalGate(
-        table(s, dir, "documents"), "doc_id", "text", calMod = 5, alpha = 0.1)),
-
-    // Extension: nDCG@10 of the BM25 ranking vs term-frequency
-    // pseudo-relevance — the graded retrieval-quality eval next to the
-    // ANN tier's recall@k rows, over the established 3-query term set.
-    // Gains are an exact integer map (no libm pow); the log2 discount
-    // canonicalizes through DECIMAL like the BM25 idf.
-    "text_ndcg" -> ((s, dir) => {
-      import s.implicits._
-      val queries = Seq(0L -> "spark", 0L -> "table", 0L -> "window",
-        1L -> "join", 1L -> "filter",
-        2L -> "vector", 2L -> "stream", 2L -> "hash")
-        .toDF("query_id", "term")
-      graft.ops.Retrieval.ndcgAtK(
-        spread(s, table(s, dir, "documents")), "doc_id", "text", queries,
-        k = 10)
-    }),
-
-    // Extension: expected calibration error — the reliability-diagram
-    // eval of the quality score read as P(document is unique): per
-    // confidence bin, mean confidence vs realized uniqueness, plus the
-    // Σ (n_b/N)·|acc−conf| total. The probability-calibration view next
-    // to docs_quality_calibration's quartile agreement.
-    "docs_quality_ece" -> ((s, dir) =>
-      graft.ops.Corpus.calibrationEce(
-        spread(s, table(s, dir, "documents")), "doc_id", "text")),
-
-    // Extension: STREAMING preference-matrix maintenance — the online
-    // half of the Bradley-Terry pipeline: the first half of the bounded
-    // comparison feed commits as the base count matrix; the second half
-    // streams through prefMaintainSink (per-batch partial counts landed
-    // as #streambatch-stamped appends — a partial-aggregate log), and
-    // the solve runs bradleyTerryFromCounts over the re-aggregated log.
-    // Count addition is associative, so the result equals solving the
-    // whole feed batch-side — which is exactly what the oracle does.
-    "stream_pref_rank" -> ((s, dir) => withStreamingShuffle(s, 4) {
-      implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val M = graft.sources.ManifestTable
-      val maxId = 2000L
-      def prefPairs(ev: org.apache.spark.sql.DataFrame) = {
-        val ia = col("event_id") % 7
-        val ibRaw = expr("event_id div 7") % 6
-        ev.select(ia.as("ia"),
-          when(ibRaw >= ia, ibRaw + 1).otherwise(ibRaw).as("ib"),
-          when(col("value") >= 35.0, 1).otherwise(0).as("awin"))
-      }
-      val ev = events(s, dir).filter(col("event_id") < maxId)
-      val out = scratch("pref_matrix")
-      M.commit(s, out, graft.ops.EventOps.directedComparisons(
-          prefPairs(ev.filter(col("event_id") < maxId / 2)), "ia", "ib", "awin")
-        .groupBy(col("i"), col("j"))
-        .agg(count(lit(1)).as("n"), sum(col("wi")).as("w")))
-      val feed = ev.filter(col("event_id") >= maxId / 2)
-        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("props"))
-        .as[StreamEv].collect()
-      val (b1, b2) = feed.splitAt(feed.length / 2)
-      val in = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[StreamEv]
-      val q = graft.streaming.StreamingOps.prefMaintainSink(
-        graft.ops.EventOps.directedComparisons(
-          prefPairs(in.toDS().toDF()), "ia", "ib", "awin"), out)
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      q.stop()
-      graft.ops.EventOps.bradleyTerryFromCounts(
-        M.read(s, out).groupBy(col("i"), col("j"))
-          .agg(sum(col("n")).as("n"), sum(col("w")).as("w")), 8)
-    })
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** DuckDB cosine similarity between two DOUBLE list expressions — the
-    * exact strict-left-fold shape the Spark side computes (dot/(|a||b|)),
-    * kept in one place because the IVF oracle needs it six times. */
-  /** 17-significant-digit decimal of ln(γ) for the DDSketch oracle — the
-    * SAME double the Spark side ships as a literal, so both engines
-    * bucket ⌈ln(v)/ln(γ)⌉ bit-identically (17 digits round-trip any
-    * IEEE double exactly). */
-  private val ddLnGamma: String = f"${math.log(1.02 / 0.98)}%.17g"
-
-  /** Unrolled greedy k-center CTE chain: `c1` is the md5-seeded first
-    * center; step i scores every unchosen point's max-cosine to `c{i-1}`
-    * and adds the argmin (ties to the smaller id) — exactly
-    * Similarity.kcenterCoreset's rounds. Returns the WITH-clause body
-    * ending at `c$k`. Every step is AS MATERIALIZED: each `c$i` is
-    * referenced ~3 times by the next step, and DuckDB's default CTE
-    * inlining would re-expand the whole chain ~3^k times. */
-  private def kcenterSql(k: Int): String = {
-    val seed =
-      "c1 AS MATERIALIZED (SELECT vec_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1)"
-    val steps = (2 to k).map { i =>
-      s"""s$i AS MATERIALIZED (SELECT p.vec_id, any_value(p.v) AS v, max(${cosSql("p.v", "c.cv")}) AS ms
-         |  FROM e p, c${i - 1} c WHERE p.vec_id NOT IN (SELECT vec_id FROM c${i - 1})
-         |  GROUP BY p.vec_id),
-         |f$i AS MATERIALIZED (SELECT vec_id, v FROM s$i ORDER BY ms ASC, vec_id ASC LIMIT 1),
-         |c$i AS MATERIALIZED (SELECT * FROM c${i - 1} UNION ALL SELECT vec_id, v AS cv FROM f$i)""".stripMargin
-    }
-    (seed +: steps).mkString(",\n")
-  }
-
-  /** The IVF top-k derivation (codebook, cells, probes, ranking) —
-    * shared by `sim_ivf_topk` and `sim_ivf_persisted`, which by
-    * construction return identical rows. */
-  private lazy val ivfTopkOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-      |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |c1 AS ${lloydRoundSql("seeds", 64)},
-      |c2 AS ${lloydRoundSql("c1", 64)},
-      |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-      |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-      |  WHERE rn = 1),
-      |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-      |  WHERE rn <= 4),
-      |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-      |  FROM probes p JOIN cells cl ON p.cell = cl.cell WHERE cl.vec_id != p.query_id),
-      |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-      |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM r WHERE rk <= 5""".stripMargin
-
-  /** [[ivfTopkOracleSql]] with the erased ids (20..39) excluded from the
-    * inverted file at scoring time — the codebook stays frozen on the
-    * FULL corpus (trained before the erasure). Shared by the batch
-    * delete-maintenance query (`sim_ivf_delete`) and its streaming twin
-    * (`stream_gdpr_erase`), which must converge to the same ranking. */
-  private lazy val ivfEraseOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-      |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |c1 AS ${lloydRoundSql("seeds", 64)},
-      |c2 AS ${lloydRoundSql("c1", 64)},
-      |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-      |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-      |  WHERE rn = 1),
-      |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-      |  WHERE rn <= 4),
-      |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-      |  FROM probes p JOIN cells cl ON p.cell = cl.cell
-      |  WHERE cl.vec_id != p.query_id AND cl.vec_id NOT BETWEEN 20 AND 39),
-      |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-      |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM r WHERE rk <= 5""".stripMargin
-
-  /** [[ivfTopkOracleSql]] with the codebook FROZEN on the initial
-    * (vec_id % 5 != 0) corpus while assignment covers everything — the
-    * convergence target shared by the batch delta-maintenance query
-    * (`sim_ivf_delta`) and its streaming twin (`stream_ann_maintain`). */
-  private lazy val ivfFrozenDeltaOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-      |e0 AS (SELECT * FROM e WHERE vec_id % 5 != 0),
-      |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e0 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |c1 AS ${lloydRoundSqlFrom("e0", "seeds", 64)},
-      |c2 AS ${lloydRoundSqlFrom("e0", "c1", 64)},
-      |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-      |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-      |  WHERE rn = 1),
-      |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-      |  WHERE rn <= 4),
-      |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-      |  FROM probes p JOIN cells cl ON p.cell = cl.cell WHERE cl.vec_id != p.query_id),
-      |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-      |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM r WHERE rk <= 5""".stripMargin
-
-  /** Residual IVF-PQ re-derived in SQL: coarse cells from the IVF chain,
-    * residuals v − coarse_centroid MATERIALIZED (five downstream refs),
-    * the four subspace Lloyd chains over residual slices, reconstruction
-    * = coarse + residual recon, nprobe-pruned asymmetric ranking. */
-  private lazy val ivfpqResidualChainSql: String = {
-    val m = 4
-    val sub = 16
-    val per = (0 until m).map { j =>
-      val lo = j * sub + 1
-      val hi = (j + 1) * sub
-      s"""rs$j AS (SELECT vec_id, rv[$lo:$hi] AS v FROM resid),
-         |rseeds$j AS (SELECT vec_id AS cent_id, v AS cv FROM rs$j ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-         |rc1_$j AS ${lloydRoundSqlFrom(s"rs$j", s"rseeds$j", sub)},
-         |rc2_$j AS ${lloydRoundSqlFrom(s"rs$j", s"rc1_$j", sub)},
-         |rcode$j AS (SELECT vec_id, cv FROM (
-         |  SELECT s.vec_id, c.cv, row_number() OVER (PARTITION BY s.vec_id ORDER BY ${cosSql("s.v", "c.cv")} DESC, c.cent_id) AS rn
-         |  FROM rs$j s, rc2_$j c) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-      |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-      |c1 AS ${lloydRoundSqlFrom("e", "seeds", 64)},
-      |c2 AS ${lloydRoundSqlFrom("e", "c1", 64)},
-      |sims AS MATERIALIZED (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-      |cells AS (SELECT vec_id, v, cell, ccv FROM (
-      |  SELECT s.vec_id, s.v, s.cent_id AS cell, c.cv AS ccv,
-      |    row_number() OVER (PARTITION BY s.vec_id ORDER BY s.csim DESC, s.cent_id) AS rn
-      |  FROM sims s JOIN c2 c ON s.cent_id = c.cent_id) WHERE rn = 1),
-      |resid AS MATERIALIZED (SELECT vec_id, cell, ccv,
-      |  list_transform(generate_series(1, 64), i -> v[i] - ccv[i]) AS rv FROM cells),
-      |$per,
-      |reconr AS (SELECT k0.vec_id, k0.cv || k1.cv || k2.cv || k3.cv AS rrv
-      |  FROM rcode0 k0 JOIN rcode1 k1 USING (vec_id) JOIN rcode2 k2 USING (vec_id)
-      |  JOIN rcode3 k3 USING (vec_id)),
-      |recon AS (SELECT r.vec_id, d.cell,
-      |  list_transform(generate_series(1, 64), i -> d.ccv[i] + r.rrv[i]) AS pv
-      |  FROM reconr r JOIN resid d USING (vec_id)),
-      |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-      |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-      |  WHERE rn <= 4),
-      |scored AS (SELECT p.query_id, r.vec_id AS neighbor_id, ${cosSql("p.qv", "r.pv")} AS sim
-      |  FROM probes p JOIN recon r ON p.cell = r.cell WHERE r.vec_id != p.query_id),
-      |rnk AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)""".stripMargin
-  }
-
-  /** One kmeans-train + cell-count chain per candidate k — shared by the
-    * rebalance advice and apply oracles. */
-  private def ivfKChainSql(k: Int): String =
-    s"""seeds$k AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $k),
-       |c1_$k AS ${lloydRoundSqlFrom("e", s"seeds$k", 64)},
-       |c2_$k AS ${lloydRoundSqlFrom("e", s"c1_$k", 64)},
-       |cnt_$k AS (SELECT cell, count(*) AS n FROM (SELECT vec_id, cent_id AS cell FROM (
-       |  SELECT e.vec_id, c.cent_id, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cent_id) AS rn FROM e, c2_$k c) WHERE rn = 1) GROUP BY cell),
-       |st_$k AS (SELECT $k AS k, max(n) AS max_n, sum(n) AS total FROM cnt_$k)""".stripMargin
-
-  /** Replays ivfRebalanceAdvice: one kmeans chain per candidate k, the
-    * integer-exact occupancy-budget comparison, smallest-meeting-k per
-    * threshold with the argmin fallback. */
-  private lazy val ivfRebalanceOracleSql: String = {
-    def chain(k: Int): String = ivfKChainSql(k)
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |${chain(16)},
-       |${chain(24)},
-       |${chain(32)},
-       |cand AS (SELECT * FROM st_16 UNION ALL SELECT * FROM st_24 UNION ALL SELECT * FROM st_32),
-       |taus AS (SELECT unnest([125, 110]) AS threshold_pct),
-       |meets AS (SELECT t.threshold_pct, c.k FROM taus t JOIN cand c
-       |  ON c.max_n * 16 * 100 <= t.threshold_pct * c.total),
-       |pick AS (SELECT threshold_pct, min(k) AS k FROM meets GROUP BY 1),
-       |fallback AS (SELECT threshold_pct, k FROM (
-       |  SELECT t.threshold_pct, c.k,
-       |    row_number() OVER (PARTITION BY t.threshold_pct ORDER BY c.max_n, c.k) AS rn
-       |  FROM taus t, cand c) WHERE rn = 1),
-       |chosen AS (SELECT t.threshold_pct, coalesce(p.k, f.k) AS k FROM taus t
-       |  LEFT JOIN pick p USING (threshold_pct)
-       |  JOIN fallback f ON f.threshold_pct = t.threshold_pct)
-       |SELECT CAST(ch.threshold_pct AS INTEGER) AS threshold_pct,
-       |  CAST(16 AS INTEGER) AS cur_k,
-       |  CAST(cur.max_n AS BIGINT) AS cur_max_n,
-       |  CASE WHEN ch.k = 16 THEN 'keep' ELSE 'retrain' END AS decision,
-       |  CAST(ch.k AS INTEGER) AS chosen_k,
-       |  CAST(cc.max_n AS BIGINT) AS chosen_max_n
-       |FROM chosen ch CROSS JOIN st_16 cur JOIN cand cc ON cc.k = ch.k""".stripMargin
-  }
-
-  /** Replays ivfRebalanceApply at one threshold: verdict, the chosen
-    * chain's committed-index stats, and the integer-exact budget proof. */
-  private lazy val ivfRebalanceApplyOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |${ivfKChainSql(16)},
-       |${ivfKChainSql(24)},
-       |${ivfKChainSql(32)},
-       |cand AS (SELECT * FROM st_16 UNION ALL SELECT * FROM st_24 UNION ALL SELECT * FROM st_32),
-       |meets AS (SELECT k FROM cand WHERE max_n * 16 * 100 <= 110 * total),
-       |fallback AS (SELECT k FROM cand ORDER BY max_n, k LIMIT 1),
-       |chosen AS (SELECT coalesce((SELECT min(k) FROM meets), (SELECT k FROM fallback)) AS k)
-       |SELECT CAST(110 AS INTEGER) AS threshold_pct,
-       |  CASE WHEN ch.k = 16 THEN 'keep' ELSE 'retrain' END AS decision,
-       |  CAST(ch.k AS INTEGER) AS chosen_k,
-       |  CAST(cur.max_n AS BIGINT) AS cur_max_n,
-       |  CAST(cc.max_n AS BIGINT) AS post_max_n,
-       |  cc.max_n * 16 * 100 <= 110 * cc.total AS fits_budget
-       |FROM chosen ch CROSS JOIN st_16 cur JOIN cand cc ON cc.k = ch.k""".stripMargin
-
-  private lazy val ivfpqResidualOracleSql: String =
-    s"""$ivfpqResidualChainSql
-      |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM rnk WHERE rk <= 5""".stripMargin
-
-  /** Recall@5 of the residual IVF-PQ ranking vs the exact cosine top-5
-    * (`ex_*` CTEs) — the eval that prices the residual encoding. */
-  private lazy val ivfpqResidualRecallOracleSql: String =
-    s"""$ivfpqResidualChainSql,
-      |ex_s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.v", "c.v")} AS sim
-      |  FROM e c, e q WHERE q.vec_id < 10 AND c.vec_id != q.vec_id),
-      |ex_r AS (SELECT query_id, neighbor_id FROM
-      |  (SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM ex_s)
-      |  WHERE rk <= 5),
-      |approx AS (SELECT query_id, neighbor_id FROM rnk WHERE rk <= 5),
-      |hits AS (SELECT query_id, count(*) AS n_hit FROM approx
-      |  WHERE EXISTS (SELECT 1 FROM ex_r x WHERE x.query_id = approx.query_id AND x.neighbor_id = approx.neighbor_id)
-      |  GROUP BY query_id)
-      |SELECT q.vec_id AS query_id, coalesce(h.n_hit, 0) AS n_hit,
-      |  round(coalesce(h.n_hit, 0) / 5.0, 6) AS recall
-      |FROM (SELECT vec_id FROM e WHERE vec_id < 10) q
-      |LEFT JOIN hits h ON h.query_id = q.vec_id""".stripMargin
-
-  // Shared fragments of the inverted-index oracles. Every float literal
-  // pins ::DOUBLE (a bare decimal parses as DECIMAL here, and these
-  // queries rank by the EXACT decimal score sum, so the per-posting
-  // double must be bit-identical to the Spark side — same IEEE ops in the
-  // same order, not merely equal after round(6)).
-  private val invidxQueries3 =
-    "(0, 'spark'), (0, 'table'), (0, 'window'), (1, 'join'), (1, 'filter'), " +
-      "(2, 'vector'), (2, 'stream'), (2, 'hash')"
-  private val invidxQueries2 =
-    "(0, 'spark'), (0, 'table'), (0, 'window'), (1, 'join'), (1, 'filter')"
-  // The tf-side factor — graft.ops.Retrieval.tfFactor's exact op order:
-  // (tf·(k1+1)) / (tf + k1·(1−b+b·dl/avgdl)), avgdl = total_dl/n_docs.
-  private val invidxImpactSql =
-    "(tf.tf * (1.2::DOUBLE + 1.0::DOUBLE)) / (tf.tf + 1.2::DOUBLE * " +
-      "(1.0::DOUBLE - 0.75::DOUBLE + 0.75::DOUBLE * l.dl / " +
-      "(CAST(st.total_dl AS DOUBLE) / st.n_docs)))"
-  // idf (DECIMAL-canonicalized) × tf-factor — Retrieval.bm25TopK's s.
-  private val invidxScoreSql =
-    "CAST(CAST(ln(1.0::DOUBLE + (st.n_docs - dfq.dfc + 0.5::DOUBLE) / " +
-      s"(dfq.dfc + 0.5::DOUBLE)) AS DECIMAL(27,12)) AS DOUBLE) * $invidxImpactSql AS s"
-
-  /** The sign-LSH candidate-pair CTEs shared by the sim_lsh_near_dup,
-    * sim_knn_graph, and sim_hnsw_* oracles — ONE copy of the SQL that
-    * must stay bit-identical to the Scala LSH build (same md5 plane
-    * family, same band*8+j plane indexing), so a plane-family tweak
-    * can't silently diverge one oracle. Exposes CTEs `e` (corpus), `bk`
-    * (per-band buckets), `cand` (colliding id pairs), `p` (scored
-    * pairs). */
-  private def lshPairCtes(bands: Int): String =
-    s"""e AS (SELECT vec_id, embedding AS v FROM embeddings),
-      |bk AS (SELECT vec_id, t.b AS band, list_sum(list_transform(generate_series(0,7), j ->
-      |  CASE WHEN list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(v)), i ->
-      |    v[i]::DOUBLE * (CASE WHEN (('0x'||substr(md5((t.b*8+j)::VARCHAR||':'||(i-1)::VARCHAR),1,15))::UBIGINT & 1) = 1 THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END))), (a,x) -> a+x) >= 0
-      |  THEN (1 << j) ELSE 0 END)) AS bucket FROM e, range($bands) t(b)),
-      |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-      |         FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-      |p AS (SELECT c.a_id, c.b_id, ${cosSql("ea.v", "eb.v")} AS sim
-      |  FROM cand c JOIN e ea ON ea.vec_id = c.a_id JOIN e eb ON eb.vec_id = c.b_id)""".stripMargin
-
-  /** The tuned kNN-graph CTEs (bands=4, degree=12) shared by the
-    * sim_hnsw_* beam replays and the sim_label_prop oracle: the LSH
-    * candidate pairs ([[lshPairCtes]]) symmetrized and cut per source to
-    * the top-12 by (sim DESC, dst ASC) — exactly Similarity.knnGraph's
-    * committed edge set. Exposes `e` (corpus) and `g` (directed edges). */
-  private lazy val knnGraphGCtes: String =
-    s"""${lshPairCtes(4)},
-      |sym AS (SELECT a_id AS src, b_id AS dst, sim FROM p
-      |        UNION ALL SELECT b_id, a_id, sim FROM p),
-      |rk AS (SELECT src, dst, sim,
-      |    row_number() OVER (PARTITION BY src ORDER BY sim DESC, dst ASC) AS rnk
-      |  FROM sym),
-      |g AS (SELECT src, dst FROM rk WHERE rnk <= 12)""".stripMargin
-
-  /** The graph-ANN beam-search replay shared by the sim_hnsw_* oracles:
-    * sim_knn_graph's LSH graph CTEs ([[lshPairCtes]]), the md5
-    * entry-point seed rule, 8 UNROLLED beam rounds (expand along
-    * top-degree edges, score, keep top-beam by sim DESC, node ASC), and
-    * the re-scored final beam `f`. Exposes CTEs `e` (corpus), `q`
-    * (probes), `f` (final beam). */
-  private lazy val hnswBeamCtes: String = {
-    val roundCtes = (1 to 8).map { r =>
-      s"""c$r AS (SELECT query_id, node FROM b${r - 1}
-        |  UNION SELECT b.query_id, g.dst AS node FROM b${r - 1} b JOIN g ON g.src = b.node),
-        |s$r AS (SELECT c.query_id, c.node, ${cosSql("q.qv", "e.v")} AS sim
-        |  FROM c$r c JOIN e ON e.vec_id = c.node JOIN q ON q.query_id = c.query_id),
-        |b$r AS (SELECT query_id, node FROM (SELECT query_id, node,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, node ASC) AS br FROM s$r)
-        |  WHERE br <= 32)""".stripMargin
-    }.mkString(",\n")
-    s"""$knnGraphGCtes,
-      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-      |ent AS (SELECT vec_id AS node FROM e ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8),
-      |b0 AS (SELECT q.query_id, ent.node FROM q, ent),
-      |$roundCtes,
-      |f AS (SELECT b.query_id, b.node, ${cosSql("q.qv", "e.v")} AS sim
-      |  FROM b8 b JOIN e ON e.vec_id = b.node JOIN q ON q.query_id = b.query_id)""".stripMargin
-  }
-
-  private def cosSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len($a)), i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (x,y) -> x+y)" +
-      s" / (sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len($a)), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)), (x,y) -> x+y))" +
-      s" * sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len($b)), i -> $b[i]::DOUBLE * $b[i]::DOUBLE)), (x,y) -> x+y)))"
-
-  /** One Lloyd round in DuckDB SQL: assign each vector of `e` to its nearest
-    * centroid in `centCte`, then recompute per-cell component means with
-    * DECIMAL(27,12)-routed sums — mirroring Similarity.kmeansCentroids
-    * bit for bit (same fold, same tie-break, same decimal route). */
-  private def lloydRoundSql(centCte: String, dim: Int): String =
-    lloydRoundSqlFrom("e", centCte, dim)
-
-  /** One Lloyd round over an arbitrary (vec_id, v) source CTE — the
-    * subspace k-means chains of the PQ oracles reuse the IVF recipe with
-    * sliced vectors. */
-  private def lloydRoundSqlFrom(srcCte: String, centCte: String, dim: Int): String =
-    s"""(SELECT cell AS cent_id, list(mu ORDER BY pos) AS cv FROM (
-       |  SELECT cell, i - 1 AS pos,
-       |    CAST(SUM(CAST(v[i] AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*) AS mu
-       |  FROM (SELECT vec_id, v, cell FROM (
-       |      SELECT e.vec_id, e.v, c.cent_id AS cell,
-       |        row_number() OVER (PARTITION BY e.vec_id
-       |          ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cent_id) AS rn
-       |      FROM $srcCte e, $centCte c) WHERE rn = 1),
-       |    generate_series(1, $dim) g(i)
-       |  GROUP BY 1, 2) GROUP BY cell)""".stripMargin
-
-  /** The BPE induction CTE chain: 12 rounds of (pair count → top-1 →
-    * 6-deep literal replace), mirroring Corpus.bpeMerges(nMerges = 12,
-    * maxChain = 6) bit-for-bit — the merge pair each round comes from the
-    * data via 1-row scalar subqueries. */
-  private lazy val bpeChainSql: String = {
-    val out = (1 to 12).map(k =>
-      s"SELECT $k AS merge_idx, a AS left_sym, b AS right_sym, CAST(cnt AS BIGINT) AS pair_count FROM p$k")
-      .mkString("\nUNION ALL\n")
-    s"$bpeCtes\n$out"
-  }
-
-  /** The w0/p1..w11/p12 CTE list shared by the induction and application
-    * oracles. */
-  private lazy val bpeCtes: String = bpeCtesFor("", "")
-
-  /** The BPE chain parameterized by a CTE-name prefix and a source
-    * filter, so two independent inductions (the drift oracle's corpus
-    * halves) coexist in one statement. */
-  private def bpeCtesFor(pfx: String, where: String): String = {
-    val n = 12
-    // every CTE is MATERIALIZED: the chain is 12 rounds deep and each
-    // round references its predecessor several times (scalar subqueries
-    // inside the nested replaces) — default CTE inlining would expand the
-    // tree exponentially and re-open the parquet 2^12 times
-    val w0 =
-      s"""${pfx}w0 AS MATERIALIZED (SELECT '|' || array_to_string(string_split(w, ''), '|') || '|' AS s, n FROM (
-        |  SELECT w, count(*) AS n FROM (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents$where) GROUP BY 1))""".stripMargin
-    val rounds = (1 to n).map { k =>
-      val rep = (1 to 6).foldLeft("s") { (e, _) =>
-        s"replace($e, (SELECT '|'||a||'|'||b||'|' FROM ${pfx}p$k), (SELECT '|'||a||b||'|' FROM ${pfx}p$k))"
-      }
-      val pCte =
-        s"""${pfx}p$k AS MATERIALIZED (SELECT a, b, cnt FROM (
-           |  SELECT string_split(pr, chr(1))[1] AS a, string_split(pr, chr(1))[2] AS b, sum(n) AS cnt
-           |  FROM (SELECT n, unnest(list_transform(generate_series(1, len(sy)-1), i -> sy[i] || chr(1) || sy[i+1])) AS pr
-           |        FROM (SELECT list_filter(string_split(s, '|'), x -> x != '') AS sy, n FROM ${pfx}w${k - 1}))
-           |  GROUP BY 1, 2 ORDER BY cnt DESC, a, b LIMIT 1))""".stripMargin
-      if (k < n) pCte + s",\n${pfx}w$k AS MATERIALIZED (SELECT $rep AS s, n FROM ${pfx}w${k - 1})"
-      else pCte
-    }.mkString(",\n")
-    s"$w0,\n$rounds"
-  }
-
-  /** The same 12-round chain, applied: segments the distinct-word vocab
-    * with the learned merges (72 nested scalar-subquery replaces) and
-    * aggregates per document — mirrors Corpus.bpeSegment. */
-  private lazy val bpeSegmentSql: String = {
-    val ctes = bpeCtes
-    val appliedExpr = (1 to 12).foldLeft(
-      "'|' || array_to_string(string_split(w, ''), '|') || '|'") { (e, k) =>
-      (1 to 6).foldLeft(e) { (e2, _) =>
-        s"replace($e2, (SELECT '|'||a||'|'||b||'|' FROM p$k), (SELECT '|'||a||b||'|' FROM p$k))"
-      }
-    }
-    s"""$ctes,
-       |voc AS MATERIALIZED (SELECT w, len(list_filter(string_split($appliedExpr, '|'), x -> x != '')) AS nt
-       |  FROM (SELECT DISTINCT unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents)),
-       |occ AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents)
-       |SELECT occ.doc_id, CAST(count(*) AS INTEGER) AS n_word_tokens,
-       |  CAST(sum(voc.nt) AS INTEGER) AS n_bpe_tokens,
-       |  round(sum(voc.nt) / count(*), 6) AS bpe_per_word
-       |FROM occ JOIN voc USING (w) GROUP BY 1""".stripMargin
-  }
-
-  /** The shipped-tokenizer chain: merges learned on the even-doc_id half
-    * only (tr-prefixed CTEs), applied to the FULL corpus's vocabulary —
-    * mirrors Corpus.bpeSegmentWith(bpeMergeTable(half), all). */
-  private lazy val bpeApplySql: String = {
-    val ctes = bpeCtesFor("tr", " WHERE doc_id % 2 = 0")
-    val appliedExpr = (1 to 12).foldLeft(
-      "'|' || array_to_string(string_split(w, ''), '|') || '|'") { (e, k) =>
-      (1 to 6).foldLeft(e) { (e2, _) =>
-        s"replace($e2, (SELECT '|'||a||'|'||b||'|' FROM trp$k), (SELECT '|'||a||b||'|' FROM trp$k))"
-      }
-    }
-    s"""$ctes,
-       |voc AS MATERIALIZED (SELECT w, len(list_filter(string_split($appliedExpr, '|'), x -> x != '')) AS nt
-       |  FROM (SELECT DISTINCT unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents)),
-       |occ AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents)
-       |SELECT occ.doc_id, CAST(count(*) AS INTEGER) AS n_word_tokens,
-       |  CAST(sum(voc.nt) AS INTEGER) AS n_bpe_tokens,
-       |  round(sum(voc.nt) / count(*), 6) AS bpe_per_word
-       |FROM occ JOIN voc USING (w) GROUP BY 1""".stripMargin
-  }
-
-  /** The PQ codebook/encode/reconstruct CTE chain shared by the two PQ
-    * oracles: 4 subspaces × 16 dims, 16 centroids each, 2 Lloyd rounds —
-    * mirrors Similarity.pqReconstruct(dim=64, m=4, k=16) bit-for-bit. */
-  private lazy val pqChainSql: String = {
-    val m = 4
-    val sub = 16
-    val per = (0 until m).map { j =>
-      val lo = j * sub + 1
-      val hi = (j + 1) * sub
-      s"""es$j AS (SELECT vec_id, v[$lo:$hi] AS v FROM e),
-         |seeds$j AS (SELECT vec_id AS cent_id, v AS cv FROM es$j ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-         |c1_$j AS ${lloydRoundSqlFrom(s"es$j", s"seeds$j", sub)},
-         |c2_$j AS ${lloydRoundSqlFrom(s"es$j", s"c1_$j", sub)},
-         |code$j AS (SELECT vec_id, cv FROM (
-         |  SELECT s.vec_id, c.cv, row_number() OVER (PARTITION BY s.vec_id ORDER BY ${cosSql("s.v", "c.cv")} DESC, c.cent_id) AS rn
-         |  FROM es$j s, c2_$j c) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""$per,
-       |recon AS (SELECT k0.vec_id, k0.cv || k1.cv || k2.cv || k3.cv AS rv
-       |  FROM code0 k0 JOIN code1 k1 USING (vec_id) JOIN code2 k2 USING (vec_id)
-       |  JOIN code3 k3 USING (vec_id))""".stripMargin
-  }
-
-  /** The Bradley–Terry MM replay: count matrix, 8 unrolled rounds (join
-    * previous scores once via the self-loop-augmented matrix, window-max
-    * π_i back into the i-partition, DECIMAL-routed j-sum), normalized
-    * through one unbounded window — mirrors EventOps.bradleyTerry
-    * bit-for-bit. */
-  private lazy val btRankOracleSql: String = btRankOracleSqlFor("")
-
-  /** The same MM replay over a filtered event slice — the streaming
-    * maintenance oracle (`stream_pref_rank`) solves the bounded feed. */
-  private def btRankOracleSqlFor(where: String): String = {
-    val rounds = (1 to 8).map { k =>
-      s"""bt$k AS (SELECT gs.i, gs.j, gs.n, p.pi AS pj FROM gs JOIN br${k - 1} p ON p.item = gs.j),
-        |bu$k AS (SELECT i, j, n, pj, max(CASE WHEN j = i THEN pj END) OVER (PARTITION BY i) AS pii FROM bt$k),
-        |bd$k AS (SELECT i, sum(CAST(n / (pii + pj) AS DECIMAL(27,12))) AS den FROM bu$k WHERE j != i GROUP BY 1),
-        |br$k AS (SELECT d.i AS item, w.wins / CAST(d.den AS DOUBLE) AS pi FROM bd$k d JOIN wins w ON w.i = d.i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pr AS (SELECT event_id % 7 AS ia,
-      |    CASE WHEN ((event_id // 7) % 6) >= (event_id % 7) THEN ((event_id // 7) % 6) + 1 ELSE (event_id // 7) % 6 END AS ib,
-      |    CASE WHEN value >= 35.0 THEN 1 ELSE 0 END AS awin FROM events$where),
-      |dirn AS (SELECT ia AS i, ib AS j, awin AS wi FROM pr UNION ALL SELECT ib, ia, 1 - awin FROM pr),
-      |gm AS (SELECT i, j, count(*) AS n, sum(wi) AS w FROM dirn GROUP BY 1, 2),
-      |wins AS (SELECT i, sum(w) AS wins FROM gm GROUP BY 1),
-      |items AS (SELECT DISTINCT i FROM gm),
-      |gs AS (SELECT i, j, n FROM gm UNION ALL SELECT i, i, 0 FROM items),
-      |br0 AS (SELECT i AS item, 1.0::DOUBLE AS pi FROM items),
-      |$rounds
-      |SELECT item, round(pi / CAST(tot AS DOUBLE), 6) AS score,
-      |  CAST(row_number() OVER (ORDER BY pi / CAST(tot AS DOUBLE) DESC, item ASC) AS INTEGER) AS "rank"
-      |FROM (SELECT item, pi, sum(CAST(pi AS DECIMAL(27,12))) OVER () AS tot FROM br8)""".stripMargin
-  }
-
-  /** The label-propagation replay: the committed kNN graph's edge CTEs
-    * ([[knnGraphGCtes]]) plus 3 unrolled plurality rounds (self-loop
-    * fallback, seed clamping) — mirrors Components.labelPropagate. */
-  private lazy val labelPropOracleSql: String = {
-    val rounds = (1 to 3).map { k =>
-      s"""lt$k AS (SELECT ga.src, p.label, ga.w FROM ga JOIN lr${k - 1} p ON p.id = ga.dst WHERE p.label IS NOT NULL),
-        |lc$k AS (SELECT src, label, sum(w) AS cnt, max(CASE WHEN w = 0 THEN 1 ELSE 0 END) AS own FROM lt$k GROUP BY 1, 2),
-        |lp$k AS (SELECT src, label FROM (SELECT src, label,
-        |    row_number() OVER (PARTITION BY src ORDER BY cnt DESC, own DESC, label ASC) AS rn FROM lc$k) WHERE rn = 1),
-        |lr$k AS (SELECT l.vec_id AS id, COALESCE(l.slabel, p.label) AS label FROM lbl l LEFT JOIN lp$k p ON p.src = l.vec_id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $knnGraphGCtes,
-      |lbl AS (SELECT vec_id, CASE WHEN vec_id % 5 = 0 THEN label END AS slabel FROM embeddings),
-      |ga AS (SELECT src, dst, 1 AS w FROM g UNION ALL SELECT vec_id, vec_id, 0 FROM lbl),
-      |lr0 AS (SELECT vec_id AS id, slabel AS label FROM lbl),
-      |$rounds
-      |SELECT id AS vec_id, label FROM lr3""".stripMargin
-  }
-
-  /** The fixed-order pass@k product Π_{i=0}^{k−1}(n−c−i)/(n−i) —
-    * identical op order to EventOps.passAtK's foldLeft. */
-  private def passkProdSql(k: Int): String =
-    (1 until k).foldLeft("(n - c) / n") { (e, i) =>
-      s"$e * ((n - c - $i) / (n - $i))"
-    }
-
-  def oracleSql: Map[String, String] = Map(
-    // Tightening a condition un-flags the band between the thresholds;
-    // the added rule touches only its own column; everything else is 0.
-    // Same expected diffs as plug_ruleset_diff — the governance layer
-    // (rule sets as table versions) must not change what the rules do.
-    "plug_governed_rules" ->
-      """SELECT * FROM (VALUES
-        |  ('l_quantity', CAST(0 AS BIGINT)),
-        |  ('l_extendedprice', CAST(0 AS BIGINT)),
-        |  ('l_discount', CAST(0 AS BIGINT)),
-        |  ('l_tax', CAST(0 AS BIGINT)),
-        |  ('l_returnflag', (SELECT count(*) FROM lineitem WHERE l_discount > 0.05 AND l_discount <= 0.10)),
-        |  ('l_linestatus', (SELECT count(*) FROM lineitem WHERE l_quantity > 40)),
-        |  ('l_shipdate', CAST(0 AS BIGINT))
-        |) t("column", n_diff)""".stripMargin,
-
-    "plug_ruleset_diff" ->
-      """SELECT * FROM (VALUES
-        |  ('l_quantity', CAST(0 AS BIGINT)),
-        |  ('l_extendedprice', CAST(0 AS BIGINT)),
-        |  ('l_discount', CAST(0 AS BIGINT)),
-        |  ('l_tax', CAST(0 AS BIGINT)),
-        |  ('l_returnflag', (SELECT count(*) FROM lineitem WHERE l_discount > 0.05 AND l_discount <= 0.10)),
-        |  ('l_linestatus', (SELECT count(*) FROM lineitem WHERE l_quantity > 40)),
-        |  ('l_shipdate', CAST(0 AS BIGINT))
-        |) t("column", n_diff)""".stripMargin,
-
-    // Replays the chain: r2's counts are taken over l_returnflag AS
-    // REWRITTEN by r1 (the CASE expression), not the raw column.
-    "plug_rule_hits" ->
-      """WITH s1 AS (SELECT l_quantity, l_linestatus, l_discount, l_returnflag,
-        |    CASE WHEN l_discount > 0.05 THEN 'D' ELSE l_returnflag END AS rf2
-        |  FROM lineitem)
-        |SELECT 'r1' AS rule_name,
-        |  count(*) FILTER (l_discount > 0.05) AS n_matched,
-        |  count(*) FILTER (l_discount > 0.05 AND l_returnflag IS DISTINCT FROM 'D') AS n_changed
-        |FROM s1
-        |UNION ALL
-        |SELECT 'r2',
-        |  count(*) FILTER (rf2 = 'D' AND l_quantity < 25),
-        |  count(*) FILTER (rf2 = 'D' AND l_quantity < 25 AND l_linestatus IS DISTINCT FROM 'X')
-        |FROM s1""".stripMargin,
-
-    "plug_flat_override" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_discount > 0.05 THEN 'D' ELSE l_returnflag END AS l_returnflag,
-        |l_discount FROM lineitem""".stripMargin,
-
-    "plug_int_coercion" ->
-      """SELECT l_orderkey, l_partkey,
-        |CASE WHEN l_quantity >= 49 THEN 99 ELSE l_linenumber END AS l_linenumber,
-        |l_quantity FROM lineitem""".stripMargin,
-
-    "plug_double_coercion" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_returnflag = 'A' THEN 0.5 ELSE l_quantity END AS l_quantity,
-        |l_returnflag FROM lineitem""".stripMargin,
-
-    "plug_backtick_expr" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_quantity < 10 THEN concat(l_returnflag, '-', l_linestatus) ELSE l_returnflag END AS l_returnflag,
-        |l_linestatus FROM lineitem""".stripMargin,
-
-    "plug_rule_chain" ->
-      """WITH s1 AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    CASE WHEN l_discount > 0.05 THEN 'D' ELSE l_returnflag END AS l_returnflag,
-        |    l_linestatus, l_tax
-        |  FROM lineitem)
-        |SELECT l_orderkey, l_linenumber, l_returnflag,
-        |  CASE WHEN l_returnflag = 'D' AND l_tax > 0.03 THEN 'X' ELSE l_linestatus END AS l_linestatus
-        |FROM s1""".stripMargin,
-
-    "plug_date_math_passthrough" ->
-      """SELECT o_orderkey,
-        |CASE WHEN year(o_orderdate) >= 1997 AND o_totalprice > 200000
-        |     THEN o_totalprice * 1.1 ELSE o_totalprice END AS o_totalprice,
-        |o_orderstatus FROM orders""".stripMargin,
-
-    "plug_keep_old_field" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_tax > 0.04 THEN 'X' ELSE l_linestatus END AS l_linestatus,
-        |l_linestatus AS l_linestatus_rko_old FROM lineitem""".stripMargin,
-
-    "plug_details_count" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_discount > 0.05 THEN 'D' ELSE l_returnflag END AS l_returnflag,
-        |CASE WHEN l_discount > 0.05 AND l_returnflag IS DISTINCT FROM 'D' THEN 1 ELSE 0 END AS n_details
-        |FROM lineitem""".stripMargin,
-
-    "plug_struct_override" ->
-      """SELECT p_partkey,
-        |CASE WHEN p_size > 40 THEN 1000.5 ELSE p_retailprice END AS min_price,
-        |p_retailprice * 1.2 AS max_price FROM part""".stripMargin,
-
-    // The map rewrite: lang entry replaced, flag entry added, src kept.
-    "plug_map_override" ->
-      """SELECT doc_id,
-        |CASE WHEN n_chars > 500 THEN 'xx' ELSE lang END AS m_lang,
-        |source AS m_src,
-        |CASE WHEN n_chars > 500 THEN 'long' ELSE NULL END AS m_flag
-        |FROM documents""".stripMargin,
-
-    "plug_array_struct_override" ->
-      """SELECT p_partkey, 'std' AS sku,
-        |round(CASE WHEN p_size > 40 THEN 0.0 ELSE p_retailprice END, 6) AS price
-        |FROM part WHERE p_size % 7 <> 0
-        |UNION ALL
-        |SELECT p_partkey, 'promo' AS sku,
-        |round(CASE WHEN p_size > 40 THEN 0.0 ELSE p_retailprice * 0.9 END, 6) AS price
-        |FROM part WHERE p_size % 7 <> 0""".stripMargin,
-
-    "plug_nested_struct_override" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_discount > 0.05 THEN 0.0 ELSE l_quantity END AS qty,
-        |l_discount AS disc, l_tax AS tax
-        |FROM lineitem""".stripMargin,
-
-    "plug_null_struct_preserved" ->
-      """SELECT p_partkey,
-        |CASE WHEN p_size > 5 THEN (CASE WHEN p_size > 40 THEN 1000.5 ELSE p_retailprice END) END AS min_price
-        |FROM part""".stripMargin,
-
-    "plug_validation_missing_field" ->
-      """SELECT 'rv' AS name, 'Field "no_such_column" not found in the schema.' AS error""",
-
-    "plug_dup_names" ->
-      """SELECT 'rdup' AS name, 'Only one version per rule should be applied.' AS error""",
-
-    // Re-judges the fixture written by the Spark query from its RAW lines:
-    // a line is clean iff it is valid JSON and each declared field is
-    // absent or of the declared type — exactly the PERMISSIVE
-    // corrupt-record contract the Spark side enforces.
-    "ingest_quarantine" ->
-      """WITH raw AS (SELECT raw FROM read_csv('/tmp/graft_ingest_fixture.jsonl', header=false, quote='', delim='', columns={'raw': 'VARCHAR'})),
-        |j AS (SELECT raw, json_valid(raw) AS ok,
-        |  json_type(try_cast(raw AS JSON), '$.id') AS tid,
-        |  json_type(try_cast(raw AS JSON), '$.name') AS tname FROM raw),
-        |c AS (SELECT raw, ok AND (tid IS NULL OR tid = 'UBIGINT') AND (tname IS NULL OR tname = 'VARCHAR') AS clean FROM j)
-        |SELECT count(*) FILTER (clean) AS clean_rows,
-        |  CAST(sum(CASE WHEN clean THEN CAST(json_extract_string(raw, '$.id') AS BIGINT) END) AS BIGINT) AS id_sum,
-        |  count(*) FILTER (NOT clean) AS quarantined
-        |FROM c""".stripMargin,
-
-    // Re-judges the raw CSV lines: clean iff exactly two fields and the id
-    // casts to BIGINT (empty-name rows are clean; wrong arity and type
-    // mismatches quarantine).
-    // Raw-line re-judgment with the same substr/try_cast rules.
-    "ingest_fixed_width" ->
-      """WITH raw AS (SELECT raw FROM read_csv('/tmp/graft_ingest_fw.txt', header=false, quote='', delim='', columns={'raw': 'VARCHAR'})),
-        |c AS (SELECT raw, strlen(raw) >= 16
-        |    AND (trim(substr(raw, 1, 3)) = '' OR try_cast(trim(substr(raw, 1, 3)) AS BIGINT) IS NOT NULL)
-        |    AND (trim(substr(raw, 11, 6)) = '' OR try_cast(trim(substr(raw, 11, 6)) AS DOUBLE) IS NOT NULL) AS clean
-        |  FROM raw)
-        |SELECT count(*) FILTER (clean) AS clean_rows,
-        |  CAST(sum(CASE WHEN clean THEN try_cast(trim(substr(raw, 1, 3)) AS BIGINT) END) AS BIGINT) AS id_sum,
-        |  CAST(sum(CASE WHEN clean THEN CAST(try_cast(trim(substr(raw, 11, 6)) AS DOUBLE) AS DECIMAL(18,6)) END) AS DOUBLE) AS amount_sum,
-        |  count(*) FILTER (NOT clean) AS quarantined
-        |FROM c""".stripMargin,
-
-    "ingest_csv" ->
-      """WITH raw AS (SELECT raw FROM read_csv('/tmp/graft_ingest_fixture.csv', header=false, quote='', delim='', columns={'raw': 'VARCHAR'}) WHERE raw != 'id,name'),
-        |c AS (SELECT raw,
-        |    len(string_split(raw, ',')) = 2 AND try_cast(string_split(raw, ',')[1] AS BIGINT) IS NOT NULL AS clean
-        |  FROM raw)
-        |SELECT count(*) FILTER (clean) AS clean_rows,
-        |  CAST(sum(CASE WHEN clean THEN try_cast(string_split(raw, ',')[1] AS BIGINT) END) AS BIGINT) AS id_sum,
-        |  count(*) FILTER (NOT clean) AS quarantined
-        |FROM c""".stripMargin,
-
-    "plug_rules_ingest" ->
-      """SELECT 'rule1' AS name, 'v1' AS version, 'l_discount > 0.05' AS rule_condition,
-        |  1 AS n_actions, 'l_returnflag' AS key1, 'D' AS value1
-        |UNION ALL
-        |SELECT 'rule2', 'v2', 'l_quantity < 10', 2, 'l_linestatus', 'X'""".stripMargin,
-
-    "plug_sql_dryrun_error" ->
-      """SELECT 'rdry' AS name, '[SQL Error]' AS err_prefix, true AS mentions_fn""",
-
-    "plug_observe_count" ->
-      """SELECT 'robs' AS name, count(*) AS changed_rows FROM lineitem
-        |WHERE l_discount > 0.05 AND l_returnflag IS DISTINCT FROM 'D'""".stripMargin,
-
-    "plug_staging_partitions" ->
-      """SELECT 'stage' AS name, 7 AS n_partitions""",
-
-    "plug_scrub_documents" ->
-      """SELECT doc_id, lang,
-        |md5(CASE WHEN lang = 'en' AND length(text) < 300
-        |    THEN regexp_replace(text, '[0-9]+', '<num>', 'g') ELSE text END) AS text_md5
-        |FROM documents""".stripMargin,
-
-    "text_token_stats" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents)
-        |SELECT doc_id,
-        |  CAST(length(text) AS INTEGER) AS n_chars,
-        |  CAST(len(toks) AS INTEGER) AS n_tokens,
-        |  length(regexp_replace(text, '\s+', '', 'g')) / greatest(len(toks), 1) AS avg_token_len,
-        |  md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-        |FROM t""".stripMargin,
-
-    "text_quality" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |q AS (SELECT doc_id, text, toks,
-        |  length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct,
-        |  len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) AS stops
-        |  FROM t)
-        |SELECT doc_id,
-        |  punct / greatest(length(text), 1) AS punct_ratio,
-        |  stops / greatest(len(toks), 1) AS stop_ratio,
-        |  least(len(toks) / 100.0, 1.0) * 0.4 + (1.0 - punct / greatest(length(text), 1)) * 0.3 + (stops / greatest(len(toks), 1)) * 0.3 AS quality
-        |FROM q""".stripMargin,
-
-    "text_lang_id" ->
-      """WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sc AS (SELECT doc_id, lang,
-        |  len(list_filter(toks, x -> list_contains(['the','a','and','of','to','in','is'], x))) AS s_en,
-        |  len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','nicht'], x))) AS s_de,
-        |  len(list_filter(toks, x -> list_contains(['le','la','les','et','est','pas'], x))) AS s_fr,
-        |  len(list_filter(toks, x -> list_contains(['el','los','las','y','es','no'], x))) AS s_es,
-        |  len(list_filter(toks, x -> list_contains(['的','是','不','了','在'], x))) AS s_zh
-        | FROM t)
-        |SELECT doc_id, lang,
-        |  CASE WHEN s_en >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_en > 0 THEN 'en'
-        |       WHEN s_de >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_de > 0 THEN 'de'
-        |       WHEN s_fr >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_fr > 0 THEN 'fr'
-        |       WHEN s_es >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_es > 0 THEN 'es'
-        |       WHEN s_zh >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_zh > 0 THEN 'zh'
-        |       ELSE 'und' END AS lang_pred
-        |FROM sc""".stripMargin,
-
-    // The text_lang_id CASE chain grouped into (actual, pred) cells with
-    // per-actual shares.
-    "text_lang_confusion" ->
-      """WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sc AS (SELECT doc_id, lang,
-        |  len(list_filter(toks, x -> list_contains(['the','a','and','of','to','in','is'], x))) AS s_en,
-        |  len(list_filter(toks, x -> list_contains(['der','die','das','und','ist','nicht'], x))) AS s_de,
-        |  len(list_filter(toks, x -> list_contains(['le','la','les','et','est','pas'], x))) AS s_fr,
-        |  len(list_filter(toks, x -> list_contains(['el','los','las','y','es','no'], x))) AS s_es,
-        |  len(list_filter(toks, x -> list_contains(['的','是','不','了','在'], x))) AS s_zh
-        | FROM t),
-        |pr AS (SELECT lang,
-        |  CASE WHEN s_en >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_en > 0 THEN 'en'
-        |       WHEN s_de >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_de > 0 THEN 'de'
-        |       WHEN s_fr >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_fr > 0 THEN 'fr'
-        |       WHEN s_es >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_es > 0 THEN 'es'
-        |       WHEN s_zh >= greatest(s_en,s_de,s_fr,s_es,s_zh) AND s_zh > 0 THEN 'zh'
-        |       ELSE 'und' END AS lang_pred
-        |FROM sc),
-        |c AS (SELECT lang, lang_pred, count(*) AS n FROM pr GROUP BY 1, 2),
-        |tot AS (SELECT lang, sum(n) AS total FROM c GROUP BY 1)
-        |SELECT c.lang, c.lang_pred, c.n,
-        |  round(CAST(c.n AS DOUBLE) / tot.total, 6) AS share
-        |FROM c JOIN tot ON c.lang = tot.lang""".stripMargin,
-
-    "docs_union_evolve" ->
-      """SELECT doc_id, text, lang, CAST(NULL AS VARCHAR) AS source,
-        |  CAST(NULL AS BIGINT) AS n_chars
-        |FROM documents WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT doc_id, text, CAST(NULL AS VARCHAR) AS lang, source, n_chars
-        |FROM documents WHERE doc_id % 2 = 1""".stripMargin,
-
-    "text_token_freq" ->
-      """SELECT token, count(*) AS cnt FROM (
-        |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS token FROM documents)
-        |GROUP BY token ORDER BY cnt DESC, token LIMIT 100""".stripMargin,
-
-    "text_bpeish_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpe_tokens,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS n_word_tokens
-        |FROM documents""".stripMargin,
-
-    "events_props_extract" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
-        |  min(doc_id) AS keep_id, count(*) AS n_dupes
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "dedup_size_hist" ->
-      """WITH d AS (SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp,
-        |    count(*) AS n_dupes
-        |  FROM documents GROUP BY 1)
-        |SELECT n_dupes AS cluster_size, count(*) AS n_clusters,
-        |  n_dupes * count(*) AS n_docs
-        |FROM d GROUP BY 1""".stripMargin,
-
-    // Window formulation of the survivor pick — a different algorithm
-    // than Spark's max_by aggregate, agreeing exactly because the
-    // (score, -id) order is total.
-    "dedup_exact_best" ->
-      """WITH f AS (SELECT doc_id, n_chars,
-        |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-        |  FROM documents),
-        |r AS (SELECT fp, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY fp ORDER BY n_chars DESC, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY fp) AS n_dupes
-        |  FROM f)
-        |SELECT fp, doc_id AS keep_id, CAST(n_chars AS BIGINT) AS best_score, n_dupes
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "dedup_minhash_lsh" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id)
-        |SELECT c.a_id, c.b_id,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.7 AS is_dup
-        |FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id""".stripMargin,
-
-    // The dedup_minhash_lsh banding CTE; verification swaps Jaccard for
-    // Levenshtein over the 200-char prefixes.
-    "dedup_edit_distance" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |px AS (SELECT doc_id, substr(text, 1, 200) AS p FROM documents)
-        |SELECT c.a_id, c.b_id,
-        |  CASE WHEN levenshtein(pa.p, pb.p) <= 60 THEN CAST(levenshtein(pa.p, pb.p) AS INTEGER) END AS edit_dist,
-        |  levenshtein(pa.p, pb.p) <= 60 AS is_dup
-        |FROM cand c JOIN px pa ON c.a_id = pa.doc_id JOIN px pb ON c.b_id = pb.doc_id""".stripMargin,
-
-    "dedup_cluster_cc" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-        |  FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id),
-        |e AS (SELECT a_id AS s, b_id AS d FROM p WHERE jaccard >= 0.7
-        |      UNION ALL SELECT b_id, a_id FROM p WHERE jaccard >= 0.7),
-        |reach AS (SELECT doc_id AS id, doc_id AS r FROM documents
-        |          UNION SELECT reach.id, e.d FROM reach JOIN e ON reach.r = e.s)
-        |SELECT id AS doc_id, min(r) AS cluster_id, min(r) = id AS is_keeper
-        |FROM reach GROUP BY id""".stripMargin,
-
-    // Ground truth brute-forces ALL pairs (affordable for DuckDB at the
-    // verify sf); pairs sharing no shingle have Jaccard 0 and drop, so it
-    // equals the Spark side's shared-gram enumeration.
-    "dedup_lsh_eval" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |ver AS (SELECT count(*) AS n FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id
-        |  WHERE len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.7),
-        |truth AS (SELECT count(*) AS n FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.sh, b.sh)) / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.7),
-        |nc AS (SELECT count(*) AS n FROM cand)
-        |SELECT truth.n AS n_true_pairs, nc.n AS n_candidates, ver.n AS n_verified,
-        |  round(ver.n / truth.n, 6) AS recall, round(ver.n / nc.n, 6) AS precision
-        |FROM truth, nc, ver""".stripMargin,
-
-    // The PageRank recurrence is replayed bit-for-bit: pr/deg is the same
-    // IEEE double in both engines, per-edge contributions are cast to
-    // DECIMAL(28,15) so the incoming sum is exact (order-independent),
-    // and (1-d)/d arithmetic is forced to DOUBLE (DuckDB's bare numeric
-    // literals are DECIMAL and would compute an exact 0.15 instead of
-    // the double 1.0-0.85 the Scala side folds).
-    "dedup_pagerank" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-        |  FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id),
-        |e AS (SELECT a_id AS s, b_id AS d FROM p WHERE jaccard >= 0.7
-        |      UNION ALL SELECT b_id, a_id FROM p WHERE jaccard >= 0.7),
-        |dg AS (SELECT s, count(*) AS deg FROM e GROUP BY 1),
-        |pr0 AS (SELECT doc_id AS id, CAST(1.0 AS DOUBLE) AS pr FROM documents),
-        |c1 AS (SELECT e.d AS id, CAST(pr0.pr / dg.deg AS DECIMAL(28,15)) AS c
-        |       FROM e JOIN dg ON e.s = dg.s JOIN pr0 ON e.s = pr0.id),
-        |pr1 AS (SELECT p0.id, (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + CAST(0.85 AS DOUBLE) * coalesce(CAST(x.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS pr
-        |        FROM pr0 p0 LEFT JOIN (SELECT id, sum(c) AS cs FROM c1 GROUP BY 1) x ON p0.id = x.id),
-        |c2 AS (SELECT e.d AS id, CAST(pr1.pr / dg.deg AS DECIMAL(28,15)) AS c
-        |       FROM e JOIN dg ON e.s = dg.s JOIN pr1 ON e.s = pr1.id),
-        |pr2 AS (SELECT p1.id, (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + CAST(0.85 AS DOUBLE) * coalesce(CAST(x.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS pr
-        |        FROM pr1 p1 LEFT JOIN (SELECT id, sum(c) AS cs FROM c2 GROUP BY 1) x ON p1.id = x.id),
-        |c3 AS (SELECT e.d AS id, CAST(pr2.pr / dg.deg AS DECIMAL(28,15)) AS c
-        |       FROM e JOIN dg ON e.s = dg.s JOIN pr2 ON e.s = pr2.id),
-        |pr3 AS (SELECT p2.id, (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + CAST(0.85 AS DOUBLE) * coalesce(CAST(x.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS pr
-        |        FROM pr2 p2 LEFT JOIN (SELECT id, sum(c) AS cs FROM c3 GROUP BY 1) x ON p2.id = x.id)
-        |SELECT id AS doc_id, round(pr, 6) AS pagerank FROM pr3""".stripMargin,
-
-    // Same verified near-dup edge CTE as dedup_pagerank; the triangle join
-    // is the NAIVE ordered 3-way (a<b<c), independent of the Spark side's
-    // degree-ordered orientation — the hash match proves the orientation.
-    "dedup_triangles" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-        |  FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id),
-        |e AS (SELECT a_id AS u, b_id AS v FROM p WHERE jaccard >= 0.7),
-        |deg AS (SELECT x, count(*) AS d FROM (SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e) GROUP BY 1),
-        |tri AS (SELECT count(*) AS n_triangles FROM e e1 JOIN e e2 ON e2.u = e1.v JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-        |wd AS (SELECT CAST(coalesce(sum(d * (d - 1) // 2), 0) AS BIGINT) AS n_wedges FROM deg)
-        |SELECT (SELECT count(*) FROM e) AS n_edges,
-        |  tri.n_triangles, wd.n_wedges,
-        |  round(CASE WHEN wd.n_wedges = 0 THEN 0.0
-        |             ELSE 3.0 * tri.n_triangles / wd.n_wedges END, 6) AS global_cc
-        |FROM tri, wd""".stripMargin,
-
-    "docs_hash_sample" ->
-      """SELECT doc_id, lang, source, bucket FROM (
-        |  SELECT doc_id, lang, source,
-        |    (('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 10000 AS bucket
-        |  FROM documents)
-        |WHERE bucket < 1000""".stripMargin,
-
-    "text_tfidf" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |x AS (SELECT doc_id, unnest(toks) AS term FROM t),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM x GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-        |  round((tf.tf / dl.dl) * (ln((n.n_docs + 1) / (dfq.df + 1)) + 1), 6) AS tfidf
-        |FROM tf JOIN dl ON tf.doc_id = dl.doc_id JOIN dfq ON tf.term = dfq.term CROSS JOIN n""".stripMargin,
-
-    // The text_tfidf chain + per-doc rounded-score ranking.
-    "text_keywords" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |x AS (SELECT doc_id, unnest(toks) AS term FROM t),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM x GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n_docs FROM documents),
-        |sc AS (SELECT tf.doc_id, tf.term,
-        |    round((tf.tf / dl.dl) * (ln((n.n_docs + 1) / (dfq.df + 1)) + 1), 6) AS tfidf
-        |  FROM tf JOIN dl ON tf.doc_id = dl.doc_id JOIN dfq ON tf.term = dfq.term CROSS JOIN n),
-        |r AS (SELECT doc_id, term, tfidf,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk FROM sc)
-        |SELECT doc_id, term, tfidf, CAST(rk AS INTEGER) AS "rank" FROM r WHERE rk <= 3""".stripMargin,
-
-    "text_contamination" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |test AS (SELECT doc_id, sh FROM sh WHERE doc_id % 20 = 0),
-        |corpus AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 20 != 0),
-        |tp AS (SELECT doc_id, unnest(sh) AS g FROM test),
-        |hits AS (SELECT doc_id, count(*) AS n_hit FROM tp
-        |         WHERE g IN (SELECT g FROM corpus) GROUP BY 1)
-        |SELECT s.doc_id, CAST(len(s.sh) AS INTEGER) AS n_shingles,
-        |  COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / len(s.sh), 6) AS containment,
-        |  COALESCE(h.n_hit, 0) / len(s.sh) >= 0.8 AS contaminated
-        |FROM test s LEFT JOIN hits h ON s.doc_id = h.doc_id""".stripMargin,
-
-    "text_contam_ngram" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-5, 0)), i -> array_to_string(toks[i+1:i+5], ' '))) AS sh FROM t),
-        |train AS (SELECT doc_id, sh FROM sh WHERE doc_id % 20 != 0),
-        |bench AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 20 = 0),
-        |tp AS (SELECT doc_id, unnest(sh) AS g FROM train),
-        |hits AS (SELECT doc_id, count(*) AS n_matched FROM tp
-        |         WHERE g IN (SELECT g FROM bench) GROUP BY 1)
-        |SELECT s.doc_id, CAST(len(s.sh) AS BIGINT) AS n_grams,
-        |  COALESCE(h.n_matched, 0) AS n_matched,
-        |  COALESCE(h.n_matched, 0) > 0 AS contaminated
-        |FROM train s LEFT JOIN hits h ON s.doc_id = h.doc_id""".stripMargin,
-
-    "docs_weighted_sample" ->
-      """WITH w AS (SELECT max(n_chars) AS wmax FROM documents)
-        |SELECT doc_id, lang, n_chars FROM documents, w
-        |WHERE (('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,7))::UBIGINT)::BIGINT * wmax
-        |      < n_chars * (1::BIGINT << 28)""".stripMargin,
-
-    // Same first-64-chars blocking as the Spark side; the exact prefix
-    // verify runs only within buckets in both engines.
-    "dedup_prefix" ->
-      """WITH e AS (SELECT doc_id AS id, text AS t FROM documents WHERE length(text) >= 64),
-        |k AS (SELECT id, t, md5(substr(t, 1, 64)) AS pk FROM e),
-        |p AS (SELECT s.id AS short_id FROM k s JOIN k l
-        |      ON s.pk = l.pk AND length(s.t) < length(l.t) AND left(l.t, length(s.t)) = s.t)
-        |SELECT (SELECT count(*) FROM e) AS n_checked,
-        |  count(*) AS n_pairs, count(DISTINCT short_id) AS n_truncated
-        |FROM p""".stripMargin,
-
-    // Latest-wins merge: version 1 updates beat version 0 base rows;
-    // negative-keyed rows insert (disjoint from natural ids at any
-    // corpus size); fingerprints prove the surviving side.
-    "docs_merge_upsert" ->
-      """WITH base AS (SELECT doc_id, text, 0::BIGINT AS version, 0 AS src FROM documents),
-        |upd AS (SELECT doc_id, 'UPDATED: ' || text AS text, 1::BIGINT AS version, 1 AS src
-        |        FROM documents WHERE doc_id % 10 = 0
-        |        UNION ALL
-        |        SELECT -doc_id - 1, text, 1::BIGINT, 1 FROM documents WHERE doc_id % 97 = 3),
-        |u AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
-        |r AS (SELECT doc_id, text, version,
-        |        row_number() OVER (PARTITION BY doc_id ORDER BY version DESC, src DESC) AS rn
-        |      FROM u)
-        |SELECT doc_id, version, md5(text) AS fp FROM r WHERE rn = 1""".stripMargin,
-
-    "text_bigram_lm" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |bg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1])) AS bg FROM t),
-        |x AS (SELECT unnest(toks) AS term FROM t),
-        |uni AS (SELECT term, count(*) AS cu FROM x GROUP BY 1),
-        |v AS (SELECT count(*) AS vocab FROM uni),
-        |bic AS (SELECT bg, count(*) AS cb FROM bg GROUP BY 1)
-        |SELECT b.doc_id, count(*) AS n_bigrams,
-        |  round(CAST(sum(CAST(ln((bic.cb + 1) / (uni.cu + v.vocab)) AS DECIMAL(27,12))) AS DOUBLE) / count(*), 6) AS avg_logprob
-        |FROM bg b
-        |JOIN bic ON b.bg = bic.bg
-        |JOIN uni ON split_part(b.bg, ' ', 1) = uni.term
-        |CROSS JOIN v
-        |GROUP BY 1""".stripMargin,
-
-    // Same count tables as text_bigram_lm plus the token total N; the
-    // interpolation literal λ=0.5 keeps (1−λ) exact in both engines, and
-    // the operand order mirrors the Scala expression exactly.
-    "text_interp_lm" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |bg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1])) AS bg FROM t),
-        |x AS (SELECT unnest(toks) AS term FROM t),
-        |uni AS (SELECT term, count(*) AS cu FROM x GROUP BY 1),
-        |n AS (SELECT CAST(sum(cu) AS BIGINT) AS ntok FROM uni),
-        |bic AS (SELECT bg, count(*) AS cb FROM bg GROUP BY 1)
-        |SELECT b.doc_id, count(*) AS n_bigrams,
-        |  round(CAST(sum(CAST(ln(0.5 * bic.cb / u1.cu + (1.0 - 0.5) * u2.cu / n.ntok) AS DECIMAL(27,12))) AS DOUBLE) / count(*), 6) AS avg_interp_logprob
-        |FROM bg b
-        |JOIN bic ON b.bg = bic.bg
-        |JOIN uni u1 ON string_split(b.bg, ' ')[1] = u1.term
-        |JOIN uni u2 ON string_split(b.bg, ' ')[2] = u2.term
-        |CROSS JOIN n
-        |GROUP BY 1""".stripMargin,
-
-    // The q replication is text_quality's (bit-exact, unrounded); the
-    // per-lang median threshold interpolates identically in both engines.
-    "docs_quality_filter" ->
-      """WITH t AS (SELECT doc_id, lang, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |q AS (SELECT doc_id, lang,
-        |  least(len(toks) / 100.0, 1.0) * 0.4
-        |    + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3
-        |    + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q
-        |  FROM t),
-        |thr AS (SELECT lang, quantile_cont(q, 0.5) AS thr FROM q GROUP BY 1)
-        |SELECT q.doc_id, q.lang, round(q.q, 6) AS quality
-        |FROM q JOIN thr ON q.lang = thr.lang
-        |WHERE q.q >= thr.thr""".stripMargin,
-
-    "events_conversion" ->
-      """WITH f AS (SELECT user_id, min(epoch_ms(ts)) FILTER (event_type = 'signup') AS from_ms
-        |           FROM events GROUP BY 1),
-        |t AS (SELECT e.user_id, min(epoch_ms(e.ts)) AS to_ms
-        |      FROM events e JOIN f ON e.user_id = f.user_id
-        |      WHERE e.event_type = 'purchase' AND epoch_ms(e.ts) >= f.from_ms
-        |      GROUP BY 1)
-        |SELECT f.user_id, f.from_ms, t.to_ms, t.to_ms - f.from_ms AS delay_ms,
-        |  t.to_ms IS NOT NULL AS converted
-        |FROM f LEFT JOIN t ON f.user_id = t.user_id
-        |WHERE f.from_ms IS NOT NULL""".stripMargin,
-
-    "text_vocab_oov" ->
-      """WITH x AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |v AS (SELECT term FROM x GROUP BY term HAVING count(*) >= 5)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  CAST(sum(CASE WHEN term IN (SELECT term FROM v) THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
-        |  round(CAST(sum(CASE WHEN term IN (SELECT term FROM v) THEN 0 ELSE 1 END) AS BIGINT) / count(*), 6) AS oov_rate
-        |FROM x GROUP BY 1""".stripMargin,
-
-    // The same benchmark bloom (corpus = doc_id%20==0 here), probed by
-    // the STREAMED side; batch = doc_id < 250 → 0, else 1.
-    "stream_contam_gate" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |test AS (SELECT doc_id, sh FROM sh WHERE doc_id % 20 != 0),
-        |corpus AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 20 = 0),
-        |cpos AS (SELECT CAST(('0x'||substr(md5(g), 1+5*j, 5))::UBIGINT % 1048576 AS BIGINT) AS p FROM corpus, range(4) r(j)),
-        |bloom AS (SELECT p // 32 AS word, bit_or(1::BIGINT << CAST(p % 32 AS INTEGER)) AS bits FROM cpos GROUP BY 1),
-        |tp AS (SELECT doc_id, unnest(sh) AS g FROM test),
-        |probes AS (SELECT doc_id, g, CAST(('0x'||substr(md5(g), 1+5*j, 5))::UBIGINT % 1048576 AS BIGINT) AS p FROM tp, range(4) r(j)),
-        |pergram AS (SELECT doc_id, g,
-        |    min(CASE WHEN (COALESCE(b.bits, 0) & (1::BIGINT << CAST(p % 32 AS INTEGER))) != 0 THEN 1 ELSE 0 END) AS hit
-        |  FROM probes LEFT JOIN bloom b ON probes.p // 32 = b.word GROUP BY 1, 2),
-        |perdoc AS (SELECT doc_id, count(*) AS n_shingles, CAST(sum(hit) AS BIGINT) AS n_bloom FROM pergram GROUP BY 1),
-        |hits AS (SELECT doc_id, count(*) AS n_exact FROM tp WHERE g IN (SELECT g FROM corpus) GROUP BY 1)
-        |SELECT CAST(CASE WHEN p.doc_id < 250 THEN 0 ELSE 1 END AS BIGINT) AS batch_id,
-        |  p.doc_id, p.n_shingles, COALESCE(h.n_exact, 0) AS n_exact, p.n_bloom,
-        |  p.n_bloom >= COALESCE(h.n_exact, 0) AS no_false_neg,
-        |  p.n_bloom > 0 AS flagged
-        |FROM perdoc p LEFT JOIN hits h ON p.doc_id = h.doc_id""".stripMargin,
-
-    "text_contam_bloom" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |test AS (SELECT doc_id, sh FROM sh WHERE doc_id % 20 = 0),
-        |corpus AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 20 != 0),
-        |cpos AS (SELECT CAST(('0x'||substr(md5(g), 1+5*j, 5))::UBIGINT % 1048576 AS BIGINT) AS p FROM corpus, range(4) r(j)),
-        |bloom AS (SELECT p // 32 AS word, bit_or(1::BIGINT << CAST(p % 32 AS INTEGER)) AS bits FROM cpos GROUP BY 1),
-        |tp AS (SELECT doc_id, unnest(sh) AS g FROM test),
-        |probes AS (SELECT doc_id, g, CAST(('0x'||substr(md5(g), 1+5*j, 5))::UBIGINT % 1048576 AS BIGINT) AS p FROM tp, range(4) r(j)),
-        |pergram AS (SELECT doc_id, g,
-        |    min(CASE WHEN (COALESCE(b.bits, 0) & (1::BIGINT << CAST(p % 32 AS INTEGER))) != 0 THEN 1 ELSE 0 END) AS hit
-        |  FROM probes LEFT JOIN bloom b ON probes.p // 32 = b.word GROUP BY 1, 2),
-        |perdoc AS (SELECT doc_id, count(*) AS n_shingles, CAST(sum(hit) AS BIGINT) AS n_bloom FROM pergram GROUP BY 1),
-        |hits AS (SELECT doc_id, count(*) AS n_exact FROM tp WHERE g IN (SELECT g FROM corpus) GROUP BY 1)
-        |SELECT p.doc_id, p.n_shingles, COALESCE(h.n_exact, 0) AS n_exact, p.n_bloom,
-        |  p.n_bloom >= COALESCE(h.n_exact, 0) AS no_false_neg
-        |FROM perdoc p LEFT JOIN hits h ON p.doc_id = h.doc_id""".stripMargin,
-
-    "dedup_ngram_jaccard" ->
-      """WITH t AS (SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, source, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |post AS (SELECT doc_id, source, unnest(sh) AS g FROM sh),
-        |hot AS (SELECT source, g FROM post GROUP BY source, g HAVING count(*) > 64),
-        |capped AS (SELECT p.doc_id, p.source, p.g FROM post p ANTI JOIN hot h ON p.source = h.source AND p.g = h.g),
-        |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter
-        |          FROM capped a JOIN capped b ON a.source = b.source AND a.g = b.g AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n FROM sh)
-        |SELECT i.a_id, i.b_id, i.inter / (sa.n + sb.n - i.inter) AS jaccard
-        |FROM inter i JOIN sz sa ON i.a_id = sa.doc_id JOIN sz sb ON i.b_id = sb.doc_id
-        |WHERE i.inter / (sa.n + sb.n - i.inter) >= 0.5""".stripMargin,
-
-    "dedup_containment" ->
-      """WITH t AS (SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, source, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |post AS (SELECT doc_id, source, unnest(sh) AS g FROM sh),
-        |hot AS (SELECT source, g FROM post GROUP BY source, g HAVING count(*) > 64),
-        |capped AS (SELECT p.doc_id, p.source, p.g FROM post p ANTI JOIN hot h ON p.source = h.source AND p.g = h.g),
-        |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter
-        |          FROM capped a JOIN capped b ON a.source = b.source AND a.g = b.g AND a.doc_id < b.doc_id
-        |          GROUP BY 1, 2),
-        |sz AS (SELECT doc_id, len(sh) AS n FROM sh)
-        |SELECT i.a_id, i.b_id, i.inter / least(sa.n, sb.n) AS containment,
-        |  i.inter / (sa.n + sb.n - i.inter) AS jaccard
-        |FROM inter i JOIN sz sa ON i.a_id = sa.doc_id JOIN sz sb ON i.b_id = sb.doc_id
-        |WHERE i.inter / least(sa.n, sb.n) >= 0.6""".stripMargin,
-
-    "dedup_simhash" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |h AS (SELECT doc_id, list_transform(toks, x -> (('0x'||substr(md5(x),1,15))::UBIGINT)::BIGINT) AS th FROM t),
-        |sh AS (SELECT doc_id, CAST(list_sum(list_transform(generate_series(0,59), i ->
-        |  CASE WHEN 2*len(list_filter(th, v -> (v & (1::BIGINT << i)) != 0)) >= len(th) THEN (1::BIGINT << i) ELSE 0 END)) AS BIGINT) AS simhash FROM h),
-        |chunks AS (SELECT doc_id, simhash, j AS chunk, (simhash >> (15*j)) & 32767 AS value FROM sh, range(4) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id, a.simhash AS ha, b.simhash AS hb
-        |         FROM chunks a JOIN chunks b ON a.chunk = b.chunk AND a.value = b.value AND a.doc_id < b.doc_id)
-        |SELECT a_id, b_id, CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-        |FROM cand WHERE bit_count(xor(ha, hb)) <= 8""".stripMargin,
-
-    "sim_topk_bruteforce" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(q.qvec)), i -> q.qvec[i]::DOUBLE * c.embedding[i]::DOUBLE)), (a,b) -> a+b)
-        |  / (sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(q.qvec)), i -> q.qvec[i]::DOUBLE * q.qvec[i]::DOUBLE)), (a,b) -> a+b))
-        |   * sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(c.embedding)), i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)), (a,b) -> a+b))) AS sim
-        |  FROM e c, q WHERE c.vec_id != q.query_id),
-        |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM s)
-        |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM r WHERE rk <= 5""".stripMargin,
-
-    "sim_ivfpq_residual" -> ivfpqResidualOracleSql,
-
-    "sim_ivfpq_residual_recall" -> ivfpqResidualRecallOracleSql,
-    "sim_ivf_rebalance" -> ivfRebalanceOracleSql,
-    "sim_ivf_rebalance_apply" -> ivfRebalanceApplyOracleSql,
-
-    // The full-corpus codebook's cell assignment (ivfTopkOracleSql's
-    // cells CTE), occupancy-profiled.
-    "sim_ivf_cellstats" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSqlFrom("e", "seeds", 64)},
-        |c2 AS ${lloydRoundSqlFrom("e", "c1", 64)},
-        |cells AS (SELECT vec_id, cent_id AS cell FROM
-        |  (SELECT e.vec_id, c.cent_id, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cent_id) AS rn FROM e, c2 c)
-        |  WHERE rn = 1)
-        |SELECT cell, count(*) AS n_vecs,
-        |  round(count(*)::DOUBLE / sum(count(*)) OVER (), 6) AS share,
-        |  round(count(*)::DOUBLE * 16 / sum(count(*)) OVER (), 6) AS imbalance
-        |FROM cells GROUP BY cell""".stripMargin,
-
-    // Per-label centroids on each half (the label_centroids mean
-    // recipe), cosine between the halves' centroids.
-    "sim_centroid_drift" ->
-      s"""WITH ea AS (SELECT CAST(label AS BIGINT) AS label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings WHERE vec_id % 2 = 0),
-        |eb AS (SELECT CAST(label AS BIGINT) AS label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings WHERE vec_id % 2 = 1),
-        |ma AS (SELECT label, i - 1 AS pos,
-        |    CAST(SUM(CAST(v[i] AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*) AS mu, COUNT(*) AS n
-        |  FROM ea, generate_series(1, 64) g(i) GROUP BY 1, 2),
-        |mb AS (SELECT label, i - 1 AS pos,
-        |    CAST(SUM(CAST(v[i] AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*) AS mu, COUNT(*) AS n
-        |  FROM eb, generate_series(1, 64) g(i) GROUP BY 1, 2),
-        |ca AS (SELECT label, list(mu ORDER BY pos) AS cv, max(n) AS n_a FROM ma GROUP BY 1),
-        |cb AS (SELECT label, list(mu ORDER BY pos) AS cv, max(n) AS n_b FROM mb GROUP BY 1)
-        |SELECT ca.label, ca.n_a, cb.n_b,
-        |  round(${cosSql("ca.cv", "cb.cv")}, 6) AS centroid_cos
-        |FROM ca JOIN cb USING (label)""".stripMargin,
-
-    // Radius search: the same cosine, kept wherever it clears the fixed
-    // threshold — no per-query rank.
-    "sim_range_search" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, embedding AS qvec FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |  ${cosSql("q.qvec", "c.embedding")} AS sim
-        |  FROM e c, q WHERE c.vec_id != q.query_id)
-        |SELECT query_id, neighbor_id, round(sim, 6) AS sim FROM s WHERE sim >= 0.3""".stripMargin,
-
-    "sim_knn_label_eval" ->
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, label AS true_label, v AS qv FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.query_id, q.true_label, c.vec_id AS neighbor_id, c.label AS nl, ${cosSql("q.qv", "c.v")} AS sim
-        |  FROM e c, q WHERE c.vec_id != q.query_id),
-        |topk AS (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM s) WHERE rk <= 5),
-        |votes AS (SELECT query_id, true_label, nl, count(*) AS n_votes FROM topk GROUP BY 1, 2, 3),
-        |best AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY n_votes DESC, nl ASC) AS rv FROM votes)
-        |SELECT query_id, true_label, nl AS predicted_label, n_votes, nl = true_label AS correct
-        |FROM best WHERE rv = 1""".stripMargin,
-
-    "events_lag_features" ->
-      """WITH d AS (SELECT user_id, strftime(ts, '%Y-%m-%d') AS day,
-        |    sum(CAST(value AS DECIMAL(18,6))) AS dv, count(*) AS n_events
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id, day, n_events,
-        |  round(CAST(dv AS DOUBLE), 6) AS day_value,
-        |  round(CAST(lag(dv, 1) OVER w AS DOUBLE), 6) AS lag1_value,
-        |  round(CAST(lag(dv, 7) OVER w AS DOUBLE), 6) AS lag7_value,
-        |  round(CAST(sum(dv) OVER w7 AS DOUBLE) / count(*) OVER w7, 6) AS roll7_mean
-        |FROM d
-        |WINDOW w AS (PARTITION BY user_id ORDER BY day),
-        |  w7 AS (PARTITION BY user_id ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "sim_kcenter_coreset" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |${kcenterSql(8)},
-        |a AS (SELECT p.vec_id, c.vec_id AS center_id, ${cosSql("p.v", "c.cv")} AS cs FROM e p, c8 c),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, center_id ASC) AS rn FROM a)
-        |SELECT vec_id, center_id, round(cs, 6) AS center_sim,
-        |  vec_id IN (SELECT vec_id FROM c8) AS selected
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    "sim_hard_negatives" ->
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, label AS anchor_label, v AS qv FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.query_id, q.anchor_label, c.vec_id AS neighbor_id, c.label AS neg_label, ${cosSql("q.qv", "c.v")} AS sim
-        |  FROM e c, q WHERE c.vec_id != q.query_id AND c.label != q.anchor_label),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM s)
-        |SELECT query_id, anchor_label, neighbor_id, neg_label, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    "sim_triplet_mine" ->
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, label AS anchor_label, v AS qv FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.query_id, q.anchor_label, c.vec_id AS other_id, ${cosSql("q.qv", "c.v")} AS sim,
-        |  c.label = q.anchor_label AS same FROM e c, q WHERE c.vec_id != q.query_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id, same ORDER BY sim DESC, other_id) AS rk FROM s),
-        |p AS (SELECT query_id, anchor_label, other_id AS positive_id, sim AS ps FROM r WHERE same AND rk = 1),
-        |n AS (SELECT query_id, other_id AS negative_id, sim AS ns FROM r WHERE NOT same AND rk = 1)
-        |SELECT p.query_id, p.anchor_label, p.positive_id, n.negative_id,
-        |  round(p.ps, 6) AS pos_sim, round(n.ns, 6) AS neg_sim, round(p.ps - n.ns, 6) AS margin
-        |FROM p JOIN n USING (query_id)""".stripMargin,
-
-    "sim_ivf_topk" -> ivfTopkOracleSql,
-
-    // The persisted-index probe is DEFINED to return the fused IVF
-    // plan's results (same codebook, same cells, same ranking) — one
-    // oracle text serves both.
-    "sim_ivf_persisted" -> ivfTopkOracleSql,
-
-    // The frozen codebook trains on the initial (vec_id % 5 != 0)
-    // corpus only; assignment — original build plus the incremental
-    // delta — covers EVERYTHING. Probes rank identically to the fused
-    // IVF under those centroids. (Shared by the batch delta-maintenance
-    // query and its streaming twin: both must converge to this.)
-    "sim_ivf_delta" -> ivfFrozenDeltaOracleSql,
-
-    // Delete maintenance: the codebook stays frozen on the FULL corpus
-    // (trained before the erasure), assignment covered everything, and
-    // the maintained index serves exactly the SURVIVING vectors — so the
-    // oracle is the full-corpus IVF chain with the erased ids excluded
-    // from the inverted file at scoring time.
-    "sim_ivf_delete" -> ivfEraseOracleSql,
-
-    // The stream-maintained erasure must converge to the SAME
-    // surviving-corpus IVF as the batch delete — one shared oracle.
-    "stream_gdpr_erase" -> ivfEraseOracleSql,
-
-    "stream_ann_maintain" -> ivfFrozenDeltaOracleSql,
-
-    "sim_label_centroids" ->
-      s"""WITH e AS (SELECT CAST(label AS BIGINT) AS label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |mu AS (SELECT label, i - 1 AS pos,
-        |    CAST(SUM(CAST(v[i] AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*) AS mu
-        |  FROM e, generate_series(1, 64) g(i) GROUP BY 1, 2),
-        |c AS (SELECT label, list(mu ORDER BY pos) AS cv FROM mu GROUP BY 1),
-        |coh AS (SELECT e.label, count(*) AS n_vecs,
-        |    CAST(SUM(CAST(${cosSql("e.v", "c.cv")} AS DECIMAL(27,12))) AS DOUBLE) / count(*) AS mc
-        |  FROM e JOIN c USING (label) GROUP BY 1)
-        |SELECT c.label, coh.n_vecs,
-        |  round(sqrt(list_reduce(list_transform(c.cv, x -> x * x), (a, b) -> a + b)), 6) AS centroid_norm,
-        |  round(coh.mc, 6) AS mean_cos
-        |FROM c JOIN coh USING (label)""".stripMargin,
-
-    "sim_filtered_topk" ->
-      s"""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sims AS (SELECT e.vec_id, e.label, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-        |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-        |  (SELECT vec_id, label, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-        |  WHERE rn = 1 AND label % 2 = 0),
-        |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-        |  WHERE rn <= 4),
-        |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-        |  FROM probes p JOIN cells cl ON p.cell = cl.cell WHERE cl.vec_id != p.query_id),
-        |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-        |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM r WHERE rk <= 5""".stripMargin,
-
-    "sim_ivfpq_topk" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-        |cells AS (SELECT vec_id, cent_id AS cell FROM
-        |  (SELECT vec_id, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-        |  WHERE rn = 1),
-        |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-        |  WHERE rn <= 4),
-        |$pqChainSql,
-        |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "r.rv")} AS sim
-        |  FROM probes p JOIN cells cl ON p.cell = cl.cell JOIN recon r ON r.vec_id = cl.vec_id
-        |  WHERE cl.vec_id != p.query_id),
-        |rr AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-        |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM rr WHERE rk <= 5""".stripMargin,
-
-    "sim_ivfpq_recall" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-        |cells AS (SELECT vec_id, cent_id AS cell FROM
-        |  (SELECT vec_id, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-        |  WHERE rn = 1),
-        |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-        |  WHERE rn <= 4),
-        |$pqChainSql,
-        |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "r.rv")} AS sim
-        |  FROM probes p JOIN cells cl ON p.cell = cl.cell JOIN recon r ON r.vec_id = cl.vec_id
-        |  WHERE cl.vec_id != p.query_id),
-        |ap AS (SELECT query_id, neighbor_id FROM
-        |  (SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-        |  WHERE rk <= 5),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.vec_id AS query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.vec_id = h.query_id""".stripMargin,
-
-    "sim_pq_topk" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |$pqChainSql,
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (SELECT q.query_id, r.vec_id AS neighbor_id, ${cosSql("q.qv", "r.rv")} AS sim
-        |  FROM q, recon r WHERE r.vec_id != q.query_id),
-        |rr AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-        |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM rr WHERE rk <= 5""".stripMargin,
-
-    "sim_pq_recall" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |$pqChainSql,
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |ap AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "r.rv")} DESC, r.vec_id) AS rk
-        |  FROM q, recon r WHERE r.vec_id != q.vec_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.vec_id AS query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.vec_id = h.query_id""".stripMargin,
-
-    // Sign-bit codes as two 32-bit words (strictly positive shifts on
-    // both engines); Hamming = popcount of the per-word XORs.
-    "sim_bq_topk" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |codes AS (SELECT vec_id,
-        |    CAST(sum(CASE WHEN i <= 32 AND v[i] > 0 THEN (1::BIGINT << (i-1)) ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN i > 32 AND v[i] > 0 THEN (1::BIGINT << (i-33)) ELSE 0 END) AS BIGINT) AS c1
-        |  FROM e, generate_series(1, 64) g(i) GROUP BY 1),
-        |q AS (SELECT vec_id AS query_id, c0 AS q0, c1 AS q1 FROM codes WHERE vec_id < 10),
-        |scored AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-        |    CAST(bit_count(xor(c.c0, q.q0)) + bit_count(xor(c.c1, q.q1)) AS INTEGER) AS hamming
-        |  FROM q, codes c WHERE c.vec_id != q.query_id),
-        |rr AS (SELECT query_id, neighbor_id, hamming,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rk FROM scored)
-        |SELECT query_id, neighbor_id, hamming, CAST(rk AS INTEGER) AS "rank"
-        |FROM rr WHERE rk <= 5""".stripMargin,
-
-    "sim_bq_recall" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |codes AS (SELECT vec_id,
-        |    CAST(sum(CASE WHEN i <= 32 AND v[i] > 0 THEN (1::BIGINT << (i-1)) ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN i > 32 AND v[i] > 0 THEN (1::BIGINT << (i-33)) ELSE 0 END) AS BIGINT) AS c1
-        |  FROM e, generate_series(1, 64) g(i) GROUP BY 1),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |qc AS (SELECT vec_id AS query_id, c0 AS q0, c1 AS q1 FROM codes WHERE vec_id < 10),
-        |ap AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT qc.query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY qc.query_id
-        |      ORDER BY bit_count(xor(c.c0, qc.q0)) + bit_count(xor(c.c1, qc.q1)), c.vec_id) AS rk
-        |  FROM qc, codes c WHERE c.vec_id != qc.query_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.vec_id AS query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.vec_id = h.query_id""".stripMargin,
-
-    // The same Hamming shortlist at 20, then the exact-cosine rerank cut
-    // to 5 — stage 1 from the sim_bq_topk recipe, stage 2 from the
-    // brute-force one, composed.
-    "sim_bq_rerank" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |codes AS (SELECT vec_id,
-        |    CAST(sum(CASE WHEN i <= 32 AND v[i] > 0 THEN (1::BIGINT << (i-1)) ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN i > 32 AND v[i] > 0 THEN (1::BIGINT << (i-33)) ELSE 0 END) AS BIGINT) AS c1
-        |  FROM e, generate_series(1, 64) g(i) GROUP BY 1),
-        |qc AS (SELECT vec_id AS query_id, c0 AS q0, c1 AS q1 FROM codes WHERE vec_id < 10),
-        |short AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT qc.query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY qc.query_id
-        |      ORDER BY bit_count(xor(c.c0, qc.q0)) + bit_count(xor(c.c1, qc.q1)), c.vec_id) AS rk
-        |  FROM qc, codes c WHERE c.vec_id != qc.query_id) WHERE rk <= 20),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (SELECT sh.query_id, sh.neighbor_id, ${cosSql("q.qv", "c.v")} AS sim
-        |  FROM short sh JOIN e c ON c.vec_id = sh.neighbor_id
-        |  JOIN q ON q.query_id = sh.query_id),
-        |r AS (SELECT query_id, neighbor_id, sim,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // The identical greedy replayed as a recursive CTE: per step, the
-    // LATERAL argmax of λ·rel − (1−λ)·max cos to the picked set
-    // (list_cosine_similarity ≡ the strict-fold cosine bit-for-bit on
-    // 64-dim doubles — verified against the cosSql fold).
-    "sim_mmr_rerank" ->
-      s"""WITH RECURSIVE e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |codes AS (SELECT vec_id,
-        |    CAST(sum(CASE WHEN i <= 32 AND v[i] > 0 THEN (1::BIGINT << (i-1)) ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN i > 32 AND v[i] > 0 THEN (1::BIGINT << (i-33)) ELSE 0 END) AS BIGINT) AS c1
-        |  FROM e, generate_series(1, 64) g(i) GROUP BY 1),
-        |qc AS (SELECT vec_id AS query_id, c0 AS q0, c1 AS q1 FROM codes WHERE vec_id < 10),
-        |short AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT qc.query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY qc.query_id
-        |      ORDER BY bit_count(xor(c.c0, qc.q0)) + bit_count(xor(c.c1, qc.q1)), c.vec_id) AS rk
-        |  FROM qc, codes c WHERE c.vec_id != qc.query_id) WHERE rk <= 20),
-        |cand AS (SELECT sh.query_id, sh.neighbor_id, ${cosSql("q.v", "c.v")} AS rel, c.v AS v
-        |  FROM short sh JOIN e c ON c.vec_id = sh.neighbor_id
-        |  JOIN e q ON q.vec_id = sh.query_id),
-        |mmr AS (
-        |  SELECT query_id, 0 AS rk, CAST(NULL AS BIGINT) AS nid,
-        |         CAST(NULL AS DOUBLE) AS score,
-        |         CAST([] AS STRUCT(nid BIGINT, v DOUBLE[])[]) AS sel
-        |  FROM (SELECT DISTINCT query_id FROM cand)
-        |  UNION ALL
-        |  SELECT m.query_id, m.rk + 1, b.nid, b.score,
-        |         list_append(m.sel, struct_pack(nid := b.nid, v := b.v))
-        |  FROM mmr m, LATERAL (
-        |    SELECT c.neighbor_id AS nid, c.v AS v,
-        |      0.7 * c.rel - (1.0 - 0.7) * COALESCE(list_max(
-        |        list_transform(m.sel, s -> list_cosine_similarity(c.v, s.v))), 0.0) AS score
-        |    FROM cand c
-        |    WHERE c.query_id = m.query_id
-        |      AND NOT list_contains(list_transform(m.sel, s -> s.nid), c.neighbor_id)
-        |    ORDER BY score DESC, c.neighbor_id LIMIT 1) b
-        |  WHERE m.rk < 5)
-        |SELECT query_id, nid AS neighbor_id, CAST(rk AS INTEGER) AS "rank", round(score, 6) AS score
-        |FROM mmr WHERE rk >= 1""".stripMargin,
-
-    // The sim_proj_recall eval shape with a prefix slice instead of the
-    // projection arithmetic.
-    // Both brute-force rankings re-derived at k=10, fused by the same
-    // DECIMAL-routed 1/(60+rank) sum, ranked, cut at 5.
-    "sim_rrf_fusion" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id, rk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 10),
-        |p AS (SELECT vec_id, v[1:16] AS pv FROM e),
-        |pq AS (SELECT vec_id, pv FROM p WHERE vec_id < 10),
-        |ap AS (SELECT query_id, neighbor_id, rk FROM (
-        |  SELECT pq.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY pq.vec_id ORDER BY ${cosSql("pq.pv", "c.pv")} DESC, c.vec_id) AS rk
-        |  FROM pq, p c WHERE c.vec_id != pq.vec_id) WHERE rk <= 10),
-        |u AS (SELECT query_id, neighbor_id, CAST(1.0 / (60 + rk) AS DECIMAL(27,12)) AS c FROM ex
-        |      UNION ALL SELECT query_id, neighbor_id, CAST(1.0 / (60 + rk) AS DECIMAL(27,12)) AS c FROM ap),
-        |g AS (SELECT query_id, neighbor_id, CAST(sum(c) AS DOUBLE) AS rrf_score FROM u GROUP BY 1, 2)
-        |SELECT query_id, neighbor_id, round(rrf_score, 6) AS rrf_score, CAST(rk AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY rrf_score DESC, neighbor_id) AS rk FROM g)
-        |WHERE rk <= 5""".stripMargin,
-
-    // The inverted-index BM25 chain with the same literal-folded k1/b
-    // expressions and DECIMAL-canonicalized idf.
-    "text_bm25" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN ('spark', 'table', 'window') GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |  (CAST(CAST(ln(1.0 + (st.n_docs - dfq.dfc + 0.5) / (dfq.dfc + 0.5)) AS DECIMAL(27,12)) AS DOUBLE)
-        |    * (tf.tf * (1.2 + 1.0)))
-        |  / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl / (CAST(st.total_dl AS DOUBLE) / st.n_docs))) AS s
-        |  FROM tf JOIN dfq ON tf.term = dfq.term JOIN l ON tf.doc_id = l.doc_id, st)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  round(CAST(sum(CAST(s AS DECIMAL(27,12))) AS DOUBLE), 6) AS bm25
-        |FROM sc GROUP BY 1""".stripMargin,
-
-    // Both hybrid arms rebuilt independently (the cosine chain and the
-    // BM25 chain with self-exclusion), fused by the same rank-only RRF
-    // arithmetic as sim_rrf_fusion.
-    "text_hybrid_rrf" ->
-      s"""WITH t AS MATERIALIZED (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |q AS MATERIALIZED (SELECT DISTINCT doc_id AS query_id, unnest(toks) AS term FROM t WHERE doc_id < 5),
-        |l AS MATERIALIZED (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS MATERIALIZED (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS MATERIALIZED (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT DISTINCT term FROM q) GROUP BY 1, 2),
-        |dfq AS MATERIALIZED (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id != q.query_id
-        |  JOIN dfq ON tf.term = dfq.term JOIN l ON tf.doc_id = l.doc_id, st),
-        |lex AS MATERIALIZED (SELECT query_id, doc_id AS neighbor_id, rk FROM (
-        |  SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY sum(CAST(s AS DECIMAL(27,12))) DESC, doc_id) AS rk
-        |  FROM sc GROUP BY 1, 2) WHERE rk <= 10),
-        |e AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |qv AS (SELECT vec_id, v FROM e WHERE vec_id < 5),
-        |dense AS MATERIALIZED (SELECT query_id, neighbor_id, rk FROM (
-        |  SELECT qv.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY qv.vec_id ORDER BY ${cosSql("qv.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM qv, e c WHERE c.vec_id != qv.vec_id) WHERE rk <= 10),
-        |u AS (SELECT query_id, neighbor_id, CAST(1.0 / (60 + rk) AS DECIMAL(27,12)) AS c FROM dense
-        |      UNION ALL SELECT query_id, neighbor_id, CAST(1.0 / (60 + rk) AS DECIMAL(27,12)) AS c FROM lex),
-        |g AS (SELECT query_id, neighbor_id, CAST(sum(c) AS DOUBLE) AS rrf_score FROM u GROUP BY 1, 2)
-        |SELECT query_id, neighbor_id, round(rrf_score, 6) AS rrf_score, CAST(rk AS INTEGER) AS rank
-        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY rrf_score DESC, neighbor_id) AS rk FROM g)
-        |WHERE rk <= 5""".stripMargin,
-
-    // Full-corpus BM25 top-5 per query — what the index-served probe must
-    // equal exactly. Float literals pin ::DOUBLE (bare decimals parse as
-    // DECIMAL here) and the op order mirrors the Spark side's
-    // idf * (tf-factor) composition, so the per-posting double s is
-    // bit-identical in both engines; ranking compares the exact DECIMAL
-    // score sum with doc-id ties, never the rounded display value.
-    "text_invidx_topk" ->
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries3),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM ag)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, CAST(rk AS INTEGER) AS rank,
-        |  n_terms_matched, round(CAST(sd AS DOUBLE), 6) AS bm25
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // The trigram-index search is exact: candidates that fail row-level
-    // verification drop, so the result equals the plain LIKE scan.
-    "text_trigram_search" ->
-      """SELECT doc_id,
-        |  (len(text) - len(replace(text, 'spark table', ''))) // 11 AS n_hits
-        |FROM documents WHERE text LIKE '%spark table%'""".stripMargin,
-
-    // Block-max pruning is EXACT by construction — the oracle is the
-    // same exhaustive whole-corpus BM25 ranking as text_invidx_topk: the
-    // pruned probe must reproduce it bit-for-bit at any pruning rate.
-    "text_invidx_blockmax" ->
-      s"""WITH q(query_id, term) AS (VALUES (0, 'dup'), (0, 'spark'), (0, 'table'),
-        |  (1, 'join'), (1, 'filter'), (2, 'vector'), (2, 'stream'), (2, 'hash')),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM ag)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, CAST(rk AS INTEGER) AS rank,
-        |  n_terms_matched, round(CAST(sd AS DOUBLE), 6) AS bm25
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // The delta-maintained index must serve the FULL corpus exactly — the
-    // oracle is a from-scratch whole-corpus BM25, proving the appended
-    // posting lists + advanced #meta totals reconstruct the truth.
-    "text_invidx_delta" ->
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries2),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM ag)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, CAST(rk AS INTEGER) AS rank,
-        |  n_terms_matched, round(CAST(sd AS DOUBLE), 6) AS bm25
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // The delete-maintained index must serve the SURVIVING corpus
-    // exactly — a from-scratch BM25 over documents minus the erased
-    // range, document frequency and corpus totals recounted over the
-    // survivors.
-    "text_invidx_delete" ->
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries2),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-        |  FROM documents WHERE doc_id NOT BETWEEN 100 AND 149),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM ag)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, CAST(rk AS INTEGER) AS rank,
-        |  n_terms_matched, round(CAST(sd AS DOUBLE), 6) AS bm25
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // The streamed index must serve the FULL corpus exactly — identical
-    // truth to the batch-maintained index: a from-scratch whole-corpus
-    // BM25 over the same three queries.
-    "stream_invidx_maintain" ->
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries3),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM ag)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, CAST(rk AS INTEGER) AS rank,
-        |  n_terms_matched, round(CAST(sd AS DOUBLE), 6) AS bm25
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // The conjunctive gate is a HAVING over matched-term counts before
-    // the ranking window — ranks contiguous over the AND result.
-    "text_invidx_conjunctive" ->
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries2),
-        |qn AS (SELECT query_id, count(DISTINCT term) AS nq FROM q GROUP BY 1),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT sc.query_id, sc.doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-        |  sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |cj AS (SELECT ag.* FROM ag JOIN qn ON ag.query_id = qn.query_id
-        |  WHERE ag.n_terms_matched = qn.nq),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM cj)
-        |SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, CAST(rk AS INTEGER) AS rank,
-        |  n_terms_matched, round(CAST(sd AS DOUBLE), 6) AS bm25
-        |FROM r WHERE rk <= 5""".stripMargin,
-
-    // Champion-list recall: rebuild the identical impact-ordered top-8
-    // prune (the impact double is the same bit-exact expression as the
-    // Spark tf-factor), score both arms, and count the exact-arm top-5
-    // hits the champion arm retains per query.
-    "text_invidx_pruned" ->
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries3),
-        |t AS MATERIALIZED (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS MATERIALIZED (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS MATERIALIZED (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS MATERIALIZED (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS MATERIALIZED (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |imp AS MATERIALIZED (SELECT tf.doc_id, tf.term, $invidxImpactSql AS impact
-        |  FROM tf JOIN l ON tf.doc_id = l.doc_id, st),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ex AS MATERIALIZED (SELECT query_id, doc_id FROM (
-        |  SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY sum(CAST(s AS DECIMAL(27,12))) DESC, doc_id) AS rk
-        |  FROM sc GROUP BY 1, 2) WHERE rk <= 5),
-        |champ AS MATERIALIZED (SELECT doc_id, term FROM (
-        |  SELECT doc_id, term, row_number() OVER (PARTITION BY term
-        |    ORDER BY impact DESC, doc_id) AS cr FROM imp) WHERE cr <= 8),
-        |sca AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term
-        |  JOIN champ ON tf.term = champ.term AND tf.doc_id = champ.doc_id
-        |  JOIN dfq ON tf.term = dfq.term JOIN l ON tf.doc_id = l.doc_id, st),
-        |ap AS MATERIALIZED (SELECT query_id, doc_id FROM (
-        |  SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY sum(CAST(s AS DECIMAL(27,12))) DESC, doc_id) AS rk
-        |  FROM sca GROUP BY 1, 2) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex
-        |  SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.doc_id = ap.doc_id GROUP BY 1)
-        |SELECT qq.query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0::DOUBLE, 6) AS recall
-        |FROM (SELECT DISTINCT CAST(query_id AS BIGINT) AS query_id FROM q) qq
-        |LEFT JOIN hits h ON qq.query_id = h.query_id""".stripMargin,
-
-    // Phrase match from token offsets: an occurrence of 'table' at p and
-    // 'hash' at p+1 — the zipped-unnest position lists intersect exactly
-    // like the Spark side's stored positional postings.
-    "text_invidx_phrase" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |p AS (SELECT doc_id, unnest(toks) AS term, unnest(range(len(toks))) AS pos FROM t),
-        |a AS (SELECT doc_id, list(pos ORDER BY pos) AS pa FROM p WHERE term = 'table' GROUP BY 1),
-        |b AS (SELECT doc_id, list(pos ORDER BY pos) AS pb FROM p WHERE term = 'hash' GROUP BY 1),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |m AS (SELECT a.doc_id, l.dl,
-        |  CAST(len(list_intersect(list_transform(pa, x -> x + 1), pb)) AS INTEGER) AS n_phrase
-        |  FROM a JOIN b ON a.doc_id = b.doc_id JOIN l ON a.doc_id = l.doc_id)
-        |SELECT doc_id, dl, n_phrase FROM m WHERE n_phrase > 0""".stripMargin,
-
-    // The trigram re-derived with the zipped-unnest positions and the
-    // same nested position test.
-    "text_invidx_phrase3" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |p AS (SELECT doc_id, unnest(toks) AS term, unnest(range(len(toks))) AS pos FROM t),
-        |a AS (SELECT doc_id, list(pos ORDER BY pos) AS p0 FROM p WHERE term = 'slow' GROUP BY 1),
-        |b AS (SELECT doc_id, list(pos ORDER BY pos) AS p1 FROM p WHERE term = 'hash' GROUP BY 1),
-        |c AS (SELECT doc_id, list(pos ORDER BY pos) AS p2 FROM p WHERE term = 'batch' GROUP BY 1),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |m AS (SELECT a.doc_id, l.dl,
-        |  CAST(len(list_filter(p0, x ->
-        |    len(list_filter(p1, y -> y = x + 1)) > 0 AND
-        |    len(list_filter(p2, z -> z = x + 2)) > 0)) AS INTEGER) AS n_phrase
-        |  FROM a JOIN b ON a.doc_id = b.doc_id JOIN c ON a.doc_id = c.doc_id
-        |  JOIN l ON a.doc_id = l.doc_id)
-        |SELECT doc_id, dl, n_phrase FROM m WHERE n_phrase > 0""".stripMargin,
-
-    // Proximity from the same position lists: nested list lambdas count
-    // 'table' occurrences with a 'hash' within the 3-token window.
-    "text_invidx_proximity" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |p AS (SELECT doc_id, unnest(toks) AS term, unnest(range(len(toks))) AS pos FROM t),
-        |a AS (SELECT doc_id, list(pos ORDER BY pos) AS pa FROM p WHERE term = 'table' GROUP BY 1),
-        |b AS (SELECT doc_id, list(pos ORDER BY pos) AS pb FROM p WHERE term = 'hash' GROUP BY 1),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |m AS (SELECT a.doc_id, l.dl,
-        |  CAST(len(list_filter(pa, x -> len(list_filter(pb, y -> y - x >= 1 AND y - x <= 3)) > 0)) AS INTEGER) AS n_near
-        |  FROM a JOIN b ON a.doc_id = b.doc_id JOIN l ON a.doc_id = l.doc_id)
-        |SELECT doc_id, dl, n_near FROM m WHERE n_near > 0""".stripMargin,
-
-    "sim_prefix_recall" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |p AS (SELECT vec_id, v[1:16] AS pv FROM e),
-        |pq AS (SELECT vec_id, pv FROM p WHERE vec_id < 10),
-        |ap AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT pq.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY pq.vec_id ORDER BY ${cosSql("pq.pv", "c.pv")} DESC, c.vec_id) AS rk
-        |  FROM pq, p c WHERE c.vec_id != pq.vec_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.vec_id AS query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.vec_id = h.query_id""".stripMargin,
-
-    "sim_proj_recall" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |p AS (SELECT vec_id, list_transform(generate_series(0, 15), j ->
-        |  list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, 64), i ->
-        |    v[i] * (CASE WHEN (('0x'||substr(md5((64+j)::VARCHAR||':'||(i-1)::VARCHAR),1,15))::UBIGINT & 1) = 1 THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END))), (a,x) -> a+x)) AS pv FROM e),
-        |pq AS (SELECT vec_id, pv FROM p WHERE vec_id < 10),
-        |ap AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT pq.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY pq.vec_id ORDER BY ${cosSql("pq.pv", "c.pv")} DESC, c.vec_id) AS rk
-        |  FROM pq, p c WHERE c.vec_id != pq.vec_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.vec_id AS query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.vec_id = h.query_id""".stripMargin,
-
-    // Rebuilds the identical deterministic IVF index (the sim_ivf_topk CTE
-    // chain), ranks the same queries through it, and scores recall@5
-    // against the exact brute-force ranking — the sim_proj_recall eval
-    // pattern applied to the IVF quality knob.
-    // The sim_ivf_recall CTE chain with one probes/scored/ap/hits arm per
-    // nprobe value, rolled to corpus-level recall.
-    "sim_ivf_nprobe_sweep" -> {
-      def arm(np: Int): String =
-        s"""probes$np AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-           |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-           |  WHERE rn <= $np),
-           |scored$np AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-           |  FROM probes$np p JOIN cells cl ON p.cell = cl.cell WHERE cl.vec_id != p.query_id),
-           |ap$np AS (SELECT query_id, neighbor_id FROM
-           |  (SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored$np)
-           |  WHERE rk <= 5),
-           |h$np AS (SELECT count(*) AS n_hits FROM ex SEMI JOIN ap$np ON ex.query_id = ap$np.query_id AND ex.neighbor_id = ap$np.neighbor_id)""".stripMargin
-      def row(np: Int): String =
-        s"SELECT $np AS nprobe, CAST(h$np.n_hits AS BIGINT) AS n_hits, round(h$np.n_hits / (5.0 * nq.n_q), 6) AS mean_recall FROM h$np, nq"
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-        |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-        |  WHERE rn = 1),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |nq AS (SELECT count(*) AS n_q FROM q),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |${arm(1)},
-        |${arm(2)},
-        |${arm(4)}
-        |${row(1)} UNION ALL ${row(2)} UNION ALL ${row(4)}""".stripMargin
-    },
-
-    // The tuner replays the sweep and picks the smallest arm meeting
-    // the 0.7 target (the largest arm if none does).
-    "sim_ivf_autotune" -> {
-      def arm(np: Int): String =
-        s"""probes$np AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-           |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-           |  WHERE rn <= $np),
-           |scored$np AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-           |  FROM probes$np p JOIN cells cl ON p.cell = cl.cell WHERE cl.vec_id != p.query_id),
-           |ap$np AS (SELECT query_id, neighbor_id FROM
-           |  (SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored$np)
-           |  WHERE rk <= 5),
-           |h$np AS (SELECT count(*) AS n_hits FROM ex SEMI JOIN ap$np ON ex.query_id = ap$np.query_id AND ex.neighbor_id = ap$np.neighbor_id)""".stripMargin
-      def row(np: Int): String =
-        s"SELECT $np AS nprobe, CAST(h$np.n_hits AS BIGINT) AS n_hits, round(h$np.n_hits / (5.0 * nq.n_q), 6) AS mean_recall FROM h$np, nq"
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-        |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-        |  WHERE rn = 1),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |nq AS (SELECT count(*) AS n_q FROM q),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |${arm(1)},
-        |${arm(2)},
-        |${arm(4)},
-        |sweep AS (${row(1)} UNION ALL ${row(2)} UNION ALL ${row(4)}),
-        |met AS (SELECT * FROM sweep WHERE mean_recall >= 0.7 ORDER BY nprobe LIMIT 1),
-        |fb AS (SELECT * FROM sweep ORDER BY nprobe DESC LIMIT 1),
-        |pick AS (SELECT * FROM met UNION ALL
-        |  SELECT * FROM fb WHERE NOT EXISTS (SELECT 1 FROM met))
-        |SELECT CAST(nprobe AS INTEGER) AS nprobe, n_hits, mean_recall,
-        |  CAST(mean_recall >= 0.7 AS BOOLEAN) AS met_target FROM pick""".stripMargin
-    },
-
-    "sim_ivf_recall" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sims AS (SELECT e.vec_id, e.v, c.cent_id, ${cosSql("e.v", "c.cv")} AS csim FROM e, c2 c),
-        |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims)
-        |  WHERE rn = 1),
-        |probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS cell FROM
-        |  (SELECT vec_id, v, cent_id, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn FROM sims WHERE vec_id < 10)
-        |  WHERE rn <= 4),
-        |scored AS (SELECT p.query_id, cl.vec_id AS neighbor_id, ${cosSql("p.qv", "cl.v")} AS sim
-        |  FROM probes p JOIN cells cl ON p.cell = cl.cell WHERE cl.vec_id != p.query_id),
-        |ap AS (SELECT query_id, neighbor_id FROM
-        |  (SELECT query_id, neighbor_id, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM scored)
-        |  WHERE rk <= 5),
-        |q AS (SELECT vec_id, v FROM e WHERE vec_id < 10),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY ${cosSql("q.v", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.vec_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.vec_id AS query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.vec_id = h.query_id""".stripMargin,
-
-    "sim_lsh_near_dup" ->
-      s"""WITH ${lshPairCtes(2)}
-        |SELECT a_id, b_id, round(sim, 6) AS sim FROM p WHERE sim >= 0.3""".stripMargin,
-
-    // Same LSH bucketing/cosine replication as sim_lsh_near_dup (no
-    // threshold), then symmetrize, rank per node, flag mutual edges.
-    "sim_knn_graph" ->
-      s"""WITH ${lshPairCtes(2)},
-        |sym AS (SELECT a_id AS src, b_id AS dst, sim FROM p
-        |        UNION ALL SELECT b_id, a_id, sim FROM p),
-        |rk AS (SELECT src, dst, sim,
-        |    CAST(row_number() OVER (PARTITION BY src ORDER BY sim DESC, dst ASC) AS INTEGER) AS rank
-        |  FROM sym),
-        |top AS (SELECT * FROM rk WHERE rank <= 5)
-        |SELECT t.src, t.dst, t.rank, round(t.sim, 6) AS sim,
-        |  (m.src IS NOT NULL) AS mutual
-        |FROM top t LEFT JOIN top m ON m.src = t.dst AND m.dst = t.src""".stripMargin,
-
-    // Graph-ANN beam search replayed end-to-end: the knn-graph CTEs
-    // (identical to sim_knn_graph's oracle), the md5 entry-point seed
-    // rule, then the 8 beam rounds UNROLLED — expand along top-degree
-    // edges, score, keep top-beam by (sim DESC, node ASC) — and the
-    // final self-excluded top-k. Generated per round so the SQL can't
-    // drift from the op's round structure.
-    "sim_hnsw_topk" ->
-      s"""WITH $hnswBeamCtes
-        |SELECT query_id, node AS neighbor_id, CAST(rk2 AS INTEGER) AS "rank", round(sim, 6) AS sim
-        |FROM (SELECT query_id, node, sim,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rk2
-        |  FROM f WHERE node != query_id)
-        |WHERE rk2 <= 5""".stripMargin,
-
-    // The persisted-graph probe must be bit-identical to the inline
-    // build — same full build+navigation replay as sim_hnsw_topk.
-    "sim_hnsw_persisted" ->
-      s"""WITH $hnswBeamCtes
-        |SELECT query_id, node AS neighbor_id, CAST(rk2 AS INTEGER) AS "rank", round(sim, 6) AS sim
-        |FROM (SELECT query_id, node, sim,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rk2
-        |  FROM f WHERE node != query_id)
-        |WHERE rk2 <= 5""".stripMargin,
-
-    // The established recall@5 harness over the SAME beam-search replay:
-    // approximate top-k from the graph navigation vs the exact
-    // brute-force ranking, per-query hit counts.
-    "sim_hnsw_recall" ->
-      s"""WITH $hnswBeamCtes,
-        |ap AS (SELECT query_id, node AS neighbor_id FROM
-        |  (SELECT query_id, node,
-        |     row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, node ASC) AS rk2
-        |   FROM f WHERE node != query_id)
-        |  WHERE rk2 <= 5),
-        |ex AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT q.query_id, c.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.query_id ORDER BY ${cosSql("q.qv", "c.v")} DESC, c.vec_id) AS rk
-        |  FROM q, e c WHERE c.vec_id != q.query_id) WHERE rk <= 5),
-        |hits AS (SELECT ex.query_id, count(*) AS n_hit FROM ex SEMI JOIN ap
-        |  ON ex.query_id = ap.query_id AND ex.neighbor_id = ap.neighbor_id GROUP BY 1)
-        |SELECT q.query_id, COALESCE(h.n_hit, 0) AS n_hit,
-        |  round(COALESCE(h.n_hit, 0) / 5.0, 6) AS recall
-        |FROM q LEFT JOIN hits h ON q.query_id = h.query_id""".stripMargin,
-
-    // The sim_knn_graph chain + per-dst in-degree / mutual counts and the
-    // deterministic top-10 cut.
-    "sim_hubness" ->
-      """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-        |bk AS (SELECT vec_id, t.b AS band, list_sum(list_transform(generate_series(0,7), j ->
-        |  CASE WHEN list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(v)), i ->
-        |    v[i]::DOUBLE * (CASE WHEN (('0x'||substr(md5((t.b*8+j)::VARCHAR||':'||(i-1)::VARCHAR),1,15))::UBIGINT & 1) = 1 THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END))), (a,x) -> a+x) >= 0
-        |  THEN (1 << j) ELSE 0 END)) AS bucket FROM e, range(2) t(b)),
-        |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(ea.v)), i -> ea.v[i]::DOUBLE * eb.v[i]::DOUBLE)), (x,y) -> x+y)
-        |  / (sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(ea.v)), i -> ea.v[i]::DOUBLE * ea.v[i]::DOUBLE)), (x,y) -> x+y))
-        |   * sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(eb.v)), i -> eb.v[i]::DOUBLE * eb.v[i]::DOUBLE)), (x,y) -> x+y))) AS sim
-        |  FROM cand c JOIN e ea ON ea.vec_id = c.a_id JOIN e eb ON eb.vec_id = c.b_id),
-        |sym AS (SELECT a_id AS src, b_id AS dst, sim FROM p
-        |        UNION ALL SELECT b_id, a_id, sim FROM p),
-        |rk AS (SELECT src, dst, sim,
-        |    row_number() OVER (PARTITION BY src ORDER BY sim DESC, dst ASC) AS rank
-        |  FROM sym),
-        |top AS (SELECT * FROM rk WHERE rank <= 5),
-        |deg AS (SELECT t.dst, count(*) AS in_degree,
-        |    CAST(sum(CASE WHEN m.src IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_mutual
-        |  FROM top t LEFT JOIN top m ON m.src = t.dst AND m.dst = t.src
-        |  GROUP BY 1)
-        |SELECT dst AS node_id, in_degree, n_mutual
-        |FROM deg ORDER BY in_degree DESC, node_id ASC LIMIT 10""".stripMargin,
-
-    // The sim_hubness kNN CTE chain + the LOF ratio over it; distances
-    // and both aggregates DECIMAL-routed exactly like the Spark op.
-    "sim_lof" ->
-      """WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-        |bk AS (SELECT vec_id, t.b AS band, list_sum(list_transform(generate_series(0,7), j ->
-        |  CASE WHEN list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(v)), i ->
-        |    v[i]::DOUBLE * (CASE WHEN (('0x'||substr(md5((t.b*8+j)::VARCHAR||':'||(i-1)::VARCHAR),1,15))::UBIGINT & 1) = 1 THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END))), (a,x) -> a+x) >= 0
-        |  THEN (1 << j) ELSE 0 END)) AS bucket FROM e, range(2) t(b)),
-        |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(ea.v)), i -> ea.v[i]::DOUBLE * eb.v[i]::DOUBLE)), (x,y) -> x+y)
-        |  / (sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(ea.v)), i -> ea.v[i]::DOUBLE * ea.v[i]::DOUBLE)), (x,y) -> x+y))
-        |   * sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(eb.v)), i -> eb.v[i]::DOUBLE * eb.v[i]::DOUBLE)), (x,y) -> x+y))) AS sim
-        |  FROM cand c JOIN e ea ON ea.vec_id = c.a_id JOIN e eb ON eb.vec_id = c.b_id),
-        |sym AS (SELECT a_id AS src, b_id AS dst, sim FROM p
-        |        UNION ALL SELECT b_id, a_id, sim FROM p),
-        |rk AS (SELECT src, dst, sim,
-        |    row_number() OVER (PARTITION BY src ORDER BY sim DESC, dst ASC) AS rank
-        |  FROM sym),
-        |d AS (SELECT src, dst, CAST(1.0 - round(sim, 6) AS DECIMAL(20,12)) AS d
-        |  FROM rk WHERE rank <= 5),
-        |kd AS (SELECT src AS o, max(d) AS kdist FROM d GROUP BY 1),
-        |r AS (SELECT d.src, greatest(kd.kdist, d.d) AS rd FROM d JOIN kd ON d.dst = kd.o),
-        |l AS (SELECT src AS node, CAST(count(*) AS DOUBLE) / greatest(CAST(sum(rd) AS DOUBLE), 1e-12) AS lrd
-        |  FROM r GROUP BY 1),
-        |f AS (SELECT d.src, count(*) AS n, sum(CAST(lo.lrd AS DECIMAL(27,12))) AS slo
-        |  FROM d JOIN l lo ON d.dst = lo.node GROUP BY 1)
-        |SELECT f.src AS vec_id, round(l.lrd, 6) AS lrd,
-        |  round(CAST(f.slo AS DOUBLE) / f.n / l.lrd, 6) AS lof
-        |FROM f JOIN l ON f.src = l.node""".stripMargin,
-
-    // Rebuilds the identical deterministic k-means cells (the sim_ivf_topk
-    // CTE chain), then mirrors the lowest-id-survives prune rule.
-    "sim_semdedup" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-        |  (SELECT e.vec_id, e.v, c.cent_id, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cent_id) AS rn FROM e, c2 c)
-        |  WHERE rn = 1),
-        |pruned AS (SELECT DISTINCT a.vec_id FROM cells a JOIN cells b
-        |  ON a.cell = b.cell AND b.vec_id < a.vec_id AND ${cosSql("a.v", "b.v")} >= 0.35)
-        |SELECT c.vec_id, c.cell, (p.vec_id IS NULL) AS kept
-        |FROM cells c LEFT JOIN pruned p ON c.vec_id = p.vec_id""".stripMargin,
-
-    // Same k-means rebuild as sim_semdedup; cosines canonicalize through
-    // DECIMAL(20,12) before the floor-binning, so bins match exactly.
-    "sim_pair_hist" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |cells AS (SELECT vec_id, v, cent_id AS cell FROM
-        |  (SELECT e.vec_id, e.v, c.cent_id, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cent_id) AS rn FROM e, c2 c)
-        |  WHERE rn = 1),
-        |p AS (SELECT CAST(least(floor((CAST(CAST(${cosSql("a.v", "b.v")} AS DECIMAL(20,12)) AS DOUBLE) + 1.0) / 0.2), 9) AS INTEGER) AS bin
-        |  FROM cells a JOIN cells b ON a.cell = b.cell AND b.vec_id < a.vec_id)
-        |SELECT bin, round(bin * 0.2 - 1.0, 6) AS bin_lo, count(*) AS n_pairs
-        |FROM p GROUP BY 1""".stripMargin,
-
-    // The docs_quality_filter scoring CTE + an ordered running token sum.
-    "docs_budget_pick" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |q AS (SELECT doc_id, len(toks) AS n_tokens,
-        |  least(len(toks) / 100.0, 1.0) * 0.4
-        |    + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3
-        |    + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q
-        |  FROM t),
-        |c AS (SELECT doc_id, n_tokens, q,
-        |    sum(n_tokens) OVER (ORDER BY q DESC, doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM q)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, round(q, 6) AS quality,
-        |  CAST(cum AS BIGINT) AS cum_tokens
-        |FROM c WHERE cum <= 10000""".stripMargin,
-
-    // Same k-means rebuild; the per-cell md5-order ranking mirrors the
-    // fixedStratifiedSample oracle with the cell as the stratum.
-    "sim_diverse_sample" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |cells AS (SELECT vec_id, cent_id AS cell FROM
-        |  (SELECT e.vec_id, c.cent_id, row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cosSql("e.v", "c.cv")} DESC, c.cent_id) AS rn FROM e, c2 c)
-        |  WHERE rn = 1),
-        |r AS (SELECT vec_id, cell,
-        |    row_number() OVER (PARTITION BY cell ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk
-        |  FROM cells)
-        |SELECT vec_id, cell, CAST(rk AS INTEGER) AS "rank" FROM r WHERE rk <= 10""".stripMargin,
-
-    // Same k-means rebuild; OOD = 1 − max centroid cosine, DECIMAL(20,12)-
-    // canonicalized so the interpolated p90 cut sees identical doubles.
-    "sim_centroid_ood" ->
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |seeds AS (SELECT vec_id AS cent_id, v AS cv FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-        |c1 AS ${lloydRoundSql("seeds", 64)},
-        |c2 AS ${lloydRoundSql("c1", 64)},
-        |sc AS (SELECT e.vec_id,
-        |    CAST(CAST(1.0 - max(${cosSql("e.v", "c.cv")}) AS DECIMAL(20,12)) AS DOUBLE) AS ood
-        |  FROM e, c2 c GROUP BY e.vec_id),
-        |cut AS (SELECT quantile_cont(ood, 0.9) AS c FROM sc)
-        |SELECT vec_id, round(ood, 6) AS ood_score, ood > c AS flagged FROM sc, cut""".stripMargin,
-
-    "multimodal_decode" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(54 + ((w*3+3)//4)*4*h AS INTEGER) AS byte_len,
-        |  CAST(w AS INTEGER) AS width,
-        |  CAST(h AS INTEGER) AS height,
-        |  3 AS channels,
-        |  lower(hex(substr(text, 1, 4))) AS feature
-        |FROM d""".stripMargin,
-
-    // The stub encoder is md5-derived thousandths over (id, w, h, j) —
-    // engine-portable by construction; the ranking is the stock
-    // brute-force top-k over those vectors.
-    "multimodal_embed_topk" ->
-      s"""WITH d AS (SELECT doc_id AS id, 1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h FROM documents),
-        |e AS (SELECT id, list_transform(generate_series(0, 7), j ->
-        |    (('0x'||substr(md5(id::VARCHAR || '|' || w::VARCHAR || '|' || h::VARCHAR || '|' || j::VARCHAR), 1, 7))::UBIGINT % 1000) / 1000.0) AS v FROM d),
-        |q AS (SELECT id AS query_id, v AS qv FROM e WHERE id < 5),
-        |s AS (SELECT q.query_id, c.id AS neighbor_id, ${cosSql("q.qv", "c.v")} AS sim
-        |  FROM e c, q WHERE c.id != q.query_id),
-        |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rk FROM s)
-        |SELECT query_id, neighbor_id, CAST(rk AS INTEGER) AS "rank", round(sim, 6) AS sim FROM r WHERE rk <= 3""".stripMargin,
-
-    // The shipped-MLP forward pass replayed with the SAME weights inlined
-    // as literals (Double.toString round-trips exactly; ReLU = GREATEST
-    // keeps every step transcendental-free), term order matching
-    // Quality.mlpForward's ascending-j left-associated accumulation.
-    "multimodal_embed_shipped" -> {
-      val Seq((w1, b1), (w2, b2)) = mlpLayers: @unchecked
-      val xCols = (0 until 8).map(j =>
-        s"(('0x'||substr(md5(id::VARCHAR || '|' || w::VARCHAR || '|' || h::VARCHAR || '|$j'), 1, 7))::UBIGINT % 1000) / 1000.0 AS x$j")
-        .mkString(",\n        |    ")
-      val hCols = w1.indices.map(i =>
-        s"GREATEST(0.0, ${b1(i)} + " +
-          (0 until 8).map(j => s"${w1(i)(j)}*x$j").mkString(" + ") +
-          s") AS h$i").mkString(",\n        |    ")
-      val eCols = w2.indices.map(o =>
-        s"round(${b2(o)} + " +
-          w1.indices.map(i => s"${w2(o)(i)}*h$i").mkString(" + ") +
-          s", 6) AS e$o").mkString(",\n        |  ")
-      s"""WITH d AS (SELECT doc_id AS id, 1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h FROM documents),
-        |x AS (SELECT id, w, h,
-        |    $xCols
-        |  FROM d),
-        |hl AS (SELECT id, w, h,
-        |    $hCols
-        |  FROM x)
-        |SELECT id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  $eCols
-        |FROM hl""".stripMargin
-    },
-
-    // The fully-real encoder path: the SAME BMP luminance-grid replay as
-    // the phash oracle (nearest-neighbor 8x8 sample over text bytes
-    // cycled into the pixel area), folded into 8 features by cell
-    // residue (x_j = Σ_{g≡j mod 8} lum(g) / 6120.0 — integer sums, one
-    // double division), then the same inlined-weights ReLU forward pass
-    // as the shipped-MLP oracle.
-    "multimodal_embed_pixels" -> {
-      val Seq((w1, b1), (w2, b2)) = mlpLayers: @unchecked
-      val xCols = (0 until 8).map(j =>
-        "(" + (0 until 8).map(k => s"lum[${j + 8 * k + 1}]").mkString(" + ") +
-          s") / 6120.0 AS x$j")
-        .mkString(",\n        |    ")
-      val hCols = w1.indices.map(i =>
-        s"GREATEST(0.0, ${b1(i)} + " +
-          (0 until 8).map(j => s"${w1(i)(j)}*x$j").mkString(" + ") +
-          s") AS h$i").mkString(",\n        |    ")
-      val eCols = w2.indices.map(o =>
-        s"round(${b2(o)} + " +
-          w1.indices.map(i => s"${w2(o)(i)}*h$i").mkString(" + ") +
-          s", 6) AS e$o").mkString(",\n        |  ")
-      s"""WITH d AS (SELECT doc_id AS id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents WHERE strlen(text) > 0),
-        |p AS (SELECT id, text, L, w, h, ((w * 3 + 3) // 4) * 4 AS rs FROM d),
-        |lums AS (SELECT id, w, h,
-        |  list_transform(generate_series(0, 63), g ->
-        |    unicode(substr(text, CAST((((((g // 8) * h) // 8) * rs + (((g % 8) * w) // 8) * 3) % L) + 1 AS INTEGER), 1))
-        |  + unicode(substr(text, CAST((((((g // 8) * h) // 8) * rs + (((g % 8) * w) // 8) * 3 + 1) % L) + 1 AS INTEGER), 1))
-        |  + unicode(substr(text, CAST((((((g // 8) * h) // 8) * rs + (((g % 8) * w) // 8) * 3 + 2) % L) + 1 AS INTEGER), 1))) AS lum
-        |  FROM p),
-        |x AS (SELECT id, w, h,
-        |    $xCols
-        |  FROM lums),
-        |hl AS (SELECT id, w, h,
-        |    $hCols
-        |  FROM x)
-        |SELECT id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  $eCols
-        |FROM hl""".stripMargin
-    },
-
-    // Corruption rule: doc_id % 7 = 0 clobbers the magic; the message
-    // embeds the container length (the BMP size formula).
-    "multimodal_quarantine" ->
-      """WITH d AS (SELECT doc_id, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id, doc_id % 7 <> 0 AS ok,
-        |  CASE WHEN doc_id % 7 = 0
-        |    THEN 'requirement failed: not a BMP payload (' || CAST(54 + ((w*3+3)//4)*4*h AS VARCHAR) || ' bytes)'
-        |    ELSE '' END AS error,
-        |  CASE WHEN doc_id % 7 <> 0 THEN CAST(w AS INTEGER) END AS width,
-        |  CASE WHEN doc_id % 7 <> 0 THEN CAST(h AS INTEGER) END AS height
-        |FROM d""".stripMargin,
-
-    // The resized image's first 4 pixel bytes: out pixel (0,0) maps to src
-    // pixel (0,0) = text bytes 0..2 (pixel data cycles the text), and the
-    // 4th byte is out pixel (1,0)'s first channel = src pixel x = w//16,
-    // i.e. text byte (3*(w//16)) % L.
-    "multimodal_resize" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(w AS INTEGER) AS in_width,
-        |  CAST(h AS INTEGER) AS in_height,
-        |  16 AS out_width, 16 AS out_height,
-        |  CAST(54 + 48 * 16 AS INTEGER) AS out_byte_len,
-        |  lower(hex(substr(text, 1, 3) || substr(text, CAST((3 * (w // 16)) % L AS INTEGER) + 1, 1))) AS feature
-        |FROM d""".stripMargin,
-
-    // byte_len = sig(8) + IHDR chunk(25) + IDAT chunk(12+len) + IEND(12);
-    // color type 2 (truecolor) = 3 channels; feature echoes the IDAT
-    // payload's first 4 bytes.
-    "multimodal_png" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(57 + L AS INTEGER) AS byte_len,
-        |  CAST(w AS INTEGER) AS width,
-        |  CAST(h AS INTEGER) AS height,
-        |  3 AS channels,
-        |  lower(hex(substr(text, 1, 4))) AS feature
-        |FROM d""".stripMargin,
-
-    // byte_len = ftyp(20) + moov(8 + mvhd 108 + trak 100) + mdat(8+len);
-    // tkhd stores dims as 16.16 fixed point, mvhd timescale 1000 with
-    // duration = len ticks so duration_ms = len; feature echoes the mdat
-    // payload's first 4 bytes. NOTE (shared with the decode/jpeg/png
-    // siblings): substr(text,1,4) is CHARACTERS while the Spark side
-    // echoes UTF-8 BYTES — equal only because the documents fixture is
-    // ASCII; a non-ASCII fixture would need an octet-based oracle here.
-    "multimodal_mp4" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(244 + L AS INTEGER) AS byte_len,
-        |  CAST(w AS INTEGER) AS width,
-        |  CAST(h AS INTEGER) AS height,
-        |  1000 AS timescale,
-        |  CAST(L AS BIGINT) AS duration_ms,
-        |  lower(hex(substr(text, 1, 4))) AS feature
-        |FROM d""".stripMargin,
-
-    // byte_len = header(6) + LSD(7) + GCT(6) + GCE(8) + image descriptor
-    // (10) + LZW-min(1) + data (len + one length byte per ≤255-byte
-    // sub-block) + terminator(1) + trailer(1) = 40 + L + ceil(L/255); the
-    // image dims (not the canvas dims, which are offset by +2/+1) derive
-    // from the text length and the feature echoes the first data
-    // sub-block's first 4 bytes. The substr(text,1,4) CHARACTERS-vs-BYTES
-    // caveat on the mp4 oracle applies here identically (ASCII fixture).
-    "multimodal_gif" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(40 + L + (L + 254) // 255 AS INTEGER) AS byte_len,
-        |  CAST(w AS INTEGER) AS width,
-        |  CAST(h AS INTEGER) AS height,
-        |  3 AS channels,
-        |  lower(hex(substr(text, 1, 4))) AS feature
-        |FROM d""".stripMargin,
-
-    // byte_len per container variant (RIFF 12 + chunk header 8 + chunk
-    // payload + RIFF even-padding; VP8X adds the 8-byte EXIF header):
-    // VP8 = 30+L+L%2, VP8L = 25+L+(L+1)%2, VP8X = 38+L+L%2. Channels:
-    // lossy 3, lossless 4, extended 3 + alpha flag (odd L).
-    "multimodal_webp" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h,
-        |    strlen(text) % 3 AS v
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(CASE WHEN v = 0 THEN 30 + L + L % 2
-        |            WHEN v = 1 THEN 25 + L + (L + 1) % 2
-        |            ELSE 38 + L + L % 2 END AS INTEGER) AS byte_len,
-        |  CAST(w AS INTEGER) AS width,
-        |  CAST(h AS INTEGER) AS height,
-        |  CAST(CASE WHEN v = 1 THEN 4
-        |            WHEN v = 2 AND L % 2 = 1 THEN 4 ELSE 3 END AS INTEGER) AS channels,
-        |  lower(hex(substr(text, 1, 4))) AS feature
-        |FROM d""".stripMargin,
-
-    // The oracle rebuilds the whole perceptual pipeline from text bytes:
-    // BMP dims (w, h) and row size from the length, the 8x8
-    // nearest-neighbor sample's source byte offsets (content cycles mod
-    // L, padding included), B+G+R luminance sums via unicode() (ASCII
-    // fixture — the documented bytes-vs-chars caveat), the integer-exact
-    // mean threshold (lum*64 > total), both 32-bit hash halves, the
-    // 4x16-bit band join, and the final Hamming cut.
-    "multimodal_phash_dedup" ->
-      """WITH u AS (
-        |  SELECT doc_id, text FROM documents WHERE strlen(text) > 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000,
-        |    repeat('x', least(strlen(text), 16)) || substr(text, 17)
-        |  FROM documents WHERE strlen(text) > 0),
-        |d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h FROM u),
-        |p AS (SELECT doc_id, text, L, w, h, ((w * 3 + 3) // 4) * 4 AS rs FROM d),
-        |lums AS (SELECT doc_id,
-        |  list_transform(generate_series(0, 63), g ->
-        |    unicode(substr(text, CAST((((((g // 8) * h) // 8) * rs + (((g % 8) * w) // 8) * 3) % L) + 1 AS INTEGER), 1))
-        |  + unicode(substr(text, CAST((((((g // 8) * h) // 8) * rs + (((g % 8) * w) // 8) * 3 + 1) % L) + 1 AS INTEGER), 1))
-        |  + unicode(substr(text, CAST((((((g // 8) * h) // 8) * rs + (((g % 8) * w) // 8) * 3 + 2) % L) + 1 AS INTEGER), 1))) AS lum
-        |  FROM p),
-        |hs AS (SELECT doc_id,
-        |  CAST(list_sum(list_transform(generate_series(0, 31), g ->
-        |    CASE WHEN lum[g + 1] * 64 > list_sum(lum) THEN (1::BIGINT << g) ELSE 0 END)) AS BIGINT) AS lo,
-        |  CAST(list_sum(list_transform(generate_series(32, 63), g ->
-        |    CASE WHEN lum[g + 1] * 64 > list_sum(lum) THEN (1::BIGINT << (g - 32)) ELSE 0 END)) AS BIGINT) AS hi
-        |  FROM lums),
-        |chunks AS (SELECT doc_id, lo, hi, j AS band,
-        |    CASE j WHEN 0 THEN lo & 65535 WHEN 1 THEN (lo >> 16) & 65535
-        |           WHEN 2 THEN hi & 65535 ELSE (hi >> 16) & 65535 END AS value
-        |  FROM hs, range(4) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    a.lo AS la, a.hi AS ha, b.lo AS lb, b.hi AS hb
-        |  FROM chunks a JOIN chunks b
-        |    ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id)
-        |SELECT a_id, b_id,
-        |  CAST(bit_count(xor(la, lb)) + bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-        |FROM cand
-        |WHERE bit_count(xor(la, lb)) + bit_count(xor(ha, hb)) <= 6""".stripMargin,
-
-    // byte_len = SOI(2) + APP0(18) + COM(4+len) + SOF0(19) + EOI(2), with
-    // the COM payload capped at 60000 (16-bit segment length field — the
-    // synthesizer applies the same cap); the SOF walk reads dims derived
-    // from the text length and the feature echoes the COM first 4 bytes.
-    "multimodal_jpeg" ->
-      """WITH d AS (SELECT doc_id, text, strlen(text) AS L,
-        |    1 + strlen(text) % 64 AS w, 1 + strlen(text) % 48 AS h
-        |  FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(45 + least(L, 60000) AS INTEGER) AS byte_len,
-        |  CAST(w AS INTEGER) AS width,
-        |  CAST(h AS INTEGER) AS height,
-        |  3 AS channels,
-        |  'sof0:' || lower(hex(substr(text, 1, 4))) AS feature
-        |FROM d""".stripMargin,
-
-    "multimodal_audio_frames" ->
-      """WITH t AS (SELECT doc_id, text, strlen(text) AS len FROM documents),
-        |f AS (SELECT doc_id, len, CAST(ceil(len / 256.0) AS BIGINT) AS n_frames,
-        |  list_transform(generate_series(0, CAST(ceil(len / 256.0) AS BIGINT) - 1), fr ->
-        |    list_avg(list_transform(generate_series(fr * 256 + 1, least((fr + 1) * 256, len)), i ->
-        |      unicode(substr(text, CAST(i AS INTEGER), 1)))))
-        |  AS means FROM t)
-        |SELECT doc_id AS id, CAST(len AS BIGINT) AS n_samples, 256 AS frame_len, n_frames,
-        |  round(means[1], 6) AS first_mean,
-        |  round(list_max(means), 6) AS max_mean
-        |FROM f""".stripMargin,
-
-    // header(8) + count(2) + 4 entries(48) + next-IFD(4) + text payload
-    // Frame split: frame j of N = 1+L%3 gets L//N (+1 while j < L%N);
-    // container = 39 + 20N + L + Σ⌈len_j/255⌉; loop = L%5.
-    "multimodal_gif_frames" ->
-      """WITH d AS (SELECT doc_id, strlen(text) AS l FROM documents),
-        |f AS (SELECT doc_id, l, CAST(1 + l % 3 AS INTEGER) AS n FROM d),
-        |blocks AS (SELECT doc_id,
-        |    CAST(sum(CAST(ceil((l // n + CASE WHEN j < l % n THEN 1 ELSE 0 END) / 255.0) AS BIGINT)) AS INTEGER) AS nb
-        |  FROM f, generate_series(0, 2) g(j) WHERE j < n GROUP BY 1)
-        |SELECT f.doc_id AS id,
-        |  CAST(39 + 20 * f.n + f.l + b.nb AS INTEGER) AS byte_len,
-        |  f.n AS n_frames, f.n AS n_gce,
-        |  CAST(f.l % 5 AS INTEGER) AS loop_count,
-        |  CAST(1 + f.l % 64 AS INTEGER) AS width,
-        |  CAST(1 + f.l % 48 AS INTEGER) AS height,
-        |  CAST(f.l AS INTEGER) AS data_bytes
-        |FROM f JOIN blocks b ON b.doc_id = f.doc_id""".stripMargin,
-
-    // Exif byte-layout arithmetic: SOI 2 + APP1 48 + SOF0 13 + payload
-    // + EOI 2 = 65 + L; metadata fields are the same length-derived
-    // values the builder wrote.
-    "multimodal_exif" ->
-      """SELECT doc_id AS id,
-        |  CAST(65 + strlen(text) AS INTEGER) AS byte_len,
-        |  CASE WHEN strlen(text) % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,
-        |  2 AS n_entries,
-        |  CAST(1 + strlen(text) % 8 AS INTEGER) AS orientation,
-        |  CAST(1 + strlen(text) % 3 AS INTEGER) AS resolution_unit,
-        |  CAST(1 + strlen(text) % 199 AS INTEGER) AS width,
-        |  CAST(1 + strlen(text) % 121 AS INTEGER) AS height
-        |FROM documents""".stripMargin,
-
-    "multimodal_tiff" ->
-      """SELECT doc_id AS id,
-        |  CAST(62 + strlen(text) AS INTEGER) AS byte_len,
-        |  CAST(1 + strlen(text) % 101 AS INTEGER) AS width,
-        |  CAST(1 + strlen(text) % 37 AS INTEGER) AS height,
-        |  8 AS bits,
-        |  CAST(1 + strlen(text) % 3 AS INTEGER) AS samples,
-        |  CASE WHEN strlen(text) % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,
-        |  4 AS n_entries
-        |FROM documents""".stripMargin,
-
-    "docs_source_cap" ->
-      """WITH c AS (SELECT source, count(*) AS n_src FROM documents GROUP BY 1),
-        |t AS (SELECT sum(n_src) AS n_total FROM c),
-        |b AS (SELECT source, least(n_src, CAST(floor(0.3 * n_total) AS BIGINT)) AS budget FROM c, t),
-        |r AS (SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents)
-        |SELECT r.doc_id, r.source, CAST(r.rk AS BIGINT) AS src_rank, b.budget
-        |FROM r JOIN b ON r.source = b.source
-        |WHERE r.rk <= b.budget""".stripMargin,
-
-    // fLaC(4) + STREAMINFO header(4)+body(34) + comment header(4)+text
-    // The deflated size is writer-dependent, so the oracle checks the
-    // structure facts: entry census + exact uncompressed byte total +
-    // the decoder's own CRC verification.
-    "multimodal_zip" ->
-      """SELECT doc_id AS id, 2 AS n_entries,
-        |  'doc.txt,meta.json' AS entry_names,
-        |  CAST(octet_length(encode(text)) + octet_length(encode('{"id":' || doc_id || '}')) AS BIGINT) AS total_uncompressed,
-        |  true AS crc_ok
-        |FROM documents""".stripMargin,
-
-    // ustar arithmetic: 1024-byte end marker + per entry a 512-byte
-    // header and the payload zero-padded up to a 512 block.
-    "multimodal_tar" ->
-      """WITH e AS (SELECT doc_id,
-        |  octet_length(encode(text)) AS a,
-        |  octet_length(encode('{"id":' || doc_id || '}')) AS b,
-        |  octet_length(encode(source)) AS c
-        |FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(1024 + 3*512
-        |    + 512*((a + 511) // 512) + 512*((b + 511) // 512)
-        |    + 512*((c + 511) // 512) AS INTEGER) AS byte_len,
-        |  3 AS n_entries, 1 AS n_groups,
-        |  doc_id || '.cls,' || doc_id || '.json,' || doc_id || '.txt' AS entry_names,
-        |  CAST(a + b + c AS BIGINT) AS total_bytes,
-        |  true AS chksum_ok
-        |FROM e""".stripMargin,
-
-    // Container length is pure arithmetic (zero-padded variable-width
-    // numbers): 317 fixed bytes + the stream + 97 per page object.
-    "multimodal_pdf" ->
-      """SELECT doc_id AS id,
-        |  CAST(317 + strlen(text) + 97 * (1 + strlen(text) % 5) AS INTEGER) AS byte_len,
-        |  '1.4' AS version,
-        |  CAST(1 + strlen(text) % 5 AS INTEGER) AS n_pages,
-        |  CAST(4 + strlen(text) % 5 AS INTEGER) AS n_objects,
-        |  CAST(strlen(text) AS BIGINT) AS stream_len,
-        |  substr(text, 1, 12) AS feature
-        |FROM documents""".stripMargin,
-
-    "multimodal_flac" ->
-      """SELECT doc_id AS id,
-        |  CAST(46 + strlen(text) AS INTEGER) AS byte_len,
-        |  CAST(16000 + (strlen(text) % 4) * 4000 AS INTEGER) AS sample_rate,
-        |  CAST(1 + strlen(text) % 2 AS INTEGER) AS channels,
-        |  16 AS bits_per_sample,
-        |  CAST(strlen(text) AS BIGINT) AS n_samples,
-        |  CAST(strlen(text) * 1000 // (16000 + (strlen(text) % 4) * 4000) AS BIGINT) AS duration_ms
-        |FROM documents""".stripMargin,
-
-    // Container arithmetic: ID3v2 header (10B) + min(L,37) tag body +
-    // n_frames CBR frames of 144*kbps*1000//sr bytes; 1152 samples/frame.
-    "multimodal_mp3" ->
-      """WITH k AS (SELECT doc_id, strlen(text) AS L FROM documents),
-        |p AS (SELECT doc_id, L,
-        |  CASE L % 5 WHEN 0 THEN 128 WHEN 1 THEN 160 WHEN 2 THEN 192 WHEN 3 THEN 224 ELSE 256 END AS kbps,
-        |  CASE L % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000 ELSE 32000 END AS sr,
-        |  CAST(1 + L % 2 AS INTEGER) AS channels,
-        |  CAST(2 + L % 4 AS INTEGER) AS n_frames,
-        |  CAST(CASE WHEN L < 37 THEN L ELSE 37 END AS INTEGER) AS id3_bytes
-        | FROM k)
-        |SELECT doc_id AS id,
-        |  CAST(10 + id3_bytes + n_frames * (144 * kbps * 1000 // sr) AS INTEGER) AS byte_len,
-        |  n_frames,
-        |  CAST(kbps AS INTEGER) AS bitrate_kbps,
-        |  CAST(sr AS INTEGER) AS sample_rate,
-        |  channels,
-        |  id3_bytes,
-        |  CAST(n_frames * 1152 * 1000 // sr AS BIGINT) AS duration_ms
-        |FROM p""".stripMargin,
-
-    "multimodal_audio_decode" ->
-      """SELECT doc_id AS id,
-        |  CAST(44 + strlen(text) * 2 AS INTEGER) AS byte_len,
-        |  CAST(8000 + (strlen(text) % 8) * 1000 AS INTEGER) AS sample_rate,
-        |  1 AS channels,
-        |  16 AS bits_per_sample,
-        |  CAST(strlen(text) AS BIGINT) AS n_samples,
-        |  CAST(strlen(text) * 1000 // (8000 + (strlen(text) % 8) * 1000) AS BIGINT) AS duration_ms
-        |FROM documents""".stripMargin,
-
-    "events_window_agg" ->
-      """SELECT CAST(epoch_ms(date_trunc('hour', ts)) AS BIGINT) AS window_start_ms, event_type,
-        |  count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "events_hopping_window" ->
-      """WITH e AS (SELECT event_type, value, CAST(epoch_ms(ts) AS BIGINT) AS ms FROM events),
-        |w AS (SELECT event_type, value, (ms // 1800000 - i) * 1800000 AS ws FROM e, range(2) r(i))
-        |SELECT CAST(ws AS BIGINT) AS window_start_ms, event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    "stream_window_agg" ->
-      """SELECT CAST(epoch_ms(date_trunc('hour', ts)) AS BIGINT) AS window_start_ms, event_type,
-        |  count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM events WHERE event_id < 2000 GROUP BY 1, 2""".stripMargin,
-
-    // Deterministic watermark replay: batch 2 rows survive iff their hour
-    // window's END is strictly later than max(batch-1 ts) − 10 min.
-    "stream_late_drop" ->
-      """WITH p1 AS (SELECT * FROM events WHERE event_id < 2000 AND event_id % 2 = 0),
-        |w1 AS (SELECT max(CAST(epoch_ms(ts) AS BIGINT)) - 600000 AS wm FROM p1),
-        |p2 AS (SELECT e.* FROM events e, w1
-        |  WHERE e.event_id < 2000 AND e.event_id % 2 = 1
-        |    AND CAST(epoch_ms(date_trunc('hour', e.ts)) AS BIGINT) + 3600000 > w1.wm),
-        |u AS (SELECT ts, event_type, value FROM p1
-        |      UNION ALL SELECT ts, event_type, value FROM p2)
-        |SELECT CAST(epoch_ms(date_trunc('hour', ts)) AS BIGINT) AS window_start_ms, event_type,
-        |  count(*) AS n_events, CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM u GROUP BY 1, 2""".stripMargin,
-
-    "stream_upsert_sink" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-        |  round(value, 6) AS last_value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-        |      FROM events WHERE event_id < 2000)
-        |WHERE rn = 1""".stripMargin,
-
-    // Three overlapping batches, one landing per user: the smallest
-    // event_id row of the FIRST batch (1: id<1000, 2: id<2000,
-    // 3: id>=1500) containing the user.
-    "stream_idempotent_sink" ->
-      """WITH f AS (SELECT event_id, user_id, event_type, value FROM events WHERE event_id < 3000),
-        |perbatch AS (
-        |  SELECT user_id, 1 AS b, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
-        |  FROM f WHERE event_id < 1000
-        |  UNION ALL
-        |  SELECT user_id, 2 AS b, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
-        |  FROM f WHERE event_id < 2000
-        |  UNION ALL
-        |  SELECT user_id, 3 AS b, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
-        |  FROM f WHERE event_id >= 1500),
-        |firsts AS (SELECT user_id, b, event_id, event_type, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY b) AS rb
-        |  FROM perbatch WHERE rn = 1)
-        |SELECT user_id, event_id AS first_event_id, event_type AS first_type,
-        |  round(value, 6) AS first_value
-        |FROM firsts WHERE rb = 1""".stripMargin,
-
-    // Two micro-batches → two snapshot versions; the table is the feed.
-    "stream_append_sink" ->
-      """SELECT event_type, count(*) AS n_events,
-        |  CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  2 AS n_versions
-        |FROM events WHERE event_id < 2000
-        |GROUP BY event_type""".stripMargin,
-
-    // Mid-stream main = the pre-committed baseline only; the audit read
-    // and the published table = baseline + the whole streamed slice.
-    "stream_branch_wap" ->
-      """WITH base AS (SELECT event_id, event_type FROM events
-        |  WHERE event_id >= 2000 AND event_id < 2500),
-        |ing AS (SELECT event_id, event_type FROM events WHERE event_id < 2000),
-        |allr AS (SELECT * FROM base UNION ALL SELECT * FROM ing)
-        |SELECT event_type, count(*) AS n_events,
-        |  CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  (SELECT count(*) FROM base) AS n_main_during,
-        |  (SELECT count(*) FROM allr) AS n_branch_audit
-        |FROM allr GROUP BY event_type""".stripMargin,
-
-    // Each micro-batch's censuses re-derived from the event_id split.
-    "stream_constraint_gate" ->
-      """WITH b AS (SELECT *, CAST(CASE WHEN event_id < 1000 THEN 0 ELSE 1 END AS BIGINT) AS batch_id
-        |  FROM events WHERE event_id < 2000)
-        |SELECT batch_id, 'not_null(user_id)' AS rule,
-        |  CAST(count(*) AS BIGINT) AS n_checked,
-        |  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-        |FROM b GROUP BY batch_id
-        |UNION ALL
-        |SELECT batch_id, 'in_range(value,0.0,400.0)',
-        |  CAST(count(value) AS BIGINT),
-        |  CAST(sum(CASE WHEN value IS NOT NULL AND NOT (value >= 0.0 AND value <= 400.0) THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM b GROUP BY batch_id
-        |UNION ALL
-        |SELECT batch_id, 'accepted(event_type)',
-        |  CAST(count(event_type) AS BIGINT),
-        |  CAST(sum(CASE WHEN event_type IS NOT NULL AND event_type NOT IN ('click','view','purchase','signup') THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM b GROUP BY batch_id""".stripMargin,
-
-    "stream_hopping" ->
-      """WITH e AS (SELECT event_type, value, CAST(epoch_ms(ts) AS BIGINT) AS ms
-        |  FROM events WHERE event_id < 2000),
-        |w AS (SELECT event_type, value, (ms // 1800000 - i) * 1800000 AS ws FROM e, range(2) r(i))
-        |SELECT CAST(ws AS BIGINT) AS window_start_ms, event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    // Mirrors Spark's session_window semantics exactly: an event exactly
-    // gap after its predecessor still MERGES into the session — a new
-    // session starts only when the gap is STRICTLY greater than 30 min
-    // (boundary pinned by a StreamingSpec test); session end = last
-    // event + gap, value sums DECIMAL-routed.
-    "stream_session" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, value
-        |  FROM events WHERE event_id < 2000),
-        |x AS (SELECT user_id, ms, value,
-        |    CASE WHEN lag(ms) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-        |           OR ms - lag(ms) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e),
-        |y AS (SELECT user_id, ms, value,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ms ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM x)
-        |SELECT user_id, min(ms) AS session_start_ms,
-        |  max(ms) + 1800000 AS session_end_ms,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM y GROUP BY user_id, sid""".stripMargin,
-
-    // The final mapGroupsWithState state per user must equal the batch
-    // aggregate (value totals DECIMAL-routed on both sides).
-    // Admission = the first 5 of each (user, hour window) in arrival
-    // order: batch (thirds by event_id), then ts, then event_id.
-    "stream_rate_limit" ->
-      """WITH f AS (SELECT event_id, user_id, epoch_ms(ts) AS ts_ms,
-        |    CASE WHEN event_id < 1000 THEN 1 WHEN event_id < 2000 THEN 2 ELSE 3 END AS b
-        |  FROM events WHERE event_id < 3000),
-        |w AS (SELECT event_id, user_id, ts_ms, b,
-        |    (ts_ms // 3600000) * 3600000 AS window_start_ms FROM f),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, window_start_ms
-        |    ORDER BY b, ts_ms, event_id) AS rn FROM w)
-        |SELECT event_id, user_id, window_start_ms, rn <= 5 AS admitted FROM r""".stripMargin,
-
-    "stream_running_totals" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM events WHERE event_id < 2000 GROUP BY 1""".stripMargin,
-
-    "stream_enrich" ->
-      """SELECT e.event_id, e.user_id, e.event_type, c.c_mktsegment
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |WHERE e.event_id < 2000""".stripMargin,
-
-    // The same SCD2 interval lookup in batch SQL: the version covering
-    // the EVENT time wins; the open version has a null end; uncovered
-    // types keep null tiers.
-    "stream_pit_enrich" ->
-      """WITH d(event_type, valid_from, valid_to, tier) AS (VALUES
-        |  ('view', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-11', 'view_v1'),
-        |  ('view', TIMESTAMP '2024-01-11', TIMESTAMP '2024-01-21', 'view_v2'),
-        |  ('view', TIMESTAMP '2024-01-21', NULL::TIMESTAMP, 'view_v3'),
-        |  ('purchase', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-11', 'purchase_v1'),
-        |  ('purchase', TIMESTAMP '2024-01-11', TIMESTAMP '2024-01-21', 'purchase_v2'),
-        |  ('purchase', TIMESTAMP '2024-01-21', NULL::TIMESTAMP, 'purchase_v3'),
-        |  ('signup', TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-11', 'signup_v1'),
-        |  ('signup', TIMESTAMP '2024-01-11', TIMESTAMP '2024-01-21', 'signup_v2'),
-        |  ('signup', TIMESTAMP '2024-01-21', NULL::TIMESTAMP, 'signup_v3'))
-        |SELECT e.event_id, e.user_id, e.event_type, d.tier
-        |FROM events e LEFT JOIN d
-        |  ON e.event_type = d.event_type AND e.ts >= d.valid_from
-        |  AND (d.valid_to IS NULL OR e.ts < d.valid_to)
-        |WHERE e.event_id < 2000""".stripMargin,
-
-    // quantile_cont interpolates identically to Spark's exact percentile
-    // (both a + (b-a)*frac in IEEE doubles — the events_value_profile p50
-    // precedent), so the boundary comparisons agree bit-for-bit.
-    "docs_length_bins" ->
-      """WITH b AS (SELECT quantile_cont(n_chars, [0.25, 0.5, 0.75]) AS bs FROM documents)
-        |SELECT doc_id, n_chars,
-        |  CASE WHEN n_chars <= bs[1] THEN 0
-        |       WHEN n_chars <= bs[2] THEN 1
-        |       WHEN n_chars <= bs[3] THEN 2
-        |       ELSE 3 END AS bin
-        |FROM documents, b""".stripMargin,
-
-    "docs_mix_plan" ->
-      """WITH per AS (SELECT source, count(*) AS n_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS w_total
-        |  FROM documents GROUP BY 1),
-        |k AS (SELECT count(*) AS k FROM per)
-        |SELECT source, n_docs, w_total,
-        |  round(least(1.0, (100000.0 / k.k) / w_total), 6) AS keep_prob,
-        |  CAST(floor(round(least(1.0, (100000.0 / k.k) / w_total), 6) * w_total) AS BIGINT) AS projected_w
-        |FROM per, k""".stripMargin,
-
-    // The same two smoothed 64-bucket histograms, the same 12-decimal-
-    // canonicalized log-ratio vector, the same per-token fold in list
-    // order, and the same deterministic Gumbel keys.
-    "docs_dsir_sample" ->
-      """WITH t AS (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |tb AS (SELECT lang, ((('0x'||substr(md5(tok),1,15))::UBIGINT)::BIGINT % 64) AS b
-        |  FROM (SELECT lang, unnest(toks) AS tok FROM t)),
-        |ht AS (SELECT b, CAST(count(*) AS BIGINT) AS c FROM tb WHERE lang = 'en' GROUP BY 1),
-        |hr AS (SELECT b, CAST(count(*) AS BIGINT) AS c FROM tb GROUP BY 1),
-        |tots AS (SELECT (SELECT CAST(sum(c) AS BIGINT) FROM ht) AS tt,
-        |               (SELECT CAST(sum(c) AS BIGINT) FROM hr) AS tr),
-        |lr AS (SELECT g.j AS b,
-        |    round(ln(((COALESCE(ht.c, 0) + 1) / (tots.tt + 64.0)) /
-        |             ((COALESCE(hr.c, 0) + 1) / (tots.tr + 64.0))), 12) AS w
-        |  FROM generate_series(0, 63) g(j) CROSS JOIN tots
-        |  LEFT JOIN ht ON ht.b = g.j LEFT JOIN hr ON hr.b = g.j),
-        |warr AS (SELECT list(w ORDER BY b) AS ws FROM lr),
-        |scored AS (SELECT doc_id,
-        |    list_reduce(list_prepend(0.0::DOUBLE, list_transform(toks,
-        |      x -> ws[CAST((('0x'||substr(md5(x),1,15))::UBIGINT)::BIGINT % 64 AS INTEGER) + 1])),
-        |      (a, v) -> a + v) AS log_weight,
-        |    ((('0x'||substr(md5(doc_id::VARCHAR),1,15))::UBIGINT)::BIGINT + 1) / 1152921504606846977.0 AS u
-        |  FROM t CROSS JOIN warr),
-        |keyed AS (SELECT doc_id, log_weight,
-        |    log_weight + (-round(ln(-round(ln(u), 12)), 12)) AS pick_key
-        |  FROM scored)
-        |SELECT doc_id, round(log_weight, 6) AS log_weight, round(pick_key, 6) AS pick_key
-        |FROM keyed ORDER BY pick_key DESC, doc_id LIMIT 50""".stripMargin,
-
-    "docs_temperature_mix" ->
-      """WITH per AS (SELECT source, count(*) AS n_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS w_total
-        |  FROM documents GROUP BY 1),
-        |t AS (SELECT *,
-        |    CAST(w_total AS DOUBLE) / sum(w_total) OVER () AS raw_share,
-        |    pow(CAST(w_total AS DOUBLE), 0.5) AS temp_w
-        |  FROM per)
-        |SELECT source, n_docs, w_total,
-        |  round(raw_share, 6) AS raw_share,
-        |  round(temp_w / sum(temp_w) OVER (), 6) AS temp_share,
-        |  round((temp_w / sum(temp_w) OVER ()) / raw_share, 6) AS boost
-        |FROM t""".stripMargin,
-
-    // Same md5-prefix bucket arithmetic as docs_hash_sample, salted.
-    "docs_training_order" ->
-      """WITH h AS (SELECT doc_id,
-        |    md5(concat(doc_id::VARCHAR, ':', 'epoch1')) AS shuffle_key
-        |  FROM documents),
-        |s AS (SELECT doc_id, shuffle_key,
-        |    (('0x'||substr(shuffle_key,1,7))::UBIGINT)::BIGINT % 8 AS shard
-        |  FROM h)
-        |SELECT doc_id, shuffle_key, shard,
-        |  row_number() OVER (PARTITION BY shard ORDER BY shuffle_key, doc_id) AS pos_in_shard
-        |FROM s""".stripMargin,
-
-    // Same shingle construction as the MinHash oracle CTE (distinct
-    // trigrams, short texts collapse to one whole-text shingle).
-    "text_boilerplate" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |e AS (SELECT doc_id, unnest(sh) AS s FROM sh),
-        |dfc AS (SELECT s, count(*) AS df FROM e GROUP BY 1)
-        |SELECT e.doc_id, count(*) AS n_shingles,
-        |  count(*) FILTER (dfc.df > 10) AS n_common,
-        |  round(count(*) FILTER (dfc.df > 10) / count(*), 6) AS common_frac
-        |FROM e JOIN dfc USING (s) GROUP BY 1""".stripMargin,
-
-    "text_pii_scrub" ->
-      """SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g'),
-        |    '\d{4,}', '[NUM]', 'g') AS clean_text,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS BIGINT) AS n_phones,
-        |  CAST(len(regexp_extract_all(text, '\d{4,}')) AS BIGINT) AS n_digit_runs
-        |FROM documents""".stripMargin,
-
-    // The naive bounded join over the same slices — a genuinely different
-    // algorithm than the double-watermarked streaming join.
-    "stream_interval_join" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_ms(ts) AS ms
-        |  FROM events WHERE event_id < 5000 AND event_type = 'click'),
-        |r AS (SELECT user_id, epoch_ms(ts) AS ms, value
-        |  FROM events WHERE event_id < 5000 AND event_type = 'error')
-        |SELECT l.event_id, l.user_id, l.ms AS ts_ms,
-        |  r.ms AS right_ts_ms, r.value AS right_value
-        |FROM l JOIN r ON l.user_id = r.user_id
-        |  AND r.ms >= l.ms - 3600000 AND r.ms <= l.ms + 600000""".stripMargin,
-
-    "stream_interval_left_join" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_ms(ts) AS ms
-        |  FROM events WHERE event_id < 5000 AND event_type = 'click'),
-        |r AS (SELECT user_id, epoch_ms(ts) AS ms, value
-        |  FROM events WHERE event_id < 5000 AND event_type = 'error')
-        |SELECT l.event_id, l.user_id, l.ms AS ts_ms,
-        |  r.ms AS right_ts_ms, r.value AS right_value
-        |FROM l LEFT JOIN r ON l.user_id = r.user_id
-        |  AND r.ms >= l.ms - 3600000 AND r.ms <= l.ms + 600000""".stripMargin,
-
-    "stream_dedup" ->
-      """SELECT count(*) AS n_in,
-        |  count(DISTINCT md5(regexp_replace(trim(lower(props)), '\s+', ' ', 'g'))) AS n_survivors,
-        |  count(DISTINCT md5(regexp_replace(trim(lower(props)), '\s+', ' ', 'g'))) AS n_distinct_fp
-        |FROM events WHERE event_id < 2000""".stripMargin,
-
-    // The batch CASE chain equivalent to the 2-rule plug: rule 2 evaluates
-    // over rule 1's OUTPUT (sequential semantics), hence the nested CTEs.
-    // First-arm-wins CASE over the bounded replay window.
-    "stream_first_match" ->
-      """SELECT CASE WHEN value > 250 THEN 'hot'
-        |            WHEN value > 100 THEN 'warm'
-        |            ELSE event_type END AS event_type,
-        |  count(*) AS n,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS vsum
-        |FROM events WHERE event_id < 2000
-        |GROUP BY 1""".stripMargin,
-
-    "stream_plug" ->
-      """WITH r1 AS (SELECT
-        |    CASE WHEN event_type = 'view' AND value > 250 THEN 'view_hot'
-        |         ELSE event_type END AS event_type,
-        |    value
-        |  FROM events WHERE event_id < 2000),
-        |r2 AS (SELECT event_type,
-        |    CASE WHEN event_type = 'click' AND value < 50 THEN 0.0
-        |         ELSE value END AS value
-        |  FROM r1)
-        |SELECT event_type, count(*) AS n,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS vsum
-        |FROM r2 GROUP BY 1""".stripMargin,
-
-    "events_sessionize" ->
-      """WITH x AS (SELECT user_id, ts, epoch_ms(ts) AS ts_ms,
-        |    CASE WHEN lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |           OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 1800000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events),
-        |y AS (SELECT user_id, ts_ms,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM x)
-        |SELECT user_id, session_id, count(*) AS n_events, min(ts_ms) AS start_ms, max(ts_ms) AS end_ms
-        |FROM y GROUP BY 1, 2""".stripMargin,
-
-    "events_session_attach" ->
-      """WITH a AS (SELECT user_id, ts, epoch_ms(ts) AS ts_ms,
-        |    CASE WHEN lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |           OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 1800000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE event_type IN ('view', 'click')),
-        |y AS (SELECT user_id, ts_ms,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM a),
-        |s AS (SELECT user_id, session_id, count(*) AS n_events, min(ts_ms) AS start_ms, max(ts_ms) AS end_ms
-        |  FROM y GROUP BY 1, 2),
-        |p AS (SELECT user_id, epoch_ms(ts) AS pms, value FROM events WHERE event_type = 'purchase')
-        |SELECT s.user_id, s.session_id, s.n_events, s.start_ms, s.end_ms,
-        |  count(p.pms) AS n_attached,
-        |  round(CAST(COALESCE(SUM(CAST(p.value AS DECIMAL(18,6))), 0) AS DOUBLE), 6) AS attached_value
-        |FROM s LEFT JOIN p ON p.user_id = s.user_id AND p.pms BETWEEN s.start_ms AND s.end_ms
-        |GROUP BY 1, 2, 3, 4, 5""".stripMargin,
-
-    "events_distinct_by_type" ->
-      """SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS nd_exact
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "events_cohort" ->
-      """WITH wk AS (SELECT user_id, epoch_ms(ts) // 604800000 AS w FROM events),
-        |f AS (SELECT user_id, min(w) AS cohort_week FROM wk GROUP BY 1),
-        |a AS (SELECT DISTINCT user_id, w AS active_week FROM wk)
-        |SELECT f.cohort_week, a.active_week, a.active_week - f.cohort_week AS week_offset,
-        |  count(*) AS n_users
-        |FROM a JOIN f USING (user_id) GROUP BY 1, 2, 3""".stripMargin,
-
-    "events_pivot" ->
-      """SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-        |  count(*) FILTER (event_type = 'click') AS n_click,
-        |  round(CAST(sum(CAST(CASE WHEN event_type = 'click' THEN value ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_click,
-        |  count(*) FILTER (event_type = 'error') AS n_error,
-        |  round(CAST(sum(CAST(CASE WHEN event_type = 'error' THEN value ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_error,
-        |  count(*) FILTER (event_type = 'purchase') AS n_purchase,
-        |  round(CAST(sum(CAST(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_purchase,
-        |  count(*) FILTER (event_type = 'signup') AS n_signup,
-        |  round(CAST(sum(CAST(CASE WHEN event_type = 'signup' THEN value ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_signup,
-        |  count(*) FILTER (event_type = 'view') AS n_view,
-        |  round(CAST(sum(CAST(CASE WHEN event_type = 'view' THEN value ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_view
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "events_attribution" ->
-      """WITH w AS (SELECT event_id, user_id, event_type,
-        |    epoch_ms(ts) AS ts_ms,
-        |    first_value(event_type) OVER u AS first_touch,
-        |    min(epoch_ms(ts)) OVER u AS first_ms,
-        |    count(*) OVER u AS n_cum
-        |  FROM events
-        |  WINDOW u AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS UNBOUNDED PRECEDING))
-        |SELECT event_id, user_id, first_touch,
-        |  ts_ms - first_ms AS ms_to_convert,
-        |  n_cum - 1 AS n_prior_events
-        |FROM w WHERE event_type = 'purchase'""".stripMargin,
-
-    "events_top_sequences" ->
-      """WITH s AS (SELECT
-        |    event_type AS t0,
-        |    lead(event_type, 1) OVER u AS t1,
-        |    lead(event_type, 2) OVER u AS t2
-        |  FROM events
-        |  WINDOW u AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT t0 || '>' || t1 || '>' || t2 AS seq, count(*) AS n_occurrences
-        |FROM s WHERE t2 IS NOT NULL
-        |GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 25""".stripMargin,
-
-    // GROUPING() disambiguates the rolled-up 'ALL' labels; the DECIMAL
-    // route keeps the sums partial-order independent in both engines.
-    "events_rollup" ->
-      """WITH e AS (SELECT event_type AS k, CAST(ts AS DATE) AS d, value FROM events)
-        |SELECT coalesce(CAST(k AS VARCHAR), 'ALL') AS key,
-        |  coalesce(CAST(d AS VARCHAR), 'ALL') AS day,
-        |  CAST(GROUPING(k) AS INTEGER) AS g_key,
-        |  CAST(GROUPING(d) AS INTEGER) AS g_day,
-        |  count(*) AS n,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS vsum
-        |FROM e GROUP BY ROLLUP (k, d)""".stripMargin,
-
-    "events_cube" ->
-      """WITH e AS (SELECT event_type AS k, CAST(ts AS DATE) AS d, value FROM events)
-        |SELECT coalesce(CAST(k AS VARCHAR), 'ALL') AS key,
-        |  coalesce(CAST(d AS VARCHAR), 'ALL') AS day,
-        |  CAST(GROUPING(k) AS INTEGER) AS g_key,
-        |  CAST(GROUPING(d) AS INTEGER) AS g_day,
-        |  count(*) AS n,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS vsum
-        |FROM e GROUP BY CUBE (k, d)""".stripMargin,
-
-    // The three explicit sets replay verbatim; GROUPING(a, b) is the
-    // same leftmost-most-significant bitmask as Spark's grouping_id().
-    "events_grouping_sets" ->
-      """WITH e AS (SELECT event_type, user_id % 10 AS ub, value FROM events)
-        |SELECT event_type, ub, count(*) AS n,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS value_sum,
-        |  CAST(GROUPING(event_type, ub) AS BIGINT) AS gid
-        |FROM e GROUP BY GROUPING SETS ((event_type), (ub), ())""".stripMargin,
-
-    // The grid generates laterally from the 1-row bounds aggregate in
-    // both engines; zero rows are explicit, not absent.
-    "events_gap_fill" ->
-      """WITH a AS (SELECT event_type AS k, epoch_ms(ts) // 3600000 AS bucket,
-        |    count(*) AS n,
-        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS vsum
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT min(bucket) AS lo, max(bucket) AS hi FROM a),
-        |grid AS (SELECT k, unnest(generate_series(b.lo, b.hi)) AS bucket
-        |         FROM (SELECT DISTINCT k FROM a) keys, b)
-        |SELECT g.k AS event_type, g.bucket,
-        |  coalesce(a.n, 0) AS n, coalesce(a.vsum, 0.0) AS vsum
-        |FROM grid g LEFT JOIN a ON g.k = a.k AND g.bucket = a.bucket""".stripMargin,
-
-    // Medians/MADs interpolate identically (quantile_cont ↔ percentile,
-    // proven by events_quantile_gate); the outlier count uses the
-    // UNROUNDED stats so both engines gate on the same threshold.
-    "events_anomaly_mad" ->
-      """WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS med FROM events GROUP BY 1),
-        |mad AS (SELECT e.event_type, count(*) AS n, min(m.med) AS med_raw,
-        |    quantile_cont(abs(e.value - m.med), 0.5) AS mad_raw
-        |  FROM events e JOIN med m USING (event_type) GROUP BY 1),
-        |outl AS (SELECT e.event_type,
-        |    count(*) FILTER (WHERE abs(e.value - m.med) > 3.0 * 1.4826 * d.mad_raw) AS n_outliers
-        |  FROM events e JOIN med m USING (event_type) JOIN mad d USING (event_type) GROUP BY 1)
-        |SELECT d.event_type, d.n, round(d.med_raw, 6) AS med,
-        |  round(d.mad_raw, 6) AS mad, o.n_outliers
-        |FROM mad d JOIN outl o USING (event_type)""".stripMargin,
-
-    // RANGE frame over epoch seconds — tie-order independent, so the
-    // per-event counts are deterministic in both engines.
-    "events_rate_window" ->
-      """SELECT user_id, epoch_ms(ts) AS ts_ms,
-        |  count(*) OVER (PARTITION BY user_id ORDER BY epoch_ms(ts) // 1000
-        |    RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_trailing
-        |FROM events""".stripMargin,
-
-    "events_debounce" ->
-      """WITH w AS (SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms,
-        |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id, event_type
-        |                            ORDER BY ts, event_id) AS prev_ms
-        |  FROM events)
-        |SELECT event_id, user_id, event_type, ts_ms
-        |FROM w WHERE prev_ms IS NULL OR ts_ms - prev_ms >= 600000""".stripMargin,
-
-    // Deliberately the NAIVE formulation (day grid range-joined to deduped
-    // (day, user) pairs) — independent of the Spark side's explode-to-
-    // equi-join rewrite, so the hash match proves the rewrite.
-    "events_rolling_active" ->
-      """WITH du AS (SELECT DISTINCT epoch_ms(ts) // 86400000 AS day, user_id FROM events),
-        |obs AS (SELECT DISTINCT day FROM du)
-        |SELECT obs.day AS day, count(DISTINCT du.user_id) AS active_users
-        |FROM obs JOIN du ON du.day BETWEEN obs.day - 6 AND obs.day
-        |GROUP BY 1""".stripMargin,
-
-    // BIGINT / HUGEINT division yields DOUBLE in DuckDB exactly as long /
-    // long does in Spark — p is a ratio of exact integers in both engines.
-    "events_markov" ->
-      """WITH pr AS (SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, count(*) AS n
-        |  FROM pr WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, sum(n) AS n_from FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, c.n, round(c.n / t.n_from, 6) AS p
-        |FROM c JOIN t USING (from_type)""".stripMargin,
-
-    "events_change_history" ->
-      """WITH w AS (SELECT user_id, event_type, event_id, epoch_ms(ts) AS ts_ms,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-        |  FROM events),
-        |v AS (SELECT user_id, event_type, event_id, ts_ms AS valid_from_ms
-        |  FROM w WHERE event_type IS DISTINCT FROM prev_type)
-        |SELECT user_id, event_type, valid_from_ms,
-        |  lead(valid_from_ms) OVER (PARTITION BY user_id ORDER BY valid_from_ms, event_id) AS valid_to_ms,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY valid_from_ms, event_id) AS version_n
-        |FROM v""".stripMargin,
-
-    "events_value_profile" ->
-      """SELECT event_type,
-        |  count(*) AS n,
-        |  CAST(count(*) FILTER (WHERE value IS NULL) AS BIGINT) AS n_null,
-        |  round(min(value), 6) AS vmin,
-        |  round(max(value), 6) AS vmax,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS vsum,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS vavg,
-        |  round(quantile_cont(value, 0.5), 6) AS p50
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // HLL bit patterns differ across engines; the oracle asserts the
-    // estimate lands within 5% of exact (emitted as a literal `true`).
-    "events_approx_distinct" ->
-      """SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS nd_exact,
-        |  true AS within_5pct
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // The Sketches.scala HLL is engine-deterministic by construction
-    // (md5 hash, bit-length rho via bin(), exact-integer harmonic sum,
-    // one fixed IEEE multiply/divide chain), so DuckDB recomputes the
-    // full report — registers, estimates, and the 3-sigma verdict —
-    // bit-for-bit. Float literals are ::DOUBLE-pinned: DuckDB parses
-    // bare decimals as DECIMAL, which would change the arithmetic.
-    "events_hll_shards" ->
-      """WITH keyed AS MATERIALIZED (
-        |  SELECT CAST(event_id AS VARCHAR) AS k, event_type AS shard FROM events),
-        |regs AS MATERIALIZED (
-        |  SELECT shard,
-        |    CAST(CONCAT('0x', substring(md5(k), 1, 2)) AS BIGINT) AS idx,
-        |    MAX(CASE WHEN CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT) = 0
-        |        THEN 53
-        |        ELSE 53 - length(bin(CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT)))
-        |        END) AS rho
-        |  FROM keyed GROUP BY 1, 2),
-        |allregs AS MATERIALIZED (
-        |  SELECT shard, idx, rho FROM regs
-        |  UNION ALL
-        |  SELECT '__union' AS shard, idx, MAX(rho) AS rho FROM regs GROUP BY idx),
-        |agg AS MATERIALIZED (
-        |  SELECT shard, COUNT(*) AS used,
-        |    SUM(1::BIGINT << (53 - rho)) AS num_occ
-        |  FROM allregs GROUP BY shard),
-        |fin AS MATERIALIZED (
-        |  SELECT shard, used, 256 - used AS v,
-        |    (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 256.0::DOUBLE)
-        |      * 65536.0::DOUBLE * 9007199254740992.0::DOUBLE)
-        |      / CAST(num_occ + (256 - used) * (1::BIGINT << 53) AS DOUBLE) AS raw
-        |  FROM agg),
-        |est AS MATERIALIZED (
-        |  SELECT shard,
-        |    CAST(used AS INT) AS registers_used,
-        |    CAST(v AS INT) AS v_zero,
-        |    round(CASE WHEN raw <= 640.0::DOUBLE AND v > 0
-        |      THEN 256.0::DOUBLE * ln(256.0::DOUBLE / CAST(v AS DOUBLE))
-        |      ELSE raw END, 4) AS estimate,
-        |    (raw <= 640.0::DOUBLE AND v > 0) AS corrected
-        |  FROM fin),
-        |ex AS MATERIALIZED (
-        |  SELECT shard, count(DISTINCT k) AS nd_exact FROM keyed GROUP BY 1
-        |  UNION ALL
-        |  SELECT '__union' AS shard, count(DISTINCT k) AS nd_exact FROM keyed)
-        |SELECT e.shard, e.registers_used, e.v_zero, e.estimate, e.corrected,
-        |  x.nd_exact,
-        |  (abs(e.estimate - x.nd_exact) / x.nd_exact
-        |    <= 3.0::DOUBLE * 1.04::DOUBLE / sqrt(256.0::DOUBLE)) AS within_3sigma
-        |FROM est e JOIN ex x USING (shard)""".stripMargin,
-
-    // The maintained register table ≡ a from-scratch sketch of the source
-    // (register max is associative + idempotent), so the oracle simply
-    // recomputes the per-shard sketch estimate over the full feed; the
-    // idle refresh being a no-op pins idle_refresh_commits at 0.
-    "ingest_manifest_hll_ivm" ->
-      """WITH keyed AS MATERIALIZED (
-        |  SELECT CAST(event_id AS VARCHAR) AS k, event_type AS shard FROM events),
-        |regs AS MATERIALIZED (
-        |  SELECT shard,
-        |    CAST(CONCAT('0x', substring(md5(k), 1, 2)) AS BIGINT) AS idx,
-        |    MAX(CASE WHEN CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT) = 0
-        |        THEN 53
-        |        ELSE 53 - length(bin(CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT)))
-        |        END) AS rho
-        |  FROM keyed GROUP BY 1, 2),
-        |agg AS MATERIALIZED (
-        |  SELECT shard, COUNT(*) AS used,
-        |    SUM(1::BIGINT << (53 - rho)) AS num_occ
-        |  FROM regs GROUP BY shard),
-        |fin AS MATERIALIZED (
-        |  SELECT shard, used, 256 - used AS v,
-        |    (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 256.0::DOUBLE)
-        |      * 65536.0::DOUBLE * 9007199254740992.0::DOUBLE)
-        |      / CAST(num_occ + (256 - used) * (1::BIGINT << 53) AS DOUBLE) AS raw
-        |  FROM agg),
-        |est AS MATERIALIZED (
-        |  SELECT shard,
-        |    CAST(used AS INT) AS registers_used,
-        |    CAST(v AS INT) AS v_zero,
-        |    round(CASE WHEN raw <= 640.0::DOUBLE AND v > 0
-        |      THEN 256.0::DOUBLE * ln(256.0::DOUBLE / CAST(v AS DOUBLE))
-        |      ELSE raw END, 4) AS estimate,
-        |    (raw <= 640.0::DOUBLE AND v > 0) AS corrected
-        |  FROM fin),
-        |ex AS (SELECT shard, count(DISTINCT k) AS nd_exact FROM keyed GROUP BY 1)
-        |SELECT e.shard AS event_type, e.registers_used, e.v_zero, e.estimate,
-        |  e.corrected, x.nd_exact,
-        |  (abs(e.estimate - x.nd_exact) / x.nd_exact
-        |    <= 3.0::DOUBLE * 1.04::DOUBLE / sqrt(256.0::DOUBLE)) AS within_3sigma,
-        |  0::BIGINT AS idle_refresh_commits
-        |FROM est e JOIN ex x USING (shard)""".stripMargin,
-
-    // Metadata answers recomputed from the delete semantics directly:
-    // copy-on-write removes [0,99], the deletion vector then [100,149];
-    // the count stays exact through both, min/max only through the first.
-    "ingest_manifest_meta_agg" ->
-      """WITH alive1 AS (SELECT event_id FROM events WHERE event_id NOT BETWEEN 0 AND 99),
-        |alive2 AS (SELECT event_id FROM alive1 WHERE event_id NOT BETWEEN 100 AND 149)
-        |SELECT
-        |  (SELECT count(*) FROM events) AS n_meta0,
-        |  (SELECT min(event_id) FROM events) AS min_meta0,
-        |  (SELECT max(event_id) FROM events) AS max_meta0,
-        |  (SELECT count(*) FROM alive1) AS n_meta1,
-        |  (SELECT min(event_id) FROM alive1) AS min_meta1,
-        |  (SELECT max(event_id) FROM alive1) AS max_meta1,
-        |  (SELECT count(*) FROM alive2) AS n_meta2,
-        |  false AS minmax_answerable_post_dv,
-        |  true AS count_matches_scan,
-        |  true AS cow_min_was_exact""".stripMargin,
-
-    // The feed recomputed from the window semantics: inserts = the
-    // appended slice minus its in-window deletes; deletes = both DV
-    // ranges (baseline rows AND window inserts).
-    "ingest_manifest_cdf" ->
-      """SELECT 'insert' AS _change_type, event_id, user_id FROM events
-        |WHERE event_id >= 4000 AND event_id < 5000
-        |  AND NOT (event_id BETWEEN 4500 AND 4599)
-        |UNION ALL
-        |SELECT 'delete' AS _change_type, event_id, user_id FROM events
-        |WHERE event_id BETWEEN 100 AND 199
-        |   OR event_id BETWEEN 4500 AND 4599""".stripMargin,
-
-    // The KMV merge law makes table-level sketches file-layout-
-    // independent, so the oracle recomputes them straight from the
-    // columns: k smallest distinct 60-bit md5 hashes per side, the union
-    // sketch, membership counts, and the same estimator arithmetic.
-    "ingest_manifest_join_card" ->
-      """WITH ska AS MATERIALIZED (SELECT h FROM (
-        |    SELECT DISTINCT CAST(CONCAT('0x', substring(md5(CAST(o_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |    FROM orders WHERE o_orderkey % 4 = 0) ORDER BY h LIMIT 64),
-        |skb AS MATERIALIZED (SELECT h FROM (
-        |    SELECT DISTINCT CAST(CONCAT('0x', substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |    FROM customer) ORDER BY h LIMIT 64),
-        |m AS MATERIALIZED (SELECT h FROM (
-        |    SELECT h FROM ska UNION SELECT h FROM skb) ORDER BY h LIMIT 64),
-        |st AS (SELECT
-        |  (SELECT count(*) FROM ska) AS ca, (SELECT max(h) FROM ska) AS ha,
-        |  (SELECT count(*) FROM skb) AS cb, (SELECT max(h) FROM skb) AS hb,
-        |  (SELECT count(*) FROM m) AS cm, (SELECT max(h) FROM m) AS hm,
-        |  (SELECT count(*) FROM m WHERE h IN (SELECT h FROM ska)
-        |     AND h IN (SELECT h FROM skb)) AS nb),
-        |est AS (SELECT
-        |  CASE WHEN ca < 64 THEN CAST(ca AS DOUBLE)
-        |    ELSE 63.0::DOUBLE * 1152921504606846976.0::DOUBLE / CAST(ha AS DOUBLE) END AS est_a,
-        |  CASE WHEN cb < 64 THEN CAST(cb AS DOUBLE)
-        |    ELSE 63.0::DOUBLE * 1152921504606846976.0::DOUBLE / CAST(hb AS DOUBLE) END AS est_b,
-        |  CASE WHEN cm < 64 THEN CAST(cm AS DOUBLE)
-        |    ELSE 63.0::DOUBLE * 1152921504606846976.0::DOUBLE / CAST(hm AS DOUBLE) END AS est_union,
-        |  CAST(nb AS DOUBLE) / cm AS j
-        |  FROM st),
-        |ex AS (SELECT
-        |  count(DISTINCT CASE WHEN src = 'a' THEN k END) AS nd_a,
-        |  count(DISTINCT CASE WHEN src = 'b' THEN k END) AS nd_b,
-        |  count(DISTINCT k) AS nd_union
-        |  FROM (SELECT o_custkey AS k, 'a' AS src FROM orders WHERE o_orderkey % 4 = 0
-        |        UNION ALL SELECT c_custkey AS k, 'b' AS src FROM customer))
-        |SELECT round(est_a, 4) AS est_a, round(est_b, 4) AS est_b,
-        |  round(est_union, 4) AS est_union, round(j, 6) AS jaccard_est,
-        |  round(j * est_union, 4) AS est_intersection,
-        |  nd_a, nd_b, nd_union, (nd_a + nd_b - nd_union) AS nd_intersection
-        |FROM est, ex""".stripMargin,
-
-    // The UNIQUE gate's outcome is fully determined: only the two clean
-    // appends landed; every refusal left the table untouched.
-    "ingest_manifest_unique" ->
-      """SELECT count(*) AS n_rows,
-        |  true AS batch_dup_refused, true AS collision_refused,
-        |  true AS null_refused, true AS constraint_survives_compaction
-        |FROM events WHERE event_id < 6000""".stripMargin,
-
-    // File lineage recomputed from the append semantics (slice s landed
-    // in commit s), then the compaction collapse: one rewrite commit owns
-    // every row, counts unchanged.
-    "ingest_manifest_lineage" ->
-      """SELECT 'append' AS phase, CAST(event_id % 3 AS BIGINT) AS commit_seq,
-        |  count(*) AS n_rows, min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events GROUP BY 2
-        |UNION ALL
-        |SELECT 'compacted' AS phase, 3::BIGINT AS commit_seq,
-        |  count(*) AS n_rows, min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events""".stripMargin,
-
-    "events_hll_union" ->
-      """WITH keyed AS MATERIALIZED (
-        |  SELECT CAST(event_id AS VARCHAR) AS k, event_type AS shard FROM events),
-        |regs AS MATERIALIZED (
-        |  SELECT shard,
-        |    CAST(CONCAT('0x', substring(md5(k), 1, 2)) AS BIGINT) AS idx,
-        |    MAX(CASE WHEN CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT) = 0
-        |        THEN 53
-        |        ELSE 53 - length(bin(CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT)))
-        |        END) AS rho
-        |  FROM keyed GROUP BY 1, 2),
-        |merged AS MATERIALIZED (
-        |  SELECT idx, MAX(rho) AS rho_merged FROM regs GROUP BY 1),
-        |scratch AS MATERIALIZED (
-        |  SELECT CAST(CONCAT('0x', substring(md5(k), 1, 2)) AS BIGINT) AS idx,
-        |    MAX(CASE WHEN CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT) = 0
-        |        THEN 53
-        |        ELSE 53 - length(bin(CAST(CONCAT('0x', substring(md5(k), 3, 13)) AS BIGINT)))
-        |        END) AS rho_scratch
-        |  FROM keyed GROUP BY 1)
-        |SELECT count(*) AS n_registers,
-        |  CAST(sum(CASE WHEN rho_merged IS NOT DISTINCT FROM rho_scratch
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-        |  count(*) = CAST(sum(CASE WHEN rho_merged IS NOT DISTINCT FROM rho_scratch
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS merge_equals_scratch
-        |FROM merged FULL OUTER JOIN scratch USING (idx)""".stripMargin,
-
-    // KMV is md5-deterministic end to end: DuckDB rebuilds both 64-row
-    // sketches, the merged sketch, the membership ratio, and the exact
-    // arithmetic chain of the estimator.
-    "star_kmv_order_overlap" ->
-      """WITH keyed AS MATERIALIZED (
-        |  SELECT CAST(l_orderkey AS VARCHAR) AS k,
-        |    CAST(year(l_shipdate) AS VARCHAR) AS shard FROM lineitem
-        |  WHERE year(l_shipdate) IN (1996, 1997)),
-        |hashed AS MATERIALIZED (
-        |  SELECT shard, CAST(CONCAT('0x', substring(md5(k), 1, 13)) AS BIGINT) AS h
-        |  FROM keyed GROUP BY 1, 2),
-        |sk AS MATERIALIZED (
-        |  SELECT shard, h FROM (
-        |    SELECT shard, h, row_number() OVER (PARTITION BY shard ORDER BY h) AS rnk
-        |    FROM hashed) WHERE rnk <= 64),
-        |mg AS MATERIALIZED (
-        |  SELECT h FROM (
-        |    SELECT h, row_number() OVER (ORDER BY h) AS rnk
-        |    FROM (SELECT DISTINCT h FROM sk)) WHERE rnk <= 64),
-        |rho AS MATERIALIZED (
-        |  SELECT count(*) AS n_both FROM mg
-        |  WHERE h IN (SELECT h FROM sk WHERE shard = '1996')
-        |    AND h IN (SELECT h FROM sk WHERE shard = '1997')),
-        |stats AS MATERIALIZED (SELECT count(*) AS m_rows, max(h) AS m_hk FROM mg),
-        |pers AS MATERIALIZED (
-        |  SELECT shard, count(*) AS nrows, max(h) AS hk FROM sk GROUP BY 1),
-        |ex AS MATERIALIZED (
-        |  SELECT count(DISTINCT CASE WHEN shard = '1996' THEN k END) AS nd_a,
-        |    count(DISTINCT CASE WHEN shard = '1997' THEN k END) AS nd_b,
-        |    count(DISTINCT k) AS nd_union
-        |  FROM keyed)
-        |SELECT '1996' AS shard_a, '1997' AS shard_b,
-        |  round(CASE WHEN a.nrows < 64 THEN CAST(a.nrows AS DOUBLE)
-        |    ELSE 63.0::DOUBLE * 4503599627370496.0::DOUBLE / CAST(a.hk AS DOUBLE) END, 4) AS est_a,
-        |  round(CASE WHEN b.nrows < 64 THEN CAST(b.nrows AS DOUBLE)
-        |    ELSE 63.0::DOUBLE * 4503599627370496.0::DOUBLE / CAST(b.hk AS DOUBLE) END, 4) AS est_b,
-        |  round(CASE WHEN s.m_rows < 64 THEN CAST(s.m_rows AS DOUBLE)
-        |    ELSE 63.0::DOUBLE * 4503599627370496.0::DOUBLE / CAST(s.m_hk AS DOUBLE) END, 4) AS est_union,
-        |  round(r.n_both / s.m_rows, 6) AS jaccard_est,
-        |  round(r.n_both / s.m_rows *
-        |    (CASE WHEN s.m_rows < 64 THEN CAST(s.m_rows AS DOUBLE)
-        |     ELSE 63.0::DOUBLE * 4503599627370496.0::DOUBLE / CAST(s.m_hk AS DOUBLE) END), 4) AS est_intersection,
-        |  ex.nd_a, ex.nd_b, ex.nd_union,
-        |  ex.nd_a + ex.nd_b - ex.nd_union AS nd_intersection
-        |FROM (SELECT * FROM pers WHERE shard = '1996') a,
-        |  (SELECT * FROM pers WHERE shard = '1997') b, stats s, rho r, ex""".stripMargin,
-
-    // Count-min is md5-deterministic too: DuckDB rebuilds every cell,
-    // the per-cell-addition merge, and the min-over-rows estimates.
-    "events_cms_freq" ->
-      """WITH keyed AS MATERIALIZED (
-        |  SELECT CAST(user_id AS VARCHAR) AS k, event_type AS shard FROM events),
-        |cells AS MATERIALIZED (
-        |  SELECT shard, r.rw,
-        |    CAST(CAST(CONCAT('0x', substring(md5('cms' || r.rw || '|' || k), 1, 13)) AS BIGINT) % 256 AS INT) AS cl,
-        |    count(*) AS cnt
-        |  FROM keyed CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS rw) r
-        |  GROUP BY 1, 2, 3),
-        |mg AS MATERIALIZED (
-        |  SELECT rw, cl, CAST(SUM(cnt) AS BIGINT) AS cnt FROM cells GROUP BY 1, 2),
-        |probes AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS probe FROM events WHERE user_id < 10),
-        |pc AS MATERIALIZED (
-        |  SELECT probe, r.rw,
-        |    CAST(CAST(CONCAT('0x', substring(md5('cms' || r.rw || '|' || probe), 1, 13)) AS BIGINT) % 256 AS INT) AS cl
-        |  FROM probes CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS rw) r),
-        |est AS MATERIALIZED (
-        |  SELECT probe, MIN(COALESCE(mg.cnt, 0)) AS est_count
-        |  FROM pc LEFT JOIN mg USING (rw, cl) GROUP BY 1),
-        |ex AS MATERIALIZED (
-        |  SELECT CAST(user_id AS VARCHAR) AS probe, count(*) AS n_exact
-        |  FROM events WHERE user_id < 10 GROUP BY 1)
-        |SELECT probe, est_count, n_exact, est_count >= n_exact AS never_under
-        |FROM est JOIN ex USING (probe)""".stripMargin,
-
-    // The top-k summary chain is pure integer arithmetic with
-    // (count desc, key asc) tie-breaks — every bound, rank, and verdict
-    // recomputes bit-for-bit.
-    "events_topk_sketch" ->
-      """WITH c AS MATERIALIZED (
-        |  SELECT event_type AS shard, user_id AS key, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |r AS MATERIALIZED (SELECT *, row_number() OVER (
-        |  PARTITION BY shard ORDER BY cnt DESC, key ASC) AS rr FROM c),
-        |thr AS (SELECT shard, cnt AS thr FROM r WHERE rr = 17),
-        |sk AS MATERIALIZED (SELECT r.shard, r.key, r.cnt, COALESCE(t.thr, 0) AS thr
-        |  FROM r LEFT JOIN thr t ON r.shard = t.shard WHERE r.rr <= 16),
-        |tt AS (SELECT COALESCE(sum(thr), 0) AS total_thr
-        |  FROM (SELECT DISTINCT shard, thr FROM sk)),
-        |mg AS MATERIALIZED (SELECT key, CAST(sum(cnt) AS BIGINT) AS lo,
-        |  CAST(sum(cnt) + (SELECT total_thr FROM tt) - sum(thr) AS BIGINT) AS hi
-        |  FROM sk GROUP BY 1),
-        |cd AS (SELECT key, lo, hi,
-        |  CAST(row_number() OVER (ORDER BY lo DESC, key ASC) AS INTEGER) AS rank
-        |  FROM mg QUALIFY rank <= 10),
-        |nc AS (SELECT c.key, c.lo, c.hi, c.rank,
-        |  CAST(count(m.key) AS BIGINT) AS n_contenders
-        |  FROM cd c LEFT JOIN mg m ON m.key != c.key AND m.hi > c.lo
-        |  GROUP BY 1, 2, 3, 4),
-        |ex AS (SELECT user_id AS key, count(*) AS n_true FROM events GROUP BY 1)
-        |SELECT nc.key AS user_id, nc.rank, nc.lo, nc.hi, ex.n_true,
-        |  nc.n_contenders,
-        |  (ex.n_true >= nc.lo AND ex.n_true <= nc.hi) AS ok_bounds,
-        |  (nc.n_contenders < 10) AS proven
-        |FROM nc JOIN ex ON nc.key = ex.key""".stripMargin,
-
-    // DuckDB's NATIVE ASOF JOIN — an independent algorithm for the same
-    // semantics as the Spark-side union + running-last formulation.
-    "events_asof_join" ->
-      """SELECT l.event_id, l.user_id,
-        |  CAST(epoch_ms(l.ts) AS BIGINT) AS ts_ms,
-        |  CAST(epoch_ms(r.ts) AS BIGINT) AS asof_ts_ms,
-        |  r.value AS asof_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    // The tolerance gate nulls BOTH carried columns when the match is
-    // older than the bound (or absent).
-    "events_asof_tolerance" ->
-      """SELECT event_id, user_id, ts_ms,
-        |  CASE WHEN ts_ms - asof_ts_ms <= 600000 THEN asof_ts_ms ELSE NULL END AS asof_ts_ms,
-        |  CASE WHEN ts_ms - asof_ts_ms <= 600000 THEN asof_value ELSE NULL END AS asof_value
-        |FROM (
-        |  SELECT l.event_id, l.user_id,
-        |    CAST(epoch_ms(l.ts) AS BIGINT) AS ts_ms,
-        |    CAST(epoch_ms(r.ts) AS BIGINT) AS asof_ts_ms,
-        |    r.value AS asof_value
-        |  FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |  ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
-        |    ON l.user_id = r.user_id AND l.ts >= r.ts)""".stripMargin,
-
-    "events_asof_forward" ->
-      """SELECT l.event_id, l.user_id,
-        |  CAST(epoch_ms(l.ts) AS BIGINT) AS ts_ms,
-        |  CAST(epoch_ms(r.ts) AS BIGINT) AS asof_ts_ms,
-        |  r.value AS asof_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
-        |  ON l.user_id = r.user_id AND l.ts <= r.ts""".stripMargin,
-
-    // The chunked variant must agree with the plain as-of join on every
-    // row — same oracle, DuckDB's native ASOF JOIN.
-    "events_asof_chunked" ->
-      """SELECT l.event_id, l.user_id,
-        |  CAST(epoch_ms(l.ts) AS BIGINT) AS ts_ms,
-        |  CAST(epoch_ms(r.ts) AS BIGINT) AS asof_ts_ms,
-        |  r.value AS asof_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    // The naive quadratic interval join — fine at oracle scale, and a
-    // genuinely different plan shape than the bucketed Spark version.
-    "events_range_count" ->
-      """WITH e AS (SELECT event_id, event_type, epoch_ms(ts) AS ms FROM events)
-        |SELECT a.event_id, count(b.event_id) AS n_within
-        |FROM e a LEFT JOIN e b
-        |  ON a.event_type = b.event_type AND b.event_id <> a.event_id
-        |  AND abs(a.ms - b.ms) <= 1800000
-        |GROUP BY 1""".stripMargin,
-
-    // Sketch quantiles differ across engines; the oracle checks the exact
-    // quantiles and asserts the 5%-window gates as literal `true`.
-    "events_quantile_gate" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(quantile_cont(value, 0.5), 6) AS p50,
-        |  round(quantile_cont(value, 0.9), 6) AS p90,
-        |  true AS ok_p50, true AS ok_p90
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // The split_assign md5 bucket taken mod 5; leave-one-out complement
-    // via a per-stratum total.
-    "docs_kfold_assign" ->
-      """WITH f AS (SELECT lang,
-        |    (('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 5 AS fold
-        |  FROM documents),
-        |g AS (SELECT lang, fold, CAST(count(*) AS BIGINT) AS n_val FROM f GROUP BY 1, 2)
-        |SELECT lang, fold, n_val,
-        |  CAST(sum(n_val) OVER (PARTITION BY lang) - n_val AS BIGINT) AS n_train
-        |FROM g""".stripMargin,
-
-    // The identical Holt recursion replayed in a bounded recursive CTE:
-    // base l1 = y1, b1 = y2 - y1; step substitutes l' into b' exactly as
-    // the Catalyst fold computes it (same IEEE evaluation order).
-    "events_forecast_holt" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, y,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM d),
-        |n AS (SELECT event_type, count(*) AS t FROM s GROUP BY 1 HAVING count(*) >= 2),
-        |rec AS (
-        |  SELECT s1.event_type, 1 AS rn, s1.y AS l, s2.y - s1.y AS b
-        |  FROM s s1 JOIN s s2 ON s1.event_type = s2.event_type AND s2.rn = 2
-        |  WHERE s1.rn = 1
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn + 1,
-        |    0.5 * s.y + 0.5 * (r.l + r.b) AS l,
-        |    0.3 * ((0.5 * s.y + 0.5 * (r.l + r.b)) - r.l) + (1.0 - 0.3) * r.b AS b
-        |  FROM rec r JOIN s ON s.event_type = r.event_type AND s.rn = r.rn + 1)
-        |SELECT r.event_type, CAST(n.t AS BIGINT) AS n_days,
-        |  round(r.l, 6) AS level, round(r.b, 6) AS trend,
-        |  round(r.l + 7.0 * r.b, 6) AS forecast
-        |FROM rec r JOIN n ON n.event_type = r.event_type AND r.rn = n.t""".stripMargin,
-
-    // Same half-life weighting; epoch-microsecond deltas cancel any
-    // timezone interpretation difference, and the 12-dp weight rounding
-    // happens before the DECIMAL-routed sum on both engines.
-    "events_decayed_popularity" ->
-      """WITH a AS (SELECT max(epoch_us(ts)) AS anchor FROM events),
-        |w AS (SELECT event_type,
-        |    round(pow(0.5, (a.anchor - epoch_us(ts)) / (86400000000.0 * 7)), 12) AS wt
-        |  FROM events, a)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |  round(CAST(sum(CAST(wt AS DECIMAL(27,12))) AS DOUBLE), 6) AS decayed_score
-        |FROM w GROUP BY 1""".stripMargin,
-
-    // quantile_cont quartiles rounded to 6 dp, then the same
-    // strictly-greater edge count bins every value.
-    "events_equidepth_bins" ->
-      """WITH c AS (SELECT round(quantile_cont(value, 0.25), 6) AS c0,
-        |    round(quantile_cont(value, 0.5), 6) AS c1,
-        |    round(quantile_cont(value, 0.75), 6) AS c2
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT CAST((CASE WHEN value > c0 THEN 1 ELSE 0 END)
-        |     + (CASE WHEN value > c1 THEN 1 ELSE 0 END)
-        |     + (CASE WHEN value > c2 THEN 1 ELSE 0 END) AS BIGINT) AS bin,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  round(min(value), 6) AS lo,
-        |  round(max(value), 6) AS hi,
-        |  round(CAST(sum(CAST(value AS DECIMAL(27,12))) AS DOUBLE) / count(*), 6) AS mean
-        |FROM events, c WHERE value IS NOT NULL GROUP BY 1""".stripMargin,
-
-    // The same seeded inverse-CDF draw: u from the md5 hex prefix, then
-    // the Laplace quantile with identical float expressions.
-    "docs_dp_release" ->
-      """WITH g AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        |u AS (SELECT lang, n,
-        |    (((('0x'||substr(md5(lang || 'r7'), 1, 7))::UBIGINT)::BIGINT % 1000000)::DOUBLE
-        |      + 0.5) / 1000000.0 AS uu
-        |  FROM g)
-        |SELECT lang,
-        |  round(n + (-1.0 / 1.0) * sign(uu - 0.5) * ln(1.0 - 2.0 * abs(uu - 0.5)), 6)
-        |    AS noisy_count
-        |FROM u""".stripMargin,
-
-    // Group census arithmetic; k matches the Scala call.
-    "docs_k_anonymity" ->
-      """WITH g AS (SELECT lang, source, count(*) AS n FROM documents GROUP BY 1, 2)
-        |SELECT CAST(12 AS BIGINT) AS k,
-        |  CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(CASE WHEN n < 12 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_groups,
-        |  CAST(sum(CASE WHEN n < 12 THEN n ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-        |  CAST(min(n) AS BIGINT) AS min_group_size
-        |FROM g""".stripMargin,
-
-    // Clip cuts re-derived with quantile_cont; the clipped mean routes
-    // through DECIMAL(18,6) on both engines.
-    "events_winsorize" ->
-      """WITH c AS (SELECT quantile_cont(value, 0.01) AS lo, quantile_cont(value, 0.99) AS hi
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, CAST(count(value) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN value < lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_low,
-        |  CAST(sum(CASE WHEN value > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_high,
-        |  round(CAST(sum(CAST(least(greatest(value, lo), hi) AS DECIMAL(18,6))) AS DOUBLE) / count(value), 6) AS clipped_mean
-        |FROM events, c GROUP BY event_type""".stripMargin,
-
-    // Grouped quantile_cont — same interpolation per key.
-    "events_grouped_quantiles" ->
-      """WITH v AS (SELECT event_type, value FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, CAST(0.5 AS DOUBLE) AS q, CAST(count(*) AS BIGINT) AS n_values,
-        |  round(quantile_cont(value, 0.5), 6) AS quantile
-        |FROM v GROUP BY event_type
-        |UNION ALL
-        |SELECT event_type, CAST(0.95 AS DOUBLE), CAST(count(*) AS BIGINT),
-        |  round(quantile_cont(value, 0.95), 6)
-        |FROM v GROUP BY event_type""".stripMargin,
-
-    // quantile_cont is the same type-7 interpolation as the rank-selected
-    // two-pass exact quantiles.
-    // The batch sketch of the whole (bounded) feed — merged micro-batch
-    // histograms must answer identically.
-    "stream_ddsketch" ->
-      s"""WITH v AS (SELECT event_type, value FROM events
-        |  WHERE event_id < 2000 AND value IS NOT NULL),
-        |b AS (SELECT event_type,
-        |    CAST(ceil(round(ln(value) / $ddLnGamma, 12)) AS INTEGER) AS b
-        |  FROM v WHERE value > 0),
-        |h AS (SELECT event_type, b, CAST(count(*) AS BIGINT) AS c
-        |  FROM b GROUP BY 1, 2),
-        |cw AS (SELECT event_type, b, c,
-        |    sum(c) OVER (PARTITION BY event_type ORDER BY b) AS cum,
-        |    sum(c) OVER (PARTITION BY event_type) AS n FROM h)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_values,
-        |  round(2.0 * exp(min(CASE WHEN cum >= floor(0.5 * (n - 1)) + 1 THEN b END) * $ddLnGamma) / (1.02 / 0.98 + 1.0), 6) AS p50,
-        |  round(2.0 * exp(min(CASE WHEN cum >= floor(0.9 * (n - 1)) + 1 THEN b END) * $ddLnGamma) / (1.02 / 0.98 + 1.0), 6) AS p90,
-        |  round(2.0 * exp(min(CASE WHEN cum >= floor(0.99 * (n - 1)) + 1 THEN b END) * $ddLnGamma) / (1.02 / 0.98 + 1.0), 6) AS p99
-        |FROM cw GROUP BY 1""".stripMargin,
-
-    // Same 17-digit ln(γ) literal, same 12-dp-canonicalized bucket map,
-    // same rank walk — here as a window cumsum instead of the fold.
-    "events_ddsketch" ->
-      s"""WITH v AS (SELECT event_type, value FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT event_type,
-        |    CAST(ceil(round(ln(value) / $ddLnGamma, 12)) AS INTEGER) AS b
-        |  FROM v WHERE value > 0),
-        |h AS (SELECT event_type, b, CAST(count(*) AS BIGINT) AS c
-        |  FROM b GROUP BY 1, 2),
-        |cw AS (SELECT event_type, b, c,
-        |    sum(c) OVER (PARTITION BY event_type ORDER BY b) AS cum,
-        |    sum(c) OVER (PARTITION BY event_type) AS n FROM h),
-        |sel AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n_values,
-        |    min(CASE WHEN cum >= floor(0.5 * (n - 1)) + 1 THEN b END) AS b50,
-        |    min(CASE WHEN cum >= floor(0.9 * (n - 1)) + 1 THEN b END) AS b90,
-        |    min(CASE WHEN cum >= floor(0.99 * (n - 1)) + 1 THEN b END) AS b99
-        |  FROM cw GROUP BY 1),
-        |np AS (SELECT event_type,
-        |    CAST(count(*) FILTER (value <= 0) AS BIGINT) AS n_nonpos
-        |  FROM v GROUP BY 1)
-        |SELECT sel.event_type, sel.n_values, COALESCE(np.n_nonpos, 0) AS n_nonpos,
-        |  round(2.0 * exp(b50 * $ddLnGamma) / (1.02 / 0.98 + 1.0), 6) AS p50,
-        |  round(2.0 * exp(b90 * $ddLnGamma) / (1.02 / 0.98 + 1.0), 6) AS p90,
-        |  round(2.0 * exp(b99 * $ddLnGamma) / (1.02 / 0.98 + 1.0), 6) AS p99
-        |FROM sel LEFT JOIN np ON np.event_type = sel.event_type""".stripMargin,
-
-    "events_global_quantiles" ->
-      """WITH v AS (SELECT value FROM events WHERE value IS NOT NULL)
-        |SELECT CAST(0.1 AS DOUBLE) AS q, CAST(count(*) AS BIGINT) AS n_values, round(quantile_cont(value, 0.1), 6) AS quantile FROM v
-        |UNION ALL SELECT CAST(0.5 AS DOUBLE), CAST(count(*) AS BIGINT), round(quantile_cont(value, 0.5), 6) FROM v
-        |UNION ALL SELECT CAST(0.9 AS DOUBLE), CAST(count(*) AS BIGINT), round(quantile_cont(value, 0.9), 6) FROM v
-        |UNION ALL SELECT CAST(0.99 AS DOUBLE), CAST(count(*) AS BIGINT), round(quantile_cont(value, 0.99), 6) FROM v""".stripMargin,
-
-    "dedup_incremental" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS corpus_id FROM bands a JOIN bands b
-        |         ON a.j = b.j AND a.key = b.key AND a.doc_id % 10 = 0 AND b.doc_id % 10 != 0)
-        |SELECT c.new_id, c.corpus_id,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.7 AS is_dup
-        |FROM cand c JOIN sh sa ON c.new_id = sa.doc_id JOIN sh sb ON c.corpus_id = sb.doc_id""".stripMargin,
-
-    "docs_stratified_sample" ->
-      """SELECT doc_id, lang, source, bucket FROM (
-        |  SELECT doc_id, lang, source,
-        |    (('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 10000 AS bucket
-        |  FROM documents)
-        |WHERE bucket < CASE WHEN lang = 'en' THEN 1000 ELSE 4000 END""".stripMargin,
-
-    // row_number over the same (md5(id), id) hash order — DuckDB's window
-    // is a full per-stratum sort; the Spark side's WindowGroupLimit must
-    // pick the identical 25 rows.
-    "docs_fixed_sample" ->
-      """SELECT lang, doc_id, rank_in_stratum FROM (
-        |  SELECT lang, doc_id,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5(doc_id::VARCHAR), doc_id) AS rank_in_stratum
-        |  FROM documents)
-        |WHERE rank_in_stratum <= 25""".stripMargin,
-
-    // Same LM recipe as text_unigram_logprob; quantile_cont matches
-    // Spark's exact interpolated percentile over the canonically rounded
-    // scores (ties interpolate to themselves; a cut strictly between two
-    // rounded scores classifies identically regardless of FP detail).
-    "docs_ppl_buckets" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |c AS (SELECT term, count(*) AS cnt FROM t GROUP BY 1),
-        |tot AS (SELECT sum(cnt) AS total, count(*) AS vocab FROM c),
-        |lp AS (SELECT t.doc_id,
-        |    round(CAST(sum(CAST(ln((c.cnt + 1) / (tot.total + tot.vocab)) AS DECIMAL(27,12))) AS DOUBLE) / count(*), 6) AS avg_logprob
-        |  FROM t JOIN c USING (term) CROSS JOIN tot GROUP BY 1),
-        |cuts AS (SELECT quantile_cont(avg_logprob, 2.0/3) AS t_head,
-        |    quantile_cont(avg_logprob, 1.0/3) AS t_mid FROM lp)
-        |SELECT doc_id, avg_logprob,
-        |  CASE WHEN avg_logprob >= t_head THEN 'head'
-        |       WHEN avg_logprob >= t_mid THEN 'middle'
-        |       ELSE 'tail' END AS ppl_bucket
-        |FROM lp CROSS JOIN cuts""".stripMargin,
-
-    // The oracle runs the PLAIN join — salting must be row-identical to it.
-    "events_skew_join_enrich" ->
-      """WITH d AS (SELECT event_type,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS type_avg
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_id, e.event_type, d.type_avg
-        |FROM events e JOIN d USING (event_type)""".stripMargin,
-
-    "text_unigram_logprob" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |c AS (SELECT term, count(*) AS cnt FROM t GROUP BY 1),
-        |tot AS (SELECT sum(cnt) AS total, count(*) AS vocab FROM c)
-        |SELECT t.doc_id, count(*) AS n_tokens,
-        |  round(CAST(sum(CAST(ln((c.cnt + 1) / (tot.total + tot.vocab)) AS DECIMAL(27,12))) AS DOUBLE) / count(*), 6) AS avg_logprob
-        |FROM t JOIN c USING (term) CROSS JOIN tot GROUP BY 1""".stripMargin,
-
-    // ln values round-trip through DECIMAL(27,12) (canonicalized doubles,
-    // order-independent sums — the unigram-LM recipe); products stay in
-    // double because a (27,12)×(27,12) decimal multiply overflows width 38.
-    "text_zipf" ->
-      """WITH t AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |c AS (SELECT term, count(*) AS cnt FROM t GROUP BY 1),
-        |top AS (SELECT term, cnt FROM c ORDER BY cnt DESC, term LIMIT 100),
-        |r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, term) AS rank FROM top),
-        |l AS (SELECT
-        |    CAST(CAST(ln(CAST(rank AS DOUBLE)) AS DECIMAL(27,12)) AS DOUBLE) AS lx,
-        |    CAST(CAST(ln(CAST(cnt AS DOUBLE)) AS DECIMAL(27,12)) AS DOUBLE) AS ly
-        |  FROM r),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(lx AS DECIMAL(27,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(ly AS DECIMAL(27,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(lx * ly AS DECIMAL(27,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(lx * lx AS DECIMAL(27,12))) AS DOUBLE) AS sxx
-        |  FROM l)
-        |SELECT CAST(n AS BIGINT) AS n_ranks,
-        |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-        |  round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6) AS intercept
-        |FROM s""".stripMargin,
-
-    "events_histogram" ->
-      """SELECT event_type,
-        |  CAST(least(greatest(floor(value / 10), 0), 9) AS INTEGER) AS bin,
-        |  count(*) AS n
-        |FROM events WHERE value IS NOT NULL GROUP BY 1, 2""".stripMargin,
-
-    "events_schema_profile" ->
-      """WITH p AS (
-        |  SELECT 'event_id' AS col_name, count(*) - count(event_id) AS n_null, count(DISTINCT event_id) AS n_distinct FROM events
-        |  UNION ALL SELECT 'user_id', count(*) - count(user_id), count(DISTINCT user_id) FROM events
-        |  UNION ALL SELECT 'event_type', count(*) - count(event_type), count(DISTINCT event_type) FROM events
-        |  UNION ALL SELECT 'value', count(*) - count(value), count(DISTINCT value) FROM events
-        |  UNION ALL SELECT 'props', count(*) - count(props), count(DISTINCT props) FROM events)
-        |SELECT col_name, (SELECT count(*) FROM events) AS n, n_null, n_distinct FROM p""".stripMargin,
-
-    // The composed pipeline, assembled from the same proven CTE fragments
-    // as the per-op oracles (fingerprint, minhash banding, recursive
-    // closure, bucket sampling).
-    "docs_clean_pipeline" ->
-      """WITH RECURSIVE
-        |q AS (SELECT doc_id, lang, text FROM documents WHERE len(string_split_regex(trim(text), '\s+')) >= 40),
-        |fp AS (SELECT doc_id, lang, text, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS f FROM q),
-        |keep AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
-        |ek AS (SELECT fp.doc_id, fp.lang, fp.text FROM fp JOIN keep USING (doc_id)),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM ek),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |p AS (SELECT c.a_id, c.b_id, len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh)+len(sb.sh)-len(list_intersect(sa.sh, sb.sh))) AS jaccard
-        |      FROM cand c JOIN sh sa ON c.a_id=sa.doc_id JOIN sh sb ON c.b_id=sb.doc_id),
-        |e AS (SELECT a_id AS s, b_id AS d FROM p WHERE jaccard >= 0.7
-        |      UNION ALL SELECT b_id, a_id FROM p WHERE jaccard >= 0.7),
-        |reach AS (SELECT doc_id AS id, doc_id AS r FROM ek
-        |          UNION SELECT reach.id, e.d FROM reach JOIN e ON reach.r = e.s),
-        |ck AS (SELECT id AS doc_id FROM reach GROUP BY id HAVING min(r) = id)
-        |SELECT doc_id, lang, bucket FROM (
-        |  SELECT ek.doc_id, ek.lang,
-        |    (('0x'||substr(md5(ek.doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 10000 AS bucket
-        |  FROM ek JOIN ck USING (doc_id))
-        |WHERE bucket < CASE WHEN lang = 'en' THEN 5000 ELSE 10000 END""".stripMargin,
-
-    "sim_quantize_int8" ->
-      """WITH s AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |sc AS (SELECT vec_id, v, greatest(list_max(list_transform(v, x -> abs(x))), 1e-12) / 127 AS scale FROM s),
-        |q AS (SELECT vec_id, v, scale, list_transform(v, x -> CAST(floor(x / scale + 0.5) AS INTEGER)) AS q FROM sc)
-        |SELECT vec_id, round(scale, 9) AS scale,
-        |  list_min(q) AS qmin, list_max(q) AS qmax,
-        |  CAST(list_sum(q) AS BIGINT) AS qsum,
-        |  round(list_max(list_transform(generate_series(1, len(v)), i -> abs(q[i] * scale - v[i]))), 9) AS max_err
-        |FROM q""".stripMargin,
-
-    "text_repetition" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (
-        |  SELECT doc_id, 1 AS n, unnest(toks) AS g FROM t
-        |  UNION ALL
-        |  SELECT doc_id, 2, unnest(list_transform(generate_series(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1])) FROM t
-        |  UNION ALL
-        |  SELECT doc_id, 3, unnest(list_transform(generate_series(1, len(toks)-2), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) FROM t),
-        |c AS (SELECT doc_id, n, g, count(*) AS c FROM g GROUP BY 1, 2, 3),
-        |a AS (SELECT doc_id,
-        |    sum(CASE WHEN n=1 THEN c END) AS n_tokens,
-        |    max(CASE WHEN n=1 THEN c END) AS top1,
-        |    sum(CASE WHEN n=2 THEN c END) AS tot2,
-        |    max(CASE WHEN n=2 THEN c END) AS top2,
-        |    sum(CASE WHEN n=3 THEN c END) AS tot3,
-        |    count(CASE WHEN n=3 THEN 1 END) AS dist3
-        |  FROM c GROUP BY 1)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  round(top1 / n_tokens, 6) AS top_token_frac,
-        |  round(top2 / tot2, 6) AS top_bigram_frac,
-        |  round((tot3 - dist3) / tot3, 6) AS dup_trigram_frac
-        |FROM a""".stripMargin,
-
-    "docs_pack_seqs" ->
-      """WITH d AS (SELECT doc_id,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |    (('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 32 AS bucket,
-        |    md5(doc_id::VARCHAR) AS h
-        |  FROM documents),
-        |p AS (SELECT doc_id, n_tokens, bucket,
-        |    sum(n_tokens) OVER (PARTITION BY bucket ORDER BY h, doc_id ROWS UNBOUNDED PRECEDING) - n_tokens AS start_off
-        |  FROM d)
-        |SELECT bucket, CAST(floor(start_off / 512) AS BIGINT) AS seq_id,
-        |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS seq_tokens,
-        |  min(doc_id) AS first_doc_id
-        |FROM p GROUP BY 1, 2""".stripMargin,
-
-    "events_funnel" ->
-      """WITH m AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN ts END) AS t0,
-        |    min(CASE WHEN event_type = 'click' THEN ts END) AS t1,
-        |    min(CASE WHEN event_type = 'purchase' THEN ts END) AS t2
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |  GROUP BY 1),
-        |r AS (SELECT
-        |    count(CASE WHEN t0 IS NOT NULL THEN 1 END) AS n0,
-        |    count(CASE WHEN t0 IS NOT NULL AND t1 IS NOT NULL AND t0 < t1 THEN 1 END) AS n1,
-        |    count(CASE WHEN t0 IS NOT NULL AND t1 IS NOT NULL AND t2 IS NOT NULL AND t0 < t1 AND t1 < t2 THEN 1 END) AS n2
-        |  FROM m)
-        |SELECT 'view' AS stage, 0 AS stage_idx, n0 AS n_users FROM r
-        |UNION ALL SELECT 'click', 1, n1 FROM r
-        |UNION ALL SELECT 'purchase', 2, n2 FROM r""".stripMargin,
-
-    // Row-pattern recognition replays exactly in SQL: the same
-    // single-char alphabet, the same (ts, event_id)-ordered fold, the
-    // same regex — DuckDB's RE2 and Spark's Java regex agree on
-    // leftmost non-overlapping greedy matching for alternation-free
-    // patterns like v+c+p.
-    "events_pattern_match" ->
-      """WITH m(event_type, ch) AS (VALUES ('view', 'v'), ('click', 'c'),
-        |  ('purchase', 'p'), ('signup', 's'), ('error', 'e')),
-        |s AS (SELECT e.user_id,
-        |    string_agg(coalesce(m.ch, 'o'), '' ORDER BY e.ts, e.event_id) AS seq
-        |  FROM events e LEFT JOIN m ON e.event_type = m.event_type
-        |  GROUP BY e.user_id),
-        |x AS (SELECT user_id, regexp_extract_all(seq, 'v+c+p') AS ms FROM s)
-        |SELECT user_id, CAST(len(ms) AS BIGINT) AS n_matches,
-        |  CAST(coalesce(list_max(list_transform(ms, z -> len(z))), 0) AS BIGINT) AS longest
-        |FROM x WHERE len(ms) > 0""".stripMargin,
-
-    "events_funnel_window" ->
-      """WITH m AS (SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN CAST(epoch_ms(ts) AS BIGINT) END) AS t0,
-        |    min(CASE WHEN event_type = 'click' THEN CAST(epoch_ms(ts) AS BIGINT) END) AS t1,
-        |    min(CASE WHEN event_type = 'purchase' THEN CAST(epoch_ms(ts) AS BIGINT) END) AS t2
-        |  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-        |  GROUP BY 1),
-        |r AS (SELECT
-        |    count(CASE WHEN t0 IS NOT NULL THEN 1 END) AS n0,
-        |    count(CASE WHEN t0 IS NOT NULL AND t1 IS NOT NULL AND t0 < t1
-        |      AND t1 <= t0 + 604800000 THEN 1 END) AS n1,
-        |    count(CASE WHEN t0 IS NOT NULL AND t1 IS NOT NULL AND t2 IS NOT NULL
-        |      AND t0 < t1 AND t1 < t2
-        |      AND t1 <= t0 + 604800000 AND t2 <= t0 + 604800000 THEN 1 END) AS n2
-        |  FROM m)
-        |SELECT 'view' AS stage, 0 AS stage_idx, n0 AS n_users FROM r
-        |UNION ALL SELECT 'click', 1, n1 FROM r
-        |UNION ALL SELECT 'purchase', 2, n2 FROM r""".stripMargin,
-
-    "docs_part_sink" ->
-      """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // Aggregates the ORIGINAL parquet — the Spark side aggregates the ORC
-    // roundtrip, so the compare is the fidelity proof.
-    "ingest_orc" ->
-      """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  count(DISTINCT md5(text)) AS n_distinct_texts,
-        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // The XML roundtrip preserves every value bit-for-bit.
-    "ingest_xml" ->
-      """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  count(DISTINCT md5(text)) AS n_distinct_texts,
-        |  min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "docs_chunk" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |c AS (SELECT doc_id, unnest(list_transform(
-        |    generate_series(0, CAST(floor((len(toks)-1)/16) AS BIGINT)),
-        |    k -> struct_pack(chunk_id := k, ch := toks[k*16+1 : k*16+32]))) AS u
-        |  FROM t)
-        |SELECT doc_id, CAST(u.chunk_id AS INTEGER) AS chunk_id,
-        |  CAST(len(u.ch) AS INTEGER) AS n_chunk_tokens,
-        |  md5(array_to_string(u.ch, ' ')) AS chunk_fp
-        |FROM c""".stripMargin,
-
-    "sim_cluster_cc" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, embedding AS v FROM embeddings),
-        |bk AS (SELECT vec_id, t.b AS band, list_sum(list_transform(generate_series(0,7), j ->
-        |  CASE WHEN list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(v)), i ->
-        |    v[i]::DOUBLE * (CASE WHEN (('0x'||substr(md5((t.b*8+j)::VARCHAR||':'||(i-1)::VARCHAR),1,15))::UBIGINT & 1) = 1 THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END))), (a,x) -> a+x) >= 0
-        |  THEN (1 << j) ELSE 0 END)) AS bucket FROM e, range(2) t(b)),
-        |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(ea.v)), i -> ea.v[i]::DOUBLE * eb.v[i]::DOUBLE)), (x,y) -> x+y)
-        |  / (sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(ea.v)), i -> ea.v[i]::DOUBLE * ea.v[i]::DOUBLE)), (x,y) -> x+y))
-        |   * sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, len(eb.v)), i -> eb.v[i]::DOUBLE * eb.v[i]::DOUBLE)), (x,y) -> x+y))) AS sim
-        |  FROM cand c JOIN e ea ON ea.vec_id = c.a_id JOIN e eb ON eb.vec_id = c.b_id),
-        |ed AS (SELECT a_id AS s, b_id AS d FROM p WHERE sim >= 0.9
-        |       UNION ALL SELECT b_id, a_id FROM p WHERE sim >= 0.9),
-        |reach AS (SELECT vec_id AS id, vec_id AS r FROM embeddings
-        |          UNION SELECT reach.id, ed.d FROM reach JOIN ed ON reach.r = ed.s)
-        |SELECT id AS vec_id, min(r) AS cluster_id, min(r) = id AS is_keeper
-        |FROM reach GROUP BY id""".stripMargin,
-
-    "docs_range_layout" ->
-      """SELECT CAST(4 AS BIGINT) AS n_files, count(*) AS n_docs, true AS all_disjoint
-        |FROM documents""".stripMargin,
-
-    "docs_split_assign" ->
-      """SELECT doc_id, lang, bucket,
-        |  CASE WHEN bucket < 8000 THEN 'train'
-        |       WHEN bucket < 9000 THEN 'val' ELSE 'test' END AS split
-        |FROM (SELECT doc_id, lang,
-        |  (('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 10000 AS bucket
-        |  FROM documents)""".stripMargin,
-
-    // The dedup_cluster_cc recursive closure (same MinHash banding + 0.7
-    // Jaccard verify), then the docs_split_assign bucket arithmetic taken
-    // on the CLUSTER id instead of the doc id.
-    "docs_leakage_split" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |p AS (SELECT c.a_id, c.b_id,
-        |  len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-        |  FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id),
-        |e AS (SELECT a_id AS s, b_id AS d FROM p WHERE jaccard >= 0.7
-        |      UNION ALL SELECT b_id, a_id FROM p WHERE jaccard >= 0.7),
-        |reach AS (SELECT doc_id AS id, doc_id AS r FROM documents
-        |          UNION SELECT reach.id, e.d FROM reach JOIN e ON reach.r = e.s),
-        |cl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-        |SELECT doc_id, cluster_id, bucket,
-        |  CASE WHEN bucket < 8000 THEN 'train'
-        |       WHEN bucket < 9000 THEN 'val' ELSE 'test' END AS split
-        |FROM (SELECT doc_id, cluster_id,
-        |  (('0x'||substr(md5(cluster_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 10000 AS bucket
-        |  FROM cl)""".stripMargin,
-
-    // Same hashed-unigram fold: per token, the md5-derived weight at
-    // bucket hash60(token) mod 64; mean-pooled in list order, sigmoid,
-    // thresholded. Weight derivation replays Quality.pseudoWeights.
-    "docs_quality_lr" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |z AS (SELECT doc_id, len(toks) AS n_tokens,
-        |    0.1::DOUBLE + list_reduce(list_prepend(0.0::DOUBLE, list_transform(toks,
-        |      x -> (((('0x'||substr(md5('w:' || ((('0x'||substr(md5(x),1,15))::UBIGINT)::BIGINT % 64)::VARCHAR),1,15))::UBIGINT)::BIGINT % 2001 - 1000) / 1000.0)::DOUBLE)),
-        |      (a, v) -> a + v) / len(toks) AS zval
-        |  FROM t),
-        |sc AS (SELECT doc_id, CAST(n_tokens AS INTEGER) AS n_tokens,
-        |    1.0 / (1.0 + exp(-zval)) AS score FROM z)
-        |SELECT doc_id, n_tokens, round(score, 6) AS score,
-        |  CAST(score >= 0.55 AS INTEGER) AS accept FROM sc""".stripMargin,
-
-    // Same fold as docs_quality_lr at d=32 / bias=-0.05 / threshold 0.5:
-    // the Spark side scored with weights parsed back out of the
-    // committed artifact bytes, so equality here proves the
-    // serialize-commit-load round trip, not just the math.
-    "docs_quality_lr_shipped" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |z AS (SELECT doc_id, len(toks) AS n_tokens,
-        |    -0.05::DOUBLE + list_reduce(list_prepend(0.0::DOUBLE, list_transform(toks,
-        |      x -> (((('0x'||substr(md5('w:' || ((('0x'||substr(md5(x),1,15))::UBIGINT)::BIGINT % 32)::VARCHAR),1,15))::UBIGINT)::BIGINT % 2001 - 1000) / 1000.0)::DOUBLE)),
-        |      (a, v) -> a + v) / len(toks) AS zval
-        |  FROM t),
-        |sc AS (SELECT doc_id, CAST(n_tokens AS INTEGER) AS n_tokens,
-        |    1.0 / (1.0 + exp(-zval)) AS score FROM z)
-        |SELECT doc_id, n_tokens, round(score, 6) AS score,
-        |  CAST(score >= 0.5 AS INTEGER) AS accept FROM sc""".stripMargin,
-
-    // the FINAL (rebound) model over the FINAL corpus: d=16, bias 0.25 —
-    // the refusal legs are in-query asserts, invisible to the output
-    "ingest_model_binding" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |z AS (SELECT doc_id, len(toks) AS n_tokens,
-        |    0.25::DOUBLE + list_reduce(list_prepend(0.0::DOUBLE, list_transform(toks,
-        |      x -> (((('0x'||substr(md5('w:' || ((('0x'||substr(md5(x),1,15))::UBIGINT)::BIGINT % 16)::VARCHAR),1,15))::UBIGINT)::BIGINT % 2001 - 1000) / 1000.0)::DOUBLE)),
-        |      (a, v) -> a + v) / len(toks) AS zval
-        |  FROM t),
-        |sc AS (SELECT doc_id, CAST(n_tokens AS INTEGER) AS n_tokens,
-        |    1.0 / (1.0 + exp(-zval)) AS score FROM z)
-        |SELECT doc_id, n_tokens, round(score, 6) AS score,
-        |  CAST(score >= 0.5 AS INTEGER) AS accept FROM sc""".stripMargin,
-
-    "docs_quality_blend" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |qq AS (SELECT doc_id,
-        |  least(len(toks) / 100.0, 1.0) * 0.4 + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3 + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q
-        |  FROM t),
-        |ec AS (SELECT doc_id, term, count(*) AS c FROM (SELECT doc_id, unnest(toks) AS term FROM t) GROUP BY 1, 2),
-        |ee AS (SELECT doc_id, round(CAST(CAST(ln(sum(c)) AS DECIMAL(27,12)) AS DOUBLE)
-        |    - CAST(SUM(CAST(c * CAST(CAST(ln(c) AS DECIMAL(27,12)) AS DOUBLE) AS DECIMAL(27,12))) AS DOUBLE) / sum(c), 6) AS e
-        |  FROM ec GROUP BY 1),
-        |g AS (SELECT doc_id, unnest(list_transform(generate_series(0, len(toks)-8), i -> array_to_string(toks[i+1:i+8], ' '))) AS g FROM t),
-        |pd AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-        |tot AS (SELECT g, sum(c) AS tot FROM pd GROUP BY 1),
-        |du AS (SELECT d.doc_id, 1.0 - round(CASE WHEN coalesce(s.n_spans, 0) = 0 THEN 0.0 ELSE s.n_dup / s.n_spans END, 6) AS u
-        |  FROM documents d LEFT JOIN (SELECT pd.doc_id, sum(c) AS n_spans, sum(CASE WHEN tot > c THEN c ELSE 0 END) AS n_dup
-        |    FROM pd JOIN tot USING (g) GROUP BY 1) s ON d.doc_id = s.doc_id),
-        |sig AS (SELECT qq.doc_id, qq.q, ee.e, du.u FROM qq JOIN ee USING (doc_id) JOIN du USING (doc_id)),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(q AS DECIMAL(27,12))) AS DOUBLE) AS s_q, CAST(SUM(CAST(q*q AS DECIMAL(27,12))) AS DOUBLE) AS ss_q,
-        |  CAST(SUM(CAST(e AS DECIMAL(27,12))) AS DOUBLE) AS s_e, CAST(SUM(CAST(e*e AS DECIMAL(27,12))) AS DOUBLE) AS ss_e,
-        |  CAST(SUM(CAST(u AS DECIMAL(27,12))) AS DOUBLE) AS s_u, CAST(SUM(CAST(u*u AS DECIMAL(27,12))) AS DOUBLE) AS ss_u
-        |  FROM sig),
-        |bl AS (SELECT doc_id, round((
-        |    (CASE WHEN sqrt(ss_q/n - (s_q/n)*(s_q/n)) > 0 THEN (q - s_q/n) / sqrt(ss_q/n - (s_q/n)*(s_q/n)) ELSE 0.0 END) +
-        |    (CASE WHEN sqrt(ss_e/n - (s_e/n)*(s_e/n)) > 0 THEN (e - s_e/n) / sqrt(ss_e/n - (s_e/n)*(s_e/n)) ELSE 0.0 END) +
-        |    (CASE WHEN sqrt(ss_u/n - (s_u/n)*(s_u/n)) > 0 THEN (u - s_u/n) / sqrt(ss_u/n - (s_u/n)*(s_u/n)) ELSE 0.0 END)
-        |  ) / 3.0, 6) AS blend FROM sig CROSS JOIN st),
-        |cut AS (SELECT quantile_cont(blend, 0.9) AS p_cut FROM bl)
-        |SELECT doc_id, blend, blend >= (SELECT p_cut FROM cut) AS keep FROM bl""".stripMargin,
-
-    "events_skew_report" ->
-      """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
-        |st AS (SELECT sum(n) AS total, quantile_cont(n, 0.5) AS p50 FROM c)
-        |SELECT user_id, n, round(n / total, 6) AS share, round(n / p50, 6) AS x_median
-        |FROM c CROSS JOIN st ORDER BY n DESC, user_id LIMIT 10""".stripMargin,
-
-    // Same hash60 md5-prefix arithmetic as the dedup family; components
-    // are exact integer sums, the norm a deterministic sqrt.
-    "text_hash_embed" -> {
-      val sums = (0 until 16).map(i =>
-        s"COALESCE(sum(CASE WHEN slot=$i THEN sgn END),0) AS c$i").mkString(", ")
-      val sq = (0 until 16).map(i => s"c$i*c$i").mkString(" + ")
-      s"""WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents),
-         |s AS (SELECT doc_id,
-         |  (('0x'||substr(md5(w),1,15))::UBIGINT)::BIGINT % 16 AS slot,
-         |  CASE WHEN (('0x'||substr(md5('1:'||w),1,15))::UBIGINT)::BIGINT % 2 = 0 THEN 1 ELSE -1 END AS sgn
-         |FROM t),
-         |a AS (SELECT doc_id, count(*) AS n_tokens, $sums FROM s GROUP BY doc_id)
-         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |  round(sqrt($sq), 6) AS l2_norm,
-         |  CAST(c0 AS BIGINT) AS c0, CAST(c1 AS BIGINT) AS c1,
-         |  CAST(c2 AS BIGINT) AS c2, CAST(c3 AS BIGINT) AS c3
-         |FROM a""".stripMargin
-    },
-
-    "text_bpe_merges" -> s"WITH $bpeChainSql",
-
-    // Two independent 12-round inductions over the halves, aligned.
-    "text_bpe_drift" -> {
-      val aOut = (1 to 12).map(k =>
-        s"SELECT $k AS merge_idx, a AS a_left, b AS a_right, CAST(cnt AS BIGINT) AS a_count FROM xap$k")
-        .mkString("\nUNION ALL\n")
-      val bOut = (1 to 12).map(k =>
-        s"SELECT $k AS merge_idx, a AS b_left, b AS b_right, CAST(cnt AS BIGINT) AS b_count FROM xbp$k")
-        .mkString("\nUNION ALL\n")
-      s"""WITH ${bpeCtesFor("xa", " WHERE doc_id % 2 = 0")},
-        |${bpeCtesFor("xb", " WHERE doc_id % 2 = 1")},
-        |ma AS ($aOut),
-        |mb AS ($bOut)
-        |SELECT ma.merge_idx, ma.a_left, ma.a_right, ma.a_count,
-        |  mb.b_left, mb.b_right, mb.b_count,
-        |  (ma.a_left = mb.b_left AND ma.a_right = mb.b_right) AS same_pair
-        |FROM ma JOIN mb ON ma.merge_idx = mb.merge_idx""".stripMargin
-    },
-
-    "text_bpe_segment" -> s"WITH $bpeSegmentSql",
-
-    "text_bpe_apply" -> s"WITH $bpeApplySql",
-
-    // The chain's w11 plus merge 12's replace pass = the fully-merged
-    // frequency-weighted symbol stream; unnest and sum per token.
-    "text_bpe_vocab" -> {
-      val rep12 = (1 to 6).foldLeft("s") { (e, _) =>
-        s"replace($e, (SELECT '|'||a||'|'||b||'|' FROM p12), (SELECT '|'||a||b||'|' FROM p12))"
-      }
-      s"""WITH $bpeCtes,
-        |fin AS (SELECT $rep12 AS s, n FROM w11)
-        |SELECT token, CAST(sum(n) AS BIGINT) AS occurrences FROM (
-        |  SELECT unnest(list_filter(string_split(s, '|'), x -> x != '')) AS token, n FROM fin)
-        |GROUP BY token""".stripMargin
-    },
-
-    "text_cdc_dups" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (SELECT doc_id, toks, list_transform(generate_series(0, len(toks)-4), i -> array_to_string(toks[i+1:i+4], ' ')) AS grams FROM t),
-        |cu AS (SELECT doc_id, toks, list_filter(list_transform(generate_series(0, len(grams)-1), p ->
-        |    CASE WHEN ('0x'||substr(md5(grams[p+1]),1,15))::UBIGINT % 16 = 0 THEN p + 3 ELSE -1 END), c -> c >= 0) AS cuts FROM g),
-        |ch AS (SELECT doc_id, unnest(list_filter(list_transform(generate_series(1, len(cuts)+1), i ->
-        |    array_to_string(toks[(CASE WHEN i = 1 THEN -1 ELSE cuts[i-1] END)+2 :
-        |                         (CASE WHEN i <= len(cuts) THEN cuts[i] ELSE len(toks)-1 END)+1], ' ')), s -> s != '')) AS chunk FROM cu),
-        |pd AS (SELECT doc_id, md5(chunk) AS fp, count(*) AS c FROM ch GROUP BY 1, 2),
-        |tot AS (SELECT fp, sum(c) AS tot FROM pd GROUP BY 1),
-        |s AS (SELECT pd.doc_id, sum(c) AS n_chunks,
-        |    sum(CASE WHEN tot > c THEN c ELSE 0 END) AS n_dup
-        |  FROM pd JOIN tot USING (fp) GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(s.n_chunks, 0) AS BIGINT) AS n_chunks,
-        |  CAST(coalesce(s.n_dup, 0) AS BIGINT) AS n_dup_chunks,
-        |  round(CASE WHEN coalesce(s.n_chunks, 0) = 0 THEN 0.0
-        |        ELSE s.n_dup / s.n_chunks END, 6) AS dup_chunk_frac
-        |FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin,
-
-    // Same positional 3-gram hash60 arithmetic as the Spark side; the
-    // rolling rightmost-minimum is replicated per window with
-    // list_min + a rightmost list_filter/list_max argmax.
-    "text_winnowing" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |    ELSE list_transform(generate_series(0, len(toks)-3), i -> array_to_string(toks[i+1:i+3], ' ')) END AS grams FROM t),
-        |h AS (SELECT doc_id, list_transform(grams, x -> (('0x'||substr(md5(x),1,15))::UBIGINT)::BIGINT) AS h FROM g),
-        |n AS (SELECT doc_id, h, greatest(len(h) - 3, 1) AS nw FROM h),
-        |sel AS (SELECT doc_id, h, nw, list_distinct(list_transform(generate_series(0, nw-1), i ->
-        |    list_max(list_filter(generate_series(i, least(i+3, len(h)-1)), j -> h[j+1] = list_min(h[i+1:i+4]))))) AS pos FROM n)
-        |SELECT doc_id, CAST(len(h) AS INTEGER) AS n_grams, CAST(len(pos) AS INTEGER) AS n_fps,
-        |  CAST(list_reduce(list_prepend(0::BIGINT, list_transform(pos, p -> h[p+1])), (a,x) -> xor(a,x)) AS BIGINT) AS fp_xor,
-        |  round(len(pos) / nw, 6) AS density
-        |FROM sel""".stripMargin,
-
-    "docs_version_diff" ->
-      """WITH b AS (SELECT doc_id, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp FROM documents),
-        |rv AS (SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text
-        |       FROM documents WHERE doc_id % 10 != 0
-        |       UNION ALL
-        |       SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 25),
-        |r AS (SELECT doc_id, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp FROM rv)
-        |SELECT COALESCE(b.doc_id, r.doc_id) AS doc_id,
-        |  CASE WHEN b.doc_id IS NULL THEN 'added'
-        |       WHEN r.doc_id IS NULL THEN 'removed'
-        |       WHEN b.fp = r.fp THEN 'unchanged' ELSE 'changed' END AS status
-        |FROM b FULL OUTER JOIN r ON b.doc_id = r.doc_id""".stripMargin,
-
-    "text_pmi" ->
-      """WITH t AS (SELECT string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |u AS (SELECT unnest(toks) AS term FROM t),
-        |c AS (SELECT term, count(*) AS cu FROM u GROUP BY 1),
-        |n AS (SELECT sum(cu) AS ntok FROM c),
-        |bg AS (SELECT unnest(list_transform(generate_series(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1])) AS bg FROM t),
-        |cb AS (SELECT bg, count(*) AS n_pair FROM bg GROUP BY 1 HAVING count(*) >= 5),
-        |j AS (SELECT cb.bg, cb.n_pair, c1.cu AS n_w1, c2.cu AS n_w2,
-        |    round(CAST(CAST(ln(CAST(cb.n_pair AS DOUBLE) * CAST(n.ntok AS DOUBLE) / (CAST(c1.cu AS DOUBLE) * CAST(c2.cu AS DOUBLE))) AS DECIMAL(27,12)) AS DOUBLE), 6) AS pmi
-        |  FROM cb CROSS JOIN n
-        |  JOIN c c1 ON string_split(cb.bg, ' ')[1] = c1.term
-        |  JOIN c c2 ON string_split(cb.bg, ' ')[2] = c2.term)
-        |SELECT bg, CAST(n_pair AS BIGINT) AS n_pair, CAST(n_w1 AS BIGINT) AS n_w1,
-        |  CAST(n_w2 AS BIGINT) AS n_w2, pmi
-        |FROM j ORDER BY pmi DESC, bg LIMIT 25""".stripMargin,
-
-    "text_entropy" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |c AS (SELECT doc_id, term, count(*) AS c FROM t GROUP BY 1, 2),
-        |a AS (SELECT doc_id, sum(c) AS n, count(*) AS nd,
-        |    CAST(SUM(CAST(c * CAST(CAST(ln(c) AS DECIMAL(27,12)) AS DOUBLE) AS DECIMAL(27,12))) AS DOUBLE) AS s
-        |  FROM c GROUP BY 1)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, CAST(nd AS BIGINT) AS n_distinct,
-        |  round(CAST(CAST(ln(n) AS DECIMAL(27,12)) AS DOUBLE) - s / n, 6) AS entropy
-        |FROM a""".stripMargin,
-
-    // Same (source, term) counts; p/q ratios are IEEE double divisions of
-    // exact longs, ln canonicalized through DECIMAL(27,12), contribution
-    // sums DECIMAL-routed, and the absent-vocabulary side folded into the
-    // same 0.5·ln2·(1−Σq) closed-form correction as the Spark side.
-    "text_js_drift" ->
-      """WITH t AS (SELECT source AS src, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |st AS (SELECT src, term, count(*) AS cs FROM t GROUP BY 1, 2),
-        |tt AS (SELECT term, sum(cs) AS c_t FROM st GROUP BY 1),
-        |stot AS (SELECT src, sum(cs) AS n_s FROM st GROUP BY 1),
-        |nn AS (SELECT sum(n_s) AS n FROM stot),
-        |j AS (SELECT st.src, st.cs, tt.c_t, s.n_s, nn.n
-        |  FROM st JOIN tt USING (term) JOIN stot s ON st.src = s.src CROSS JOIN nn),
-        |pq AS (SELECT src, n_s, n, c_t, cs,
-        |    CAST(cs AS DOUBLE) / n_s AS p,
-        |    CASE WHEN n > n_s THEN CAST(c_t - cs AS DOUBLE) / (n - n_s) ELSE 0.0 END AS q
-        |  FROM j),
-        |k AS (SELECT src, n_s, n, q,
-        |    p * CAST(CAST(ln(2.0 * p / (p + q)) AS DECIMAL(27,12)) AS DOUBLE)
-        |  + CASE WHEN c_t - cs > 0 THEN q * CAST(CAST(ln(2.0 * q / (p + q)) AS DECIMAL(27,12)) AS DOUBLE) ELSE 0.0 END AS contrib
-        |  FROM pq),
-        |a AS (SELECT src, CAST(MIN(n_s) AS BIGINT) AS n_tokens, MIN(n) AS n, count(*) AS n_terms,
-        |    CAST(SUM(CAST(contrib * 0.5 AS DECIMAL(27,12))) AS DOUBLE) AS s_in,
-        |    CAST(SUM(CAST(q AS DECIMAL(27,12))) AS DOUBLE) AS t_in
-        |  FROM k GROUP BY 1)
-        |SELECT src AS source, n_tokens, n_terms,
-        |  round(s_in + CASE WHEN n > n_tokens
-        |    THEN CAST(CAST(ln(2.0) AS DECIMAL(27,12)) AS DOUBLE) * 0.5 * (1.0 - t_in)
-        |    ELSE 0.0 END, 6) AS jsd
-        |FROM a""".stripMargin,
-
-    "events_burst" ->
-      """WITH e AS (SELECT event_type, CAST(epoch_ms(ts) AS BIGINT) // 600000 AS bucket FROM events),
-        |c AS (SELECT event_type, bucket, count(*) AS n FROM e GROUP BY 1, 2),
-        |t AS (SELECT event_type, bucket, n,
-        |    count(n) OVER w AS n_trail, sum(n) OVER w AS tsum
-        |  FROM c WINDOW w AS (PARTITION BY event_type ORDER BY bucket RANGE BETWEEN 6 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, bucket, n, CAST(n_trail AS BIGINT) AS n_trail,
-        |  round(CASE WHEN n_trail = 0 THEN 0.0 ELSE CAST(tsum AS DOUBLE) / n_trail END, 6) AS trail_avg,
-        |  (n_trail >= 3 AND n >= 3.0 * CAST(tsum AS DOUBLE) / n_trail) AS is_burst
-        |FROM t""".stripMargin,
-
-    "events_user_entropy" ->
-      """WITH c AS (SELECT user_id, event_type, count(*) AS c FROM events GROUP BY 1, 2),
-        |a AS (SELECT user_id, sum(c) AS n, count(*) AS nt,
-        |    CAST(SUM(CAST(c * CAST(CAST(ln(c) AS DECIMAL(27,12)) AS DOUBLE) AS DECIMAL(27,12))) AS DOUBLE) AS s
-        |  FROM c GROUP BY 1)
-        |SELECT user_id, CAST(n AS BIGINT) AS n_events, CAST(nt AS BIGINT) AS n_types,
-        |  round(CAST(CAST(ln(n) AS DECIMAL(27,12)) AS DOUBLE) - s / n, 6) AS entropy
-        |FROM a""".stripMargin,
-
-    // First-match priority semantics: one CASE per row, first arm wins.
-    "plug_first_match" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity,
-        |  CASE WHEN l_quantity < 30 THEN 'X'
-        |       WHEN l_quantity < 40 THEN 'Y'
-        |       ELSE l_returnflag END AS l_returnflag
-        |FROM lineitem""".stripMargin,
-
-    // Exact integer regression moments (x re-anchored per type keeps every
-    // sum small and exact on both engines).
-    "events_type_trend" ->
-      """WITH c AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |x AS (SELECT event_type, day - min(day) OVER (PARTITION BY event_type) AS x, n FROM c),
-        |a AS (SELECT event_type, count(*) AS nd, sum(x) AS sx, sum(n) AS sy,
-        |    sum(x * n) AS sxy, sum(x * x) AS sxx
-        |  FROM x GROUP BY 1)
-        |SELECT event_type, CAST(nd AS BIGINT) AS n_days,
-        |  CASE WHEN nd * sxx - sx * sx > 0
-        |       THEN round(CAST(nd * sxy - sx * sy AS DOUBLE) / CAST(nd * sxx - sx * sx AS DOUBLE), 6) END AS slope,
-        |  round(CAST(sy AS DOUBLE) / nd, 6) AS mean_daily
-        |FROM a""".stripMargin,
-
-    // Exact integer moments over the per-user gap multiset (HUGEINT-routed
-    // squares ↔ Spark's DECIMAL route); gap order is tie-invariant.
-    "events_bot_cadence" ->
-      """WITH g AS (SELECT user_id,
-        |    epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS gap
-        |  FROM events),
-        |a AS (SELECT user_id, count(*) AS n_gaps, sum(gap) AS s1,
-        |    sum(CAST(gap AS HUGEINT) * gap) AS s2
-        |  FROM g WHERE gap IS NOT NULL GROUP BY 1),
-        |m AS (SELECT user_id, n_gaps, s1,
-        |    CAST(s1 AS DOUBLE) / n_gaps AS mean,
-        |    sqrt(CAST(n_gaps * s2 - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
-        |      / CAST(n_gaps * n_gaps AS DOUBLE)) AS sd
-        |  FROM a WHERE n_gaps >= 5)
-        |SELECT user_id, CAST(n_gaps AS BIGINT) AS n_gaps,
-        |  round(mean, 6) AS mean_gap_ms,
-        |  CASE WHEN s1 > 0 THEN round(sd / mean, 6) END AS cv,
-        |  (s1 > 0 AND sd / mean < 0.3) AS is_metronomic
-        |FROM m""".stripMargin,
-
-    // The events_sessionize CTE rolled to one row; quantile_cont
-    // interpolates identically to Spark's exact percentile.
-    "events_session_profile" ->
-      """WITH x AS (SELECT user_id, ts, epoch_ms(ts) AS ts_ms,
-        |    CASE WHEN lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |           OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 1800000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events),
-        |y AS (SELECT user_id, ts_ms,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        |  FROM x),
-        |s AS (SELECT user_id, session_id, count(*) AS n_events,
-        |    max(ts_ms) - min(ts_ms) AS duration_ms
-        |  FROM y GROUP BY 1, 2),
-        |p AS (SELECT count(*) AS n_sessions,
-        |    CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounce,
-        |    CAST(sum(n_events) AS BIGINT) AS total_events,
-        |    quantile_cont(duration_ms, 0.5) AS p50,
-        |    quantile_cont(duration_ms, 0.9) AS p90
-        |  FROM s)
-        |SELECT n_sessions, n_bounce,
-        |  round(CAST(n_bounce AS DOUBLE) / n_sessions, 6) AS bounce_rate,
-        |  round(CAST(total_events AS DOUBLE) / n_sessions, 6) AS mean_events,
-        |  round(p50, 6) AS p50_duration_ms,
-        |  round(p90, 6) AS p90_duration_ms
-        |FROM p""".stripMargin,
-
-    // One aggregation pass per user; long division for the day span.
-    "events_user_features" ->
-      """SELECT user_id, count(*) AS n_events,
-        |  count(DISTINCT event_type) AS n_types,
-        |  count(DISTINCT CAST(ts AS DATE)) AS active_days,
-        |  min(CAST(epoch_ms(ts) AS BIGINT)) AS first_ms,
-        |  max(CAST(epoch_ms(ts) AS BIGINT)) AS last_ms,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS total_value,
-        |  (max(CAST(epoch_ms(ts) AS BIGINT)) - min(CAST(epoch_ms(ts) AS BIGINT))) // 86400000 AS span_days,
-        |  round(count(*) / count(DISTINCT CAST(ts AS DATE)), 6) AS events_per_active_day
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // Consecutive-day pairs only (both days active); the five sums are
-    // exact integers, the finish identical IEEE double ops.
-    "events_daily_autocorr" ->
-      """WITH daily AS (SELECT event_type AS t, CAST(ts AS DATE) AS d, count(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |pairs AS (SELECT a.t, a.c AS x, b.c AS y
-        |  FROM daily a JOIN daily b ON a.t = b.t AND b.d = a.d + 1),
-        |s AS (SELECT t, count(*) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x*y) AS BIGINT) AS sxy, CAST(sum(x*x) AS BIGINT) AS sxx,
-        |    CAST(sum(y*y) AS BIGINT) AS syy
-        |  FROM pairs GROUP BY 1)
-        |SELECT t AS event_type, n AS n_pairs,
-        |  CASE WHEN sqrt((n::DOUBLE * sxx - sx::DOUBLE * sx) * (n::DOUBLE * syy - sy::DOUBLE * sy)) = 0.0
-        |    THEN NULL
-        |    ELSE round((n::DOUBLE * sxy - sx::DOUBLE * sy)
-        |      / sqrt((n::DOUBLE * sxx - sx::DOUBLE * sx) * (n::DOUBLE * syy - sy::DOUBLE * sy)), 6)
-        |  END AS autocorr
-        |FROM s""".stripMargin,
-
-    // Users with zero increases have no islands and drop from the
-    // result on both engines; equal consecutive values break streaks.
-    "events_value_streaks" ->
-      """WITH f AS (SELECT user_id,
-        |    CASE WHEN value > lag(value) OVER w THEN 1 ELSE 0 END AS inc,
-        |    row_number() OVER w AS rn
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |i AS (SELECT user_id, inc, rn,
-        |    sum(inc) OVER (PARTITION BY user_id ORDER BY rn) AS inc_rn FROM f),
-        |r AS (SELECT user_id, rn - inc_rn AS island, count(*) AS run
-        |  FROM i WHERE inc = 1 GROUP BY 1, 2)
-        |SELECT user_id, max(run) + 1 AS longest_streak,
-        |  CAST(sum(run) AS BIGINT) AS n_increases
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // Money sums route through DECIMAL(18,6) on both engines, so the
-    // star rollups hash-match despite double inputs.
-    "star_revenue_by_nation" ->
-      """SELECT n_name, count(*) AS n_items,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1""".stripMargin,
-
-    "star_top_orders" ->
-      """SELECT o_orderkey, epoch_ms(o_orderdate) AS orderdate_ms, o_orderpriority,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS order_revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > TIMESTAMP '1996-06-30'
-        |GROUP BY 1, 2, 3
-        |ORDER BY order_revenue DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "star_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_qty,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_base_price,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_disc_price,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_charge,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2000-12-01'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "star_local_supplier" ->
-      """SELECT n_name,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE c_nationkey = s_nationkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1""".stripMargin,
-
-    "star_promo_share" ->
-      """SELECT
-        |  round(100.0 * CAST(sum(CASE WHEN p_type = 'PROMO' THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-        |    / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 4) AS promo_share_pct,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin,
-
-    // Same DECIMAL-folded profit expression, same 60%-of-retail cost
-    // model, same (nation, year) rollup.
-    "star_profit_by_nation" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    - 0.6 * p_retailprice * l_quantity AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_profit,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND contains(p_name, 'an')
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Same one-aggregate collapse of the exists/not-exists pair.
-    "star_lone_late_supplier" ->
-      """WITH l AS (SELECT l_orderkey, l_suppkey,
-        |    l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |po AS (SELECT l_orderkey AS ok, count(DISTINCT l_suppkey) AS ns,
-        |    count(DISTINCT CASE WHEN late THEN l_suppkey END) AS nl
-        |  FROM l GROUP BY 1),
-        |t AS (SELECT l.l_suppkey, CAST(count(DISTINCT l.l_orderkey) AS BIGINT) AS numwait
-        |  FROM l JOIN po ON l.l_orderkey = po.ok AND po.ns > 1 AND po.nl = 1
-        |  WHERE l.late GROUP BY 1)
-        |SELECT s_suppkey, s_name, numwait
-        |FROM t JOIN supplier ON l_suppkey = s_suppkey
-        |ORDER BY numwait DESC, s_suppkey LIMIT 10""".stripMargin,
-
-    // Same group census: distinct sensitive values per quasi-group.
-    "docs_l_diversity" ->
-      """WITH g AS (SELECT lang, CAST(floor(n_chars / 128) AS BIGINT) AS band,
-        |    CAST(count(DISTINCT source) AS BIGINT) AS d,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT CAST(3 AS BIGINT) AS l,
-        |  CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(COALESCE(sum(CASE WHEN d < 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_violating_groups,
-        |  CAST(COALESCE(sum(CASE WHEN d < 3 THEN n ELSE 0 END), 0) AS BIGINT) AS n_rows_at_risk,
-        |  min(d) AS min_distinct_sensitive
-        |FROM g""".stripMargin,
-
-    // The same smoothed shares over the full bin domain, ln canonicalized
-    // to 12 dp, terms DECIMAL-routed.
-    "docs_psi_drift" ->
-      """WITH o AS (SELECT lang, CAST(least(floor(n_chars/64.0), 9) AS INTEGER) AS bin
-        |  FROM documents WHERE doc_id % 7 != 0),
-        |n AS (SELECT lang, CAST(least(floor(n_chars/64.0), 9) AS INTEGER) AS bin
-        |  FROM documents WHERE doc_id % 5 != 0),
-        |oc AS (SELECT lang, bin, CAST(count(*) AS BIGINT) AS c FROM o GROUP BY 1, 2),
-        |nc AS (SELECT lang, bin, CAST(count(*) AS BIGINT) AS c FROM n GROUP BY 1, 2),
-        |keys AS (SELECT DISTINCT lang FROM (SELECT lang FROM oc UNION ALL SELECT lang FROM nc)),
-        |dom AS (SELECT lang, j AS bin FROM keys, generate_series(0, 9) g(j)),
-        |jj AS (SELECT dom.lang, dom.bin, COALESCE(oc.c, 0) AS co, COALESCE(nc.c, 0) AS cn
-        |  FROM dom LEFT JOIN oc ON oc.lang = dom.lang AND oc.bin = dom.bin
-        |  LEFT JOIN nc ON nc.lang = dom.lang AND nc.bin = dom.bin),
-        |sh AS (SELECT lang, co, cn,
-        |    (co + 1) / (sum(co) OVER (PARTITION BY lang) + 10.0) AS p,
-        |    (cn + 1) / (sum(cn) OVER (PARTITION BY lang) + 10.0) AS q
-        |  FROM jj)
-        |SELECT lang, CAST(sum(co) AS BIGINT) AS n_old, CAST(sum(cn) AS BIGINT) AS n_new,
-        |  round(CAST(sum(CAST(round((p - q) * round(ln(p / q), 12), 12) AS DECIMAL(27,12))) AS DOUBLE), 6) AS psi
-        |FROM sh GROUP BY 1""".stripMargin,
-
-    // Per-order quantity sums in DECIMAL, HAVING > 200, value-ranked
-    // top-20 with the orderkey tiebreak.
-    "star_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,6))) AS qty
-        |  FROM lineitem GROUP BY 1 HAVING qty > 200)
-        |SELECT c_custkey, c_name, o_orderkey,
-        |  round(o_totalprice, 2) AS o_totalprice,
-        |  round(CAST(qty AS DOUBLE), 2) AS total_qty
-        |FROM big JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY orders.o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "star_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey, sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, round(CAST(total_rev AS DOUBLE), 2) AS total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT max(total_rev) FROM rev)""".stripMargin,
-
-    // The gzip roundtrip preserves every record and byte count.
-    "ingest_warc_gz" ->
-      """SELECT count(*) AS n_records,
-        |  CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-        |  count(DISTINCT md5(text)) AS n_distinct_payloads
-        |FROM documents""".stripMargin,
-
-    // The WARC roundtrip: byte length and md5 of every payload must match
-    // the source text (ASCII corpus: octet_length == strlen).
-    "ingest_warc" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS content_length,
-        |  md5(text) AS payload_md5,
-        |  'http://synthetic.local/doc/' || doc_id AS target_uri
-        |FROM documents""".stripMargin,
-
-    // Null struct parents flatten to null leaves.
-    "ingest_flatten" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_quantity > 45 THEN NULL ELSE l_quantity END AS detail_amounts_qty,
-        |  CASE WHEN l_quantity > 45 THEN NULL ELSE l_discount END AS detail_amounts_disc,
-        |  CASE WHEN l_quantity > 45 THEN NULL ELSE l_tax END AS detail_tax
-        |FROM lineitem""".stripMargin,
-
-    // WebDataset roundtrip: every sample reassembles to its source row.
-    "ingest_webdataset" ->
-      """SELECT doc_id, CAST(2 AS BIGINT) AS n_parts, md5(text) AS text_md5,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS text_len,
-        |  source AS cls
-        |FROM documents""".stripMargin,
-
-    // The manifest table's CURRENT snapshot is the doc_id % 3 <> 0 filter
-    // of the source — the first (unfiltered) generation's files are dead
-    // on disk and must not leak into the aggregate.
-    "ingest_manifest_commit" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 3 <> 0
-        |GROUP BY source, lang""".stripMargin,
-
-    // Each rule's census re-derived in plain SQL; rule names match the
-    // Scala Constraint.name strings exactly.
-    "ingest_constraint_report" ->
-      """SELECT 'not_null(o_custkey)' AS rule,
-        |  CAST(count(*) AS BIGINT) AS n_checked,
-        |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-        |FROM orders
-        |UNION ALL
-        |SELECT 'in_range(o_totalprice,1000.0,300000.0)',
-        |  CAST(count(o_totalprice) AS BIGINT),
-        |  CAST(sum(CASE WHEN o_totalprice IS NOT NULL AND NOT (o_totalprice >= 1000.0 AND o_totalprice <= 300000.0) THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'accepted(o_orderstatus)',
-        |  CAST(count(o_orderstatus) AS BIGINT),
-        |  CAST(sum(CASE WHEN o_orderstatus IS NOT NULL AND o_orderstatus NOT IN ('O','F') THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'unique(o_orderkey)', CAST(count(*) AS BIGINT),
-        |  CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'unique(o_custkey,o_orderdate)', CAST(count(*) AS BIGINT),
-        |  CAST(count(*) - (SELECT count(*) FROM (SELECT DISTINCT o_custkey, o_orderdate FROM orders)) AS BIGINT)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'foreign_key(o_custkey->customer.c_custkey)',
-        |  CAST(count(o_custkey) AS BIGINT),
-        |  CAST(sum(CASE WHEN o_custkey NOT IN (SELECT c_custkey FROM customer) THEN 1 ELSE 0 END) AS BIGINT)
-        |FROM orders WHERE o_custkey IS NOT NULL""".stripMargin,
-
-    // Append union: the two batches cover doc_id % 3 in {0, 1}.
-    "ingest_manifest_append" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 3 <> 2
-        |GROUP BY source""".stripMargin,
-
-    // After the partition-scoped overwrite: 'en' halved, others intact.
-    "ingest_manifest_replace" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE lang <> 'en' OR doc_id % 2 = 0
-        |GROUP BY lang""".stripMargin,
-
-    // Survivors = best copy per normalized-text fingerprint; both append
-    // batches land, so the committed table is exactly the survivor set.
-    "docs_landing_pipeline" ->
-      """WITH f AS (SELECT doc_id, source, n_chars,
-        |    md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-        |  FROM documents),
-        |r AS (SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY fp ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM f)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM r WHERE rn = 1 GROUP BY source""".stripMargin,
-
-    // The clustered rewrite loses nothing.
-    "ingest_manifest_cluster" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents GROUP BY source""".stripMargin,
-
-    // The delta since v0 = the two appended slices, never the base.
-    "ingest_manifest_changes" ->
-      """SELECT source, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 3 <> 0
-        |GROUP BY source""".stripMargin,
-
-    // AS-OF at v0's commit time reads the even half exactly.
-    "ingest_manifest_asof" ->
-      """SELECT count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 2 = 0""".stripMargin,
-
-    // After the MOR update every row reads back in exactly one version:
-    // the doubled value inside the range, the original outside it.
-    "ingest_manifest_update" ->
-      """SELECT (user_id BETWEEN 10 AND 19) AS updated,
-        |  count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  round(CAST(SUM(CAST(CASE WHEN user_id BETWEEN 10 AND 19
-        |    THEN value * 2 ELSE value END AS DECIMAL(18,6))) AS DOUBLE), 6) AS value_sum
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // Bucket-pruned point probes hold exactly the requested keys' rows —
-    // the layout changes which FILES open, never which rows match.
-    "ingest_manifest_bucket" ->
-      """SELECT user_id, count(*) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS id_sum
-        |FROM events WHERE user_id IN (7, 19, 42)
-        |GROUP BY user_id""".stripMargin,
-
-    // The z-ordered table holds exactly the events frame; a 2D stats-
-    // pruned read equals the plain 2D filter.
-    "ingest_manifest_zorder" ->
-      """SELECT count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  round(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS value_sum
-        |FROM events
-        |WHERE event_id BETWEEN 100 AND 2000 AND user_id BETWEEN 10 AND 80""".stripMargin,
-
-    // The 3-d z-ordered table holds exactly the events frame; a 3-sided
-    // stats-pruned read equals the plain 3-sided filter.
-    "ingest_manifest_zorder3" ->
-      """SELECT count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  round(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS value_sum
-        |FROM events
-        |WHERE event_id BETWEEN 100 AND 3000 AND user_id BETWEEN 10 AND 80
-        |  AND value BETWEEN 5 AND 400""".stripMargin,
-
-    // Live content survives the sweep bit-identically; the 8
-    // pre-compaction files are the orphans; v0 is gone cleanly.
-    "ingest_manifest_vacuum" ->
-      """SELECT count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |  8 AS n_swept, true AS tt_pruned
-        |FROM documents""".stripMargin,
-
-    // The clustered table holds exactly the events frame; the stats-
-    // pruned IN-list read equals the plain IN filter.
-    "ingest_manifest_inlist" ->
-      """SELECT user_id, count(*) AS n_rows,
-        |  CAST(sum(event_id) AS BIGINT) AS id_sum,
-        |  round(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS value_sum
-        |FROM events
-        |WHERE user_id IN (7, 19, 23, 42, 77)
-        |GROUP BY user_id""".stripMargin,
-
-    // The transaction view is both FULL tables at the txn-2 pins — the
-    // post-txn canary append never enters it, so the oracle is the plain
-    // whole-table join.
-    "ingest_manifest_txn" ->
-      """WITH b AS (SELECT l_orderkey, sum(l_quantity) AS q
-        |  FROM lineitem GROUP BY 1)
-        |SELECT o.o_orderstatus, count(*) AS n_orders, sum(b.q) AS sum_qty
-        |FROM orders o JOIN b ON o.o_orderkey = b.l_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    // Phases: main before publish = the even half; the branch audit read
-    // and main after the fast-forward = everything.
-    "ingest_manifest_branch" ->
-      """SELECT 'main_before' AS phase, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT 'branch_audit', count(*), CAST(sum(doc_id) AS BIGINT),
-        |  CAST(sum(n_chars) AS BIGINT) FROM documents
-        |UNION ALL
-        |SELECT 'main_after', count(*), CAST(sum(doc_id) AS BIGINT),
-        |  CAST(sum(n_chars) AS BIGINT) FROM documents""".stripMargin,
-
-    // Version 0 is the full corpus; version 1 is the doc_id % 2 = 0 cut.
-    "ingest_manifest_timetravel" ->
-      """SELECT CAST(0 AS BIGINT) AS version, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT) AS version, count(*) AS n_docs,
-        |  CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 2 = 0""".stripMargin,
-
-    // Same md5 position family as text_contam_bloom (5 hex chars per
-    // hash, 32-bit chunking) over the id strings; 1024 words → 65536 bits.
-    "docs_shard_bloom_probe" ->
-      """WITH ids AS (SELECT doc_id::VARCHAR AS s,
-        |    CAST((('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT) % 8 AS BIGINT) AS shard
-        |  FROM documents),
-        |ipos AS (SELECT shard, CAST(('0x'||substr(md5(s), 1+5*j, 5))::UBIGINT % 65536 AS BIGINT) AS p
-        |  FROM ids, range(4) r(j)),
-        |bloom AS (SELECT shard, p // 32 AS word,
-        |    bit_or(1::BIGINT << CAST(p % 32 AS INTEGER)) AS bits
-        |  FROM ipos GROUP BY 1, 2),
-        |probe AS (SELECT CAST(v AS BIGINT) AS probe_id FROM (VALUES (0),(1),(2),(3),(4),(5),(6),(7),(8),(9),
-        |    (1000001),(1000002),(1000003),(1000004),(1000005)) t(v)),
-        |pr AS (SELECT probe_id,
-        |    CAST((('0x'||substr(md5(probe_id::VARCHAR),1,7))::UBIGINT) % 8 AS BIGINT) AS true_shard,
-        |    CAST(('0x'||substr(md5(probe_id::VARCHAR), 1+5*j, 5))::UBIGINT % 65536 AS BIGINT) AS p
-        |  FROM probe, range(4) r(j)),
-        |cand AS (SELECT probe_id, true_shard, b.shard
-        |  FROM pr JOIN bloom b ON pr.p // 32 = b.word
-        |    AND (b.bits & (1::BIGINT << CAST(pr.p % 32 AS INTEGER))) != 0
-        |  GROUP BY 1, 2, 3 HAVING count(*) = 4)
-        |SELECT probe_id, count(*) AS n_candidate_shards,
-        |  max(CASE WHEN shard = true_shard THEN 1 ELSE 0 END) = 1 AS no_false_neg
-        |FROM cand GROUP BY probe_id, true_shard""".stripMargin,
-
-    // Both sides derive the prune outcome independently: the engine from
-    // manifest stats, the oracle from per-band content min/max — a file
-    // (= one n_chars band) is scanned iff its [min, max] overlaps
-    // [600, 1500]; the row aggregate is the plain predicate.
-    "ingest_zonemap_scan" ->
-      """WITH b AS (
-        |  SELECT CAST(floor(n_chars / 512) AS BIGINT) AS band, n_chars, doc_id
-        |  FROM documents),
-        |f AS (SELECT band, min(n_chars) AS mn, max(n_chars) AS mx
-        |      FROM b GROUP BY band)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f) AS n_files_total,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f
-        |     WHERE mn <= 1500 AND mx >= 600) AS n_files_scanned,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM b
-        |     WHERE n_chars BETWEEN 600 AND 1500) AS n_rows,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM b
-        |     WHERE n_chars BETWEEN 600 AND 1500) AS chars_sum,
-        |  (SELECT CAST(sum(doc_id) AS BIGINT) FROM b
-        |     WHERE n_chars BETWEEN 600 AND 1500) AS id_sum""".stripMargin,
-
-    // Rewrite census = bands whose [min, max] overlaps the delete
-    // range; post-delete content = the complement predicate.
-    "ingest_manifest_delete" ->
-      """WITH b AS (
-        |  SELECT CAST(floor(n_chars / 512) AS BIGINT) AS band, n_chars, doc_id
-        |  FROM documents),
-        |f AS (SELECT band, min(n_chars) AS mn, max(n_chars) AS mx
-        |      FROM b GROUP BY band)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f) AS n_files_before,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f
-        |     WHERE mn <= 1500 AND mx >= 600) AS n_files_rewritten,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM b
-        |     WHERE n_chars NOT BETWEEN 600 AND 1500) AS n_rows_after,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM b
-        |     WHERE n_chars NOT BETWEEN 600 AND 1500) AS chars_sum_after""".stripMargin,
-
-    // Per-language layout: one file per distinct language, rewritten =
-    // the erased one; content = the complement of the equality.
-    "ingest_manifest_delete_cat" ->
-      """WITH f AS (SELECT DISTINCT lang FROM documents)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f) AS n_files_before,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f
-        |     WHERE lang = 'en') AS n_files_rewritten,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE lang <> 'en') AS n_rows_after,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
-        |     WHERE lang <> 'en') AS chars_sum_after,
-        |  (SELECT CAST(count(DISTINCT lang) AS BIGINT) FROM documents
-        |     WHERE lang <> 'en') AS n_langs_after""".stripMargin,
-
-    // Three registered checks, one refused dirty batch, content = the
-    // full clean table.
-    "ingest_manifest_check" ->
-      """SELECT CAST(3 AS BIGINT) AS n_checks, CAST(1 AS BIGINT) AS n_refused,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents""".stripMargin,
-
-    // Appends = one per language (good = n-1), the delete adds one, the
-    // restore one more (n+1); content is the full table again.
-    "ingest_manifest_restore" ->
-      """SELECT
-        |  (SELECT CAST(count(DISTINCT lang) - 1 AS BIGINT) FROM documents) AS good_version,
-        |  (SELECT CAST(count(DISTINCT lang) + 1 AS BIGINT) FROM documents) AS restored_version,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_rows_after,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents) AS chars_sum_after""".stripMargin,
-
-    // The optimize invariants hold structurally; content is preserved.
-    "ingest_manifest_optimize" ->
-      """SELECT CAST(true AS BOOLEAN) AS files_reduced,
-        |  CAST(true AS BOOLEAN) AS big_files_untouched,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents""".stripMargin,
-
-    // The incrementally maintained rollup equals the direct aggregate.
-    "ingest_manifest_ivm" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS value_sum,
-        |  CAST(0 AS BIGINT) AS idle_refresh_commits
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // The incrementally maintained enrichment equals the direct join.
-    "ingest_manifest_enrich_ivm" ->
-      """SELECT c.c_mktsegment, count(*) AS n_orders,
-        |  count(DISTINCT c.c_nationkey) AS n_nations,
-        |  round(CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6) AS price_sum
-        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY 1""".stripMargin,
-
-    // Merged KMV = the global k smallest distinct hashes (every global
-    // minimum is inside its own file's k smallest), so the oracle skips
-    // the per-file step: k-th smallest distinct 60-bit hash → estimator;
-    // the 20-source column stays below k and reads back exact.
-    "ingest_manifest_ndv" ->
-      """WITH hd AS (SELECT DISTINCT
-        |    (('0x'||substr(md5(doc_id::VARCHAR),1,15))::UBIGINT)::BIGINT AS h
-        |  FROM documents),
-        |kd AS (SELECT h FROM hd ORDER BY h LIMIT 64),
-        |ed AS (SELECT CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-        |    ELSE 63.0 * 1152921504606846976.0 / max(h) END AS e FROM kd),
-        |hs AS (SELECT DISTINCT
-        |    (('0x'||substr(md5(source),1,15))::UBIGINT)::BIGINT AS h
-        |  FROM documents),
-        |ks AS (SELECT h FROM hs ORDER BY h LIMIT 64),
-        |es AS (SELECT CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-        |    ELSE 63.0 * 1152921504606846976.0 / max(h) END AS e FROM ks),
-        |fl AS (SELECT CAST(count(DISTINCT
-        |    (('0x'||substr(md5(source),1,7))::UBIGINT)::BIGINT % 8) AS BIGINT) AS n
-        |  FROM documents)
-        |SELECT fl.n AS n_files, fl.n AS n_sketched_doc, fl.n AS n_sketched_source,
-        |  round(ed.e, 3) AS doc_ndv_estimate,
-        |  (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) FROM documents) AS doc_exact,
-        |  round(es.e, 3) AS source_ndv_estimate,
-        |  (SELECT CAST(count(DISTINCT source) AS BIGINT) FROM documents) AS source_exact
-        |FROM fl, ed, es""".stripMargin,
-
-    // The same 8 source-hash buckets, each file's 4096-bit bloom rebuilt
-    // from the same 4 md5-derived positions per doc_id; a file is kept
-    // iff it holds ALL of the probe's positions.
-    "ingest_manifest_bloom" ->
-      """WITH b AS (SELECT doc_id,
-        |    (('0x'||substr(md5(source),1,7))::UBIGINT)::BIGINT % 8 AS bkt
-        |  FROM documents),
-        |pos AS (SELECT bkt,
-        |    (('0x'||substr(md5(doc_id::VARCHAR), 1+5*j, 5))::UBIGINT)::BIGINT % 4096 AS p
-        |  FROM b, generate_series(0, 3) g(j)),
-        |pset AS (SELECT bkt, list(DISTINCT p) AS ps FROM pos GROUP BY 1),
-        |probes AS (SELECT CAST(probe_id AS BIGINT) AS probe_id
-        |  FROM (VALUES (5), (123), (999999)) t(probe_id)),
-        |pp AS (SELECT probe_id,
-        |    list(DISTINCT (('0x'||substr(md5(probe_id::VARCHAR), 1+5*j, 5))::UBIGINT)::BIGINT % 4096) AS plist
-        |  FROM probes, generate_series(0, 3) g(j) GROUP BY 1),
-        |kept AS (SELECT pp.probe_id, CAST(count(*) AS BIGINT) AS n_kept
-        |  FROM pp, pset WHERE list_has_all(pset.ps, pp.plist) GROUP BY 1)
-        |SELECT pp.probe_id,
-        |  (SELECT CAST(count(DISTINCT bkt) AS BIGINT) FROM b) AS n_files_total,
-        |  COALESCE(kept.n_kept, 0) AS n_files_kept,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE doc_id = pp.probe_id) AS n_rows
-        |FROM pp LEFT JOIN kept ON kept.probe_id = pp.probe_id""".stripMargin,
-
-    // One append per language (versions 0..n-1), so the tagged full
-    // snapshot is version n-1; the tag view is the whole table, the
-    // current view is the erased complement.
-    "ingest_manifest_tag" ->
-      """SELECT
-        |  (SELECT CAST(count(DISTINCT lang) - 1 AS BIGINT) FROM documents) AS tag_version,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_rows_tag,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents) AS chars_sum_tag,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE lang <> 'en') AS n_rows_current,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
-        |     WHERE lang <> 'en') AS chars_sum_current""".stripMargin,
-
-    // Merge-on-read census: every band file survives both deletes
-    // untouched; the two vectors' positions union to one interval
-    // (the second only lists rows the first left live).
-    "ingest_manifest_dv" ->
-      """WITH f AS (
-        |  SELECT CAST(floor(n_chars / 128) AS BIGINT) AS band
-        |  FROM documents GROUP BY 1)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f) AS n_files_before,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM f) AS n_files_unchanged,
-        |  CAST(2 AS BIGINT) AS n_vectors,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE n_chars BETWEEN 100 AND 300) AS dv_positions,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE n_chars NOT BETWEEN 100 AND 300) AS n_rows_after,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
-        |     WHERE n_chars NOT BETWEEN 100 AND 300) AS chars_sum_after""".stripMargin,
-
-    // The identical two-sided CUSUM recursion; μ, σ, slack, and
-    // threshold from the same sequential list folds, alarm checks
-    // recomputing the updated sums with the same expressions.
-    "events_cusum" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, y,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM d),
-        |l AS (SELECT event_type, list(y ORDER BY rn) AS ys
-        |  FROM s GROUP BY 1 HAVING count(*) >= 2),
-        |st AS (SELECT event_type, len(ys)::DOUBLE AS n,
-        |    list_reduce(list_prepend(0.0::DOUBLE, ys), (a, b) -> a + b) AS s1,
-        |    list_reduce(list_prepend(0.0::DOUBLE, ys), (a, b) -> a + b * b) AS s2
-        |  FROM l),
-        |p AS (SELECT event_type, n, s1 / n AS mu,
-        |    0.5 * sqrt((s2 - n * (s1 / n) * (s1 / n)) / (n - 1.0)) AS kk,
-        |    4.0 * sqrt((s2 - n * (s1 / n) * (s1 / n)) / (n - 1.0)) AS h
-        |  FROM st),
-        |rec AS (
-        |  SELECT event_type, 0 AS rn, 0.0::DOUBLE AS sp, 0.0::DOUBLE AS sn, 0 AS alarms
-        |  FROM p
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn + 1,
-        |    greatest(0.0, r.sp + s.y - m.mu - m.kk) AS sp,
-        |    greatest(0.0, r.sn + m.mu - s.y - m.kk) AS sn,
-        |    r.alarms + (CASE WHEN greatest(0.0, r.sp + s.y - m.mu - m.kk) > m.h
-        |        OR greatest(0.0, r.sn + m.mu - s.y - m.kk) > m.h
-        |      THEN 1 ELSE 0 END) AS alarms
-        |  FROM rec r
-        |  JOIN s ON s.event_type = r.event_type AND s.rn = r.rn + 1
-        |  JOIN p m ON m.event_type = r.event_type)
-        |SELECT r.event_type, CAST(m.n AS BIGINT) AS n_days,
-        |  round(m.mu, 6) AS mu, round(r.sp, 6) AS cusum_high,
-        |  round(r.sn, 6) AS cusum_low, CAST(r.alarms AS BIGINT) AS n_alarms
-        |FROM rec r JOIN p m ON m.event_type = r.event_type
-        |WHERE r.rn = CAST(m.n AS INTEGER)""".stripMargin,
-
-    // The identical EWMA recursion in a bounded recursive CTE; σ and the
-    // control limit are computed from the same ordered list with the
-    // same sequential folds, and (1.0 - 0.2) is written as the exact
-    // float expression Spark evaluates.
-    "events_ewma_chart" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, y,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM d),
-        |l AS (SELECT event_type, list(y ORDER BY rn) AS ys
-        |  FROM s GROUP BY 1 HAVING count(*) >= 2),
-        |st AS (SELECT event_type, len(ys)::DOUBLE AS n,
-        |    list_reduce(list_prepend(0.0::DOUBLE, ys), (a, b) -> a + b) AS s1,
-        |    list_reduce(list_prepend(0.0::DOUBLE, ys), (a, b) -> a + b * b) AS s2
-        |  FROM l),
-        |lim AS (SELECT event_type, n,
-        |    sqrt((s2 - n * (s1 / n) * (s1 / n)) / (n - 1.0)) AS sigma,
-        |    3.0 * sqrt((s2 - n * (s1 / n) * (s1 / n)) / (n - 1.0))
-        |      * sqrt(0.2 / (2.0 - 0.2)) AS lm
-        |  FROM st),
-        |rec AS (
-        |  SELECT s.event_type, 1 AS rn, s.y AS z, 0 AS flags
-        |  FROM s WHERE s.rn = 1
-        |    AND EXISTS (SELECT 1 FROM lim m WHERE m.event_type = s.event_type)
-        |  UNION ALL
-        |  SELECT r.event_type, r.rn + 1,
-        |    0.2 * s.y + (1.0 - 0.2) * r.z AS z,
-        |    r.flags + (CASE WHEN abs(s.y - r.z) > m.lm THEN 1 ELSE 0 END) AS flags
-        |  FROM rec r
-        |  JOIN s ON s.event_type = r.event_type AND s.rn = r.rn + 1
-        |  JOIN lim m ON m.event_type = r.event_type)
-        |SELECT r.event_type, CAST(m.n AS BIGINT) AS n_days,
-        |  round(m.sigma, 6) AS sigma, round(m.lm, 6) AS ctrl_limit,
-        |  round(r.z, 6) AS ewma, CAST(r.flags AS BIGINT) AS n_flagged
-        |FROM rec r JOIN lim m ON m.event_type = r.event_type
-        |WHERE r.rn = CAST(m.n AS INTEGER)""".stripMargin,
-
-    // The same MERGE replayed relationally: updated keys take the
-    // update row, untouched keys keep the base row, new keys insert.
-    "ingest_manifest_merge" ->
-      """WITH base AS (SELECT doc_id, source, n_chars, 0 AS version FROM documents),
-        |upd AS (
-        |  SELECT doc_id, source, n_chars + 1000 AS n_chars, 1 AS version
-        |  FROM documents WHERE doc_id % 5 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 500000, source, n_chars, 1
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |merged AS (
-        |  SELECT * FROM upd
-        |  UNION ALL
-        |  SELECT * FROM base b WHERE NOT EXISTS
-        |    (SELECT 1 FROM upd u WHERE u.doc_id = b.doc_id))
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |  CAST(sum(version) AS BIGINT) AS version_sum
-        |FROM merged GROUP BY 1""".stripMargin,
-
-    // The evolved union: the pre-evolution slice carries null quality.
-    "ingest_manifest_evolve" ->
-      """WITH u AS (
-        |  SELECT doc_id, source, n_chars, NULL::DOUBLE AS quality
-        |  FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT doc_id, source, n_chars, CAST(n_chars AS DOUBLE) / 100.0
-        |  FROM documents WHERE doc_id % 2 = 1)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(quality) AS BIGINT) AS n_with_quality,
-        |  round(CAST(sum(CAST(quality AS DECIMAL(27,12))) AS DOUBLE), 6) AS quality_sum
-        |FROM u GROUP BY 1""".stripMargin,
-
-    // One file per distinct language; only the 'en' file survives the
-    // equality prune.
-    "ingest_zonemap_point" ->
-      """SELECT
-        |  (SELECT CAST(count(DISTINCT lang) AS BIGINT) FROM documents) AS n_files_total,
-        |  (SELECT CAST(count(DISTINCT lang) AS BIGINT) FROM documents
-        |     WHERE lang = 'en') AS n_files_scanned,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE lang = 'en') AS n_rows,
-        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
-        |     WHERE lang = 'en') AS chars_sum""".stripMargin,
-
-    // The manifest's footer-derived per-file stats must equal the exact
-    // per-band content min/max for both recorded columns.
-    "ingest_manifest_stats" ->
-      """WITH b AS (
-        |  SELECT CAST(floor(n_chars / 1024) AS BIGINT) AS band, n_chars, doc_id
-        |  FROM documents)
-        |SELECT 'doc_id' AS column_name, CAST(min(doc_id) AS BIGINT) AS min_value,
-        |  CAST(max(doc_id) AS BIGINT) AS max_value, CAST(0 AS BIGINT) AS n_nulls
-        |FROM b GROUP BY band
-        |UNION ALL
-        |SELECT 'n_chars', CAST(min(n_chars) AS BIGINT),
-        |  CAST(max(n_chars) AS BIGINT), CAST(0 AS BIGINT)
-        |FROM b GROUP BY band""".stripMargin,
-
-    // The footer must agree with the content: row counts sum to the scan
-    // count and the schema width is the table's column count.
-    "ingest_parquet_footer" ->
-      """SELECT 'documents.parquet' AS file_name, count(*) AS n_rows,
-        |  5 AS n_cols
-        |FROM documents""".stripMargin,
-
-    "star_forecast_revenue" ->
-      """SELECT
-        |  round(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue_effect,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.04 AND l_discount <= 0.06
-        |  AND l_quantity < 24""".stripMargin,
-
-    "star_late_priority" ->
-      """SELECT o_orderpriority, count(*) AS late_orders
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1""".stripMargin,
-
-    "star_trade_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  year(l_shipdate) AS ship_year,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND ((sn.n_name = 'NATION_3' AND cn.n_name = 'NATION_7')
-        |    OR (sn.n_name = 'NATION_7' AND cn.n_name = 'NATION_3'))
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "star_market_share" ->
-      """WITH base AS (
-        |  SELECT year(o_orderdate) AS order_year,
-        |    CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6)) AS rev,
-        |    sn.n_name AS supp_nation
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |  JOIN region ON cn.n_regionkey = r_regionkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  WHERE r_name = 'EUROPE' AND p_type = 'ECONOMY'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01')
-        |SELECT order_year,
-        |  round(CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN rev ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-        |    / CAST(sum(rev) AS DOUBLE), 6) AS mkt_share,
-        |  count(*) AS n_items
-        |FROM base GROUP BY 1""".stripMargin,
-
-    "star_returned_customers" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-10-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "star_order_distribution" ->
-      """WITH co AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        |  GROUP BY 1)
-        |SELECT c_count, count(*) AS custdist
-        |FROM co GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC
-        |LIMIT 100""".stripMargin,
-
-    "star_small_qty_revenue" ->
-      """WITH b AS (
-        |  SELECT l_quantity, l_extendedprice,
-        |    avg(l_quantity) OVER (PARTITION BY l_partkey) AS avg_qty
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_brand = 'Brand#1')
-        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0, 2) AS avg_yearly,
-        |  count(*) AS n_small
-        |FROM b WHERE l_quantity < 0.2 * avg_qty""".stripMargin,
-
-    "star_special_revenue" ->
-      """SELECT round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 11 AND 20 AND l_quantity BETWEEN 10 AND 25)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 21 AND 35 AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-
-    "star_dormant_customers" ->
-      """SELECT n_name, count(*) AS numcust,
-        |  round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 2) AS totacctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY 1""".stripMargin,
-
-    // The docs_quality_blend quality replication + docs_split_assign-style
-    // exact quartile cuts + the dedup_rate_by_source fingerprint totals.
-    "docs_quality_calibration" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |qq AS (SELECT doc_id,
-        |  least(len(toks) / 100.0, 1.0) * 0.4 + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3 + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q,
-        |  md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-        |  FROM t),
-        |tot AS (SELECT fp, count(*) AS tot FROM qq GROUP BY 1),
-        |b AS (SELECT quantile_cont(q, [0.25, 0.5, 0.75]) AS bs FROM qq),
-        |g AS (SELECT CASE WHEN q <= bs[1] THEN 0 WHEN q <= bs[2] THEN 1
-        |    WHEN q <= bs[3] THEN 2 ELSE 3 END AS quartile,
-        |    (tot.tot > 1) AS dup
-        |  FROM qq JOIN tot USING (fp), b)
-        |SELECT quartile, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
-        |  round(sum(CASE WHEN dup THEN 1 ELSE 0 END) / count(*), 6) AS dup_rate
-        |FROM g GROUP BY 1""".stripMargin,
-
-    // One term-ownership aggregate + two checkpoint counts + the text_zipf
-    // DECIMAL-canonicalized least-squares recipe.
-    "text_heaps_fit" ->
-      """WITH own AS (SELECT term, min(doc_id) AS first_id FROM
-        |    (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents)
-        |  GROUP BY 1),
-        |mx AS (SELECT max(doc_id) AS mx FROM documents),
-        |nd AS (SELECT i, sum(CASE WHEN doc_id <= mx.mx * i / 10 THEN 1 ELSE 0 END) AS n_docs
-        |  FROM documents, mx, range(1, 11) r(i) GROUP BY 1),
-        |nt AS (SELECT i, sum(CASE WHEN first_id <= mx.mx * i / 10 THEN 1 ELSE 0 END) AS n_terms
-        |  FROM own, mx, range(1, 11) r(i) GROUP BY 1),
-        |p AS (SELECT nd.n_docs, nt.n_terms FROM nd JOIN nt USING (i)
-        |  WHERE nd.n_docs > 0 AND nt.n_terms > 0),
-        |l AS (SELECT
-        |    CAST(CAST(ln(CAST(n_docs AS DOUBLE)) AS DECIMAL(27,12)) AS DOUBLE) AS lx,
-        |    CAST(CAST(ln(CAST(n_terms AS DOUBLE)) AS DECIMAL(27,12)) AS DOUBLE) AS ly
-        |  FROM p),
-        |s AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(lx AS DECIMAL(27,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(ly AS DECIMAL(27,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(lx * ly AS DECIMAL(27,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(lx * lx AS DECIMAL(27,12))) AS DOUBLE) AS sxx
-        |  FROM l)
-        |SELECT CAST(n AS BIGINT) AS n_points,
-        |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) + 0.0 AS beta,
-        |  round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6) + 0.0 AS ln_k
-        |FROM s""".stripMargin,
-
-    "events_gini" ->
-      """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
-        |r AS (SELECT n, row_number() OVER (ORDER BY n ASC, user_id ASC) AS i FROM c),
-        |a AS (SELECT count(*) AS n_keys, sum(n) AS total, sum(i * n) AS sin FROM r)
-        |SELECT CAST(n_keys AS BIGINT) AS n_keys, CAST(total AS BIGINT) AS total,
-        |  round(CAST(2 * sin - (n_keys + 1) * total AS DOUBLE)
-        |    / (CAST(n_keys AS DOUBLE) * total), 6) AS gini
-        |FROM a""".stripMargin,
-
-    "events_churn" ->
-      """WITH u AS (SELECT user_id, max(CAST(epoch_ms(ts) AS BIGINT)) AS last_ms,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1),
-        |m AS (SELECT max(last_ms) AS mx FROM u)
-        |SELECT user_id, last_ms, n_events, mx - last_ms AS silent_ms
-        |FROM u, m WHERE mx - last_ms >= 86400000""".stripMargin,
-
-    "dedup_rate_by_source" ->
-      """WITH f AS (SELECT source, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp FROM documents),
-        |tot AS (SELECT fp, count(*) AS tot FROM f GROUP BY 1)
-        |SELECT f.source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN tot.tot > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
-        |  round(sum(CASE WHEN tot.tot > 1 THEN 1 ELSE 0 END) / count(*), 6) AS dup_rate
-        |FROM f JOIN tot ON f.fp = tot.fp GROUP BY 1""".stripMargin,
-
-    // Exact integer moments per (type, hour-of-day): the n·Σx²−(Σx)²
-    // variance identity over count sums, then the identical double
-    // arithmetic for mean and z.
-    "events_seasonal_anomaly" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST(epoch_ms(ts) AS BIGINT) // 86400000 AS day,
-        |    (CAST(epoch_ms(ts) AS BIGINT) // 3600000) % 24 AS hour
-        |  FROM events),
-        |c AS (SELECT event_type, day, hour, count(*) AS n FROM e GROUP BY 1, 2, 3),
-        |b AS (SELECT event_type, hour, count(*) AS n_days, sum(n) AS s1, sum(n*n) AS s2
-        |  FROM c GROUP BY 1, 2),
-        |j AS (SELECT c.event_type, c.day, c.hour, c.n, b.n_days,
-        |    CAST(b.s1 AS DOUBLE) / b.n_days AS mean,
-        |    CAST(b.n_days * b.s2 - b.s1 * b.s1 AS DOUBLE) / (b.n_days * (b.n_days - 1)) AS var
-        |  FROM c JOIN b ON c.event_type = b.event_type AND c.hour = b.hour)
-        |SELECT event_type, day, hour, n, n_days,
-        |  round(mean, 6) AS hour_mean,
-        |  round((n - mean) / sqrt(var), 6) AS z
-        |FROM j WHERE n_days >= 2 AND var > 0 AND abs((n - mean) / sqrt(var)) >= 2.0""".stripMargin,
-
-    // One conditional-aggregation pass mirroring the Spark side: value
-    // sums DECIMAL(27,12)-routed (squares in double first), then the same
-    // double-arithmetic chain for mean, variance, t, and Welch df.
-    "events_ab_lift" ->
-      """WITH m AS (SELECT
-        |    count(*) FILTER (event_type = 'purchase') AS n_a,
-        |    sum(CAST(value AS DECIMAL(27,12))) FILTER (event_type = 'purchase') AS s1_a,
-        |    sum(CAST(value * value AS DECIMAL(27,12))) FILTER (event_type = 'purchase') AS s2_a,
-        |    count(*) FILTER (event_type = 'view') AS n_b,
-        |    sum(CAST(value AS DECIMAL(27,12))) FILTER (event_type = 'view') AS s1_b,
-        |    sum(CAST(value * value AS DECIMAL(27,12))) FILTER (event_type = 'view') AS s2_b
-        |  FROM events WHERE event_type IN ('purchase', 'view')),
-        |d AS (SELECT n_a, n_b,
-        |    CAST(s1_a AS DOUBLE) / n_a AS ma, CAST(s1_b AS DOUBLE) / n_b AS mb,
-        |    (CAST(s2_a AS DOUBLE) - n_a * (CAST(s1_a AS DOUBLE) / n_a) * (CAST(s1_a AS DOUBLE) / n_a)) / (n_a - 1) AS va,
-        |    (CAST(s2_b AS DOUBLE) - n_b * (CAST(s1_b AS DOUBLE) / n_b) * (CAST(s1_b AS DOUBLE) / n_b)) / (n_b - 1) AS vb
-        |  FROM m),
-        |s AS (SELECT n_a, n_b, ma, mb, va / n_a AS sa, vb / n_b AS sb FROM d)
-        |SELECT n_a, n_b, round(ma, 6) AS mean_a, round(mb, 6) AS mean_b,
-        |  round(ma - mb, 6) AS mean_lift,
-        |  round((ma - mb) / sqrt(sa + sb), 6) AS t_stat,
-        |  round(((sa + sb) * (sa + sb)) / (sa * sa / (n_a - 1) + sb * sb / (n_b - 1)), 6) AS welch_df
-        |FROM s""".stripMargin,
-
-    "dedup_threshold_sweep" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(len(toks)-3, 0)), i -> array_to_string(toks[i+1:i+3], ' '))) AS sh FROM t),
-        |sig AS (SELECT doc_id, sh, list_transform(generate_series(0, 15), k -> list_min(list_transform(sh, x -> (('0x'||substr(md5(x),1,7))::UBIGINT)::BIGINT + k * (('0x'||substr(md5(x),8,7))::UBIGINT)::BIGINT))) AS sig FROM sh),
-        |bands AS (SELECT doc_id, j, md5(j::VARCHAR||':'||array_to_string(sig[j*2+1:j*2+2], ',')) AS key FROM sig, range(8) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id FROM bands a JOIN bands b ON a.j=b.j AND a.key=b.key AND a.doc_id<b.doc_id),
-        |p AS (SELECT len(list_intersect(sa.sh, sb.sh)) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) AS jaccard
-        |  FROM cand c JOIN sh sa ON c.a_id = sa.doc_id JOIN sh sb ON c.b_id = sb.doc_id),
-        |th AS (SELECT unnest([0.5, 0.6, 0.7, 0.8, 0.9]) AS threshold)
-        |SELECT th.threshold, CAST(COALESCE(SUM(CASE WHEN p.jaccard >= th.threshold THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_pairs
-        |FROM th LEFT JOIN p ON true GROUP BY 1""".stripMargin,
-
-    "text_dup_spans" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (SELECT doc_id, unnest(list_transform(generate_series(0, len(toks)-8), i -> array_to_string(toks[i+1:i+8], ' '))) AS g FROM t),
-        |pd AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-        |tot AS (SELECT g, sum(c) AS tot FROM pd GROUP BY 1),
-        |s AS (SELECT pd.doc_id, sum(c) AS n_spans,
-        |    sum(CASE WHEN tot > c THEN c ELSE 0 END) AS n_dup
-        |  FROM pd JOIN tot USING (g) GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(s.n_spans, 0) AS BIGINT) AS n_spans,
-        |  CAST(coalesce(s.n_dup, 0) AS BIGINT) AS n_dup_spans,
-        |  round(CASE WHEN coalesce(s.n_spans, 0) = 0 THEN 0.0
-        |        ELSE s.n_dup / s.n_spans END, 6) AS dup_span_frac
-        |FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin,
-
-    "docs_mix_chi2" ->
-      """WITH c AS (SELECT lang AS a, source AS b, count(*) AS n FROM documents GROUP BY 1, 2),
-        |at AS (SELECT a, sum(n) AS na FROM c GROUP BY 1),
-        |bt AS (SELECT b, sum(n) AS nb FROM c GROUP BY 1),
-        |t AS (SELECT sum(n) AS nn FROM c)
-        |SELECT c.a AS lang, c.b AS source, c.n,
-        |  round(at.na * bt.nb / CAST(t.nn AS DOUBLE), 6) AS expected,
-        |  round((c.n - at.na * bt.nb / CAST(t.nn AS DOUBLE)) * (c.n - at.na * bt.nb / CAST(t.nn AS DOUBLE)) / (at.na * bt.nb / CAST(t.nn AS DOUBLE)), 6) AS chi2
-        |FROM c JOIN at USING (a) JOIN bt USING (b) CROSS JOIN t""".stripMargin,
-
-    "text_readability" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS n_words,
-        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS INTEGER) AS n_sentences,
-        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS INTEGER) AS n_syllables,
-        |  round(206.835
-        |    - 1.015 * (len(string_split_regex(trim(text), '\s+')) / greatest(len(regexp_extract_all(text, '[.!?]+')), 1))
-        |    - 84.6 * (len(regexp_extract_all(lower(text), '[aeiouy]+')) / len(string_split_regex(trim(text), '\s+'))), 6) AS flesch
-        |FROM documents""".stripMargin,
-
-    // The dup-spans CTE with min(doc_id) gram ownership instead of
-    // recurrence totals.
-    "text_novelty" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |g AS (SELECT doc_id, unnest(list_transform(generate_series(0, len(toks)-8), i -> array_to_string(toks[i+1:i+8], ' '))) AS g FROM t),
-        |pd AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-        |own AS (SELECT g, min(doc_id) AS first_id FROM pd GROUP BY 1),
-        |s AS (SELECT pd.doc_id, sum(c) AS n_spans,
-        |    sum(CASE WHEN own.first_id = pd.doc_id THEN c ELSE 0 END) AS n_novel
-        |  FROM pd JOIN own USING (g) GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(s.n_spans, 0) AS BIGINT) AS n_spans,
-        |  CAST(coalesce(s.n_novel, 0) AS BIGINT) AS n_novel_spans,
-        |  round(CASE WHEN coalesce(s.n_spans, 0) = 0 THEN 0.0
-        |        ELSE s.n_novel / s.n_spans END, 6) AS novelty_frac
-        |FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id""".stripMargin,
-
-    "docs_shard_manifest" ->
-      """WITH p AS (SELECT (('0x'||substr(md5(doc_id::VARCHAR),1,7))::UBIGINT)::BIGINT % 8 AS shard,
-        |    len(string_split_regex(trim(text), '\s+')) AS nt
-        |  FROM documents),
-        |s AS (SELECT shard, count(*) AS n_docs, sum(nt) AS n_tokens FROM p GROUP BY 1),
-        |t AS (SELECT sum(n_docs) AS total_docs FROM s)
-        |SELECT shard, n_docs, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  round(n_docs / t.total_docs, 6) AS doc_share
-        |FROM s, t""".stripMargin,
-
-    "text_cms_gate" ->
-      """WITH t AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
-        |c AS (SELECT term, count(*) AS n_true FROM t GROUP BY 1),
-        |jb AS (SELECT term, n_true, j,
-        |    CAST((('0x' || substr(md5(j::VARCHAR || ':' || term), 1, 15))::UBIGINT % 256) AS BIGINT) AS b
-        |  FROM c, range(4) r(j)),
-        |cells AS (SELECT j, b, sum(n_true) AS cell FROM jb GROUP BY 1, 2),
-        |e AS (SELECT jb.term, max(jb.n_true) AS n_true, min(cells.cell) AS n_cms
-        |  FROM jb JOIN cells ON jb.j = cells.j AND jb.b = cells.b GROUP BY 1)
-        |SELECT term, CAST(n_true AS BIGINT) AS n_true, CAST(n_cms AS BIGINT) AS n_cms,
-        |  CAST(n_cms - n_true AS BIGINT) AS overest, n_cms >= n_true AS ok_ge
-        |FROM e ORDER BY n_true DESC, term ASC LIMIT 20""".stripMargin,
-
-    "text_heavy_hitters" ->
-      """WITH t AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS token FROM documents),
-        |c AS (SELECT token, count(*) AS cnt FROM t GROUP BY 1),
-        |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c)
-        |SELECT token, cnt, true AS in_sketch FROM c, tot
-        |WHERE cnt > total * 0.034""".stripMargin,
-
-    "docs_corpus_summary" ->
-      """WITH t AS (SELECT lang, n_chars,
-        |    len(string_split_regex(trim(text), '\s+')) AS nt FROM documents)
-        |SELECT count(*) AS n_docs,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  round(CAST(sum(nt) AS BIGINT) / count(*), 6) AS mean_tokens,
-        |  quantile_cont(nt, 0.5) AS p50_tokens,
-        |  count(DISTINCT lang) AS n_langs,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM t""".stripMargin,
-
-    "docs_topk_by_lang" ->
-      """WITH t AS (SELECT doc_id, lang, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |q AS (SELECT doc_id, lang,
-        |  round(least(len(toks) / 100.0, 1.0) * 0.4
-        |    + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3
-        |    + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3, 6) AS quality
-        |  FROM t),
-        |r AS (SELECT doc_id, lang, quality,
-        |  row_number() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id) AS rk FROM q)
-        |SELECT doc_id, lang, quality, CAST(rk AS INTEGER) AS "rank" FROM r WHERE rk <= 5""".stripMargin,
-
-    "events_zorder" ->
-      """WITH e AS (SELECT event_id,
-        |    user_id & 1023 AS a,
-        |    coalesce(CAST(floor(value) AS BIGINT), 0) & 1023 AS b
-        |  FROM events)
-        |SELECT event_id, CAST(list_sum(list_transform(generate_series(0, 9), i ->
-        |  (((a >> i) & 1) << (2*i)) + (((b >> i) & 1) << (2*i+1)))) AS BIGINT) AS z
-        |FROM e""".stripMargin,
-
-    "events_bt_rank" -> btRankOracleSql,
-
-    "events_rater_alpha" ->
-      """WITH cnt AS (SELECT event_id % 400 AS u, event_type AS c, count(*) AS nuc
-        |  FROM events GROUP BY 1, 2),
-        |wn AS (SELECT u, c, nuc, sum(nuc) OVER (PARTITION BY u) AS nu FROM cnt),
-        |pairable AS (SELECT * FROM wn WHERE nu >= 2),
-        |stats AS (SELECT count(DISTINCT u) AS n_units, CAST(sum(nuc) AS BIGINT) AS nn,
-        |    sum(CAST((nuc * (nu - nuc)) / (nu - 1) AS DECIMAL(27,12))) AS so_d FROM pairable),
-        |pc AS (SELECT c, sum(nuc) AS p_c FROM pairable GROUP BY 1),
-        |se AS (SELECT sum(CAST(CAST(p_c AS DOUBLE) * CAST(s.nn - p_c AS DOUBLE) AS DECIMAL(27,12))) AS se_d
-        |  FROM pc, stats s)
-        |SELECT s.n_units, s.nn AS n_ratings,
-        |  round(CAST(so_d AS DOUBLE) / s.nn, 6) AS d_obs,
-        |  round(CAST(se_d AS DOUBLE) / (s.nn * (s.nn - 1)), 6) AS d_exp,
-        |  round(1.0::DOUBLE - (s.nn - 1) * CAST(so_d AS DOUBLE) / CAST(se_d AS DOUBLE), 6) AS alpha
-        |FROM stats s, se""".stripMargin,
-
-    "events_passk" ->
-      s"""WITH b AS (SELECT event_id % 50 AS task_id, count(*) AS n,
-        |    CAST(sum(CASE WHEN value >= 35.0 THEN 1 ELSE 0 END) AS BIGINT) AS c
-        |  FROM events GROUP BY 1)
-        |SELECT task_id, n, c,
-        |  CASE WHEN n < 1 THEN NULL WHEN n - c < 1 THEN 1.0::DOUBLE
-        |    ELSE round(1.0::DOUBLE - ${passkProdSql(1)}, 6) END AS pass1,
-        |  CASE WHEN n < 5 THEN NULL WHEN n - c < 5 THEN 1.0::DOUBLE
-        |    ELSE round(1.0::DOUBLE - ${passkProdSql(5)}, 6) END AS pass5,
-        |  CASE WHEN n < 10 THEN NULL WHEN n - c < 10 THEN 1.0::DOUBLE
-        |    ELSE round(1.0::DOUBLE - ${passkProdSql(10)}, 6) END AS pass10
-        |FROM b""".stripMargin,
-
-    "sim_label_prop" -> labelPropOracleSql,
-
-    "docs_conformal_gate" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |q AS (SELECT doc_id,
-        |  least(len(toks) / 100.0, 1.0) * 0.4
-        |    + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3
-        |    + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q,
-        |  doc_id % 5 = 0 AS is_cal FROM t),
-        |nc AS (SELECT count(*) AS n_cal FROM q WHERE is_cal),
-        |kq AS (SELECT n_cal, greatest(1, CAST(floor(0.1::DOUBLE * (n_cal + 1)) AS BIGINT)) AS k FROM nc),
-        |tau AS (SELECT kq.n_cal, kq.k, s.q AS tau FROM
-        |  (SELECT q, row_number() OVER (ORDER BY q ASC, doc_id ASC) AS rn FROM q WHERE is_cal) s, kq
-        |  WHERE s.rn = kq.k),
-        |agg AS (SELECT t2.n_cal, t2.k, t2.tau, count(*) AS n_test,
-        |    CAST(sum(CASE WHEN q.q >= t2.tau THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-        |  FROM q, tau t2 WHERE NOT q.is_cal GROUP BY 1, 2, 3)
-        |SELECT n_cal, k, round(tau, 6) AS tau, n_test, n_pass,
-        |  round(CAST(n_pass AS DOUBLE) / n_test, 6) AS coverage
-        |FROM agg""".stripMargin,
-
-    "text_ndcg" -> {
-      val gainOf = (g: String) =>
-        s"(CASE $g WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 3 WHEN 3 THEN 7 END)"
-      val logC = (x: String) => s"CAST(CAST(log2($x) AS DECIMAL(27,12)) AS DOUBLE)"
-      s"""WITH q(query_id, term) AS (VALUES $invidxQueries3),
-        |t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-        |l AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM t),
-        |st AS (SELECT count(*) AS n_docs, sum(dl) AS total_dl FROM l),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM
-        |  (SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (SELECT term FROM q) GROUP BY 1, 2),
-        |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-        |sc AS (SELECT q.query_id, tf.doc_id, $invidxScoreSql
-        |  FROM q JOIN tf ON q.term = tf.term JOIN dfq ON tf.term = dfq.term
-        |  JOIN l ON tf.doc_id = l.doc_id, st),
-        |ag AS (SELECT query_id, doc_id, sum(CAST(s AS DECIMAL(27,12))) AS sd FROM sc GROUP BY 1, 2),
-        |r AS (SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id ORDER BY sd DESC, doc_id) AS rk FROM ag),
-        |rel AS (SELECT q.query_id, d.doc_id, least(3, count(*)) AS grade
-        |  FROM (SELECT doc_id, unnest(toks) AS term FROM t) d JOIN q ON q.term = d.term
-        |  GROUP BY 1, 2),
-        |dcg AS (SELECT r.query_id, sum(CAST(CAST(${gainOf("coalesce(rel.grade, 0)")} AS DOUBLE) / ${logC("r.rk + 1")} AS DECIMAL(27,12))) AS dcg_d
-        |  FROM r LEFT JOIN rel ON rel.query_id = r.query_id AND rel.doc_id = r.doc_id
-        |  WHERE r.rk <= 10 GROUP BY 1),
-        |ir AS (SELECT query_id, grade, row_number() OVER (PARTITION BY query_id ORDER BY grade DESC, doc_id ASC) AS rn FROM rel),
-        |idcg AS (SELECT query_id, sum(CAST(CAST(${gainOf("grade")} AS DOUBLE) / ${logC("rn + 1")} AS DECIMAL(27,12))) AS idcg_d
-        |  FROM ir WHERE rn <= 10 GROUP BY 1),
-        |qs AS (SELECT DISTINCT query_id FROM q)
-        |SELECT CAST(qs.query_id AS BIGINT) AS query_id,
-        |  round(coalesce(CAST(dcg_d AS DOUBLE), 0.0::DOUBLE), 6) AS dcg,
-        |  round(coalesce(CAST(idcg_d AS DOUBLE), 0.0::DOUBLE), 6) AS idcg,
-        |  round(CASE WHEN coalesce(idcg_d, 0) = 0 THEN 0.0::DOUBLE
-        |    ELSE CAST(dcg_d AS DOUBLE) / CAST(idcg_d AS DOUBLE) END, 6) AS ndcg
-        |FROM qs LEFT JOIN dcg ON dcg.query_id = qs.query_id
-        |LEFT JOIN idcg ON idcg.query_id = qs.query_id""".stripMargin
-    },
-
-    "docs_quality_ece" ->
-      """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |qq AS (SELECT
-        |  least(len(toks) / 100.0, 1.0) * 0.4 + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3 + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q,
-        |  md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
-        |  FROM t),
-        |tot AS (SELECT fp, count(*) AS tot FROM qq GROUP BY 1),
-        |bn AS (SELECT CAST(least(9, CAST(floor(q * 10) AS BIGINT)) AS INTEGER) AS bin, q, (tot.tot = 1) AS uniq
-        |  FROM qq JOIN tot USING (fp)),
-        |ag AS (SELECT bin, count(*) AS n_docs, sum(CAST(q AS DECIMAL(27,12))) AS sq,
-        |    CAST(sum(CASE WHEN uniq THEN 1 ELSE 0 END) AS BIGINT) AS su FROM bn GROUP BY 1),
-        |wg AS (SELECT bin, n_docs, sq, su, sum(n_docs) OVER () AS ntot FROM ag),
-        |tm AS (SELECT bin, n_docs, sq, su, ntot,
-        |    CAST((CAST(n_docs AS DOUBLE) / ntot) * abs(CAST(su AS DOUBLE) / n_docs - CAST(sq AS DOUBLE) / n_docs) AS DECIMAL(27,12)) AS term FROM wg)
-        |SELECT bin, n_docs, round(CAST(sq AS DOUBLE) / n_docs, 6) AS avg_conf,
-        |  round(CAST(su AS DOUBLE) / n_docs, 6) AS uniq_rate,
-        |  round(CAST(sum(term) OVER () AS DOUBLE), 6) AS ece
-        |FROM tm""".stripMargin,
-
-    // The maintained partial-count log re-aggregates to the batch
-    // matrix exactly (integer addition), so the oracle is the full MM
-    // replay over the bounded feed.
-    "stream_pref_rank" -> btRankOracleSqlFor(" WHERE event_id < 2000")
-  )
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = declared.map(q => q.name -> q.oracleSql).toMap
 }

@@ -12,11 +12,27 @@ class SparkEntrySpec extends AnyFlatSpec with Matchers {
 
   behavior of "SparkEntry"
 
-  it should "provide an oracle for every query (and no orphan oracles)" in {
-    // The driver records a weaker rows-only check for queries without an
-    // oracle; keeping the sets equal means every operator stays on the
-    // strong hash-match gate. An oracle without a query is dead SQL.
-    SparkEntry.queries.keySet shouldBe SparkEntry.oracleSql.keySet
+  it should "declare 355 distinct queries, each with a non-blank oracle" in {
+    // A Query carries its oracle, so every operator stays on the strong
+    // hash-match gate by construction; what can still go wrong is a
+    // repeated name (a map keeps only the last) or an empty oracle.
+    SparkEntry.queries.size shouldBe 355
+    SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n } shouldBe empty
+  }
+
+  it should "refuse a query name declared twice, naming it" in {
+    val qs = Seq("a", "b", "a").map(n => graft.entry.Query(n, (s, _) => s.emptyDataFrame, "SELECT 1"))
+    val e = the[IllegalArgumentException] thrownBy SparkEntry.distinctNames(qs)
+    e.getMessage should include ("query names declared twice: a")
+    SparkEntry.distinctNames(qs.take(2)) shouldBe qs.take(2)
+  }
+
+  it should "release the sim_ivf_autotune truth cache once the arms are counted" in {
+    // The query returns a driver-side literal, so nothing it persisted may
+    // outlive it in the session.
+    spark.catalog.clearCache()
+    SparkEntry.queries("sim_ivf_autotune")(spark, sf).collect().length shouldBe 1
+    spark.sharedState.cacheManager.isEmpty shouldBe true
   }
 
   it should "smoke the flagship entry on sf0.001" in {
