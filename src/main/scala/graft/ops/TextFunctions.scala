@@ -146,9 +146,6 @@ object TextFunctions {
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
 
-  def upperCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[A-Z]", ""))
-
   def stopwordCount(toks: Column): Column = markerCount(toks, stopwords)
 
   /** Composite quality score in [0,1]: length saturation + low punctuation +

@@ -3,10 +3,10 @@ package graft.plug
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{DataFrame, GraftPlanAccess, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** A pass-through plan node that ends one whole-stage-codegen region.
   *
@@ -54,9 +54,10 @@ object CodegenBoundary {
     }
   }
 
-  /** `df` with a codegen boundary on top. */
-  def over(df: DataFrame): DataFrame = {
-    setup(df.sparkSession)
-    GraftPlanAccess.ofRows(df.sparkSession, CodegenBoundary(df.queryExecution.analyzed))
-  }
 }
+
+/** The columns a run of rules is resolved against. The rule fold analyzes
+  * every rule of a run in one `Project` over this leaf, then stacks the
+  * resolved projections over the real plan, so the leaf never reaches the
+  * optimizer or the planner. */
+private[plug] case class ChainInput(output: Seq[Attribute]) extends LeafNode

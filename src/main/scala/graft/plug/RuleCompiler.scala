@@ -11,8 +11,8 @@ import scala.util.{Success, Try}
   * Where the reference generates SQL text against a temp view
   * (reference: src/main/scala/sparkplug/models/PlugRule.scala:49-124,
   * src/main/scala/sparkplug/SparkPlug.scala:98-107), we compile each rule to
-  * a single set of column updates applied with one `withColumns` call — no
-  * temp-view mutation, no SQL string splicing. The audit trail costs one
+  * a single set of column updates applied as one projection — no temp-view
+  * mutation, no SQL string splicing. The audit trail costs one
   * bitwise OR per rule on a `Long` fired-rule mask; [[SparkPlug]] turns the
   * masks into the audit array once, after the last rule.
   */
@@ -41,15 +41,16 @@ object RuleCompiler {
     }
 
   /** One compiled rule: every (top-level) column it rewrites, the old-value
-    * copies (if keepOldField), and `fired` — true where the rule matched AND
-    * changed something, the gate behind the audit trail and the per-rule
-    * change counts. Applied as `df.withColumns(allUpdates)`. */
+    * copies (if keepOldField) as copy name -> copied column, and `fired` —
+    * true where the rule matched AND changed something, the gate behind the
+    * audit trail and the per-rule change counts. Applied as one projection
+    * of `allUpdates`. */
   case class Compiled(
       updates: Seq[(String, Column)],
-      oldCopies: Seq[(String, Column)],
+      oldCopies: Seq[(String, String)],
       fired: Column
   ) {
-    def allUpdates: Map[String, Column] = (oldCopies ++ updates).toMap
+    def allUpdates: Map[String, Column] = (oldCopies.map { case (n, k) => n -> col(k) } ++ updates).toMap
   }
 
   def compile(rule: PlugRule, schema: StructType, keepOldField: Boolean): Compiled = {
@@ -178,9 +179,9 @@ object RuleCompiler {
     // (README.md:186-194). The reference keeps the whole top-level column
     // (its rename targets updateKey, PlugRule.scala:83); we do the same and
     // fix its struct-action leak by always naming by updateKey.
-    val oldCopies: Seq[(String, Column)] =
+    val oldCopies: Seq[(String, String)] =
       if (!keepOldField) Seq.empty
-      else converted.map(_._1.updateKey).distinct.map(k => s"${k}_${rule.name}_old" -> col(k))
+      else converted.map(_._1.updateKey).distinct.map(k => s"${k}_${rule.name}_old" -> k)
 
     Compiled(updates, oldCopies, cond && anyChanged)
   }

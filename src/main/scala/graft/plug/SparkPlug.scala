@@ -2,14 +2,16 @@ package graft.plug
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.Alias
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression, NamedExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.optimizer.CollapseProject
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, GraftPlanAccess, Row, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StructField, StructType}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftPlanAccess, Row, SparkSession}
 
-import scala.util.Try
+import scala.util.{Success, Try}
 
 /** Plug-details config: audit array column name + record appender. */
 case class SparkPlugDetails(column: String, appender: AuditAppender)
@@ -28,12 +30,13 @@ case class SparkPlugCheckpointDetails(checkpointDir: Option[String], rulesPerSta
   *
   * Same public surface as the reference engine (reference:
   * src/main/scala/sparkplug/SparkPlug.scala) — builder, `plug`, `validate` —
-  * but each rule compiles to `Column` expressions applied as ONE `withColumns`
-  * projection: no temp views, no SQL string concatenation, no UDFs, stable
-  * column order. All entry points share one rule fold ([[foldRules]]): the
-  * audit trail is a fired-rule bit per rule, assembled into the audit array
-  * once after the chain, and a [[CodegenBoundary]] ends each whole-stage
-  * codegen region before its generated method outgrows the JIT limit.
+  * but each rule compiles to `Column` expressions applied as ONE projection:
+  * no temp views, no SQL string concatenation, no UDFs, stable column order.
+  * All entry points share one rule fold ([[foldRules]]), which resolves the
+  * rules with one analysis per chain, not one per rule: the audit trail is a
+  * fired-rule bit per rule, assembled into the audit array once after the
+  * chain, and a [[CodegenBoundary]] ends each whole-stage codegen region
+  * before its generated method outgrows the JIT limit.
   *
   * Scale posture (100 TB): rules are compiled into the plan as literals —
   * there is no data-side rule join and nothing to broadcast (the reference's
@@ -69,7 +72,8 @@ case class SparkPlug(
   /** Validate (if enabled) then fold the rules over the input frame.
     * (reference: SparkPlug.scala:29-40) */
   def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] =
-    validated(in, rules)(withAuditTrail(rules)(foldRules(in, rules)(applyRule(_, _, _))))
+    SparkPlug.onDeepStack(validated(in, rules)(withAuditTrail(rules)(foldRules(in, rules)(
+      (rule, i, schema) => Seq(ruleUpdate(rule, i, schema))))))
 
   private def validated(in: DataFrame, rules: List[PlugRule])(
       plugged: => DataFrame): Either[List[PlugRuleValidationError], DataFrame] = {
@@ -89,31 +93,189 @@ case class SparkPlug(
       .map(r => PlugRuleValidationError(r, "Only one version per rule should be applied."))
       .toList
     val static = rules.flatMap(_.validate(schema))
-    duplicates ++ (if (static.nonEmpty) static else rules.flatMap(r => validateRuleSql(schema, r)))
+    duplicates ++ (if (static.nonEmpty) static else validateRuleSql(schema, rules))
   }
 
-  /** Dry-run a rule against an empty frame of the schema; analysis errors
+  /** Dry-runs every rule against one empty frame of the schema, each rule
+    * checked against the input as in the reference (SparkPlug.scala:78-86):
+    * one analysis of all the rules' columns, no job. Only when it fails does
+    * each rule run alone, to name the failing ones; their analysis errors
     * (bad function names, unresolved columns in conditions) surface as
-    * "[SQL Error] ..." (reference: SparkPlug.scala:78-86). Dataset creation
-    * analyzes eagerly, so no job runs. */
-  private def validateRuleSql(schema: StructType, rule: PlugRule): List[PlugRuleValidationError] =
-    Try(applyRule(preProcessInput(emptyDf(schema), 1), rule, 0)).failed
-      .map(t => List(PlugRuleValidationError(rule.name, s"[SQL Error] ${t.getMessage}")))
-      .getOrElse(Nil)
-
-  private def emptyDf(schema: StructType) =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    * "[SQL Error] ...". */
+  private def validateRuleSql(schema: StructType, rules: List[PlugRule]): List[PlugRuleValidationError] = {
+    val empty = preProcessInput(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), 1)
+    val allAtOnce = Try(empty.select(rules.flatMap(r => ruleUpdate(r, 0, empty.schema).cols.values)
+      .zipWithIndex.map { case (c, k) => c.as(s"__graft_$k") }: _*))
+    if (allAtOnce.isSuccess) Nil
+    else rules.flatMap(r => Try(applyAlone(empty, Seq(ruleUpdate(r, 0, empty.schema)))).failed.toOption
+      .map(t => PlugRuleValidationError(r.name, s"[SQL Error] ${t.getMessage}")))
+  }
 
   /** The rule fold shared by every entry point. Seeds the audit column and
-    * the fired-rule masks, then per rule: ends the codegen region if it is
-    * full, applies `step`, and stages a repartition or checkpoint on the
-    * configured cadence. The result still carries the masks. */
-  private def foldRules(in: DataFrame, rules: List[PlugRule])(
-      step: (DataFrame, PlugRule, Int) => DataFrame): DataFrame =
-    rules.zipWithIndex.foldLeft(preProcessInput(in, rules.size)) {
-      case (df, (rule, ruleNumber)) =>
-        repartitionAndCheckpoint(step(SparkPlug.endRegionIfFull(df), rule, ruleNumber), ruleNumber)
+    * the fired-rule masks, then stacks each rule's `step` (compiled against
+    * the frame as the rule finds it) as `Project`s over the input plan,
+    * ends a codegen region before a rule when it is full, and stages a
+    * repartition or checkpoint on the configured cadence. The rules up to
+    * the next staging point are resolved together ([[resolveRun]]). A
+    * `Project` merges into the fold's `Project` below it where the
+    * optimizer's `CollapseProject` would merge the two, so a caller that
+    * re-analyzes the result walks no deeper a plan than the optimizer
+    * leaves. One analysis of the stacked plan makes the result, which still
+    * carries the masks. */
+  private def foldRules(in: DataFrame, rules: List[PlugRule])(step: SparkPlug.Step): DataFrame = {
+    val ruleAt = rules.toIndexedSeq
+    var plan = preProcessInput(in, rules.size).queryExecution.analyzed
+    var cost = SparkPlug.regionCost(plan)
+    // the plan the fold's own stacked Projects sit on; they merge down to it
+    var base = plan
+    val alwaysInline = spark.sessionState.conf.getConf(SQLConf.COLLAPSE_PROJECT_ALWAYS_INLINE)
+    var i = 0
+    def endRegionIfFull(): Unit = if (cost > SparkPlug.regionBudget) {
+      CodegenBoundary.setup(spark)
+      plan = CodegenBoundary(plan)
+      base = plan
+      cost = 0
     }
+    def stage(): Unit = {
+      staged(plan, i).foreach { p => plan = p; base = p; cost = 0 }
+      i += 1
+    }
+    while (i < ruleAt.size) {
+      val stageEnd = checkpointDetails.fold(ruleAt.size)(cd =>
+        math.min(ruleAt.size, (i / cd.rulesPerStage + 1) * cd.rulesPerStage))
+      val run = resolveRun(plan.output, ruleAt, i, stageEnd, step)
+      if (run.isEmpty) {
+        // a rule no run can place resolves alone against the real frame,
+        // as a Dataset call does, and fails the same way
+        endRegionIfFull()
+        val before = plan
+        val df = GraftPlanAccess.ofRows(spark, plan)
+        plan = applyAlone(df, step(ruleAt(i), i, df.schema)).queryExecution.analyzed
+        cost = SparkPlug.regionCost(plan, Some(before -> cost))
+        base = plan
+        stage()
+      }
+      run.foreach { projections =>
+        endRegionIfFull()
+        projections.foreach { list =>
+          plan = plan match {
+            case lower: Project if (lower ne base) &&
+                CollapseProject.canCollapseExpressions(list, lower.projectList, alwaysInline) =>
+              lower.copy(projectList = CollapseProject.buildCleanedProjectList(list, lower.projectList))
+            case _ => Project(list, plan)
+          }
+          cost += SparkPlug.listCost(list)
+        }
+        stage()
+      }
+    }
+    GraftPlanAccess.ofRows(spark, plan)
+  }
+
+  /** Resolves rules `from until until` over a plan with columns `output` in
+    * one analysis and returns the projections of each rule it places, in
+    * order. Each rule is compiled against the columns the earlier ones
+    * leave (a column a step adds is typed as the column it copies, or as a
+    * boolean flag), and every column of every rule goes, under a unique
+    * alias, into one `Project` over a [[ChainInput]] leaf of `output` and
+    * the added columns. A run that does not analyze to one plain `Project`
+    * (a window function or a generator in an action, a subquery, an
+    * analysis error) is halved; a lone rule that still does not is left to
+    * resolve alone (an empty result), as is a first rule that fails
+    * [[placeRun]]'s checks. */
+  private def resolveRun(output: Seq[Attribute], rules: IndexedSeq[PlugRule], from: Int, until: Int,
+      step: SparkPlug.Step): Seq[Seq[Seq[NamedExpression]]] = {
+    val resolver = spark.sessionState.conf.resolver
+    var columns = output
+    var added = Vector.empty[Attribute]
+    val steps = (from until until).map { i =>
+      val ops = step(rules(i), i, StructType(columns.map(a => StructField(a.name, a.dataType))))
+      ops.foreach {
+        case SparkPlug.Put(cols, copies) =>
+          for (n <- cols.keys if !columns.exists(a => resolver(a.name, n))) {
+            val a = added.find(a => resolver(a.name, n)).getOrElse {
+              val copied = copies.get(n).flatMap(c => columns.find(a => resolver(a.name, c)))
+              val fresh = AttributeReference(n, copied.fold[DataType](BooleanType)(_.dataType))()
+              added :+= fresh
+              fresh
+            }
+            columns :+= a
+          }
+        case SparkPlug.Drop(c) => columns = columns.filterNot(a => resolver(a.name, c))
+      }
+      ops
+    }
+    val leaf = ChainInput(output ++ added)
+    val entries = steps.flatten.flatMap {
+      case SparkPlug.Put(cols, _) => cols.values
+      case _ => Nil
+    }
+    Try(GraftPlanAccess.ofRows(spark, leaf)
+      .select(entries.zipWithIndex.map { case (c, k) => c.as(s"__graft_$k") }: _*)
+      .queryExecution.analyzed) match {
+      case Success(Project(list, `leaf`)) if !list.exists(_.exists(_.isInstanceOf[SubqueryExpression])) =>
+        placeRun(output, leaf, steps, list.collect { case a: Alias => a.child })
+      case _ if until - from > 1 => resolveRun(output, rules, from, from + (until - from) / 2, step)
+      case _ => Nil
+    }
+  }
+
+  /** Turns a run's resolved columns (`resolved`, in step order, over
+    * `leaf`) into each rule's projections over a plan with columns
+    * `output`, shaped as `withColumns` and `drop` shape them: a reference to
+    * a leaf column is rebound to the latest attribute of that column. Stops
+    * before a rule that reads a column not there yet (it resolved only
+    * because the leaf holds every column of the run), and after a rule that
+    * changes a column's type, since the later rules were resolved against
+    * the old one. A column's type only widens (a `CASE` over the old value
+    * keeps its shape), so the earlier compile of the later rules cannot
+    * have failed on it. */
+  private def placeRun(output: Seq[Attribute], leaf: ChainInput, steps: Seq[Seq[SparkPlug.Op]],
+      resolved: Seq[Expression]): Seq[Seq[Seq[NamedExpression]]] = {
+    val resolver = spark.sessionState.conf.resolver
+    def named(attrs: Seq[Attribute], name: String) = attrs.filter(a => resolver(a.name, name))
+    var binding: Map[ExprId, Attribute] = output.map(a => a.exprId -> a).toMap
+    var columns = output
+    var next = resolved
+    val placed = Vector.newBuilder[Seq[Seq[NamedExpression]]]
+    var open = true
+    for (ops <- steps.iterator if open) {
+      var (bind, cols, fits, retyped) = (binding, columns, true, false)
+      val projections = ops.flatMap {
+        case SparkPlug.Put(puts, _) =>
+          val (mine, rest) = next.splitAt(puts.size)
+          next = rest
+          val outs = puts.keys.toSeq.zip(mine).map { case (n, e) =>
+            fits &&= e.references.forall(r => bind.contains(r.exprId))
+            retyped ||= named(leaf.output, n).exists(_.dataType != e.dataType)
+            Alias(e.transform { case r: AttributeReference => bind.getOrElse(r.exprId, r) }, n)()
+          }
+          outs.foreach(o => bind ++= named(leaf.output, o.name).map(_.exprId -> o.toAttribute))
+          val list: Seq[NamedExpression] =
+            cols.map(c => outs.find(o => resolver(c.name, o.name)).getOrElse(c)) ++
+              outs.filter(o => named(cols, o.name).isEmpty)
+          cols = list.map(_.toAttribute)
+          Some(list)
+        case SparkPlug.Drop(c) =>
+          bind --= named(leaf.output, c).map(_.exprId)
+          val list = cols.filterNot(a => resolver(a.name, c))
+          if (list.size == cols.size) None else { cols = list; Some(list) }
+      }
+      open = fits && !retyped
+      if (fits) {
+        placed += projections
+        binding = bind
+        columns = cols
+      }
+    }
+    placed.result()
+  }
+
+  /** Applies one rule's steps to `df` with Dataset calls. */
+  private def applyAlone(df: DataFrame, ops: Seq[SparkPlug.Op]): DataFrame = ops.foldLeft(df) {
+    case (d, SparkPlug.Put(cols, _)) => d.withColumns(cols)
+    case (d, SparkPlug.Drop(c)) => d.drop(c)
+  }
 
   /** Initialize the audit column to a schema-correct empty array and every
     * fired-rule mask to 0. The reference always overwrites a pre-existing
@@ -140,8 +302,10 @@ case class SparkPlug(
     }
 
   /** Every rule's audit record, evaluated once on the driver over a
-    * one-row frame with no columns: a record that reads the row cannot
-    * resolve there and fails with the rule's name. */
+    * one-row frame with no columns: the optimizer folds that query into a
+    * local relation without a job (a collect covers a session that
+    * excludes the rule). A record that reads the row cannot resolve there
+    * and fails with the rule's name. */
   private def auditRecords(appender: AuditAppender, rules: List[PlugRule]): ArrayData = {
     val oneRow = spark.createDataFrame(java.util.List.of(Row.empty), new StructType())
     def evaluate(rs: List[PlugRule]) = oneRow.select(array(rs.map(r =>
@@ -151,8 +315,11 @@ case class SparkPlug(
       throw new IllegalArgumentException(
         s"""Rule "${bad.name}": an audit record must not read the row: ${e.getMessage}""", e)
     }.get
-    CatalystTypeConverters.createToCatalystConverter(ArrayType(appender.detailSchema))(
-      evaluated.collect().head.getSeq[Row](0)).asInstanceOf[ArrayData]
+    evaluated.queryExecution.optimizedPlan match {
+      case local: LocalRelation if local.data.size == 1 => local.data.head.getArray(0)
+      case _ => CatalystTypeConverters.createToCatalystConverter(ArrayType(appender.detailSchema))(
+        evaluated.collect().head.getSeq[Row](0)).asInstanceOf[ArrayData]
+    }
   }
 
   /** First-match-only variant of [[plug]]: each row takes the FIRST rule
@@ -169,15 +336,17 @@ case class SparkPlug(
   def plugFirstMatch(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] = {
     val flag = "__graft_matched"
     val hit  = "__graft_hit"
-    validated(in, rules)(withAuditTrail(rules) {
-      foldRules(in.withColumn(flag, lit(false)), rules) { (df, rule, i) =>
+    SparkPlug.onDeepStack(validated(in, rules)(withAuditTrail(rules) {
+      foldRules(in.withColumn(flag, lit(false)), rules) { (rule, i, schema) =>
         // a NULL condition is a miss, not a match: it must not shield the row
         val matches = coalesce(expr(rule.condition), lit(false)) && !col(flag)
-        applyRule(df.withColumn(hit, matches), rule.copy(condition = hit), i)
-          .withColumn(flag, col(flag) || col(hit))
-          .drop(hit)
+        Seq(
+          SparkPlug.Put(Map(hit -> matches)),
+          ruleUpdate(rule.copy(condition = hit), i, schema.add(hit, BooleanType)),
+          SparkPlug.Put(Map(flag -> (col(flag) || col(hit)))),
+          SparkPlug.Drop(hit))
       }.drop(flag)
-    })
+    }))
   }
 
   /** Per-rule telemetry over the SAME sequential semantics as [[plug]]:
@@ -196,10 +365,10 @@ case class SparkPlug(
     * each rule's own projection (the chain stays narrow, no shuffle), and
     * one conditional aggregate at the end reads them all; the wide 1-row
     * result unpivots to a #rules-row frame. */
-  def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = {
-    val flagged = foldRules(in, rules) { (df, rule, i) =>
-      applyRule(df, rule, i,
-        c => Map(s"__hit_$i" -> expr(rule.condition), s"__chg_$i" -> c.fired))
+  def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = SparkPlug.onDeepStack {
+    val flagged = foldRules(in, rules) { (rule, i, schema) =>
+      Seq(ruleUpdate(rule, i, schema,
+        c => Map(s"__hit_$i" -> expr(rule.condition), s"__chg_$i" -> c.fired)))
     }
     val aggs = rules.indices.flatMap(i => Seq(
       sum(when(col(s"__hit_$i"), 1L).otherwise(0L)).as(s"__h_$i"),
@@ -240,7 +409,7 @@ case class SparkPlug(
       keyCols: Seq[String],
       rulesA: List[PlugRule],
       rulesB: List[PlugRule]
-  ): Either[List[PlugRuleValidationError], DataFrame] =
+  ): Either[List[PlugRuleValidationError], DataFrame] = SparkPlug.onDeepStack {
     for {
       a <- plug(in, rulesA)
       b <- plug(in, rulesB)
@@ -295,21 +464,22 @@ case class SparkPlug(
           .select(col("d.column"), col("d.n_diff"))
       }
     }
+  }
 
-  /** Apply the rule with the given chain position = one projection. With
-    * plug details on, a rule that fires ORs its bit into its mask word; the
-    * reference appends a record per firing rule through a UDF4
-    * (SparkPlugUDFs.scala:14-31), copying the growing array every time.
-    * `extra` adds columns computed from the same pre-rule frame. */
-  private def applyRule(frame: DataFrame, rule: PlugRule, ruleNumber: Int,
-      extra: RuleCompiler.Compiled => Map[String, Column] = _ => Map.empty): DataFrame = {
-    val compiled = RuleCompiler.compile(rule, frame.schema, isKeepOldField)
+  /** The rule with the given chain position as one projection over a frame
+    * of `schema`. With plug details on, a rule that fires ORs its bit into
+    * its mask word; the reference appends a record per firing rule through
+    * a UDF4 (SparkPlugUDFs.scala:14-31), copying the growing array every
+    * time. `extra` adds columns computed from the same pre-rule frame. */
+  private def ruleUpdate(rule: PlugRule, ruleNumber: Int, schema: StructType,
+      extra: RuleCompiler.Compiled => Map[String, Column] = _ => Map.empty): SparkPlug.Put = {
+    val compiled = RuleCompiler.compile(rule, schema, isKeepOldField)
     val maskUpdate = plugDetails.map { _ =>
       val mask = SparkPlug.maskColumn(ruleNumber)
       mask -> col(mask).bitwiseOR(
         when(compiled.fired, lit(1L << (ruleNumber % 64))).otherwise(lit(0L)))
     }
-    frame.withColumns(compiled.allUpdates ++ maskUpdate ++ extra(compiled))
+    SparkPlug.Put(compiled.allUpdates ++ maskUpdate ++ extra(compiled), compiled.oldCopies.toMap)
   }
 
   /** Changed-row count. The reference runs an extra eager full-scan job with
@@ -323,14 +493,17 @@ case class SparkPlug(
       out.observe(obs, sum(when(changed, 1L).otherwise(0L)).as(SparkPlug.changedMetric))
     } else out
 
-  private def repartitionAndCheckpoint(in: Dataset[Row], ruleNumber: Int): Dataset[Row] =
-    checkpointDetails.fold(in) { cd =>
-      val repartitioned =
-        if ((ruleNumber + 1) % cd.rulesPerStage == 0) in.repartition(cd.numberOfPartitions) else in
-      if ((ruleNumber + 1) % (2 * cd.rulesPerStage) == 0) {
-        if (cd.checkpointDir.isDefined) repartitioned.checkpoint()
-        else repartitioned.localCheckpoint()
-      } else repartitioned
+  /** `plan` staged after rule `ruleNumber`, when the cadence stages there:
+    * repartitioned, and checkpointed every second stage. */
+  private def staged(plan: LogicalPlan, ruleNumber: Int): Option[LogicalPlan] =
+    checkpointDetails.filter(cd => (ruleNumber + 1) % cd.rulesPerStage == 0).map { cd =>
+      val repartitioned = GraftPlanAccess.ofRows(spark, plan).repartition(cd.numberOfPartitions)
+      val out =
+        if ((ruleNumber + 1) % (2 * cd.rulesPerStage) == 0) {
+          if (cd.checkpointDir.isDefined) repartitioned.checkpoint()
+          else repartitioned.localCheckpoint()
+        } else repartitioned
+      out.queryExecution.analyzed
     }
 }
 
@@ -379,6 +552,38 @@ object SparkPlug {
 
   def builder(implicit spark: SparkSession): SparkPlugBuilder = SparkPlugBuilder()
 
+  /** Runs `build` on a thread with a 128 MB stack. Spark's analyzer
+    * recurses once per plan node, and a long chain stacks a `Project` per
+    * rule (four under first-match) before they merge: until the JIT has
+    * compiled the analyzer, some 500 of them outgrow the default 1 MB
+    * thread stack. An interrupt of the caller interrupts the build, and
+    * the caller waits for it to stop. */
+  private def onDeepStack[T](build: => T): T = {
+    var result: Either[Throwable, T] = Left(new IllegalStateException("plug build did not run"))
+    val thread = new Thread(null, () => result = try Right(build) catch { case t: Throwable => Left(t) },
+      "graft-plug-build", 128L << 20)
+    thread.start()
+    try thread.join()
+    catch {
+      case e: InterruptedException =>
+        thread.interrupt()
+        thread.join()
+        throw e
+    }
+    result.fold(throw _, identity)
+  }
+
+  /** How a rule step changes the frame: a `withColumns` of `cols`, all
+    * computed from the frame before it, or a drop. A column a `Put` adds is
+    * a copy of `copies(name)` when listed there, and a boolean flag
+    * otherwise. */
+  private[plug] sealed trait Op
+  private[plug] case class Put(cols: Map[String, Column], copies: Map[String, String] = Map.empty) extends Op
+  private[plug] case class Drop(column: String) extends Op
+
+  /** One rule's steps, at its chain position, over a frame of the schema. */
+  private[plug] type Step = (PlugRule, Int, StructType) => Seq[Op]
+
   /** The fired-rule mask holding rule `ruleNumber`'s bit: 64 rules a word. */
   private def maskColumn(ruleNumber: Int): String = s"__graft_mask_${ruleNumber / 64}"
 
@@ -393,16 +598,18 @@ object SparkPlug {
   private val regionBudget = 150
 
   /** Computing expressions in the `Project`s above the plan's last region
-    * end (a boundary, checkpoint, exchange or scan). Whole-stage codegen
-    * evaluates a subexpression shared within one projection once, so each
-    * `Project` counts its distinct non-leaf expressions. */
-  private def regionCost(plan: LogicalPlan): Int = plan match {
-    case Project(list, child) =>
-      list.flatMap(_.collect { case e if e.children.nonEmpty && !e.isInstanceOf[Alias] => e.canonicalized })
-        .distinct.size + regionCost(child)
+    * end (a boundary, checkpoint, exchange or scan); `known` stops the walk
+    * at a plan whose cost is already counted. */
+  private def regionCost(plan: LogicalPlan, known: Option[(LogicalPlan, Int)] = None): Int = plan match {
+    case _ if known.exists(_._1 eq plan) => known.get._2
+    case Project(list, child) => listCost(list) + regionCost(child, known)
     case _ => 0
   }
 
-  private def endRegionIfFull(df: DataFrame): DataFrame =
-    if (regionCost(df.queryExecution.analyzed) > regionBudget) CodegenBoundary.over(df) else df
+  /** Whole-stage codegen evaluates a subexpression shared within one
+    * projection once, so a `Project` costs its distinct non-leaf
+    * expressions. */
+  private def listCost(list: Seq[NamedExpression]): Int =
+    list.flatMap(_.collect { case e if e.children.nonEmpty && !e.isInstanceOf[Alias] => e.canonicalized })
+      .distinct.size
 }

@@ -509,15 +509,6 @@ object ManifestTable {
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(dir, spark).exists(new Path(dir, PointerName))
 
-  /** [[read]], or an empty frame of `schema` when the table has no commit
-    * yet — the "first batch of a new sink" case. */
-  def readOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val f = fs(dir, spark)
-    if (f.exists(new Path(dir, PointerName))) read(spark, dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
   /** Step (1): write `df`'s data files into a fresh `data/<uuid>/` that
     * no manifest references, and compute their footer stats. No manifest
     * exists yet, no reader can resolve the files, and the result is

@@ -501,6 +501,27 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
     e.getMessage should not include "\"fine\""
   }
 
+  it should "evaluate audit records that read the session or draw a random value" in {
+    val appender = AuditAppender.forProduct[OverrideDetail] { (name, version, fields) =>
+      struct(concat(lit(s"$name@"), expr("current_user()")).as("ruleId"),
+        typedlit(fields).as("fieldNames"), expr("uuid()").as("ruleVersion"))
+    }
+    val rules = List(PlugRule("rule1", "v1", "title like '%iPhone%'", Seq(PlugAction("price", "1000"))))
+    // the records are read from a folded local relation, or collected
+    // where a session excludes the rule that folds it
+    val excluded = "spark.sql.optimizer.excludedRules"
+    for (rule <- Seq(None, Some("org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"))) {
+      rule.foreach(spark.conf.set(excluded, _))
+      try {
+        val out = SparkPlug.builder(spark).enablePlugDetails("d", appender).create().plug(df, rules).toOption.get
+        val Array(detail) = out.filter($"title" === "iPhone")
+          .select(explode($"d")).select("col.*").as[OverrideDetail].collect()
+        detail.ruleId shouldBe Some("rule1@" + spark.sql("select current_user()").as[String].head())
+        detail.ruleVersion.get should fullyMatch regex "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}"
+      } finally spark.conf.unset(excluded)
+    }
+  }
+
   it should "match a row model on a 130-rule chain with details, first-match and staging" in {
     import AuditModel._
     val rules = genRules(new scala.util.Random(20261017L), 130)
@@ -544,6 +565,99 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
       Seq("title", "brand", "price", "plugDetails", "price_r1_old", "brand_r2_old")
     out.filter($"title" === "iPhone").select("plugDetails.name").as[Seq[String]].head() shouldBe
       Seq("r1", "r2")
+  }
+
+  // ---- chains whose later rules read what earlier rules changed or added ----
+
+  /** Every row of `out` as a map from column name to value, sorted by title. */
+  private def rowMaps(out: DataFrame): Seq[Map[String, Any]] =
+    out.collect().toSeq.map(r => out.columns.map(c => c -> r.getAs[Any](c)).toMap)
+      .sortBy(_("title").toString)
+
+  /** `rules` under plug, plugFirstMatch and ruleHitStats with one builder. */
+  private def underEveryEntry(builder: SparkPlugBuilder, rules: List[PlugRule])
+      : (DataFrame, DataFrame, Seq[(String, Long, Long)]) = {
+    val plugger = builder.create()
+    (plugger.plug(df, rules).toOption.get, plugger.plugFirstMatch(df, rules).toOption.get,
+      plugger.ruleHitStats(df, rules).as[(String, Long, Long)].collect().toSeq)
+  }
+
+  it should "resolve rules after a type-changing backtick action against the new type" in {
+    val rules = List(
+      PlugRule("halve", "v1", "price > 250", Seq(PlugAction("price", "`price / 2`"))),
+      PlugRule("fix", "v1", "price < 180", Seq(PlugAction("price", "99.5"))))
+    val (plugged, first, stats) = underEveryEntry(SparkPlug.builder(spark).enablePlugDetails(), rules)
+    plugged.schema("price").dataType shouldBe org.apache.spark.sql.types.DoubleType
+    rowMaps(plugged.select("title", "price", "plugDetails.name")) shouldBe Seq(
+      Map("title" -> "Galaxy", "price" -> 200.0, "name" -> Seq()),
+      Map("title" -> "iPhone", "price" -> 99.5, "name" -> Seq("halve", "fix")))
+    first.schema("price").dataType shouldBe org.apache.spark.sql.types.DoubleType
+    rowMaps(first.select("title", "price", "plugDetails.name")) shouldBe Seq(
+      Map("title" -> "Galaxy", "price" -> 200.0, "name" -> Seq()),
+      Map("title" -> "iPhone", "price" -> 150.0, "name" -> Seq("halve")))
+    stats shouldBe Seq(("halve", 1L, 1L), ("fix", 1L, 1L))
+  }
+
+  it should "let a later rule read an earlier rule's old-value copy" in {
+    val rules = List(
+      PlugRule("r1", "v1", "price > 250", Seq(PlugAction("price", "100"))),
+      PlugRule("r2", "v1", "price_r1_old > 250", Seq(PlugAction("brand", "Was premium"))))
+    val (plugged, first, stats) = underEveryEntry(SparkPlug.builder(spark).keepOldField, rules)
+    plugged.columns.toSeq shouldBe Seq("title", "brand", "price", "price_r1_old", "brand_r2_old")
+    rowMaps(plugged) shouldBe Seq(
+      Map("title" -> "Galaxy", "brand" -> "Samsung", "price" -> 200, "price_r1_old" -> 200,
+        "brand_r2_old" -> "Samsung"),
+      Map("title" -> "iPhone", "brand" -> "Was premium", "price" -> 100, "price_r1_old" -> 300,
+        "brand_r2_old" -> "Apple"))
+    rowMaps(first) shouldBe Seq(
+      Map("title" -> "Galaxy", "brand" -> "Samsung", "price" -> 200, "price_r1_old" -> 200,
+        "brand_r2_old" -> "Samsung"),
+      Map("title" -> "iPhone", "brand" -> "Apple", "price" -> 100, "price_r1_old" -> 300,
+        "brand_r2_old" -> "Apple"))
+    stats shouldBe Seq(("r1", 1L, 1L), ("r2", 1L, 1L))
+  }
+
+  it should "fail analysis on a condition that reads a column only a later rule adds" in {
+    val rules = List(
+      PlugRule("r1", "v1", "price_r2_old > 0", Seq(PlugAction("price", "1"))),
+      PlugRule("r2", "v1", "price > 0", Seq(PlugAction("price", "2"))))
+    val plugger = SparkPlug.builder(spark).keepOldField.create()
+    for (entry <- Seq[() => Any](() => plugger.plug(df, rules), () => plugger.plugFirstMatch(df, rules),
+        () => plugger.ruleHitStats(df, rules)))
+      (the[org.apache.spark.sql.AnalysisException] thrownBy entry()).getMessage should include("price_r2_old")
+  }
+
+  it should "carry types and earlier writes across local-checkpoint staging points" in {
+    // repartition after r2 and r4, checkpoint after r4; r3 widens price to double
+    val rules = List(
+      PlugRule("r1", "v1", "price > 250", Seq(PlugAction("price", "400"))),
+      PlugRule("r2", "v1", "price = 400", Seq(PlugAction("brand", "Apple Pro"))),
+      PlugRule("r3", "v1", "brand = 'Apple Pro'", Seq(PlugAction("price", "`price / 4`"))),
+      PlugRule("r4", "v1", "price < 150", Seq(PlugAction("title", "cheap"))),
+      PlugRule("r5", "v1", "title = 'cheap'", Seq(PlugAction("price", "1.5"))))
+    val (plugged, first, stats) = underEveryEntry(
+      SparkPlug.builder(spark).enablePlugDetails().enableLocalCheckpointing(2, 2), rules)
+    plugged.rdd.getNumPartitions shouldBe 2
+    rowMaps(plugged.select("title", "brand", "price", "plugDetails.name")) shouldBe Seq(
+      Map("title" -> "Galaxy", "brand" -> "Samsung", "price" -> 200.0, "name" -> Seq()),
+      Map("title" -> "cheap", "brand" -> "Apple Pro", "price" -> 1.5,
+        "name" -> Seq("r1", "r2", "r3", "r4", "r5")))
+    rowMaps(first.select("title", "brand", "price", "plugDetails.name")) shouldBe Seq(
+      Map("title" -> "Galaxy", "brand" -> "Samsung", "price" -> 200.0, "name" -> Seq()),
+      Map("title" -> "iPhone", "brand" -> "Apple", "price" -> 400.0, "name" -> Seq("r1")))
+    stats shouldBe Seq(("r1", 1L, 1L), ("r2", 1L, 1L), ("r3", 1L, 1L), ("r4", 1L, 1L), ("r5", 1L, 1L))
+  }
+
+  it should "resolve rules whose action needs a window or whose condition holds a subquery" in {
+    val flat = Seq(("a", "x", 100), ("b", "x", 300), ("c", "y", 200)).toDF("title", "brand", "price")
+    val rules = List(
+      PlugRule("avg", "v1", "brand = 'x'",
+        Seq(PlugAction("price", "`cast(avg(price) over (partition by brand) as int)`"))),
+      PlugRule("sub", "v1", "title <> (select 'c')", Seq(PlugAction("brand", "Big"))),
+      PlugRule("mark", "v1", "brand = 'Big'", Seq(PlugAction("title", "`concat(title, '!')`"))))
+    SparkPlug.builder(spark).create().plug(flat, rules).toOption.get
+      .as[(String, String, Int)].collect().sorted shouldBe
+      Array(("a!", "Big", 200), ("b!", "Big", 200), ("c", "y", 200))
   }
 
   /** An independent model of the plug semantics (SURVEY §§1-4) over rows of
