@@ -64,13 +64,12 @@ private[graft] object EventsQueries {
       |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin
 
   val all: Seq[Query] = Seq(
-    // Extension: JSON property extraction from the events props column.
-    // Uses the codegen string-scan kernel (no per-row Jackson parser) when
-    // the extension is registered; get_json_object otherwise.
+    // Extension: JSON property extraction from the events props column by
+    // the codegen string-scan kernel (no per-row Jackson parser).
     Query("events_props_extract", (s, dir) =>
       events(s, dir).select(
         col("event_id"),
-        graft.ops.TextFunctions.jsonGetFor(s)(col("props"), "k").cast("int").as("k")),
+        graft.ops.TextFunctions.jsonGet(col("props"), "k").cast("int").as("k")),
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
         |FROM events""".stripMargin),
 

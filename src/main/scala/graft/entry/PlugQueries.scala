@@ -459,7 +459,7 @@ private[graft] object PlugQueries {
         Seq(PlugAction("text", "`regexp_replace(text, '[0-9]+', '<num>')`")))
       plugged(table(s, dir, "documents"), List(rule))
         .select(col("doc_id"), col("lang"),
-          graft.ops.TextFunctions.md5For(s)(col("text")).as("text_md5"))
+          graft.ops.TextFunctions.md5Hex(col("text")).as("text_md5"))
     },
       """SELECT doc_id, lang,
         |md5(CASE WHEN lang = 'en' AND length(text) < 300

@@ -151,7 +151,7 @@ private[graft] object TextQueries {
         nTokens.as("n_tokens"),
         (length(regexp_replace(col("text"), "\\s+", "")) / greatest(nTokens, lit(1)))
           .as("avg_token_len"),
-        fingerprintFor(s)(col("text")).as("fp"))
+        fingerprint(col("text")).as("fp"))
     },
       """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents)
         |SELECT doc_id,

@@ -92,7 +92,7 @@ object HashKernels {
   }
 
   /** Distinct word n-gram shingles (first-occurrence order); fewer than n
-    * tokens collapse to one whole-text shingle — identical semantics to
+    * tokens collapse to one whole-text shingle. The kernel behind
     * [[graft.ops.TextFunctions.shingles]]. */
   def shingles(toks: ArrayData, n: Int): ArrayData = {
     val m   = toks.numElements()
@@ -117,11 +117,10 @@ object HashKernels {
   }
 
   /** ALL word n-gram positions, duplicates kept; fewer than n tokens give
-    * an EMPTY array — identical semantics to
-    * [[graft.ops.TextFunctions.gramsAll]] (note the divergence from
-    * [[shingles]], which collapses short texts to one whole-text shingle).
-    * A null token poisons its grams to null, like `concat` in the HOF
-    * chain. */
+    * an EMPTY array (note the divergence from [[shingles]], which collapses
+    * short texts to one whole-text shingle). A null token poisons its grams
+    * to null, like `concat` in a `zip_with` chain. The kernel behind
+    * [[graft.ops.TextFunctions.gramsAll]]. */
   def gramsAll(toks: ArrayData, n: Int): ArrayData = {
     val m = toks.numElements()
     if (m < n) return emptyArray
@@ -211,9 +210,8 @@ case class Hash60Array(child: Expression) extends UnaryExpression {
 }
 
 /** `graft_minhash_sig(shingles, k)`: MinHash signature as array<bigint>.
-  * Null-propagating, like the portable HOF fold in
-  * [[graft.ops.Dedup.minhashSignature]] — NULL shingles give NULL, so the
-  * kernel and the fallback stay bit-identical on every input. */
+  * Null-propagating: NULL shingles give NULL, like the higher-order-function
+  * fold it is tested against. */
 case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_minhash_sig"
@@ -236,7 +234,7 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 }
 
 /** `graft_shingles(tokens, n)`: distinct word n-grams as array<string>.
-  * Null-propagating, matching [[graft.ops.TextFunctions.shingles]]. */
+  * Null-propagating. Built by [[graft.ops.TextFunctions.shingles]]. */
 case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingles"
@@ -260,7 +258,7 @@ case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
 
 /** `graft_grams(tokens, n)`: ALL word n-gram positions (duplicates kept;
   * shorter-than-n input gives an empty array) as array<string>.
-  * Null-propagating, matching [[graft.ops.TextFunctions.gramsAll]]. */
+  * Null-propagating. Built by [[graft.ops.TextFunctions.gramsAll]]. */
 case class GramsAllExpr(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "graft_grams"
@@ -284,9 +282,8 @@ case class GramsAllExpr(child: Expression, n: Int) extends UnaryExpression {
 
 /** `graft_simhash60(token_hashes)`: 60-bit SimHash as bigint.
   * Null-propagating; call sites that use it as a join key wrap it in
-  * `coalesce(_, 0)` exactly like the HOF fold does (see
-  * [[graft.ops.Dedup.simhash]]), keeping the key non-nullable so constraint
-  * pushdown can't clone the hash below the exchange. */
+  * `coalesce(_, 0)` (see `Dedup.simhash`), keeping the key non-nullable so
+  * constraint pushdown can't clone the hash below the exchange. */
 case class SimHash60(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_simhash60"

@@ -99,14 +99,14 @@ case class DotProductDouble(left: Expression, right: Expression)
   * the deterministic md5-parity hyperplanes (family
   * [[graft.ops.Similarity.hyperplaneSigns]], planes `firstPlane ..
   * firstPlane+planes-1`) are accumulated per plane in element order, so
-  * every per-plane sum is bit-identical to the higher-order-function
-  * formulation in [[graft.ops.Similarity.lshBucket]] (strict left fold) and
-  * to the DuckDB oracle's `list_reduce`.
+  * every per-plane sum is bit-identical to a strict left fold of
+  * [[graft.ops.Similarity.dotDouble]] against the plane and to the DuckDB
+  * oracle's `list_reduce`. Built by [[graft.ops.Similarity.lshBucket]].
   *
-  * The HOF route evaluates `planes` interpreted CodegenFallback folds per
-  * row (planes × dim element evals); this kernel is one tight generated
-  * loop. NULL or wrong-length vectors map to bucket -1 — same as the HOF
-  * form — keeping the output NON-NULLABLE so the bucket equi-join can't
+  * A higher-order-function route evaluates `planes` interpreted
+  * CodegenFallback folds per row (planes × dim element evals); this kernel
+  * is one tight generated loop. NULL or wrong-length vectors map to bucket
+  * -1, keeping the output NON-NULLABLE so the bucket equi-join can't
   * infer an IsNotNull constraint that would clone the whole computation
   * into a pre-exchange Filter. */
 case class SignLshBucket(child: Expression, planes: Int, dim: Int, firstPlane: Int)

@@ -26,13 +26,7 @@ object Corpus {
     * modulo buckets — same hash28 family as MinHash, exactly reproducible
     * by the DuckDB oracle. */
   def hashBucket(id: Column, buckets: Int): Column =
-    conv(substr(md5(id.cast("string")), lit(1), lit(7)), 16, 10).cast("long") % buckets
-
-  /** Kernel-dispatched variant (no per-row MessageDigest ThreadLocal
-    * acquisition when graft.ext.GraftExtensions is installed). */
-  def hashBucketFor(spark: org.apache.spark.sql.SparkSession)(
-      id: Column, buckets: Int): Column =
-    conv(substr(md5For(spark)(id.cast("string")), lit(1), lit(7)), 16, 10)
+    conv(substr(md5Hex(id.cast("string")), lit(1), lit(7)), 16, 10)
       .cast("long") % buckets
 
   /** Keeps rows whose id hashes into the first `keep` of `buckets` buckets —
@@ -45,7 +39,7 @@ object Corpus {
       keep: Int,
       buckets: Int = 10000
   ): DataFrame =
-    df.withColumn("bucket", hashBucketFor(df.sparkSession)(col(idCol), buckets))
+    df.withColumn("bucket", hashBucket(col(idCol), buckets))
       .filter(col("bucket") < keep)
 
   /** Stratified deterministic sampling: per-stratum keep rates (e.g. cap
@@ -67,7 +61,7 @@ object Corpus {
       case (acc, (stratum, rate)) =>
         when(col(strataCol) === stratum, lit((rate * buckets).toInt)).otherwise(acc)
     }
-    df.withColumn("bucket", hashBucketFor(df.sparkSession)(col(idCol), buckets))
+    df.withColumn("bucket", hashBucket(col(idCol), buckets))
       .filter(col("bucket") < cutoff)
   }
 
@@ -94,7 +88,7 @@ object Corpus {
         when(col("bucket") < cut, lit(name)).otherwise(acc)
       }
     df.drop("bucket", "split")
-      .withColumn("bucket", hashBucketFor(df.sparkSession)(col(idCol), buckets))
+      .withColumn("bucket", hashBucket(col(idCol), buckets))
       .withColumn("split", assign)
   }
 
@@ -115,7 +109,7 @@ object Corpus {
   ): DataFrame = {
     require(k >= 2, s"k must be at least 2: $k")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col(strataCol))
-    df.withColumn("fold", hashBucketFor(df.sparkSession)(col(idCol), k))
+    df.withColumn("fold", hashBucket(col(idCol), k))
       .groupBy(col(strataCol), col("fold"))
       .agg(count(lit(1)).as("n_val"))
       .withColumn("n_train", sum(col("n_val")).over(w) - col("n_val"))
@@ -159,7 +153,7 @@ object Corpus {
     * exact in BIGINT for weights up to ~2^35. */
   def weightedHashSample(df: DataFrame, idCol: String, weightCol: String): DataFrame = {
     val wMax = df.agg(max(col(weightCol).cast("long")).as("__wmax"))
-    val h28 = conv(substr(md5For(df.sparkSession)(col(idCol).cast("string")),
+    val h28 = conv(substr(md5Hex(col(idCol).cast("string")),
       lit(1), lit(7)), 16, 10).cast("long")
     df.crossJoin(broadcast(wMax))
       .filter(h28 * col("__wmax") < col(weightCol).cast("long") * lit(1L << 28))
@@ -226,10 +220,9 @@ object Corpus {
       defaultRate: Double,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val spark = df.sparkSession
     val quality = df.filter(size(tokens(col(textCol))) >= minTokens)
     val keepers = quality
-      .select(col(idCol), fingerprintFor(spark)(col(textCol)).as("__fp"))
+      .select(col(idCol), fingerprint(col(textCol)).as("__fp"))
       .groupBy("__fp").agg(min(col(idCol)).as("__keep"))
     // cached (the package's CacheScope pattern): three downstream
     // consumers (near-dup pairs, cluster components, the final sample
@@ -266,9 +259,8 @@ object Corpus {
     * one (id, n, gram) count aggregate and one per-document rollup — two
     * shuffles total, both with map-side partial aggregation, no joins. */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val grams3 = gramsAllFor(df.sparkSession) _
     def tag(n: Int): Column =
-      transform(grams3(col("__toks"), n),
+      transform(gramsAll(col("__toks"), n),
         g => struct(lit(n).as("n"), g.as("g")))
     val grams = df
       .select(col(idCol), tokens(col(textCol)).as("__toks"))
@@ -361,15 +353,25 @@ object Corpus {
       .withColumn("oov_rate", round(col("n_oov") / col("n_tokens"), 6))
   }
 
+  /** Size of the contamination Bloom filter in 64-bit words: a power of two
+    * <= 16384, because bit positions are 20-bit md5 substrings. One constant,
+    * so an index can never be probed at a size other than the one it was
+    * built with. */
+  private val BloomWords = 16384
+
+  /** Bits per shingle in the contamination Bloom filter; each draws 5 hex
+    * chars from one md5, so at most 6. */
+  private val BloomK = 4
+
   /** Train/test contamination via a PORTABLE Bloom filter: every corpus
-    * shingle sets `k` bits in an `m = 64·words`-bit array; a test shingle
-    * is flagged when all its bits are set. Bit positions are 20-bit md5
-    * substrings modulo m (unbiased for power-of-two m), so the filter
+    * shingle sets [[BloomK]] bits in an `m = 64·BloomWords`-bit array; a
+    * test shingle is flagged when all its bits are set. Bit positions are
+    * 20-bit md5 substrings modulo m (unbiased for power-of-two m), so the filter
     * CONTENTS — including its false positives — are bit-identical in any
     * engine: the oracle rebuilds the same filter and hash-matches exact
     * counts, not just a tolerance gate.
     *
-    * Scale: the filter is a CONSTANT-size word table (2·`words` 32-bit
+    * Scale: the filter is a CONSTANT-size word table (2·[[BloomWords]] 32-bit
     * chunks, independent of corpus size) built by one map-side-combinable
     * `bit_or` aggregate and probed via a broadcast join — at query time the corpus
     * side never re-shuffles its shingle set the way [[contamination]]'s
@@ -381,14 +383,10 @@ object Corpus {
       test: DataFrame,
       idCol: String,
       textCol: String,
-      shingleN: Int = 3,
-      words: Int = 16384,
-      k: Int = 4
+      shingleN: Int = 3
   ): DataFrame = {
-    val (corpusGrams, bloom) =
-      contaminationIndex(train, textCol, shingleN, words, k)
-    contaminationProbe(corpusGrams, bloom, test, idCol, textCol,
-      shingleN, words, k)
+    val (corpusGrams, bloom) = contaminationIndex(train, textCol, shingleN)
+    contaminationProbe(corpusGrams, bloom, test, idCol, textCol, shingleN)
   }
 
   /** The benchmark side of [[contaminationBloom]], built ONCE: the
@@ -399,21 +397,15 @@ object Corpus {
   def contaminationIndex(
       train: DataFrame,
       textCol: String,
-      shingleN: Int = 3,
-      words: Int = 16384,
-      k: Int = 4
+      shingleN: Int = 3
   ): (DataFrame, DataFrame) = {
-    require(Integer.bitCount(words) == 1 && words <= (1 << 14),
-      "words must be a power of two <= 16384 (bit positions are 20-bit)")
-    require(k >= 1 && k <= 6, "k hashes draw 5 hex chars each from one md5")
-    val spark = train.sparkSession
-    val mBits = words.toLong * 64L
-    def positions(g: Column): Column = array((0 until k).map { j =>
-      conv(substr(md5For(spark)(g), lit(1 + 5 * j), lit(5)), 16, 10)
+    val mBits = BloomWords.toLong * 64L
+    def positions(g: Column): Column = array((0 until BloomK).map { j =>
+      conv(substr(md5Hex(g), lit(1 + 5 * j), lit(5)), 16, 10)
         .cast("long") % mBits
     }: _*)
     val corpusGrams = train
-      .select(explode(shinglesFor(spark)(tokens(col(textCol)), shingleN)).as("g"))
+      .select(explode(shingles(tokens(col(textCol)), shingleN)).as("g"))
       .distinct()
     // 32-bit chunks, not 64: a bit-63 mask is negative in one engine and
     // an overflow error in the other (DuckDB rejects 1::BIGINT << 63) —
@@ -428,7 +420,7 @@ object Corpus {
 
   /** The probe side of [[contaminationBloom]] against a pre-built
     * [[contaminationIndex]]. Collects the Bloom word table — bounded,
-    * constant-size state (≤ 2·`words` rows whatever the corpus) — and
+    * constant-size state (≤ 2·[[BloomWords]] rows whatever the corpus) — and
     * delegates to [[contaminationProbeWords]]; a long-lived caller (the
     * streaming gate) should collect once and call that directly. */
   def contaminationProbe(
@@ -437,17 +429,16 @@ object Corpus {
       test: DataFrame,
       idCol: String,
       textCol: String,
-      shingleN: Int = 3,
-      words: Int = 16384,
-      k: Int = 4
+      shingleN: Int = 3
   ): DataFrame =
-    contaminationProbeWords(corpusGrams, collectBloomWords(bloom, words),
-      test, idCol, textCol, shingleN, words, k)
+    contaminationProbeWords(corpusGrams, collectBloomWords(bloom),
+      test, idCol, textCol, shingleN)
 
   /** The Bloom word table as a dense driver-side array indexed by word
-    * number — 2·`words` 32-bit chunks, the filter's constant full size. */
-  def collectBloomWords(bloom: DataFrame, words: Int = 16384): IndexedSeq[Long] = {
-    val arr = Array.fill(2 * words)(0L)
+    * number — 2·[[BloomWords]] 32-bit chunks, the filter's constant full
+    * size. */
+  def collectBloomWords(bloom: DataFrame): IndexedSeq[Long] = {
+    val arr = Array.fill(2 * BloomWords)(0L)
     bloom.select(col("word"), col("bits")).collect()
       .foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
     arr.toIndexedSeq
@@ -470,17 +461,14 @@ object Corpus {
       test: DataFrame,
       idCol: String,
       textCol: String,
-      shingleN: Int = 3,
-      words: Int = 16384,
-      k: Int = 4
+      shingleN: Int = 3
   ): DataFrame = {
-    val spark = test.sparkSession
-    val mBits = words.toLong * 64L
-    require(bloomWords.length == 2 * words,
-      s"bloomWords must hold the filter's full 2*$words chunks")
+    val mBits = BloomWords.toLong * 64L
+    require(bloomWords.length == 2 * BloomWords,
+      s"bloomWords must hold the filter's full 2*$BloomWords chunks")
     val wordsLit = typedlit(bloomWords)
     // md5 referenced k times from one alias — evaluated once per shingle
-    def hitOf(h: Column): Column = (0 until k).map { j =>
+    def hitOf(h: Column): Column = (0 until BloomK).map { j =>
       val p = conv(substr(h, lit(1 + 5 * j), lit(5)), 16, 10)
         .cast("long") % mBits
       val word = get(wordsLit, shiftright(p, 5).cast("int"))
@@ -490,9 +478,9 @@ object Corpus {
     }.reduce(_ && _)
     val tp = test
       .select(col(idCol),
-        explode(shinglesFor(spark)(tokens(col(textCol)), shingleN)).as("g"))
+        explode(shingles(tokens(col(textCol)), shingleN)).as("g"))
     val perDoc = tp
-      .withColumn("__h", md5For(spark)(col("g")))
+      .withColumn("__h", md5Hex(col("g")))
       .select(col(idCol), when(hitOf(col("__h")), 1L).otherwise(0L).as("hit"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shingles"), sum(col("hit")).as("n_bloom"))
@@ -532,11 +520,11 @@ object Corpus {
     val spark = df.sparkSession
     val mBits = words.toLong * 64L
     def positions(g: Column): Column = array((0 until k).map { j =>
-      conv(substr(md5For(spark)(g), lit(1 + 5 * j), lit(5)), 16, 10)
+      conv(substr(md5Hex(g), lit(1 + 5 * j), lit(5)), 16, 10)
         .cast("long") % mBits
     }: _*)
     val index = df
-      .select(hashBucketFor(spark)(col(idCol), nShards).as("shard"),
+      .select(hashBucket(col(idCol), nShards).as("shard"),
         explode(positions(col(idCol).cast("string"))).as("p"))
       .select(col("shard"), shiftright(col("p"), 5).as("word"),
         expr("shiftleft(CAST(1 AS BIGINT), CAST(p & 31 AS INT))").as("mask"))
@@ -545,7 +533,7 @@ object Corpus {
         probeIds.map(java.lang.Long.valueOf).map(Tuple1(_)))
       .toDF("probe_id")
       .select(col("probe_id"),
-        hashBucketFor(spark)(col("probe_id"), nShards).as("true_shard"),
+        hashBucket(col("probe_id"), nShards).as("true_shard"),
         explode(positions(col("probe_id").cast("string"))).as("p"))
       .select(col("probe_id"), col("true_shard"),
         shiftright(col("p"), 5).as("word"),
@@ -589,9 +577,8 @@ object Corpus {
       textCol: String,
       broadcastVocab: Boolean = true
   ): DataFrame = {
-    val spark = df.sparkSession
     val bigrams = df.select(col(idCol),
-      explode(gramsAllFor(spark)(tokens(col(textCol)), 2)).as("bg"))
+      explode(gramsAll(tokens(col(textCol)), 2)).as("bg"))
     val uni = df.select(explode(tokens(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("cu"))
     val vocab = uni.agg(count(lit(1)).as("vocab"))
@@ -682,9 +669,8 @@ object Corpus {
       broadcastVocab: Boolean = true,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val spark = df.sparkSession
     val bigrams = df.select(col(idCol),
-      explode(gramsAllFor(spark)(tokens(col(textCol)), 2)).as("bg"))
+      explode(gramsAll(tokens(col(textCol)), 2)).as("bg"))
     // cached: the unigram table feeds THREE consumers (w1 denominator,
     // w2 back-off, the N scalar) and Spark does not dedup common
     // subplans — uncached each would re-run the full token aggregate.
@@ -812,8 +798,7 @@ object Corpus {
       salt: String,
       nShards: Int = 8
   ): DataFrame = {
-    val spark = df.sparkSession
-    val key = md5For(spark)(concat_ws(":", col(idCol).cast("string"), lit(salt)))
+    val key = md5Hex(concat_ws(":", col(idCol).cast("string"), lit(salt)))
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("shuffle_key"), col(idCol))
     df.select(col(idCol), key.as("shuffle_key"))
@@ -841,9 +826,8 @@ object Corpus {
       shingleN: Int = 3,
       dfThreshold: Int = 10
   ): DataFrame = {
-    val spark = df.sparkSession
     val e = df.select(col(idCol).as("id"),
-        explode(shinglesFor(spark)(tokens(col(textCol)), shingleN)).as("s"))
+        explode(shingles(tokens(col(textCol)), shingleN)).as("s"))
     // shingle sets are distinct per doc, so df = plain row count per shingle
     val dfc = e.groupBy("s").agg(count(lit(1)).as("df"))
     e.join(dfc, "s")
@@ -896,11 +880,10 @@ object Corpus {
       shingleN: Int = 3,
       threshold: Double = 0.8
   ): DataFrame = {
-    val spark = train.sparkSession
     val tsh = test.select(col(idCol),
-      shinglesFor(spark)(tokens(col(textCol)), shingleN).as("sh"))
+      shingles(tokens(col(textCol)), shingleN).as("sh"))
     val corpusGrams = train
-      .select(explode(shinglesFor(spark)(tokens(col(textCol)), shingleN)).as("g"))
+      .select(explode(shingles(tokens(col(textCol)), shingleN)).as("g"))
       .distinct()
     val hits = tsh.select(col(idCol), explode(col("sh")).as("g"))
       .join(corpusGrams, Seq("g"), "left_semi")
@@ -934,11 +917,10 @@ object Corpus {
       shingleN: Int = 5,
       broadcastBenchmark: Boolean = true
   ): DataFrame = {
-    val spark = train.sparkSession
     val tsh = train.select(col(idCol),
-      shinglesFor(spark)(tokens(col(textCol)), shingleN).as("sh"))
+      shingles(tokens(col(textCol)), shingleN).as("sh"))
     val benchGrams = benchmark
-      .select(explode(shinglesFor(spark)(tokens(col(textCol)), shingleN)).as("g"))
+      .select(explode(shingles(tokens(col(textCol)), shingleN)).as("g"))
       .distinct()
     val probeSide = if (broadcastBenchmark) broadcast(benchGrams) else benchGrams
     val hits = tsh.select(col(idCol), explode(col("sh")).as("g"))
@@ -1063,12 +1045,11 @@ object Corpus {
       textCol: String,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val spark = df.sparkSession
     // cached: the quality+fingerprint projection feeds the cut aggregate,
     // the fingerprint totals, and the final grouping
     val q = scope.cache(df.select(col(idCol).as("id"),
       qualityScore(col(textCol), tokens(col(textCol))).as("q"),
-      fingerprintFor(spark)(col(textCol)).as("fp")))
+      fingerprint(col(textCol)).as("fp")))
     val tot = q.groupBy("fp").agg(count(lit(1)).as("tot"))
     val cuts = q.agg(expr("percentile(q, array(0.25D, 0.5D, 0.75D))").as("bs"))
     q.join(tot, "fp").crossJoin(broadcast(cuts))
@@ -1569,11 +1550,10 @@ object Corpus {
       windowN: Int = 4,
       divisor: Int = 16
   ): DataFrame = {
-    val spark = df.sparkSession
     val prepped = df
       .withColumn("__toks", tokens(col(textCol)))
       .withColumn("__gh",
-        hash60ArrFor(spark)(gramsAllFor(spark)(col("__toks"), windowN)))
+        hash60Arr(gramsAll(col("__toks"), windowN)))
       .withColumn("__cuts", filter(
         transform(col("__gh"), (h, i) =>
           when(pmod(h, lit(divisor.toLong)) === 0L, i + lit(windowN - 1))
@@ -1587,7 +1567,7 @@ object Corpus {
           array_join(slice(col("__toks"), p + 2, e - p), " ")),
         s => s =!= "")).as("chunk"))
     val perDoc = chunks
-      .select(col("id"), md5For(spark)(col("chunk")).as("fp"))
+      .select(col("id"), md5Hex(col("chunk")).as("fp"))
       .groupBy(col("id"), col("fp")).agg(count(lit(1)).as("c"))
     val totals = perDoc.groupBy(col("fp")).agg(sum(col("c")).as("tot"))
     val scored = perDoc.join(totals, "fp")
@@ -1628,13 +1608,12 @@ object Corpus {
       k: Int = 3,
       w: Int = 4
   ): DataFrame = {
-    val spark = df.sparkSession
     val toksC = tokens(col(textCol))
     val prepped = df
       .withColumn("__grams",
         when(size(toksC) < k, array(concat_ws(" ", toksC)))
-          .otherwise(gramsAllFor(spark)(toksC, k)))
-      .withColumn("__h", hash60ArrFor(spark)(col("__grams")))
+          .otherwise(gramsAll(toksC, k)))
+      .withColumn("__h", hash60Arr(col("__grams")))
       .withColumn("__s",
         zip_with(col("__h"), sequence(lit(0), size(col("__h")) - 1),
           (v, p) => struct(v.as("v"), p.as("p"))))
@@ -1674,9 +1653,8 @@ object Corpus {
       idCol: String,
       textCol: String
   ): DataFrame = {
-    val fp = fingerprintFor(base.sparkSession) _
-    val b = base.select(col(idCol).as("id"), fp(col(textCol)).as("bfp"))
-    val r = revised.select(col(idCol).as("id"), fp(col(textCol)).as("rfp"))
+    val b = base.select(col(idCol).as("id"), fingerprint(col(textCol)).as("bfp"))
+    val r = revised.select(col(idCol).as("id"), fingerprint(col(textCol)).as("rfp"))
     b.join(r, Seq("id"), "full_outer")
       .select(col("id").as(idCol),
         when(col("bfp").isNull, lit("added"))
@@ -1704,12 +1682,11 @@ object Corpus {
       minCount: Int = 5,
       k: Int = 25
   ): DataFrame = {
-    val spark = df.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(27, 12)
     val uni = df.select(explode(tokens(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("cu"))
     val ntok = uni.agg(sum(col("cu")).as("ntok"))
-    val bi = df.select(explode(gramsAllFor(spark)(tokens(col(textCol)), 2)).as("bg"))
+    val bi = df.select(explode(gramsAll(tokens(col(textCol)), 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("n_pair"))
       .filter(col("n_pair") >= minCount)
     val x = col("n_pair").cast("double") * col("ntok").cast("double") /
@@ -1894,9 +1871,8 @@ object Corpus {
       spanN: Int = 8,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val spark = df.sparkSession
     val pos = df.select(col(idCol).as("id"),
-      explode(gramsAllFor(spark)(tokens(col(textCol)), spanN)).as("g"))
+      explode(gramsAll(tokens(col(textCol)), spanN)).as("g"))
     // cached: the (doc, gram) counts feed the corpus totals AND the join
     // side — uncached, the positional explode + aggregate runs twice
     // (two full corpus passes at any scale where one suffices)
@@ -1935,9 +1911,8 @@ object Corpus {
       textCol: String,
       spanN: Int = 8
   ): DataFrame = {
-    val spark = df.sparkSession
     val pos = df.select(col(idCol).cast("long").as("id"),
-      explode(gramsAllFor(spark)(tokens(col(textCol)), spanN)).as("g"))
+      explode(gramsAll(tokens(col(textCol)), spanN)).as("g"))
     // NOT cached, unlike [[dupSpanProfile]]'s perDoc (r15 measured
     // negative result): the same two-consumer shape A/B'd flat-to-worse
     // here (1.56 -> 1.71 s) — the cache round-trip costs more than
@@ -1972,7 +1947,7 @@ object Corpus {
       nShards: Int = 8
   ): DataFrame = {
     val perShard = df
-      .select(hashBucketFor(df.sparkSession)(col(idCol), nShards).as("shard"),
+      .select(hashBucket(col(idCol), nShards).as("shard"),
         size(tokens(col(textCol))).as("__nt"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"), sum(col("__nt").cast("long")).as("n_tokens"))
@@ -2174,7 +2149,6 @@ object Corpus {
       dim: Int = 16
   ): DataFrame = {
     require(dim >= 4, s"dim=$dim too small")
-    val spark = df.sparkSession
     val toks = df.select(col(idCol),
       explode(tokens(col(textCol))).as("w"))
     val slot = pmod(hash60(col("w")), lit(dim.toLong))
@@ -2337,13 +2311,12 @@ object Corpus {
       bins: Int = 10,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val spark = df.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(27, 12)
     // cached: the score+fingerprint projection feeds the totals and the
     // binned join (Spark does not dedup common subplans)
     val q = scope.cache(df.select(
       qualityScore(col(textCol), tokens(col(textCol))).as("q"),
-      fingerprintFor(spark)(col(textCol)).as("fp")))
+      fingerprint(col(textCol)).as("fp")))
     val tot = q.groupBy("fp").agg(count(lit(1)).as("tot"))
     val binned = q.join(tot, "fp").select(
       least(lit(bins - 1), floor(col("q") * bins)).cast("int").as("bin"),

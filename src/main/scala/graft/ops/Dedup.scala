@@ -1,6 +1,8 @@
 package graft.ops
 
+import graft.ext.{MinHashSig, SimHash60}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanAccess.{column, expression}
 import org.apache.spark.sql.functions._
 
 import TextFunctions._
@@ -13,16 +15,16 @@ import TextFunctions._
   *  - Near-dup never does an O(n²) cross join: MinHash-LSH banding and
   *    SimHash chunk-bucketing both reduce to equi-joins on small keys, which
   *    Spark executes as shuffle hash/sort-merge joins partitioned by bucket.
-  *  - Signatures are computed with md5-derived 60-bit hashes (portable, so
-  *    the DuckDB oracle replicates them exactly) in a single projection —
-  *    all built-in higher-order functions, no UDFs.
+  *  - Signatures are computed with md5-derived hashes (so the DuckDB
+  *    oracle replicates them exactly) in a single projection — codegen'd
+  *    graft.ext kernels, no UDFs.
   */
 object Dedup {
 
   /** Exact dedup by normalized-text fingerprint: one row per distinct
     * fingerprint with the surviving (minimum) id and the duplicate count. */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(fingerprintFor(df.sparkSession)(col(textCol)).as("fp"), col(idCol))
+    df.select(fingerprint(col(textCol)).as("fp"), col(idCol))
       .groupBy("fp")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dupes"))
 
@@ -40,7 +42,7 @@ object Dedup {
       sourceCol: String
   ): DataFrame = {
     val fps = df.select(col(sourceCol).as("src"),
-      fingerprintFor(df.sparkSession)(col(textCol)).as("fp"))
+      fingerprint(col(textCol)).as("fp"))
     val tot = fps.groupBy("fp").agg(count(lit(1)).as("tot"))
     fps.join(tot, "fp")
       .groupBy("src")
@@ -84,40 +86,18 @@ object Dedup {
       .select(col("n_checked"), col("n_pairs"), col("n_truncated"))
   }
 
-  /** 28-bit hash from md5 hex chars [off+1, off+7] — the two halves feed the
-    * Kirsch-Mitzenmacher family h_i = h1 + i*h2 (one md5 per shingle
-    * instead of one per (shingle, seed); values stay < 2^33 so every engine
-    * computes them in plain 64-bit arithmetic). */
-  private def hash28(c: Column, off: Int): Column =
-    conv(substr(md5(c), lit(off + 1), lit(7)), 16, 10).cast("long")
-
-  /** MinHash signature (portable HOF formulation): per-shingle [h1,h2]
-    * pairs, then an element-wise running minimum of h1 + i*h2 — a single
-    * left fold, heavy arrays in argument position only. */
-  def minhashSignature(shingleSet: Column, k: Int): Column = {
-    val seeds = typedlit((0 until k).map(_.toLong))
-    val pairs = transform(shingleSet, s => array(hash28(s, 0), hash28(s, 7)))
-    aggregate(
-      pairs,
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, p) => zip_with(acc, seeds,
-        (a, i) => least(a, element_at(p, 1) + i * element_at(p, 2))))
-  }
-
-  /** Kernel dispatch: the codegen'd graft_minhash_sig when registered
-    * (spark.sql.extensions=graft.ext.GraftExtensions), else the HOF fold.
-    * Both produce identical signatures (both null-propagating). */
-  private def minhashSigFor(spark: org.apache.spark.sql.SparkSession)(
-      sh: Column, k: Int): Column =
-    if (spark.catalog.functionExists("graft_minhash_sig"))
-      call_function("graft_minhash_sig", sh, lit(k))
-    else minhashSignature(sh, k)
+  /** MinHash signature of a shingle set by the graft_minhash_sig kernel:
+    * per shingle, the two 28-bit halves h1, h2 of its md5 feed the
+    * Kirsch-Mitzenmacher family h_i = h1 + i*h2 (one md5 per shingle instead
+    * of one per (shingle, seed); values stay < 2^33 so every engine computes
+    * them in plain 64-bit arithmetic), and slot i keeps the running minimum.
+    * Null-propagating. */
+  private[graft] def minhashSig(sh: Column, k: Int): Column =
+    column(MinHashSig(expression(sh), k))
 
   /** LSH band keys for a signature: `bands` structs of (band index, md5 of
-    * the band's signature slice). `md5Fn` is the session-dispatched md5
-    * (kernel when the extension is installed). */
-  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
-      md5Fn: Column => Column): Column =
+    * the band's signature slice). */
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)), j =>
       struct(
         j.as("band"),
@@ -125,7 +105,7 @@ object Dedup {
         // infers an IsNotNull(key) constraint and predicate pushdown clones
         // the ENTIRE signature expression into a pre-exchange Filter —
         // doubling the heavy compute and pinning it to the input partitioning.
-        coalesce(md5Fn(concat(j.cast("string"), lit(":"),
+        coalesce(md5Hex(concat(j.cast("string"), lit(":"),
           concat_ws(",", transform(
             slice(sig, j * rowsPerBand + 1, lit(rowsPerBand)),
             v => v.cast("string"))))), lit("")).as("key")))
@@ -147,7 +127,7 @@ object Dedup {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"exactDedupBest needs a numeric id column for its deterministic " +
         s"tie-break; '$idCol' is ${df.schema(idCol).dataType.simpleString}")
-    df.select(fingerprintFor(df.sparkSession)(col(textCol)).as("fp"),
+    df.select(fingerprint(col(textCol)).as("fp"),
         col(idCol), col(scoreCol))
       .groupBy("fp")
       .agg(
@@ -163,20 +143,17 @@ object Dedup {
     * silently diverge. */
   private def sigFrame(
       df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame = {
-    val spark = df.sparkSession
+      shingleN: Int, numHashes: Int): DataFrame =
     df.select(
         col(idCol).as("id"),
-        shinglesFor(spark)(tokens(col(textCol)), shingleN).as("sh"))
-      .withColumn("sig", minhashSigFor(spark)(col("sh"), numHashes))
-  }
+        shingles(tokens(col(textCol)), shingleN).as("sh"))
+      .withColumn("sig", minhashSig(col("sh"), numHashes))
 
   /** The exploded (id, band, key) band-key frame of a [[sigFrame]]. */
   private def bandFrameOf(sigDf: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigDf
       .select(col("id"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand,
-          md5For(sigDf.sparkSession))).as("bk"))
+        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
 
   /** MinHash+LSH near-duplicate pairs.
@@ -475,7 +452,7 @@ object Dedup {
       maxShingleDf: Int
   ): DataFrame = {
     val sh = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-      shinglesFor(df.sparkSession)(tokens(col(textCol)), shingleN).as("sh"))
+      shingles(tokens(col(textCol)), shingleN).as("sh"))
     val sizes = sh.select(col("id"), size(col("sh")).as("n"))
     val posting = sh.select(col("id"), col("blk"), explode(col("sh")).as("g"))
     // Hot-shingle defense: a shingle shared by f documents in a block emits
@@ -503,41 +480,18 @@ object Dedup {
   }
 
   /** 60-bit SimHash over the token multiset: bit i is set when at least half
-    * the tokens have bit i set in their 60-bit hash.
-    *
-    * Two left folds: token hashes → per-bit counts (one pass over tokens,
-    * zip_with against the literal power array), then counts → bit field.
-    * Each token is hashed exactly once; nothing heavy sits in a lambda body. */
-  def simhash(toks: Column): Column = {
-    val powers = typedlit((0 until 60).map(1L << _))
-    val th     = transform(toks, hash60(_))
-    val counts = aggregate(th, array_repeat(lit(0L), 60),
-      (acc, h) => zip_with(acc, powers,
-        (c, p) => c + when(h.bitwiseAND(p) =!= 0, 1L).otherwise(0L)))
-    // coalesce marks the simhash non-nullable — see the note on bandKeys:
-    // without it the chunk join's inferred IsNotNull duplicates this whole
-    // fold into a pre-exchange Filter.
-    coalesce(
-      aggregate(
-        zip_with(counts, powers, (c, p) => when(c * 2 >= size(toks), p).otherwise(lit(0L))),
-        lit(0L), _ + _),
-      lit(0L))
-  }
+    * the tokens have bit i set in their 60-bit [[hash60]] (graft_simhash60
+    * kernel over graft_hash60_arr). The kernel is null-propagating; the
+    * `coalesce(_, 0)` gives a null input the result 0 and marks the hash
+    * non-nullable — see the note on bandKeys: without it the chunk join's
+    * inferred IsNotNull clones the whole hash into a pre-exchange Filter. */
+  private[graft] def simhash(toks: Column): Column =
+    coalesce(column(SimHash60(expression(hash60Arr(toks)))), lit(0L))
 
   /** SimHash near-dup pairs via chunk bucketing: the 60-bit simhash splits
     * into 4 15-bit chunks; by pigeonhole, pairs within hamming distance 3
     * share at least one chunk. Candidates equi-join on (chunk index, chunk
     * value) and are verified with the exact hamming distance. */
-  /** Kernel dispatch for simhash — see minhashSigFor. The kernel is
-    * null-propagating, so it gets the same `coalesce(_, 0)` the HOF fold
-    * carries: identical null-input result (0L) AND a non-nullable join key
-    * (otherwise the chunk join's inferred IsNotNull clones the whole hash
-    * into a pre-exchange Filter). */
-  private def simhashFor(spark: org.apache.spark.sql.SparkSession)(toks: Column): Column =
-    if (spark.catalog.functionExists("graft_simhash60"))
-      coalesce(call_function("graft_simhash60", hash60ArrFor(spark)(toks)), lit(0L))
-    else simhash(toks)
-
   def simhashNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -545,7 +499,7 @@ object Dedup {
       maxHamming: Int = 8
   ): DataFrame = {
     val hashed = df.select(col(idCol).as("id"),
-      simhashFor(df.sparkSession)(tokens(col(textCol))).as("simhash"))
+      simhash(tokens(col(textCol))).as("simhash"))
     val chunks = hashed.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(j =>
         struct(lit(j).as("chunk"),
@@ -587,9 +541,8 @@ object Dedup {
       threshold: Double = 0.7,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val spark = df.sparkSession
     val sh = scope.cache(df.select(col(idCol).as("id"),
-      shinglesFor(spark)(tokens(col(textCol)), shingleN).as("sh")))
+      shingles(tokens(col(textCol)), shingleN).as("sh")))
     val grams = sh.select(col("id"), explode(col("sh")).as("g"))
     // Shingle lists are distinct, so the per-pair shared-gram COUNT from
     // the exploded self-join IS |intersection| — no per-pair array

@@ -50,7 +50,6 @@ object Packing {
       stride: Int
   ): DataFrame = {
     require(window > 0 && stride > 0, "window and stride must be positive")
-    val spark = df.sparkSession
     df.select(col(idCol), TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
         posexplode(transform(
@@ -59,7 +58,7 @@ object Packing {
           .as(Seq("chunk_id", "__chunk")))
       .select(col(idCol), col("chunk_id"),
         size(col("__chunk")).as("n_chunk_tokens"),
-        TextFunctions.md5For(spark)(concat_ws(" ", col("__chunk"))).as("chunk_fp"))
+        TextFunctions.md5Hex(concat_ws(" ", col("__chunk"))).as("chunk_fp"))
   }
 
   /** One row per packed sequence: (bucket, seq_id, n_docs, seq_tokens,
@@ -73,12 +72,11 @@ object Packing {
       budget: Int,
       buckets: Int
   ): DataFrame = {
-    val spark = df.sparkSession
     val keyed = df.select(
       col(idCol),
       TextFunctions.tokenCount(col(textCol)).as("n_tokens"),
-      Corpus.hashBucketFor(spark)(col(idCol), buckets).as("bucket"),
-      TextFunctions.md5For(spark)(col(idCol).cast("string")).as("__h"))
+      Corpus.hashBucket(col(idCol), buckets).as("bucket"),
+      TextFunctions.md5Hex(col(idCol).cast("string")).as("__h"))
     val w = Window.partitionBy("bucket").orderBy(col("__h"), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     keyed

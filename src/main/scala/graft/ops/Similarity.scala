@@ -1,16 +1,19 @@
 package graft.ops
 
+import graft.ext.{CosineSimilarity, SignLshBucket}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanAccess.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
   * Design for 100 TB:
-  *  - All arithmetic is built-in higher-order functions (`zip_with` +
-  *    `aggregate`) in double precision — codegen'd, no UDFs, and bit-for-bit
-  *    reproducible by the DuckDB oracle via `list_reduce` (both are strict
-  *    left folds in element order).
+  *  - All arithmetic is in double precision and codegen'd, with no UDFs:
+  *    cosine and sign-LSH buckets are graft.ext kernels, the dot product a
+  *    built-in higher-order fold (`zip_with` + `aggregate`). Each is a
+  *    strict left fold in element order, so the DuckDB oracle's
+  *    `list_reduce` reproduces it bit for bit.
   *  - Brute-force top-k broadcasts the query set (small side) and relies on
   *    Spark's InferWindowGroupLimit (3.5+) to push `rank <= k` into partial
   *    per-partition top-k before the shuffle — no full sort of the scored
@@ -28,15 +31,11 @@ object Similarity {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), _ + _)
 
+  /** Cosine similarity by the one-pass graft_cosine kernel: it accumulates
+    * left to right in double precision, like [[dotDouble]] and the DuckDB
+    * oracle's `list_reduce`. */
   def cosine(a: Column, b: Column): Column =
-    dotDouble(a, b) / (sqrt(dotDouble(a, a)) * sqrt(dotDouble(b, b)))
-
-  /** Cosine via the codegen'd one-pass kernel (graft.ext.GraftExtensions)
-    * when registered in the session, else the portable HOF fold. Both
-    * accumulate left-to-right in double precision — bit-identical results. */
-  def cosineFor(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_cosine")) call_function("graft_cosine", a, b)
-    else cosine(a, b)
+    column(CosineSimilarity(expression(a), expression(b)))
 
   /** Exact top-k cosine neighbors of each query vector.
     * `queries` must be small (it is broadcast); both frames need
@@ -50,11 +49,10 @@ object Similarity {
   ): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val cos = cosineFor(corpus.sparkSession) _
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("cvec")).as("sim"))
+        cosine(col("qvec"), col("cvec")).as("sim"))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
@@ -81,11 +79,10 @@ object Similarity {
   ): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val cos = cosineFor(corpus.sparkSession) _
     c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("cvec")).as("sim"))
+        cosine(col("qvec"), col("cvec")).as("sim"))
       .filter(col("sim") >= minSim)
   }
 
@@ -113,12 +110,11 @@ object Similarity {
       col(labelCol).cast("long").as("neg_label"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       col(labelCol).cast("long").as("anchor_label"))
-    val cos = cosineFor(corpus.sparkSession) _
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id") &&
         col("neg_label") =!= col("anchor_label"))
       .select(col("query_id"), col("anchor_label"), col("neighbor_id"),
-        col("neg_label"), cos(col("qvec"), col("cvec")).as("sim"))
+        col("neg_label"), cosine(col("qvec"), col("cvec")).as("sim"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -159,9 +155,8 @@ object Similarity {
       vecCol: String,
       cent: Seq[(Long, Seq[Double])]
   ): DataFrame = {
-    val cos = cosineFor(df.sparkSession) _
     df.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"))
-      .withColumn("cell", nearestCell(cos)(col("nvec"), cent))
+      .withColumn("cell", nearestCell(col("nvec"), cent))
   }
 
   /** The distinct cells a probe batch opens (each query's `nprobe`
@@ -174,10 +169,9 @@ object Similarity {
       vecCol: String,
       nprobe: Int
   ): Seq[Long] = {
-    val cos = cosineFor(queries.sparkSession) _
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val candArr = array(cent.map { case (cid, cv) =>
-      struct(cos(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
+      struct(cosine(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
     }: _*)
     val w = Window.partitionBy("query_id")
       .orderBy(col("cand.csim").desc, col("cand.cent_id").asc)
@@ -200,10 +194,9 @@ object Similarity {
       k: Int,
       nprobe: Int
   ): DataFrame = {
-    val cos = cosineFor(queries.sparkSession) _
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val candArr = array(cent.map { case (cid, cv) =>
-      struct(cos(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
+      struct(cosine(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
     }: _*)
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("cand.csim").desc, col("cand.cent_id").asc)
@@ -215,7 +208,7 @@ object Similarity {
     probes.join(index.select(col("neighbor_id"), col("nvec"), col("cell")), "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("nvec")).as("sim"))
+        cosine(col("qvec"), col("nvec")).as("sim"))
       .withColumn("rank", row_number().over(wRank)).filter(col("rank") <= k)
   }
 
@@ -242,11 +235,10 @@ object Similarity {
       col(labelCol).cast("long").as("nl"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       col(labelCol).cast("long").as("true_label"))
-    val cos = cosineFor(corpus.sparkSession) _
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("true_label"), col("neighbor_id"), col("nl"),
-        cos(col("qvec"), col("cvec")).as("sim"))
+        cosine(col("qvec"), col("cvec")).as("sim"))
     val wk = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     val votes = scored.withColumn("rk", row_number().over(wk))
@@ -285,11 +277,10 @@ object Similarity {
       col(labelCol).cast("long").as("other_label"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       col(labelCol).cast("long").as("anchor_label"))
-    val cos = cosineFor(corpus.sparkSession) _
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("other_id"))
       .select(col("query_id"), col("anchor_label"), col("other_id"),
-        cos(col("qvec"), col("cvec")).as("sim"),
+        cosine(col("qvec"), col("cvec")).as("sim"),
         (col("other_label") === col("anchor_label")).as("same"))
     val w = Window.partitionBy("query_id", "same")
       .orderBy(col("sim").desc, col("other_id").asc)
@@ -339,7 +330,6 @@ object Similarity {
       rounds: Int = 2
   ): Seq[(Long, Seq[Double])] = {
     import org.apache.spark.sql.types.DecimalType
-    val cos = cosineFor(corpus.sparkSession) _
     val vecs = corpus
       .select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), _.cast("double")).as("v"))
@@ -375,7 +365,7 @@ object Similarity {
       // component. Refuse ragged input instead of averaging it wrong
       // (r12 ADVICE); the contract is fixed-dim embeddings.
       val sums = vecs
-        .groupBy(nearestCell(cos)(col("v"), cent).as("cell"))
+        .groupBy(nearestCell(col("v"), cent).as("cell"))
         .agg(count(lit(1)).as("n"),
           (min(size(col("v"))).as("minsz") +: max(size(col("v"))).as("maxsz") +:
             sumCols): _*)
@@ -406,10 +396,9 @@ object Similarity {
   /** Nearest-centroid cell id as a pure projection over literal centroids:
     * `max(struct(csim, -cent_id)).(-neg)` — highest cosine, ties to the
     * smallest centroid id. No join, no shuffle, non-degenerate for k >= 1. */
-  def nearestCell(cos: (Column, Column) => Column)(
-      vec: Column, cent: Seq[(Long, Seq[Double])]): Column = {
+  def nearestCell(vec: Column, cent: Seq[(Long, Seq[Double])]): Column = {
     val cands = cent.map { case (cid, cv) =>
-      struct(cos(vec, typedlit(cv)).as("csim"), lit(-cid).as("neg"))
+      struct(cosine(vec, typedlit(cv)).as("csim"), lit(-cid).as("neg"))
     }
     -array_max(array(cands: _*)).getField("neg")
   }
@@ -436,7 +425,6 @@ object Similarity {
       vecCol: String,
       k: Int
   ): DataFrame = {
-    val cos = cosineFor(corpus.sparkSession) _
     val vecs = corpus
       .select(col(idCol).cast("long").as("vec_id"),
         transform(col(vecCol), _.cast("double")).as("v"))
@@ -447,7 +435,7 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
     var it = cent.size
     while (it < k) {
-      val maxSim = cent.map { case (_, cv) => cos(col("v"), typedlit(cv)) }
+      val maxSim = cent.map { case (_, cv) => cosine(col("v"), typedlit(cv)) }
         .reduce(greatest(_, _))
       val far = vecs.filter(!col("vec_id").isInCollection(cent.map(_._1)))
         .select(col("vec_id"), col("v"), maxSim.as("ms"))
@@ -458,7 +446,7 @@ object Similarity {
       it += 1
     }
     val best = array_max(array(cent.map { case (cid, cv) =>
-      struct(cos(col("v"), typedlit(cv)).as("csim"), lit(-cid).as("neg"))
+      struct(cosine(col("v"), typedlit(cv)).as("csim"), lit(-cid).as("neg"))
     }: _*))
     vecs.select(col("vec_id"),
       (-best.getField("neg")).as("center_id"),
@@ -494,12 +482,11 @@ object Similarity {
       .groupBy("label")
       .agg(transform(sort_array(collect_list(struct(col("pos"), col("mu")))),
         _.getField("mu")).as("cv"))
-    val cos = cosineFor(df.sparkSession) _
     vecs.join(broadcast(cents), "label")
       .groupBy("label")
       .agg(
         count(lit(1)).as("n_vecs"),
-        (sum(cos(col("v"), col("cv")).cast(dec)).cast("double") /
+        (sum(cosine(col("v"), col("cv")).cast(dec)).cast("double") /
           count(lit(1))).as("mc"),
         first(col("cv")).as("cv"))
       .select(col("label"), col("n_vecs"),
@@ -685,10 +672,9 @@ object Similarity {
           _.getField("mu")).as("cv"), max(col("n")).as("n"))
     val a = cents(dfA).select(col("label"), col("n").as("n_a"), col("cv").as("cva"))
     val b = cents(dfB).select(col("label"), col("n").as("n_b"), col("cv").as("cvb"))
-    val cos = cosineFor(dfA.sparkSession) _
     a.join(b, Seq("label"))
       .select(col("label"), col("n_a"), col("n_b"),
-        round(cos(col("cva"), col("cvb")), 6).as("centroid_cos"))
+        round(cosine(col("cva"), col("cvb")), 6).as("centroid_cos"))
   }
 
   /** Product-quantization reconstruction — the MEMORY-side ANN scale path
@@ -722,11 +708,10 @@ object Similarity {
     // trainer's flat arm, bit-identical to training here
     val books = pqBooks.getOrElse(
       pqCodebooks(corpus, idCol, vecCol, dim, m, k, lloydRounds))
-    val cos = cosineFor(corpus.sparkSession) _
     corpus.select(col(idCol).cast("long").as("id"),
       transform(col(vecCol), _.cast("double")).as("v"))
       .filter(col("v").isNotNull)
-      .select(col("id").as(idCol), pqReconCol(cos, books, dim)(col("v")).as("pq_vec"))
+      .select(col("id").as(idCol), pqReconCol(books, dim)(col("v")).as("pq_vec"))
   }
 
   /** The code-reconstruction column v̂ for one vector column against
@@ -734,14 +719,13 @@ object Similarity {
     * literals, shareable with other per-vector projections (cell
     * assignment, norms) so an index build stays one pass. */
   def pqReconCol(
-      cos: (Column, Column) => Column,
       books: IndexedSeq[Seq[(Long, Seq[Double])]],
       dim: Int)(v: Column): Column = {
     val m = books.size
     val sub = dim / m
     concat((0 until m).map { j =>
       val sv = slice(v, j * sub + 1, sub)
-      element_at(typedlit(books(j).toMap), nearestCell(cos)(sv, books(j)))
+      element_at(typedlit(books(j).toMap), nearestCell(sv, books(j)))
     }: _*)
   }
 
@@ -760,7 +744,6 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
     import org.apache.spark.sql.types.DecimalType
     val sub = dim / m
-    val cos = cosineFor(corpus.sparkSession) _
     val vecs = corpus.select(col(idCol).cast("long").as("id"),
       transform(col(vecCol), _.cast("double")).as("v"))
       .filter(col("v").isNotNull)
@@ -792,7 +775,7 @@ object Similarity {
       // into one codegen stage. Keep this shape unless a measurement
       // says otherwise.)
       val cells = (0 until m).map { j =>
-        nearestCell(cos)(slice(col("v"), j * sub + 1, sub), books(j)).as(s"c$j")
+        nearestCell(slice(col("v"), j * sub + 1, sub), books(j)).as(s"c$j")
       }
       val sums = vecs.select(col("v") +: cells: _*)
         .select(array((0 until m).map(j => col(s"c$j")): _*).as("cs"),
@@ -845,7 +828,6 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"dim=$dim must be divisible by m=$m")
     import org.apache.spark.sql.types.DecimalType
     val sub = dim / m
-    val cos = cosineFor(corpus.sparkSession) _
     val centMap = typedlit(coarse.toMap)
     val raw = corpus.select(col(idCol).cast("long").as("id"),
       transform(col(vecCol), _.cast("double")).as("v"))
@@ -856,7 +838,7 @@ object Similarity {
         struct(lit(0).as("arm"), col("v").as("v")),
         struct(lit(1).as("arm"),
           zip_with(col("v"),
-            element_at(centMap, nearestCell(cos)(col("v"), coarse)),
+            element_at(centMap, nearestCell(col("v"), coarse)),
             (x, c) => x - c).as("v"))
       )).as("e"))
       .select(col("id"), col("e.arm").as("arm"), col("e.v").as("v"))
@@ -883,9 +865,9 @@ object Similarity {
       // collapse-inlined cell recompute tradeoff applies — see there)
       val cells = (0 until m).map { j =>
         when(col("arm") === 0,
-            nearestCell(cos)(slice(col("v"), j * sub + 1, sub), books(0)(j)))
+            nearestCell(slice(col("v"), j * sub + 1, sub), books(0)(j)))
           .otherwise(
-            nearestCell(cos)(slice(col("v"), j * sub + 1, sub), books(1)(j)))
+            nearestCell(slice(col("v"), j * sub + 1, sub), books(1)(j)))
           .as(s"c$j")
       }
       val sums = both.select(col("arm") +: col("v") +: cells: _*)
@@ -990,7 +972,6 @@ object Similarity {
       corpusFilter: Column = lit(true),
       coarse: Option[Seq[(Long, Seq[Double])]] = None
   ): DataFrame = {
-    val cos = cosineFor(corpus.sparkSession) _
     // see ivfIndex: a registry-loaded codebook skips training outright
     val cent = coarse.getOrElse(
       kmeansCentroids(corpus, idCol, vecCol, numCentroids, lloydRounds))
@@ -1004,13 +985,13 @@ object Similarity {
     val assigned = corpus
       .filter(corpusFilter)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"))
-      .withColumn("cell", nearestCell(cos)(col("nvec"), cent))
+      .withColumn("cell", nearestCell(col("nvec"), cent))
 
     // probes: nprobe nearest centroids per query (queries are small; the
     // explode adds k rows per query and the rank window shuffles only that)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val candArr = array(cent.map { case (cid, cv) =>
-      struct(cos(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
+      struct(cosine(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
     }: _*)
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("cand.csim").desc, col("cand.cent_id").asc)
@@ -1024,7 +1005,7 @@ object Similarity {
     probes.join(assigned, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("nvec")).as("sim"))
+        cosine(col("qvec"), col("nvec")).as("sim"))
       .withColumn("rank", row_number().over(wRank)).filter(col("rank") <= k)
   }
 
@@ -1059,7 +1040,6 @@ object Similarity {
       pqBooks: Option[IndexedSeq[Seq[(Long, Seq[Double])]]] = None,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val cos = cosineFor(corpus.sparkSession) _
     // `coarse`/`pqBooks` let an eval harness train the quantizers ONCE
     // and share them across index variants (the sweep/tuner precedent):
     // the Lloyd rounds are driver-collected jobs over the corpus,
@@ -1085,12 +1065,12 @@ object Similarity {
         transform(col(vecCol), _.cast("double")).as("nv"))
       .filter(col("nv").isNotNull)
       .select(col("neighbor_id"),
-        nearestCell(cos)(col("nv"), cent).as("cell"),
-        pqReconCol(cos, books, dim)(col("nv")).as("pq_vec")))
+        nearestCell(col("nv"), cent).as("cell"),
+        pqReconCol(books, dim)(col("nv")).as("pq_vec")))
 
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val candArr = array(cent.map { case (cid, cv) =>
-      struct(cos(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
+      struct(cosine(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
     }: _*)
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("cand.csim").desc, col("cand.cent_id").asc)
@@ -1103,7 +1083,7 @@ object Similarity {
     probes.join(assigned, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("pq_vec")).as("sim"))
+        cosine(col("qvec"), col("pq_vec")).as("sim"))
       .withColumn("rank", row_number().over(wRank)).filter(col("rank") <= k)
   }
 
@@ -1139,7 +1119,6 @@ object Similarity {
       pqBooks: Option[IndexedSeq[Seq[(Long, Seq[Double])]]] = None,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val cos = cosineFor(corpus.sparkSession) _
     // see ivfPqTopK: a shared pre-trained coarse quantizer makes flat-vs-
     // residual comparisons differ ONLY in the PQ encoding, and halves the
     // eval bill; `pqBooks` takes residual-trained books (e.g. from
@@ -1160,7 +1139,7 @@ object Similarity {
     // in-session). With pre-trained books the frame has exactly one
     // consumer and caching would be pure overhead.
     val residPlain = vecs
-      .select(col("id"), nearestCell(cos)(col("v"), cent).as("cell"), col("v"))
+      .select(col("id"), nearestCell(col("v"), cent).as("cell"), col("v"))
       .select(col("id"), col("cell"),
         zip_with(col("v"), element_at(centMap, col("cell")),
           (x, c) => x - c).as("rv"))
@@ -1175,11 +1154,11 @@ object Similarity {
     val assigned = scope.cache(
       resid.select(col("id").as("neighbor_id"), col("cell"),
         zip_with(element_at(centMap, col("cell")),
-          pqReconCol(cos, books, dim)(col("rv")), (c, r) => c + r).as("pq_vec")))
+          pqReconCol(books, dim)(col("rv")), (c, r) => c + r).as("pq_vec")))
 
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val candArr = array(cent.map { case (cid, cv) =>
-      struct(cos(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
+      struct(cosine(col("qvec"), typedlit(cv)).as("csim"), lit(cid).as("cent_id"))
     }: _*)
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("cand.csim").desc, col("cand.cent_id").asc)
@@ -1192,7 +1171,7 @@ object Similarity {
     probes.join(assigned, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("pq_vec")).as("sim"))
+        cosine(col("qvec"), col("pq_vec")).as("sim"))
       .withColumn("rank", row_number().over(wRank)).filter(col("rank") <= k)
   }
 
@@ -1359,11 +1338,10 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     val cvec = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
     val qvec = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val cos = cosineFor(corpus.sparkSession) _
     val scored = cvec.join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(qvec), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cos(col("qvec"), col("cvec")).as("sim"))
+        cosine(col("qvec"), col("cvec")).as("sim"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -1392,7 +1370,6 @@ object Similarity {
   ): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     val spark = corpus.sparkSession
-    val cos = cosineFor(spark) _
     val cand = bqTopK(corpus, queries, idCol, vecCol, dim, shortlist)
       .select(col("query_id"), col("neighbor_id"))
     val cvec = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
@@ -1402,7 +1379,7 @@ object Similarity {
       .join(broadcast(qvec), Seq("query_id"))
       .select(col("query_id"),
         struct(col("neighbor_id").as("nid"),
-          cos(col("qvec"), col("cvec")).as("rel"),
+          cosine(col("qvec"), col("cvec")).as("rel"),
           transform(col("cvec"), _.cast("double")).as("v")).as("c"))
       .groupBy(col("query_id"))
       .agg(sort_array(collect_list(col("c"))).as("cands"))
@@ -1464,29 +1441,14 @@ object Similarity {
     }
 
   /** Sign-LSH bucket id in [0, 2^planes) from plane family `firstPlane ..
-    * firstPlane+planes-1`: bit j set iff dot(v, plane_{firstPlane+j}) >= 0.
-    * Plane components are plan literals — nothing is shipped at runtime. */
-  def lshBucket(vec: Column, planes: Int, dim: Int, firstPlane: Int = 0): Column = {
-    val signs = hyperplaneSigns(firstPlane + planes, dim)
-    val bits = (0 until planes).map { j =>
-      when(dotDouble(vec, typedlit(signs(firstPlane + j))) >= 0, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
-    // NULL / wrong-length vectors map to bucket -1 (matching the codegen'd
-    // graft_lsh_bucket kernel); coalesce marks the bucket non-nullable so
-    // the bucket equi-join can't infer an IsNotNull constraint that would
-    // clone all `planes` dot products into a pre-exchange Filter (see
-    // Dedup.bandKeys).
-    coalesce(when(vec.isNotNull && size(vec) === dim, bits), lit(-1))
-  }
-
-  /** lshBucket via the codegen'd one-pass kernel when graft.ext.GraftExtensions
-    * is registered, else the portable HOF form — per-plane sums accumulate in
-    * identical element order, so buckets are bit-identical. */
-  def lshBucketFor(spark: org.apache.spark.sql.SparkSession)(
-      vec: Column, planes: Int, dim: Int, firstPlane: Int = 0): Column =
-    if (spark.catalog.functionExists("graft_lsh_bucket"))
-      call_function("graft_lsh_bucket", vec, lit(planes), lit(dim), lit(firstPlane))
-    else lshBucket(vec, planes, dim, firstPlane)
+    * firstPlane+planes-1`: bit j set iff dot(v, plane_{firstPlane+j}) >= 0,
+    * by the one-pass graft_lsh_bucket kernel over the [[hyperplaneSigns]]
+    * planes. NULL and wrong-length vectors map to bucket -1, which keeps
+    * the bucket non-nullable: the bucket equi-join then can't infer an
+    * IsNotNull constraint that would clone the dot products into a
+    * pre-exchange Filter (see Dedup.bandKeys). */
+  def lshBucket(vec: Column, planes: Int, dim: Int, firstPlane: Int = 0): Column =
+    column(SignLshBucket(expression(vec), planes, dim, firstPlane))
 
   /** Approximate cosine near-dup pairs: banded sign-LSH with OR-amplification.
     *
@@ -1510,12 +1472,11 @@ object Similarity {
       bands: Int = 1,
       threshold: Double = 0.3
   ): DataFrame = {
-    val bucketOf = lshBucketFor(df.sparkSession) _
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     val banded = vecs.select(col("id"), col("v"),
       explode(array((0 until bands).map(t =>
         struct(lit(t).as("band"),
-          bucketOf(col("v"), planes, dim, t * planes).as("bucket"))): _*)).as("tb"))
+          lshBucket(col("v"), planes, dim, t * planes).as("bucket"))): _*)).as("tb"))
       .select(col("id"), col("tb.band").as("band"), col("tb.bucket").as("bucket"))
     val cand = banded.as("a")
       .join(banded.as("b"),
@@ -1523,11 +1484,10 @@ object Similarity {
           col("a.id") < col("b.id"))
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
       .distinct()
-    val cos = cosineFor(df.sparkSession) _
     cand
       .join(vecs.withColumnRenamed("v", "va"), col("a_id") === col("id")).drop("id")
       .join(vecs.withColumnRenamed("v", "vb"), col("b_id") === col("id")).drop("id")
-      .select(col("a_id"), col("b_id"), cos(col("va"), col("vb")).as("sim"))
+      .select(col("a_id"), col("b_id"), cosine(col("va"), col("vb")).as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -1558,7 +1518,6 @@ object Similarity {
       coarse: Option[Seq[(Long, Seq[Double])]] = None,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    val cos = cosineFor(df.sparkSession) _
     // registry-loaded codebook skips training outright (see ivfIndex)
     val cent = coarse.getOrElse(
       kmeansCentroids(df, idCol, vecCol, numCentroids, lloydRounds))
@@ -1567,11 +1526,11 @@ object Similarity {
     val assigned = scope.cache(df
       .select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), _.cast("double")).as("v"))
-      .withColumn("cell", nearestCell(cos)(col("v"), cent)))
+      .withColumn("cell", nearestCell(col("v"), cent)))
     val pruned = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("b.id") < col("a.id") &&
-          cos(col("a.v"), col("b.v")) >= tau,
+          cosine(col("a.v"), col("b.v")) >= tau,
         "left_semi")
       .select(col("id").as("pid"))
     assigned.join(pruned, col("id") === col("pid"), "left")
@@ -1601,12 +1560,11 @@ object Similarity {
       scope: CacheScope = new CacheScope
   ): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val cos = cosineFor(df.sparkSession) _
     // registry-loaded codebook skips training outright (see ivfIndex)
     val cent = coarse.getOrElse(
       kmeansCentroids(df, idCol, vecCol, numCentroids, lloydRounds))
     val best = array_max(array(cent.map { case (_, cv) =>
-      cos(col("v"), typedlit(cv))
+      cosine(col("v"), typedlit(cv))
     }: _*))
     // canonicalize through DECIMAL so the quantile cut (an interpolation
     // over sorted values) sees identical inputs in both engines; cached —
@@ -1645,14 +1603,13 @@ object Similarity {
       perCell: Int = 10,
       coarse: Option[Seq[(Long, Seq[Double])]] = None
   ): DataFrame = {
-    val cos = cosineFor(df.sparkSession) _
     // registry-loaded codebook skips training outright (see ivfIndex)
     val cent = coarse.getOrElse(
       kmeansCentroids(df, idCol, vecCol, numCentroids, lloydRounds))
     val assigned = df
       .select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), _.cast("double")).as("v"))
-      .withColumn("cell", nearestCell(cos)(col("v"), cent))
+      .withColumn("cell", nearestCell(col("v"), cent))
     val w = Window.partitionBy("cell")
       .orderBy(md5(col("id").cast("string")), col("id"))
     assigned.withColumn("rank", row_number().over(w))
@@ -1769,7 +1726,6 @@ object Similarity {
       scope: CacheScope = new CacheScope
   ): DataFrame = {
     import corpus.sparkSession.implicits._
-    val cos = cosineFor(corpus.sparkSession) _
     val vecs = scope.cache(corpus.select(
       col(idCol).cast("long").as("node"),
       transform(col(vecCol), _.cast("double")).as("nv")))
@@ -1787,7 +1743,7 @@ object Similarity {
       .collect().map(_.getLong(0)).toSeq
     def scored(cand: DataFrame): DataFrame =
       cand.join(vecs, "node").join(probeVecs, "query_id")
-        .select(col("query_id"), col("node"), cos(col("qv"), col("nv")).as("sim"))
+        .select(col("query_id"), col("node"), cosine(col("qv"), col("nv")).as("sim"))
     val wBeam = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("node").asc)
     // LAZY navigation: the rounds chain as ONE declarative plan — the
@@ -1929,16 +1885,15 @@ object Similarity {
       scope: CacheScope = new CacheScope
   ): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val cos = cosineFor(df.sparkSession) _
     // registry-loaded codebook skips training outright (see ivfIndex)
     val cent = coarse.getOrElse(
       kmeansCentroids(df, idCol, vecCol, numCentroids, lloydRounds))
     val assigned = scope.cache(df
       .select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), _.cast("double")).as("v"))
-      .withColumn("cell", nearestCell(cos)(col("v"), cent)))
+      .withColumn("cell", nearestCell(col("v"), cent)))
     val width = 2.0 / nBins
-    val sim = cos(col("a.v"), col("b.v")).cast(DecimalType(20, 12)).cast("double")
+    val sim = cosine(col("a.v"), col("b.v")).cast(DecimalType(20, 12)).cast("double")
     assigned.as("a")
       .join(assigned.as("b"), col("a.cell") === col("b.cell") && col("b.id") < col("a.id"))
       .select(least(floor((sim + lit(1.0)) / width), lit(nBins - 1)).cast("int").as("bin"))

@@ -162,7 +162,7 @@ class OpsSpec extends AnyFlatSpec with Matchers {
 
   it should "give identical minhash signatures to identical shingle sets" in {
     val sigs = Seq("a b c d e", "a b c d e", "v w x y z").toDF("text")
-      .select(Dedup.minhashSignature(
+      .select(Dedup.minhashSig(
         TextFunctions.shingles(TextFunctions.tokens(col("text")), 3), 16).as("sig"))
       .collect().map(_.getSeq[Long](0))
     sigs(0) shouldBe sigs(1)
