@@ -292,7 +292,7 @@ private[graft] object DedupQueries {
     // whose corpus-wide fingerprint recurs (where the dedup budget goes).
     Query("dedup_rate_by_source", (s, dir) =>
       graft.ops.Dedup.dupRateBySource(
-        spread(s, table(s, dir, "documents")), "doc_id", "text", "source"),
+        spread(s, table(s, dir, "documents")), "text", "source"),
       """WITH f AS (SELECT source, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp FROM documents),
         |tot AS (SELECT fp, count(*) AS tot FROM f GROUP BY 1)
         |SELECT f.source, count(*) AS n_docs,

@@ -883,7 +883,7 @@ private[graft] object DocsQueries {
     // to docs_quality_calibration's quartile agreement.
     Query("docs_quality_ece", (s, dir) =>
       graft.ops.Corpus.calibrationEce(
-        spread(s, table(s, dir, "documents")), "doc_id", "text"),
+        spread(s, table(s, dir, "documents")), "text"),
       """WITH t AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS toks FROM documents),
         |qq AS (SELECT
         |  least(len(toks) / 100.0, 1.0) * 0.4 + (1.0 - (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / greatest(length(text), 1)) * 0.3 + (len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','that','this'], x))) / greatest(len(toks), 1)) * 0.3 AS q,

@@ -631,7 +631,6 @@ private[graft] object TextQueries {
       import s.implicits._
       val M = graft.sources.ManifestTable
       val R = graft.ops.Retrieval
-      val docs = table(s, dir, "documents").select("doc_id", "text")
       val corpusDir = fixDocsTextCopy(s, "retrdel_corpus", dir) // private copy: DV-erased below
       val v0 = M.currentVersion(s, corpusDir)
       val corpus0 = M.read(s, corpusDir)

@@ -1194,7 +1194,7 @@ object Corpus {
   ): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    learnMerges(df, textCol, nMerges, maxChain)
+    learnMerges(df, textCol, nMerges)
       .toDF("merge_idx", "left_sym", "right_sym", "pair_count")
   }
 
@@ -1213,7 +1213,7 @@ object Corpus {
       nMerges: Int = 12,
       maxChain: Int = 6
   ): DataFrame =
-    bpeVocabularyWith(df, textCol, learnMerges(df, textCol, nMerges, maxChain))
+    bpeVocabularyWith(df, textCol, learnMerges(df, textCol, nMerges))
 
   /** [[bpeVocabulary]] with a PRECOMPUTED merge table (e.g. loaded from
     * a committed tokenizer registry) — the [[bpeSegmentWith]] companion:
@@ -1247,7 +1247,7 @@ object Corpus {
       nMerges: Int = 12,
       maxChain: Int = 6
   ): Seq[(Int, String, String, Long)] =
-    learnMerges(df, textCol, nMerges, maxChain)
+    learnMerges(df, textCol, nMerges)
 
   /** BPE segmentation with the merges [[bpeMerges]] learns: per document,
     * word-token and BPE-token counts plus tokens-per-word — the REAL
@@ -1284,7 +1284,7 @@ object Corpus {
       broadcastVocab: Boolean = true
   ): DataFrame =
     bpeSegmentWith(df, idCol, textCol,
-      learnMerges(df, textCol, nMerges, maxChain), broadcastVocab)
+      learnMerges(df, textCol, nMerges), broadcastVocab)
 
   /** [[bpeSegment]] with a PRECOMPUTED merge table — the production
     * shape: a tokenizer trains once ([[bpeMerges]]) and ships its merge
@@ -1392,7 +1392,6 @@ object Corpus {
       df: DataFrame,
       textCol: String,
       nMerges: Int,
-      maxChain: Int,
       onRound: (Int, Long) => Unit = (_, _) => ()
   ): Seq[(Int, String, String, Long)] = {
     var words = df.select(explode(tokens(col(textCol))).as("w"))
@@ -1510,8 +1509,8 @@ object Corpus {
       nMerges: Int = 12
   ): DataFrame =
     bpeVocabDriftWith(dfA.sparkSession,
-      learnMerges(dfA, textCol, nMerges, maxChain = 6),
-      learnMerges(dfB, textCol, nMerges, maxChain = 6))
+      learnMerges(dfA, textCol, nMerges),
+      learnMerges(dfB, textCol, nMerges))
 
   /** [[bpeVocabDrift]] over two PRECOMPUTED merge tables — the pure
     * comparison step, for merges loaded from committed tokenizer
@@ -2306,7 +2305,6 @@ object Corpus {
     * the ECE total is an unbounded-window sum over #bins rows. */
   def calibrationEce(
       df: DataFrame,
-      idCol: String,
       textCol: String,
       bins: Int = 10,
       scope: CacheScope = new CacheScope

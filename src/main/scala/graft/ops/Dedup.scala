@@ -37,7 +37,6 @@ object Dedup {
     * posture at document granularity; text never shuffles. */
   def dupRateBySource(
       df: DataFrame,
-      idCol: String,
       textCol: String,
       sourceCol: String
   ): DataFrame = {

@@ -54,7 +54,6 @@ object Quality {
 
   def constraintReport(df: DataFrame, constraints: Seq[Constraint]): DataFrame = {
     require(constraints.nonEmpty, "no constraints given")
-    val spark = df.sparkSession
 
     val rowLocal = constraints.collect {
       case c: NotNull => c.name ->

@@ -1725,7 +1725,6 @@ object Similarity {
       entries: Int = 1,
       scope: CacheScope = new CacheScope
   ): DataFrame = {
-    import corpus.sparkSession.implicits._
     val vecs = scope.cache(corpus.select(
       col(idCol).cast("long").as("node"),
       transform(col(vecCol), _.cast("double")).as("nv")))

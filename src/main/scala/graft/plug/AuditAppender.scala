@@ -1,12 +1,14 @@
 package graft.plug
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 import org.apache.spark.sql.{Column, Encoders}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.bitset.BitSetMethods
 
 /** Builds the records of the audit-trail array column.
   *
@@ -42,7 +44,7 @@ object AuditAppender {
       struct(
         lit(ruleName).as("name"),
         lit(ruleVersion).as("version"),
-        typedlit(fieldNames).as("fieldNames")
+        array(fieldNames.map(lit): _*).as("fieldNames")
       )
   }
 
@@ -58,43 +60,87 @@ object AuditAppender {
 }
 
 /** The audit array of one row: for every set bit `b` of mask word `w`, in
-  * ascending order, record `64 * w + b` of the driver-evaluated `records`.
-  * Rule order is bit order, so records come out in rule order. Interpreted
-  * (`CodegenFallback`): the work per row is one pass over the set bits, and
-  * the generated code stays the same size for any number of rules. */
-case class FiredRecords(masks: Seq[Expression], records: ArrayData, recordType: StructType)
-    extends Expression with CodegenFallback {
+  * ascending order, record `64 * w + b` of `records`, which hold every
+  * rule's record, evaluated and encoded once as `UnsafeRow` bytes. Rule
+  * order is bit order, so records come out in rule order. Each row's array is
+  * built by [[FiredRecords.select]] as one allocation and one byte copy per
+  * record, in generated code as well as in `eval`; the generated code is one
+  * call for any number of rules, and the output projection writes the result
+  * with one copy. */
+case class FiredRecords(masks: Seq[Expression], records: UnsafeArrayData, recordType: StructType)
+    extends Expression {
 
   override def children: Seq[Expression] = masks
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(recordType, containsNull = false)
   override def toString: String = s"fired_records(${masks.mkString(", ")})"
 
-  @transient private lazy val maskArray = masks.toArray
+  // a null mask reads as 0 on both paths (unboxing null gives 0L)
+  override def eval(input: InternalRow): Any =
+    FiredRecords.select(records, masks.map(_.eval(input).asInstanceOf[Long]).toArray)
 
-  override def eval(input: InternalRow): Any = {
-    val words = new Array[Long](maskArray.length)
-    var n, w = 0
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val recordsRef = ctx.addReferenceObj("auditRecords", records, classOf[UnsafeArrayData].getName)
+    val words = masks.map(_.genCode(ctx))
+    val values = words.map(w =>
+      if (w.isNull == FalseLiteral) w.value.toString else s"(${w.isNull} ? 0L : ${w.value})")
+    ev.copy(
+      code = code"""
+        |${words.map(_.code).mkString("\n")}
+        |UnsafeArrayData ${ev.value} = graft.plug.FiredRecords.select($recordsRef,
+        |  new long[] {${values.mkString(", ")}});
+      """.stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FiredRecords =
+    copy(masks = newChildren)
+}
+
+object FiredRecords {
+  /** The records of `records` that the set bits of `words` select, in bit
+    * order, as a new `UnsafeArrayData`: one pass sums the selected records'
+    * sizes from their offset-and-size slots, the array is allocated once,
+    * and a second pass writes each slot and copies each record's bytes. */
+  def select(records: UnsafeArrayData, words: Array[Long]): UnsafeArrayData = {
+    val recordBase = records.getBaseObject
+    val recordOffset = records.getBaseOffset
+    var n, bytes, w = 0
     while (w < words.length) {
-      words(w) = maskArray(w).eval(input).asInstanceOf[Long]
-      n += java.lang.Long.bitCount(words(w))
+      var m = words(w)
+      while (m != 0) {
+        bytes += records.getLong(64 * w + java.lang.Long.numberOfTrailingZeros(m)).toInt
+        n += 1
+        m &= m - 1
+      }
       w += 1
     }
-    val out = new Array[Any](n)
+    val header = UnsafeArrayData.calculateHeaderPortionInBytes(n)
+    val out = new Array[Byte](header + 8 * n + bytes)
+    val base = Platform.BYTE_ARRAY_OFFSET
+    Platform.putLong(out, base, n)
+    var cursor = header + 8 * n
     var k = 0
     w = 0
     while (w < words.length) {
       var m = words(w)
       while (m != 0) {
-        out(k) = records.getStruct(64 * w + java.lang.Long.numberOfTrailingZeros(m), recordType.size)
+        val i = 64 * w + java.lang.Long.numberOfTrailingZeros(m)
+        if (records.isNullAt(i)) BitSetMethods.set(out, base + 8, k)
+        else {
+          val slot = records.getLong(i)
+          val size = slot.toInt
+          Platform.putLong(out, base + header + 8L * k, (cursor.toLong << 32) | size)
+          Platform.copyMemory(recordBase, recordOffset + (slot >>> 32), out, base + cursor, size)
+          cursor += size
+        }
         k += 1
         m &= m - 1
       }
       w += 1
     }
-    new GenericArrayData(out)
+    val array = new UnsafeArrayData
+    array.pointTo(out, base, out.length)
+    array
   }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FiredRecords =
-    copy(masks = newChildren)
 }

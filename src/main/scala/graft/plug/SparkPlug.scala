@@ -1,8 +1,8 @@
 package graft.plug
 
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression, NamedExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression, NamedExpression, SubqueryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.optimizer.CollapseProject
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -114,7 +114,8 @@ case class SparkPlug(
   /** The rule fold shared by every entry point. Seeds the audit column and
     * the fired-rule masks, then stacks each rule's `step` (compiled against
     * the frame as the rule finds it) as `Project`s over the input plan,
-    * ends a codegen region before a rule when it is full, and stages a
+    * ends a codegen region before a rule when it is full (its expressions
+    * and the columns the fold has added so far), and stages a
     * repartition or checkpoint on the configured cadence. The rules up to
     * the next staging point are resolved together ([[resolveRun]]). A
     * `Project` merges into the fold's `Project` below it where the
@@ -125,17 +126,19 @@ case class SparkPlug(
   private def foldRules(in: DataFrame, rules: List[PlugRule])(step: SparkPlug.Step): DataFrame = {
     val ruleAt = rules.toIndexedSeq
     var plan = preProcessInput(in, rules.size).queryExecution.analyzed
+    val inputWidth = plan.output.size
     var cost = SparkPlug.regionCost(plan)
     // the plan the fold's own stacked Projects sit on; they merge down to it
     var base = plan
     val alwaysInline = spark.sessionState.conf.getConf(SQLConf.COLLAPSE_PROJECT_ALWAYS_INLINE)
     var i = 0
-    def endRegionIfFull(): Unit = if (cost > SparkPlug.regionBudget) {
-      CodegenBoundary.setup(spark)
-      plan = CodegenBoundary(plan)
-      base = plan
-      cost = 0
-    }
+    def endRegionIfFull(): Unit =
+      if (cost + SparkPlug.widthCost(plan.output.size - inputWidth) > SparkPlug.regionBudget) {
+        CodegenBoundary.setup(spark)
+        plan = CodegenBoundary(plan)
+        base = plan
+        cost = 0
+      }
     def stage(): Unit = {
       staged(plan, i).foreach { p => plan = p; base = p; cost = 0 }
       i += 1
@@ -285,20 +288,25 @@ case class SparkPlug(
       .withColumns(SparkPlug.maskColumns(nRules).map(_ -> lit(0L)).toMap))
 
   /** Evaluates the audit records first (so a bad record fails before any
-    * plan is built), runs the fold, then replaces the audit column with the
-    * records the row's masks select and drops the masks. The change count
-    * rides on the same pass: a row changed iff one of its masks is non-zero. */
+    * plan is built) and encodes them once, runs the fold, then replaces the
+    * audit column with the records the row's masks select and drops the
+    * masks. The audit projection merges into the chain's last `Project`, so
+    * it runs in the last codegen region. The change count rides on an
+    * `observe` above it: a row changed iff one of its mask bits is set, iff
+    * its audit array is not empty. */
   private def withAuditTrail(rules: List[PlugRule])(chain: => DataFrame): DataFrame =
     plugDetails.fold(chain) { pd =>
-      val records = auditRecords(pd.appender, rules)
+      val recordType = ArrayType(pd.appender.detailSchema)
+      val records = UnsafeProjection.create(Array[DataType](recordType))(
+        InternalRow(auditRecords(pd.appender, rules))).getArray(0).copy()
       val masks = SparkPlug.maskColumns(rules.size)
-      val counted = withChangeCount(chain,
-        masks.map(col(_) =!= 0L).reduceOption(_ || _).getOrElse(lit(false)))
-      if (masks.isEmpty) counted
-      else counted
-        .withColumn(pd.column, GraftPlanAccess.column(
-          FiredRecords(masks.map(UnresolvedAttribute.quoted), records, pd.appender.detailSchema)))
-        .drop(masks: _*)
+      val audited =
+        if (masks.isEmpty) chain
+        else chain
+          .withColumn(pd.column, GraftPlanAccess.column(
+            FiredRecords(masks.map(UnresolvedAttribute.quoted), records, pd.appender.detailSchema)))
+          .drop(masks: _*)
+      withChangeCount(audited, size(GraftPlanAccess.column(UnresolvedAttribute.quoted(pd.column))) > 0)
     }
 
   /** Every rule's audit record, evaluated once on the driver over a
@@ -596,6 +604,14 @@ object SparkPlug {
     * `processNext`; this budget keeps a region under about 7000 bytes,
     * below HotSpot's 8000-byte JIT limit (ChainScalingSpec pins it). */
   private val regionBudget = 150
+
+  /** What `added` columns beyond the fold's input cost a region, in
+    * computing expressions: a region reads every column of its input and
+    * writes every column of its output, about one and a half expressions'
+    * worth of `processNext` per column. Columns the rules add (keep-old
+    * copies) widen every later region, so each later region holds fewer
+    * rules (ChainScalingSpec pins a keep-old first-match chain). */
+  private def widthCost(added: Int): Int = 3 * added / 2
 
   /** Computing expressions in the `Project`s above the plan's last region
     * end (a boundary, checkpoint, exchange or scan); `known` stops the walk

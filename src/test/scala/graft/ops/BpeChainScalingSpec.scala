@@ -108,7 +108,7 @@ class BpeChainScalingSpec extends AnyFlatSpec with Matchers {
     var drained = false
     val merges =
       try {
-        Corpus.learnMerges(docsDf, "text", nMerges = 1024, maxChain = 6,
+        Corpus.learnMerges(docsDf, "text", nMerges = 1024,
           onRound = (i, ns) => times += ((i, ns)))
       } finally {
         // listener delivery is async — drain before reading the counter,

@@ -489,7 +489,7 @@ class OpsSpec extends AnyFlatSpec with Matchers {
       Doc(1, "alpha beta", "s1"), Doc(2, "unique one", "s1"),
       Doc(3, "Alpha  Beta", "s2"), Doc(4, "only here", "s2"), Doc(5, "more", "s2")
     ).toDS.toDF()
-    val out = Dedup.dupRateBySource(docs, "doc_id", "text", "source")
+    val out = Dedup.dupRateBySource(docs, "text", "source")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1)
     out shouldBe Array(("s1", 2L, 1L, 0.5), ("s2", 3L, 1L, 0.333333))
@@ -3499,7 +3499,7 @@ class OpsSpec extends AnyFlatSpec with Matchers {
     // Σ (n_b/N)|acc_b − conf_b| recomputed from the returned rows
     val docs = ((1L to 30L).map(i => Doc(i, ("w " * ((i % 11).toInt + 1)).trim, "s"))
       ++ Seq(Doc(31L, "w w w", "s"), Doc(32L, "w w w", "s"))).toDS.toDF()
-    val rows = Corpus.calibrationEce(docs, "doc_id", "text").collect()
+    val rows = Corpus.calibrationEce(docs, "text").collect()
     rows.map(_.getLong(1)).sum shouldBe 32L
     val n = 32.0
     val expectedEce = rows.map(r =>

@@ -89,6 +89,19 @@ class ChainScalingSpec extends AnyFlatSpec with Matchers {
     }
   }
 
+  "a 40-rule first-match chain that keeps old values" should
+    "keep every whole-stage method under 8000 bytes, with and without details" in {
+    implicit val spark = TestSpark.session
+    // two actions a rule: each rule's two old-value copies widen every later region
+    val rules = detailsChain.take(40).map(r => r.copy(actions = r.actions.filterNot(_.key == "l_linenumber")))
+    for (builder <- Seq(SparkPlug.builder.keepOldField, SparkPlug.builder.enablePlugDetails().keepOldField)) {
+      val out = builder.create().plugFirstMatch(lineitem, rules).toOption.get
+      withClue(s"${out.columns.length} columns:") {
+        all(methodBytes(out)) should (be >= 0 and be < 8000)
+      }
+    }
+  }
+
   "a 500-rule plain chain" should "keep every whole-stage method under 8000 bytes" in {
     implicit val spark = TestSpark.session
     val rules = (0 until 500).toList.map(i =>

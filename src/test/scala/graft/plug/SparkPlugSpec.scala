@@ -555,6 +555,78 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
       firstMatch = false)
   }
 
+  /** `body` with expression code generation forced on (whole-stage and
+    * per-expression, failing rather than falling back) or off. */
+  private def underCodegen[T](on: Boolean)(body: => T): T = {
+    val confs = if (on) Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+      else Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  it should "build the same audit arrays in generated code and in eval" in {
+    import AuditModel._
+    val rules = genRules(new scala.util.Random(20261017L), 130)
+    val in = frame(genRows(new scala.util.Random(7L), 14))
+    val expected = model(genRows(new scala.util.Random(7L), 14), rules, firstMatch = false)
+    for (on <- Seq(true, false)) withClue(s"codegen $on:") {
+      underCodegen(on) {
+        val out = SparkPlug.builder(spark).enablePlugDetails().create().plug(in, rules.map(_.rule)).toOption.get
+        read(out) shouldBe expected
+      }
+    }
+  }
+
+  it should "build custom records with null fields and empty arrays in generated code and in eval" in {
+    import AuditModel._
+    // odd rules record no rule id, every third rule no field names
+    val appender = AuditAppender.forProduct[OverrideDetail] { (name, version, fields) =>
+      val n = name.stripPrefix("rule").toInt
+      struct((if (n % 2 == 1) lit(null).cast("string") else lit(name)).as("ruleId"),
+        (if (n % 3 == 0) array() else array(fields.map(lit): _*)).as("fieldNames"),
+        lit(version).as("ruleVersion"))
+    }
+    def record(d: PlugDetail): OverrideDetail = {
+      val n = d.name.stripPrefix("rule").toInt
+      OverrideDetail(if (n % 2 == 1) None else Some(d.name), if (n % 3 == 0) Nil else d.fieldNames, Some(d.version))
+    }
+    // every rule also needs a title, which no action nulls: rows without
+    // one change under no rule, beside rows that many rules change
+    val rules = genRules(new scala.util.Random(20261017L), 130)
+      .map(r => r.copy(cond = And(Cmp("title", "<", "t9"), r.cond)))
+    val rows = genRows(new scala.util.Random(7L), 14)
+    val expected = model(rows, rules, firstMatch = false).map { case (id, (_, ds)) => id -> ds.map(record) }
+    expected.values.map(_.size).toSet should (contain(0) and contain(expected.values.map(_.size).max))
+    expected.values.map(_.size).max should be >= 20
+    for (on <- Seq(true, false)) withClue(s"codegen $on:") {
+      underCodegen(on) {
+        val out = SparkPlug.builder(spark).enablePlugDetails("d", appender).create()
+          .plug(frame(rows), rules.map(_.rule)).toOption.get
+        out.select("id", "d").as[(Int, Seq[OverrideDetail])].collect().toMap shouldBe expected
+      }
+    }
+  }
+
+  it should "run the audit column inside the last codegen region, with the change count above it" in {
+    import AuditModel._
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    val rules = genRules(new scala.util.Random(20261017L), 130)
+    val out = SparkPlug.builder(spark).enablePlugDetails().enableAccumulators.create()
+      .plug(frame(genRows(new scala.util.Random(7L), 14)), rules.map(_.rule)).toOption.get
+    out.collect()
+    /** The nodes of `plan` with whether whole-stage codegen compiles each. */
+    def nodes(plan: SparkPlan, fused: Boolean): Seq[(SparkPlan, Boolean)] = plan match {
+      case w: WholeStageCodegenExec => nodes(w.child, fused = true)
+      case i: InputAdapter => nodes(i.child, fused = false)
+      case p => (p -> fused) +: p.children.flatMap(nodes(_, fused))
+    }
+    val all = nodes(out.queryExecution.executedPlan, fused = false)
+    all.collect { case (p: ProjectExec, false) => p.simpleString(200) } shouldBe empty
+    all.head._1.nodeName shouldBe "CollectMetrics"
+    all.collect { case (p: ProjectExec, true) if p.projectList.exists(_.exists(_.isInstanceOf[FiredRecords])) => p }
+      .size shouldBe 1
+  }
+
   it should "order columns as input, plugDetails, then old-value copies in rule order" in {
     val rules = List(
       PlugRule("r1", "v1", "price > 250", Seq(PlugAction("price", "100"))),
