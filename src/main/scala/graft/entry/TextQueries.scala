@@ -34,8 +34,8 @@ private[graft] object TextQueries {
       s"(dfq.dfc + 0.5::DOUBLE)) AS DECIMAL(27,12)) AS DOUBLE) * $invidxImpactSql AS s"
 
   /** The BPE induction CTE chain: 12 rounds of (pair count → top-1 →
-    * 6-deep literal replace), mirroring Corpus.bpeMerges(nMerges = 12,
-    * maxChain = 6) bit-for-bit — the merge pair each round comes from the
+    * 6-deep literal replace), mirroring Corpus.bpeMerges(nMerges = 12)
+    * bit-for-bit — the merge pair each round comes from the
     * data via 1-row scalar subqueries. */
   private lazy val bpeChainSql: String = {
     val out = (1 to 12).map(k =>

@@ -1184,13 +1184,11 @@ object Corpus {
     * merges — 32k full recounts would not). Driver state is the bounded
     * (pair -> count) map every production BPE trainer keeps. Assumes
     * corpus text gives `nMerges` rounds of nonempty pair tables (true
-    * for any real corpus). `maxChain` shapes only [[bpeSegment]]'s
-    * oracle-replayable segmentation rewrite. */
+    * for any real corpus). */
   def bpeMerges(
       df: DataFrame,
       textCol: String,
-      nMerges: Int = 12,
-      maxChain: Int = 6
+      nMerges: Int = 12
   ): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -1210,8 +1208,7 @@ object Corpus {
   def bpeVocabulary(
       df: DataFrame,
       textCol: String,
-      nMerges: Int = 12,
-      maxChain: Int = 6
+      nMerges: Int = 12
   ): DataFrame =
     bpeVocabularyWith(df, textCol, learnMerges(df, textCol, nMerges))
 
@@ -1244,8 +1241,7 @@ object Corpus {
   def bpeMergeTable(
       df: DataFrame,
       textCol: String,
-      nMerges: Int = 12,
-      maxChain: Int = 6
+      nMerges: Int = 12
   ): Seq[(Int, String, String, Long)] =
     learnMerges(df, textCol, nMerges)
 
@@ -1259,7 +1255,7 @@ object Corpus {
     * ([[mergeFold]], the trainer's own application) over the vocab
     * frame, checkpointed every [[RepersistEvery]] rounds, so a real
     * tokenizer's 32k merges cost 32k O(word-length) row-local folds
-    * with bounded plan depth — NOT the nMerges×maxChain nested-`replace`
+    * with bounded plan depth — NOT the merges × chain-depth nested-`replace`
     * expression this replaced, whose single projection grew to ~192k
     * expression nodes at 32k merges and stopped being plannable long
     * before it stopped being correct. Documents then join the segmented
@@ -1271,16 +1267,12 @@ object Corpus {
     * shuffle-hash-joins on the word — the escape hatch for web-scale
     * vocabularies, where an unconditional broadcast is an OOM, at the
     * price of one corpus-sized shuffle. Results are bit-identical either
-    * way (plain equi-join on the word). `maxChain` shapes only the
-    * finite `replace`-chain replay the SQL oracle runs; the fold applies
-    * every chain length exactly (equal wherever maxChain passes reach
-    * the fixpoint — any real corpus). */
+    * way (plain equi-join on the word). */
   def bpeSegment(
       df: DataFrame,
       idCol: String,
       textCol: String,
       nMerges: Int = 12,
-      maxChain: Int = 6,
       broadcastVocab: Boolean = true
   ): DataFrame =
     bpeSegmentWith(df, idCol, textCol,
@@ -1349,9 +1341,8 @@ object Corpus {
     * cadence (BpeChainScalingSpec proves round time flat through 1,024
     * merges and pins the shuffle volume to the touched words).
     * Checkpoint blocks from superseded rounds are reclaimed by the
-    * ContextCleaner once unreferenced. `maxChain` is segmentation-side
-    * only ([[bpeSegment]]'s oracle-replayable rewrite); induction merges
-    * chains of ANY length exactly. */
+    * ContextCleaner once unreferenced. Induction merges chains of ANY
+    * length exactly. */
   private val RepersistEvery = 8
 
   /** Lexicographic comparison of UTF-8 byte sequences (unsigned) — the

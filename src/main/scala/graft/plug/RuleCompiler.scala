@@ -41,21 +41,22 @@ object RuleCompiler {
     }
 
   /** One compiled rule: every (top-level) column it rewrites, the old-value
-    * copies (if keepOldField) as copy name -> copied column, and `fired` —
-    * true where the rule matched AND changed something, the gate behind the
-    * audit trail and the per-rule change counts. Applied as one projection
-    * of `allUpdates`. */
+    * copies (if keepOldField) as copy name -> copied column, in action
+    * order, and `fired` — true where the rule matched AND changed
+    * something, the gate behind the audit trail and the per-rule change
+    * counts. Applied as one projection of `allUpdates`. */
   case class Compiled(
       updates: Seq[(String, Column)],
       oldCopies: Seq[(String, String)],
       fired: Column
   ) {
-    def allUpdates: Map[String, Column] = (oldCopies.map { case (n, k) => n -> col(k) } ++ updates).toMap
+    def allUpdates: Seq[(String, Column)] = oldCopies.map { case (n, k) => n -> col(k) } ++ updates
   }
 
-  def compile(rule: PlugRule, schema: StructType, keepOldField: Boolean): Compiled = {
+  /** Compiles `rule` over a frame of `schema`, writing its actions where
+    * `cond` holds (the rule's own condition, unless the caller narrows it). */
+  def compile(rule: PlugRule, schema: StructType, keepOldField: Boolean, cond: Column): Compiled = {
     val fields = PlugRule.buildFieldsMap(schema).toMap
-    val cond   = expr(rule.condition)
 
     // A rule with no actions is a no-op projection the reference only
     // rejects via a SQL parse error when validation is off — fail with a
@@ -74,20 +75,9 @@ object RuleCompiler {
       }
     }
 
-    // True when the path's parent is a string-keyed map — the action
-    // targets one MAP ENTRY (the last segment is the entry key, which is
-    // data, not schema — so it needs no fields-map membership).
-    def mapEntryParent(key: String): Option[String] = {
-      val segs = key.split('.')
-      if (segs.length < 2) None
-      else {
-        val parent = segs.dropRight(1).mkString(".")
-        fields.get(parent) match {
-          case Some(MapType(StringType, _, _)) => Some(parent)
-          case _ => None
-        }
-      }
-    }
+    // The parent path when it is a string-keyed map: the action targets
+    // one MAP ENTRY.
+    def mapEntryParent(key: String): Option[String] = PlugRule.mapEntryParent(fields, key).map(_._1)
 
     // Invalid literals silently become NULL assignments when validation is
     // off — reference parity (PlugRule.scala:129 `.getOrElse(null)`).
@@ -96,11 +86,8 @@ object RuleCompiler {
     // an unresolved-column error); we raise the validation message rather
     // than silently adding a new column via withColumns.
     val converted: Seq[(PlugAction, Column)] = rule.actions.map { a =>
-      val dt = fields.get(a.key)
-        .orElse(mapEntryParent(a.key).map(p =>
-          fields(p).asInstanceOf[MapType].valueType))
-        .getOrElse(throw new IllegalArgumentException(
-          s"""Rule "${rule.name}": Field "${a.key}" not found in the schema."""))
+      val dt = PlugRule.targetType(fields, a.key).getOrElse(throw new IllegalArgumentException(
+        s"""Rule "${rule.name}": Field "${a.key}" not found in the schema."""))
       a -> coerceValue(a.value, dt).getOrElse(lit(null))
     }
 

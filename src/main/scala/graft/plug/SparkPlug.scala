@@ -1,16 +1,15 @@
 package graft.plug
 
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression, NamedExpression, SubqueryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression, NamedExpression, SubqueryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.optimizer.CollapseProject
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftPlanAccess, Row, SparkSession}
 
+import scala.collection.immutable.ListMap
 import scala.util.{Success, Try}
 
 /** Plug-details config: audit array column name + record appender. */
@@ -30,13 +29,14 @@ case class SparkPlugCheckpointDetails(checkpointDir: Option[String], rulesPerSta
   *
   * Same public surface as the reference engine (reference:
   * src/main/scala/sparkplug/SparkPlug.scala) — builder, `plug`, `validate` —
-  * but each rule compiles to `Column` expressions applied as ONE projection:
-  * no temp views, no SQL string concatenation, no UDFs, stable column order.
-  * All entry points share one rule fold ([[foldRules]]), which resolves the
-  * rules with one analysis per chain, not one per rule: the audit trail is a
-  * fired-rule bit per rule, assembled into the audit array once after the
-  * chain, and a [[CodegenBoundary]] ends each whole-stage codegen region
-  * before its generated method outgrows the JIT limit.
+  * but each rule, under every entry point, compiles to `Column` expressions
+  * applied as ONE projection: no temp views, no SQL string concatenation, no
+  * UDFs, stable column order. All entry points share one rule fold
+  * ([[foldRules]]), which resolves the rules with one analysis per chain,
+  * not one per rule: the audit trail is a fired-rule bit per rule, assembled
+  * into the audit array once after the chain, and a [[CodegenBoundary]] ends
+  * each whole-stage codegen region before its generated method outgrows the
+  * JIT limit.
   *
   * Scale posture (100 TB): rules are compiled into the plan as literals —
   * there is no data-side rule join and nothing to broadcast (the reference's
@@ -72,11 +72,14 @@ case class SparkPlug(
   /** Validate (if enabled) then fold the rules over the input frame.
     * (reference: SparkPlug.scala:29-40) */
   def plug(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] =
-    SparkPlug.onDeepStack(validated(in, rules)(withAuditTrail(rules)(foldRules(in, rules)(
-      (rule, i, schema) => Seq(ruleUpdate(rule, i, schema))))))
+    SparkPlug.onDeepStack(validated(in, rules)(chain(in, rules)))
 
-  private def validated(in: DataFrame, rules: List[PlugRule])(
-      plugged: => DataFrame): Either[List[PlugRuleValidationError], DataFrame] = {
+  /** The rules folded over `in` with the audit trail, unvalidated. */
+  private def chain(in: DataFrame, rules: List[PlugRule]): DataFrame =
+    withAuditTrail(rules)(foldRules(in, rules)(ruleUpdate(_, _, _)))
+
+  private def validated[T](in: DataFrame, rules: List[PlugRule])(
+      plugged: => T): Either[List[PlugRuleValidationError], T] = {
     val validationResult =
       if (isValidateRulesEnabled) validate(in.schema, rules) else Nil
     if (validationResult.nonEmpty) Left(validationResult)
@@ -107,13 +110,13 @@ case class SparkPlug(
     val allAtOnce = Try(empty.select(rules.flatMap(r => ruleUpdate(r, 0, empty.schema).cols.values)
       .zipWithIndex.map { case (c, k) => c.as(s"__graft_$k") }: _*))
     if (allAtOnce.isSuccess) Nil
-    else rules.flatMap(r => Try(applyAlone(empty, Seq(ruleUpdate(r, 0, empty.schema)))).failed.toOption
+    else rules.flatMap(r => Try(empty.withColumns(ruleUpdate(r, 0, empty.schema).cols)).failed.toOption
       .map(t => PlugRuleValidationError(r.name, s"[SQL Error] ${t.getMessage}")))
   }
 
   /** The rule fold shared by every entry point. Seeds the audit column and
     * the fired-rule masks, then stacks each rule's `step` (compiled against
-    * the frame as the rule finds it) as `Project`s over the input plan,
+    * the frame as the rule finds it) as one `Project` over the input plan,
     * ends a codegen region before a rule when it is full (its expressions
     * and the columns the fold has added so far), and stages a
     * repartition or checkpoint on the configured cadence. The rules up to
@@ -153,22 +156,20 @@ case class SparkPlug(
         endRegionIfFull()
         val before = plan
         val df = GraftPlanAccess.ofRows(spark, plan)
-        plan = applyAlone(df, step(ruleAt(i), i, df.schema)).queryExecution.analyzed
+        plan = df.withColumns(step(ruleAt(i), i, df.schema).cols).queryExecution.analyzed
         cost = SparkPlug.regionCost(plan, Some(before -> cost))
         base = plan
         stage()
       }
-      run.foreach { projections =>
+      run.foreach { list =>
         endRegionIfFull()
-        projections.foreach { list =>
-          plan = plan match {
-            case lower: Project if (lower ne base) &&
-                CollapseProject.canCollapseExpressions(list, lower.projectList, alwaysInline) =>
-              lower.copy(projectList = CollapseProject.buildCleanedProjectList(list, lower.projectList))
-            case _ => Project(list, plan)
-          }
-          cost += SparkPlug.listCost(list)
+        plan = plan match {
+          case lower: Project if (lower ne base) &&
+              CollapseProject.canCollapseExpressions(list, lower.projectList, alwaysInline) =>
+            lower.copy(projectList = CollapseProject.buildCleanedProjectList(list, lower.projectList))
+          case _ => Project(list, plan)
         }
+        cost += SparkPlug.listCost(list)
         stage()
       }
     }
@@ -176,9 +177,9 @@ case class SparkPlug(
   }
 
   /** Resolves rules `from until until` over a plan with columns `output` in
-    * one analysis and returns the projections of each rule it places, in
+    * one analysis and returns the projection of each rule it places, in
     * order. Each rule is compiled against the columns the earlier ones
-    * leave (a column a step adds is typed as the column it copies, or as a
+    * leave (a column a rule adds is typed as the column it copies, or as a
     * boolean flag), and every column of every rule goes, under a unique
     * alias, into one `Project` over a [[ChainInput]] leaf of `output` and
     * the added columns. A run that does not analyze to one plain `Project`
@@ -187,97 +188,70 @@ case class SparkPlug(
     * resolve alone (an empty result), as is a first rule that fails
     * [[placeRun]]'s checks. */
   private def resolveRun(output: Seq[Attribute], rules: IndexedSeq[PlugRule], from: Int, until: Int,
-      step: SparkPlug.Step): Seq[Seq[Seq[NamedExpression]]] = {
+      step: SparkPlug.Step): Seq[Seq[NamedExpression]] = {
     val resolver = spark.sessionState.conf.resolver
     var columns = output
     var added = Vector.empty[Attribute]
-    val steps = (from until until).map { i =>
-      val ops = step(rules(i), i, StructType(columns.map(a => StructField(a.name, a.dataType))))
-      ops.foreach {
-        case SparkPlug.Put(cols, copies) =>
-          for (n <- cols.keys if !columns.exists(a => resolver(a.name, n))) {
-            val a = added.find(a => resolver(a.name, n)).getOrElse {
-              val copied = copies.get(n).flatMap(c => columns.find(a => resolver(a.name, c)))
-              val fresh = AttributeReference(n, copied.fold[DataType](BooleanType)(_.dataType))()
-              added :+= fresh
-              fresh
-            }
-            columns :+= a
-          }
-        case SparkPlug.Drop(c) => columns = columns.filterNot(a => resolver(a.name, c))
+    val puts = (from until until).map { i =>
+      val put = step(rules(i), i, StructType(columns.map(a => StructField(a.name, a.dataType))))
+      for (n <- put.cols.keys if !columns.exists(a => resolver(a.name, n))) {
+        val copied = put.copies.get(n).flatMap(c => columns.find(a => resolver(a.name, c)))
+        val fresh = AttributeReference(n, copied.fold[DataType](BooleanType)(_.dataType))()
+        added :+= fresh
+        columns :+= fresh
       }
-      ops
+      put
     }
     val leaf = ChainInput(output ++ added)
-    val entries = steps.flatten.flatMap {
-      case SparkPlug.Put(cols, _) => cols.values
-      case _ => Nil
-    }
     Try(GraftPlanAccess.ofRows(spark, leaf)
-      .select(entries.zipWithIndex.map { case (c, k) => c.as(s"__graft_$k") }: _*)
+      .select(puts.flatMap(_.cols.values).zipWithIndex.map { case (c, k) => c.as(s"__graft_$k") }: _*)
       .queryExecution.analyzed) match {
       case Success(Project(list, `leaf`)) if !list.exists(_.exists(_.isInstanceOf[SubqueryExpression])) =>
-        placeRun(output, leaf, steps, list.collect { case a: Alias => a.child })
+        placeRun(output, leaf, puts, list.collect { case a: Alias => a.child })
       case _ if until - from > 1 => resolveRun(output, rules, from, from + (until - from) / 2, step)
       case _ => Nil
     }
   }
 
-  /** Turns a run's resolved columns (`resolved`, in step order, over
-    * `leaf`) into each rule's projections over a plan with columns
-    * `output`, shaped as `withColumns` and `drop` shape them: a reference to
-    * a leaf column is rebound to the latest attribute of that column. Stops
-    * before a rule that reads a column not there yet (it resolved only
-    * because the leaf holds every column of the run), and after a rule that
-    * changes a column's type, since the later rules were resolved against
-    * the old one. A column's type only widens (a `CASE` over the old value
+  /** Turns a run's resolved columns (`resolved`, in rule order, over
+    * `leaf`) into each rule's projection over a plan with columns `output`,
+    * shaped as `withColumns` shapes it: a reference to a leaf column is
+    * rebound to the latest attribute of that column. Stops before a rule
+    * that reads a column not there yet (it resolved only because the leaf
+    * holds every column of the run), and after a rule that changes a
+    * column's type, since the later rules were resolved against the old
+    * one. A column's type only widens (a `CASE` over the old value
     * keeps its shape), so the earlier compile of the later rules cannot
     * have failed on it. */
-  private def placeRun(output: Seq[Attribute], leaf: ChainInput, steps: Seq[Seq[SparkPlug.Op]],
-      resolved: Seq[Expression]): Seq[Seq[Seq[NamedExpression]]] = {
+  private def placeRun(output: Seq[Attribute], leaf: ChainInput, puts: Seq[SparkPlug.Put],
+      resolved: Seq[Expression]): Seq[Seq[NamedExpression]] = {
     val resolver = spark.sessionState.conf.resolver
     def named(attrs: Seq[Attribute], name: String) = attrs.filter(a => resolver(a.name, name))
     var binding: Map[ExprId, Attribute] = output.map(a => a.exprId -> a).toMap
     var columns = output
     var next = resolved
-    val placed = Vector.newBuilder[Seq[Seq[NamedExpression]]]
+    val placed = Vector.newBuilder[Seq[NamedExpression]]
     var open = true
-    for (ops <- steps.iterator if open) {
-      var (bind, cols, fits, retyped) = (binding, columns, true, false)
-      val projections = ops.flatMap {
-        case SparkPlug.Put(puts, _) =>
-          val (mine, rest) = next.splitAt(puts.size)
-          next = rest
-          val outs = puts.keys.toSeq.zip(mine).map { case (n, e) =>
-            fits &&= e.references.forall(r => bind.contains(r.exprId))
-            retyped ||= named(leaf.output, n).exists(_.dataType != e.dataType)
-            Alias(e.transform { case r: AttributeReference => bind.getOrElse(r.exprId, r) }, n)()
-          }
-          outs.foreach(o => bind ++= named(leaf.output, o.name).map(_.exprId -> o.toAttribute))
-          val list: Seq[NamedExpression] =
-            cols.map(c => outs.find(o => resolver(c.name, o.name)).getOrElse(c)) ++
-              outs.filter(o => named(cols, o.name).isEmpty)
-          cols = list.map(_.toAttribute)
-          Some(list)
-        case SparkPlug.Drop(c) =>
-          bind --= named(leaf.output, c).map(_.exprId)
-          val list = cols.filterNot(a => resolver(a.name, c))
-          if (list.size == cols.size) None else { cols = list; Some(list) }
+    for (put <- puts.iterator if open) {
+      val (mine, rest) = next.splitAt(put.cols.size)
+      next = rest
+      var (fits, retyped) = (true, false)
+      val outs = put.cols.keys.toSeq.zip(mine).map { case (n, e) =>
+        fits &&= e.references.forall(r => binding.contains(r.exprId))
+        retyped ||= named(leaf.output, n).exists(_.dataType != e.dataType)
+        Alias(e.transform { case r: AttributeReference => binding.getOrElse(r.exprId, r) }, n)()
       }
       open = fits && !retyped
       if (fits) {
-        placed += projections
-        binding = bind
-        columns = cols
+        outs.foreach(o => binding ++= named(leaf.output, o.name).map(_.exprId -> o.toAttribute))
+        val list: Seq[NamedExpression] =
+          columns.map(c => outs.find(o => resolver(c.name, o.name)).getOrElse(c)) ++
+            outs.filter(o => named(columns, o.name).isEmpty)
+        columns = list.map(_.toAttribute)
+        placed += list
       }
     }
     placed.result()
-  }
-
-  /** Applies one rule's steps to `df` with Dataset calls. */
-  private def applyAlone(df: DataFrame, ops: Seq[SparkPlug.Op]): DataFrame = ops.foldLeft(df) {
-    case (d, SparkPlug.Put(cols, _)) => d.withColumns(cols)
-    case (d, SparkPlug.Drop(c)) => d.drop(c)
   }
 
   /** Initialize the audit column to a schema-correct empty array and every
@@ -288,17 +262,15 @@ case class SparkPlug(
       .withColumns(SparkPlug.maskColumns(nRules).map(_ -> lit(0L)).toMap))
 
   /** Evaluates the audit records first (so a bad record fails before any
-    * plan is built) and encodes them once, runs the fold, then replaces the
-    * audit column with the records the row's masks select and drops the
-    * masks. The audit projection merges into the chain's last `Project`, so
-    * it runs in the last codegen region. The change count rides on an
-    * `observe` above it: a row changed iff one of its mask bits is set, iff
-    * its audit array is not empty. */
+    * plan is built), runs the fold, then replaces the audit column with the
+    * records the row's masks select and drops the masks. The audit
+    * projection merges into the chain's last `Project`, so it runs in the
+    * last codegen region. The change count rides on an `observe` above it:
+    * a row changed iff one of its mask bits is set, iff its audit array is
+    * not empty. */
   private def withAuditTrail(rules: List[PlugRule])(chain: => DataFrame): DataFrame =
     plugDetails.fold(chain) { pd =>
-      val recordType = ArrayType(pd.appender.detailSchema)
-      val records = UnsafeProjection.create(Array[DataType](recordType))(
-        InternalRow(auditRecords(pd.appender, rules))).getArray(0).copy()
+      val records = auditRecords(pd.appender, rules)
       val masks = SparkPlug.maskColumns(rules.size)
       val audited =
         if (masks.isEmpty) chain
@@ -310,11 +282,11 @@ case class SparkPlug(
     }
 
   /** Every rule's audit record, evaluated once on the driver over a
-    * one-row frame with no columns: the optimizer folds that query into a
-    * local relation without a job (a collect covers a session that
-    * excludes the rule). A record that reads the row cannot resolve there
-    * and fails with the rule's name. */
-  private def auditRecords(appender: AuditAppender, rules: List[PlugRule]): ArrayData = {
+    * one-row frame with no columns, as one encoded array: the optimizer
+    * folds that query into a local scan without a job (a session that
+    * excludes the rule runs one). A record that reads the row cannot
+    * resolve there and fails with the rule's name. */
+  private def auditRecords(appender: AuditAppender, rules: List[PlugRule]): UnsafeArrayData = {
     val oneRow = spark.createDataFrame(java.util.List.of(Row.empty), new StructType())
     def evaluate(rs: List[PlugRule]) = oneRow.select(array(rs.map(r =>
       appender.record(r.name, r.version, r.actions.map(_.key)).cast(appender.detailSchema)): _*))
@@ -323,11 +295,8 @@ case class SparkPlug(
       throw new IllegalArgumentException(
         s"""Rule "${bad.name}": an audit record must not read the row: ${e.getMessage}""", e)
     }.get
-    evaluated.queryExecution.optimizedPlan match {
-      case local: LocalRelation if local.data.size == 1 => local.data.head.getArray(0)
-      case _ => CatalystTypeConverters.createToCatalystConverter(ArrayType(appender.detailSchema))(
-        evaluated.collect().head.getSeq[Row](0)).asInstanceOf[ArrayData]
-    }
+    val row = evaluated.queryExecution.executedPlan.executeCollect().head
+    row.getArray(0).asInstanceOf[UnsafeArrayData].copy()
   }
 
   /** First-match-only variant of [[plug]]: each row takes the FIRST rule
@@ -336,23 +305,18 @@ case class SparkPlug(
     * conditions would otherwise let a later broad rule clobber an earlier
     * specific one. Same validation, audit, keep-old and staging machinery;
     * the only change is a `__graft_matched` flag threaded through the
-    * chain: each rule's hit predicate is captured against the frame state
-    * that rule sees (so conditions still read earlier rules' OUTPUT,
-    * exactly like the sequential fold), AND-ed with not-yet-matched, and
-    * folded into the flag afterwards. All narrow projections — the chain
-    * costs the same single pass as [[plug]]. */
+    * chain: each rule writes where its condition holds (against the frame
+    * it sees, so conditions still read earlier rules' OUTPUT, exactly like
+    * the sequential fold) and the row is not yet matched, and sets the flag
+    * in the same projection. The chain costs the same single pass as
+    * [[plug]]. */
   def plugFirstMatch(in: DataFrame, rules: List[PlugRule]): Either[List[PlugRuleValidationError], DataFrame] = {
     val flag = "__graft_matched"
-    val hit  = "__graft_hit"
     SparkPlug.onDeepStack(validated(in, rules)(withAuditTrail(rules) {
       foldRules(in.withColumn(flag, lit(false)), rules) { (rule, i, schema) =>
         // a NULL condition is a miss, not a match: it must not shield the row
         val matches = coalesce(expr(rule.condition), lit(false)) && !col(flag)
-        Seq(
-          SparkPlug.Put(Map(hit -> matches)),
-          ruleUpdate(rule.copy(condition = hit), i, schema.add(hit, BooleanType)),
-          SparkPlug.Put(Map(flag -> (col(flag) || col(hit)))),
-          SparkPlug.Drop(hit))
+        ruleUpdate(rule, i, schema, Some(matches), _ => Seq(flag -> (matches || col(flag))))
       }.drop(flag)
     }))
   }
@@ -375,8 +339,8 @@ case class SparkPlug(
     * result unpivots to a #rules-row frame. */
   def ruleHitStats(in: DataFrame, rules: List[PlugRule]): DataFrame = SparkPlug.onDeepStack {
     val flagged = foldRules(in, rules) { (rule, i, schema) =>
-      Seq(ruleUpdate(rule, i, schema,
-        c => Map(s"__hit_$i" -> expr(rule.condition), s"__chg_$i" -> c.fired)))
+      ruleUpdate(rule, i, schema,
+        extra = c => Seq(s"__hit_$i" -> expr(rule.condition), s"__chg_$i" -> c.fired))
     }
     val aggs = rules.indices.flatMap(i => Seq(
       sum(when(col(s"__hit_$i"), 1L).otherwise(0L)).as(s"__h_$i"),
@@ -391,103 +355,65 @@ case class SparkPlug(
   }
 
   /** Canary diff between two rule sets — "what would the v2 rules change
-    * vs the v1 rules on this data": both sets plug the SAME input, the
-    * outputs join on the caller's row key (which MUST be unique — a
-    * duplicated key cross-matches unrelated rows and inflates every
-    * count), and every shared non-key
-    * column reports how many rows the two outputs disagree on
-    * (null-safe `<=>`, so null→value and value→null both count). The
-    * release gate a rules canary runs before replacing a live set —
-    * column counts localize WHAT a rewrite touches, and an all-zero
-    * report proves a refactor is behavior-preserving.
+    * vs the v1 rules on this data": both sets plug the SAME input, and
+    * every column both outputs share, except the caller's row key and the
+    * audit column, reports how many rows the two outputs disagree on
+    * (null-safe `<=>`, so null→value and value→null both count), in set
+    * A's column order. An all-zero report shows a rewrite of the rules
+    * changes nothing.
     *
-    * Scale: both rule chains fuse into ONE narrow projection pass over a
-    * single input scan (chain A runs on the live columns, its outputs
-    * stash aside, the pristine originals restore from duplicated
-    * columns, chain B runs on those), feeding one conditional aggregate
-    * — no join, no exchange at any data size (r14: the previous
-    * key-equality self-join shuffled and sorted both sides for a
-    * comparison every row can answer locally). `keyCols` must be unique
-    * AND left unrewritten by both sets — the canary contract either way
-    * (the old join silently dropped rows whose key a set rewrote).
-    * The per-column melt explodes a 1-row frame. Validation failures
-    * from either set surface unchanged. */
+    * One narrow pass over one input scan, then one conditional aggregate:
+    * set A runs over the input beside a copy of its columns, its outputs
+    * are stashed and the copy restored, and set B runs over that. The key
+    * columns must be unique and rewritten by neither set. With validation
+    * on, set A's errors come back if it has any, else set B's. */
   def diffRuleSets(
       in: DataFrame,
       keyCols: Seq[String],
       rulesA: List[PlugRule],
       rulesB: List[PlugRule]
   ): Either[List[PlugRuleValidationError], DataFrame] = SparkPlug.onDeepStack {
-    for {
-      a <- plug(in, rulesA)
-      b <- plug(in, rulesB)
-    } yield {
-      val compared = a.columns.toSeq.intersect(b.columns.toSeq)
+    validated(in, rulesA)(()).flatMap(_ => validated(in, rulesB) {
+      val origCols = in.columns.toSeq
+      val orig = origCols.map(c => c -> s"__graft_orig_$c").toMap
+      val a = chain(in.select(origCols.map(col) ++ origCols.map(c => col(c).as(orig(c))): _*), rulesA)
+      val aCols = a.columns.toSeq.filterNot(orig.values.toSet)
+      val b = chain(a.select(aCols.map(c => col(c).as(s"__graft_a_$c")) ++
+        origCols.map(c => col(orig(c)).as(c)): _*), rulesB)
+      val compared = aCols.filter(b.columns.contains)
         .filterNot(keyCols.contains)
         .filterNot(c => plugDetails.exists(_.column == c))
-      if (compared.isEmpty) {
-        // Nothing shared beyond the keys: an empty (column, n_diff)
-        // frame, not a NoSuchElementException from agg(aggs.head, ...).
-        val spark = in.sparkSession
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("column",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n_diff",
-              org.apache.spark.sql.types.LongType))))
-      } else {
-        // FUSED single-pass diff (r14 optimization round, guide §2.4 —
-        // "remove shuffles outright"): both rule chains are pure
-        // projections over the SAME input rows, so the old key-equality
-        // self-join (shuffle + sort both sides at any data size) carries
-        // no information the row itself doesn't already hold. Instead:
-        // stash a pristine copy of every input column, run chain A, move
-        // its outputs aside, restore the pristine originals, run chain B
-        // on them, and aggregate the per-column disagreements row-local —
-        // ONE scan, ZERO exchanges before the 1-row aggregate. Counts are
-        // identical to the join formulation whenever `keyCols` is unique
-        // and neither set rewrites a key column (the documented
-        // contract; a rewritten key made the join version silently DROP
-        // the disagreeing row, which was itself a bug-shaped edge).
-        val origCols = in.columns.toSeq
-        val dup = in.select(origCols.map(col) ++
-          origCols.map(c => col(c).as(s"__graft_orig_$c")): _*)
-        def rerun(df: DataFrame, rules: List[PlugRule]): DataFrame =
-          plug(df, rules).fold(
-            errs => throw new IllegalStateException(
-              s"rule set re-validation failed mid-diff: ${errs.mkString("; ")}"),
-            identity)
-        val aFused = rerun(dup, rulesA)
-        val mid = aFused.select(
-          compared.map(c => col(c).as(s"__graft_a_$c")) ++
-            origCols.map(c => col(s"__graft_orig_$c").as(c)): _*)
-        val bFused = rerun(mid, rulesB)
+      if (compared.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          StructType(Seq(StructField("column", StringType), StructField("n_diff", LongType))))
+      else {
         val aggs = compared.map(c =>
           sum(when(!(col(s"__graft_a_$c") <=> col(c)), 1L).otherwise(0L)).as(s"__d_$c"))
-        bFused.agg(aggs.head, aggs.tail: _*)
+        b.agg(aggs.head, aggs.tail: _*)
           .select(explode(array(compared.map(c =>
             struct(lit(c).as("column"),
               coalesce(col(s"__d_$c"), lit(0L)).as("n_diff"))): _*)).as("d"))
           .select(col("d.column"), col("d.n_diff"))
       }
-    }
+    })
   }
 
   /** The rule with the given chain position as one projection over a frame
-    * of `schema`. With plug details on, a rule that fires ORs its bit into
-    * its mask word; the reference appends a record per firing rule through
-    * a UDF4 (SparkPlugUDFs.scala:14-31), copying the growing array every
+    * of `schema`, writing where `cond` holds (the rule's condition by
+    * default). With plug details on, a rule that fires ORs its bit into its
+    * mask word; the reference appends a record per firing rule through a
+    * UDF4 (SparkPlugUDFs.scala:14-31), copying the growing array every
     * time. `extra` adds columns computed from the same pre-rule frame. */
   private def ruleUpdate(rule: PlugRule, ruleNumber: Int, schema: StructType,
-      extra: RuleCompiler.Compiled => Map[String, Column] = _ => Map.empty): SparkPlug.Put = {
-    val compiled = RuleCompiler.compile(rule, schema, isKeepOldField)
+      cond: Option[Column] = None,
+      extra: RuleCompiler.Compiled => Seq[(String, Column)] = _ => Nil): SparkPlug.Put = {
+    val compiled = RuleCompiler.compile(rule, schema, isKeepOldField, cond.getOrElse(expr(rule.condition)))
     val maskUpdate = plugDetails.map { _ =>
       val mask = SparkPlug.maskColumn(ruleNumber)
       mask -> col(mask).bitwiseOR(
         when(compiled.fired, lit(1L << (ruleNumber % 64))).otherwise(lit(0L)))
     }
-    SparkPlug.Put(compiled.allUpdates ++ maskUpdate ++ extra(compiled), compiled.oldCopies.toMap)
+    SparkPlug.Put(ListMap(compiled.allUpdates ++ maskUpdate ++ extra(compiled): _*), compiled.oldCopies.toMap)
   }
 
   /** Changed-row count. The reference runs an extra eager full-scan job with
@@ -562,9 +488,8 @@ object SparkPlug {
 
   /** Runs `build` on a thread with a 128 MB stack. Spark's analyzer
     * recurses once per plan node, and a long chain stacks a `Project` per
-    * rule (four under first-match) before they merge: until the JIT has
-    * compiled the analyzer, some 500 of them outgrow the default 1 MB
-    * thread stack. An interrupt of the caller interrupts the build, and
+    * rule before they merge: until the JIT has compiled the analyzer, some
+    * 500 of them outgrow the default 1 MB thread stack. An interrupt of the caller interrupts the build, and
     * the caller waits for it to stop. */
   private def onDeepStack[T](build: => T): T = {
     var result: Either[Throwable, T] = Left(new IllegalStateException("plug build did not run"))
@@ -581,16 +506,14 @@ object SparkPlug {
     result.fold(throw _, identity)
   }
 
-  /** How a rule step changes the frame: a `withColumns` of `cols`, all
-    * computed from the frame before it, or a drop. A column a `Put` adds is
-    * a copy of `copies(name)` when listed there, and a boolean flag
-    * otherwise. */
-  private[plug] sealed trait Op
-  private[plug] case class Put(cols: Map[String, Column], copies: Map[String, String] = Map.empty) extends Op
-  private[plug] case class Drop(column: String) extends Op
+  /** How a rule changes the frame: a `withColumns` of `cols`, in order, all
+    * computed from the frame before it. A column a `Put` adds is a copy of
+    * `copies(name)` when listed there, and a boolean flag otherwise. */
+  private[plug] case class Put(cols: ListMap[String, Column], copies: Map[String, String])
 
-  /** One rule's steps, at its chain position, over a frame of the schema. */
-  private[plug] type Step = (PlugRule, Int, StructType) => Seq[Op]
+  /** One rule's projection, at its chain position, over a frame of the
+    * schema. */
+  private[plug] type Step = (PlugRule, Int, StructType) => Put
 
   /** The fired-rule mask holding rule `ruleNumber`'s bit: 64 rules a word. */
   private def maskColumn(ruleNumber: Int): String = s"__graft_mask_${ruleNumber / 64}"

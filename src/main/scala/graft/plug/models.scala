@@ -1,6 +1,6 @@
 package graft.plug
 
-import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
 /** A single column override: set `key` (possibly a dotted struct path) to
   * `value` when the owning rule's condition holds.
@@ -40,19 +40,8 @@ case class PlugRule(name: String, version: String, condition: String, actions: S
       List(validationError("At the least one action must be specified per rule."))
     else {
       val fields = PlugRule.buildFieldsMap(schema).toMap
-      // a path whose parent is a string-keyed map targets one map ENTRY;
-      // the entry key is data, so only the parent needs to exist — the
-      // value is checked against the map's value type
-      def mapEntryValueType(key: String): Option[DataType] = {
-        val segs = key.split('.')
-        if (segs.length < 2) None
-        else fields.get(segs.dropRight(1).mkString(".")).collect {
-          case m: org.apache.spark.sql.types.MapType
-              if m.keyType == org.apache.spark.sql.types.StringType => m.valueType
-        }
-      }
       actions.flatMap { action =>
-        fields.get(action.key).orElse(mapEntryValueType(action.key)) match {
+        PlugRule.targetType(fields, action.key) match {
           case None =>
             Some(validationError(s"""Field "${action.key}" not found in the schema."""))
           // Backtick values bypass static type checking entirely (reference:
@@ -93,4 +82,19 @@ object PlugRule {
             s"$prefix${f.name}.")
       case f => Seq((s"$prefix${f.name}", f.dataType))
     }
+
+  /** The parent path of `key` and its value type, when that parent is a
+    * string-keyed map in `fields` ([[buildFieldsMap]]'s pairs): the key then
+    * targets one map ENTRY, whose key is data, so only the parent needs to
+    * exist in the schema. */
+  private[plug] def mapEntryParent(fields: Map[String, DataType], key: String): Option[(String, DataType)] = {
+    val parent = key.split('.').dropRight(1).mkString(".")
+    if (!key.contains('.')) None
+    else fields.get(parent).collect { case MapType(StringType, valueType, _) => parent -> valueType }
+  }
+
+  /** The type an action on `key` writes: the field's own type, or the value
+    * type of the map whose entry the key names. */
+  private[plug] def targetType(fields: Map[String, DataType], key: String): Option[DataType] =
+    fields.get(key).orElse(mapEntryParent(fields, key).map(_._2))
 }

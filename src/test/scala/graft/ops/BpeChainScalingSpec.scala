@@ -171,7 +171,7 @@ class BpeChainScalingSpec extends AnyFlatSpec with Matchers {
     // bpeSegmentWith (shipped merge table, no retraining) and compare
     // every document's BPE token count to a single-node reference
     // tokenizer applying the same merges greedily. The former
-    // nMerges×maxChain nested-replace expression stopped being plannable
+    // merges × chain-depth nested-replace expression stopped being plannable
     // at this scale; the fold chain's lineage is BOUNDED by the
     // checkpoint cadence, which the plan-size assertion pins.
     val rnd2 = new scala.util.Random(17)

@@ -1,6 +1,7 @@
 package graft.plug
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.scalatest.flatspec.AnyFlatSpec
@@ -99,6 +100,14 @@ class ChainScalingSpec extends AnyFlatSpec with Matchers {
       withClue(s"${out.columns.length} columns:") {
         all(methodBytes(out)) should (be >= 0 and be < 8000)
       }
+    }
+  }
+
+  "a 130-rule first-match chain" should "stack at most one Project per rule, with and without details" in {
+    implicit val spark = TestSpark.session
+    for (builder <- Seq(SparkPlug.builder, SparkPlug.builder.enablePlugDetails())) {
+      val out = builder.create().plugFirstMatch(lineitem, detailsChain.take(130)).toOption.get
+      out.queryExecution.analyzed.collect { case p: Project => p }.size should be <= 130 + 10
     }
   }
 

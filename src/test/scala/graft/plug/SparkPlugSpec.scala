@@ -377,6 +377,22 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
     val bad = List(PlugRule("r", "v1", "nope > 1", Seq(PlugAction("tag", "X"))))
     SparkPlug.builder(spark).enableRulesValidation.create()
       .diffRuleSets(df, Seq("id"), v1, bad).isLeft shouldBe true
+    // keep-old copies both sets make are compared in set A's column order,
+    // the audit column never
+    val setA = List(
+      PlugRule("p", "v1", "amount > 50", Seq(PlugAction("tag", "P"))),
+      PlugRule("r", "v1", "amount > 20", Seq(PlugAction("tag", "X"), PlugAction("amount", "1.0"))))
+    val setB = List(PlugRule("r", "v2", "amount > 50", Seq(PlugAction("amount", "1.0"), PlugAction("tag", "X"))))
+    val plugger = SparkPlug.builder(spark).enablePlugDetails().keepOldField.enableRulesValidation.create()
+    plugger.diffRuleSets(df, Seq("id"), setA, setB).toOption.get
+      .as[(String, Long)].collect().toSeq shouldBe
+      Seq("amount" -> 1L, "tag" -> 1L, "tag_r_old" -> 1L, "amount_r_old" -> 0L)
+    // with both sets bad, only set A's errors come back
+    val badA = List(PlugRule("a", "v1", "nope > 1", Seq(PlugAction("tag", "X"))))
+    val badB = List(PlugRule("b", "v1", "amount > 1", Seq(PlugAction("missing", "X"))))
+    val errors = plugger.diffRuleSets(df, Seq("id"), badA, badB).left.toOption.get
+    errors.map(_.name).distinct shouldBe Seq("a")
+    errors.size shouldBe plugger.validate(df.schema, badA).size
   }
 
   // ---- array-of-struct actions (extension beyond the reference, which
@@ -637,6 +653,16 @@ class SparkPlugSpec extends AnyFlatSpec with Matchers {
       Seq("title", "brand", "price", "plugDetails", "price_r1_old", "brand_r2_old")
     out.filter($"title" === "iPhone").select("plugDetails.name").as[Seq[String]].head() shouldBe
       Seq("r1", "r2")
+    // a two-action rule's copies follow its actions, whatever else its projection writes
+    val two = List(PlugRule("r3", "v1", "price > 250",
+      Seq(PlugAction("brand", "Apple Inc"), PlugAction("price", "100"))))
+    for ((builder, audit) <- Seq(SparkPlug.builder(spark).keepOldField -> Nil,
+        SparkPlug.builder(spark).enablePlugDetails().keepOldField -> Seq("plugDetails"))) {
+      val plugger = builder.create()
+      val expected = Seq("title", "brand", "price") ++ audit ++ Seq("brand_r3_old", "price_r3_old")
+      plugger.plug(df, two).toOption.get.columns.toSeq shouldBe expected
+      plugger.plugFirstMatch(df, two).toOption.get.columns.toSeq shouldBe expected
+    }
   }
 
   // ---- chains whose later rules read what earlier rules changed or added ----
