@@ -23,9 +23,11 @@ import org.apache.spark.sql.types.StructType
   * Layout under `dir`:
   * {{{
   *   CURRENT                      // one line: the current manifest's file name
-  *   _manifests/manifest-<v>.txt  // one data-file path per line, relative to dir
+  *   _manifests/manifest-<v>.txt  // one snapshot: a #schema line, header lines, data files
   *   data/<uuid>/part-*.parquet   // immutable data files, one subdir per commit
   * }}}
+  * The manifest line format is documented once, beside its codec (see
+  * "Manifest lines" below).
   *
   * Crash safety, step by step: a writer (1) writes data files into a
   * fresh `data/<uuid>/` nobody references, (2) writes the new manifest
@@ -37,10 +39,17 @@ import org.apache.spark.sql.types.StructType
   * [[StagedCommit]] exposes the (1)+(2) / (3) seam so tests can inject a
   * crash exactly between file publish and pointer swap.
   *
-  * Concurrency: last-writer-wins on the pointer (single-writer
-  * deployments; multi-writer needs a compare-and-swap the plain
-  * FileSystem API does not offer — that is precisely the piece Iceberg
-  * delegates to a catalog and Delta to a LogStore).
+  * Concurrency: optimistic, Delta-style. Every operation reads ONE
+  * snapshot (one resolution of `CURRENT`), and every commit claims a
+  * fresh version slot by atomic create-if-absent, then [[publish]]
+  * refuses the pointer swap unless the table is still at the snapshot
+  * the commit was built from. A refused commit releases its slot and
+  * whatever it staged; appends then rebase and retry, stats-bounded
+  * rewrites re-run against the new snapshot, and the rest surface the
+  * `ConcurrentModificationException`. The swap itself is check-then-
+  * rename, so detection is exact only up to that window — closing it
+  * needs the compare-and-swap the plain FileSystem API does not offer,
+  * the piece Iceberg delegates to a catalog and Delta to a LogStore.
   *
   * Scale shape: commits move O(1) metadata regardless of table size;
   * readers list zero directories (the manifest replaces listing — on
@@ -63,12 +72,14 @@ object ManifestTable {
   final case class StagedCommit(version: Long, manifestName: String, basisVersion: Long)
 
   /** Data files already written for a commit, before any manifest
-    * exists: dir-relative paths plus their encoded stats lines and the
-    * batch schema. The append retry loop re-stages MANIFESTS from this,
+    * exists: dir-relative paths plus their encoded stats lines, the
+    * batch schema, and the dir-relative `data/<uuid>` directory they were
+    * written into. The append retry loop re-stages MANIFESTS from this,
     * never the data — files are immutable and commit-agnostic, so a
     * refused publish costs one tiny manifest rewrite, not a re-write of
     * the batch. */
-  final case class StagedData(rel: Seq[String], statsLines: Seq[String], schemaJson: String)
+  final case class StagedData(
+      rel: Seq[String], statsLines: Seq[String], schemaJson: String, dataDir: String)
 
   /** Per-(data file, column) min/max/null-count recorded in the manifest
     * at commit time — the data-skipping statistics every manifest table
@@ -106,7 +117,7 @@ object ManifestTable {
   // immaterial here — the atomicity guarantees come from POSIX rename /
   // createLink semantics, not configuration. The one behavioral flag
   // read through an FS handle (`graft.manifest.assumeAtomicRename`, in
-  // claimCommitSlot) is only consulted on NON-local schemes, where fs()
+  // createExclusive) is only consulted on NON-local schemes, where fs()
   // returns Hadoop's own cached instance, never this private one. A
   // per-conf FS pool here would re-introduce the identity-leak and
   // unbounded-growth problems of Hadoop's JVM-wide cache for zero
@@ -187,40 +198,126 @@ object ManifestTable {
   }
 
   /** The current snapshot version, or -1 for an empty/uninitialised dir. */
-  def currentVersion(spark: SparkSession, dir: String): Long = {
-    val f = fs(dir, spark)
+  def currentVersion(spark: SparkSession, dir: String): Long =
+    pointerVersion(fs(dir, spark), dir)
+
+  // The version CURRENT names, -1 before the first commit: what
+  // [[publish]]'s basis check compares, and where a slot claim starts.
+  // Every other reader resolves a whole [[Snapshot]] instead.
+  private def pointerVersion(f: FileSystem, dir: String): Long = {
     val ptr = new Path(dir, PointerName)
     if (!f.exists(ptr)) -1L
-    else {
-      val name = readSmallFile(f, ptr).trim
-      name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    }
+    else versionOf(readSmallFile(f, new Path(dir, PointerName)).trim)
   }
 
-  // header lines (#key=value) carry snapshot metadata; data-file lines
-  // follow. Readers that predate a header key ignore it.
-  private def manifestLines(f: FileSystem, dir: String, name: String): Seq[String] =
-    readSmallFile(f, new Path(new Path(dir, "_manifests"), name))
-      .split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
+  private def manifestName(version: Long): String = f"manifest-$version%020d.txt"
 
-  private def manifestRel(f: FileSystem, dir: String, name: String): Seq[String] =
-    manifestLines(f, dir, name).filterNot(_.startsWith("#"))
+  private def versionOf(manifestName: String): Long =
+    manifestName.stripPrefix("manifest-").stripSuffix(".txt").toLong
+
+  private def manifestPath(dir: String, name: String): Path =
+    new Path(new Path(dir, "_manifests"), name)
+
+  // ---- Manifest lines ------------------------------------------------
+  //
+  // A manifest is UTF-8 text, one item per line, written by
+  // [[manifestText]] in a fixed order: the `#schema=` line, then the
+  // header lines sorted, then the data-file lines sorted. A data-file line
+  // is a path relative to the table dir (`data/<uuid>/part-….parquet`);
+  // every header line is `#<kind>=<fields>`, fields `|`-separated, free
+  // text base64-encoded (b64) so it can hold neither `|` nor a newline:
+  //
+  //   #schema=<StructType json>                     the commit's schema
+  //   #stats=<rel>|<col>|<dtype>|<min|->|<max|->|<nulls>  per file, per column
+  //   #size=<rel>|<bytes>|<rows>                    per file
+  //   #bloom=<rel>|<col>|<k>|<mBits>|<sparse words> per file ([[addBloom]])
+  //   #ndv=<rel>|<col>|<k>|<hashes>                 per file ([[addNdvSketch]])
+  //   #dv=<rel>                                     a deletion-vector sidecar
+  //   #check=<spec>                                 a CHECK constraint
+  //   #unique=<col>                                 a UNIQUE key
+  //   #indexof=<source dir>|<source version>        a derived table's source
+  //   #meta=<key>|<value>                           table metadata
+  //   #streambatch=<stream id>|<batch id>           a stream's last batch
+  //
+  // (<rel>, <col>, <min>, <max>, <spec>, <key>, <value>, <stream id>,
+  // <source dir> and the sparse words / hash lists are b64.) Readers
+  // ignore a header kind they do not know. Each kind's codec and meaning
+  // sit beside it below; which kinds a commit carries from its basis is
+  // the carry table after [[headerRel]].
+
+  /** One resolution of CURRENT: the manifest it named, parsed once. Every
+    * public read works from exactly one of these, and so does every
+    * attempt of every write, so no operation can mix two snapshots (a
+    * compaction landing between two pointer reads would otherwise drop
+    * the first read's deletion vectors). `headers` excludes `#schema`. */
+  private final case class Snapshot(
+      name: String,
+      version: Long,
+      schemaLine: Option[String],
+      headers: Seq[String],
+      rels: Seq[String]) {
+    def schema: Option[StructType] = schemaLine.map(l =>
+      org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema="))
+        .asInstanceOf[StructType])
+    def files(dir: String): Seq[String] = rels.map(rel => new Path(dir, rel).toString)
+    def dvRels: Seq[String] =
+      headers.filter(_.startsWith("#dv=")).map(l => unb64(l.stripPrefix("#dv=")))
+    def stats: Seq[ColStats] =
+      headers.filter(_.startsWith("#stats=")).flatMap(parseStatsLine)
+    def sizes: Seq[(String, Long, Long)] =
+      headers.filter(_.startsWith("#size=")).flatMap(parseSizeLine)
+    /** The answer of a write that commits nothing. */
+    def unchanged: StagedCommit = StagedCommit(version, name, version)
+  }
+
+  private def manifestAt(f: FileSystem, dir: String, name: String): Snapshot = {
+    val lines = readSmallFile(f, manifestPath(dir, name))
+      .split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
+    val (headers, rels) = lines.partition(_.startsWith("#"))
+    Snapshot(name, versionOf(name), headers.find(_.startsWith("#schema=")),
+      headers.filterNot(_.startsWith("#schema=")), rels)
+  }
+
+  /** The current snapshot — one pointer read, one manifest read — or None
+    * for an uninitialised dir. */
+  private def snapshot(f: FileSystem, dir: String): Option[Snapshot] =
+    if (!f.exists(new Path(dir, PointerName))) None
+    else Some(manifestAt(f, dir, readSmallFile(f, new Path(dir, PointerName)).trim))
+
+  // the current snapshot of a table that must exist
+  private def current(spark: SparkSession, dir: String): Snapshot =
+    table(snapshot(fs(dir, spark), dir), dir)
+
+  private def table(snap: Option[Snapshot], dir: String): Snapshot =
+    snap.getOrElse(throw new IllegalArgumentException(
+      s"requirement failed: not a manifest table (no $PointerName): $dir"))
+
+  // the manifest of committed version `v`, refused cleanly once vacuumed
+  private def committedVersion(f: FileSystem, dir: String, v: Long): Snapshot =
+    manifestAt(f, dir, requireVersion(f, dir, v))
+
+  private def requireVersion(f: FileSystem, dir: String, v: Long): String = {
+    val name = manifestName(v)
+    require(f.exists(manifestPath(dir, name)),
+      s"version $v not found (vacuumed, or never committed) in $dir")
+    name
+  }
+
+  /** A manifest's text — the one place it is assembled (the order the
+    * "Manifest lines" block documents). */
+  private def manifestText(
+      schemaLine: Option[String], headers: Seq[String], rels: Seq[String]): String =
+    ((schemaLine.toSeq ++ headers.sorted) ++ rels.sorted).mkString("\n")
 
   // #dv=<b64 rel> — one DELETION-VECTOR sidecar (a tiny parquet of
   // (_file: string rel, _pos: long row index) pairs) whose positions are
   // subtracted from every read of this snapshot. Carried forward
   // verbatim by append/merge/replace; dropped by full-snapshot commits
   // (compaction materializes the deletes).
-  private def manifestDvLines(f: FileSystem, dir: String, name: String): Seq[String] =
-    manifestLines(f, dir, name).filter(_.startsWith("#dv="))
-
-  private def dvRelsOf(dvLines: Seq[String]): Seq[String] =
-    dvLines.map(l => unb64(l.stripPrefix("#dv=")))
-
   private def dvLineOf(rel: String): String = s"#dv=${b64(rel)}"
 
   // the data file a PER-FILE header line describes, or None for
-  // non-per-file headers (schema) and verbatim ones (deletion vectors)
+  // table-level headers
   private def headerRel(l: String): Option[String] =
     if (l.startsWith("#stats=")) parseStatsLine(l).map(_.file)
     else if (l.startsWith("#bloom=")) parseBloomLine(l).map(_._1)
@@ -228,25 +325,32 @@ object ManifestTable {
     else if (l.startsWith("#size=")) parseSizeLine(l).map(_._1)
     else None
 
-  // header lines a new manifest carries from its basis: per-file headers
-  // (stats, blooms, NDV sketches, sizes) only for files that survive
-  // (`keepRel`); deletion vectors, table-level CHECK constraints, index
-  // source bindings, table metadata, and stream-batch idempotence markers
-  // always carry verbatim
-  private def carriedHeadersFor(
-      lines: Seq[String], keepRel: String => Boolean): Seq[String] =
-    lines.filter { l =>
-      headerRel(l) match {
-        case Some(rel) => keepRel(rel)
-        case None => l.startsWith("#dv=") || l.startsWith("#check=") ||
-          l.startsWith("#indexof=") || l.startsWith("#streambatch=") ||
-          l.startsWith("#meta=") || l.startsWith("#unique=")
-      }
-    }
+  // ---- The carry table: which basis headers a new manifest keeps -----
+  //
+  // Per-file kinds carry only for the files the new manifest keeps; every
+  // other listed kind carries verbatim; unlisted kinds are dropped.
+  private val PerFileKinds = Set("#stats=", "#size=", "#bloom=", "#ndv=")
+  // same content, or more of it — appends, header-only commits, the
+  // stats-bounded rewrites, restore
+  private val CarryAll = PerFileKinds ++
+    Set("#dv=", "#check=", "#unique=", "#indexof=", "#streambatch=", "#meta=")
+  // the same rows in new files — compactions: the constraints, the source
+  // binding, the landed stream batches and the metadata all still hold;
+  // the deletion vectors were materialized
+  private val CarryLayout =
+    Set("#check=", "#unique=", "#indexof=", "#streambatch=", "#meta=")
+  // arbitrary new content — a plain commit keeps only its constraints
+  private val CarryConstraints = Set("#check=", "#unique=")
+  // new derived content under a new binding — commitIndex
+  private val CarryChecks = Set("#check=")
 
-  // the full-carry case: every per-file header plus the vectors
-  private def carriedHeaderLines(f: FileSystem, dir: String, name: String): Seq[String] =
-    carriedHeadersFor(manifestLines(f, dir, name), _ => true)
+  private def carried(
+      s: Snapshot, kinds: Set[String], keepRel: String => Boolean = _ => true)
+      : Seq[String] =
+    s.headers.filter { l =>
+      val kind = l.substring(0, l.indexOf('=') + 1)
+      kinds(kind) && (!PerFileKinds(kind) || headerRel(l).exists(keepRel))
+    }
 
   /** The dir-relative paths ('data/<uuid>/…parquet') the file-scan
     * metadata column resolves to: every data file lives under one
@@ -272,19 +376,59 @@ object ManifestTable {
       base: DataFrame,
       dvRels: Seq[String]): DataFrame =
     if (dvRels.isEmpty) base
+    else livePositions(spark, dir, base, dvRels)
+      .drop("__graft_dv_rel", "__graft_dv_pos")
+
+  // `base` keyed by (file rel, row index) — `__graft_dv_rel`,
+  // `__graft_dv_pos` — minus the positions `dvRels` already delete: the
+  // rows a new deletion vector may still name
+  private def livePositions(
+      spark: SparkSession,
+      dir: String,
+      base: DataFrame,
+      dvRels: Seq[String]): DataFrame = {
+    val keyed = keyedByPosition(base)
+    if (dvRels.isEmpty) keyed
     else {
-      import org.apache.spark.sql.functions.{broadcast, col}
-      val keyed = base
-        .withColumn("__graft_dv_rel", relOfFilePath(col("_metadata.file_path")))
-        .withColumn("__graft_dv_pos", col("_metadata.row_index"))
       val dv = spark.read.parquet(
         dvRels.map(r => new Path(dir, r).toString): _*)
-      keyed.join(broadcast(dv),
-          keyed("__graft_dv_rel") === dv("_file") &&
-            keyed("__graft_dv_pos") === dv("_pos"),
-          "left_anti")
-        .drop("__graft_dv_rel", "__graft_dv_pos")
+      keyed.join(org.apache.spark.sql.functions.broadcast(dv),
+        keyed("__graft_dv_rel") === dv("_file") &&
+          keyed("__graft_dv_pos") === dv("_pos"),
+        "left_anti")
     }
+  }
+
+  private def keyedByPosition(base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    base
+      .withColumn("__graft_dv_rel", relOfFilePath(col("_metadata.file_path")))
+      .withColumn("__graft_dv_pos", col("_metadata.row_index"))
+  }
+
+  // a read of `s`'s `files` (absolute paths, `s`'s data files or a
+  // subset) with its deletion vectors subtracted
+  private def readFiles(
+      spark: SparkSession, dir: String, s: Snapshot, files: Seq[String]): DataFrame =
+    applyDv(spark, dir, spark.read.parquet(files: _*), s.dvRels)
+
+  private def readSnapshot(spark: SparkSession, dir: String, s: Snapshot): DataFrame =
+    readFiles(spark, dir, s, s.files(dir))
+
+  // `s`'s schema, from its #schema line (a pre-header manifest: from a read)
+  private def schemaOf(spark: SparkSession, dir: String, s: Snapshot): StructType =
+    s.schema.getOrElse(readSnapshot(spark, dir, s).schema)
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  // the pruned `kept` files of `s`, vectors subtracted; the empty frame
+  // of `s`'s schema when the prune kept nothing
+  private def readKept(
+      spark: SparkSession, dir: String, s: Snapshot, kept: Seq[String]): DataFrame =
+    if (kept.isEmpty) emptyFrame(spark, schemaOf(spark, dir, s))
+    else readFiles(spark, dir, s, kept)
 
   private def parquetRowCount(
       conf: org.apache.hadoop.conf.Configuration, p: Path): Long = {
@@ -358,14 +502,10 @@ object ManifestTable {
     * [[pruneByRange]]/[[pruneByEquals]] skip a file that holds matching
     * rows (a silent row loss on reads, a silent non-erasure on
     * [[deleteWhere]]). Absent min/max is only trusted as "no non-null
-    * values" when the null count PROVES it (numNulls == valueCount). */
-  private def footerStats(
-      conf: org.apache.hadoop.conf.Configuration,
-      file: Path,
-      rel: String): Seq[ColStats] = footerStatsRows(conf, file, rel)._1
-
-  /** [[footerStats]] plus the file's record count from the SAME footer
-    * open — staging reads every new file's footer anyway, and a second
+    * values" when the null count PROVES it (numNulls == valueCount).
+    *
+    * The file's record count comes from the SAME footer open — staging
+    * reads every new file's footer anyway, and a second
     * `ParquetFileReader.open` per file just for the row count measurably
     * lengthened the driver-side commit path on multi-file stages (r14
     * optimization round: two ~0.5 s gaps in ingest_manifest_txn's steady
@@ -451,14 +591,6 @@ object ManifestTable {
     } finally reader.close()
   }
 
-  private def manifestSchema(f: FileSystem, dir: String, name: String)
-      : Option[StructType] =
-    manifestLines(f, dir, name).collectFirst {
-      case l if l.startsWith("#schema=") =>
-        org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema="))
-          .asInstanceOf[StructType]
-    }
-
   /** Nullability- and order-insensitive schema compatibility: the same
     * (name → type) set. Appending a batch whose columns differ would make
     * reads silently resolve against whichever file the scan samples
@@ -475,33 +607,18 @@ object ManifestTable {
 
   /** The schema the CURRENT snapshot was committed with (None for
     * pre-header manifests). */
-  def currentSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    if (!f.exists(ptr)) None
-    else manifestSchema(f, dir, readSmallFile(f, ptr).trim)
-  }
-
-  private def currentRel(f: FileSystem, dir: String): Seq[String] = {
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    manifestRel(f, dir, readSmallFile(f, ptr).trim)
-  }
+  def currentSchema(spark: SparkSession, dir: String): Option[StructType] =
+    snapshot(fs(dir, spark), dir).flatMap(_.schema)
 
   /** The data-file paths (absolute) of the current snapshot. */
   def currentFiles(spark: SparkSession, dir: String): Seq[String] =
-    currentRel(fs(dir, spark), dir).map(rel => new Path(dir, rel).toString)
+    current(spark, dir).files(dir)
 
   /** Read the current snapshot — exactly the manifest's files, never a
     * directory listing, so concurrent commits/compactions are invisible.
     * Deletion-vector positions ([[deleteVectorWhere]]) are subtracted. */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(dir, spark)
-    val files = currentFiles(spark, dir) // requires the pointer exists
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    applyDv(spark, dir, spark.read.parquet(files: _*),
-      dvRelsOf(manifestDvLines(f, dir, name)))
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readSnapshot(spark, dir, current(spark, dir))
 
   /** Whether `dir` is an initialized manifest table (has a committed
     * CURRENT pointer) — the "does the first batch have anything to
@@ -514,23 +631,68 @@ object ManifestTable {
     * exists yet, no reader can resolve the files, and the result is
     * commit-agnostic — [[completeAppend]]'s rebase retry re-stages
     * manifests from one [[StagedData]] without ever rewriting data. */
-  def stageData(spark: SparkSession, dir: String, df: DataFrame): StagedData = {
+  def stageData(spark: SparkSession, dir: String, df: DataFrame): StagedData =
+    writeData(spark, dir, df.schema.json)(df.write.parquet(_))
+
+  /** The one data-file writer: `write` puts files into a fresh
+    * `data/<uuid>/` (the path it is given; partitioned writes nest them
+    * one level deeper), and every parquet file it produced comes back
+    * dir-relative with its footer stats and `#size` line — one footer
+    * open per file gives both. */
+  private def writeData(spark: SparkSession, dir: String, schemaJson: String)(
+      write: String => Unit): StagedData = {
     val f = fs(dir, spark)
     val dataDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-    df.write.parquet(dataDir.toString)
-    val statuses = f.listStatus(dataDir).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    val files = statuses.map(_.getPath)
-    val root = f.makeQualified(new Path(dir)).toUri.getPath
-    val rel = files.map(_.toUri.getPath.stripPrefix(root).stripPrefix("/"))
+    write(dataDir.toString)
+    val files = parquetUnder(f, dir, dataDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    // one footer open per file: column stats AND the row count for the
-    // #size line come from the same read
-    val statsRows = statuses.zip(rel).map { case (st, r) =>
+    val statsRows = files.map { case (st, r) =>
       val (cs, rows) = footerStatsRows(conf, st.getPath, r)
       (cs.map(statsLine), sizeLineOf(r, st.getLen, rows))
     }
-    StagedData(rel, statsRows.flatMap(_._1) ++ statsRows.map(_._2), df.schema.json)
+    StagedData(files.map(_._2), statsRows.flatMap(_._1) ++ statsRows.map(_._2),
+      schemaJson, relOf(f, dir, dataDir))
+  }
+
+  // every .parquet file under `p`, recursively, with its dir-relative path
+  private def parquetUnder(f: FileSystem, dir: String, p: Path)
+      : Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
+    val it = f.listFiles(p, true)
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(org.apache.hadoop.fs.FileStatus, String)]
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) out += (st -> relOf(f, dir, st.getPath))
+    }
+    out.toSeq
+  }
+
+  private def relOf(f: FileSystem, dir: String, p: Path): String =
+    f.makeQualified(p).toUri.getPath
+      .stripPrefix(f.makeQualified(new Path(dir)).toUri.getPath).stripPrefix("/")
+
+  /** Write the (`__graft_dv_rel`, `__graft_dv_pos`) positions of `rows`
+    * ([[livePositions]]' keys) as ONE deletion-vector sidecar in a fresh
+    * `data/<uuid>/`: that dir and the sidecar's rel, both dir-relative —
+    * or None, the dir removed again, when no position was written. */
+  private def writeDv(spark: SparkSession, dir: String, rows: DataFrame)
+      : Option[(String, Seq[String])] = {
+    import org.apache.spark.sql.functions.col
+    val f = fs(dir, spark)
+    val dvDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
+    // repartition(1), NOT coalesce(1): coalesce would collapse the
+    // whole candidate scan + anti-join into one task, while the
+    // repartition shuffle keeps the scan parallel and moves only the
+    // tiny (file, pos) pairs to a single writer — preserving the
+    // one-sidecar-per-delete minimality every future read pays for
+    rows.select(col("__graft_dv_rel").as("_file"), col("__graft_dv_pos").as("_pos"))
+      .repartition(1).write.parquet(dvDir.toString)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = parquetUnder(f, dir, dvDir)
+    if (files.map(x => parquetRowCount(conf, x._1.getPath)).sum == 0L) {
+      f.delete(dvDir, true)
+      None
+    } else Some((relOf(f, dir, dvDir), files.map(_._2)))
   }
 
   /** Steps (1)+(2): publish data files and manifest WITHOUT moving the
@@ -554,8 +716,8 @@ object ManifestTable {
   }
 
   /** Step (2) alone: claim a version slot for already-written data files
-    * plus a carry list. Tiny (one small-file write); this is the only
-    * piece a rebase retry repeats. */
+    * plus a carry list. Tiny (one small-file write) — the piece a rebase
+    * repeats, never the data. */
   def stageManifest(
       spark: SparkSession,
       dir: String,
@@ -565,16 +727,16 @@ object ManifestTable {
       basisVersion: Long
   ): StagedCommit =
     claimManifestSlot(spark, dir,
-      ((s"#schema=${sd.schemaJson}" +: (carryStats ++ sd.statsLines).sorted) ++
-        (carryForward ++ sd.rel).sorted).mkString("\n"), basisVersion)
+      manifestText(Some(s"#schema=${sd.schemaJson}"),
+        carryStats ++ sd.statsLines, carryForward ++ sd.rel),
+      basisVersion)
 
   /** Drop a staged-but-unpublished commit's manifest, releasing its
     * version slot (the data files stay until [[vacuum]] — they are
-    * unreferenced orphans). Used by the rebase retry after a refused
+    * unreferenced orphans). Used by [[transact]] after a refused
     * [[publish]], and by any writer abandoning a staged commit. */
   def abandon(spark: SparkSession, dir: String, staged: StagedCommit): Unit = {
-    val f = fs(dir, spark)
-    f.delete(new Path(new Path(dir, "_manifests"), staged.manifestName), false): Unit
+    fs(dir, spark).delete(manifestPath(dir, staged.manifestName), false): Unit
   }
 
   /** Write the manifest into the first FREE version slot at or above
@@ -592,10 +754,10 @@ object ManifestTable {
     val f = fs(dir, spark)
     val mdir = new Path(dir, "_manifests")
     f.mkdirs(mdir)
-    var v = math.max(currentVersion(spark, dir), basis) + 1
+    var v = math.max(pointerVersion(f, dir), basis) + 1
     var attempts = 0
     while (true) {
-      val name = f"manifest-$v%020d.txt"
+      val name = manifestName(v)
       if (createExclusive(f, new Path(mdir, name), content))
         return StagedCommit(v, name, basis)
       v += 1
@@ -675,10 +837,10 @@ object ManifestTable {
     // never swap CURRENT to a void snapshot: a manifest that no longer
     // exists (vacuumed while the commit was in flight, or never staged)
     // must refuse here, not surface later as a dangling-file read error
-    require(f.exists(new Path(new Path(dir, "_manifests"), staged.manifestName)),
+    require(f.exists(manifestPath(dir, staged.manifestName)),
       s"staged manifest ${staged.manifestName} not found in $dir " +
         "(vacuumed while in flight, or never staged) — refusing to publish")
-    val cur = currentVersion(spark, dir)
+    val cur = pointerVersion(f, dir)
     if (cur != staged.basisVersion)
       throw new java.util.ConcurrentModificationException(
         s"table moved v${staged.basisVersion} -> v$cur after v${staged.version} " +
@@ -688,82 +850,113 @@ object ManifestTable {
     swapInto(spark, f, ptrTmp, new Path(dir, PointerName))
   }
 
+  /** What one attempt of a [[transact]] commits: a new manifest's
+    * content (rendered by [[manifestText]]) plus the dir-relative paths
+    * it staged that nothing else references — its `data/<uuid>` dirs, a
+    * deletion-vector sidecar — which a refused publish deletes. */
+  private final case class Put(
+      schemaLine: Option[String],
+      headers: Seq[String],
+      rels: Seq[String],
+      staged: Seq[String] = Nil)
+
+  // a manifest of `sd`'s files plus `carryRels` under `headers` and `sd`'s
+  // own stats; `owned` when this attempt wrote `sd` (a refusal deletes it)
+  private def putData(
+      sd: StagedData, headers: Seq[String], carryRels: Seq[String], owned: Boolean): Put =
+    Put(Some(s"#schema=${sd.schemaJson}"), headers ++ sd.statsLines,
+      carryRels ++ sd.rel, if (owned) Seq(sd.dataDir) else Nil)
+
+  /** Test seam for the optimistic-commit paths: invoked between the slot
+    * claim and the publish attempt of every [[transact]], so a spec can
+    * inject a concurrent commit into exactly the stage→publish window.
+    * Production value is a no-op. */
+  private[graft] var onBeforePublish: () => Unit = () => ()
+
+  /** The one commit path every table operation runs: per attempt, read
+    * ONE snapshot (None before the first commit), build the new content
+    * from it (`attempt` answers Left for a metadata no-op), claim a
+    * version slot based on that snapshot, then [[publish]]. A refused
+    * publish (another writer landed in between) releases the slot and
+    * everything the attempt staged, and re-runs the WHOLE attempt —
+    * prune, re-read, rewrite — against the new CURRENT, so the result is
+    * always what a sequential execution would have produced (the
+    * optimistic retry Delta/Iceberg writers run against their log). After
+    * `retries` refusals the last one propagates; with 0 the first does. */
+  private def transact(spark: SparkSession, dir: String, retries: Int)(
+      attempt: Option[Snapshot] => Either[StagedCommit, Put]): StagedCommit = {
+    val f = fs(dir, spark)
+    var refusals = 0
+    while (true) {
+      val snap = snapshot(f, dir)
+      attempt(snap) match {
+        case Left(noCommit) => return noCommit
+        case Right(put) =>
+          val staged = claimManifestSlot(spark, dir,
+            manifestText(put.schemaLine, put.headers, put.rels),
+            snap.fold(-1L)(_.version))
+          onBeforePublish()
+          try {
+            publish(spark, dir, staged)
+            return staged
+          } catch {
+            case e: java.util.ConcurrentModificationException =>
+              // a refused publish is DEAD forever (the basis can never
+              // match again): release its slot, so no reader of history
+              // ever takes it for a commit, and whatever it staged
+              abandon(spark, dir, staged)
+              put.staged.foreach(rel => f.delete(new Path(dir, rel), true))
+              refusals += 1
+              if (refusals > retries) throw e
+          }
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** Full-snapshot commit: stage, then swap. The table's content after
     * this call is exactly `df`. Registered CHECK constraints carry
     * forward and the incoming content must satisfy them. */
-  def commit(spark: SparkSession, dir: String, df: DataFrame): StagedCommit = {
-    enforceChecks(spark, dir, df)
-    enforceUnique(spark, dir, df, probeExisting = false)
-    commitCarryingChecks(spark, dir, df, carryIndexOf = false)
-  }
+  def commit(spark: SparkSession, dir: String, df: DataFrame): StagedCommit =
+    transact(spark, dir, 0)(commitAttempt(spark, dir, _, df))
 
-  // commit WITHOUT re-validating: for content derived from the table
-  // itself (compaction), whose rows already passed at their own commit —
-  // a redundant full validation pass is exactly what a 100 TB compaction
-  // must not pay. Always carries the #check headers forward;
-  // `carryIndexOf` additionally carries the #indexof source binding AND
-  // the #streambatch idempotence markers — true for LAYOUT rewrites
-  // (compaction: same content, so "which corpus snapshot" and "which
-  // stream batches" both still hold), false for a plain [[commit]]
-  // (arbitrary new content voids a staleness claim and a landed-batch
-  // claim alike; rebind with [[commitIndex]] / re-stamp with
-  // [[appendStamped]]).
-  private def commitCarryingChecks(
-      spark: SparkSession, dir: String, df: DataFrame,
-      carryIndexOf: Boolean): StagedCommit = {
-    val f = fs(dir, spark)
-    val checkLines =
-      if (!f.exists(new Path(dir, PointerName))) Seq.empty[String]
-      else manifestLines(f, dir,
-        readSmallFile(f, new Path(dir, PointerName)).trim)
-        .filter(l => l.startsWith("#check=") || l.startsWith("#unique=") ||
-          (carryIndexOf && (l.startsWith("#indexof=") ||
-            l.startsWith("#streambatch=") || l.startsWith("#meta="))))
-    val staged = stage(spark, dir, df, Seq.empty, checkLines)
-    try publish(spark, dir, staged)
-    catch {
-      // a refused publish is DEAD forever (the basis can never match
-      // again) — release the slot so a caller's retry loop leaves no
-      // orphaned manifests behind, then let the caller decide to rebase
-      case e: java.util.ConcurrentModificationException =>
-        abandon(spark, dir, staged)
-        throw e
-    }
-    staged
+  // a full-snapshot commit of `df` against `snap`: validated, carrying
+  // only the constraints (arbitrary new content voids a staleness claim
+  // and a landed-batch claim alike; rebind with [[commitIndex]] /
+  // re-stamp with [[appendStamped]])
+  private def commitAttempt(
+      spark: SparkSession, dir: String, snap: Option[Snapshot], df: DataFrame)
+      : Either[StagedCommit, Put] = {
+    enforceChecks(snap, df)
+    enforceUnique(spark, dir, snap, df, probeExisting = false)
+    Right(putData(stageData(spark, dir, df),
+      snap.toSeq.flatMap(carried(_, CarryConstraints)), Nil, owned = true))
   }
 
   /** Optimistic read-modify-write TRANSACTION over a whole-table
     * snapshot — the full-snapshot analogue of [[completeAppend]]'s
     * rebase loop, for NON-COMMUTATIVE updates (registry upserts, config
     * tables) where the loser must SEE the winner's rows before retrying:
-    * compute the new content from the CURRENT snapshot and commit; if
-    * another writer landed in between (refused CAS), re-read — now
-    * including that writer's rows — recompute, and retry, bounded by
-    * `maxRetries`. `ifAbsent` seeds the first read when the table does
-    * not exist yet (a genuine read FAILURE still rethrows — existence is
-    * probed explicitly, never inferred from an error). Each attempt
-    * re-runs the CHECK/UNIQUE validation against its own content; the
-    * refused attempt's staged snapshot is released inside the commit
-    * path, so retries leak no version slots. */
+    * compute the new content from the CURRENT snapshot and commit it
+    * against that same snapshot; if another writer landed in between
+    * (refused CAS), re-read — now including that writer's rows —
+    * recompute, and retry, `maxRetries` attempts in all. `ifAbsent` seeds
+    * the first read when the table does not exist yet (a genuine read
+    * FAILURE still rethrows — existence is probed explicitly, never
+    * inferred from an error). Each attempt re-runs the CHECK/UNIQUE
+    * validation against its own content; a refused attempt's staged
+    * snapshot is released, so retries leak no version slots. */
   def commitRebase(
       spark: SparkSession,
       dir: String,
       transform: DataFrame => DataFrame,
       ifAbsent: => DataFrame,
       maxRetries: Int = 20
-  ): StagedCommit = {
-    var attempts = 0
-    while (true) {
-      val base = if (exists(spark, dir)) read(spark, dir) else ifAbsent
-      try return commit(spark, dir, transform(base))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts >= maxRetries) throw e
-      }
+  ): StagedCommit =
+    transact(spark, dir, maxRetries - 1) { snap =>
+      commitAttempt(spark, dir, snap,
+        transform(snap.fold(ifAbsent)(readSnapshot(spark, dir, _))))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Name a committed snapshot — Iceberg's tag / Delta's "version as of
     * a name" governance shape: `_tags/<name>` holds the manifest file
@@ -778,9 +971,7 @@ object ManifestTable {
       c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
       s"tag names are [A-Za-z0-9._-]+: '$name'")
     val f = fs(dir, spark)
-    val mName = f"manifest-$version%020d.txt"
-    require(f.exists(new Path(new Path(dir, "_manifests"), mName)),
-      s"version $version not found (vacuumed, or never committed) in $dir")
+    val mName = requireVersion(f, dir, version)
     val tdir = new Path(dir, "_tags")
     f.mkdirs(tdir)
     val tmp = new Path(tdir, s".$name.tmp.${UUID.randomUUID()}")
@@ -796,8 +987,7 @@ object ManifestTable {
     else f.listStatus(tdir).toSeq
       .filterNot(_.getPath.getName.startsWith("."))
       .map { st =>
-        st.getPath.getName -> readSmallFile(f, st.getPath).trim
-          .stripPrefix("manifest-").stripSuffix(".txt").toLong
+        st.getPath.getName -> versionOf(readSmallFile(f, st.getPath).trim)
       }.toMap
   }
 
@@ -807,8 +997,7 @@ object ManifestTable {
     val f = fs(dir, spark)
     val p = new Path(new Path(dir, "_tags"), name)
     require(f.exists(p), s"tag '$name' not found in $dir")
-    readVersion(spark, dir, readSmallFile(f, p).trim
-      .stripPrefix("manifest-").stripSuffix(".txt").toLong)
+    readVersion(spark, dir, versionOf(readSmallFile(f, p).trim))
   }
 
   /** Remove a tag (the snapshot itself stays until [[vacuum]]). */
@@ -851,15 +1040,13 @@ object ManifestTable {
     * on the slot-1 claim and exactly one wins. */
   def createBranch(spark: SparkSession, dir: String, name: String): Unit = {
     val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
+    val cur = current(spark, dir).name
     val bd = branchDir(dir, name)
     // a directory with no claimed slot is a crashed create, not a
     // branch — recoverable; the slot-1 claim below still picks exactly
     // one winner among concurrent creators
     require(branchStateOpt(f, dir, name).isEmpty,
       s"branch '$name' already exists in $dir")
-    val cur = readSmallFile(f, ptr).trim
     f.mkdirs(bd)
     require(createExclusive(f, new Path(bd, slotName(1L)), s"$cur\n$cur"),
       s"branch '$name' already exists in $dir (lost the creation race)")
@@ -876,8 +1063,7 @@ object ManifestTable {
       .filter(st => st.isDirectory && !st.getPath.getName.startsWith("."))
       .flatMap { st =>
         branchStateOpt(f, dir, st.getPath.getName).map { case (head, base, _) =>
-          def v(n: String) = n.stripPrefix("manifest-").stripSuffix(".txt").toLong
-          st.getPath.getName -> (v(head), v(base))
+          st.getPath.getName -> (versionOf(head), versionOf(base))
         }
       }.toMap
   }
@@ -909,10 +1095,7 @@ object ManifestTable {
   def readBranch(spark: SparkSession, dir: String, name: String): DataFrame = {
     val f = fs(dir, spark)
     val (head, _, _) = branchState(f, dir, name)
-    applyDv(spark, dir,
-      spark.read.parquet(
-        manifestRel(f, dir, head).map(rel => new Path(dir, rel).toString): _*),
-      dvRelsOf(manifestDvLines(f, dir, head)))
+    readSnapshot(spark, dir, manifestAt(f, dir, head))
   }
 
   /** Append `df` to branch `name`: carry the branch HEAD's file list and
@@ -922,7 +1105,7 @@ object ManifestTable {
     * pointer move is an atomic create-if-absent claim of slot seq+1
     * ([[createExclusive]], the [[claimManifestSlot]] recipe): of two
     * appenders racing off the same head, exactly one lands; the loser's
-    * claim fails, its staged manifest is abandoned, and it gets a
+    * claim fails, its staged manifest and data are released, and it gets a
     * ConcurrentModificationException to re-stage against the new head —
     * a stale-head append can NEVER silently overwrite a landed one
     * (stronger than main's CURRENT swap, whose detect-only caveat the
@@ -938,37 +1121,26 @@ object ManifestTable {
   def appendToBranchStamped(
       spark: SparkSession, dir: String, name: String, df: DataFrame,
       streamId: String, batchId: Long): StagedCommit =
-    appendToBranchWith(spark, dir, name, df,
-      hs => hs.filterNot(
-        l => parseStreamBatchLine(l).exists(_._1 == streamId)) :+
-        streamBatchLine(streamId, batchId))
+    appendToBranchWith(spark, dir, name, df, stamp(_, streamId, batchId))
 
   private def appendToBranchWith(
       spark: SparkSession, dir: String, name: String, df: DataFrame,
       mapHeaders: Seq[String] => Seq[String]): StagedCommit = {
     val f = fs(dir, spark)
     val (head, base, seq) = branchState(f, dir, name)
-    requireSameSchema(manifestSchema(f, dir, head), df.schema, "appendToBranch")
-    val headChecks =
-      manifestLines(f, dir, head).filter(_.startsWith("#check="))
-        .flatMap(parseCheckLine)
-    if (headChecks.nonEmpty) {
-      val bad = graft.ops.Quality.constraintReport(df, headChecks)
-        .filter(org.apache.spark.sql.functions.col("n_violations") > 0)
-        .collect()
-      require(bad.isEmpty,
-        s"CHECK constraint violated by the incoming branch batch: " +
-          bad.map(r => s"${r.getString(0)} (${r.getLong(2)} rows)").mkString(", "))
-    }
-    val headV = head.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val staged = stage(spark, dir, df,
-      manifestRel(f, dir, head), mapHeaders(carriedHeaderLines(f, dir, head)),
-      Some(headV))
+    val h = manifestAt(f, dir, head)
+    requireSameSchema(h.schema, df.schema, "appendToBranch")
+    enforceChecks(Some(h), df)
+    val sd = stageData(spark, dir, df)
+    val staged = stageManifest(spark, dir, sd,
+      h.rels, mapHeaders(carried(h, CarryAll)), h.version)
     // the CAS: claim the NEXT pointer slot; a failed claim means another
-    // writer moved the branch after our head read — abandon and retry
+    // writer moved the branch after our head read — release the slot and
+    // the staged batch, and let the caller retry
     if (!createExclusive(f, new Path(branchDir(dir, name), slotName(seq + 1)),
         s"${staged.manifestName}\n$base")) {
       abandon(spark, dir, staged)
+      f.delete(new Path(dir, sd.dataDir), true)
       val (nowHead, _, _) = branchState(f, dir, name)
       throw new java.util.ConcurrentModificationException(
         s"branch '$name' moved $head -> $nowHead while staging; retry")
@@ -984,8 +1156,7 @@ object ManifestTable {
   def fastForward(spark: SparkSession, dir: String, name: String): StagedCommit = {
     val f = fs(dir, spark)
     val (head, base, _) = branchState(f, dir, name)
-    def v(n: String) = n.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val staged = StagedCommit(v(head), head, v(base))
+    val staged = StagedCommit(versionOf(head), head, versionOf(base))
     publish(spark, dir, staged) // basis check = "main still at base"
     staged
   }
@@ -1054,42 +1225,36 @@ object ManifestTable {
       "words must be a power of two <= 16384 (bit positions are 20-bit)")
     require(k >= 1 && k <= 6, "k hashes draw 5 hex chars each from one md5")
     import org.apache.spark.sql.functions.{bit_or, explode, expr, shiftright}
-    import org.apache.spark.sql.functions.{array, col, conv, lit, md5, substring}
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val lines = manifestLines(f, dir, name)
-    val have = lines.filter(_.startsWith("#bloom="))
-      .flatMap(parseBloomLine).filter(_._2 == column).map(_._1).toSet
-    val todo = manifestRel(f, dir, name).filterNot(have)
-    if (todo.isEmpty) return StagedCommit(basis, name, basis)
-    val mBits = words.toLong * 64L
-    val pos = array((0 until k).map { j =>
-      conv(substring(md5(col(column).cast("string")), 1 + 5 * j, 5), 16, 10)
-        .cast("long") % mBits
-    }: _*)
-    val rows = spark.read
-      .parquet(todo.map(rel => new Path(dir, rel).toString): _*)
-      .select(relOfFilePath(col("_metadata.file_path")).as("__rel"),
-        explode(pos).as("__p"))
-      .select(col("__rel"), shiftright(col("__p"), 5).as("__w"),
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(__p & 31 AS INT))").as("__m"))
-      .groupBy(col("__rel"), col("__w")).agg(bit_or(col("__m")).as("__b"))
-      .collect()
-    val byRel = rows.groupBy(_.getString(0)).map { case (rel, rs) =>
-      rel -> FileBloom(k, mBits,
-        rs.map(r => r.getLong(1) -> r.getLong(2)).toMap)
+    import org.apache.spark.sql.functions.{array, col, conv, md5, substring}
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      val have = s.headers.filter(_.startsWith("#bloom="))
+        .flatMap(parseBloomLine).filter(_._2 == column).map(_._1).toSet
+      val todo = s.rels.filterNot(have)
+      if (todo.isEmpty) Left(s.unchanged)
+      else {
+        val mBits = words.toLong * 64L
+        val pos = array((0 until k).map { j =>
+          conv(substring(md5(col(column).cast("string")), 1 + 5 * j, 5), 16, 10)
+            .cast("long") % mBits
+        }: _*)
+        val rows = spark.read
+          .parquet(todo.map(rel => new Path(dir, rel).toString): _*)
+          .select(relOfFilePath(col("_metadata.file_path")).as("__rel"),
+            explode(pos).as("__p"))
+          .select(col("__rel"), shiftright(col("__p"), 5).as("__w"),
+            expr("shiftleft(CAST(1 AS BIGINT), CAST(__p & 31 AS INT))").as("__m"))
+          .groupBy(col("__rel"), col("__w")).agg(bit_or(col("__m")).as("__b"))
+          .collect()
+        val byRel = rows.groupBy(_.getString(0)).map { case (rel, rs) =>
+          rel -> FileBloom(k, mBits,
+            rs.map(r => r.getLong(1) -> r.getLong(2)).toMap)
+        }
+        val newLines = todo.flatMap(rel =>
+          byRel.get(rel).map(fb => bloomLineOf(rel, column, fb)))
+        Right(Put(s.schemaLine, carried(s, CarryAll) ++ newLines, s.rels))
+      }
     }
-    val newLines = todo.flatMap(rel =>
-      byRel.get(rel).map(fb => bloomLineOf(rel, column, fb)))
-    val schemaLine = lines.filter(_.startsWith("#schema="))
-    val header = carriedHeadersFor(lines, _ => true)
-    val content =
-      ((schemaLine ++ (header ++ newLines).sorted) ++
-        manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    publish(spark, dir, staged)
-    staged
   }
 
   /** Partition the current snapshot's files into (survivors, total) for
@@ -1105,22 +1270,22 @@ object ManifestTable {
       dir: String,
       column: String,
       value: String): (Seq[String], Int) = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    val blooms = manifestLines(f, dir, name).filter(_.startsWith("#bloom="))
+    val s = current(spark, dir)
+    (bloomKept(dir, s, column, value), s.rels.size)
+  }
+
+  private def bloomKept(
+      dir: String, s: Snapshot, column: String, value: String): Seq[String] = {
+    val blooms = s.headers.filter(_.startsWith("#bloom="))
       .flatMap(parseBloomLine).filter(_._2 == column)
       .map(t => t._1 -> t._3).toMap
-    val rels = manifestRel(f, dir, name)
-    val kept = rels.filter { rel =>
+    s.rels.filter { rel =>
       blooms.get(rel).forall { fb =>
         bloomPositions(value, fb.k, fb.mBits).forall { p =>
           (fb.bits.getOrElse(p >> 5, 0L) & (1L << (p & 31L).toInt)) != 0L
         }
       }
-    }
-    (kept.map(rel => new Path(dir, rel).toString), rels.size)
+    }.map(rel => new Path(dir, rel).toString)
   }
 
   // #ndv=<b64 rel>|<b64 col>|<k>|<b64 "h1,h2,...">
@@ -1142,6 +1307,9 @@ object ManifestTable {
       case _ => None
     }
 
+  private def ndvSketches(s: Snapshot, column: String): Seq[(String, String, Int, Seq[Long])] =
+    s.headers.filter(_.startsWith("#ndv=")).flatMap(parseNdvLine).filter(_._2 == column)
+
   /** Record a KMV distinct-count sketch over `column` for every current
     * file lacking one — ONE metadata transaction, like [[addBloom]]. The
     * build scans only the unsketched files; per file the k smallest
@@ -1156,38 +1324,32 @@ object ManifestTable {
     require(k >= 2, s"k must be at least 2: $k")
     import org.apache.spark.sql.functions.{col, collect_list, conv}
     import org.apache.spark.sql.functions.{md5, row_number, sort_array, substring}
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val lines = manifestLines(f, dir, name)
-    val have = lines.filter(_.startsWith("#ndv="))
-      .flatMap(parseNdvLine).filter(_._2 == column).map(_._1).toSet
-    val todo = manifestRel(f, dir, name).filterNot(have)
-    if (todo.isEmpty) return StagedCommit(basis, name, basis)
-    val h = conv(substring(md5(col(column).cast("string")), 1, 15), 16, 10)
-      .cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__rel")).orderBy(col("__h").asc)
-    val rows = spark.read
-      .parquet(todo.map(rel => new Path(dir, rel).toString): _*)
-      .select(relOfFilePath(col("_metadata.file_path")).as("__rel"),
-        h.as("__h"))
-      .distinct()
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= k)
-      .groupBy(col("__rel"))
-      .agg(sort_array(collect_list(col("__h"))).as("__mins"))
-      .collect()
-    val newLines = rows.map(r => ndvLineOf(r.getString(0), column, k,
-      r.getSeq[Long](1)))
-    val schemaLine = lines.filter(_.startsWith("#schema="))
-    val header = carriedHeadersFor(lines, _ => true)
-    val content =
-      ((schemaLine ++ (header ++ newLines).sorted) ++
-        manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    publish(spark, dir, staged)
-    staged
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      val have = s.headers.filter(_.startsWith("#ndv="))
+        .flatMap(parseNdvLine).filter(_._2 == column).map(_._1).toSet
+      val todo = s.rels.filterNot(have)
+      if (todo.isEmpty) Left(s.unchanged)
+      else {
+        val h = conv(substring(md5(col(column).cast("string")), 1, 15), 16, 10)
+          .cast("long")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("__rel")).orderBy(col("__h").asc)
+        val rows = spark.read
+          .parquet(todo.map(rel => new Path(dir, rel).toString): _*)
+          .select(relOfFilePath(col("_metadata.file_path")).as("__rel"),
+            h.as("__h"))
+          .distinct()
+          .withColumn("__rk", row_number().over(w))
+          .filter(col("__rk") <= k)
+          .groupBy(col("__rel"))
+          .agg(sort_array(collect_list(col("__h"))).as("__mins"))
+          .collect()
+        val newLines = rows.map(r => ndvLineOf(r.getString(0), column, k,
+          r.getSeq[Long](1)))
+        Right(Put(s.schemaLine, carried(s, CarryAll) ++ newLines, s.rels))
+      }
+    }
   }
 
   /** Table-level distinct-count estimate for `column` from the manifest
@@ -1201,13 +1363,9 @@ object ManifestTable {
       spark: SparkSession,
       dir: String,
       column: String): (Double, Int, Int) = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    val sketches = manifestLines(f, dir, name).filter(_.startsWith("#ndv="))
-      .flatMap(parseNdvLine).filter(_._2 == column)
-    val total = manifestRel(f, dir, name).size
+    val s = current(spark, dir)
+    val sketches = ndvSketches(s, column)
+    val total = s.rels.size
     if (sketches.isEmpty) return (0.0, 0, total)
     val k = sketches.map(_._3).min
     val merged = sketches.flatMap(_._4).distinct.sorted.take(k)
@@ -1235,13 +1393,9 @@ object ManifestTable {
       dirA: String, colA: String,
       dirB: String, colB: String): Map[String, Double] = {
     def tableSketch(dir: String, column: String): (Seq[Long], Int) = {
-      val f = fs(dir, spark)
-      val ptr = new Path(dir, PointerName)
-      require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-      val name = readSmallFile(f, ptr).trim
-      val sketches = manifestLines(f, dir, name).filter(_.startsWith("#ndv="))
-        .flatMap(parseNdvLine).filter(_._2 == column)
-      val total = manifestRel(f, dir, name).size
+      val s = current(spark, dir)
+      val sketches = ndvSketches(s, column)
+      val total = s.rels.size
       require(sketches.size == total,
         s"$dir: only ${sketches.size} of $total files carry a #ndv sketch " +
           s"for $column — run addNdvSketch after appends")
@@ -1279,37 +1433,20 @@ object ManifestTable {
       column: String,
       value: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (kept, _) = pruneByBloom(spark, dir, column, value)
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          currentSchema(spark, dir).getOrElse(read(spark, dir).schema))
-      else applyDv(spark, dir, spark.read.parquet(kept: _*),
-        dvRelsOf(manifestDvLines(f, dir, name)))
-    base.filter(col(column).cast("string") === value)
+    val s = current(spark, dir)
+    readKept(spark, dir, s, bloomKept(dir, s, column, value))
+      .filter(col(column).cast("string") === value)
   }
-
-  // The carry list, its stats lines, and the version they came from —
-  // read from ONE pointer resolution so they can never mix snapshots.
-  private def carryState(f: FileSystem, dir: String): (Seq[String], Seq[String], Long) =
-    if (f.exists(new Path(dir, PointerName))) {
-      val name = readSmallFile(f, new Path(dir, PointerName)).trim
-      (manifestRel(f, dir, name),
-        carriedHeaderLines(f, dir, name),
-        name.stripPrefix("manifest-").stripSuffix(".txt").toLong)
-    } else (Seq.empty[String], Seq.empty[String], -1L)
 
   /** Steps (2)+(3) for an append of already-written data files, with
     * OPTIMISTIC REBASE: read the current carry list, stage a manifest
     * against it, publish; if another writer committed in between
     * (refused swap), abandon the manifest, re-read the carry — now
-    * including the other writer's files — and retry. Appends are
-    * commutative (pure file-list union), so the rebase needs no data
-    * rewrite and both writers' batches land; this is the multi-writer
-    * append loop Delta/Iceberg writers run against their log. */
+    * including the other writer's files — and retry, `maxRetries`
+    * attempts in all. Appends are commutative (pure file-list union), so
+    * the rebase needs no data rewrite and both writers' batches land;
+    * this is the multi-writer append loop Delta/Iceberg writers run
+    * against their log. */
   def completeAppend(
       spark: SparkSession,
       dir: String,
@@ -1321,30 +1458,34 @@ object ManifestTable {
   // loop — the transform sees the freshly-read carry headers on every
   // retry, so a header this append must replace (an #indexof rebind, a
   // #streambatch stamp) can never resurrect a concurrent writer's stale
-  // line.
+  // line. `sd` is reused by every attempt, so a refusal keeps it.
   private def completeAppendWith(
       spark: SparkSession,
       dir: String,
       sd: StagedData,
       mapHeaders: Seq[String] => Seq[String],
       maxRetries: Int = 20
-  ): StagedCommit = {
-    val f = fs(dir, spark)
-    var attempts = 0
-    while (true) {
-      val (carry, carryStats, basis) = carryState(f, dir)
-      val staged = stageManifest(spark, dir, sd, carry, mapHeaders(carryStats), basis)
-      try {
-        publish(spark, dir, staged)
-        return staged
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          abandon(spark, dir, staged)
-          attempts += 1
-          if (attempts >= maxRetries) throw e
-      }
+  ): StagedCommit =
+    transact(spark, dir, maxRetries - 1) { snap =>
+      Right(appendPut(snap, sd, mapHeaders, owned = false))
     }
-    throw new IllegalStateException("unreachable")
+
+  // `sd` appended to `snap`: every file and header carries
+  private def appendPut(
+      snap: Option[Snapshot], sd: StagedData,
+      mapHeaders: Seq[String] => Seq[String], owned: Boolean): Put =
+    putData(sd, mapHeaders(snap.toSeq.flatMap(carried(_, CarryAll))),
+      snap.toSeq.flatMap(_.rels), owned)
+
+  // the gate every append runs on its batch, against one snapshot:
+  // schema, CHECK constraints, and (`unique`) the UNIQUE keys
+  private def validateAppend(
+      spark: SparkSession, dir: String, df: DataFrame, op: String,
+      unique: Boolean): Unit = {
+    val snap = snapshot(fs(dir, spark), dir)
+    requireSameSchema(snap.flatMap(_.schema), df.schema, op)
+    enforceChecks(snap, df)
+    if (unique) enforceUnique(spark, dir, snap, df, probeExisting = true)
   }
 
   /** Append-commit: the new snapshot = every current file plus `df`'s new
@@ -1354,9 +1495,7 @@ object ManifestTable {
     * swap is the only mutation readers can see). Concurrent appenders
     * each land exactly once via [[completeAppend]]'s rebase loop. */
   def append(spark: SparkSession, dir: String, df: DataFrame): StagedCommit = {
-    requireSameSchema(currentSchema(spark, dir), df.schema, "append")
-    enforceChecks(spark, dir, df)
-    enforceUnique(spark, dir, df, probeExisting = true)
+    validateAppend(spark, dir, df, "append", unique = true)
     completeAppend(spark, dir, stageData(spark, dir, df))
   }
 
@@ -1367,22 +1506,17 @@ object ManifestTable {
     * the whole frame (for a streaming sink, on every micro-batch — the
     * r15 optimization round measured that second evaluation as one full
     * job per batch in stream_idempotent_sink). An empty stage commits
-    * nothing and its files — referenced by no manifest — are deleted
+    * nothing and its directory — referenced by no manifest — is deleted
     * immediately rather than left as vacuum debt on every empty batch.
     * Returns None when nothing was appended. */
   def appendIfNonEmpty(
       spark: SparkSession, dir: String, df: DataFrame): Option[StagedCommit] = {
-    requireSameSchema(currentSchema(spark, dir), df.schema, "append")
-    enforceChecks(spark, dir, df)
-    enforceUnique(spark, dir, df, probeExisting = true)
+    validateAppend(spark, dir, df, "append", unique = true)
     val sd = stageData(spark, dir, df)
     val rows = sd.statsLines.flatMap(parseSizeLine).map(_._3).sum
     if (rows > 0L) Some(completeAppend(spark, dir, sd))
     else {
-      val f = fs(dir, spark)
-      sd.rel.headOption.foreach { r =>
-        f.delete(new Path(dir, r).getParent, true): Unit
-      }
+      fs(dir, spark).delete(new Path(dir, sd.dataDir), true)
       None
     }
   }
@@ -1412,38 +1546,30 @@ object ManifestTable {
       if (keepSliceCol) df.columns.toSeq
       else df.columns.toSeq.filterNot(_ == sliceCol)
     val content = df.select(contentCols.map(col): _*)
-    requireSameSchema(currentSchema(spark, dir), content.schema, "appendSlices")
-    val dataDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-    df.select(contentCols.map(col) :+
-        col(sliceCol).cast("string").as("__slice"): _*)
-      .repartition(col("__slice"))
-      .write.partitionBy("__slice").parquet(dataDir.toString)
-    val sliceDirs = f.listStatus(dataDir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("__slice="))
-      .sortBy(_.getName)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = f.makeQualified(new Path(dir)).toUri.getPath
-    val needsValidation =
-      checks(spark, dir).nonEmpty || uniqueKeys(spark, dir).nonEmpty
-    sliceDirs.map { sd =>
-      val statuses = f.listStatus(sd).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      val rel = statuses.map(
-        _.getPath.toUri.getPath.stripPrefix(root).stripPrefix("/"))
-      val statsRows = statuses.zip(rel).map { case (st, r) =>
-        val (cs, rows) = footerStatsRows(conf, st.getPath, r)
-        (cs.map(statsLine), sizeLineOf(r, st.getLen, rows))
-      }
-      if (needsValidation) {
-        val sliceDf = spark.read.schema(content.schema)
-          .parquet(statuses.map(_.getPath.toString): _*)
-        enforceChecks(spark, dir, sliceDf)
-        enforceUnique(spark, dir, sliceDf, probeExisting = true)
-      }
-      completeAppend(spark, dir, StagedData(rel,
-        statsRows.flatMap(_._1) ++ statsRows.map(_._2),
-        content.schema.json))
+    val before = snapshot(f, dir)
+    requireSameSchema(before.flatMap(_.schema), content.schema, "appendSlices")
+    val needsValidation = checksOf(before).nonEmpty || uniqueKeysOf(before).nonEmpty
+    val all = writeData(spark, dir, content.schema.json) { d =>
+      df.select(contentCols.map(col) :+
+          col(sliceCol).cast("string").as("__slice"): _*)
+        .repartition(col("__slice"))
+        .write.partitionBy("__slice").parquet(d)
     }
+    // rel = data/<uuid>/__slice=<value>/part-…: one group per slice dir,
+    // in slice order
+    all.rel.groupBy(rel => rel.substring(0, rel.lastIndexOf('/'))).toSeq.sortBy(_._1)
+      .map { case (_, rels) =>
+        val mine = rels.toSet
+        if (needsValidation) {
+          val sliceDf = spark.read.schema(content.schema)
+            .parquet(rels.map(r => new Path(dir, r).toString): _*)
+          // each slice validates against the table as the previous
+          // slices left it
+          validateAppend(spark, dir, sliceDf, "appendSlices", unique = true)
+        }
+        completeAppend(spark, dir, all.copy(rel = rels,
+          statsLines = all.statsLines.filter(l => headerRel(l).exists(mine))))
+      }
   }
 
   /** Row-level DELETE as one table transaction, with the rewrite cost
@@ -1464,7 +1590,7 @@ object ManifestTable {
       hi: Double
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    boundedRewrite(spark, dir, () => pruneByRange(spark, dir, column, lo, hi)._1,
+    boundedRewrite(spark, dir, pruneRanges(dir, _, column, Seq((lo, hi))),
       // null-valued rows can never match a BETWEEN delete — they survive
       _.filter(col(column).isNull || !col(column).between(lo, hi)))
   }
@@ -1483,7 +1609,7 @@ object ManifestTable {
       value: String
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    boundedRewrite(spark, dir, () => pruneByEquals(spark, dir, column, value)._1,
+    boundedRewrite(spark, dir, pruneStrings(dir, _, column, Seq((value, value))),
       _.filter(col(column).isNull || col(column) =!= value))
   }
 
@@ -1512,8 +1638,8 @@ object ManifestTable {
       hi: Double
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    dvDelete(spark, dir, () => pruneByRange(spark, dir, column, lo, hi)._1,
-      col(column).isNotNull && col(column).between(lo, hi))
+    dvDelete(spark, dir, s => (pruneRanges(dir, s, column, Seq((lo, hi))),
+      col(column).isNotNull && col(column).between(lo, hi)))
   }
 
   /** [[deleteVectorWhere]] for a CATEGORICAL (string-equality)
@@ -1526,8 +1652,8 @@ object ManifestTable {
       value: String
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    dvDelete(spark, dir, () => pruneByEquals(spark, dir, column, value)._1,
-      col(column) === value)
+    dvDelete(spark, dir, s => (pruneStrings(dir, s, column, Seq((value, value))),
+      col(column) === value))
   }
 
   /** [[deleteVectorWhere]] for an explicit KEY LIST — the erasure-queue
@@ -1543,26 +1669,11 @@ object ManifestTable {
       values: Seq[Any]
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    val f = fs(dir, spark)
-    def candidates(): Seq[String] = {
-      val name = readSmallFile(f, new Path(dir, PointerName)).trim
-      val numeric = values.collect { case n: Number => n.doubleValue }
-      val strings = values.collect { case s: String => s }
-      if (values.isEmpty) Seq.empty
-      else if (numeric.size == values.size)
-        pruneByRangesIn(spark, dir, name, column,
-          numeric.map(v => (Math.nextDown(v), Math.nextUp(v))))._1
-      else if (strings.size == values.size)
-        pruneByStringsIn(spark, dir, name, column, strings)._1
-      else manifestRel(f, dir, name).map(rel => new Path(dir, rel).toString)
-    }
-    val schema = currentSchema(spark, dir).getOrElse(read(spark, dir).schema)
-    val native = values.flatMap(v => exactNative(v, schema(column).dataType))
-    if (native.isEmpty) {
-      val name = readSmallFile(f, new Path(dir, PointerName)).trim
-      val cur = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-      StagedCommit(cur, name, cur)
-    } else dvDelete(spark, dir, () => candidates(), col(column).isin(native: _*))
+    dvDelete(spark, dir, { s =>
+      val native = nativeValues(spark, dir, s, column, values)
+      (if (native.isEmpty) Seq.empty else inListCandidates(dir, s, column, values),
+        col(column).isin(native: _*))
+    })
   }
 
   /** Row-level UPDATE as a MERGE-ON-READ transaction — the update twin
@@ -1586,70 +1697,31 @@ object ManifestTable {
       lo: Double,
       hi: Double,
       assignments: Map[String, org.apache.spark.sql.Column]
-  ): StagedCommit = withCommitRetry(5) { () =>
-    import org.apache.spark.sql.functions.{broadcast, col}
+  ): StagedCommit = {
+    import org.apache.spark.sql.functions.col
     require(assignments.nonEmpty, "an update needs at least one assignment")
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val candidates = pruneByRange(spark, dir, column, lo, hi)._1
-    if (candidates.isEmpty) StagedCommit(basis, name, basis)
-    else {
-      val dvLines = manifestDvLines(f, dir, name)
-      val existing = dvRelsOf(dvLines)
-      val keyed = spark.read.parquet(candidates: _*)
-        .withColumn("__graft_dv_rel", relOfFilePath(col("_metadata.file_path")))
-        .withColumn("__graft_dv_pos", col("_metadata.row_index"))
-      val live =
-        if (existing.isEmpty) keyed
-        else {
-          val dv = spark.read.parquet(
-            existing.map(r => new Path(dir, r).toString): _*)
-          keyed.join(broadcast(dv),
-            keyed("__graft_dv_rel") === dv("_file") &&
-              keyed("__graft_dv_pos") === dv("_pos"),
-            "left_anti")
-        }
-      val matching = live
-        .filter(col(column).isNotNull && col(column).between(lo, hi))
-      val updated = assignments.toSeq.sortBy(_._1)
-        .foldLeft(matching) { case (df, (k, v)) => df.withColumn(k, v) }
-        .drop("__graft_dv_rel", "__graft_dv_pos")
-      requireSameSchema(currentSchema(spark, dir), updated.schema,
-        "updateVectorWhere")
-      val sd = stageData(spark, dir, updated)
-      val dvDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-      matching
-        .select(col("__graft_dv_rel").as("_file"),
-          col("__graft_dv_pos").as("_pos"))
-        .repartition(1).write.parquet(dvDir.toString)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dvFiles = f.listStatus(dvDir).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      if (dvFiles.map(p => parquetRowCount(conf, p)).sum == 0L) {
-        // nothing matched: the (empty) staged data files and the sidecar
-        // are orphans for vacuum; metadata no-op
-        f.delete(dvDir, true)
-        StagedCommit(basis, name, basis)
-      } else {
-        val root = f.makeQualified(new Path(dir)).toUri.getPath
-        val newDvRels = dvFiles.map(
-          _.toUri.getPath.stripPrefix(root).stripPrefix("/"))
-        val lines = manifestLines(f, dir, name)
-        val schemaLine = lines.filter(_.startsWith("#schema="))
-        val carried = carriedHeadersFor(lines, _ => true)
-        val content =
-          ((schemaLine ++
-            (carried ++ sd.statsLines ++ newDvRels.map(dvLineOf)).sorted) ++
-            (manifestRel(f, dir, name) ++ sd.rel).sorted).mkString("\n")
-        val staged = claimManifestSlot(spark, dir, content, basis)
-        onBeforePublish()
-        try { publish(spark, dir, staged); staged }
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            abandon(spark, dir, staged)
-            f.delete(dvDir, true)
-            throw e
+    transact(spark, dir, 5) { snap =>
+      val s = table(snap, dir)
+      val candidates = pruneRanges(dir, s, column, Seq((lo, hi)))
+      if (candidates.isEmpty) Left(s.unchanged)
+      else {
+        val matching = livePositions(spark, dir,
+          spark.read.parquet(candidates: _*), s.dvRels)
+          .filter(col(column).isNotNull && col(column).between(lo, hi))
+        val updated = assignments.toSeq.sortBy(_._1)
+          .foldLeft(matching) { case (df, (k, v)) => df.withColumn(k, v) }
+          .drop("__graft_dv_rel", "__graft_dv_pos")
+        requireSameSchema(s.schema, updated.schema, "updateVectorWhere")
+        val sd = stageData(spark, dir, updated)
+        writeDv(spark, dir, matching) match {
+          case None =>
+            // nothing matched: the (empty) staged copies go too; no-op
+            fs(dir, spark).delete(new Path(dir, sd.dataDir), true)
+            Left(s.unchanged)
+          case Some((dvDir, dvRels)) =>
+            Right(Put(s.schemaLine,
+              carried(s, CarryAll) ++ sd.statsLines ++ dvRels.map(dvLineOf),
+              s.rels ++ sd.rel, Seq(sd.dataDir, dvDir)))
         }
       }
     }
@@ -1658,12 +1730,8 @@ object ManifestTable {
   /** The current snapshot's deletion-vector sidecar paths
     * (dir-relative), in manifest order — empty when every row of every
     * listed file is live. */
-  def currentDeleteVectors(spark: SparkSession, dir: String): Seq[String] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    dvRelsOf(manifestDvLines(f, dir, readSmallFile(f, ptr).trim))
-  }
+  def currentDeleteVectors(spark: SparkSession, dir: String): Seq[String] =
+    current(spark, dir).dvRels
 
   /** Total positions across the current snapshot's deletion vectors —
     * footer row counts only, no data read. The compaction trigger: when
@@ -1675,77 +1743,30 @@ object ManifestTable {
       .map(rel => parquetRowCount(conf, new Path(dir, rel))).sum
   }
 
+  // A merge-on-read delete: `select` names, under the attempt's snapshot,
+  // the candidate files and the predicate of the rows to delete. The
+  // positions of matching rows NOT already deleted — one scan of the
+  // candidate files, nothing else — land in one new vector: same data
+  // files, same stats/blooms/sketches, a header-only commit. A refusal
+  // releases the sidecar; the retry recomputes the still-live positions
+  // against the new CURRENT.
   private def dvDelete(
       spark: SparkSession,
       dir: String,
-      candidatesOf: () => Seq[String],
-      matches: org.apache.spark.sql.Column
-  ): StagedCommit = withCommitRetry(5) { () =>
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val candidates = candidatesOf()
-    if (candidates.isEmpty) StagedCommit(basis, name, basis)
-    else {
-      val dvLines = manifestDvLines(f, dir, name)
-      val existing = dvRelsOf(dvLines)
-      // positions of matching rows NOT already deleted — one scan of the
-      // candidate files, nothing else
-      val keyed = spark.read.parquet(candidates: _*)
-        .withColumn("__graft_dv_rel", relOfFilePath(col("_metadata.file_path")))
-        .withColumn("__graft_dv_pos", col("_metadata.row_index"))
-      val notYet =
-        if (existing.isEmpty) keyed
-        else {
-          val dv = spark.read.parquet(
-            existing.map(r => new Path(dir, r).toString): _*)
-          keyed.join(broadcast(dv),
-            keyed("__graft_dv_rel") === dv("_file") &&
-              keyed("__graft_dv_pos") === dv("_pos"),
-            "left_anti")
-        }
-      val newDv = notYet.filter(matches)
-        .select(col("__graft_dv_rel").as("_file"),
-          col("__graft_dv_pos").as("_pos"))
-      val dvDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-      // repartition(1), NOT coalesce(1): coalesce would collapse the
-      // whole candidate scan + anti-join into one task, while the
-      // repartition shuffle keeps the scan parallel and moves only the
-      // tiny (file, pos) pairs to a single writer — preserving the
-      // one-sidecar-per-delete minimality every future read pays for
-      newDv.repartition(1).write.parquet(dvDir.toString)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dvFiles = f.listStatus(dvDir).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      if (dvFiles.map(p => parquetRowCount(conf, p)).sum == 0L) {
-        f.delete(dvDir, true) // nothing newly deleted: metadata no-op
-        StagedCommit(basis, name, basis)
-      } else {
-        val root = f.makeQualified(new Path(dir)).toUri.getPath
-        val newDvRels = dvFiles.map(_.toUri.getPath.stripPrefix(root).stripPrefix("/"))
-        // same data files, same stats/blooms/sketches, one more vector —
-        // header-only commit
-        val lines = manifestLines(f, dir, name)
-        val schemaLine = lines.filter(_.startsWith("#schema="))
-        val carried = carriedHeadersFor(lines, _ => true) // incl. prior vectors
-        val content =
-          ((schemaLine ++ (carried ++ newDvRels.map(dvLineOf)).sorted) ++
-            manifestRel(f, dir, name).sorted).mkString("\n")
-        val staged = claimManifestSlot(spark, dir, content, basis)
-        onBeforePublish()
-        try { publish(spark, dir, staged); staged }
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            // release the slot AND the sidecar: a retry recomputes the
-            // still-live positions against the new CURRENT
-            abandon(spark, dir, staged)
-            f.delete(dvDir, true)
-            throw e
-        }
+      select: Snapshot => (Seq[String], org.apache.spark.sql.Column)
+  ): StagedCommit =
+    transact(spark, dir, 5) { snap =>
+      val s = table(snap, dir)
+      val (candidates, matches) = select(s)
+      if (candidates.isEmpty) Left(s.unchanged)
+      else writeDv(spark, dir, livePositions(spark, dir,
+          spark.read.parquet(candidates: _*), s.dvRels).filter(matches)) match {
+        case None => Left(s.unchanged) // nothing newly deleted
+        case Some((dvDir, dvRels)) =>
+          Right(Put(s.schemaLine, carried(s, CarryAll) ++ dvRels.map(dvLineOf),
+            s.rels, Seq(dvDir)))
       }
     }
-  }
 
   /** The DELETE half of O(delta) index maintenance — the transaction
     * [[appendIndex]] is for appends: after corpus rows are DV-deleted,
@@ -1769,114 +1790,21 @@ object ManifestTable {
       sourceDir: String,
       sourceVersion: Long,
       meta: Map[String, String] = Map.empty
-  ): StagedCommit = withCommitRetry(5) { () =>
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val numeric = values.collect { case n: Number => n.doubleValue }
-    val strings = values.collect { case s: String => s }
-    val (kept, _) =
-      if (values.isEmpty) (Seq.empty[String], 0)
-      else if (numeric.size == values.size)
-        pruneByRangesIn(spark, dir, name, column,
-          numeric.map(v => (Math.nextDown(v), Math.nextUp(v))))
-      else if (strings.size == values.size)
-        pruneByStringsIn(spark, dir, name, column, strings)
-      else (manifestRel(f, dir, name).map(rel => new Path(dir, rel).toString), 0)
-    val schema = currentSchema(spark, dir).getOrElse(read(spark, dir).schema)
-    val native = values.flatMap(v => exactNative(v, schema(column).dataType))
-    var dvDir: Option[Path] = None
-    val newDvRels: Seq[String] =
-      if (kept.isEmpty || native.isEmpty) Seq.empty
-      else {
-        val existing = dvRelsOf(manifestDvLines(f, dir, name))
-        val keyed = spark.read.parquet(kept: _*)
-          .withColumn("__graft_dv_rel", relOfFilePath(col("_metadata.file_path")))
-          .withColumn("__graft_dv_pos", col("_metadata.row_index"))
-        val notYet =
-          if (existing.isEmpty) keyed
-          else {
-            val dv = spark.read.parquet(
-              existing.map(r => new Path(dir, r).toString): _*)
-            keyed.join(broadcast(dv),
-              keyed("__graft_dv_rel") === dv("_file") &&
-                keyed("__graft_dv_pos") === dv("_pos"),
-              "left_anti")
-          }
-        val d = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-        notYet.filter(col(column).isin(native: _*))
-          .select(col("__graft_dv_rel").as("_file"),
-            col("__graft_dv_pos").as("_pos"))
-          .repartition(1).write.parquet(d.toString)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val dvFiles = f.listStatus(d).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        if (dvFiles.map(p => parquetRowCount(conf, p)).sum == 0L) {
-          f.delete(d, true) // nothing matched: header-only rebind below
-          Seq.empty
-        } else {
-          dvDir = Some(d)
-          val root = f.makeQualified(new Path(dir)).toUri.getPath
-          dvFiles.map(_.toUri.getPath.stripPrefix(root).stripPrefix("/"))
-        }
-      }
-    val lines = manifestLines(f, dir, name)
-    val schemaLine = lines.filter(_.startsWith("#schema="))
+  ): StagedCommit = transact(spark, dir, 5) { snap =>
+    import org.apache.spark.sql.functions.col
+    val s = table(snap, dir)
+    val kept = inListCandidates(dir, s, column, values)
+    val native = nativeValues(spark, dir, s, column, values)
+    val dv =
+      if (kept.isEmpty || native.isEmpty) None
+      else writeDv(spark, dir, livePositions(spark, dir,
+        spark.read.parquet(kept: _*), s.dvRels).filter(col(column).isin(native: _*)))
     // the rebind replaces the old binding; `meta` keys (corpus totals a
     // delete shrinks) replace their old lines in the same move
-    val carried = carriedHeadersFor(lines, _ => true)
-      .filterNot(l => l.startsWith("#indexof=") ||
-        parseMetaLine(l).exists(kv => meta.contains(kv._1)))
-    val metaLines = meta.toSeq.sortBy(_._1).map { case (k, v) => metaLine(k, v) }
-    val content =
-      ((schemaLine ++
-        (carried ++ newDvRels.map(dvLineOf) ++ metaLines :+
-          indexOfLine(sourceDir, sourceVersion)).sorted) ++
-        manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    onBeforePublish()
-    try { publish(spark, dir, staged); staged }
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // release the slot AND the sidecar: a retry recomputes the
-        // still-live positions against the new CURRENT
-        abandon(spark, dir, staged)
-        dvDir.foreach(f.delete(_, true))
-        throw e
-    }
-  }
-
-  /** Test seam for the optimistic-retry paths: invoked between staging
-    * and the publish attempt of every retrying transaction
-    * ([[boundedRewrite]], [[mergeInto]], [[compactSmallFiles]], the
-    * deletion-vector commits), so a spec can inject a concurrent commit
-    * into exactly the stage→publish window. Production value is a
-    * no-op. */
-  private[graft] var onBeforePublish: () => Unit = () => ()
-
-  /** Bounded retries for a refused optimistic commit: `tx` runs the
-    * WHOLE transaction — re-read CURRENT, re-prune candidates, re-stage —
-    * and must leave nothing published on failure (each retrying caller
-    * abandons its own staged manifest before rethrowing). This is the
-    * [[completeAppend]] rebase loop generalized to non-append
-    * transactions, the retry Delta/Iceberg writers run: a busy
-    * multi-pipeline table must not make every conflicting merge/delete/
-    * compaction a caller-side redo. Retries re-execute the prune AND the
-    * data rewrite against the post-conflict snapshot, so the result is
-    * always what a sequential execution would have produced; orphaned
-    * data files from refused attempts are swept by [[vacuum]]. */
-  private def withCommitRetry[A](maxRetries: Int)(tx: () => A): A = {
-    var attempts = 0
-    while (true) {
-      try return tx()
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts > maxRetries) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    Right(Put(s.schemaLine,
+      rebind(carried(s, CarryAll), sourceDir, sourceVersion, meta) ++
+        dv.toSeq.flatMap(_._2.map(dvLineOf)),
+      s.rels, dv.map(_._1).toSeq))
   }
 
   /** The shared stats-bounded copy-on-write transaction: re-read ONLY
@@ -1885,47 +1813,34 @@ object ManifestTable {
     * with one pointer swap. A transaction whose prune touches nothing is
     * a metadata no-op (no new version). The cost is the candidate files,
     * never the table — the invariant [[deleteWhere]],
-    * [[deleteWhereEquals]] and [[mergeInto]] all ride on.
-    *
-    * `candidatesOf` is a CLOSURE over the prune, not a precomputed list:
-    * a refused publish (concurrent commit) abandons the staged manifest
-    * and re-runs the whole transaction — prune included — against the
-    * new CURRENT, bounded by `maxRetries`. */
+    * [[deleteWhereEquals]] and [[mergeInto]] all ride on. A refused
+    * publish re-runs the whole transaction — prune included — against
+    * the new CURRENT. */
   private def boundedRewrite(
       spark: SparkSession,
       dir: String,
-      candidatesOf: () => Seq[String],
-      rewrite: DataFrame => DataFrame,
-      maxRetries: Int = 5
-  ): StagedCommit = withCommitRetry(maxRetries) { () =>
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val candidates = candidatesOf()
-    if (candidates.isEmpty) StagedCommit(basis, name, basis)
-    else {
-      val candSet = candidates.toSet
-      val untouched = manifestRel(f, dir, name).filterNot { rel =>
-        candSet.contains(new Path(dir, rel).toString)
-      }
-      val untouchedSet = untouched.toSet
-      val dvLines = manifestDvLines(f, dir, name)
-      val carryHeaders =
-        carriedHeadersFor(manifestLines(f, dir, name), untouchedSet.contains)
-      // candidates re-read WITH deletion vectors applied (a DV'd row must
-      // not resurrect in the rewrite); the vectors carry verbatim — their
-      // entries for rewritten files reference dead rels and match nothing
-      val candDf = applyDv(spark, dir,
-        spark.read.parquet(candidates: _*), dvRelsOf(dvLines))
-      val staged = stage(spark, dir, rewrite(candDf), untouched,
-        carryHeaders, Some(basis))
-      onBeforePublish()
-      try { publish(spark, dir, staged); staged }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          abandon(spark, dir, staged); throw e
-      }
-    }
+      candidatesOf: Snapshot => Seq[String],
+      rewrite: DataFrame => DataFrame
+  ): StagedCommit = transact(spark, dir, 5) { snap =>
+    val s = table(snap, dir)
+    val candidates = candidatesOf(s)
+    if (candidates.isEmpty) Left(s.unchanged)
+    else Right(rewritePut(spark, dir, s, candidates,
+      rewrite(readFiles(spark, dir, s, candidates))))
+  }
+
+  // `s` with its `candidates` (absolute paths) replaced by `rewritten`'s
+  // freshly staged files. Candidates are re-read WITH deletion vectors
+  // applied (a DV'd row must not resurrect in the rewrite); the vectors
+  // carry verbatim — their entries for rewritten files reference dead
+  // rels and match nothing.
+  private def rewritePut(
+      spark: SparkSession, dir: String, s: Snapshot, candidates: Seq[String],
+      rewritten: DataFrame): Put = {
+    val candSet = candidates.toSet
+    val untouched = s.rels.filterNot(rel => candSet.contains(new Path(dir, rel).toString))
+    putData(stageData(spark, dir, rewritten),
+      carried(s, CarryAll, untouched.toSet), untouched, owned = true)
   }
 
   /** MERGE (batch upsert) as one table transaction — the Delta
@@ -1945,7 +1860,10 @@ object ManifestTable {
     * of files at any table size; keys OUTSIDE every file's range are
     * pure inserts and rewrite nothing. The merge itself is one key
     * shuffle over candidate rows + batch. Int and string keys both
-    * prune (numeric range / UTF-8-order range). */
+    * prune (numeric range / UTF-8-order range). A refused publish
+    * re-runs the WHOLE transaction — prune, candidate re-read, merge —
+    * against the new CURRENT, so the result equals sequential
+    * execution. */
   def mergeInto(
       spark: SparkSession,
       dir: String,
@@ -1954,62 +1872,34 @@ object ManifestTable {
       versionCol: String
   ): StagedCommit = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val f = fs(dir, spark)
     // the batch's key range never depends on table state — one 1-row
     // aggregate, computed once across every retry
     lazy val bounds = updates.agg(min(col(keyCol)), max(col(keyCol))).collect()(0)
-    // a refused publish (concurrent commit between stage and swap)
-    // abandons the staged manifest and re-runs the WHOLE transaction —
-    // prune, candidate re-read, merge — against the new CURRENT, so the
-    // result equals sequential execution (the Delta/Iceberg writer
-    // retry; round-8 callers had to redo all of this by hand)
-    withCommitRetry(5) { () =>
-      if (!f.exists(new Path(dir, PointerName)))
-        commit(spark, dir,
+    transact(spark, dir, 5) {
+      case None =>
+        commitAttempt(spark, dir, None,
           graft.ops.Corpus.mergeUpsert(
             updates.filter(org.apache.spark.sql.functions.lit(false)),
             updates, keyCol, versionCol))
-      else {
-        requireSameSchema(currentSchema(spark, dir), updates.schema, "mergeInto")
-        enforceChecks(spark, dir, updates)
-        val name = readSmallFile(f, new Path(dir, PointerName)).trim
-        val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-        if (bounds.isNullAt(0)) // empty batch: metadata no-op
-          StagedCommit(basis, name, basis)
+      case Some(s) =>
+        requireSameSchema(s.schema, updates.schema, "mergeInto")
+        enforceChecks(Some(s), updates)
+        if (bounds.isNullAt(0)) Left(s.unchanged) // empty batch: metadata no-op
         else {
           val candidates = updates.schema(keyCol).dataType match {
             case org.apache.spark.sql.types.StringType =>
-              pruneByRangeString(spark, dir, keyCol,
-                bounds.get(0).toString, bounds.get(1).toString)._1
+              pruneStrings(dir, s, keyCol,
+                Seq((bounds.get(0).toString, bounds.get(1).toString)))
             case _ =>
-              pruneByRange(spark, dir, keyCol,
-                bounds.get(0).toString.toDouble, bounds.get(1).toString.toDouble)._1
+              pruneRanges(dir, s, keyCol,
+                Seq((bounds.get(0).toString.toDouble, bounds.get(1).toString.toDouble)))
           }
-          val candSet = candidates.toSet
-          val untouched = manifestRel(f, dir, name).filterNot { rel =>
-            candSet.contains(new Path(dir, rel).toString)
-          }
-          val untouchedSet = untouched.toSet
-          val dvLines = manifestDvLines(f, dir, name)
-          val carryHeaders =
-            carriedHeadersFor(manifestLines(f, dir, name), untouchedSet.contains)
           val base =
-            if (candidates.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], updates.schema)
-            else applyDv(spark, dir,
-              spark.read.parquet(candidates: _*), dvRelsOf(dvLines))
-          val merged = graft.ops.Corpus.mergeUpsert(base, updates, keyCol, versionCol)
-          val staged = stage(spark, dir, merged, untouched,
-            carryHeaders, Some(basis))
-          onBeforePublish()
-          try { publish(spark, dir, staged); staged }
-          catch {
-            case e: java.util.ConcurrentModificationException =>
-              abandon(spark, dir, staged); throw e
-          }
+            if (candidates.isEmpty) emptyFrame(spark, updates.schema)
+            else readFiles(spark, dir, s, candidates)
+          Right(rewritePut(spark, dir, s, candidates,
+            graft.ops.Corpus.mergeUpsert(base, updates, keyCol, versionCol)))
         }
-      }
     }
   }
 
@@ -2021,44 +1911,31 @@ object ManifestTable {
     * Dropping or retyping a column still refuses loudly — silent
     * narrowing is the failure mode the plain [[append]] guard exists
     * for. */
-  def appendEvolve(spark: SparkSession, dir: String, df: DataFrame): StagedCommit = {
-    enforceChecks(spark, dir, df)
-    enforceUnique(spark, dir, df, probeExisting = true)
-    val f = fs(dir, spark)
-    val (carry, carryStats, basis) =
-      if (f.exists(new Path(dir, PointerName))) {
-        val cur = currentSchema(spark, dir)
-        cur.foreach { c =>
-          val incoming = df.schema.fields
-            .map(fd => fd.name -> fd.dataType.catalogString).toMap
-          c.fields.foreach { fd =>
-            val got = incoming.get(fd.name)
-            require(got.contains(fd.dataType.catalogString),
-              s"appendEvolve may only ADD columns: table column ${fd.name}: " +
-                s"${fd.dataType.catalogString} is ${got.fold("missing")(t => s"now $t")} " +
-                "in the batch")
-          }
+  def appendEvolve(spark: SparkSession, dir: String, df: DataFrame): StagedCommit =
+    transact(spark, dir, 0) { snap =>
+      enforceChecks(snap, df)
+      enforceUnique(spark, dir, snap, df, probeExisting = true)
+      snap.flatMap(_.schema).foreach { c =>
+        val incoming = df.schema.fields
+          .map(fd => fd.name -> fd.dataType.catalogString).toMap
+        c.fields.foreach { fd =>
+          val got = incoming.get(fd.name)
+          require(got.contains(fd.dataType.catalogString),
+            s"appendEvolve may only ADD columns: table column ${fd.name}: " +
+              s"${fd.dataType.catalogString} is ${got.fold("missing")(t => s"now $t")} " +
+              "in the batch")
         }
-        val name = readSmallFile(f, new Path(dir, PointerName)).trim
-        (manifestRel(f, dir, name),
-          carriedHeaderLines(f, dir, name),
-          name.stripPrefix("manifest-").stripSuffix(".txt").toLong)
-      } else (Seq.empty[String], Seq.empty[String], -1L)
-    val staged = stage(spark, dir, df, carry, carryStats, Some(basis))
-    publish(spark, dir, staged)
-    staged
-  }
+      }
+      Right(appendPut(snap, stageData(spark, dir, df), identity, owned = true))
+    }
 
   /** [[read]] across schema-evolved snapshots: per-file schemas are
     * UNIONED (parquet mergeSchema over the manifest's explicit file
     * list); files written before a column existed read as null for it. */
   def readEvolved(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(dir, spark)
-    val files = currentFiles(spark, dir)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
+    val s = current(spark, dir)
     applyDv(spark, dir,
-      spark.read.option("mergeSchema", "true").parquet(files: _*),
-      dvRelsOf(manifestDvLines(f, dir, name)))
+      spark.read.option("mergeSchema", "true").parquet(s.files(dir): _*), s.dvRels)
   }
 
   /** Partition-scoped overwrite — Delta's `replaceWhere` shape: the new
@@ -2079,61 +1956,37 @@ object ManifestTable {
       dir: String,
       df: DataFrame,
       partitionCol: String
-  ): StagedCommit = {
-    val f = fs(dir, spark)
-    requireSameSchema(currentSchema(spark, dir), df.schema, "replacePartitions")
-    enforceChecks(spark, dir, df)
-    val dataDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-    df.withColumn("__p", org.apache.spark.sql.functions.col(partitionCol))
-      .write.partitionBy("__p").parquet(dataDir.toString)
-    val it = f.listFiles(dataDir, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet")) files += p
+  ): StagedCommit = transact(spark, dir, 0) { snap =>
+    requireSameSchema(snap.flatMap(_.schema), df.schema, "replacePartitions")
+    enforceChecks(snap, df)
+    val sd = writeData(spark, dir, df.schema.json) { d =>
+      df.withColumn("__p", org.apache.spark.sql.functions.col(partitionCol))
+        .write.partitionBy("__p").parquet(d)
     }
-    val root = f.makeQualified(new Path(dir)).toUri.getPath
-    val rel = files.toSeq.map(_.toUri.getPath.stripPrefix(root).stripPrefix("/"))
     // touched partitions come from the WRITTEN paths, so the carry filter
     // sees exactly the escaping the writer used — and df pays one pass
-    val touched: Set[String] = rel.flatMap { r =>
+    val touched: Set[String] = sd.rel.flatMap { r =>
       val i = r.indexOf("/__p=")
       if (i < 0) None
       else Some(r.substring(i + 1, r.indexOf('/', i + 1)))
     }.toSet
-    val (carry, carryStats, basis) =
-      if (!f.exists(new Path(dir, PointerName)))
-        (Seq.empty[String], Seq.empty[String], -1L)
-      else {
-        val name = readSmallFile(f, new Path(dir, PointerName)).trim
-        val all = manifestRel(f, dir, name)
+    val (kept, headers) = snap match {
+      case None => (Seq.empty[String], Seq.empty[String])
+      case Some(s) =>
         // files committed OUTSIDE the __p layout (plain commit/append)
         // can belong to any partition value — carrying them forward would
         // silently duplicate replaced rows, so a mixed layout refuses
-        val bare = all.filterNot(_.contains("/__p="))
+        val bare = s.rels.filterNot(_.contains("/__p="))
         require(bare.isEmpty,
           s"replacePartitions on a mixed layout: ${bare.size} current file(s) " +
             "carry no __p= partition segment (written via commit/append); " +
             "such a table must only ever be written through replacePartitions")
-        val kept = all.filterNot(r => touched.exists(t => r.contains(s"/$t/")))
-        val keptSet = kept.toSet
+        val kept = s.rels.filterNot(r => touched.exists(t => r.contains(s"/$t/")))
         // deletion vectors carry verbatim: entries for replaced files
         // reference rels no longer in the manifest and anti-join nothing
-        (kept,
-          carriedHeadersFor(manifestLines(f, dir, name), keptSet.contains),
-          name.stripPrefix("manifest-").stripSuffix(".txt").toLong)
-      }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statsRows = files.toSeq.zip(rel).map { case (p, r) =>
-      val (cs, rows) = footerStatsRows(conf, p, r)
-      (cs.map(statsLine), sizeLineOf(r, f.getFileStatus(p).getLen, rows))
+        (kept, carried(s, CarryAll, kept.toSet))
     }
-    val stats = statsRows.flatMap(_._1) ++ statsRows.map(_._2)
-    val staged = claimManifestSlot(spark, dir,
-      ((s"#schema=${df.schema.json}" +: (carryStats ++ stats).sorted) ++
-        (carry ++ rel).sorted).mkString("\n"), basis)
-    publish(spark, dir, staged)
-    staged
+    Right(putData(sd, headers, kept, owned = true))
   }
 
   /** The data-skipping statistics of the CURRENT snapshot — one entry per
@@ -2141,13 +1994,8 @@ object ManifestTable {
     * commit time and carried forward by reference on append /
     * replacePartitions. Empty for manifests written before stats existed
     * (readers must treat missing stats as "cannot skip"). */
-  def currentStats(spark: SparkSession, dir: String): Seq[ColStats] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    manifestLines(f, dir, readSmallFile(f, ptr).trim)
-      .filter(_.startsWith("#stats=")).flatMap(parseStatsLine)
-  }
+  def currentStats(spark: SparkSession, dir: String): Seq[ColStats] =
+    current(spark, dir).stats
 
   /** [[read]] with a `_commit_version` COMMIT-LINEAGE column: the snapshot
     * version whose commit WROTE each row's current file — "when did this
@@ -2165,13 +2013,11 @@ object ManifestTable {
   def readWithLineage(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    val rels = manifestRel(f, dir, name)
+    val s = current(spark, dir)
+    val rels = s.rels
     val firstSeen = scala.collection.mutable.HashMap.empty[String, Long]
     versions(spark, dir).foreach { v =>
-      manifestRel(f, dir, f"manifest-$v%020d.txt").foreach { rel =>
+      manifestAt(f, dir, manifestName(v)).rels.foreach { rel =>
         if (!firstSeen.contains(rel)) firstSeen.update(rel, v)
       }
     }
@@ -2179,14 +2025,12 @@ object ManifestTable {
     val lineage = broadcast(
       rels.map(r => (r, firstSeen(r))).toDF("__graft_rel", "_commit_version"))
     if (rels.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        currentSchema(spark, dir).getOrElse(read(spark, dir).schema))
+      return emptyFrame(spark, schemaOf(spark, dir, s))
         .withColumn("_commit_version", org.apache.spark.sql.functions.lit(-1L))
     val base = applyDv(spark, dir,
-      spark.read.parquet(rels.map(rel => new Path(dir, rel).toString): _*)
+      spark.read.parquet(s.files(dir): _*)
         .withColumn("__graft_rel", relOfFilePath(col("_metadata.file_path"))),
-      dvRelsOf(manifestDvLines(f, dir, name)))
+      s.dvRels)
     base.join(lineage, "__graft_rel").drop("__graft_rel")
   }
 
@@ -2198,17 +2042,12 @@ object ManifestTable {
     * tiny parquets), still never a data read. Returns None when any
     * current file predates row-count recording (readers must scan). */
   def countFromMetadata(spark: SparkSession, dir: String): Option[Long] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    val lines = manifestLines(f, dir, name)
-    val rels = manifestRel(f, dir, name)
-    val rowsOf = lines.flatMap(parseSizeLine)
-      .map { case (rel, _, rows) => rel -> rows }.toMap
+    val s = current(spark, dir)
+    val rels = s.rels
+    val rowsOf = s.sizes.map { case (rel, _, rows) => rel -> rows }.toMap
     if (!rels.forall(rowsOf.contains)) return None
     val base = rels.map(rowsOf).sum
-    val dvRels = dvRelsOf(manifestDvLines(f, dir, name))
+    val dvRels = s.dvRels
     if (dvRels.isEmpty) Some(base)
     else {
       // only entries pointing at a CURRENT file delete anything (vectors
@@ -2237,15 +2076,10 @@ object ManifestTable {
     * strings in UTF-8 order. */
   def minMaxFromMetadata(
       spark: SparkSession, dir: String, column: String): Option[(String, String)] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    if (manifestDvLines(f, dir, name).nonEmpty) return None
-    val rels = manifestRel(f, dir, name)
-    val byFile = manifestLines(f, dir, name)
-      .filter(_.startsWith("#stats=")).flatMap(parseStatsLine)
-      .filter(_.column == column).map(cs => cs.file -> cs).toMap
+    val s = current(spark, dir)
+    if (s.dvRels.nonEmpty) return None
+    val rels = s.rels
+    val byFile = s.stats.filter(_.column == column).map(cs => cs.file -> cs).toMap
     if (!rels.forall(byFile.contains)) return None
     val stats = rels.map(byFile)
     // all-null files (min/max absent, nullCount = rows) contribute nothing;
@@ -2253,9 +2087,8 @@ object ManifestTable {
     val valued = stats.filter(cs => cs.min.isDefined && cs.max.isDefined)
     if (valued.isEmpty) return None
     if (stats.exists(cs => cs.min.isEmpty != cs.max.isEmpty)) return None
-    val numeric = Set("int32", "int64", "float", "double")
     val lt: (String, String) => Boolean =
-      if (valued.forall(cs => numeric.contains(cs.dtype)))
+      if (valued.forall(cs => NumericDtypes.contains(cs.dtype)))
         (a, b) => a.toDouble < b.toDouble
       else (a, b) => !utf8Lte(b, a)
     Some((valued.map(_.min.get).reduce((a, b) => if (lt(a, b)) a else b),
@@ -2277,92 +2110,75 @@ object ManifestTable {
       column: String,
       lo: Double,
       hi: Double): (Seq[String], Int) = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    pruneByRangeIn(spark, dir, readSmallFile(f, ptr).trim, column, lo, hi)
+    val s = current(spark, dir)
+    (pruneRanges(dir, s, column, Seq((lo, hi))), s.rels.size)
   }
 
-  /** [[pruneByRange]] against a NAMED manifest — the single-snapshot leg
-    * multi-column reads need: [[readBetween2D]] resolves CURRENT once and
-    * evaluates both column prunes and the deletion-vector lines against
-    * that one snapshot, so a commit landing mid-plan can never mix two
-    * snapshots' file sets. */
-  private def pruneByRangeIn(
-      spark: SparkSession,
-      dir: String,
-      name: String,
-      column: String,
-      lo: Double,
-      hi: Double): (Seq[String], Int) =
-    pruneByRangesIn(spark, dir, name, column, Seq((lo, hi)))
+  private val NumericDtypes = Set("int32", "int64", "float", "double")
 
-  /** The multi-range generalization: a file survives when ANY of the
-    * requested [lo, hi] ranges intersects its recorded [min, max] — the
-    * prune an IN-list ([[readWhereIn]]) or a batched point-lookup needs,
-    * evaluated against ONE named snapshot so every range sees the same
-    * file set. */
-  private def pruneByRangesIn(
-      spark: SparkSession,
-      dir: String,
-      name: String,
-      column: String,
-      ranges: Seq[(Double, Double)]): (Seq[String], Int) = {
-    val f = fs(dir, spark)
-    val all = manifestRel(f, dir, name)
-    val numeric = Set("int32", "int64", "float", "double")
-    val byFile = manifestLines(f, dir, name)
-      .filter(_.startsWith("#stats=")).flatMap(parseStatsLine)
-      .filter(cs => cs.column == column && numeric.contains(cs.dtype))
+  /** The stats prune every read and rewrite runs against ONE snapshot:
+    * the files (absolute paths) of `s` whose recorded `column` [min, max]
+    * of one of `dtypes` may hold a match (`hit(min, max)`). Files with no
+    * such stat are conservatively kept; an all-null column chunk matches
+    * no BETWEEN / IN / equality predicate. */
+  private def pruneIn(dir: String, s: Snapshot, column: String, dtypes: Set[String])(
+      hit: (String, String) => Boolean): Seq[String] = {
+    val byFile = s.stats.filter(cs => cs.column == column && dtypes(cs.dtype))
       .map(cs => cs.file -> cs).toMap
-    val kept = all.filter { rel =>
+    s.rels.filter { rel =>
       byFile.get(rel) match {
         case Some(cs) =>
           (cs.min, cs.max) match {
-            case (Some(mn), Some(mx)) =>
-              val (fMn, fMx) = (mn.toDouble, mx.toDouble)
-              ranges.exists { case (lo, hi) => fMn <= hi && fMx >= lo }
-            // all-null column chunk: no row can satisfy BETWEEN / IN
+            case (Some(mn), Some(mx)) => hit(mn, mx)
             case _ => cs.nullCount == 0L
           }
         case None => true
       }
-    }
-    (kept.map(rel => new Path(dir, rel).toString), all.size)
+    }.map(rel => new Path(dir, rel).toString)
   }
 
-  /** The STRING-key leg of [[readWhereIn]]'s prune: a file survives when
-    * ANY requested value fits inside its recorded [min, max] (UTF-8
-    * unsigned-byte order, exactly how parquet orders BINARY string
-    * stats), evaluated against ONE named snapshot so every value sees the
-    * same file set. On a term-clustered layout ([[compactSorted]] on the
-    * key) this is the posting-list read of a persisted inverted index:
-    * a probe for a handful of terms opens only the files whose term
-    * range can contain them, at any index size. */
-  private def pruneByStringsIn(
-      spark: SparkSession,
-      dir: String,
-      name: String,
-      column: String,
-      values: Seq[String]): (Seq[String], Int) = {
-    val f = fs(dir, spark)
-    val all = manifestRel(f, dir, name)
-    val byFile = manifestLines(f, dir, name)
-      .filter(_.startsWith("#stats=")).flatMap(parseStatsLine)
-      .filter(cs => cs.column == column && cs.dtype == "string")
-      .map(cs => cs.file -> cs).toMap
-    val kept = all.filter { rel =>
-      byFile.get(rel) match {
-        case Some(cs) =>
-          (cs.min, cs.max) match {
-            case (Some(mn), Some(mx)) =>
-              values.exists(v => utf8Lte(mn, v) && utf8Lte(v, mx))
-            case _ => cs.nullCount == 0L
-          }
-        case None => true
-      }
+  // numeric columns: a file survives when ANY [lo, hi] intersects it —
+  // one range for BETWEEN, one ulp-widened point per value of an IN-list
+  private def pruneRanges(
+      dir: String, s: Snapshot, column: String, ranges: Seq[(Double, Double)]): Seq[String] =
+    pruneIn(dir, s, column, NumericDtypes) { (mn, mx) =>
+      val (fMn, fMx) = (mn.toDouble, mx.toDouble)
+      ranges.exists { case (lo, hi) => fMn <= hi && fMx >= lo }
     }
-    (kept.map(rel => new Path(dir, rel).toString), all.size)
+
+  // string columns, in UTF-8 unsigned-byte order (how parquet orders
+  // BINARY stats): equality is the range (v, v). On a term-clustered
+  // layout ([[compactSorted]] on the key) an IN-list of terms is the
+  // posting-list read of a persisted inverted index: a probe opens only
+  // the files whose term range can contain them, at any index size.
+  private def pruneStrings(
+      dir: String, s: Snapshot, column: String, ranges: Seq[(String, String)]): Seq[String] =
+    pruneIn(dir, s, column, Set("string")) { (mn, mx) =>
+      ranges.exists { case (lo, hi) => utf8Lte(mn, hi) && utf8Lte(lo, mx) }
+    }
+
+  // an IN-list's candidates: numeric lists prune by ulp-widened points
+  // (stats rounding can at worst read an extra file, never skip a
+  // matching one), string lists by exact containment; mixed-type lists
+  // keep every file
+  private def inListCandidates(
+      dir: String, s: Snapshot, column: String, values: Seq[Any]): Seq[String] = {
+    val numeric = values.collect { case n: Number => n.doubleValue }
+    val strings = values.collect { case v: String => v }
+    if (values.isEmpty) Seq.empty
+    else if (numeric.size == values.size)
+      pruneRanges(dir, s, column, numeric.map(v => (Math.nextDown(v), Math.nextUp(v))))
+    else if (strings.size == values.size)
+      pruneStrings(dir, s, column, strings.map(v => (v, v)))
+    else s.files(dir)
+  }
+
+  // `values` as instances of `column`'s native type ([[exactNative]])
+  private def nativeValues(
+      spark: SparkSession, dir: String, s: Snapshot, column: String,
+      values: Seq[Any]): Seq[Any] = {
+    val dt = schemaOf(spark, dir, s)(column).dataType
+    values.flatMap(v => exactNative(v, dt))
   }
 
   /** [[pruneByRange]] on a STRING column: a file is skippable exactly
@@ -2375,21 +2191,8 @@ object ManifestTable {
       column: String,
       lo: String,
       hi: String): (Seq[String], Int) = {
-    val all = currentRel(fs(dir, spark), dir)
-    val byFile = currentStats(spark, dir)
-      .filter(cs => cs.column == column && cs.dtype == "string")
-      .map(cs => cs.file -> cs).toMap
-    val kept = all.filter { rel =>
-      byFile.get(rel) match {
-        case Some(cs) =>
-          (cs.min, cs.max) match {
-            case (Some(mn), Some(mx)) => utf8Lte(mn, hi) && utf8Lte(lo, mx)
-            case _ => cs.nullCount == 0L
-          }
-        case None => true
-      }
-    }
-    (kept.map(rel => new Path(dir, rel).toString), all.size)
+    val s = current(spark, dir)
+    (pruneStrings(dir, s, column, Seq((lo, hi))), s.rels.size)
   }
 
   /** [[pruneByRange]] for an equality predicate on a STRING column —
@@ -2404,22 +2207,8 @@ object ManifestTable {
       dir: String,
       column: String,
       value: String): (Seq[String], Int) = {
-    val all = currentRel(fs(dir, spark), dir)
-    val byFile = currentStats(spark, dir)
-      .filter(cs => cs.column == column && cs.dtype == "string")
-      .map(cs => cs.file -> cs).toMap
-    val kept = all.filter { rel =>
-      byFile.get(rel) match {
-        case Some(cs) =>
-          (cs.min, cs.max) match {
-            case (Some(mn), Some(mx)) =>
-              utf8Lte(mn, value) && utf8Lte(value, mx)
-            case _ => cs.nullCount == 0L
-          }
-        case None => true
-      }
-    }
-    (kept.map(rel => new Path(dir, rel).toString), all.size)
+    val s = current(spark, dir)
+    (pruneStrings(dir, s, column, Seq((value, value))), s.rels.size)
   }
 
   /** Stats-pruned equality read: `column = value` over only the files
@@ -2430,17 +2219,9 @@ object ManifestTable {
       column: String,
       value: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (kept, _) = pruneByEquals(spark, dir, column, value)
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          currentSchema(spark, dir).getOrElse(read(spark, dir).schema))
-      else applyDv(spark, dir, spark.read.parquet(kept: _*),
-        dvRelsOf(manifestDvLines(f, dir, name)))
-    base.filter(col(column) === value)
+    val s = current(spark, dir)
+    readKept(spark, dir, s, pruneStrings(dir, s, column, Seq((value, value))))
+      .filter(col(column) === value)
   }
 
   /** Stats-pruned read: `column BETWEEN lo AND hi` over only the files
@@ -2452,19 +2233,19 @@ object ManifestTable {
       dir: String,
       column: String,
       lo: Double,
+      hi: Double): DataFrame =
+    readBetweenIn(spark, dir, current(spark, dir), column, lo, hi)
+
+  private def readBetweenIn(
+      spark: SparkSession,
+      dir: String,
+      s: Snapshot,
+      column: String,
+      lo: Double,
       hi: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (kept, _) = pruneByRange(spark, dir, column, lo, hi)
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          currentSchema(spark, dir).getOrElse(read(spark, dir).schema))
-      else applyDv(spark, dir, spark.read.parquet(kept: _*),
-        dvRelsOf(manifestDvLines(f, dir, name)))
-    base.filter(col(column).between(lo, hi))
+    readKept(spark, dir, s, pruneRanges(dir, s, column, Seq((lo, hi))))
+      .filter(col(column).between(lo, hi))
   }
 
   /** Stats-pruned IN-list read: `column IN (values)` over only the files
@@ -2474,8 +2255,7 @@ object ManifestTable {
     * [[readBetween]] per cell). CURRENT resolves ONCE for the whole
     * list: every value's prune and the deletion-vector lines evaluate
     * against the same snapshot, so a commit landing mid-plan can never
-    * mix two snapshots' file sets ([[readBetween2D]]'s guarantee,
-    * generalized to n point ranges).
+    * mix two snapshots' file sets.
     *
     * The EQUALITY compares in the column's NATIVE type: each requested
     * value is converted driver-side to the column's type only when the
@@ -2486,38 +2266,20 @@ object ManifestTable {
     * exactly as native-typed SQL equality would. Doubles serve only the
     * stats prune, ulp-widened both ways so stats rounding can at worst
     * read an extra file, never skip a matching one; an all-string list
-    * prunes by the exact UTF-8 [min, max] containment test
-    * ([[pruneByStringsIn]] — the posting-list read of a persisted
-    * inverted index); mixed-type lists skip the prune (all files read,
-    * filter still exact). */
+    * prunes by the exact UTF-8 [min, max] containment test (the
+    * posting-list read of a persisted inverted index); mixed-type lists
+    * skip the prune (all files read, filter still exact). */
   def readWhereIn(
       spark: SparkSession,
       dir: String,
       column: String,
       values: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    val numeric = values.collect { case n: Number => n.doubleValue }
-    val strings = values.collect { case s: String => s }
-    val (kept, _) =
-      if (numeric.size == values.size)
-        pruneByRangesIn(spark, dir, name, column,
-          numeric.map(v => (Math.nextDown(v), Math.nextUp(v))))
-      else if (strings.size == values.size)
-        pruneByStringsIn(spark, dir, name, column, strings)
-      else (manifestRel(f, dir, name).map(rel => new Path(dir, rel).toString), 0)
-    val schema = currentSchema(spark, dir).getOrElse(read(spark, dir).schema)
-    val native = values.flatMap(v => exactNative(v, schema(column).dataType))
-    val base =
-      if (kept.isEmpty || native.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else applyDv(spark, dir, spark.read.parquet(kept: _*),
-        dvRelsOf(manifestDvLines(f, dir, name)))
-    if (native.isEmpty) base else base.filter(col(column).isin(native: _*))
+    val s = current(spark, dir)
+    val native = nativeValues(spark, dir, s, column, values)
+    if (native.isEmpty) emptyFrame(spark, schemaOf(spark, dir, s))
+    else readKept(spark, dir, s, inListCandidates(dir, s, column, values))
+      .filter(col(column).isin(native: _*))
   }
 
   // The requested value as an instance of the column's native type, or
@@ -2554,12 +2316,10 @@ object ManifestTable {
     * skips Hive partition inference over the `__p=value` layout segments;
     * the partition column itself lives in the data files. */
   def readPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val f = fs(dir, spark)
-    val files = currentFiles(spark, dir)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
+    val s = current(spark, dir)
     applyDv(spark, dir,
-      spark.read.option("recursiveFileLookup", "true").parquet(files: _*),
-      dvRelsOf(manifestDvLines(f, dir, name)))
+      spark.read.option("recursiveFileLookup", "true").parquet(s.files(dir): _*),
+      s.dvRels)
   }
 
   /** Incremental consumption: the rows ADDED between snapshot
@@ -2577,12 +2337,9 @@ object ManifestTable {
     * table (the same contract every file-diff CDC read carries). */
   def readChangesSince(
       spark: SparkSession, dir: String, fromVersion: Long): DataFrame = {
-    val f = fs(dir, spark)
-    val fromName = f"manifest-$fromVersion%020d.txt"
-    require(f.exists(new Path(new Path(dir, "_manifests"), fromName)),
-      s"version $fromVersion not found (vacuumed, or never committed) in $dir")
-    val old = manifestRel(f, dir, fromName).toSet
-    val cur = currentRel(f, dir)
+    val old = committedVersion(fs(dir, spark), dir, fromVersion).rels.toSet
+    val s = current(spark, dir)
+    val cur = s.rels
     val removed = old.diff(cur.toSet)
     require(removed.isEmpty,
       s"table is not append-shaped since v$fromVersion: ${removed.size} of " +
@@ -2591,19 +2348,10 @@ object ManifestTable {
         " the consumer from the full table")
     val added = cur.filterNot(old)
       .map(rel => new Path(dir, rel).toString)
-    if (added.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        currentSchema(spark, dir).getOrElse(
-          spark.read.parquet(currentFiles(spark, dir): _*).schema))
-    else {
-      // CURRENT deletion vectors apply: a row appended since
-      // `fromVersion` but DV-deleted since is not part of any snapshot
-      // the consumer could now read
-      val curName = readSmallFile(f, new Path(dir, PointerName)).trim
-      applyDv(spark, dir, spark.read.parquet(added: _*),
-        dvRelsOf(manifestDvLines(f, dir, curName)))
-    }
+    // CURRENT deletion vectors apply: a row appended since `fromVersion`
+    // but DV-deleted since is not part of any snapshot the consumer
+    // could now read
+    readKept(spark, dir, s, added)
   }
 
   /** The rows DELETED between snapshot `fromVersion` (exclusive) and
@@ -2625,35 +2373,26 @@ object ManifestTable {
   def readDeletesSince(
       spark: SparkSession, dir: String, fromVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val f = fs(dir, spark)
-    val fromName = f"manifest-$fromVersion%020d.txt"
-    require(f.exists(new Path(new Path(dir, "_manifests"), fromName)),
-      s"version $fromVersion not found (vacuumed, or never committed) in $dir")
-    val old = manifestRel(f, dir, fromName).toSet
-    val curName = readSmallFile(f, new Path(dir, PointerName)).trim
-    val cur = manifestRel(f, dir, curName)
+    val from = committedVersion(fs(dir, spark), dir, fromVersion)
+    val old = from.rels.toSet
+    val s = current(spark, dir)
+    val cur = s.rels
     val removed = old.diff(cur.toSet)
     require(removed.isEmpty,
       s"table is not append-shaped since v$fromVersion: ${removed.size} of " +
         s"its files were rewritten or removed — positions no longer name " +
         "the same rows; re-bootstrap the consumer from the full table")
-    val oldDv = dvRelsOf(manifestDvLines(f, dir, fromName)).toSet
-    val newDv = dvRelsOf(manifestDvLines(f, dir, curName)).filterNot(oldDv)
-    val schema = currentSchema(spark, dir).getOrElse(read(spark, dir).schema)
-    if (newDv.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val oldDv = from.dvRels.toSet
+    val newDv = s.dvRels.filterNot(oldDv)
+    val schema = schemaOf(spark, dir, s)
+    if (newDv.isEmpty) return emptyFrame(spark, schema)
     val dv = spark.read.parquet(newDv.map(r => new Path(dir, r).toString): _*)
     // only the files that lost rows are read back
     val touched = dv.select(col("_file")).distinct()
       .collect().map(_.getString(0)).filter(cur.toSet)
-    if (touched.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val keyed = spark.read
-      .parquet(touched.map(rel => new Path(dir, rel).toString): _*)
-      .withColumn("__graft_dv_rel", relOfFilePath(col("_metadata.file_path")))
-      .withColumn("__graft_dv_pos", col("_metadata.row_index"))
+    if (touched.isEmpty) return emptyFrame(spark, schema)
+    val keyed = keyedByPosition(spark.read
+      .parquet(touched.map(rel => new Path(dir, rel).toString): _*))
     keyed.join(org.apache.spark.sql.functions.broadcast(dv),
         keyed("__graft_dv_rel") === dv("_file") &&
           keyed("__graft_dv_pos") === dv("_pos"))
@@ -2686,44 +2425,47 @@ object ManifestTable {
       valueCol: String
   ): Long = {
     import org.apache.spark.sql.functions.{col, count, lit, sum}
-    val f = fs(srcDir, spark)
-    val curV = currentVersion(spark, srcDir)
-    if (curV < 0) return sinceVersion
-    val curName = f"manifest-$curV%020d.txt"
-    val curRel = manifestRel(f, srcDir, curName)
-    val (added, rebootstrap) =
-      if (sinceVersion < 0) (curRel, true)
-      else {
-        val fromName = f"manifest-$sinceVersion%020d.txt"
-        require(f.exists(new Path(new Path(srcDir, "_manifests"), fromName)),
-          s"version $sinceVersion not found (vacuumed, or never committed) in $srcDir")
-        val old = manifestRel(f, srcDir, fromName).toSet
-        // a DV delete is a SIDECAR-only change: the data-file set is
-        // unchanged, but rows already folded into the rollup are gone
-        // from the source — only a re-bootstrap can subtract them
-        val dvSame = manifestDvLines(f, srcDir, fromName).toSet ==
-          manifestDvLines(f, srcDir, curName).toSet
-        if (old.subsetOf(curRel.toSet) && dvSame) (curRel.filterNot(old), false)
-        // rewrite commit since the last refresh: an incremental fold
-        // would double-count the rewritten files — recompute from scratch
-        else (curRel, true)
-      }
-    if (added.isEmpty && !rebootstrap) return curV
-    if (added.isEmpty) return curV // re-bootstrap of an empty snapshot
-    val delta = applyDv(spark, srcDir,
-      spark.read.parquet(added.map(rel => new Path(srcDir, rel).toString): _*),
-      dvRelsOf(manifestDvLines(f, srcDir, curName)))
+    val (cur, added, rebootstrap) = sourceDelta(spark, srcDir, sinceVersion) match {
+      case Some(delta) => delta
+      case None => return sinceVersion
+    }
+    if (added.isEmpty) return cur.version // nothing new, or an empty re-bootstrap
+    val delta = readFiles(spark, srcDir, cur,
+      added.map(rel => new Path(srcDir, rel).toString))
     val part = delta.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n_rows"), sum(col(valueCol)).as("value_sum"))
-    val fa = fs(aggDir, spark)
     val merged =
-      if (rebootstrap || !fa.exists(new Path(aggDir, PointerName))) part
+      if (rebootstrap || !exists(spark, aggDir)) part
       else read(spark, aggDir).unionByName(part)
         .groupBy(col(keyCol))
         .agg(sum(col("n_rows")).as("n_rows"),
           sum(col("value_sum")).as("value_sum"))
     commit(spark, aggDir, merged)
-    curV
+    cur.version
+  }
+
+  // The change-feed delta of `srcDir` since `sinceVersion`: (the current
+  // snapshot, the data files to fold, whether the fold must REPLACE the
+  // target rather than add to it), or None before the first commit. A
+  // re-bootstrap (every current file) is forced by sinceVersion < 0, by
+  // a rewrite commit since (an incremental fold would double-count the
+  // rewritten files), and by a DV delete since — a SIDECAR-only change:
+  // the data-file set is unchanged, but rows already folded into the
+  // target are gone from the source, and only a re-bootstrap can
+  // subtract them.
+  private def sourceDelta(spark: SparkSession, srcDir: String, sinceVersion: Long)
+      : Option[(Snapshot, Seq[String], Boolean)] = {
+    val f = fs(srcDir, spark)
+    snapshot(f, srcDir).map { cur =>
+      if (sinceVersion < 0) (cur, cur.rels, true)
+      else {
+        val from = committedVersion(f, srcDir, sinceVersion)
+        val old = from.rels.toSet
+        if (old.subsetOf(cur.rels.toSet) && from.dvRels.toSet == cur.dvRels.toSet)
+          (cur, cur.rels.filterNot(old), false)
+        else (cur, cur.rels, true)
+      }
+    }
   }
 
   /** INCREMENTAL ENRICHMENT on the change feed — join-IVM for the
@@ -2749,38 +2491,22 @@ object ManifestTable {
       joinCol: String
   ): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val f = fs(srcDir, spark)
-    val curV = currentVersion(spark, srcDir)
-    if (curV < 0) return sinceVersion
-    val curName = f"manifest-$curV%020d.txt"
-    val curRel = manifestRel(f, srcDir, curName)
-    val (added, rebootstrap) =
-      if (sinceVersion < 0) (curRel, true)
-      else {
-        val fromName = f"manifest-$sinceVersion%020d.txt"
-        require(f.exists(new Path(new Path(srcDir, "_manifests"), fromName)),
-          s"version $sinceVersion not found (vacuumed, or never committed) in $srcDir")
-        val old = manifestRel(f, srcDir, fromName).toSet
-        // same DV-sidecar blind spot as maintainRollup: a delete that
-        // changes no data file still invalidates already-landed target
-        // rows, and the 'outDir equals srcDir LEFT JOIN dim' contract
-        // only survives via re-bootstrap
-        val dvSame = manifestDvLines(f, srcDir, fromName).toSet ==
-          manifestDvLines(f, srcDir, curName).toSet
-        if (old.subsetOf(curRel.toSet) && dvSame) (curRel.filterNot(old), false)
-        else (curRel, true)
-      }
-    if (added.isEmpty) return curV
-    val delta = applyDv(spark, srcDir,
-      spark.read.parquet(added.map(rel => new Path(srcDir, rel).toString): _*),
-      dvRelsOf(manifestDvLines(f, srcDir, curName)))
+    // the same delta as maintainRollup: a DV delete still invalidates
+    // already-landed target rows, and the 'outDir equals srcDir LEFT JOIN
+    // dim' contract only survives via re-bootstrap
+    val (cur, added, rebootstrap) = sourceDelta(spark, srcDir, sinceVersion) match {
+      case Some(delta) => delta
+      case None => return sinceVersion
+    }
+    if (added.isEmpty) return cur.version
+    val delta = readFiles(spark, srcDir, cur,
+      added.map(rel => new Path(srcDir, rel).toString))
     val enriched = delta.join(broadcast(dim), Seq(joinCol), "left")
-    val fo = fs(outDir, spark)
-    if (rebootstrap || !fo.exists(new Path(outDir, PointerName)))
+    if (rebootstrap || !exists(spark, outDir))
       commit(spark, outDir, enriched)
     else
       append(spark, outDir, enriched)
-    curV
+    cur.version
   }
 
   /** The committed snapshot versions still present in `_manifests`,
@@ -2791,7 +2517,7 @@ object ManifestTable {
     if (!f.exists(mdir)) Seq.empty
     else f.listStatus(mdir).toSeq.map(_.getPath.getName)
       .filter(n => n.startsWith("manifest-") && n.endsWith(".txt"))
-      .map(_.stripPrefix("manifest-").stripSuffix(".txt").toLong).sorted
+      .map(versionOf).sorted
   }
 
   /** The (version, wall-clock millis) of every committed snapshot still
@@ -2805,14 +2531,12 @@ object ManifestTable {
   def commitTimes(spark: SparkSession, dir: String): Seq[(Long, Long)] = {
     val f = fs(dir, spark)
     val mdir = new Path(dir, "_manifests")
-    val cur = currentVersion(spark, dir)
+    val cur = pointerVersion(f, dir)
     if (!f.exists(mdir)) Seq.empty
     else f.listStatus(mdir).toSeq
       .filter(st => st.getPath.getName.startsWith("manifest-") &&
         st.getPath.getName.endsWith(".txt"))
-      .map(st => (st.getPath.getName
-        .stripPrefix("manifest-").stripSuffix(".txt").toLong,
-        st.getModificationTime))
+      .map(st => (versionOf(st.getPath.getName), st.getModificationTime))
       .filter(_._1 <= cur)
       .sortBy(_._1)
   }
@@ -2838,16 +2562,8 @@ object ManifestTable {
   /** Time travel: read snapshot `version` exactly as it was committed —
     * manifests are immutable and data files write-once, so any version
     * not yet [[vacuum]]ed reads bit-identically forever. */
-  def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val f = fs(dir, spark)
-    val name = f"manifest-$version%020d.txt"
-    require(f.exists(new Path(new Path(dir, "_manifests"), name)),
-      s"version $version not found (vacuumed, or never committed) in $dir")
-    applyDv(spark, dir,
-      spark.read.parquet(
-        manifestRel(f, dir, name).map(rel => new Path(dir, rel).toString): _*),
-      dvRelsOf(manifestDvLines(f, dir, name)))
-  }
+  def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame =
+    readSnapshot(spark, dir, committedVersion(fs(dir, spark), dir, version))
 
   /** Plan a BOUNDED small-file compaction from the manifest's `#size=`
     * headers alone — zero store RPCs: files under `targetBytes / 2` are
@@ -2859,26 +2575,21 @@ object ManifestTable {
       spark: SparkSession,
       dir: String,
       targetBytes: Long
-  ): Seq[Seq[String]] = {
-    val f = fs(dir, spark)
-    planCompactionIn(spark, dir,
-      readSmallFile(f, new Path(dir, PointerName)).trim, targetBytes)
-  }
+  ): Seq[Seq[String]] = planBins(spark, dir, current(spark, dir), targetBytes)
 
-  // [[planCompaction]] against a NAMED manifest, so
-  // [[compactSmallFiles]] plans and commits against ONE snapshot
-  private def planCompactionIn(
+  // [[planCompaction]] against one snapshot, so [[compactSmallFiles]]
+  // plans and commits against the same one
+  private def planBins(
       spark: SparkSession,
       dir: String,
-      name: String,
+      s: Snapshot,
       targetBytes: Long
   ): Seq[Seq[String]] = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val f = fs(dir, spark)
-    val sizes = manifestLines(f, dir, name).filter(_.startsWith("#size="))
-      .flatMap(parseSizeLine).map(t => t._1 -> t._2).toMap
+    val sizes = s.sizes.map(t => t._1 -> t._2).toMap
     val smallCut = targetBytes / 2
-    val small = manifestRel(f, dir, name)
+    val small = s.rels
       .map(rel => rel ->
         sizes.getOrElse(rel, f.getFileStatus(new Path(dir, rel)).getLen))
       .filter(_._2 < smallCut)
@@ -2914,40 +2625,26 @@ object ManifestTable {
       spark: SparkSession,
       dir: String,
       targetBytes: Long
-  ): Int = withCommitRetry(5) { () =>
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val bins = planCompactionIn(spark, dir, name, targetBytes)
-    if (bins.isEmpty) 0
-    else {
-      val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-      val dvRels = dvRelsOf(manifestDvLines(f, dir, name))
-      // one write per bin: the planned bin IS the output unit
-      val binData = bins.map { bin =>
-        val binDf = applyDv(spark, dir,
-          spark.read.parquet(bin.map(rel => new Path(dir, rel).toString): _*),
-          dvRels)
-        stageData(spark, dir, binDf.coalesce(1))
-      }
-      val candSet = bins.flatten.toSet
-      val untouched = manifestRel(f, dir, name).filterNot(candSet)
-      val untouchedSet = untouched.toSet
-      val lines = manifestLines(f, dir, name)
-      val carryHeaders = carriedHeadersFor(lines, untouchedSet.contains)
-      val content =
-        ((s"#schema=${binData.head.schemaJson}" +:
-          (carryHeaders ++ binData.flatMap(_.statsLines)).sorted) ++
-          (untouched ++ binData.flatMap(_.rel)).sorted).mkString("\n")
-      val staged = claimManifestSlot(spark, dir, content, basis)
-      onBeforePublish()
-      try { publish(spark, dir, staged); bins.flatten.size - bins.size }
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // release the slot; the bin outputs become vacuum-swept
-          // orphans and the retry replans against the new CURRENT
-          abandon(spark, dir, staged); throw e
+  ): Int = {
+    var compacted = 0 // of the attempt that committed
+    transact(spark, dir, 5) { snap =>
+      val s = table(snap, dir)
+      val bins = planBins(spark, dir, s, targetBytes)
+      compacted = bins.flatten.size - bins.size
+      if (bins.isEmpty) Left(s.unchanged)
+      else {
+        // one write per bin: the planned bin IS the output unit
+        val binData = bins.map { bin =>
+          stageData(spark, dir, readFiles(spark, dir, s,
+            bin.map(rel => new Path(dir, rel).toString)).coalesce(1))
+        }
+        val untouched = s.rels.filterNot(bins.flatten.toSet)
+        Right(Put(Some(s"#schema=${binData.head.schemaJson}"),
+          carried(s, CarryAll, untouched.toSet) ++ binData.flatMap(_.statsLines),
+          untouched ++ binData.flatMap(_.rel), binData.map(_.dataDir)))
       }
     }
+    compacted
   }
 
   // #check=<b64 spec> — a TABLE-LEVEL CHECK constraint every write
@@ -2981,13 +2678,11 @@ object ManifestTable {
     }
 
   /** The table's registered CHECK constraints. */
-  def checks(spark: SparkSession, dir: String): Seq[graft.ops.Quality.Constraint] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    if (!f.exists(ptr)) Seq.empty
-    else manifestLines(f, dir, readSmallFile(f, ptr).trim)
-      .filter(_.startsWith("#check=")).flatMap(parseCheckLine)
-  }
+  def checks(spark: SparkSession, dir: String): Seq[graft.ops.Quality.Constraint] =
+    checksOf(snapshot(fs(dir, spark), dir))
+
+  private def checksOf(snap: Option[Snapshot]): Seq[graft.ops.Quality.Constraint] =
+    snap.toSeq.flatMap(_.headers.filter(_.startsWith("#check=")).flatMap(parseCheckLine))
 
   /** Register a CHECK constraint as one header-only commit — refused
     * unless the CURRENT content already satisfies it (a constraint that
@@ -3002,20 +2697,13 @@ object ManifestTable {
       dir: String,
       constraint: graft.ops.Quality.Constraint): StagedCommit = {
     val line = checkLineOf(constraint) // validates the constraint kind
-    require(graft.ops.Quality.passes(read(spark, dir), Seq(constraint)),
-      s"existing rows violate ${constraint.name}; a CHECK must hold at creation")
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val lines = manifestLines(f, dir, name)
-    if (lines.contains(line)) return StagedCommit(basis, name, basis)
-    val schemaLine = lines.filter(_.startsWith("#schema="))
-    val header = carriedHeadersFor(lines, _ => true)
-    val content = ((schemaLine ++ (header :+ line).sorted) ++
-      manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    publish(spark, dir, staged)
-    staged
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      require(graft.ops.Quality.passes(readSnapshot(spark, dir, s), Seq(constraint)),
+        s"existing rows violate ${constraint.name}; a CHECK must hold at creation")
+      if (s.headers.contains(line)) Left(s.unchanged)
+      else Right(Put(s.schemaLine, carried(s, CarryAll) :+ line, s.rels))
+    }
   }
 
   /** Drop a CHECK constraint (header-only commit; no-op if absent). */
@@ -3024,18 +2712,11 @@ object ManifestTable {
       dir: String,
       constraint: graft.ops.Quality.Constraint): StagedCommit = {
     val line = checkLineOf(constraint)
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val lines = manifestLines(f, dir, name)
-    if (!lines.contains(line)) return StagedCommit(basis, name, basis)
-    val schemaLine = lines.filter(_.startsWith("#schema="))
-    val header = carriedHeadersFor(lines, _ => true).filterNot(_ == line)
-    val content = ((schemaLine ++ header.sorted) ++
-      manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    publish(spark, dir, staged)
-    staged
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      if (!s.headers.contains(line)) Left(s.unchanged)
+      else Right(Put(s.schemaLine, carried(s, CarryAll).filterNot(_ == line), s.rels))
+    }
   }
 
   // #indexof=<b64 source dir>|<source version> — a DERIVED-TABLE source
@@ -3070,13 +2751,20 @@ object ManifestTable {
     * snapshot-consistent by construction: a reader that resolves CURRENT
     * once sees the metadata written in the same pointer move as the
     * content it describes. */
-  def properties(spark: SparkSession, dir: String): Map[String, String] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    manifestLines(f, dir, readSmallFile(f, ptr).trim)
-      .flatMap(parseMetaLine).toMap
-  }
+  def properties(spark: SparkSession, dir: String): Map[String, String] =
+    current(spark, dir).headers.flatMap(parseMetaLine).toMap
+
+  private def metaLines(meta: Map[String, String]): Seq[String] =
+    meta.toSeq.sortBy(_._1).map { case (k, v) => metaLine(k, v) }
+
+  // `hs` REBOUND to `sourceDir`@`sourceVersion`: the old #indexof line
+  // and the old lines of `meta`'s keys give way to the new ones
+  private def rebind(
+      hs: Seq[String], sourceDir: String, sourceVersion: Long,
+      meta: Map[String, String]): Seq[String] =
+    (hs.filterNot(l => l.startsWith("#indexof=") ||
+        parseMetaLine(l).exists(kv => meta.contains(kv._1))) :+
+      indexOfLine(sourceDir, sourceVersion)) ++ metaLines(meta)
 
   private def parseIndexOfLine(l: String): Option[(String, Long)] =
     l.stripPrefix("#indexof=").split('|') match {
@@ -3096,20 +2784,13 @@ object ManifestTable {
       df: DataFrame,
       sourceDir: String,
       sourceVersion: Long,
-      meta: Map[String, String] = Map.empty): StagedCommit = {
-    enforceChecks(spark, dir, df)
-    val f = fs(dir, spark)
-    val checkLines =
-      if (!f.exists(new Path(dir, PointerName))) Seq.empty[String]
-      else manifestLines(f, dir,
-        readSmallFile(f, new Path(dir, PointerName)).trim)
-        .filter(_.startsWith("#check="))
-    val staged = stage(spark, dir, df, Seq.empty,
-      (checkLines :+ indexOfLine(sourceDir, sourceVersion)) ++
-        meta.toSeq.sortBy(_._1).map { case (k, v) => metaLine(k, v) })
-    publish(spark, dir, staged)
-    staged
-  }
+      meta: Map[String, String] = Map.empty): StagedCommit =
+    transact(spark, dir, 0) { snap =>
+      enforceChecks(snap, df)
+      Right(putData(stageData(spark, dir, df),
+        rebind(snap.toSeq.flatMap(carried(_, CarryChecks)), sourceDir, sourceVersion, meta),
+        Nil, owned = true))
+    }
 
   /** Append-commit to a bound index table that REBINDS the #indexof
     * header in the same transaction — the O(delta) index-maintenance
@@ -3129,14 +2810,9 @@ object ManifestTable {
       sourceVersion: Long,
       maxRetries: Int = 20,
       meta: Map[String, String] = Map.empty): StagedCommit = {
-    requireSameSchema(currentSchema(spark, dir), df.schema, "appendIndex")
-    enforceChecks(spark, dir, df)
+    validateAppend(spark, dir, df, "appendIndex", unique = false)
     completeAppendWith(spark, dir, stageData(spark, dir, df),
-      hs => (hs.filterNot(l => l.startsWith("#indexof=") ||
-          parseMetaLine(l).exists(kv => meta.contains(kv._1))) :+
-        indexOfLine(sourceDir, sourceVersion)) ++
-        meta.toSeq.sortBy(_._1).map { case (k, v) => metaLine(k, v) },
-      maxRetries)
+      rebind(_, sourceDir, sourceVersion, meta), maxRetries)
   }
 
   // #streambatch=<b64 stream id>|<batch id> — a foreachBatch IDEMPOTENCE
@@ -3159,20 +2835,19 @@ object ManifestTable {
     }
 
   private def lastStreamBatchIn(lines: Seq[String], streamId: String): Option[Long] =
-    lines.filter(_.startsWith("#streambatch="))
-      .flatMap(parseStreamBatchLine)
+    lines.flatMap(parseStreamBatchLine)
       .collectFirst { case (s, b) if s == streamId => b }
+
+  // `hs` stamped with `streamId`'s batch marker, its old marker replaced
+  private def stamp(hs: Seq[String], streamId: String, batchId: Long): Seq[String] =
+    hs.filterNot(l => parseStreamBatchLine(l).exists(_._1 == streamId)) :+
+      streamBatchLine(streamId, batchId)
 
   /** The last batch id stream `streamId` landed on this table's CURRENT
     * snapshot, or None (no table, or no marker for this stream). */
   def lastStreamBatch(
-      spark: SparkSession, dir: String, streamId: String): Option[Long] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    if (!f.exists(ptr)) None
-    else lastStreamBatchIn(
-      manifestLines(f, dir, readSmallFile(f, ptr).trim), streamId)
-  }
+      spark: SparkSession, dir: String, streamId: String): Option[Long] =
+    snapshot(fs(dir, spark), dir).flatMap(s => lastStreamBatchIn(s.headers, streamId))
 
   /** [[lastStreamBatch]] against a BRANCH head (the WAP sink's marker). */
   def lastStreamBatchOnBranch(
@@ -3182,7 +2857,7 @@ object ManifestTable {
     if (!f.exists(branchDir(dir, name))) None
     else {
       val (head, _, _) = branchState(f, dir, name)
-      lastStreamBatchIn(manifestLines(f, dir, head), streamId)
+      lastStreamBatchIn(manifestAt(f, dir, head).headers, streamId)
     }
   }
 
@@ -3194,13 +2869,9 @@ object ManifestTable {
   def appendStamped(
       spark: SparkSession, dir: String, df: DataFrame,
       streamId: String, batchId: Long): StagedCommit = {
-    requireSameSchema(currentSchema(spark, dir), df.schema, "appendStamped")
-    enforceChecks(spark, dir, df)
-    enforceUnique(spark, dir, df, probeExisting = true)
+    validateAppend(spark, dir, df, "appendStamped", unique = true)
     completeAppendWith(spark, dir, stageData(spark, dir, df),
-      hs => hs.filterNot(
-        l => parseStreamBatchLine(l).exists(_._1 == streamId)) :+
-        streamBatchLine(streamId, batchId))
+      stamp(_, streamId, batchId))
   }
 
   /** [[appendIndex]] stamped with a stream-batch marker — the streaming
@@ -3212,27 +2883,17 @@ object ManifestTable {
       streamId: String, batchId: Long,
       maxRetries: Int = 20,
       meta: Map[String, String] = Map.empty): StagedCommit = {
-    requireSameSchema(currentSchema(spark, dir), df.schema, "appendIndexStamped")
-    enforceChecks(spark, dir, df)
+    validateAppend(spark, dir, df, "appendIndexStamped", unique = false)
     completeAppendWith(spark, dir, stageData(spark, dir, df),
-      hs => (hs.filterNot(l => l.startsWith("#indexof=") ||
-          parseStreamBatchLine(l).exists(_._1 == streamId) ||
-          parseMetaLine(l).exists(kv => meta.contains(kv._1))) :+
-        indexOfLine(sourceDir, sourceVersion) :+
-        streamBatchLine(streamId, batchId)) ++
-        meta.toSeq.sortBy(_._1).map { case (k, v) => metaLine(k, v) },
+      hs => stamp(rebind(hs, sourceDir, sourceVersion, meta), streamId, batchId),
       maxRetries)
   }
 
   /** The (source dir, source version) this table's CURRENT snapshot is
     * bound to, or None for an unbound table. */
-  def indexSourceOf(spark: SparkSession, dir: String): Option[(String, Long)] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    if (!f.exists(ptr)) None
-    else manifestLines(f, dir, readSmallFile(f, ptr).trim)
-      .filter(_.startsWith("#indexof=")).flatMap(parseIndexOfLine).headOption
-  }
+  def indexSourceOf(spark: SparkSession, dir: String): Option[(String, Long)] =
+    snapshot(fs(dir, spark), dir).flatMap(
+      _.headers.filter(_.startsWith("#indexof=")).flatMap(parseIndexOfLine).headOption)
 
   /** Probe-side staleness gate: refuse (loudly, with both versions in
     * the message) unless the index's recorded source snapshot is STILL
@@ -3268,13 +2929,11 @@ object ManifestTable {
     else Some(unb64(l.stripPrefix("#unique=")))
 
   /** The table's registered UNIQUE key columns. */
-  def uniqueKeys(spark: SparkSession, dir: String): Seq[String] = {
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    if (!f.exists(ptr)) Seq.empty
-    else manifestLines(f, dir, readSmallFile(f, ptr).trim)
-      .flatMap(parseUniqueLine)
-  }
+  def uniqueKeys(spark: SparkSession, dir: String): Seq[String] =
+    uniqueKeysOf(snapshot(fs(dir, spark), dir))
+
+  private def uniqueKeysOf(snap: Option[Snapshot]): Seq[String] =
+    snap.toSeq.flatMap(_.headers.flatMap(parseUniqueLine))
 
   /** Register a UNIQUE KEY as one header-only commit — refused unless the
     * CURRENT content already satisfies it. Once registered, every append
@@ -3283,34 +2942,29 @@ object ManifestTable {
   def addUnique(spark: SparkSession, dir: String, column: String): StagedCommit = {
     import org.apache.spark.sql.functions.{col, count, lit}
     val line = uniqueLineOf(column)
-    val cur = read(spark, dir)
-    require(cur.schema.fieldNames.contains(column),
-      s"UNIQUE column not in schema: $column")
-    val bad = cur.groupBy(col(column)).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1 || col(column).isNull).limit(1).collect()
-    require(bad.isEmpty,
-      s"existing rows violate UNIQUE($column); the key must hold at creation")
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val lines = manifestLines(f, dir, name)
-    if (lines.contains(line)) return StagedCommit(basis, name, basis)
-    val schemaLine = lines.filter(_.startsWith("#schema="))
-    val header = carriedHeadersFor(lines, _ => true)
-    val content = ((schemaLine ++ (header :+ line).sorted) ++
-      manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    publish(spark, dir, staged)
-    staged
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      val cur = readSnapshot(spark, dir, s)
+      require(cur.schema.fieldNames.contains(column),
+        s"UNIQUE column not in schema: $column")
+      val bad = cur.groupBy(col(column)).agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > 1 || col(column).isNull).limit(1).collect()
+      require(bad.isEmpty,
+        s"existing rows violate UNIQUE($column); the key must hold at creation")
+      if (s.headers.contains(line)) Left(s.unchanged)
+      else Right(Put(s.schemaLine, carried(s, CarryAll) :+ line, s.rels))
+    }
   }
 
   // the UNIQUE gate: one aggregate over the batch (duplicate or null
   // keys), then — for appends — the stats-bounded existing-key probe.
   private def enforceUnique(
-      spark: SparkSession, dir: String, df: DataFrame,
+      spark: SparkSession, dir: String, snap: Option[Snapshot], df: DataFrame,
       probeExisting: Boolean): Unit = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
-    uniqueKeys(spark, dir).foreach { k =>
+    uniqueKeysOf(snap).foreach { k =>
+      // a key implies a snapshot
+      val s = snap.get
       require(df.schema.fieldNames.contains(k),
         s"UNIQUE($k) column missing from the incoming batch")
       // ONE aggregate answers the batch gate AND the probe bounds (r14:
@@ -3335,19 +2989,11 @@ object ManifestTable {
             case _: NumericType =>
               val lo = mm.get(0).asInstanceOf[Number].doubleValue
               val hi = mm.get(1).asInstanceOf[Number].doubleValue
-              readBetween(spark, dir, k, Math.nextDown(lo), Math.nextUp(hi))
+              readBetweenIn(spark, dir, s, k, Math.nextDown(lo), Math.nextUp(hi))
             case StringType =>
-              val (kept, _) = pruneByRangeString(spark, dir, k,
-                mm.getString(0), mm.getString(1))
-              val f = fs(dir, spark)
-              val name = readSmallFile(f, new Path(dir, PointerName)).trim
-              if (kept.isEmpty)
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  currentSchema(spark, dir).getOrElse(df.schema))
-              else applyDv(spark, dir, spark.read.parquet(kept: _*),
-                dvRelsOf(manifestDvLines(f, dir, name)))
-            case _ => read(spark, dir)
+              readKept(spark, dir, s,
+                pruneStrings(dir, s, k, Seq((mm.getString(0), mm.getString(1)))))
+            case _ => readSnapshot(spark, dir, s)
           }
           val clash = existing.select(col(k).as("__ek"))
             .join(df.select(col(k).as("__ek")).distinct(), Seq("__ek"))
@@ -3362,9 +3008,8 @@ object ManifestTable {
 
   // every write transaction funnels its INCOMING rows through this: one
   // aggregate over the batch, loud refusal naming the broken rule
-  private def enforceChecks(
-      spark: SparkSession, dir: String, df: DataFrame): Unit = {
-    val cs = checks(spark, dir)
+  private def enforceChecks(snap: Option[Snapshot], df: DataFrame): Unit = {
+    val cs = checksOf(snap)
     if (cs.nonEmpty) {
       val bad = graft.ops.Quality.constraintReport(df, cs)
         .filter(org.apache.spark.sql.functions.col("n_violations") > 0)
@@ -3386,19 +3031,14 @@ object ManifestTable {
     * have swept the manifest first. */
   def restore(spark: SparkSession, dir: String, version: Long): StagedCommit = {
     val f = fs(dir, spark)
-    val name = f"manifest-$version%020d.txt"
-    require(f.exists(new Path(new Path(dir, "_manifests"), name)),
-      s"version $version not found (vacuumed, or never committed) in $dir")
-    val basis = currentVersion(spark, dir)
-    if (basis == version) return StagedCommit(version, name, version)
-    val lines = manifestLines(f, dir, name)
-    val schemaLine = lines.filter(_.startsWith("#schema="))
-    val headers = carriedHeadersFor(lines, _ => true)
-    val content = ((schemaLine ++ headers.sorted) ++
-      manifestRel(f, dir, name).sorted).mkString("\n")
-    val staged = claimManifestSlot(spark, dir, content, basis)
-    publish(spark, dir, staged)
-    staged
+    val name = requireVersion(f, dir, version)
+    transact(spark, dir, 0) { snap =>
+      if (snap.exists(_.version == version)) Left(StagedCommit(version, name, version))
+      else {
+        val target = manifestAt(f, dir, name)
+        Right(Put(target.schemaLine, carried(target, CarryAll), target.rels))
+      }
+    }
   }
 
   /** Manifest-native small-file compaction: coalesce the CURRENT snapshot
@@ -3408,8 +3048,19 @@ object ManifestTable {
     * where directory rename is atomic). Old files stay on disk for
     * in-flight readers until [[vacuum]]. */
   def compact(spark: SparkSession, dir: String, targetFiles: Int): StagedCommit =
-    commitCarryingChecks(spark, dir, read(spark, dir).coalesce(targetFiles),
-      carryIndexOf = true)
+    commitLayout(spark, dir)(_.coalesce(targetFiles))
+
+  // a LAYOUT rewrite: the current rows, rearranged by `layout`, commit as
+  // a full snapshot WITHOUT re-validation — they already passed at their
+  // own commit, and a redundant validation pass is exactly what a 100 TB
+  // compaction must not pay. The deletion vectors are materialized.
+  private def commitLayout(spark: SparkSession, dir: String)(
+      layout: DataFrame => DataFrame): StagedCommit =
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      Right(putData(stageData(spark, dir, layout(readSnapshot(spark, dir, s))),
+        carried(s, CarryLayout), Nil, owned = true))
+    }
 
   /** Range-clustered compaction: rewrite the snapshot into `targetFiles`
     * files with DISJOINT `sortCols` ranges (repartitionByRange + local
@@ -3425,10 +3076,9 @@ object ManifestTable {
       targetFiles: Int
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    val ordered = read(spark, dir)
-      .repartitionByRange(targetFiles, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-    commitCarryingChecks(spark, dir, ordered, carryIndexOf = true)
+    commitLayout(spark, dir)(
+      _.repartitionByRange(targetFiles, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*))
   }
 
   /** Z-ORDER clustered compaction — multi-dimensional file skipping as
@@ -3468,14 +3118,12 @@ object ManifestTable {
       targetFiles: Int
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
-    val base = read(spark, dir)
-    val ordered = base
-      .withColumn("__graft_z",
+    commitLayout(spark, dir)(
+      _.withColumn("__graft_z",
         graft.ops.Bucketing.zValueN(cols.map(col), bits))
-      .repartitionByRange(targetFiles, col("__graft_z"))
-      .sortWithinPartitions(col("__graft_z"))
-      .drop("__graft_z")
-    commitCarryingChecks(spark, dir, ordered, carryIndexOf = true)
+        .repartitionByRange(targetFiles, col("__graft_z"))
+        .sortWithinPartitions(col("__graft_z"))
+        .drop("__graft_z"))
   }
 
   // the one bucket expression BOTH the layout write and the probe use —
@@ -3508,49 +3156,28 @@ object ManifestTable {
   ): StagedCommit = {
     import org.apache.spark.sql.functions.col
     require(numBuckets > 0, s"numBuckets must be positive: $numBuckets")
-    val f = fs(dir, spark)
-    val base = read(spark, dir)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val basis = name.stripPrefix("manifest-").stripSuffix(".txt").toLong
-    val dataDir = new Path(new Path(dir, "data"), UUID.randomUUID().toString)
-    base.withColumn("__p", bucketExpr(col(column), numBuckets))
-      .repartition(numBuckets, col("__p"))
-      .write.partitionBy("__p").parquet(dataDir.toString)
-    val it = f.listFiles(dataDir, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet")) files += p
-    }
-    val root = f.makeQualified(new Path(dir)).toUri.getPath
-    val rel = files.toSeq.map(_.toUri.getPath.stripPrefix(root).stripPrefix("/"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statsRows = files.toSeq.zip(rel).map { case (p, r) =>
-      val (cs, rows) = footerStatsRows(conf, p, r)
-      (cs.map(statsLine), sizeLineOf(r, f.getFileStatus(p).getLen, rows))
-    }
-    val stats = statsRows.flatMap(_._1) ++ statsRows.map(_._2)
     // a layout rewrite leaves CONTENT unchanged, so everything the
-    // sibling rewrites (compactSorted/compactZOrder via
-    // commitCarryingChecks(carryIndexOf = true)) carry holds here too:
-    // #check/#unique constraints, the #indexof source binding, the
-    // #streambatch idempotence markers (dropping them would let a
-    // foreachBatch replay after this compaction double-append), and
-    // #meta corpus stats — EXCEPT a stale bucket-layout #meta line from
-    // a previous compactBucketed, which this commit's own layout line
-    // replaces.
+    // sibling rewrites (compactSorted/compactZOrder, [[commitLayout]])
+    // carry holds here too: #check/#unique constraints, the #indexof
+    // source binding, the #streambatch idempotence markers (dropping them
+    // would let a foreachBatch replay after this compaction
+    // double-append), and #meta corpus stats — EXCEPT a stale
+    // bucket-layout #meta line from a previous compactBucketed, which
+    // this commit's own layout line replaces.
     val staleLayout = metaLine(BucketMetaKey, "").takeWhile(_ != '|') + "|"
-    val checks = manifestLines(f, dir, name)
-      .filter(l => l.startsWith("#check=") || l.startsWith("#unique=") ||
-        l.startsWith("#indexof=") || l.startsWith("#streambatch=") ||
-        (l.startsWith("#meta=") && !l.startsWith(staleLayout)))
     val layout = metaLine(BucketMetaKey, s"$column|$numBuckets")
-    val staged = claimManifestSlot(spark, dir,
-      ((s"#schema=${base.schema.json}" +:
-        (checks ++ stats :+ layout).sorted) ++ rel.sorted).mkString("\n"),
-      basis)
-    publish(spark, dir, staged)
-    staged
+    transact(spark, dir, 0) { snap =>
+      val s = table(snap, dir)
+      val base = readSnapshot(spark, dir, s)
+      val sd = writeData(spark, dir, base.schema.json) { d =>
+        base.withColumn("__p", bucketExpr(col(column), numBuckets))
+          .repartition(numBuckets, col("__p"))
+          .write.partitionBy("__p").parquet(d)
+      }
+      Right(putData(sd,
+        carried(s, CarryLayout).filterNot(_.startsWith(staleLayout)) :+ layout,
+        Nil, owned = true))
+    }
   }
 
   /** The files a bucketed point probe must open for `value`, plus the
@@ -3566,15 +3193,13 @@ object ManifestTable {
         s"$dir carries no $BucketMetaKey layout — compactBucketed it first"))
     val Array(column, nStr) = spec.split('|')
     val n = nStr.toInt
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val all = manifestRel(f, dir, name)
+    val s = current(spark, dir)
+    val all = s.rels
     val bare = all.filterNot(_.contains("/__p="))
     require(bare.isEmpty,
       s"bucket layout broken: ${bare.size} current file(s) carry no __p= " +
         "segment (appended after compactBucketed) — re-run compactBucketed")
-    val dt = currentSchema(spark, dir)
-      .getOrElse(read(spark, dir).schema)(column).dataType
+    val dt = schemaOf(spark, dir, s)(column).dataType
     // the probe value's bucket under the layout's own expression — a
     // 1-row local eval, no table read
     val b = spark.range(1)
@@ -3593,15 +3218,12 @@ object ManifestTable {
     val spec = properties(spark, dir)(BucketMetaKey)
     val column = spec.split('|')(0)
     val (kept, _) = pruneByBucket(spark, dir, value)
-    val f = fs(dir, spark)
-    val name = readSmallFile(f, new Path(dir, PointerName)).trim
-    val schema = currentSchema(spark, dir).getOrElse(read(spark, dir).schema)
-    if (kept.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val s = current(spark, dir)
+    val schema = schemaOf(spark, dir, s)
+    if (kept.isEmpty) emptyFrame(spark, schema)
     else applyDv(spark, dir,
       spark.read.option("recursiveFileLookup", "true").parquet(kept: _*),
-      dvRelsOf(manifestDvLines(f, dir, name)))
+      s.dvRels)
       .filter(col(column) === lit(value).cast(schema(column).dataType))
   }
 
@@ -3633,26 +3255,12 @@ object ManifestTable {
     // ONE pointer resolution: every prune and the DV lines evaluate
     // against the same snapshot (a commit landing between independent
     // resolutions could silently drop rows)
-    val f = fs(dir, spark)
-    val ptr = new Path(dir, PointerName)
-    require(f.exists(ptr), s"not a manifest table (no $PointerName): $dir")
-    val name = readSmallFile(f, ptr).trim
-    val kept = ranges.tail.foldLeft(
-      pruneByRangeIn(spark, dir, name, ranges.head._1,
-        ranges.head._2, ranges.head._3)._1) {
-      case (acc, (c, lo, hi)) =>
-        val keep = pruneByRangeIn(spark, dir, name, c, lo, hi)._1.toSet
-        acc.filter(keep)
-    }
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          currentSchema(spark, dir).getOrElse(read(spark, dir).schema))
-      else applyDv(spark, dir, spark.read.parquet(kept: _*),
-        dvRelsOf(manifestDvLines(f, dir, name)))
-    base.filter(ranges.map { case (c, lo, hi) => col(c).between(lo, hi) }
-      .reduce(_ && _))
+    val s = current(spark, dir)
+    val kept = ranges.map { case (c, lo, hi) => pruneRanges(dir, s, c, Seq((lo, hi))) }
+      .reduce((acc, keep) => acc.filter(keep.toSet))
+    readKept(spark, dir, s, kept)
+      .filter(ranges.map { case (c, lo, hi) => col(c).between(lo, hi) }
+        .reduce(_ && _))
   }
 
   /** Delete data files no longer referenced by the CURRENT manifest —
@@ -3677,13 +3285,12 @@ object ManifestTable {
   def vacuum(
       spark: SparkSession, dir: String, retainStagedMillis: Long = 3600000L): Int = {
     val f = fs(dir, spark)
-    val keep = readSmallFile(f, new Path(dir, PointerName)).trim
-    val curV = keep.stripPrefix("manifest-").stripSuffix(".txt").toLong
+    val cur = current(spark, dir)
+    val keep = cur.name
     val mdir = new Path(dir, "_manifests")
     val cutoff = System.currentTimeMillis() - retainStagedMillis
     // tagged snapshots are PINNED: their manifests and files survive
-    val tagged = tags(spark, dir).values
-      .map(v => f"manifest-$v%020d.txt").toSet
+    val tagged = tags(spark, dir).values.map(manifestName).toSet
     // live BRANCHES pin their head AND base manifests (and, below, the
     // files/vectors those reference): a branch head's version can be at
     // or below CURRENT's once main commits past its slots, and it is
@@ -3706,19 +3313,16 @@ object ManifestTable {
     if (f.exists(mdir))
       f.listStatus(mdir).filter(_.getPath.getName != keep).foreach { st =>
         val n = st.getPath.getName
-        val v = scala.util.Try(
-          n.stripPrefix("manifest-").stripSuffix(".txt").toLong).toOption
-        val inFlight = v.exists(_ > curV) && st.getModificationTime >= cutoff
+        val v = scala.util.Try(versionOf(n)).toOption
+        val inFlight = v.exists(_ > cur.version) && st.getModificationTime >= cutoff
         if (inFlight || tagged.contains(n) || branchPinned.contains(n)) retained += n
         else f.delete(st.getPath, false): Unit
       }
     // deletion-vector sidecars are live exactly while a retained
     // manifest references them (they are .parquet files under data/,
     // so the sweep below would otherwise delete them)
-    val live = (currentRel(f, dir) ++
-      dvRelsOf(manifestDvLines(f, dir, keep)) ++
-      retained.flatMap(n => manifestRel(f, dir, n) ++
-        dvRelsOf(manifestDvLines(f, dir, n))))
+    val live = (cur +: retained.toSeq.map(manifestAt(f, dir, _)))
+      .flatMap(m => m.rels ++ m.dvRels)
       .map(rel => f.makeQualified(new Path(dir, rel)).toUri.getPath).toSet
     val dataRoot = new Path(dir, "data")
     if (!f.exists(dataRoot)) return 0
@@ -3726,12 +3330,7 @@ object ManifestTable {
     f.listStatus(dataRoot).foreach { sub =>
       // recursive: partition-laid-out generations nest files one level
       // deeper (__p=value/ segments)
-      val it = f.listFiles(sub.getPath, true)
-      val children = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val p = it.next().getPath
-        if (p.getName.endsWith(".parquet")) children += p
-      }
+      val children = parquetUnder(f, dir, sub.getPath).map(_._1.getPath)
       val (dead, alive) = children.partition(c =>
         !live.contains(f.makeQualified(c).toUri.getPath))
       dead.foreach { c => if (f.delete(c, false)) n += 1 }

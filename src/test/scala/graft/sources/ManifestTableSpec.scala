@@ -125,11 +125,15 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       ManifestTable.commit(spark, dir,
         (0L until 10L).map(i => (i, s"a$i")).toDF("id", "v"))
       val v0 = ManifestTable.currentVersion(spark, dir)
+      def dataDirs() = Option(new java.io.File(dir, "data").listFiles())
+        .toSeq.flatten.map(_.getName).toSet
+      val dirs0 = dataDirs()
       // empty frame: no version claimed, no staged files left behind
       val none = ManifestTable.appendIfNonEmpty(spark, dir,
         (0L until 10L).map(i => (i, s"a$i")).toDF("id", "v").filter(col("id") < 0))
       none shouldBe None
       ManifestTable.currentVersion(spark, dir) shouldBe v0
+      dataDirs() shouldBe dirs0
       // non-empty: identical to a plain append
       val some = ManifestTable.appendIfNonEmpty(spark, dir,
         (10L until 15L).map(i => (i, s"b$i")).toDF("id", "v"))
@@ -1249,6 +1253,41 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       val back = ManifestTable.read(spark, dir)
       back.count() shouldBe 410
       back.filter(col("v").startsWith("x")).count() shouldBe 10
+    } finally rm(dir)
+  }
+
+  it should "release the slot of a refused non-retrying commit, leaving no false history" in {
+    val dir = tmpDir()
+    try {
+      ManifestTable.replacePartitions(spark, dir,
+        (0L until 20L).map(i => (i, s"p${i % 2}")).toDF("id", "p"), "p")
+      // every version CURRENT has held, in order
+      val held = scala.collection.mutable.ArrayBuffer(
+        ManifestTable.currentVersion(spark, dir))
+      // inject: an append PUBLISHES inside the stage→publish window of
+      // `op`, which does not retry
+      def refusedWith(op: => Any): Unit = {
+        var fired = false
+        ManifestTable.onBeforePublish = () => if (!fired) {
+          fired = true
+          ManifestTable.append(spark, dir,
+            Seq((100L + held.size, s"q${held.size}")).toDF("id", "p"))
+          held += ManifestTable.currentVersion(spark, dir)
+        }
+        try an[java.util.ConcurrentModificationException] should be thrownBy op
+        finally ManifestTable.onBeforePublish = () => ()
+        fired shouldBe true
+      }
+      refusedWith(ManifestTable.replacePartitions(spark, dir,
+        Seq((50L, "p0")).toDF("id", "p"), "p"))
+      refusedWith(ManifestTable.addCheck(spark, dir,
+        graft.ops.Quality.NotNull("id")))
+      // the refused manifests are gone: history is exactly what CURRENT
+      // held, so time travel and commit times see no phantom snapshot
+      ManifestTable.versions(spark, dir) shouldBe held.toSeq
+      ManifestTable.commitTimes(spark, dir).map(_._1) shouldBe held.toSeq
+      ManifestTable.checks(spark, dir) shouldBe empty
+      ManifestTable.read(spark, dir).count() shouldBe 22
     } finally rm(dir)
   }
 
