@@ -24,10 +24,9 @@ object GraftSession {
   /** The shared settings. `rawLocalFs` maps `file://` to
     * `RawLocalFileSystem`, which writes no `.crc` sidecars — the object
     * store the timing harnesses model (BASELINE.md, "checksum
-    * re-pricing"); `GRAFT_BENCH_LOCAL_CRC=1` keeps the checksummed default
-    * there too. `Verify` always runs checksummed. */
+    * re-pricing"). `Verify` always runs checksummed. */
   def settings(rawLocalFs: Boolean): Seq[(String, String)] =
-    if (rawLocalFs && sys.env.getOrElse("GRAFT_BENCH_LOCAL_CRC", "0") != "1")
+    if (rawLocalFs)
       shared :+ ("spark.hadoop.fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem")
     else shared
 

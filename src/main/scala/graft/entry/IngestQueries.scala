@@ -593,10 +593,8 @@ private[graft] object IngestQueries {
       M.commitTxnPins(s, cat, Seq(
         ("orders", dirA, M.currentVersion(s, dirA)),
         ("lsums", dirB, M.currentVersion(s, dirB))))
-      val sA = M.stage(s, dirA, orders.filter(col("o_orderkey") % 2 =!= 0),
-        M.currentFiles(s, dirA))
-      val sB = M.stage(s, dirB, lsums.filter(col("l_orderkey") % 2 =!= 0),
-        M.currentFiles(s, dirB))
+      val sA = M.stageAppend(s, dirA, orders.filter(col("o_orderkey") % 2 =!= 0))
+      val sB = M.stageAppend(s, dirB, lsums.filter(col("l_orderkey") % 2 =!= 0))
       M.commitTxn(s, cat, Seq(("orders", dirA, sA), ("lsums", dirB, sB)))
       M.append(s, dirA, orders.limit(100)) // canary: CURRENT-only rows
       val a = M.readTxn(s, cat, "orders")

@@ -695,24 +695,26 @@ object ManifestTable {
     } else Some((relOf(f, dir, dvDir), files.map(_._2)))
   }
 
-  /** Steps (1)+(2): publish data files and manifest WITHOUT moving the
-    * pointer. Readers still resolve the previous snapshot. `carryForward`
-    * lists data files (dir-relative) from prior snapshots that stay part
-    * of this one — empty for a full-snapshot commit, the current
-    * manifest's list for an append. `basisVersion` is the snapshot the
-    * carry list was read from (defaults to the current version at entry);
-    * [[publish]] later refuses the swap unless the table is still there. */
-  def stage(
-      spark: SparkSession,
-      dir: String,
-      df: DataFrame,
-      carryForward: Seq[String] = Seq.empty,
-      carryStats: Seq[String] = Seq.empty,
-      basisVersion: Option[Long] = None
-  ): StagedCommit = {
-    val basis = basisVersion.getOrElse(currentVersion(spark, dir))
-    val sd = stageData(spark, dir, df)
-    stageManifest(spark, dir, sd, carryForward, carryStats, basis)
+  /** Steps (1)+(2) of a full-snapshot commit of `df`: publish its data
+    * files and manifest WITHOUT moving the pointer. Readers still resolve
+    * the previous snapshot; [[publish]] later refuses the swap unless the
+    * table is still at the version current on entry. */
+  def stage(spark: SparkSession, dir: String, df: DataFrame): StagedCommit = {
+    val basis = currentVersion(spark, dir)
+    stageManifest(spark, dir, stageData(spark, dir, df), Nil, Nil, basis)
+  }
+
+  /** [[stage]] for an append of `df`: the manifest carries every file and
+    * header of ONE snapshot of the table, which is also the basis
+    * [[publish]] checks — the staged half of [[append]], for a caller that
+    * publishes itself ([[commitTxn]]). The batch is validated against
+    * that snapshot as [[append]] validates it. */
+  def stageAppend(spark: SparkSession, dir: String, df: DataFrame): StagedCommit = {
+    val snap = snapshot(fs(dir, spark), dir)
+    validateAppendAt(spark, dir, snap, df, "stageAppend", unique = true)
+    val put = appendPut(snap, stageData(spark, dir, df), identity, owned = true)
+    claimManifestSlot(spark, dir, manifestText(put.schemaLine, put.headers, put.rels),
+      snap.fold(-1L)(_.version))
   }
 
   /** Step (2) alone: claim a version slot for already-written data files
@@ -1481,8 +1483,12 @@ object ManifestTable {
   // schema, CHECK constraints, and (`unique`) the UNIQUE keys
   private def validateAppend(
       spark: SparkSession, dir: String, df: DataFrame, op: String,
-      unique: Boolean): Unit = {
-    val snap = snapshot(fs(dir, spark), dir)
+      unique: Boolean): Unit =
+    validateAppendAt(spark, dir, snapshot(fs(dir, spark), dir), df, op, unique)
+
+  private def validateAppendAt(
+      spark: SparkSession, dir: String, snap: Option[Snapshot], df: DataFrame,
+      op: String, unique: Boolean): Unit = {
     requireSameSchema(snap.flatMap(_.schema), df.schema, op)
     enforceChecks(snap, df)
     if (unique) enforceUnique(spark, dir, snap, df, probeExisting = true)
@@ -2179,20 +2185,6 @@ object ManifestTable {
       values: Seq[Any]): Seq[Any] = {
     val dt = schemaOf(spark, dir, s)(column).dataType
     values.flatMap(v => exactNative(v, dt))
-  }
-
-  /** [[pruneByRange]] on a STRING column: a file is skippable exactly
-    * when its recorded [min, max] (UTF-8 unsigned-byte order — how
-    * parquet orders BINARY stats) cannot intersect [lo, hi]. The
-    * string-key leg of [[mergeInto]]'s candidate prune. */
-  def pruneByRangeString(
-      spark: SparkSession,
-      dir: String,
-      column: String,
-      lo: String,
-      hi: String): (Seq[String], Int) = {
-    val s = current(spark, dir)
-    (pruneStrings(dir, s, column, Seq((lo, hi))), s.rels.size)
   }
 
   /** [[pruneByRange]] for an equality predicate on a STRING column —

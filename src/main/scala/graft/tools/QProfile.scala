@@ -5,7 +5,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 /** Optimization-round measurement harness (guide §1: measure first).
   *
   * `QProfile <sfDir> <name> [name ...]` runs each named SparkEntry query
-  * once cold and once steady on a Bench-identical session, with a
+  * once cold and once steady (each a [[graft.Bench.pass]]: build, `toRdd`,
+  * drain) on a Bench-identical session, with a
   * SparkListener recording every job of the steady pass: start time
   * relative to the pass, duration, and the job's callsite — the
   * breakdown that says WHICH phase of a multi-action lifecycle query
@@ -21,15 +22,8 @@ object QProfile {
     val names = args.drop(1).toSeq
     val spark = graft.GraftSession(rawLocalFs = true)
 
-    def consume(name: String): Double = {
-      val t0 = System.nanoTime()
-      val rdd = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd
-      rdd.foreachPartition(it => while (it.hasNext) it.next())
-      (System.nanoTime() - t0) / 1e9
-    }
-
     names.foreach { name =>
-      val cold = consume(name)
+      val (cold, _) = graft.Bench.pass(spark, sfDir, name)
       val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
       val order = new java.util.concurrent.CopyOnWriteArrayList[Job]()
       val listener = new SparkListener {
@@ -49,10 +43,10 @@ object QProfile {
       // of caching queries read the cold pass's materialized blocks)
       spark.catalog.clearCache()
       val w0 = System.currentTimeMillis()
-      val steady = consume(name)
+      val (steady, ok) = graft.Bench.pass(spark, sfDir, name)
       Thread.sleep(300) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
-      println(f"QPROF $name cold=$cold%.2f steady=$steady%.2f jobs=${order.size()}")
+      println(f"QPROF $name cold=$cold%.2f steady=$steady%.2f ok=$ok jobs=${order.size()}")
       import scala.jdk.CollectionConverters._
       var prevEnd = w0
       order.asScala.toSeq.sortBy(_.t0).foreach { j =>

@@ -1912,8 +1912,7 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       an[IllegalArgumentException] should be thrownBy
         ManifestTable.versionAsOf(spark, dir, times(0)._2 - 10000L)
       // a staged-but-unpublished slot is not a commit and never lists
-      ManifestTable.stage(spark, dir, Seq((9L, "z")).toDF("id", "v"),
-        ManifestTable.currentFiles(spark, dir)): Unit
+      ManifestTable.stageAppend(spark, dir, Seq((9L, "z")).toDF("id", "v")): Unit
       ManifestTable.commitTimes(spark, dir).map(_._1) shouldBe Seq(0L, 1L)
     } finally rm(dir)
   }
@@ -2047,10 +2046,8 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       ManifestTable.commitTxnPins(spark, cat,
         Seq(("a", da, 0L), ("b", db, 0L))) shouldBe 0L
       // one transaction appends to BOTH member tables
-      val sA = ManifestTable.stage(spark, da, Seq((2L, "b")).toDF("id", "v"),
-        ManifestTable.currentFiles(spark, da))
-      val sB = ManifestTable.stage(spark, db, Seq((2L, 20L)).toDF("id", "n"),
-        ManifestTable.currentFiles(spark, db))
+      val sA = ManifestTable.stageAppend(spark, da, Seq((2L, "b")).toDF("id", "v"))
+      val sB = ManifestTable.stageAppend(spark, db, Seq((2L, 20L)).toDF("id", "n"))
       ManifestTable.commitTxn(spark, cat,
         Seq(("a", da, sA), ("b", db, sB))) shouldBe 1L
       // per-table CURRENT moves past the transaction — the catalog view
@@ -2064,6 +2061,25 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
     } finally { rm(cat); rm(da); rm(db) }
   }
 
+  it should "carry the basis files' metadata through a staged transaction append" in {
+    val cat = tmpDir(); val da = tmpDir()
+    try {
+      ManifestTable.commit(spark, da, (0L until 40L).map(i => (i, "a")).toDF("id", "v"))
+      val sA = ManifestTable.stageAppend(spark, da,
+        (40L until 45L).map(i => (i, "b")).toDF("id", "v"))
+      sA.basisVersion shouldBe 0L
+      ManifestTable.commitTxn(spark, cat, Seq(("a", da, sA))) shouldBe 0L
+      // every file keeps its #size line, so the count needs no data read
+      ManifestTable.countFromMetadata(spark, da) shouldBe Some(45L)
+      // and the manifest names the carried files relative to the table
+      val src = scala.io.Source.fromFile(
+        new java.io.File(new java.io.File(da, "_manifests"), sA.manifestName))
+      val rels = try src.getLines().filterNot(_.startsWith("#")).toList finally src.close()
+      rels should not be empty
+      all(rels) should startWith ("data/")
+    } finally { rm(cat); rm(da) }
+  }
+
   it should "never move the catalog on a torn transaction, releasing staged slots" in {
     val cat = tmpDir(); val da = tmpDir(); val db = tmpDir()
     try {
@@ -2071,10 +2087,8 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       ManifestTable.commit(spark, db, Seq((1L, 10L)).toDF("id", "n"))
       ManifestTable.commitTxnPins(spark, cat,
         Seq(("a", da, 0L), ("b", db, 0L)))
-      val sA = ManifestTable.stage(spark, da, Seq((2L, "b")).toDF("id", "v"),
-        ManifestTable.currentFiles(spark, da))
-      val sB = ManifestTable.stage(spark, db, Seq((2L, 20L)).toDF("id", "n"),
-        ManifestTable.currentFiles(spark, db))
+      val sA = ManifestTable.stageAppend(spark, da, Seq((2L, "b")).toDF("id", "v"))
+      val sB = ManifestTable.stageAppend(spark, db, Seq((2L, 20L)).toDF("id", "n"))
       // a concurrent writer moves table b between stage and commit — b's
       // publish is refused by optimistic concurrency
       ManifestTable.append(spark, db, Seq((7L, 70L)).toDF("id", "n"))
@@ -2089,8 +2103,8 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       // table a DID move (the documented weaker per-table view); b's
       // failed staged slot was released, so the next commit claims it
       ManifestTable.read(spark, da).count() shouldBe 2L
-      val retry = ManifestTable.stage(spark, db,
-        Seq((2L, 20L)).toDF("id", "n"), ManifestTable.currentFiles(spark, db))
+      val retry = ManifestTable.stageAppend(spark, db,
+        Seq((2L, 20L)).toDF("id", "n"))
       // rebased on the concurrent append's published version
       retry.basisVersion shouldBe ManifestTable.currentVersion(spark, db)
       ManifestTable.commitTxn(spark, cat, Seq(("b", db, retry))) shouldBe 1L
