@@ -78,6 +78,15 @@ private[graft] object Fixtures {
     d.toString
   }
 
+  /** `df` written to [[scratch]]`(sub)` and read back under `df`'s own
+    * schema: a staged frame whose read infers nothing (Spark's parquet
+    * schema inference is a job of its own). */
+  def stageScratch(sub: String, df: DataFrame): DataFrame = {
+    val out = scratch(sub)
+    df.write.mode("overwrite").parquet(out)
+    df.sparkSession.read.schema(df.schema).parquet(out)
+  }
+
   /** Per-JVM memoized READ-ONLY staged fixture (r12 VERDICT ask #1): many
     * lifecycle queries open by committing the SAME source slice into a
     * scratch manifest table before the operator under test (index build,
@@ -366,11 +375,8 @@ private[graft] object Fixtures {
       corpusDir: String, v: Long, files: Int = 8): (Long, Long) = {
     val R = graft.ops.Retrieval
     val M = graft.sources.ManifestTable
-    val toksDir = scratch(sub)
-    corpus.select(col("doc_id").as("id"),
-        graft.ops.TextFunctions.tokens(col("text")).as("toks"))
-      .write.mode("overwrite").parquet(toksDir)
-    val toks = s.read.parquet(toksDir)
+    val toks = stageScratch(sub, corpus.select(col("doc_id").as("id"),
+      graft.ops.TextFunctions.tokens(col("text")).as("toks")))
     val (n, dl) = R.corpusStatsFromTokens(toks)
     M.commitIndex(s, out,
       R.buildPostingsFromTokens(toks)

@@ -466,14 +466,11 @@ private[graft] object SimQueries {
         q.select(col("vec_id").as("query_id"))
           .crossJoin(broadcast(Seq("resid", "flat").toDF("arm")))
       }
-      val residDir = scratch("residrec")
-      grid.join(hits, Seq("arm", "query_id"), "left")
+      val staged = stageScratch("residrec", grid.join(hits, Seq("arm", "query_id"), "left")
         .select(col("arm"), col("query_id"),
           coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall"))
-        .write.mode("overwrite").parquet(residDir)
+          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 6).as("recall")))
       residScope.release()
-      val staged = s.read.parquet(residDir)
       // SELF-VERIFYING (the sim_ivf_delta precedent): the "residuals
       // quantize finer" claim is ASSERTED in-query, not narrated — mean
       // recall@5 of by_residual=true must be >= by_residual=false at
@@ -826,13 +823,10 @@ private[graft] object SimQueries {
       val index = M.readWhereIn(s, out, "cell", cells)
       // staged once: the erasure assert and the returned frame share
       // one probe evaluation
-      val topkDir = scratch("ivfdel_topk")
-      graft.ops.Similarity.ivfTopKFromIndex(
+      val topk = stageScratch("ivfdel_topk", graft.ops.Similarity.ivfTopKFromIndex(
           index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
         .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-        .write.mode("overwrite").parquet(topkDir)
-      val topk = s.read.parquet(topkDir)
+          round(col("sim"), 6).as("sim")))
       require(topk.filter(col("neighbor_id").between(20, 39)).isEmpty,
         "an erased vector surfaced from the maintained index")
       topk
@@ -1344,9 +1338,7 @@ private[graft] object SimQueries {
         spread(s, emb), "vec_id", "embedding",
         numCentroids = 16, lloydRounds = 2,
         coarse = Some(loadPqBooks(s, dir)._1))
-      val idxDir = scratch("sweep_idx")
-      assigned.write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
+      val index = stageScratch("sweep_idx", assigned)
       Seq(1, 2, 4).map { np =>
         val approx = graft.ops.Similarity.ivfTopKFromIndex(
             index, cent, q, "vec_id", "embedding", k = 5, nprobe = np)
@@ -1414,9 +1406,7 @@ private[graft] object SimQueries {
         spread(s, emb), "vec_id", "embedding",
         numCentroids = 16, lloydRounds = 2,
         coarse = Some(loadPqBooks(s, dir)._1))
-      val idxDir = scratch("autotune_idx")
-      assigned.write.mode("overwrite").parquet(idxDir)
-      val index = s.read.parquet(idxDir)
+      val index = stageScratch("autotune_idx", assigned)
       // cached (r15): each arm's hit count is its own driver action, and
       // an uncached truth ranking re-ran the full brute-force top-k per
       // arm — three corpus rankings where one materialization serves all.

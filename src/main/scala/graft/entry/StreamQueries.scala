@@ -311,13 +311,10 @@ private[graft] object StreamQueries {
       val cells = graft.ops.Similarity.probeCells(
         cent, probesQ, "vec_id", "embedding", nprobe = 4)
       val index = M.readWhereIn(s, out, "cell", cells)
-      val topkDir = scratch("gdpr_topk")
-      graft.ops.Similarity.ivfTopKFromIndex(
+      val topk = stageScratch("gdpr_topk", graft.ops.Similarity.ivfTopKFromIndex(
           index, cent, probesQ, "vec_id", "embedding", k = 5, nprobe = 4)
         .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim"))
-        .write.mode("overwrite").parquet(topkDir)
-      val topk = s.read.parquet(topkDir)
+          round(col("sim"), 6).as("sim")))
       require(topk.filter(col("neighbor_id").between(20, 39)).isEmpty,
         "an erased vector surfaced from the stream-maintained index")
       topk

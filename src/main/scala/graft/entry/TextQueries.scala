@@ -669,10 +669,7 @@ private[graft] object TextQueries {
         Seq("spark", "table", "window", "join", "filter"))
       // staged once: the erasure assert and the returned frame share
       // one probe evaluation
-      val topkDir = scratch("retrdel_topk")
-      R.bm25TopK(post, queries, nF, dlF, k = 5)
-        .write.mode("overwrite").parquet(topkDir)
-      val topk = s.read.parquet(topkDir)
+      val topk = stageScratch("retrdel_topk", R.bm25TopK(post, queries, nF, dlF, k = 5))
       require(topk.filter(col("doc_id").between(100, 149)).isEmpty,
         "an erased document ranked from the maintained index")
       topk
@@ -831,11 +828,8 @@ private[graft] object TextQueries {
       // proving exactness when nothing can be pruned.
       val terms = Seq("dup", "spark", "table", "join", "filter",
         "vector", "stream", "hash")
-      val postDir = scratch("bmx_postings")
-      R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin(terms: _*))
-        .write.mode("overwrite").parquet(postDir)
-      val post = s.read.parquet(postDir)
+      val post = stageScratch("bmx_postings", R.buildPostings(docs, "doc_id", "text")
+        .filter(col("term").isin(terms: _*)))
       val queries = Seq(
         0L -> "dup", 0L -> "spark", 0L -> "table",
         1L -> "join", 1L -> "filter",
@@ -883,10 +877,7 @@ private[graft] object TextQueries {
     Query("text_trigram_search", (s, dir) => {
       val R = graft.ops.Retrieval
       val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val postDir = scratch("tri_postings")
-      R.buildTrigramPostings(docs, "doc_id", "text")
-        .write.mode("overwrite").parquet(postDir)
-      val post = s.read.parquet(postDir)
+      val post = stageScratch("tri_postings", R.buildTrigramPostings(docs, "doc_id", "text"))
       val pattern = "spark table"
       val tris = pattern.sliding(3).toSeq.distinct
       val nCand = post.filter(col("tri").isin(tris: _*))
@@ -942,11 +933,8 @@ private[graft] object TextQueries {
       val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
       // staged: phraseMatchAll equi-joins the lists per term, and each
       // join leg would otherwise re-tokenize the corpus (r14)
-      val p3Dir = scratch("phrase3_post")
-      R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin("slow", "hash", "batch"))
-        .write.mode("overwrite").parquet(p3Dir)
-      R.phraseMatchAll(s.read.parquet(p3Dir), Seq("slow", "hash", "batch"))
+      R.phraseMatchAll(stageScratch("phrase3_post", R.buildPostings(docs, "doc_id", "text")
+        .filter(col("term").isin("slow", "hash", "batch"))), Seq("slow", "hash", "batch"))
     },
       // The trigram re-derived with the zipped-unnest positions and the
       // same nested position test.
@@ -972,11 +960,8 @@ private[graft] object TextQueries {
     Query("text_invidx_proximity", (s, dir) => {
       val R = graft.ops.Retrieval
       val docs = spread(s, table(s, dir, "documents").select("doc_id", "text"))
-      val pxDir = scratch("prox_post")
-      R.buildPostings(docs, "doc_id", "text")
-        .filter(col("term").isin("table", "hash"))
-        .write.mode("overwrite").parquet(pxDir)
-      R.proximityMatch(s.read.parquet(pxDir), "table", "hash", window = 3)
+      R.proximityMatch(stageScratch("prox_post", R.buildPostings(docs, "doc_id", "text")
+        .filter(col("term").isin("table", "hash"))), "table", "hash", window = 3)
     },
       // Proximity from the same position lists: nested list lambdas count
       // 'table' occurrences with a 'hash' within the 3-token window.

@@ -227,7 +227,7 @@ object ManifestTable {
   // every header line is `#<kind>=<fields>`, fields `|`-separated, free
   // text base64-encoded (b64) so it can hold neither `|` nor a newline:
   //
-  //   #schema=<StructType json>                     the commit's schema
+  //   #schema=<StructType json>                     the schema every read takes
   //   #stats=<rel>|<col>|<dtype>|<min|->|<max|->|<nulls>  per file, per column
   //   #size=<rel>|<bytes>|<rows>                    per file
   //   #bloom=<rel>|<col>|<k>|<mBits>|<sparse words> per file ([[addBloom]])
@@ -249,16 +249,18 @@ object ManifestTable {
     * public read works from exactly one of these, and so does every
     * attempt of every write, so no operation can mix two snapshots (a
     * compaction landing between two pointer reads would otherwise drop
-    * the first read's deletion vectors). `headers` excludes `#schema`. */
+    * the first read's deletion vectors). `headers` excludes `#schema`;
+    * `schema` is the one schema every read of the snapshot's files
+    * takes. */
   private final case class Snapshot(
       name: String,
       version: Long,
-      schemaLine: Option[String],
+      schemaLine: String,
       headers: Seq[String],
       rels: Seq[String]) {
-    def schema: Option[StructType] = schemaLine.map(l =>
-      org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema="))
-        .asInstanceOf[StructType])
+    lazy val schema: StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaLine.stripPrefix("#schema="))
+        .asInstanceOf[StructType]
     def files(dir: String): Seq[String] = rels.map(rel => new Path(dir, rel).toString)
     def dvRels: Seq[String] =
       headers.filter(_.startsWith("#dv=")).map(l => unb64(l.stripPrefix("#dv=")))
@@ -274,8 +276,10 @@ object ManifestTable {
     val lines = readSmallFile(f, manifestPath(dir, name))
       .split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
     val (headers, rels) = lines.partition(_.startsWith("#"))
-    Snapshot(name, versionOf(name), headers.find(_.startsWith("#schema=")),
-      headers.filterNot(_.startsWith("#schema=")), rels)
+    val (schema, rest) = headers.partition(_.startsWith("#schema="))
+    Snapshot(name, versionOf(name), schema.headOption.getOrElse(
+        throw new IllegalStateException(s"manifest $name in $dir has no #schema line")),
+      rest, rels)
   }
 
   /** The current snapshot — one pointer read, one manifest read — or None
@@ -303,11 +307,16 @@ object ManifestTable {
     name
   }
 
+  // #schema=<StructType json> — required: a manifest without it is refused
+  // at parse. New content brings its own; an append or a rewrite of the
+  // same columns keeps its basis's line, so the column order holds.
+  private def schemaLineOf(sd: StagedData): String = s"#schema=${sd.schemaJson}"
+
   /** A manifest's text — the one place it is assembled (the order the
     * "Manifest lines" block documents). */
   private def manifestText(
-      schemaLine: Option[String], headers: Seq[String], rels: Seq[String]): String =
-    ((schemaLine.toSeq ++ headers.sorted) ++ rels.sorted).mkString("\n")
+      schemaLine: String, headers: Seq[String], rels: Seq[String]): String =
+    ((schemaLine +: headers.sorted) ++ rels.sorted).mkString("\n")
 
   // #dv=<b64 rel> — one DELETION-VECTOR sidecar (a tiny parquet of
   // (_file: string rel, _pos: long row index) pairs) whose positions are
@@ -390,8 +399,7 @@ object ManifestTable {
     val keyed = keyedByPosition(base)
     if (dvRels.isEmpty) keyed
     else {
-      val dv = spark.read.parquet(
-        dvRels.map(r => new Path(dir, r).toString): _*)
+      val dv = readDv(spark, dir, dvRels)
       keyed.join(org.apache.spark.sql.functions.broadcast(dv),
         keyed("__graft_dv_rel") === dv("_file") &&
           keyed("__graft_dv_pos") === dv("_pos"),
@@ -406,29 +414,26 @@ object ManifestTable {
       .withColumn("__graft_dv_pos", col("_metadata.row_index"))
   }
 
+  // The reader of `s`'s data files: under its committed schema, so no
+  // read opens a footer to infer one (Spark's inference is a job of its
+  // own), every file resolves its columns by name, and a read of no files
+  // is the empty frame of that schema.
+  private def reader(spark: SparkSession, s: Snapshot) = spark.read.schema(s.schema)
+
+  // the fixed schema of every deletion-vector sidecar ([[writeDv]])
+  private val DvSchema = StructType.fromDDL("_file string, _pos bigint")
+
+  private def readDv(spark: SparkSession, dir: String, dvRels: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dvRels.map(r => new Path(dir, r).toString): _*)
+
   // a read of `s`'s `files` (absolute paths, `s`'s data files or a
-  // subset) with its deletion vectors subtracted
+  // subset, maybe none) with its deletion vectors subtracted
   private def readFiles(
       spark: SparkSession, dir: String, s: Snapshot, files: Seq[String]): DataFrame =
-    applyDv(spark, dir, spark.read.parquet(files: _*), s.dvRels)
+    applyDv(spark, dir, reader(spark, s).parquet(files: _*), s.dvRels)
 
   private def readSnapshot(spark: SparkSession, dir: String, s: Snapshot): DataFrame =
     readFiles(spark, dir, s, s.files(dir))
-
-  // `s`'s schema, from its #schema line (a pre-header manifest: from a read)
-  private def schemaOf(spark: SparkSession, dir: String, s: Snapshot): StructType =
-    s.schema.getOrElse(readSnapshot(spark, dir, s).schema)
-
-  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  // the pruned `kept` files of `s`, vectors subtracted; the empty frame
-  // of `s`'s schema when the prune kept nothing
-  private def readKept(
-      spark: SparkSession, dir: String, s: Snapshot, kept: Seq[String]): DataFrame =
-    if (kept.isEmpty) emptyFrame(spark, schemaOf(spark, dir, s))
-    else readFiles(spark, dir, s, kept)
 
   private def parquetRowCount(
       conf: org.apache.hadoop.conf.Configuration, p: Path): Long = {
@@ -605,10 +610,10 @@ object ManifestTable {
           s"batch has ${canon(incoming).mkString(", ")}")
     }
 
-  /** The schema the CURRENT snapshot was committed with (None for
-    * pre-header manifests). */
+  /** The schema the CURRENT snapshot was committed with (None for an
+    * uninitialised dir). */
   def currentSchema(spark: SparkSession, dir: String): Option[StructType] =
-    snapshot(fs(dir, spark), dir).flatMap(_.schema)
+    snapshot(fs(dir, spark), dir).map(_.schema)
 
   /** The data-file paths (absolute) of the current snapshot. */
   def currentFiles(spark: SparkSession, dir: String): Seq[String] =
@@ -712,8 +717,7 @@ object ManifestTable {
   def stageAppend(spark: SparkSession, dir: String, df: DataFrame): StagedCommit = {
     val snap = snapshot(fs(dir, spark), dir)
     validateAppendAt(spark, dir, snap, df, "stageAppend", unique = true)
-    val put = appendPut(snap, stageData(spark, dir, df), identity, owned = true)
-    claimManifestSlot(spark, dir, manifestText(put.schemaLine, put.headers, put.rels),
+    claimPut(spark, dir, appendPut(snap, stageData(spark, dir, df), identity, owned = true),
       snap.fold(-1L)(_.version))
   }
 
@@ -729,7 +733,7 @@ object ManifestTable {
       basisVersion: Long
   ): StagedCommit =
     claimManifestSlot(spark, dir,
-      manifestText(Some(s"#schema=${sd.schemaJson}"),
+      manifestText(schemaLineOf(sd),
         carryStats ++ sd.statsLines, carryForward ++ sd.rel),
       basisVersion)
 
@@ -857,17 +861,24 @@ object ManifestTable {
     * it staged that nothing else references — its `data/<uuid>` dirs, a
     * deletion-vector sidecar — which a refused publish deletes. */
   private final case class Put(
-      schemaLine: Option[String],
+      schemaLine: String,
       headers: Seq[String],
       rels: Seq[String],
       staged: Seq[String] = Nil)
 
   // a manifest of `sd`'s files plus `carryRels` under `headers` and `sd`'s
-  // own stats; `owned` when this attempt wrote `sd` (a refusal deletes it)
+  // own stats; `owned` when this attempt wrote `sd` (a refusal deletes it).
+  // A batch [[requireSameSchema]] checked against a `basis` keeps the
+  // basis schema line.
   private def putData(
-      sd: StagedData, headers: Seq[String], carryRels: Seq[String], owned: Boolean): Put =
-    Put(Some(s"#schema=${sd.schemaJson}"), headers ++ sd.statsLines,
+      sd: StagedData, headers: Seq[String], carryRels: Seq[String], owned: Boolean,
+      basis: Option[Snapshot] = None): Put =
+    Put(basis.fold(schemaLineOf(sd))(_.schemaLine), headers ++ sd.statsLines,
       carryRels ++ sd.rel, if (owned) Seq(sd.dataDir) else Nil)
+
+  private def claimPut(spark: SparkSession, dir: String, put: Put, basis: Long)
+      : StagedCommit =
+    claimManifestSlot(spark, dir, manifestText(put.schemaLine, put.headers, put.rels), basis)
 
   /** Test seam for the optimistic-commit paths: invoked between the slot
     * claim and the publish attempt of every [[transact]], so a spec can
@@ -894,9 +905,7 @@ object ManifestTable {
       attempt(snap) match {
         case Left(noCommit) => return noCommit
         case Right(put) =>
-          val staged = claimManifestSlot(spark, dir,
-            manifestText(put.schemaLine, put.headers, put.rels),
-            snap.fold(-1L)(_.version))
+          val staged = claimPut(spark, dir, put, snap.fold(-1L)(_.version))
           onBeforePublish()
           try {
             publish(spark, dir, staged)
@@ -1131,11 +1140,11 @@ object ManifestTable {
     val f = fs(dir, spark)
     val (head, base, seq) = branchState(f, dir, name)
     val h = manifestAt(f, dir, head)
-    requireSameSchema(h.schema, df.schema, "appendToBranch")
+    requireSameSchema(Some(h.schema), df.schema, "appendToBranch")
     enforceChecks(Some(h), df)
     val sd = stageData(spark, dir, df)
-    val staged = stageManifest(spark, dir, sd,
-      h.rels, mapHeaders(carried(h, CarryAll)), h.version)
+    val staged = claimPut(spark, dir, appendPut(Some(h), sd, mapHeaders, owned = true),
+      h.version)
     // the CAS: claim the NEXT pointer slot; a failed claim means another
     // writer moved the branch after our head read — release the slot and
     // the staged batch, and let the caller retry
@@ -1240,7 +1249,7 @@ object ManifestTable {
           conv(substring(md5(col(column).cast("string")), 1 + 5 * j, 5), 16, 10)
             .cast("long") % mBits
         }: _*)
-        val rows = spark.read
+        val rows = reader(spark, s)
           .parquet(todo.map(rel => new Path(dir, rel).toString): _*)
           .select(relOfFilePath(col("_metadata.file_path")).as("__rel"),
             explode(pos).as("__p"))
@@ -1337,7 +1346,7 @@ object ManifestTable {
           .cast("long")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("__rel")).orderBy(col("__h").asc)
-        val rows = spark.read
+        val rows = reader(spark, s)
           .parquet(todo.map(rel => new Path(dir, rel).toString): _*)
           .select(relOfFilePath(col("_metadata.file_path")).as("__rel"),
             h.as("__h"))
@@ -1436,7 +1445,7 @@ object ManifestTable {
       value: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val s = current(spark, dir)
-    readKept(spark, dir, s, bloomKept(dir, s, column, value))
+    readFiles(spark, dir, s, bloomKept(dir, s, column, value))
       .filter(col(column).cast("string") === value)
   }
 
@@ -1472,12 +1481,13 @@ object ManifestTable {
       Right(appendPut(snap, sd, mapHeaders, owned = false))
     }
 
-  // `sd` appended to `snap`: every file and header carries
+  // `sd` appended to `snap`: every file and header carries, and so does
+  // the schema line
   private def appendPut(
       snap: Option[Snapshot], sd: StagedData,
       mapHeaders: Seq[String] => Seq[String], owned: Boolean): Put =
     putData(sd, mapHeaders(snap.toSeq.flatMap(carried(_, CarryAll))),
-      snap.toSeq.flatMap(_.rels), owned)
+      snap.toSeq.flatMap(_.rels), owned, basis = snap)
 
   // the gate every append runs on its batch, against one snapshot:
   // schema, CHECK constraints, and (`unique`) the UNIQUE keys
@@ -1489,7 +1499,7 @@ object ManifestTable {
   private def validateAppendAt(
       spark: SparkSession, dir: String, snap: Option[Snapshot], df: DataFrame,
       op: String, unique: Boolean): Unit = {
-    requireSameSchema(snap.flatMap(_.schema), df.schema, op)
+    requireSameSchema(snap.map(_.schema), df.schema, op)
     enforceChecks(snap, df)
     if (unique) enforceUnique(spark, dir, snap, df, probeExisting = true)
   }
@@ -1553,7 +1563,7 @@ object ManifestTable {
       else df.columns.toSeq.filterNot(_ == sliceCol)
     val content = df.select(contentCols.map(col): _*)
     val before = snapshot(f, dir)
-    requireSameSchema(before.flatMap(_.schema), content.schema, "appendSlices")
+    requireSameSchema(before.map(_.schema), content.schema, "appendSlices")
     val needsValidation = checksOf(before).nonEmpty || uniqueKeysOf(before).nonEmpty
     val all = writeData(spark, dir, content.schema.json) { d =>
       df.select(contentCols.map(col) :+
@@ -1712,12 +1722,12 @@ object ManifestTable {
       if (candidates.isEmpty) Left(s.unchanged)
       else {
         val matching = livePositions(spark, dir,
-          spark.read.parquet(candidates: _*), s.dvRels)
+          reader(spark, s).parquet(candidates: _*), s.dvRels)
           .filter(col(column).isNotNull && col(column).between(lo, hi))
         val updated = assignments.toSeq.sortBy(_._1)
           .foldLeft(matching) { case (df, (k, v)) => df.withColumn(k, v) }
           .drop("__graft_dv_rel", "__graft_dv_pos")
-        requireSameSchema(s.schema, updated.schema, "updateVectorWhere")
+        requireSameSchema(Some(s.schema), updated.schema, "updateVectorWhere")
         val sd = stageData(spark, dir, updated)
         writeDv(spark, dir, matching) match {
           case None =>
@@ -1766,7 +1776,7 @@ object ManifestTable {
       val (candidates, matches) = select(s)
       if (candidates.isEmpty) Left(s.unchanged)
       else writeDv(spark, dir, livePositions(spark, dir,
-          spark.read.parquet(candidates: _*), s.dvRels).filter(matches)) match {
+          reader(spark, s).parquet(candidates: _*), s.dvRels).filter(matches)) match {
         case None => Left(s.unchanged) // nothing newly deleted
         case Some((dvDir, dvRels)) =>
           Right(Put(s.schemaLine, carried(s, CarryAll) ++ dvRels.map(dvLineOf),
@@ -1804,7 +1814,7 @@ object ManifestTable {
     val dv =
       if (kept.isEmpty || native.isEmpty) None
       else writeDv(spark, dir, livePositions(spark, dir,
-        spark.read.parquet(kept: _*), s.dvRels).filter(col(column).isin(native: _*)))
+        reader(spark, s).parquet(kept: _*), s.dvRels).filter(col(column).isin(native: _*)))
     // the rebind replaces the old binding; `meta` keys (corpus totals a
     // delete shrinks) replace their old lines in the same move
     Right(Put(s.schemaLine,
@@ -1846,7 +1856,7 @@ object ManifestTable {
     val candSet = candidates.toSet
     val untouched = s.rels.filterNot(rel => candSet.contains(new Path(dir, rel).toString))
     putData(stageData(spark, dir, rewritten),
-      carried(s, CarryAll, untouched.toSet), untouched, owned = true)
+      carried(s, CarryAll, untouched.toSet), untouched, owned = true, basis = Some(s))
   }
 
   /** MERGE (batch upsert) as one table transaction — the Delta
@@ -1888,7 +1898,7 @@ object ManifestTable {
             updates.filter(org.apache.spark.sql.functions.lit(false)),
             updates, keyCol, versionCol))
       case Some(s) =>
-        requireSameSchema(s.schema, updates.schema, "mergeInto")
+        requireSameSchema(Some(s.schema), updates.schema, "mergeInto")
         enforceChecks(Some(s), updates)
         if (bounds.isNullAt(0)) Left(s.unchanged) // empty batch: metadata no-op
         else {
@@ -1900,11 +1910,8 @@ object ManifestTable {
               pruneRanges(dir, s, keyCol,
                 Seq((bounds.get(0).toString.toDouble, bounds.get(1).toString.toDouble)))
           }
-          val base =
-            if (candidates.isEmpty) emptyFrame(spark, updates.schema)
-            else readFiles(spark, dir, s, candidates)
-          Right(rewritePut(spark, dir, s, candidates,
-            graft.ops.Corpus.mergeUpsert(base, updates, keyCol, versionCol)))
+          Right(rewritePut(spark, dir, s, candidates, graft.ops.Corpus.mergeUpsert(
+            readFiles(spark, dir, s, candidates), updates, keyCol, versionCol)))
         }
     }
   }
@@ -1921,7 +1928,7 @@ object ManifestTable {
     transact(spark, dir, 0) { snap =>
       enforceChecks(snap, df)
       enforceUnique(spark, dir, snap, df, probeExisting = true)
-      snap.flatMap(_.schema).foreach { c =>
+      snap.map(_.schema).foreach { c =>
         val incoming = df.schema.fields
           .map(fd => fd.name -> fd.dataType.catalogString).toMap
         c.fields.foreach { fd =>
@@ -1932,7 +1939,10 @@ object ManifestTable {
               "in the batch")
         }
       }
-      Right(appendPut(snap, stageData(spark, dir, df), identity, owned = true))
+      // the committed schema advances to the batch's
+      val sd = stageData(spark, dir, df)
+      Right(appendPut(snap, sd, identity, owned = true)
+        .copy(schemaLine = schemaLineOf(sd)))
     }
 
   /** [[read]] across schema-evolved snapshots: per-file schemas are
@@ -1963,7 +1973,7 @@ object ManifestTable {
       df: DataFrame,
       partitionCol: String
   ): StagedCommit = transact(spark, dir, 0) { snap =>
-    requireSameSchema(snap.flatMap(_.schema), df.schema, "replacePartitions")
+    requireSameSchema(snap.map(_.schema), df.schema, "replacePartitions")
     enforceChecks(snap, df)
     val sd = writeData(spark, dir, df.schema.json) { d =>
       df.withColumn("__p", org.apache.spark.sql.functions.col(partitionCol))
@@ -1992,7 +2002,7 @@ object ManifestTable {
         // reference rels no longer in the manifest and anti-join nothing
         (kept, carried(s, CarryAll, kept.toSet))
     }
-    Right(putData(sd, headers, kept, owned = true))
+    Right(putData(sd, headers, kept, owned = true, basis = snap))
   }
 
   /** The data-skipping statistics of the CURRENT snapshot — one entry per
@@ -2030,11 +2040,8 @@ object ManifestTable {
     import spark.implicits._
     val lineage = broadcast(
       rels.map(r => (r, firstSeen(r))).toDF("__graft_rel", "_commit_version"))
-    if (rels.isEmpty)
-      return emptyFrame(spark, schemaOf(spark, dir, s))
-        .withColumn("_commit_version", org.apache.spark.sql.functions.lit(-1L))
     val base = applyDv(spark, dir,
-      spark.read.parquet(s.files(dir): _*)
+      reader(spark, s).parquet(s.files(dir): _*)
         .withColumn("__graft_rel", relOfFilePath(col("_metadata.file_path"))),
       s.dvRels)
     base.join(lineage, "__graft_rel").drop("__graft_rel")
@@ -2064,8 +2071,7 @@ object ManifestTable {
       import org.apache.spark.sql.functions.broadcast
       import spark.implicits._
       val live = rels.toDF("_file")
-      val deleted = spark.read
-        .parquet(dvRels.map(r => new Path(dir, r).toString): _*)
+      val deleted = readDv(spark, dir, dvRels)
         .join(broadcast(live), "_file")
         .count()
       Some(base - deleted)
@@ -2183,7 +2189,7 @@ object ManifestTable {
   private def nativeValues(
       spark: SparkSession, dir: String, s: Snapshot, column: String,
       values: Seq[Any]): Seq[Any] = {
-    val dt = schemaOf(spark, dir, s)(column).dataType
+    val dt = s.schema(column).dataType
     values.flatMap(v => exactNative(v, dt))
   }
 
@@ -2212,7 +2218,7 @@ object ManifestTable {
       value: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val s = current(spark, dir)
-    readKept(spark, dir, s, pruneStrings(dir, s, column, Seq((value, value))))
+    readFiles(spark, dir, s, pruneStrings(dir, s, column, Seq((value, value))))
       .filter(col(column) === value)
   }
 
@@ -2236,7 +2242,7 @@ object ManifestTable {
       lo: Double,
       hi: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
-    readKept(spark, dir, s, pruneRanges(dir, s, column, Seq((lo, hi))))
+    readFiles(spark, dir, s, pruneRanges(dir, s, column, Seq((lo, hi))))
       .filter(col(column).between(lo, hi))
   }
 
@@ -2269,8 +2275,8 @@ object ManifestTable {
     import org.apache.spark.sql.functions.col
     val s = current(spark, dir)
     val native = nativeValues(spark, dir, s, column, values)
-    if (native.isEmpty) emptyFrame(spark, schemaOf(spark, dir, s))
-    else readKept(spark, dir, s, inListCandidates(dir, s, column, values))
+    if (native.isEmpty) reader(spark, s).parquet()
+    else readFiles(spark, dir, s, inListCandidates(dir, s, column, values))
       .filter(col(column).isin(native: _*))
   }
 
@@ -2310,7 +2316,7 @@ object ManifestTable {
   def readPartitioned(spark: SparkSession, dir: String): DataFrame = {
     val s = current(spark, dir)
     applyDv(spark, dir,
-      spark.read.option("recursiveFileLookup", "true").parquet(s.files(dir): _*),
+      reader(spark, s).option("recursiveFileLookup", "true").parquet(s.files(dir): _*),
       s.dvRels)
   }
 
@@ -2343,7 +2349,7 @@ object ManifestTable {
     // CURRENT deletion vectors apply: a row appended since `fromVersion`
     // but DV-deleted since is not part of any snapshot the consumer
     // could now read
-    readKept(spark, dir, s, added)
+    readFiles(spark, dir, s, added)
   }
 
   /** The rows DELETED between snapshot `fromVersion` (exclusive) and
@@ -2376,14 +2382,13 @@ object ManifestTable {
         "the same rows; re-bootstrap the consumer from the full table")
     val oldDv = from.dvRels.toSet
     val newDv = s.dvRels.filterNot(oldDv)
-    val schema = schemaOf(spark, dir, s)
-    if (newDv.isEmpty) return emptyFrame(spark, schema)
-    val dv = spark.read.parquet(newDv.map(r => new Path(dir, r).toString): _*)
+    if (newDv.isEmpty) return reader(spark, s).parquet()
+    val dv = readDv(spark, dir, newDv)
     // only the files that lost rows are read back
     val touched = dv.select(col("_file")).distinct()
       .collect().map(_.getString(0)).filter(cur.toSet)
-    if (touched.isEmpty) return emptyFrame(spark, schema)
-    val keyed = keyedByPosition(spark.read
+    if (touched.isEmpty) return reader(spark, s).parquet()
+    val keyed = keyedByPosition(reader(spark, s)
       .parquet(touched.map(rel => new Path(dir, rel).toString): _*))
     keyed.join(org.apache.spark.sql.functions.broadcast(dv),
         keyed("__graft_dv_rel") === dv("_file") &&
@@ -2631,7 +2636,7 @@ object ManifestTable {
             bin.map(rel => new Path(dir, rel).toString)).coalesce(1))
         }
         val untouched = s.rels.filterNot(bins.flatten.toSet)
-        Right(Put(Some(s"#schema=${binData.head.schemaJson}"),
+        Right(Put(schemaLineOf(binData.head),
           carried(s, CarryAll, untouched.toSet) ++ binData.flatMap(_.statsLines),
           untouched ++ binData.flatMap(_.rel), binData.map(_.dataDir)))
       }
@@ -2983,7 +2988,7 @@ object ManifestTable {
               val hi = mm.get(1).asInstanceOf[Number].doubleValue
               readBetweenIn(spark, dir, s, k, Math.nextDown(lo), Math.nextUp(hi))
             case StringType =>
-              readKept(spark, dir, s,
+              readFiles(spark, dir, s,
                 pruneStrings(dir, s, k, Seq((mm.getString(0), mm.getString(1)))))
             case _ => readSnapshot(spark, dir, s)
           }
@@ -3191,7 +3196,7 @@ object ManifestTable {
     require(bare.isEmpty,
       s"bucket layout broken: ${bare.size} current file(s) carry no __p= " +
         "segment (appended after compactBucketed) — re-run compactBucketed")
-    val dt = schemaOf(spark, dir, s)(column).dataType
+    val dt = s.schema(column).dataType
     // the probe value's bucket under the layout's own expression — a
     // 1-row local eval, no table read
     val b = spark.range(1)
@@ -3211,12 +3216,10 @@ object ManifestTable {
     val column = spec.split('|')(0)
     val (kept, _) = pruneByBucket(spark, dir, value)
     val s = current(spark, dir)
-    val schema = schemaOf(spark, dir, s)
-    if (kept.isEmpty) emptyFrame(spark, schema)
-    else applyDv(spark, dir,
-      spark.read.option("recursiveFileLookup", "true").parquet(kept: _*),
+    applyDv(spark, dir,
+      reader(spark, s).option("recursiveFileLookup", "true").parquet(kept: _*),
       s.dvRels)
-      .filter(col(column) === lit(value).cast(schema(column).dataType))
+      .filter(col(column) === lit(value).cast(s.schema(column).dataType))
   }
 
   /** Two-sided stats-pruned read: `colA BETWEEN loA AND hiA AND colB
@@ -3250,7 +3253,7 @@ object ManifestTable {
     val s = current(spark, dir)
     val kept = ranges.map { case (c, lo, hi) => pruneRanges(dir, s, c, Seq((lo, hi))) }
       .reduce((acc, keep) => acc.filter(keep.toSet))
-    readKept(spark, dir, s, kept)
+    readFiles(spark, dir, s, kept)
       .filter(ranges.map { case (c, lo, hi) => col(c).between(lo, hi) }
         .reduce(_ && _))
   }

@@ -2236,4 +2236,130 @@ class ManifestTableSpec extends AnyFlatSpec with Matchers {
       ManifestTable.read(spark, out).count() shouldBe 3L
     } finally { rm(src); rm(agg); rm(out) }
   }
+
+  // The jobs `body` launches from this thread: a census by a local
+  // property every job it submits carries. Listener delivery is async, so
+  // a marker job under a second tag closes the census — the bus delivers
+  // in order, so once the marker is seen every earlier job has been.
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.census")))
+          .foreach(seen.add(_): Unit)
+    }
+    def tagged(t: String)(f: => Any): Unit = {
+      sc.setLocalProperty("graft.census", t)
+      try f finally sc.setLocalProperty("graft.census", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged(tag)(body)
+      tagged(s"$tag-end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      withClue("the census marker job was never seen: ") {
+        seen.contains(s"$tag-end") shouldBe true
+      }
+      seen.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  it should "resolve every read's schema from the manifest, launching no job" in {
+    val dir = tmpDir()
+    try {
+      ManifestTable.commit(spark, dir,
+        (0L until 40L).map(i => (i, s"v$i", i * 0.5)).toDF("id", "v", "x").coalesce(2))
+      ManifestTable.deleteVectorWhere(spark, dir, "id", 3.0, 5.0)
+      jobsOf(ManifestTable.read(spark, dir).schema) shouldBe 0
+      jobsOf(ManifestTable.readWhereIn(spark, dir, "id", Seq(7L, 8L)).schema) shouldBe 0
+      jobsOf(ManifestTable.currentSchema(spark, dir)) shouldBe 0
+      // a read the stats prune to no file is the empty frame of the schema
+      val none = ManifestTable.readWhereIn(spark, dir, "id", Seq(1000L))
+      none.schema shouldBe ManifestTable.read(spark, dir).schema
+      none.count() shouldBe 0L
+      // one DV delete on a table that already carries a vector: the
+      // sidecar broadcast, the shuffle to one writer and the write
+      jobsOf(ManifestTable.deleteVectorWhereIn(spark, dir, "id", Seq(10L, 11L))) shouldBe 3
+      ManifestTable.read(spark, dir).count() shouldBe 35L
+    } finally rm(dir)
+  }
+
+  it should "read every write path's files under the schema inference would give" in {
+    val corpus = tmpDir()
+    val df = (0L until 30L).map(i => (i, s"v${i % 3}", i * 0.5, Seq(i.toDouble)))
+      .toDF("id", "v", "x", "arr")
+      .withColumn("st", struct(col("id").as("a"), lit("b").as("b")))
+    def sameAsInferred(dir: String): Unit = {
+      val files = ManifestTable.currentFiles(spark, dir)
+      ManifestTable.read(spark, dir).schema shouldBe spark.read.parquet(files: _*).schema
+    }
+    val dirs = Seq.fill(6)(tmpDir())
+    val Seq(dCommit, dAppend, dSlices, dParts, dIndex, dVector) = dirs
+    try {
+      ManifestTable.commit(spark, corpus, df)
+      ManifestTable.commit(spark, dCommit, df)
+      sameAsInferred(dCommit)
+      ManifestTable.compactSorted(spark, dCommit, Seq("id"), targetFiles = 2)
+      sameAsInferred(dCommit)
+      ManifestTable.append(spark, dAppend, df)
+      ManifestTable.append(spark, dAppend, df)
+      sameAsInferred(dAppend)
+      ManifestTable.appendSlices(spark, dSlices, df, "v", keepSliceCol = true)
+      sameAsInferred(dSlices)
+      ManifestTable.replacePartitions(spark, dParts, df, "v")
+      sameAsInferred(dParts)
+      ManifestTable.commitIndex(spark, dIndex, df, corpus,
+        ManifestTable.currentVersion(spark, corpus))
+      sameAsInferred(dIndex)
+      ManifestTable.commit(spark, dVector, df)
+      ManifestTable.updateVectorWhere(spark, dVector, "id", 0.0, 4.0,
+        Map("x" -> lit(-1.0)))
+      sameAsInferred(dVector)
+      ManifestTable.read(spark, dVector).filter(col("x") === -1.0).count() shouldBe 5L
+    } finally (corpus +: dirs).foreach(rm)
+  }
+
+  it should "keep the first commit's column order through appends in any column order" in {
+    val dir = tmpDir()
+    try {
+      def batch(i: Long) = Seq((i, s"b$i")).toDF("a", "b")
+      ManifestTable.commit(spark, dir, batch(0L))
+      (1L to 6L).foreach { i =>
+        val df = if (i % 2 == 1) batch(i).select("b", "a") else batch(i)
+        ManifestTable.append(spark, dir, df)
+        ManifestTable.read(spark, dir).columns shouldBe Array("a", "b")
+      }
+      ManifestTable.createBranch(spark, dir, "wap")
+      ManifestTable.appendToBranch(spark, dir, "wap", batch(7L).select("b", "a"))
+      ManifestTable.readBranch(spark, dir, "wap").columns shouldBe Array("a", "b")
+      ManifestTable.read(spark, dir).count() shouldBe 7L
+      // a schema-evolving append still advances the committed schema
+      ManifestTable.appendEvolve(spark, dir,
+        Seq(("b8", 8L, 1.0)).toDF("b", "a", "c"))
+      ManifestTable.read(spark, dir).columns shouldBe Array("b", "a", "c")
+    } finally rm(dir)
+  }
+
+  it should "refuse a manifest without a #schema line, naming the table" in {
+    val dir = tmpDir()
+    try {
+      ManifestTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "v"))
+      val name = new String(
+        java.nio.file.Files.readAllBytes(new java.io.File(dir, "CURRENT").toPath)).trim
+      val mf = new java.io.File(new java.io.File(dir, "_manifests"), name)
+      val src = scala.io.Source.fromFile(mf)
+      val lines = try src.getLines().toList finally src.close()
+      java.nio.file.Files.write(mf.toPath,
+        lines.filterNot(_.startsWith("#schema=")).mkString("\n").getBytes)
+      new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
+      val e = intercept[IllegalStateException](ManifestTable.read(spark, dir))
+      e.getMessage should include(dir)
+      e.getMessage should include("#schema")
+    } finally rm(dir)
+  }
 }
